@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from component_delta_lake_writer_spark.config import ColumnSpec, JobSpec, LoadMode
 from component_delta_lake_writer_spark.errors import UserException
 from component_delta_lake_writer_spark.functions.cast import cast_projection
+from component_delta_lake_writer_spark.session import local_relation
 from component_delta_lake_writer_spark.sinks import ManagedTable
 from component_delta_lake_writer_spark.sources.csv import read_csv_all_string
 from component_delta_lake_writer_spark.sources.json_manifest import read_manifest_urls
@@ -63,7 +64,12 @@ def plan_table_scan(
     5,000-slice table must not become a 5,000-scan plan):
 
     - ``_slice_idx``: the scan's hidden ``_metadata.file_path`` joined
-      against a broadcast (path → manifest position) map.
+      against a (path → manifest position) map built on the driver as
+      an Arrow ``LocalRelation`` (``session.local_relation``). Its exact
+      size estimate keeps the whole scan's estimate finite, so an
+      upsert of this scan still plans its anti-join as a broadcast of
+      the source keys instead of shuffling the target; it runs no
+      Python-worker job either.
     - ``_row_in_slice``: reconstructed WITHOUT shuffling the data.
       ``monotonically_increasing_id`` is contiguous within a file
       split, so row-in-slice = (rows in earlier splits of the file) +
@@ -105,9 +111,10 @@ def plan_table_scan(
             return re.sub(_SCHEME, "/", p)
         return os.path.abspath(p)
 
-    idx_map = spark.createDataFrame(
-        [(norm(p), i) for i, p in enumerate(paths)],
-        schema="__file STRING, _slice_idx INT",
+    idx_map = local_relation(
+        spark,
+        "__file STRING, _slice_idx INT",
+        [[norm(p) for p in paths], range(len(paths))],
     )
     # _metadata.file_path is URL-ENCODED ('a b.csv' -> 'a%20b.csv')
     # while the driver-side manifest paths are raw — undecoded, the

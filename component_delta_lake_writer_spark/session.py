@@ -21,8 +21,14 @@ Scale posture (100 TB design, tested on local[32]):
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
+from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -82,6 +88,44 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_relation(
+    spark: SparkSession,
+    schema: StructType | str | None,
+    columns: Sequence[Sequence] | pa.Table = (),
+) -> DataFrame:
+    """A driver-built relation (lookup map, row-index set, empty frame)
+    handed to Spark as Arrow.
+
+    ``createDataFrame(<python list>)`` plans as a ``LogicalRDD``: each
+    execution runs a Python-worker job, even for zero rows, and its
+    size estimate is ``Long.MAX``, so a join against it is never
+    planned as a broadcast up front. An Arrow table plans as a
+    ``LocalRelation``: no job of its own and exact size statistics.
+
+    ``columns`` holds one sequence per field of ``schema`` (a
+    StructType or DDL string); leave it empty for a zero-row relation.
+    A ``pyarrow.Table`` is taken as is, under its own schema when
+    ``schema`` is None.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(columns, pa.Table):
+        return spark.createDataFrame(columns, schema)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    table = (
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+            schema=arrow,
+        )
+        if columns
+        else arrow.empty_table()
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def stop_spark() -> None:

@@ -1319,6 +1319,7 @@ def read_delta_table(spark, table_path: str):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from component_delta_lake_writer_spark.session import local_relation
     from component_delta_lake_writer_spark.sinks.deletion_vectors import (
         read_dv,
     )
@@ -1370,7 +1371,7 @@ def read_delta_table(spark, table_path: str):
     if not files:
         # zero live files (everything deleted/overwritten-empty):
         # an empty relation under the physical schema, not IndexError
-        df = spark.createDataFrame([], physical)
+        df = local_relation(spark, physical)
         return df.select(
             *[
                 df[pn].alias(lf.name)
@@ -1394,9 +1395,7 @@ def read_delta_table(spark, table_path: str):
             .parquet(os.path.join(table_path, f))
             .withColumn("_dv_ri", F.col("_metadata.row_index"))
         )
-        dropped = spark.createDataFrame(
-            [(int(i),) for i in idx], "_dv_ri bigint"
-        )
+        dropped = local_relation(spark, "_dv_ri bigint", [idx])
         parts.append(
             df_f.join(F.broadcast(dropped), "_dv_ri", "left_anti").drop(
                 "_dv_ri"
@@ -1422,6 +1421,8 @@ def _read_partitioned(spark, table_path, st, logical, pcols, read_dv):
     identity; the remaining columns resolve physicalName as usual."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
+
+    from component_delta_lake_writer_spark.session import local_relation
 
     pset = set(pcols)
     data_fields = [f for f in logical.fields if f.name not in pset]
@@ -1471,9 +1472,7 @@ def _read_partitioned(spark, table_path, st, logical, pcols, read_dv):
                     df.withColumn("_dv_ri", F.col("_metadata.row_index"))
                     .join(
                         F.broadcast(
-                            spark.createDataFrame(
-                                [(int(i),) for i in idx], "_dv_ri bigint"
-                            )
+                            local_relation(spark, "_dv_ri bigint", [idx])
                         ),
                         "_dv_ri",
                         "left_anti",
@@ -1493,7 +1492,7 @@ def _read_partitioned(spark, table_path, st, logical, pcols, read_dv):
                     cols.append(df[phys[f.name]].alias(f.name))
             parts.append(df.select(*cols))
     if not parts:
-        return spark.createDataFrame([], logical)
+        return local_relation(spark, logical)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1519,6 +1518,7 @@ def read_delta_table_row_ids(spark, table_path: str):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from component_delta_lake_writer_spark.session import local_relation
     from component_delta_lake_writer_spark.sinks.deletion_vectors import (
         read_dv,
     )
@@ -1564,13 +1564,16 @@ def read_delta_table_row_ids(spark, table_path: str):
     if not st["adds"]:
         # zero live files (empty create / everything deleted): an
         # empty relation under the id-extended logical schema
-        return spark.createDataFrame([], out_schema)
-    base = spark.createDataFrame(
-        [
-            (p, a.get("baseRowId"), a.get("defaultRowCommitVersion"))
-            for p, a in st["adds"].items()
-        ],
+        return local_relation(spark, out_schema)
+    adds = st["adds"]
+    base = local_relation(
+        spark,
         "_f string, _base long, _dcv long",
+        [
+            list(adds),
+            [a.get("baseRowId") for a in adds.values()],
+            [a.get("defaultRowCommitVersion") for a in adds.values()],
+        ],
     )
 
     def _one(paths: list[str], dv_idx=None):
@@ -1587,9 +1590,7 @@ def read_delta_table_row_ids(spark, table_path: str):
             ),
         ).withColumn("_ri", F.col("_metadata.row_index"))
         if dv_idx is not None:
-            dropped = spark.createDataFrame(
-                [(int(i),) for i in dv_idx], "_ri bigint"
-            )
+            dropped = local_relation(spark, "_ri bigint", [dv_idx])
             df = df.join(F.broadcast(dropped), "_ri", "left_anti")
         return df
 

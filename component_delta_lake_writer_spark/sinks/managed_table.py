@@ -48,6 +48,7 @@ from component_delta_lake_writer_spark.errors import (
     TableExistsError,
     UserException,
 )
+from component_delta_lake_writer_spark.session import local_relation
 
 _COMMITS = "_commits"
 _DATA = "_data"
@@ -961,11 +962,10 @@ class ManagedTable:
                 # no distinct is needed.
                 import pyarrow.dataset as _pads
 
-                _tbl = _pads.dataset(ds_dir, format="parquet").to_table()
-                try:
-                    _local = self.spark.createDataFrame(_tbl)
-                except Exception:  # pragma: no cover — older arrow path
-                    _local = self.spark.createDataFrame(_tbl.to_pandas())
+                _local = local_relation(
+                    self.spark, None,
+                    _pads.dataset(ds_dir, format="parquet").to_table(),
+                )
                 dels_build = _local.select(
                     *[
                         F.col(f.name).cast(f.dataType)
@@ -2017,7 +2017,7 @@ class ManagedTable:
         schema = T.StructType.fromJson(json.loads(prev.schema_json)).add(
             "_change_type", T.StringType()
         )
-        self.spark.createDataFrame([], schema).write.mode(
+        local_relation(self.spark, schema).write.mode(
             "overwrite"
         ).parquet(
             out_dir or os.path.join(self._changes_dir, f"v{version}")
@@ -2262,7 +2262,10 @@ class ManagedTable:
         table-relative path (metadata-scale — one row per live file,
         never per data row), then base + in-file position. Stays a
         join, not an inlined map literal, so a million-file table
-        doesn't compile a million-entry expression into the plan.
+        doesn't compile a million-entry expression into the plan. The
+        table is an Arrow ``LocalRelation`` (``session.local_relation``):
+        it has exact size statistics and its broadcast runs no
+        Python-worker job.
 
         Files written by a dataChange=false rewrite (optimize) carry
         each row's PRE-rewrite id in the materialized columns; those
@@ -2306,8 +2309,10 @@ class ManagedTable:
                 )
                 .drop("_rt_rel", "_rt_ri", _MAT_ROW_ID, _MAT_RCV)
             )
-        m = self.spark.createDataFrame(
-            rows, "_rt_rel string, _rt_base long, _rt_rcv long"
+        m = local_relation(
+            self.spark,
+            "_rt_rel string, _rt_base long, _rt_rcv long",
+            [list(c) for c in zip(*rows)],
         )
         return (
             df.join(F.broadcast(m), "_rt_rel", "left")
@@ -2478,7 +2483,7 @@ class ManagedTable:
             # applies, but the scan must route through the delete-set
             # anti-joins (file-level path lists can't carry them)
             if not units:
-                empty = self.spark.createDataFrame([], schema)
+                empty = local_relation(self.spark, schema)
                 return empty.filter(F.expr(eff_condition))
             return self._read_units(commit, units).filter(
                 F.expr(eff_condition)
@@ -2499,7 +2504,7 @@ class ManagedTable:
             else:
                 paths.append(udir)
         if not paths:
-            empty = self.spark.createDataFrame([], schema)
+            empty = local_relation(self.spark, schema)
             return empty.filter(F.expr(eff_condition))
         return self._scan_units(
             paths, schema, mapping, commit.partition_by
@@ -3849,7 +3854,7 @@ class ManagedTable:
             target = (
                 self._read_units(prev, touched)
                 if touched
-                else self.spark.createDataFrame([], table_schema)
+                else local_relation(self.spark, table_schema)
             )
             merged = merge_full_sync(
                 target, src, primary_key,
@@ -5249,7 +5254,7 @@ class ManagedTable:
                 self.spark.read.schema(ctype_schema).parquet(*change_dirs)
             )
         if not parts:
-            out = self.spark.createDataFrame([], ctype_schema)
+            out = local_relation(self.spark, ctype_schema)
         else:
             out = parts[0]
             for p in parts[1:]:

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 from pathlib import Path
 
 import pytest
@@ -24,9 +25,10 @@ SF_ORACLE = "/root/testdata/sf0.01"
 #   2. hypothesis property tests run a reduced example budget
 #      (test_properties._ex);
 #   3. the 373-key oracle sweep parametrizes a deterministic subset
-#      (test_queries) — every bench-suite key plus every 3rd registry
-#      key.
+#      (test_queries) — every bench-suite key plus every
+#      SWEEP_STRIDE-th registry key.
 FULL_TESTS = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
+SWEEP_STRIDE = 5
 
 # Measured ≥ ~9 s per call on an idle host (pytest --durations, r14).
 _SLOW_TIER = {
@@ -177,7 +179,26 @@ _SLOW_TIER = {
 }
 
 
-def pytest_collection_modifyitems(config, items):
+def _whole_suite(config) -> bool:
+    """True when this run collects the entire tests directory (no path
+    narrower than it, no -k / -m selection)."""
+    if config.option.keyword or config.option.markexpr:
+        return False
+    roots = {REPO, REPO / "tests"}
+    return all(
+        Path(a.split("::", 1)[0]).resolve() in roots for a in config.args
+    )
+
+
+def pytest_collection_modifyitems(session, config, items):
+    if _whole_suite(config) and not session.testsfailed:
+        collected = {item.name.split("[", 1)[0] for item in items}
+        stale = sorted(_SLOW_TIER - collected)
+        if stale:
+            msg = f"_SLOW_TIER names that match no collected test: {stale}"
+            if FULL_TESTS:
+                raise pytest.UsageError(msg)
+            warnings.warn(msg, stacklevel=1)
     if FULL_TESTS:
         return
     skip = pytest.mark.skip(

@@ -147,9 +147,76 @@ def test_preserve_order_scan_is_single_filescan(tmp_path, spark):
     assert n_csv_scans <= 2, f"{n_csv_scans} csv scans in plan"
     # offsets and the slice-index map ride in as broadcasts
     assert "BroadcastHashJoin" in plan
+    # the slice-index map is an Arrow LocalRelation, not a Python RDD
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in optimized, optimized
+    assert df.schema.simpleString() == (
+        "struct<id:bigint,name:string,_slice_idx:int,_row_in_slice:bigint>"
+    )
     # and the result still reproduces exact insertion order
     rows = df.orderBy("_slice_idx", "_row_in_slice").select("id").collect()
     assert [r["id"] for r in rows] == list(range(200))
+
+
+def _ancestors(plan: str, needle: str) -> list[str]:
+    """The operator lines above the first line containing ``needle``
+    in a plan tree string (depth = column of the operator name)."""
+    lines = plan.splitlines()
+    i = next(n for n, line in enumerate(lines) if needle in line)
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out, d = [], depth(lines[i])
+    for line in reversed(lines[:i]):
+        if depth(line) < d:
+            out.append(line.strip(" :+-"))
+            d = depth(line)
+    return out
+
+
+def test_preserve_order_upsert_broadcasts_source_keys(tmp_path, spark):
+    """The run_job UPSERT shape: a preserve-order CSV source merged
+    into a parquet target. The source's size estimate must stay finite
+    so merge_upsert hints the key broadcast up front; a Long.MAX
+    estimate (what a Python-list slice-index relation gave) plans a
+    SortMergeJoin that shuffles the whole target before AQE re-plans."""
+    from component_delta_lake_writer_spark.config import ColumnSpec
+    from component_delta_lake_writer_spark.operators import merge
+    from component_delta_lake_writer_spark.runner import (
+        TableInput,
+        plan_table_scan,
+    )
+
+    cols = [ColumnSpec("id", "INTEGER"), ColumnSpec("name", "STRING")]
+
+    def scan(name: str, ids: range, n_slices: int):
+        paths = []
+        for j in range(n_slices):
+            p = tmp_path / f"{name}_{j}.csv"
+            p.write_text("".join(f"{i},n{i}\n" for i in ids[j::n_slices]))
+            paths.append(str(p))
+        tbl = TableInput(slice_paths=paths, columns=cols)
+        return plan_table_scan(spark, tbl, preserve_order=True)
+
+    scan("t", range(3_000), 4).write.parquet(str(tmp_path / "target"))
+    target = spark.read.parquet(str(tmp_path / "target"))
+    src = merge.dedup_source(scan("s", range(0, 3_300, 10), 2), ["id"])
+
+    est = merge._plan_size_bytes(src.select("id"))
+    assert est is not None and est < (1 << 63) - 1, est
+    assert est <= merge._broadcast_threshold_bytes(src)
+
+    merged = merge.merge_upsert(target, src, ["id"], pre_deduplicated=True)
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=false" in plan  # the initial AQE plan
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    above_target = _ancestors(plan, "FileScan parquet")
+    assert not any(
+        a.startswith("Exchange hashpartitioning") for a in above_target
+    ), above_target
+    assert merged.count() == 3_000 + 30
 
 
 def test_managed_table_read_is_single_scan_after_appends(tmp_path, spark):
