@@ -12,18 +12,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from component_delta_lake_writer_spark.errors import UserException
+from component_delta_lake_writer_spark.session import local_relation
+
+
+def _elements(spark: SparkSession, rows: list[tuple[str, str]]) -> DataFrame:
+    """(value, label) rows as the actions' SelectElement relation."""
+    return local_relation(
+        spark, "value string, label string", list(zip(*rows))
+    )
 
 
 def list_catalogs(spark: SparkSession) -> DataFrame:
     """C1 (src/component.py:386-390)."""
     rows = [(c.name, c.name) for c in spark.catalog.listCatalogs()]
-    return spark.createDataFrame(rows, "value string, label string")
+    return _elements(spark, rows)
 
 
 def list_schemas(spark: SparkSession) -> DataFrame:
     """C2 (src/component.py:392-396)."""
     rows = [(d.name, d.name) for d in spark.catalog.listDatabases()]
-    return spark.createDataFrame(rows, "value string, label string")
+    return _elements(spark, rows)
 
 
 def list_tables(spark: SparkSession, db: str | None = None) -> DataFrame:
@@ -31,7 +39,7 @@ def list_tables(spark: SparkSession, db: str | None = None) -> DataFrame:
     listings include all addressable tables."""
     tables = spark.catalog.listTables(db) if db else spark.catalog.listTables()
     rows = [(t.name, t.name) for t in tables]
-    return spark.createDataFrame(rows, "value string, label string")
+    return _elements(spark, rows)
 
 
 def list_warehouses(spark: SparkSession) -> DataFrame:
@@ -43,7 +51,7 @@ def list_warehouses(spark: SparkSession) -> DataFrame:
             f"spark:{spark.version}:{spark.sparkContext.master}",
         )
     ]
-    return spark.createDataFrame(rows, "value string, label string")
+    return _elements(spark, rows)
 
 
 def list_table_columns(spark: SparkSession, table: str) -> DataFrame:
@@ -53,7 +61,7 @@ def list_table_columns(spark: SparkSession, table: str) -> DataFrame:
     except Exception as exc:  # mirror the reference's UserException taxonomy
         raise UserException(f"Cannot list columns of {table!r}: {exc}") from exc
     rows = [(c.name, f"{c.name} ({c.dataType})") for c in cols]
-    return spark.createDataFrame(rows, "value string, label string")
+    return _elements(spark, rows)
 
 
 def table_exists(spark: SparkSession, table: str) -> bool:
@@ -74,10 +82,7 @@ def msck_repair(spark: SparkSession, table_path: str) -> DataFrame:
     if not t.exists():
         raise UserException(f"No table at {table_path}")
     n = t.sync_metadata()
-    return spark.createDataFrame(
-        [(str(n), f"regenerated {n} delta-log entries")],
-        "value string, label string",
-    )
+    return _elements(spark, [(str(n), f"regenerated {n} delta-log entries")])
 
 
 ACTIONS = {

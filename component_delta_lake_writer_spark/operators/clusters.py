@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.session import local_relation
+
 
 # Below this many edges the pair list is resolved driver-side with a
 # union-find (a few MB at most: 2×8-byte ids × 1M ≈ 16 MB) instead of
@@ -90,10 +92,9 @@ def connected_components(
         spark = edges.sparkSession
         edges.unpersist()
         labels = _local_union_find([(r[0], r[1]) for r in rows])
-        if not labels:  # no edges — empty component table
-            return spark.createDataFrame([], "id long, component long")
-        return spark.createDataFrame(
-            list(labels.items()), "id long, component long"
+        # no edges, no labels: an empty relation
+        return local_relation(
+            spark, "id long, component long", list(zip(*labels.items()))
         )
     # Distributed path: edges is already persisted and materialized by
     # the gating count above, so the symmetrized union's two reads hit

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.session import local_relation
+
 
 def pk_uniqueness_violations(df: DataFrame, keys: list[str]) -> DataFrame:
     """Key tuples appearing more than once: (keys..., n_rows). The
@@ -137,10 +139,11 @@ def column_profile(
             )
             for c in cols
         ]
-        return df.sparkSession.createDataFrame(
-            rows,
+        return local_relation(
+            df.sparkSession,
             "column string, n_rows bigint, n_nulls bigint, "
             "n_distinct bigint, min_value string, max_value string",
+            list(zip(*rows)),
         )
     aggs = []
     for c in cols:
@@ -186,10 +189,11 @@ def column_profile(
         )
         for c in cols
     ]
-    return spark.createDataFrame(
-        rows,
+    return local_relation(
+        spark,
         "column string, n_rows bigint, n_nulls bigint, "
         "n_distinct bigint, min_value string, max_value string",
+        list(zip(*rows)),
     )
 
 
@@ -767,8 +771,8 @@ def histogram(
         lo = row["_lo"] if lo is None else lo
         hi = row["_hi"] if hi is None else hi
     if lo is None:  # all-null column
-        return df.sparkSession.createDataFrame(
-            [], "bin int, lo double, hi double, n_rows bigint"
+        return local_relation(
+            df.sparkSession, "bin int, lo double, hi double, n_rows bigint"
         )
     lo_f, hi_f = float(lo), float(hi)
     spark = df.sparkSession
@@ -796,8 +800,9 @@ def histogram(
             rows.append(
                 (1, round(lo_f, 6), float("inf"), by_side[1])
             )
-        return spark.createDataFrame(
-            rows, "bin int, lo double, hi double, n_rows bigint"
+        return local_relation(
+            spark, "bin int, lo double, hi double, n_rows bigint",
+            list(zip(*rows)),
         )
     width = (hi_f - lo_f) / bins
     bin_expr = (

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from component_delta_lake_writer_spark.errors import UserException
+from component_delta_lake_writer_spark.session import local_relation
 
 # two-sided 5% critical value of the standard normal — a literal so
 # both engines compare against the identical constant
@@ -1760,12 +1761,13 @@ def srm_check(
     # that received ZERO units still contributes its full (0−e)²/e
     # term — the most extreme mismatch there is, and exactly the one
     # an observed-arms-only spelling would silently halve
-    declared = df.sparkSession.createDataFrame(
-        [
+    declared = local_relation(
+        df.sparkSession,
+        "_g string, _w double",
+        list(zip(*[
             (str(a), float(expected[a]) / total_w)
             for a in sorted(expected)
-        ],
-        "_g string, _w double",
+        ])),
     )
     tot = F.broadcast(arms.agg(F.sum("_n").alias("_N")))
     # rename the observed count before joining: `tot` derives from
@@ -2400,9 +2402,9 @@ def jonckheere_terpstra(
         .distinct()
         .crossJoin(
             F.broadcast(
-                per_gv.sparkSession.createDataFrame(
-                    [(i + 1,) for i in range(len(order))],
-                    "_gi long",
+                local_relation(
+                    per_gv.sparkSession, "_gi long",
+                    [range(1, len(order) + 1)],
                 )
             )
         )

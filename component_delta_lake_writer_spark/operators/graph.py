@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from component_delta_lake_writer_spark.session import local_relation
+
 
 def pagerank(
     edges: DataFrame,
@@ -254,9 +256,7 @@ def bfs_distances(
         [T.StructField("node", T.StringType(), False)]
     )
     known = (
-        spark.createDataFrame(
-            [(str(s),) for s in sources], seed_schema
-        )
+        local_relation(spark, seed_schema, [[str(s) for s in sources]])
         .select(
             F.col("node").cast(node_type).alias("node"),
             F.lit(0).cast("int").alias("dist"),

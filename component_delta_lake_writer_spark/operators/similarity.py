@@ -30,6 +30,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.session import local_relation
+
 
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -734,7 +736,9 @@ def _lloyd_centroids(
         # per subspace), and the plan tree grows per round.
         rows = cents.collect()
         if rows:
-            cents = pts.sparkSession.createDataFrame(rows, cents.schema)
+            cents = local_relation(
+                pts.sparkSession, cents.schema, list(zip(*rows))
+            )
     return cents
 
 
@@ -861,7 +865,9 @@ def pq_topk(
         # iterative lineage (same rationale as _lloyd_centroids)
         rows = cents.collect()
         if rows:
-            cents = df.sparkSession.createDataFrame(rows, cents.schema)
+            cents = local_relation(
+                df.sparkSession, cents.schema, list(zip(*rows))
+            )
     codes = assign(cents, with_x=False).select("pid", "j", "cid")
     probe_subs = subs.filter(F.col("pid") == probe_id).select(
         "j", F.col("x").alias("q")
@@ -1197,8 +1203,8 @@ def mmr_topk(
         selected.append((len(selected) + 1, best, score))
         del remaining[best]
     spark = emb.sparkSession
-    out = spark.createDataFrame(
-        selected, "rk int, doc_id long, score double"
+    out = local_relation(
+        spark, "rk int, doc_id long, score double", list(zip(*selected))
     )
     return out.select("rk", "doc_id", F.round("score", 6).alias("score"))
 
@@ -1586,7 +1592,7 @@ def hamming_lsh_query_index(
     if bucket_paths:
         base = reader.parquet(*bucket_paths)
     else:
-        base = spark.createDataFrame([], schema)
+        base = local_relation(spark, schema)
     pw = F.array(*[F.lit(int(w)).cast("long") for w in pwords])
     ham = F.aggregate(
         F.zip_with(

@@ -18,6 +18,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.session import local_relation
+
 # whitespace tokenizer — identical semantics to the DuckDB oracle's
 # string_split_regex(trim(x), '\s+')
 _WS = r"\s+"
@@ -203,6 +205,11 @@ def spread_for_fanout(df: DataFrame) -> DataFrame:
     because their partitioning was already sized by the upstream
     exchange and AQE. Round-robin placement never changes results
     (every consumer aggregates by key).
+
+    Derived (not scan-rooted) inputs are never repartitioned, however
+    few partitions they have: a fan-out caller must not pre-coalesce
+    its input (``coalesce(1)``, a small ``repartition``), or the whole
+    fan-out runs on that many cores.
     """
     sc = df.sparkSession.sparkContext
     p = sc.defaultParallelism
@@ -654,10 +661,11 @@ def bpe_train_merges(
             words = words.select(
                 F.expr(fold).alias("_syms"), "_cnt"
             ).localCheckpoint(eager=False)
-    return spark.createDataFrame(
-        merges,
+    return local_relation(
+        spark,
         "merge_rank int, left_sym string, right_sym string, "
         "pair_count long",
+        list(zip(*merges)),
     )
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from component_delta_lake_writer_spark.plans.query_registry import query
+from component_delta_lake_writer_spark.session import local_relation
 from component_delta_lake_writer_spark.tables import load_table
 
 _BUCKET_SQL = (
@@ -608,8 +609,8 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from component_delta_lake_writer_spark.operators.retrieval import bm25_topk
 
     docs = load_table(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(
-        _BM25_QUERIES, "query_id int, term string"
+    queries = local_relation(
+        spark, "query_id int, term string", list(zip(*_BM25_QUERIES))
     )
     return bm25_topk(docs, queries, k=5)
 
@@ -720,11 +721,11 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = spark.createDataFrame(
-        _BM25_QUERIES, "query_id int, term string"
+    queries = local_relation(
+        spark, "query_id int, term string", list(zip(*_BM25_QUERIES))
     )
-    probe_map = spark.createDataFrame(
-        _RRF_PROBES, "query_id int, probe_vec_id int"
+    probe_map = local_relation(
+        spark, "query_id int, probe_vec_id int", list(zip(*_RRF_PROBES))
     )
     return hybrid_rrf_topk(docs, queries, emb, probe_map, k=10, pool=20)
 
@@ -1214,8 +1215,8 @@ def pipeline_curated_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min_by(F.struct("doc_id", "text"), F.col("doc_id")).alias("__r"))
         .select(F.col("__r.doc_id").alias("doc_id"), F.col("__r.text").alias("text"))
     )
-    queries = spark.createDataFrame(
-        _BM25_QUERIES, "query_id int, term string"
+    queries = local_relation(
+        spark, "query_id int, term string", list(zip(*_BM25_QUERIES))
     )
     return bm25_topk(curated, queries, k=5)
 

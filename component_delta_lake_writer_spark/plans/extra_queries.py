@@ -16,6 +16,7 @@ from component_delta_lake_writer_spark.plans.query_registry import (
     _scratch,
     query,
 )
+from component_delta_lake_writer_spark.session import local_relation
 from component_delta_lake_writer_spark.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -2746,13 +2747,14 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     cartesian product, is what the broadcast avoids). Bands are
     half-open [lo, hi) so every order lands in exactly one band."""
     o = load_table(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(
-        [
-            ("low", 0.0, 100000.0),
-            ("mid", 100000.0, 300000.0),
-            ("high", 300000.0, 1e18),
-        ],
+    bands = local_relation(
+        spark,
         "band string, lo double, hi double",
+        [
+            ["low", "mid", "high"],
+            [0.0, 100000.0, 300000.0],
+            [100000.0, 300000.0, 1e18],
+        ],
     )
     return (
         o.join(

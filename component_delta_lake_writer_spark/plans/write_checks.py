@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from component_delta_lake_writer_spark.errors import TableExistsError
 from component_delta_lake_writer_spark.plans.query_registry import _scratch, query
+from component_delta_lake_writer_spark.session import local_relation
 from component_delta_lake_writer_spark.sinks import ManagedTable
 from component_delta_lake_writer_spark.tables import load_table
 
@@ -103,17 +104,16 @@ def create_table_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
         primary_key=["o_orderkey"],
         properties={"constraints.primary_key": "o_orderkey"},
     )
-    return spark.createDataFrame(
-        [
-            (
-                commit.version,
-                ",".join(commit.primary_key),
-                ",".join(commit.partition_by),
-                commit.properties.get("constraints.primary_key", ""),
-                t.read().count(),
-            )
-        ],
+    return local_relation(
+        spark,
         "version long, primary_key string, partition_by string, pk_property string, n_rows long",
+        [
+            [commit.version],
+            [",".join(commit.primary_key)],
+            [",".join(commit.partition_by)],
+            [commit.properties.get("constraints.primary_key", "")],
+            [t.read().count()],
+        ],
     )
 
 
@@ -141,9 +141,11 @@ def optimize_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     units_before = len(t.latest_commit().data_units)
     t.optimize()
     removed = t.vacuum()
-    return spark.createDataFrame(
-        [(units_before, len(t.latest_commit().data_units), removed, t.read().count())],
+    return local_relation(
+        spark,
         "units_before int, units_after int, units_vacuumed int, n_rows long",
+        [[units_before], [len(t.latest_commit().data_units)], [removed],
+         [t.read().count()]],
     )
 
 
@@ -156,9 +158,10 @@ def time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.write(o, mode="overwrite")
     t.write(o.limit(10), mode="append")
     v0 = t.read(version=0)
-    return spark.createDataFrame(
-        [(0, v0.count(), t.read().count())],
+    return local_relation(
+        spark,
         "version int, v0_rows long, latest_rows long",
+        [[0], [v0.count()], [t.read().count()]],
     )
 
 
@@ -814,8 +817,8 @@ def table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (c.version, c.action, len(c.data_units)) for c in t.history()
     ]
-    hist = spark.createDataFrame(
-        rows, "version int, action string, n_units int"
+    hist = local_relation(
+        spark, "version int, action string, n_units int", list(zip(*rows))
     )
     final = t.read().count()
     return hist.withColumn("final_rows", F.lit(final).cast("long"))
@@ -1220,19 +1223,18 @@ def describe_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert d["num_files"] >= d["num_units"] >= 2
     assert d["size_bytes"] > 0
     assert not d["column_mapping_active"]
-    return spark.createDataFrame(
-        [
-            (
-                d["version"],
-                d["num_units"],
-                d["num_rows_from_stats"],
-                ",".join(d["partition_columns"]),
-                ",".join(d["primary_key"]),
-                d["pending_delete_sets"],
-            )
-        ],
+    return local_relation(
+        spark,
         "version long, num_units long, n_rows long, partition_by string,"
         " primary_key string, pending_deletes long",
+        [
+            [d["version"]],
+            [d["num_units"]],
+            [d["num_rows_from_stats"]],
+            [",".join(d["partition_columns"])],
+            [",".join(d["primary_key"])],
+            [d["pending_delete_sets"]],
+        ],
     )
 
 
@@ -1528,9 +1530,10 @@ def widen_column_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.widen_column_type("price", "double")
     assert set(t.latest_commit().data_units) == units, "must not rewrite"
     t.write(
-        spark.createDataFrame(
-            [(5_000_000_000, 0.5), (6_000_000_000, 1.5)],
+        local_relation(
+            spark,
             "k long, price double",
+            [[5_000_000_000, 6_000_000_000], [0.5, 1.5]],
         ),
         mode="append",
     )
@@ -2179,7 +2182,7 @@ def ict_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = [
         (v, t.read(timestamp_ms=ts[v]).count()) for v in (0, 1, 2)
     ]
-    return spark.createDataFrame(counts, "v int, n bigint")
+    return local_relation(spark, "v int, n bigint", list(zip(*counts)))
 
 
 _O["ict_time_travel"] = """

@@ -16,6 +16,16 @@ Scale posture (100 TB design, tested on local[32]):
 - Arrow enabled for the (rare) pandas-UDF paths.
 - UTC session timezone so timestamp semantics match the DuckDB oracle
   and are cluster-location-independent.
+- Python call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). PySpark
+  otherwise wraps every Column method and ``functions.*`` call so it
+  records the caller's ``file:line`` in the JVM: about four Py4J round
+  trips per call (active session, a conf read, origin set and clear),
+  which made building a dedup plan cost thousands of round trips.
+  Without it, errors keep their error class, message and SQL context
+  and lose only the Python "DataFrame query context" line. PySpark
+  reads the flag once per Python process, at the first Column call,
+  and caches it.
 """
 
 from __future__ import annotations
@@ -53,6 +63,14 @@ def get_spark(
     local-engine caps (src/configuration.py:53-54; defaults there are
     threads=1, max_memory=256MB — we default to the host profile
     instead and let callers opt into the capped profile).
+
+    Python call-site capture is off: with it on, every Column and
+    ``functions.*`` call pays about four JVM round trips to record
+    where it was made, and errors would gain only a Python ``file:line``
+    query context (their class, message and SQL context are the same
+    either way). PySpark caches the flag for the life of the Python
+    process at the first Column call, so an ``extra_conf`` override
+    takes effect only if given before any Column is built.
     """
     n = threads or DEFAULT_CPUS
     builder = (
@@ -79,6 +97,7 @@ def get_spark(
         # TIMESTAMP_MICROS restores footer stats and is what delta-rs
         # and every modern reader expect.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     builder = builder.config(
         "spark.driver.memory", memory or DEFAULT_MEMORY
@@ -107,10 +126,24 @@ def local_relation(
     ``columns`` holds one sequence per field of ``schema`` (a
     StructType or DDL string); leave it empty for a zero-row relation.
     A ``pyarrow.Table`` is taken as is, under its own schema when
-    ``schema`` is None.
+    ``schema`` is None. A naive datetime in a TIMESTAMP field is local
+    wall-clock time, as ``createDataFrame`` and ``collect`` read it
+    (pyarrow alone would read it as UTC).
     """
+    import datetime
+
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
+
+    def array(values: Sequence, field: pa.Field) -> pa.Array:
+        if pa.types.is_timestamp(field.type) and field.type.tz:
+            values = [
+                v.astimezone(datetime.timezone.utc)
+                if isinstance(v, datetime.datetime) and v.tzinfo is None
+                else v
+                for v in values
+            ]
+        return pa.array(values, type=field.type)
 
     if isinstance(columns, pa.Table):
         return spark.createDataFrame(columns, schema)
@@ -119,7 +152,7 @@ def local_relation(
     arrow = to_arrow_schema(schema)
     table = (
         pa.Table.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+            [array(c, f) for c, f in zip(columns, arrow)],
             schema=arrow,
         )
         if columns

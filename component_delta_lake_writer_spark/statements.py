@@ -34,6 +34,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from component_delta_lake_writer_spark.errors import UserException
+from component_delta_lake_writer_spark.session import local_relation
 from component_delta_lake_writer_spark.sinks import ManagedTable
 
 _IDENT = r"[A-Za-z_][\w.$`-]*"
@@ -294,7 +295,7 @@ class StatementExecutor:
             for c in (m.group("part") or "").split(",")
             if c.strip()
         ]
-        empty = self.spark.createDataFrame([], schema)
+        empty = local_relation(self.spark, schema)
         t.write(
             empty, mode="overwrite", partition_by=part or None,
             primary_key=pk or None,
@@ -732,16 +733,18 @@ class StatementExecutor:
                 (c.version, c.action, c.timestamp_ms, len(c.data_units))
                 for c in t.history()
             ]
-            return self.spark.createDataFrame(
-                rows,
+            return local_relation(
+                self.spark,
                 "version long, operation string, timestamp_ms long, "
                 "num_units int",
+                list(zip(*rows)),
             )
         d = t.detail()
-        return self.spark.createDataFrame(
-            [(d["version"], d["num_units"], d["num_files"],
-              d["num_rows_from_stats"])],
+        return local_relation(
+            self.spark,
             "version long, num_units int, num_files int, num_rows long",
+            [[d["version"]], [d["num_units"]], [d["num_files"]],
+             [d["num_rows_from_stats"]]],
         )
 
     def _show(self, s: str):
@@ -749,15 +752,16 @@ class StatementExecutor:
         if m:
             from pyspark.sql import types as T
 
-            rows = []
+            tables = []
             for root, dirs, _files in os.walk(self.root):
                 if "_commits" in dirs:
                     rel = os.path.relpath(root, self.root)
-                    rows.append((rel.replace(os.sep, "."),))
+                    tables.append(rel.replace(os.sep, "."))
                     dirs.clear()
-            return self.spark.createDataFrame(
-                sorted(rows),
+            return local_relation(
+                self.spark,
                 T.StructType([T.StructField("table", T.StringType())]),
+                [sorted(tables)],
             )
         m = re.match(
             rf"SHOW\s+TBLPROPERTIES\s+({_IDENT})\s*"
@@ -783,14 +787,15 @@ class StatementExecutor:
             key = m.group("key")
             if key is not None:
                 props = {key: props[key]} if key in props else {}
-            return self.spark.createDataFrame(
-                sorted(props.items()),
+            return local_relation(
+                self.spark,
                 T.StructType(
                     [
                         T.StructField("key", T.StringType()),
                         T.StructField("value", T.StringType()),
                     ]
                 ),
+                list(zip(*sorted(props.items()))),
             )
         m = re.match(
             rf"SHOW\s+COLUMNS\s+(?:IN|FROM)\s+({_IDENT})\s*$",
@@ -807,9 +812,10 @@ class StatementExecutor:
             names = [
                 f["name"] for f in json.loads(c.schema_json)["fields"]
             ]
-            return self.spark.createDataFrame(
-                [(n,) for n in names],
+            return local_relation(
+                self.spark,
                 T.StructType([T.StructField("col_name", T.StringType())]),
+                [names],
             )
         m = re.match(
             rf"SHOW\s+PARTITIONS\s+({_IDENT})\s*$", s, flags=re.IGNORECASE
@@ -838,7 +844,7 @@ class StatementExecutor:
 
         schema = T.StructType.fromJson(_json.loads(prev.schema_json))
         t.write(
-            self.spark.createDataFrame([], schema), mode="overwrite",
+            local_relation(self.spark, schema), mode="overwrite",
             partition_by=list(prev.partition_by or []),
             primary_key=list(prev.primary_key or []),
         )
@@ -883,7 +889,7 @@ class StatementExecutor:
             "formatted"
         )
         plan = df._jdf.queryExecution().explainString(mode)
-        return self.spark.createDataFrame([(plan,)], "plan string")
+        return local_relation(self.spark, "plan string", [[plan]])
 
     _VAO = re.compile(
         rf"\b(?:FROM|JOIN)\s+({_IDENT})\s+VERSION\s+AS\s+OF\s+(\d+)",

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from component_delta_lake_writer_spark.operators.sessions import hourly_rollup
+from component_delta_lake_writer_spark.session import local_relation
 from component_delta_lake_writer_spark.tables import ts_tz_expr, ts_us_expr
 
 
@@ -502,7 +503,7 @@ def stream_interval_join_outer(
                 (-i, ts, -1, "click", 0.0, "{}"),
                 (-i - 10, ts, -1, "purchase", 0.0, "{}"),
             ]
-            sent = spark.createDataFrame(row, schema)
+            sent = local_relation(spark, schema, list(zip(*row)))
             tmp = os.path.join(stage, f"_tmp{i}")
             sent.coalesce(1).write.parquet(tmp)
             part = [

@@ -24,6 +24,21 @@ sys.path.insert(0, "/root/repo")
 SF_DIR = "/root/testdata/sf0.01"
 
 
+def _wait_for_progress(progress: list, settle_s: float = 0.5,
+                       timeout_s: float = 10.0) -> None:
+    """Listener events arrive asynchronously: poll until ``progress``
+    has not grown for ``settle_s``, giving up after ``timeout_s``, so
+    a late final micro-batch event is still printed."""
+    deadline = time.monotonic() + timeout_s
+    seen, quiet_since = len(progress), time.monotonic()
+    while time.monotonic() < deadline:
+        time.sleep(0.05)
+        if len(progress) != seen:
+            seen, quiet_since = len(progress), time.monotonic()
+        elif time.monotonic() - quiet_since >= settle_s:
+            return
+
+
 def main() -> None:
     keys = sys.argv[1].split(",")
     repeat = 2
@@ -70,9 +85,7 @@ def main() -> None:
             t0 = time.perf_counter()
             n = QUERIES[key](spark, SF_DIR).count()
             dt = time.perf_counter() - t0
-            # listener events are delivered asynchronously — give the
-            # bus a beat to flush the final batch
-            time.sleep(0.5)
+            _wait_for_progress(cap.progress)
             print(f"{key} run{i}: {dt:.3f}s ({n} rows, "
                   f"{len(cap.progress)} batches)")
             for p in cap.progress:

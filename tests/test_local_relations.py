@@ -1,21 +1,25 @@
-"""Driver-built relations on the write path are Arrow LocalRelations.
+"""Driver-built relations are Arrow LocalRelations.
 
 ``createDataFrame(<python list>)`` plans as a ``LogicalRDD``: every use
 runs a Python-worker job and its size estimate is ``Long.MAX``, which
-stops joins against it from planning as broadcasts. The runner and the
-sinks build every such relation through ``session.local_relation``;
-these tests pin that for each site and keep its rows and schema.
+stops joins against it from planning as broadcasts. Every module of the
+package builds such relations through ``session.local_relation``;
+these tests pin that for the write path and the corpus hot paths and
+keep each relation's rows and schema.
 """
 
 from __future__ import annotations
 
 import ast
+import datetime
 import os
+import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from component_delta_lake_writer_spark.sinks import ManagedTable
-from conftest import REPO
+from conftest import REPO, SF_SMALL
 
 PKG = REPO / "component_delta_lake_writer_spark"
 
@@ -41,6 +45,61 @@ def test_local_relation_schema_and_rows(spark):
     empty = local_relation(spark, df.schema)
     _no_logical_rdd(empty)
     assert empty.schema == df.schema and empty.count() == 0
+
+
+def test_local_relation_reads_naive_timestamps_as_local_time(
+    spark, monkeypatch
+):
+    """A naive datetime in a TIMESTAMP field is local wall-clock time,
+    as createDataFrame and collect() read it, not UTC."""
+    from component_delta_lake_writer_spark.session import local_relation
+
+    schema = "ts TIMESTAMP, ntz TIMESTAMP_NTZ"
+    noon = datetime.datetime(2024, 1, 1, 12, 0)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        df = local_relation(spark, schema, [[noon], [noon]])
+        want = spark.createDataFrame([(noon, noon)], schema)
+        as_text = ["CAST(ts AS STRING)", "CAST(ntz AS STRING)"]
+        assert df.selectExpr(*as_text).collect() == (
+            want.selectExpr(*as_text).collect()
+        )
+        assert [tuple(r) for r in df.collect()] == [(noon, noon)]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+@pytest.mark.parametrize(
+    "key", ["hybrid_rrf_retrieval", "bm25_topk_docs", "pipeline_clean_corpus"]
+)
+def test_corpus_hot_paths_plan_local_relations(spark, oracle_con, key):
+    """The query lists and probe maps of the retrieval keys and the
+    union-find result inside pipeline_clean_corpus are Arrow relations;
+    the rows still match the registry oracle."""
+    from component_delta_lake_writer_spark.plans import ORACLES, QUERIES
+    from oracle import compare
+
+    df = QUERIES[key](spark, SF_SMALL)
+    _no_logical_rdd(df)
+    compare(df, oracle_con, ORACLES[key], key)
+
+
+def test_connected_components_without_edges(spark):
+    """No edges: an empty (id, component) relation, not a Python-list
+    frame."""
+    from component_delta_lake_writer_spark.operators.clusters import (
+        connected_components,
+    )
+
+    edges = spark.range(0).select(
+        F.col("id").alias("id_a"), F.col("id").alias("id_b")
+    )
+    cc = connected_components(edges)
+    _no_logical_rdd(cc)
+    assert cc.schema.simpleString() == "struct<id:bigint,component:bigint>"
+    assert cc.collect() == []
 
 
 def test_empty_snapshot_reads(spark, tmp_path):
@@ -163,11 +222,11 @@ def _create_dataframe_calls(path) -> list[int]:
 
 
 def test_write_path_builds_relations_only_through_local_relation():
-    """Keeps Python-list relations from creeping back into the runner
-    and the sinks: every driver-built relation there goes through
+    """Keeps Python-list relations from creeping back into the package:
+    every driver-built relation, in any module, goes through
     ``session.local_relation``."""
-    files = [PKG / "runner.py", *sorted((PKG / "sinks").glob("*.py"))]
-    assert len(files) > 5
+    files = sorted(PKG.rglob("*.py"))
+    assert PKG / "runner.py" in files and PKG / "statements.py" in files
     offenders = {
         os.path.relpath(f, REPO): calls
         for f in files
