@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -13,6 +14,7 @@ def _ts(day: int, hour: int, minute: int = 0) -> dt.datetime:
     return dt.datetime(2026, 1, day, hour, minute)
 
 
+@pytest.mark.slow
 def test_cusum_changepoint_level_shift(spark):
     """10 hours at level 10 then 10 hours at level 50: the CUSUM peak
     lands on the last bucket of the first regime, with exact means on
@@ -36,6 +38,7 @@ def test_cusum_changepoint_level_shift(spark):
     assert r.mean_after == 50.0
 
 
+@pytest.mark.slow
 def test_cusum_constant_series_no_signal(spark):
     """A constant series has D_i = 0 everywhere; the earliest-bucket
     tie-break wins and mean_before equals the level."""
@@ -52,6 +55,7 @@ def test_cusum_constant_series_no_signal(spark):
     assert r.mean_after == 7.0
 
 
+@pytest.mark.slow
 def test_cusum_null_rows_excluded(spark):
     from component_delta_lake_writer_spark.operators.timeseries import (
         cusum_changepoint,
@@ -112,6 +116,7 @@ def test_benford_audit_digits_and_exclusions(spark):
     assert out[2].chi2_term == round((0.2 - exp) ** 2 / exp, 6)
 
 
+@pytest.mark.slow
 def test_triangle_count_small_graph(spark):
     from component_delta_lake_writer_spark.operators.graph import (
         triangle_count,
@@ -129,6 +134,7 @@ def test_triangle_count_small_graph(spark):
     assert r.global_clustering == 0.6
 
 
+@pytest.mark.slow
 def test_triangle_count_triangle_free(spark):
     from component_delta_lake_writer_spark.operators.graph import (
         triangle_count,
@@ -144,6 +150,7 @@ def test_triangle_count_triangle_free(spark):
     assert r.global_clustering == 0.0
 
 
+@pytest.mark.slow
 def test_basket_lift_exact(spark):
     from component_delta_lake_writer_spark.operators.affinity import (
         basket_lift,
@@ -166,6 +173,7 @@ def test_basket_lift_exact(spark):
     assert by_pair[("B", "C")].lift == 1.5  # 1·3 / (2·1)
 
 
+@pytest.mark.slow
 def test_basket_lift_topk_tiebreak(spark):
     from component_delta_lake_writer_spark.operators.affinity import (
         basket_lift,
@@ -257,6 +265,7 @@ def test_seasonal_outliers_flags_cell_extreme(spark):
     )
 
 
+@pytest.mark.slow
 def test_bfs_distances_path_graph(spark):
     from component_delta_lake_writer_spark.operators.graph import (
         bfs_distances,
@@ -288,6 +297,7 @@ def test_bfs_distances_multi_source_min(spark):
     assert out == {1: 0, 5: 0, 2: 1, 4: 1, 3: 2}
 
 
+@pytest.mark.slow
 def test_stream_anomaly_monitor_scores_and_replays(spark, tmp_path):
     """One drained batch must land exactly the hand-computed monitor
     row: unmatched groups and sd=0 groups count as unscored (visible,
@@ -445,6 +455,7 @@ def test_rank_eval_exact(spark):
     assert r.recall_at_k == round((0.5 + 1.0 + 0.0) / 3, 6)
 
 
+@pytest.mark.slow
 def test_hits_two_iterations_hand_graph(spark):
     """1->3, 2->3, 2->4, 3->4: node 2 is the hub (points at both
     authorities), 3 and 4 tie as authorities; exact max-normalized
@@ -531,6 +542,7 @@ def test_event_path_trigrams_exact(spark):
     assert abc.share == round(2 / 3, 6)
 
 
+@pytest.mark.slow
 def test_quantile_normalize_step_mapping(spark):
     from component_delta_lake_writer_spark.operators.features import (
         quantile_normalize,
@@ -595,7 +607,6 @@ def test_two_proportion_ztest_exact(spark):
 
 
 def test_two_proportion_ztest_guards(spark):
-    import pytest
 
     from component_delta_lake_writer_spark.errors import UserException
     from component_delta_lake_writer_spark.operators.experiments import (
@@ -731,6 +742,7 @@ def test_mann_whitney_all_tied_degenerate(spark):
     assert r.z is None and r.significant == 0
 
 
+@pytest.mark.slow
 def test_gini_known_values(spark):
     from component_delta_lake_writer_spark.operators.features import (
         gini_coefficient,
@@ -764,7 +776,6 @@ def test_basket_lift_refuses_pathological_basket(spark):
     """max_basket_size is enforced, not advisory (r10 verdict): an
     oversized basket raises at action time naming the basket key,
     before the pair generator would expand C(size, 2) structs."""
-    import pytest
     from pyspark.sql import functions as F
 
     from component_delta_lake_writer_spark.operators.affinity import (
@@ -791,7 +802,6 @@ def test_gini_refuses_term_cast_overflow_values(spark):
     raises; under non-ANSI the raise_error guard on max|x| fires —
     either way the refusal is LOUD, never a silently-dropped term
     (documented headroom contract)."""
-    import pytest
     from pyspark.sql import functions as F
 
     from component_delta_lake_writer_spark.operators.features import (
@@ -816,7 +826,6 @@ def test_chi2_independence_empty_input_raises(spark):
     """Zero non-null (a, b) pairs raises like the z-test's arm check
     instead of returning one all-NULL row (r10 advice: the SQL twin
     returns zero rows — a latent cross-engine divergence)."""
-    import pytest
     from pyspark.sql import functions as F
 
     from component_delta_lake_writer_spark.errors import UserException
@@ -934,7 +943,6 @@ def test_ab_bootstrap_ci_properties(spark):
 
 
 def test_ab_bootstrap_ci_validation(spark):
-    import pytest
     from pyspark.sql import functions as F
 
     from component_delta_lake_writer_spark.errors import UserException
@@ -951,6 +959,7 @@ def test_ab_bootstrap_ci_validation(spark):
         ab_bootstrap_ci(df, "g", "x", "id", b_replicates=2)
 
 
+@pytest.mark.slow
 def test_spearman_hand_values(spark):
     """Perfect monotone with ties -> rho 1; reversed -> -1; constant
     column -> NULL (zero rank variance)."""
@@ -1094,6 +1103,7 @@ def test_ndcg_hand_values(spark):
     assert r.ndcg_at_k == round(round(dcg / idcg, 9), 6)
 
 
+@pytest.mark.slow
 def test_mann_whitney_ci_properties(spark):
     """Reproducible; CI brackets the observed rank-biserial effect on
     a clearly-separated fixture and excludes 0."""
@@ -1119,6 +1129,7 @@ def test_mann_whitney_ci_properties(spark):
     assert a.ci_lo > 0 and a.significant == 1
 
 
+@pytest.mark.slow
 def test_cohen_kappa_hand_values(spark):
     """Perfect agreement -> kappa 1; hand-computed mixed case."""
     from component_delta_lake_writer_spark.operators.experiments import (
@@ -1178,7 +1189,6 @@ def test_cochran_armitage_hand_values(spark):
 def test_calibration_report_hand_values(spark):
     """Scores land in the right bins, rates are exact, the 1.0 score
     folds into the top bin, out-of-range scores raise."""
-    import pytest
 
     from component_delta_lake_writer_spark.operators.dq import (
         calibration_report,
@@ -1242,7 +1252,6 @@ def test_winsorize_hand_values(spark):
     assert out[0] == 1.0 and out[1] == 1.0
     assert out[19] == 17.0 and out[18] == 17.0
     assert out[10] == 10.0  # interior untouched
-    import pytest
 
     with pytest.raises(ValueError, match="lo fraction"):
         winsorize(df, "v", "id", lo_num=95, hi_num=90)
@@ -1253,7 +1262,6 @@ def test_theil_sen_hand_values(spark):
     slope 1, trending +1; an outlier spike can't drag the median."""
     import datetime as dtm
 
-    import pytest
 
     from component_delta_lake_writer_spark.operators.timeseries import (
         theil_sen_hourly,
@@ -1282,6 +1290,7 @@ def test_theil_sen_hand_values(spark):
         theil_sen_hourly(sparse, "ts")
 
 
+@pytest.mark.slow
 def test_bradley_terry_orders_and_symmetry(spark):
     """A beats B twice, B beats C once -> strict strength order
     A > B > C; a perfectly symmetric rivalry fits equal strengths
@@ -1307,11 +1316,11 @@ def test_bradley_terry_orders_and_symmetry(spark):
     assert r["A"].rank == 1 and r["B"].rank == 2  # id tiebreak
 
 
+@pytest.mark.slow
 def test_benjamini_hochberg_hand_values(spark):
     """The textbook 6-test grid: q-values are the capped suffix-min
     of m*p/i and the reject set is exactly the step-up set; tied
     p-values share one q; out-of-range inputs refuse loudly."""
-    import pytest
 
     from component_delta_lake_writer_spark.operators.experiments import (
         benjamini_hochberg,
@@ -1373,7 +1382,6 @@ def test_logrank_hand_values(spark):
     import datetime as dtm
     import math
 
-    import pytest
 
     from component_delta_lake_writer_spark.operators.sessions import (
         logrank_test,
@@ -1412,6 +1420,7 @@ def test_logrank_hand_values(spark):
         logrank_test(one_arm, "u", "ts", "arm", censor_days=1)
 
 
+@pytest.mark.slow
 def test_bradley_terry_broadcast_crossover(spark):
     """broadcast_scores=False (the billion-item shuffle-join
     spelling) fits bit-identical strengths to the broadcast default
@@ -1477,6 +1486,7 @@ def _brute_cox(lifetimes, iterations):
     return len(rows), o, b, se
 
 
+@pytest.mark.slow
 def test_cox_ph_hand_values(spark):
     """The logrank hand fixture through Cox: beta/HR/se/CI match the
     brute Newton fold with identical rounding; beta=0 input (equal
@@ -1484,7 +1494,6 @@ def test_cox_ph_hand_values(spark):
     import datetime as dtm
     import math
 
-    import pytest
 
     from component_delta_lake_writer_spark.operators.sessions import (
         cox_ph_two_arm,
@@ -1536,6 +1545,7 @@ def test_cox_ph_hand_values(spark):
         )
 
 
+@pytest.mark.slow
 def test_gehan_wilcoxon_hand_values(spark):
     """The logrank hand fixture through the Gehan-Wilcoxon weights:
     U = Σ n_t(d_a − E_t) and V = Σ n_t²·Var_t match the brute fold
@@ -1591,6 +1601,7 @@ def test_gehan_wilcoxon_hand_values(spark):
     assert s.w_diff == 0.0 and s.z == 0.0 and s.significant == 0
 
 
+@pytest.mark.slow
 def test_stratified_logrank_hand_values(spark):
     """Two identical strata of the logrank hand fixture: the pooled
     O/E/V are exactly 2x the single-stratum values, so z scales by
@@ -1721,11 +1732,11 @@ def test_cuped_hand_values(spark):
     assert abs(r2.z_adj) >= abs(r2.z_raw)
 
 
+@pytest.mark.slow
 def test_srm_check_hand_values(spark):
     """Matched split passes, a 30/70-vs-50/50 mismatch fires, a
     declared-but-empty arm contributes its full (0-e)^2/e term,
     undeclared observed arms and bad declarations refuse."""
-    import pytest
 
     from component_delta_lake_writer_spark.operators.experiments import (
         srm_check,
@@ -1779,6 +1790,7 @@ def test_srm_check_hand_values(spark):
         )
 
 
+@pytest.mark.slow
 def test_ab_grid_fdr_hand_values(spark):
     """The erfc p-approximation tracks math.erfc to <1.5e-7; a
     planted winning segment is the ONLY BH rejection across the
@@ -1837,11 +1849,11 @@ def test_ab_grid_fdr_hand_values(spark):
     assert qs == sorted(qs)
 
 
+@pytest.mark.slow
 def test_auc_roc_hand_values(spark):
     """Perfect separation -> 1.0; random interleave -> 0.75 on the
     hand-counted pair fractions; full ties -> 0.5; one class ->
     NULL auc with the counts still visible; non-0/1 label refuses."""
-    import pytest
 
     from component_delta_lake_writer_spark.operators.experiments import (
         auc_roc,
@@ -1990,7 +2002,6 @@ def test_mantel_haenszel_hand_values(spark):
     !=2 arms and non-0/1 success refuse."""
     import math
 
-    import pytest
 
     from component_delta_lake_writer_spark.operators.experiments import (
         mantel_haenszel,
@@ -2032,6 +2043,7 @@ def test_mantel_haenszel_hand_values(spark):
         mantel_haenszel(bad, "st", "g", "y").collect()
 
 
+@pytest.mark.slow
 def test_vocab_js_divergence_hand_values(spark):
     """Two tiny corpora with hand-folded JS: the shared token's
     mixture term plus the two one-sided ln2 terms; identical sides
@@ -2039,7 +2051,6 @@ def test_vocab_js_divergence_hand_values(spark):
     both refuse."""
     import math
 
-    import pytest
 
     from component_delta_lake_writer_spark.operators.text import (
         vocab_js_divergence,
@@ -2079,6 +2090,7 @@ def test_vocab_js_divergence_hand_values(spark):
         vocab_js_divergence(empty, "side", "A", "B").collect()
 
 
+@pytest.mark.slow
 def test_jonckheere_hand_values(spark):
     """Two perfectly separated ordered groups: J = every cross pair,
     E and the no-tie variance from the textbook formula; an
@@ -2086,7 +2098,6 @@ def test_jonckheere_hand_values(spark):
     degenerate order list."""
     import math
 
-    import pytest
 
     from component_delta_lake_writer_spark.operators.experiments import (
         jonckheere_terpstra,
@@ -2112,12 +2123,12 @@ def test_jonckheere_hand_values(spark):
         jonckheere_terpstra(df, "g", "v", ["A", "A"])
 
 
+@pytest.mark.slow
 def test_fisher_exact_hand_values(spark):
     """The tea-tasting 2x2 [[3,1],[1,3]]: p_two = 34/70 exactly,
     one-sided tails 69/70 and 17/70, OR = 9; a zero-success table
     degenerates to p = 1 with NULL OR; != 2 arms and non-0/1
     success refuse; an absurd support refuses toward the z-test."""
-    import pytest
 
     from component_delta_lake_writer_spark.operators.experiments import (
         fisher_exact,
@@ -2150,12 +2161,12 @@ def test_fisher_exact_hand_values(spark):
         fisher_exact(df, "g", "y", max_support=1)
 
 
+@pytest.mark.slow
 def test_pr_auc_hand_values(spark):
     """sklearn's average-precision on [1,0,1,0] x [4,3,2,1] is
     (1 + 2/3)/2 — under the shared 9dp-term model that lands at
     0.833333334; a full tie block is one step (0.5); no positives
     -> NULL with counts visible; non-0/1 labels refuse."""
-    import pytest
 
     from component_delta_lake_writer_spark.operators.experiments import (
         pr_auc,
@@ -2180,11 +2191,11 @@ def test_pr_auc_hand_values(spark):
         pr_auc(bad, "y", "s").collect()
 
 
+@pytest.mark.slow
 def test_binom_exact_hand_values(spark):
     """scipy's binomtest(7, 10, 0.5) = 0.34375 exactly and the
     all-failure table 2/32; p0 outside (0,1), empty input and
     non-0/1 success refuse; absurd support refuses toward z."""
-    import pytest
 
     from component_delta_lake_writer_spark.operators.experiments import (
         binom_exact_test,
@@ -2211,6 +2222,7 @@ def test_binom_exact_hand_values(spark):
         binom_exact_test(df, "y", 0.5, max_support=3)
 
 
+@pytest.mark.slow
 def test_breslow_day_hand_values(spark):
     """Identical per-stratum ORs give chi2 exactly 0 (the fitted
     counts ARE the observed); opposite per-stratum effects light
@@ -2257,12 +2269,12 @@ def test_breslow_day_hand_values(spark):
     assert r.df == 0 and r.chi2 is None and r.significant == 0
 
 
+@pytest.mark.slow
 def test_mcnemar_hand_values(spark):
     """9-vs-1 discordant pairs: exact two-sided p = 22/1024 (the
     concordant pairs don't move it); zero discordance degenerates
     to p = 1; the binomial equivalence holds against
     binom_exact_test on the discordant slice; non-0/1 refuses."""
-    import pytest
 
     from component_delta_lake_writer_spark.operators.experiments import (
         binom_exact_test,
@@ -2297,7 +2309,6 @@ def test_cochran_q_hand_values(spark):
     """Six items x three systems: Q matches the textbook fold
     (brute 4.5); unanimous items alone degenerate the denominator
     to NULL; duplicate/short column lists and non-0/1 refuse."""
-    import pytest
 
     from component_delta_lake_writer_spark.operators.experiments import (
         cochran_q,
@@ -2362,7 +2373,6 @@ def test_ab_power_mde_hand_values(spark):
     refuse."""
     import math
 
-    import pytest
 
     from component_delta_lake_writer_spark.operators.experiments import (
         ab_power_mde,

@@ -1,9 +1,11 @@
 """Keboola data-dir binding tests (reference src/component.py:35-48,
-72,200-206; fixture component_config/sample-config/)."""
+72,200-206; the reference's fixture component_config/sample-config/
+is rebuilt under tests/fixtures/sample-config/)."""
 
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +21,7 @@ from component_delta_lake_writer_spark.datadir import (
 from component_delta_lake_writer_spark.errors import UserException
 
 SF = "/root/testdata/sf0.001"
+SAMPLE_CONFIG = Path(__file__).parent / "fixtures" / "sample-config"
 
 
 def _write_config(data_dir, params):
@@ -93,9 +96,7 @@ def test_parse_sliced_table_dir(tmp_path):
 def test_reference_sample_config_fixture_parses():
     """The reference's canonical fixture binds: one table, 7 string
     columns from the legacy manifest, no primary key."""
-    tables = discover_input_tables(
-        "/root/reference/component_config/sample-config"
-    )
+    tables = discover_input_tables(str(SAMPLE_CONFIG))
     assert len(tables) == 1
     t = tables[0]
     assert t.name == "test"

@@ -192,6 +192,7 @@ def test_driver_tier_matches_spark_tier(spark, tmp_path):
     assert drv == spk
 
 
+@pytest.mark.slow
 def test_partitioned_table_skips_driver_tier(spark, tmp_path):
     """Hive-partitioned layouts must take the Spark tier (partition
     columns live in directory paths, not parquet files) and still
@@ -231,6 +232,7 @@ def test_partitioned_table_skips_driver_tier(spark, tmp_path):
     assert eng == ext
 
 
+@pytest.mark.slow
 def test_driver_tier_keys_above_collect_bound(spark, tmp_path):
     """Keys between _DV_COLLECT_MAX and the driver bound take the
     driver tier (matched output is bounded by the target-row bound,

@@ -155,6 +155,7 @@ def test_msck_repair_regenerates_missing_log_entries(spark, tmp_path_str):
     assert t.sync_metadata() == 0  # idempotent: nothing left to repair
 
 
+@pytest.mark.slow
 def test_checkpoint_written_and_replayed(spark, tmp_path):
     """Delta-protocol checkpoints: the 10th commit materializes
     {v:020d}.checkpoint.parquet + _last_checkpoint, and checkpoint-
@@ -230,6 +231,7 @@ def test_checkpoint_carries_protocol_features_and_tombstones(spark, tmp_path):
     assert adds.isdisjoint({tomb["path"] for tomb in tombs})
 
 
+@pytest.mark.slow
 def test_mor_commits_materialize_deletion_vectors(spark, tmp_path):
     """Merge-on-read delete sets are mirrored as real Delta deletion
     vectors: the mirror stays FRESH (no _STALE), the affected file's
@@ -316,6 +318,7 @@ def test_mor_over_dv_bound_falls_back_to_stale(spark, tmp_path):
     assert got.count() == t.read().count() == 90
 
 
+@pytest.mark.slow
 def test_vacuum_reclaims_expired_change_sets(spark, tmp_path):
     """CDF change-set dirs follow the unit liveness rule: vacuum
     deletes _changes/vN exactly when commit N left the retention
@@ -910,6 +913,7 @@ def test_vacuum_reclaims_orphaned_dv_files(spark, tmp_path):
                 if f.startswith("deletion_vector_")]
 
 
+@pytest.mark.slow
 def test_dv_with_column_mapping_and_partitioning(spark, tmp_path):
     """DVs compose with the mirror's other dimensions: (a) a
     column-mapped table's DV scan resolves delete-key columns through
@@ -1156,6 +1160,7 @@ def test_dv_bound_is_per_delete_set(spark, tmp_path):
     assert sum(d["cardinality"] for d in dvs.values()) == 10
 
 
+@pytest.mark.slow
 def test_latest_metadata_checkpoint_bounded(spark, tmp_path):
     """Review finding: the latest-metaData probe must be CHECKPOINT-
     bounded — a never-evolved table keeps its only metaData at v0, and
@@ -1311,6 +1316,7 @@ def test_ict_midhistory_enablement_properties(spark, tmp_path_str):
     assert protos and "inCommitTimestamp" in protos[0]["writerFeatures"]
 
 
+@pytest.mark.slow
 def test_row_tracking_checkpoint_carries_domain_and_ids(spark, tmp_path_str):
     from component_delta_lake_writer_spark.sinks.delta_log import (
         read_last_checkpoint,
@@ -1361,6 +1367,7 @@ def test_dv_readd_keeps_row_ids(spark, tmp_path_str):
     assert rows == {k: k for k in range(8) if k % 3 != 0}
 
 
+@pytest.mark.slow
 def test_clustering_domain_metadata(spark, tmp_path_str):
     from component_delta_lake_writer_spark.sinks.delta_log import (
         read_last_checkpoint,
@@ -1435,6 +1442,7 @@ def test_clustering_domain_metadata(spark, tmp_path_str):
     ]
 
 
+@pytest.mark.slow
 def test_external_row_id_reader_matches_engine(spark, tmp_path_str):
     """The mirror ALONE carries complete row identity: an external
     reader resolving ids from _delta_log (baseRowId + row_index,
@@ -1479,6 +1487,7 @@ def test_external_row_id_reader_matches_engine(spark, tmp_path_str):
     }
 
 
+@pytest.mark.slow
 def test_external_read_partitioned_table(spark, tmp_path_str):
     """Partitioned external read: partition values come from the add
     actions' partitionValues (typed literals per file group), per the
@@ -1848,6 +1857,7 @@ def test_classic_table_upgrades_to_v2_policy(spark, tmp_path):
     assert read_delta_table(spark, t.path).count() == 100
 
 
+@pytest.mark.slow
 def test_metadata_cleanup_retention(spark, tmp_path):
     """cleanup_metadata (delta.logRetentionDuration): JSON + checkpoint
     files below the advertised checkpoint are deleted once past
@@ -1983,6 +1993,7 @@ def test_cleanup_reclaims_crc_files(spark, tmp_path):
     assert os.path.exists(os.path.join(log_dir, f"{v:020d}.crc"))
 
 
+@pytest.mark.slow
 def test_auto_log_cleanup_on_checkpoint(spark, tmp_path):
     """Expired-log cleanup piggybacks on checkpointing (delta-spark
     behavior): with delta.logRetentionDuration set to zero, crossing a
@@ -2154,6 +2165,7 @@ def test_check_constraints_mirrored(spark, tmp_path):
     assert pr2["minWriterVersion"] >= 3
 
 
+@pytest.mark.slow
 def test_external_cdf_matches_engine(spark, tmp_path):
     """Delta CDF interop: CDF-enabled commits mirror their change sets
     as cdc actions over hardlinked _change_data files, and the
@@ -2313,6 +2325,7 @@ def test_checkpoint_interval_property(spark, tmp_path):
     assert read_last_checkpoint(t.path)["version"] == 5
 
 
+@pytest.mark.slow
 def test_retention_compaction_v2_dv_composite(spark, tmp_path):
     """VERDICT r7 task 7: log-retention cleanup, minor log compaction,
     v2 checkpoints and DV descriptors COMPOSED on one table across 25+
@@ -2451,6 +2464,7 @@ def test_retention_compaction_v2_dv_composite(spark, tmp_path):
     assert set(seeded3[0]) <= eng_units
 
 
+@pytest.mark.slow
 def test_column_mapping_dv_checkpoint_composite(spark, tmp_path):
     """columnMapping composed with MOR deletes (DVs), v2 checkpoints
     and a post-rename rewrite on ONE table: the external snapshot

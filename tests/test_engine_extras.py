@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from conftest import SF_SMALL
 
 
+@pytest.mark.slow
 def test_stateful_stream_equals_batch_sessionize(spark):
     """The applyInPandasWithState sessionizer must produce exactly the
     batch window-function result (Structured Streaming unification)."""
@@ -78,6 +79,7 @@ def test_runner_files_path(spark, tmp_path):
     assert t.read().count() == 1500
 
 
+@pytest.mark.slow
 def test_connected_components_matches_union_find(spark):
     from component_delta_lake_writer_spark.operators.clusters import dedup_clusters
     from component_delta_lake_writer_spark.operators.dedup import minhash_dedup
@@ -183,6 +185,7 @@ def test_optimize_cluster_by_layout(spark, tmp_path):
         assert hi1 <= lo2  # disjoint ranges → file skipping works
 
 
+@pytest.mark.slow
 def test_watermark_drops_late_data(spark, tmp_path):
     """Watermark semantics on a live-ish two-batch stream: an event
     arriving far behind the watermark is excluded from its (already
@@ -265,6 +268,7 @@ def test_commit_conflict_detected(spark, tmp_path):
         t._publish(clash)  # writer B must fail, not overwrite
 
 
+@pytest.mark.slow
 def test_read_changes_incremental(spark, tmp_path):
     from component_delta_lake_writer_spark.errors import UserException
     from component_delta_lake_writer_spark.sinks import ManagedTable
@@ -668,6 +672,7 @@ def test_merge_asof_directions_and_tolerance(spark):
         merge_asof(left, dup, on="t", by=["k"], check_unique=True)
 
 
+@pytest.mark.slow
 def test_cdf_streaming_source_drains_changes(spark, tmp_path):
     """table_changes_stream (Spark 4 Python streaming Data Source):
     version-offset micro-batches over a CDF-enabled table — appends
@@ -718,6 +723,7 @@ def test_cdf_streaming_source_drains_changes(spark, tmp_path):
     }
 
 
+@pytest.mark.slow
 def test_cdf_stream_default_is_latest_snapshot(spark, tmp_path):
     """Delta parity: WITHOUT startingVersion the stream's first batch
     is the latest snapshot as 'insert' rows stamped with the snapshot
@@ -757,6 +763,7 @@ def test_cdf_stream_default_is_latest_snapshot(spark, tmp_path):
     }
 
 
+@pytest.mark.slow
 def test_cdf_stream_starting_version_inclusive(spark, tmp_path):
     """startingVersion is INCLUSIVE (Delta parity): 0 bootstraps the
     initial snapshot as inserts, N streams commit N itself."""
@@ -795,6 +802,7 @@ def test_cdf_stream_starting_version_inclusive(spark, tmp_path):
     assert drain(0) == {(1, "insert", 0), (2, "insert", 1)}
 
 
+@pytest.mark.slow
 def test_stream_replicate_replace_where_ordering(spark, tmp_path):
     """A replace_where commit deletes old images and inserts new ones
     under the SAME PKs in one version; replication must apply deletes
@@ -834,6 +842,7 @@ def test_stream_replicate_replace_where_ordering(spark, tmp_path):
     assert got == {(1, -1.0), (2, -2.0), (3, 3.0)}
 
 
+@pytest.mark.slow
 def test_stream_replicate_fresh_checkpoint_noop(spark, tmp_path):
     """Checkpoint loss: a SECOND stream run with a FRESH checkpoint
     replays every source version; the per-version writer-txn
@@ -940,6 +949,7 @@ def test_cdf_stream_partitioned_typed_values(spark, tmp_path):
     assert rows == {(2, dt.date(2024, 1, 2), False)}
 
 
+@pytest.mark.slow
 def test_connected_components_deep_chain_converges(spark):
     """Pointer doubling (VERDICT r3 item 3): a 64-vertex CHAIN has
     diameter 63 — plain min-label propagation needs ~63 rounds, the
@@ -966,6 +976,7 @@ def test_connected_components_deep_chain_converges(spark):
     assert all(got[200 + i] == 200 for i in range(8))
 
 
+@pytest.mark.slow
 def test_cdf_stream_snapshot_applies_mor_delete_sets(spark, tmp_path):
     """The default (no startingVersion) snapshot bootstrap must equal
     ManagedTable.read(): units masked by merge-on-read delete sets
@@ -1012,6 +1023,7 @@ def test_cdf_stream_snapshot_applies_mor_delete_sets(spark, tmp_path):
     assert got == want == [(1, 1.0), (2, -2.0), (3, -3.0), (4, 4.0)]
 
 
+@pytest.mark.slow
 def test_cdf_stream_respects_column_mapping_shadows(spark, tmp_path):
     """Review finding: data-unit files store PHYSICAL names; after
     rename x->z then rename y->x, streaming field 'x' must resolve
@@ -1047,6 +1059,7 @@ def test_cdf_stream_respects_column_mapping_shadows(spark, tmp_path):
     assert (batch["k"], batch["z"], batch["x"]) == (1, 10, 100)
 
 
+@pytest.mark.slow
 def test_cdf_stream_crosses_fully_pruned_dml(spark, tmp_path):
     """Review finding: a CDF-enabled DELETE whose predicate stats-prune
     every unit still publishes a commit; the stream (and batch range)
@@ -1105,6 +1118,7 @@ def test_cdf_stream_starting_version_validation(spark, tmp_path):
             r.initialOffset()
 
 
+@pytest.mark.slow
 def test_similarity_contracts_offset_ids_and_zero_vectors(spark):
     """Review findings: (1) seeding must take the k LOWEST ids, not
     filter id < k — offset id spaces clustered nothing and silently
@@ -1134,6 +1148,7 @@ def test_similarity_contracts_offset_ids_and_zero_vectors(spark):
     assert cosine_topk(df, zp, k=3).count() == 3
 
 
+@pytest.mark.slow
 def test_pq_topk_missing_probe_raises_and_remainder_dims(spark):
     from component_delta_lake_writer_spark.errors import UserException
     from component_delta_lake_writer_spark.operators.similarity import (
@@ -1185,6 +1200,7 @@ def test_pack_sequences_zero_token_head_lands_in_bin_zero(spark):
     assert got[1] == 0 and min(got.values()) == 0
 
 
+@pytest.mark.slow
 def test_stream_table_appends_partitioned_values(spark, tmp_path):
     """Review finding: the raw recursiveFileLookup file stream
     returned NULL for every partition column (partitionBy-written
@@ -1274,6 +1290,7 @@ def test_lsh_bands_validation(spark):
         lsh_candidates(sig, bands=20)
 
 
+@pytest.mark.slow
 def test_timeseries_and_skew_contracts(spark):
     """Review findings: salted_join refuses outer-right shapes (the
     replicated right side would emit spurious null rows); bm25 over an
@@ -1623,6 +1640,7 @@ def test_asof_accepts_real_timestamp_column(spark):
     assert got2 == want
 
 
+@pytest.mark.slow
 def test_stream_replicate_optimize_every_bounds_delete_sets(spark, tmp_path):
     """ADVICE r5: a long-running merge-on-read follower accrues one
     pending delete set per replicated commit with nothing compacting
@@ -1663,6 +1681,7 @@ def test_stream_replicate_optimize_every_bounds_delete_sets(spark, tmp_path):
     assert len(pending) <= 1, pending
 
 
+@pytest.mark.slow
 def test_ivf_index_matches_adhoc_and_handles_edges(spark, tmp_path):
     """The materialized IVF index must answer EXACTLY like the ad-hoc
     operator (same quantizer, same scoring) — on an OFFSET id space —
@@ -1704,6 +1723,7 @@ def test_ivf_index_matches_adhoc_and_handles_edges(spark, tmp_path):
     assert ivf_query_index(spark, idx2, probe, k=5, nprobe=2).count() == 0
 
 
+@pytest.mark.slow
 def test_packed_hamming_equals_elementwise(spark):
     """pack_sign_words + hamming_packed_topk must reproduce the
     element-wise sign-mismatch ranking bit-for-bit — including a
@@ -1936,6 +1956,7 @@ def test_zscore_outliers_constant_group(spark):
     assert any(r["id"] == 999 for r in out)
 
 
+@pytest.mark.slow
 def test_stream_scd2_fresh_checkpoint_noop(spark, tmp_path):
     """Checkpoint loss for the SCD2 follower: a second run with a
     FRESH checkpoint replays every source version; the per-version
@@ -2259,6 +2280,7 @@ def test_fs_exists_path_abstraction(spark, tmp_path):
     assert _fs_exists(_NoJvm(), str(tmp_path / "nope")) is False
 
 
+@pytest.mark.slow
 def test_hamming_lsh_index_equals_adhoc(spark, tmp_path):
     """VERDICT r8 task 6: the materialized bit-sampling LSH index
     must return the ad-hoc operator's exact answer (same candidates,
@@ -3411,6 +3433,7 @@ def test_parse_exif_meta_spark(spark):
     assert rows[3].has_exif is False
 
 
+@pytest.mark.slow
 def test_compact_monitor_table_bounds_units(spark, tmp_path):
     """A long-lived monitor (40 one-row looks = 40 commit units)
     compacts to ONE unit with every row intact, the tail read still
@@ -4229,6 +4252,7 @@ def test_vocab_coverage_hand_values(spark):
     assert r2.chao1 == _pt.approx(3 + 2 * 1 / 2.0)
 
 
+@pytest.mark.slow
 def test_pca_top_components_deflation_against_numpy(spark):
     """pca_top_components(2): with two planted orthogonal
     directions of different strengths, both components match

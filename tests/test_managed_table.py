@@ -557,6 +557,7 @@ def test_read_timestamp_as_of(spark, tmp_path_str):
         t.read(version=0, timestamp_ms=ts0)
 
 
+@pytest.mark.slow
 def test_incremental_aggregate_group_migration(spark, tmp_path_str):
     import os
 
@@ -773,6 +774,7 @@ def test_export_csv_with_manifest(spark, tmp_path_str):
     assert n0 == 100
 
 
+@pytest.mark.slow
 def test_incremental_aggregate_handles_deletes(spark, tmp_path_str):
     import os
 
@@ -881,6 +883,7 @@ def test_incremental_aggregate_handles_dml_update(spark, tmp_path_str):
     assert rows == {"A": (2, 40.0), "B": (1, 30.0)}
 
 
+@pytest.mark.slow
 def test_replace_where_scoped_overwrite(spark, tmp_path_str):
     t = ManagedTable(spark, os.path.join(tmp_path_str, "rw"))
     df = spark.createDataFrame(
@@ -929,6 +932,7 @@ def test_replace_where_enforcement_and_cdf(spark, tmp_path_str):
     assert t.read().count() == 7  # 5 removed, 2 inserted
 
 
+@pytest.mark.slow
 def test_overwrite_partitions_dynamic(spark, tmp_path_str):
     from component_delta_lake_writer_spark.errors import UserException
 
@@ -955,6 +959,7 @@ def test_overwrite_partitions_dynamic(spark, tmp_path_str):
         t2.overwrite_partitions(batch)
 
 
+@pytest.mark.slow
 def test_column_defaults_insert_time_only(spark, tmp_path_str):
     t = ManagedTable(spark, os.path.join(tmp_path_str, "dflt"))
     df = spark.createDataFrame([(1, 10.0), (2, 20.0)], "k int, v double")
@@ -985,6 +990,7 @@ def test_column_defaults_insert_time_only(spark, tmp_path_str):
     assert {r["src"] for r in t.read().filter("k=6").collect()} == {None}
 
 
+@pytest.mark.slow
 def test_txn_idempotent_writes(spark, tmp_path_str):
     t = ManagedTable(spark, os.path.join(tmp_path_str, "txn"))
     df = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k int, v double")
@@ -1211,6 +1217,7 @@ def test_set_properties_and_row_count(spark, tmp_path_str):
     assert t.row_count() == 15
 
 
+@pytest.mark.slow
 def test_concurrent_appends_race_all_land(spark, tmp_path_str):
     """Optimistic concurrency under a real thread race: 6 writers
     append batches concurrently; version conflicts resolve via the
@@ -1486,6 +1493,7 @@ def test_read_changes_appends_after_rename(spark, tmp_path_str):
     assert {(r["k"], r["b"]) for r in ch.collect()} == {(2, 20)}
 
 
+@pytest.mark.slow
 def test_sync_metadata_restales_lost_dv_entry_and_keeps_txn(
     spark, tmp_path_str
 ):
@@ -1809,6 +1817,7 @@ def test_row_ids_preserved_across_auto_compaction(spark, tmp_path_str):
     assert after == before
 
 
+@pytest.mark.slow
 def test_append_only_property_enforced(spark, tmp_path):
     """delta.appendOnly: appends and compaction keep working; DELETE/
     UPDATE/overwrite/upsert/MOR-delete are refused; unsetting the
@@ -1893,6 +1902,7 @@ def test_concurrent_cdf_upserts_stage_safely(spark, tmp_path):
     assert t.read_changes(base_version).count() > 0
 
 
+@pytest.mark.slow
 def test_identity_generated_cdf_composite(spark, tmp_path_str):
     """Identity + generated partition column + CDF composed on one
     table across appends and a COW DELETE: identity values stay

@@ -51,6 +51,7 @@ def test_vacuity_guard_rejects_planted_empty_probe(spark, con):
     compare(df, con, empty_sql, "planted_empty_probe", empty_ok=True)
 
 
+@pytest.mark.slow
 def test_no_oracle_is_vacuous_at_probe_scale(con):
     """Registry-wide vacuity sweep: every oracle must return at least
     one row at sf0.001 (the pytest probe scale) unless registered

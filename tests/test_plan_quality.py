@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from conftest import SF_SMALL
 
 
@@ -219,6 +221,7 @@ def test_preserve_order_upsert_broadcasts_source_keys(tmp_path, spark):
     assert merged.count() == 3_000 + 30
 
 
+@pytest.mark.slow
 def test_managed_table_read_is_single_scan_after_appends(tmp_path, spark):
     """After 50 appends the snapshot read must stay ONE parquet
     FileScan (explicit committed schema over a multi-path scan), not a
@@ -1250,6 +1253,7 @@ def test_fleming_harrington_zero_filescan(spark):
     assert "Scan ExistingRDD" in p, p
 
 
+@pytest.mark.slow
 def test_pca_returned_plan_is_metadata_scale(spark):
     """pca_top_component: the returned plan explodes the final
     one-row state (the corpus pass and the covariance build

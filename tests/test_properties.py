@@ -12,18 +12,15 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-
-# r14 two-tier suite (see tests/conftest.py): the default (driver
-# budget) tier runs every property with a REDUCED example budget; the
-# full sample runs with SPARK_GRAFT_FULL_TESTS=1. Floor of 4 keeps
-# shrinking and edge examples meaningful.
-import os as _os
-
-_FULL = _os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
+from conftest import FULL_TESTS
 
 
+# Two-tier suite (see tests/conftest.py): the default tier runs every
+# property with a REDUCED example budget; the full sample runs with
+# SPARK_GRAFT_FULL_TESTS=1. Floor of 4 keeps shrinking and edge
+# examples meaningful.
 def _ex(n: int) -> int:
-    return n if _FULL else max(4, n // 5)
+    return n if FULL_TESTS else max(4, n // 5)
 
 KEYS = st.integers(min_value=0, max_value=30)
 VALS = st.integers(min_value=-1000, max_value=1000)
@@ -31,6 +28,7 @@ VALS = st.integers(min_value=-1000, max_value=1000)
 rows_strategy = st.lists(st.tuples(KEYS, VALS), min_size=0, max_size=40)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(20),
     deadline=None,
@@ -83,6 +81,7 @@ def test_cast_matrix_roundtrip(spark, vals):
     assert [str(r["d"]) for r in out] == [f"{v:.2f}" for v in vals]
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -149,6 +148,7 @@ def test_bloom_never_false_negative(values, probes, m_exp):
             assert not may_contain(bm, m, q)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(15),
     deadline=None,
@@ -253,6 +253,7 @@ def test_merge_asof_matches_pandas(spark, left, right, direction, tolerance):
     assert got == want
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -288,6 +289,7 @@ def test_replace_where_model(spark, base, batch, cut):
         assert got == want
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -378,6 +380,7 @@ def test_copy_into_idempotence_model(spark, waves):
             assert got == want
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(15),
     deadline=None,
@@ -438,6 +441,7 @@ _LIFECYCLE_OP = st.one_of(
 )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -598,6 +602,7 @@ _OPS = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(12),
     deadline=None,
@@ -666,6 +671,7 @@ def test_row_id_invariants_random_sequences(spark, ops, seed):
             prev = cur
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(8),
     deadline=None,
@@ -772,6 +778,7 @@ _EVENTS = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(20),
     deadline=None,
@@ -835,6 +842,7 @@ _GRAPH_EDGES = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -875,6 +883,7 @@ def test_triangle_count_matches_bruteforce(spark, edges):
         assert r.global_clustering is None
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -1032,6 +1041,7 @@ _MW_ROWS = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -1079,6 +1089,7 @@ _QN_ROWS = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -1130,6 +1141,7 @@ def test_quantile_normalize_matches_bruteforce(spark, a_vals, b_vals):
     assert got == model
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(12),
     deadline=None,
@@ -1158,6 +1170,7 @@ def test_spearman_bounds_and_monotone_invariance(spark, rows):
     assert r2.rho == r.rho
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(12),
     deadline=None,
@@ -1185,6 +1198,7 @@ def test_ks_bounds_and_identity(spark, a, b):
     assert ks_test_2sample(same, "g", "v").collect()[0].d_stat == 0.0
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(12),
     deadline=None,
@@ -1219,6 +1233,7 @@ def test_winsorize_bounds_and_interior_identity(spark, rows):
             assert by_id[i].winsorized == float(v)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(15),
     deadline=None,
@@ -1295,6 +1310,7 @@ def test_benjamini_hochberg_matches_bruteforce(spark, ps, alpha_pct):
     assert all(len(v) == 1 for v in by_p.values())
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -1371,6 +1387,7 @@ def test_logrank_matches_bruteforce(spark, users):
         assert r.z is None
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(8),
     deadline=None,
@@ -1425,6 +1442,7 @@ def test_cox_ph_matches_bruteforce(spark, users):
         assert r.se == round(se, 6)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -1538,6 +1556,7 @@ def _ref_bpe(texts, n):
     return out
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(8),
     deadline=None,
@@ -1565,6 +1584,7 @@ def test_bpe_train_matches_textbook_model(spark, words):
     assert got == _ref_bpe([text], 4)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -1643,6 +1663,7 @@ def test_gehan_wilcoxon_matches_bruteforce(spark, users):
         assert r.z is None and r.significant == 0
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -1736,6 +1757,7 @@ def test_stratified_logrank_matches_bruteforce(spark, users):
         assert r.z is None
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(15),
     deadline=None,
@@ -1776,6 +1798,7 @@ def test_auc_matches_bruteforce(spark, pts):
     assert r.gini == round(2.0 * r.auc - 1.0, 9)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(15),
     deadline=None,
@@ -1834,6 +1857,7 @@ def test_kruskal_wallis_matches_bruteforce(spark, pts):
     assert r.h == round(h_raw / corr, 6)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -1910,6 +1934,7 @@ def test_rmst_matches_bruteforce(spark, users, tau):
     )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(12),
     deadline=None,
@@ -2004,6 +2029,7 @@ def test_mantel_haenszel_matches_bruteforce(spark, cells):
         assert r.cmh_chi2 is None and r.significant == 0
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(12),
     deadline=None,
@@ -2071,6 +2097,7 @@ def test_jonckheere_matches_bruteforce(spark, pts):
         assert r.z is None and r.significant == 0
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(15),
     deadline=None,
@@ -2116,6 +2143,7 @@ def test_pr_auc_matches_bruteforce(spark, pts):
     assert (r.n_pos, r.n_neg) == (pos, len(pts) - pos)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(12),
     deadline=None,
@@ -2205,6 +2233,7 @@ def test_breslow_day_matches_bruteforce(spark, cells):
     assert r.df == k_inf - 1
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(15),
     deadline=None,
@@ -2261,6 +2290,7 @@ def test_wilcoxon_signed_matches_bruteforce(spark, diffs):
         assert r.z is None
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(12),
     deadline=None,
@@ -2316,6 +2346,7 @@ def test_brown_forsythe_matches_bruteforce(spark, pts):
     assert r.f == pytest.approx(expected, abs=1e-4)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -2370,6 +2401,7 @@ def test_friedman_matches_bruteforce(spark, blocks):
         assert r.significant == int(r.chi2 > 5.991464547)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -2489,6 +2521,7 @@ def test_cumulative_incidence_matches_bruteforce(spark, subjects):
     assert total + s_end == pytest.approx(1.0, abs=1e-5)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -2571,6 +2604,7 @@ def test_fleming_harrington_matches_bruteforce(spark, users):
         assert r.z is None
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -2629,6 +2663,7 @@ def test_page_trend_matches_bruteforce(spark, blocks):
             )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -2675,6 +2710,7 @@ def test_cliffs_delta_matches_bruteforce(spark, rows):
     assert r.magnitude == mag
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(8),
     deadline=None,
@@ -2735,6 +2771,7 @@ def test_mann_kendall_matches_bruteforce(spark, counts):
         assert r.z == pytest.approx(zz, abs=2e-6)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -2799,6 +2836,7 @@ def test_kendall_tau_matches_bruteforce(spark, rows):
         )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -2870,6 +2908,7 @@ def test_benjamini_yekutieli_matches_bruteforce(spark, ps):
             assert bh[tid].reject == 1
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -2970,6 +3009,7 @@ def test_wasserstein_matches_bruteforce(spark, rows):
         )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(8),
     deadline=None,
@@ -3041,6 +3081,7 @@ def test_dunn_posthoc_matches_bruteforce(spark, rows):
                 assert r.significant == int(abs(r.z) > zc)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(10),
     deadline=None,
@@ -3120,6 +3161,7 @@ def test_brunner_munzel_matches_bruteforce(spark, rows):
         assert r.df == pytest.approx(dof, abs=0.02)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=_ex(8),
     deadline=None,

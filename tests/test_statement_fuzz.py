@@ -126,6 +126,7 @@ def test_malformed_statements_are_stateless_refusals(ex, stmt):
     assert _state(ex) == before, f"{stmt!r} mutated state despite refusing"
 
 
+@pytest.mark.slow
 @given(
     head=st.sampled_from(
         ["CREATE", "INSERT", "MERGE", "DELETE", "UPDATE", "ALTER",

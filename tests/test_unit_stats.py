@@ -285,6 +285,7 @@ def test_update_where_unknown_column_raises(ranged_table):
         t.update_where("o_orderkey > 0", {"nope": "1"})
 
 
+@pytest.mark.slow
 def test_check_constraints_enforced(spark, tmp_path_str):
     from component_delta_lake_writer_spark.errors import UserException
 
@@ -387,6 +388,7 @@ def test_vacuum_retention_preserves_time_travel(spark, tmp_path_str):
         t.read(version=0).count()
 
 
+@pytest.mark.slow
 def test_concurrent_appenders_never_lose_commits(spark, tmp_path_str):
     """Optimistic concurrency under contention: 8 threads × 5 appends
     with retry-on-conflict — every batch must land exactly once and
@@ -435,6 +437,7 @@ def test_concurrent_appenders_never_lose_commits(spark, tmp_path_str):
     assert out.select("tag").distinct().count() == 41  # every batch present
 
 
+@pytest.mark.slow
 def test_merge_on_read_delete_rewrites_nothing(ranged_table):
     t, lo, hi, third = ranged_table
     # ranged_table has no PK — set one via an upsert-free path: PK is
@@ -518,6 +521,7 @@ def test_merge_on_read_requires_primary_key(ranged_table):
         t.delete_where("o_orderkey > 0", strategy="merge-on-read")
 
 
+@pytest.mark.slow
 def test_zorder_prunes_every_listed_dimension(spark, tmp_path_str):
     """Z-ORDER vs lexicographic clustering: the trailing dimension
     must become file-prunable only under the interleaved layout."""
@@ -578,6 +582,7 @@ def test_parse_conjuncts_grammar():
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 def test_merge_on_read_upsert_rewrites_nothing(spark, tmp_path_str):
     t = ManagedTable(spark, os.path.join(tmp_path_str, "t"))
     df = spark.range(100).select(
@@ -863,6 +868,7 @@ def test_temporal_stats_zero_padded_years():
     assert d == "0050-01-02" and kind == "date"
 
 
+@pytest.mark.slow
 def test_incremental_mv_null_sum_and_midhistory_preimages(spark, tmp_path):
     """Review findings: a NULL delta sum must not null the stored
     aggregate, and enabling changeDataFeedPreImages mid-history must
@@ -936,6 +942,7 @@ def test_data_skipping_num_indexed_cols(spark, tmp_path):
     assert t.row_count() == 1000
 
 
+@pytest.mark.slow
 def test_distributed_footer_pass_matches_driver_loop(spark, tmp_path):
     """VERDICT r7 task 3: past DISTRIBUTE_THRESHOLD files the footer
     pass must run as a Spark JOB over the file list (a 1 M-file
@@ -979,6 +986,7 @@ def test_distributed_footer_pass_matches_driver_loop(spark, tmp_path):
     assert got["_rows"] == 100 and got["k"]["min"] == 0
 
 
+@pytest.mark.slow
 def test_count_unit_rows_distributed_matches(spark, tmp_path):
     """The NO STATISTICS CONVERT row-count pass distributes past the
     same threshold and agrees with the sequential count."""
@@ -1045,6 +1053,7 @@ def test_merge_stats_accs_semantics():
     assert set(m) == {"x", "y"}
 
 
+@pytest.mark.slow
 def test_convert_distributed_stats_end_to_end(spark, tmp_path):
     """CONVERT of an 80-file lake (over DISTRIBUTE_THRESHOLD) must
     land the same commit stats the driver loop would: exact row

@@ -66,43 +66,64 @@ def test_with_retries_reraises_last():
 
 
 def test_registry_order_tracks_driver_evidence():
-    """The registry self-rotates on the driver's CORRECTNESS files:
-    red keys first; never-checked keys WITHOUT a curated _FRONT slot
-    precede everything green (the safety net); never-checked keys
-    WITH a slot keep it — INCLUDING a slot deliberately past the
-    50-key budget window (r12: the TIFF/MP3 keys defer to the r13
-    refresh queue so the stale-evidence rotation keeps its slots —
-    an unseen key is only guaranteed same-round evidence when it is
-    UNCURATED, the safety-net case)."""
-    from component_delta_lake_writer_spark.plans import QUERIES, _FRONT
-    from component_delta_lake_writer_spark.plans import _driver_evidence
-
-    red, seen = _driver_evidence()
-    ks = list(QUERIES)
-    pos = {k: i for i, k in enumerate(ks)}
-    front = set(_FRONT)
-    reds = [pos[k] for k in red if k in pos]
-    unseen_uncurated = [
-        pos[k] for k in ks
-        if k not in seen and k not in red and k not in front
-    ]
-    unseen_all = [pos[k] for k in ks if k not in seen and k not in red]
-    greens = [
-        pos[k] for k in ks
-        if k in seen and k not in red and k not in front
-    ]
-    if reds and unseen_all:
-        assert max(reds) < min(unseen_all)
-    # the safety net: an uncurated new key outranks every key that is
-    # neither red nor explicitly placed
-    if unseen_uncurated and greens:
-        assert max(unseen_uncurated) < min(greens)
-    # budget guarantee: every UNCURATED unseen key is inside the
-    # first 50 (a curated unseen key sits wherever its _FRONT slot
-    # says — placement past the window is a deliberate deferral)
-    assert all(p < 50 for p in unseen_uncurated), sorted(
-        unseen_uncurated
+    """With the repo's own CORRECTNESS files, the correctness check's 50-key
+    window holds the pins and then red and never-checked keys: all of
+    them when they fit, nothing else when they do not."""
+    from component_delta_lake_writer_spark.plans import (
+        _PINS,
+        QUERIES,
+        _correctness_evidence,
     )
+
+    evidence = _correctness_evidence()
+    ks = list(QUERIES)
+    assert ks[: len(_PINS)] == list(_PINS)
+    window = [k for k in ks[:50] if k not in _PINS]
+    due = {
+        k for k in ks
+        if k not in _PINS and (k not in evidence or evidence[k][1])
+    }
+    if len(due) >= len(window):
+        assert set(window) <= due, sorted(set(window) - due)
+    else:
+        assert due <= set(window), sorted(due - set(window))
+
+
+def test_registry_order_rule_on_synthetic_evidence(tmp_path):
+    """Pins, then red (newest row), then never-checked, then green by
+    oldest newest-green round; rounds compare as integers; ties keep
+    registration order; an unreadable file is skipped."""
+    import json
+
+    from component_delta_lake_writer_spark.plans import (
+        _PINS,
+        _check_order,
+        _correctness_evidence,
+    )
+
+    green = {"err": None, "rows_match": True}
+    rounds = {
+        9: {"cleared": {"err": "boom"}, "g9_b": green, "g9_a": green,
+            "g100": green, "red_late": green},
+        10: {"cleared": green, "g10": green,
+             "red_late": {"rows_match": False}},
+        100: {"g100": green},
+    }
+    for n, rows in rounds.items():
+        (tmp_path / f"CORRECTNESS_r{n}.json").write_text(json.dumps(rows))
+    (tmp_path / "CORRECTNESS_r11.json").write_text("{not json")
+
+    evidence = _correctness_evidence(str(tmp_path))
+    assert evidence["cleared"] == (10, False)
+    assert evidence["red_late"] == (10, True)
+    assert evidence["g100"] == (100, False)
+
+    registered = ["g100", "g10", "new_b", "cleared", "g9_b", "red_late",
+                  "g9_a", "new_a", *reversed(_PINS)]
+    assert _check_order(registered, evidence) == [
+        *_PINS, "red_late", "new_b", "new_a",
+        "g9_b", "g9_a", "g10", "cleared", "g100",
+    ]
 
 
 def test_redaction_covers_hadoop_secret_keys():
