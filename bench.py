@@ -5,7 +5,12 @@ Prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 The headline metric is total wall-clock over the suite; per-query
-seconds let BASELINE.md comparisons track individual operators.
+seconds let BASELINE.md comparisons track individual operators. Every
+suite key is timed by ``time_key``: build the DataFrame, then write it
+to the ``noop`` sink, so every output column is computed. Its per-key
+profile (driver versus executor time, jobs, stage totals) goes to
+bench_full.json; scripts/profile_keys.py runs the same function with
+per-layer spans.
 
 The printed line is kept COMPACT (≤~2000 chars — the driver records
 only the last 2000 stdout chars and machine-parses the line only when
@@ -29,6 +34,10 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+from perfbench import stages  # noqa: E402
+from perfbench.spans import Tracer  # noqa: E402
+from perfbench.stats import union_length  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -73,8 +82,12 @@ HEADLINE = [
 
 # FROZEN as of round 4 (31 queries): round-over-round suite totals are
 # only comparable when the set is fixed. Bump the version (and note it
-# in BASELINE.md) if the list ever changes; never mutate it silently.
-SUITE_VERSION = "v1-31q-r4"
+# in BASELINE.md) if the list or the way it is timed ever changes;
+# never mutate it silently. v1-31q-r4 timed `df.count()`, which lets
+# Catalyst prune every column the count does not need; v3 times the
+# same keys as build + noop write (time_key). BENCH_r14.json is the
+# last v1 record.
+SUITE_VERSION = "v3-31q-noop"
 
 # Second versioned suite (VERDICT r8 task 3): rounds 6-8 added whole
 # operator families (SCD2, packed-Hamming retrieval, RRF, CONVERT/
@@ -82,7 +95,8 @@ SUITE_VERSION = "v1-31q-r4"
 # v1 — frozen for comparability — cannot cover; their scale CURVES
 # exist but no round-over-round wall-clock series did. v2 runs
 # ALONGSIDE the untouched v1 and is now frozen under the same rule:
-# bump the version if the list changes, never mutate silently.
+# bump the version if the list changes, never mutate silently. v4 is
+# v2 timed by time_key, as v3 is to v1.
 HEADLINE_V2 = [
     "scd2_build_events",
     "scd2_apply_snapshot",
@@ -97,7 +111,9 @@ HEADLINE_V2 = [
     "edit_distance_pairs_docs",
     "cdf_external_read",
 ]
-SUITE_VERSION_V2 = "v2-12q-r9"
+SUITE_VERSION_V2 = "v4-12q-noop"
+#: run untimed before the v2 suite (see main)
+V2_WARMER = "stream_cdf_bootstrap"
 
 # Host-speed canary (round 12).  The frozen v1 suite crept 33.8 s
 # (r10) → 42.0 s (r11) with no code cause; the r12 A/B settled it:
@@ -108,12 +124,13 @@ SUITE_VERSION_V2 = "v2-12q-r9"
 # re-running old trees every round, each bench run times a fixed
 # NATIVE workload (DuckDB scan+agg over the sf lineitem parquet,
 # best-of-3 — engine-independent, tracks CPU+memory+page-cache speed)
-# and records suite_v1_per_canary = v1_total / canary.  The RATIO is
+# and records suite_v3_per_canary = v3_total / canary (suite_v1_per_canary
+# through BENCH_r14, from the count()-timed v1 total).  The RATIO is
 # the regression guard: host drift moves numerator and denominator
 # together, a tree regression moves only the numerator.  Reference
 # ratio measured r12: ~[see BENCH_r12]; a future round where the
 # ratio (not the total) jumps >20% is a real engine regression.
-CANARY_REF_RATIO_KEY = "suite_v1_per_canary"
+CANARY_REF_RATIO_KEY = "suite_v3_per_canary"
 
 #: 1-min loadavg ceiling for sealing the timed suite (round 13).
 #: The r12 seal ran concurrently with the 312-key sweep + pytest and
@@ -126,7 +143,7 @@ CANARY_REF_RATIO_KEY = "suite_v1_per_canary"
 #: record ``host_load_degraded`` if the host never went idle; (b) a
 #: concurrency-MATCHED canary (``_host_canary_mt``: 32 concurrent
 #: single-thread DuckDB CPU workloads) whose wall-clock dilates with
-#: whatever else is eating the cores, so suite_v1_per_canary_mt
+#: whatever else is eating the cores, so suite_v3_per_canary_mt
 #: stays flat under contention where the r12 ratio swung 2.2×.
 #: r14 (VERDICT r13 what's-wrong #4): the r13 driver seal started at
 #: loadavg 2.87 and still passed the 4.0 gate — its canary ran 28%
@@ -1657,9 +1674,122 @@ def _zero_copy_envelope(spark, sf_dir: str, scale: int = 10) -> dict:
         shutil.rmtree(work, ignore_errors=True)
 
 
+_tracer: tuple | None = None  # (SparkContext, its Tracer)
+
+
+def job_group_tracer(spark) -> Tracer:
+    """The process's perfbench tracer for ``spark``'s context. Every
+    span runs under its own Spark job group, named after the span's
+    number; one tracer numbers every span of the process, so no two
+    keys ever share a group in the status store."""
+    global _tracer
+    sc = spark.sparkContext
+    if _tracer is None or _tracer[0] is not sc:
+        _tracer = sc, Tracer(
+            set_group=lambda g: sc.setLocalProperty("spark.jobGroup.id", g)
+        )
+    return _tracer[1]
+
+
+def time_key(spark, key: str, sf_dir: str) -> dict:
+    """Time one registry key by full materialisation: build the
+    DataFrame, then write it to the ``noop`` sink, so every output
+    column is computed (a ``count()`` lets Catalyst prune what it does
+    not need). Each step runs in a span of ``job_group_tracer`` named
+    like perfbench's ``plans.<key>.build`` / ``.exec``; wrappers
+    installed on that tracer nest their spans inside.
+
+    Returns the wall time ``s`` and the key's profile: ``build_s``,
+    ``exec_s``, ``driver_s`` (wall time not covered by any Spark job),
+    ``jobs`` and the ``stages.STAGE_FIELDS`` totals of those jobs. The
+    jobs are read as soon as the key finishes, before the status store
+    can evict them; a job submitted under another job group is not the
+    key's, and its time counts as driver time."""
+    from component_delta_lake_writer_spark.plans import QUERIES
+
+    sc = spark.sparkContext
+    tracer = job_group_tracer(spark)
+    first = len(tracer.spans)
+    with tracer.span(f"plans.{key}.build") as build:
+        df = QUERIES[key](spark, sf_dir)
+    with tracer.span(f"plans.{key}.exec") as ex:
+        df.write.format("noop").mode("overwrite").save()
+    stages.drain(sc)
+    jobs = [
+        j
+        for s in tracer.spans[first:]
+        if s.group
+        for j in stages.group_jobs(sc, s.group)
+    ]
+    wall = build.duration + ex.duration
+    job_s = union_length([(j.start_ms / 1e3, j.end_ms / 1e3) for j in jobs])
+    profile = {
+        "s": round(wall, 3),
+        "build_s": round(build.duration, 3),
+        "exec_s": round(ex.duration, 3),
+        "driver_s": round(max(wall - job_s, 0.0), 3),
+        "jobs": len(jobs),
+    }
+    for f in stages.STAGE_FIELDS:
+        profile[f] = round(sum(j.totals[f] for j in jobs), 3)
+    return profile
+
+
+def warm_host(spark, sf_dir: str) -> None:
+    """Untimed host warm-up before a timed suite: recorded rounds ran
+    on a long-lived warm host, but a fresh-booted VM starts with cold
+    page cache and untouched scratch blocks, which inflated every suite
+    query 1.1-1.7x (one IO-wide outlier 10x) and the DuckDB envelope
+    4.5x on identical code. Reproduce the recorded condition — warm
+    host, cold query — by (a) faulting the input parquet bytes into the
+    page cache, (b) one full untimed Spark scan per table (JVM parquet
+    reader + codegen classes), and (c) touching the scratch filesystem
+    with a written-then-removed file so first-write block allocation is
+    off the timed path."""
+    import tempfile
+
+    spark.range(1).count()  # JVM + file listing cache
+    t0 = time.perf_counter()
+    warm_bytes = 0
+    for p in sorted(Path(sf_dir).glob("*.parquet")):
+        with open(p, "rb") as fh:
+            while True:
+                chunk = fh.read(1 << 22)
+                if not chunk:
+                    break
+                warm_bytes += len(chunk)
+        spark.read.parquet(str(p)).count()
+    scratch = os.path.join(tempfile.gettempdir(), "bench_warm_scratch.bin")
+    with open(scratch, "wb") as fh:
+        for _ in range(64):
+            fh.write(b"\0" * (1 << 22))
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.unlink(scratch)
+    print(
+        f"# host_warm: {warm_bytes / 1e6:.0f} MB inputs + 256 MB "
+        f"scratch in {time.perf_counter() - t0:.2f}s",
+        file=sys.stderr,
+    )
+
+
+def time_suite(spark, keys: list[str], sf_dir: str, label: str = "") -> dict:
+    """``time_key`` over ``keys`` in order, one cold pass each;
+    ``{key: profile}``."""
+    profiles = {}
+    for key in keys:
+        p = profiles[key] = time_key(spark, key, sf_dir)
+        print(
+            f"# {label}{key}: {p['s']:.3f}s (build {p['build_s']:.3f}, "
+            f"exec {p['exec_s']:.3f}, driver {p['driver_s']:.3f}, "
+            f"{p['jobs']} jobs, cpu {p['executor_cpu_s']:.2f}s)",
+            file=sys.stderr,
+        )
+    return profiles
+
+
 def main() -> None:
     from component_delta_lake_writer_spark import get_spark
-    from component_delta_lake_writer_spark.plans import QUERIES
 
     # Idle-host gate (r12 What's-wrong #1) — BEFORE the Spark session
     # exists, so the loadavg reflects only external contention.
@@ -1681,61 +1811,14 @@ def main() -> None:
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
+    warm_host(spark, SF_DIR)
 
-    # warm the JVM + file listing cache with a trivial action
-    spark.range(1).count()
+    # Each key is timed once, cold, in list order, as build + noop
+    # write (time_key); the per-key profile goes to bench_full.json.
+    profiles = time_suite(spark, HEADLINE, SF_DIR)
+    total = sum(p["s"] for p in profiles.values())
 
-    # Host-state warm-up (UN-timed; the per-query methodology below is
-    # unchanged): recorded rounds ran on a long-lived warm host, but a
-    # fresh-booted VM starts with cold page cache and untouched scratch
-    # blocks, which inflated every suite query 1.1-1.7x (one IO-wide
-    # outlier 10x) and the DuckDB envelope 4.5x on identical code.
-    # Reproduce the recorded condition — warm host, cold query — by
-    # (a) faulting the input parquet bytes into the page cache,
-    # (b) one full untimed Spark scan per table (JVM parquet reader +
-    #     codegen classes), and (c) touching the scratch filesystem
-    # with a written-then-removed file so first-write block allocation
-    # is off the timed path.
-    t0 = time.perf_counter()
-    warm_bytes = 0
-    for p in sorted(Path(SF_DIR).glob("*.parquet")):
-        with open(p, "rb") as fh:
-            while True:
-                chunk = fh.read(1 << 22)
-                if not chunk:
-                    break
-                warm_bytes += len(chunk)
-        spark.read.parquet(str(p)).count()
-    import tempfile as _tf
-
-    scratch = os.path.join(_tf.gettempdir(), "bench_warm_scratch.bin")
-    with open(scratch, "wb") as fh:
-        for _ in range(64):
-            fh.write(b"\0" * (1 << 22))
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.unlink(scratch)
-    print(
-        f"# host_warm: {warm_bytes / 1e6:.0f} MB inputs + 256 MB "
-        f"scratch in {time.perf_counter() - t0:.2f}s",
-        file=sys.stderr,
-    )
-
-    per_query: dict[str, float] = {}
-    total = 0.0
-    for key in HEADLINE:
-        fn = QUERIES[key]
-        t0 = time.perf_counter()
-        df = fn(spark, SF_DIR)
-        n = df.count()  # force full execution
-        dt = time.perf_counter() - t0
-        per_query[key] = round(dt, 3)
-        total += dt
-        print(f"# {key}: {dt:.3f}s ({n} rows)", file=sys.stderr)
-
-    # v2 suite: same per-query methodology as v1 (cold query, warm
-    # host, one timed pass in registry order), reported separately so
-    # v1's cross-round series stays untouched.
+    # v2 suite: same per-query methodology as v1, reported separately.
     #
     # UNTIMED streaming warmer first (VERDICT r9 task 3): v1 contains
     # no Python-DataSource streaming query, so stream_scd2_follow at
@@ -1745,24 +1828,12 @@ def main() -> None:
     # operator. stream_cdf_bootstrap is the established absorber (the
     # sweep uses it the same way ahead of stream_cdf_source); the
     # frozen v2 key list is untouched.
-    t0 = time.perf_counter()
     try:
-        QUERIES["stream_cdf_bootstrap"](spark, SF_DIR).count()
-        print(f"# v2 streaming warmer (untimed): "
-              f"{time.perf_counter() - t0:.3f}s", file=sys.stderr)
+        time_suite(spark, [V2_WARMER], SF_DIR, "v2 warmer (untimed) ")
     except Exception as exc:
         print(f"# v2 streaming warmer failed: {exc}", file=sys.stderr)
-    per_query_v2: dict[str, float] = {}
-    total_v2 = 0.0
-    for key in HEADLINE_V2:
-        fn = QUERIES[key]
-        t0 = time.perf_counter()
-        df = fn(spark, SF_DIR)
-        n = df.count()
-        dt = time.perf_counter() - t0
-        per_query_v2[key] = round(dt, 3)
-        total_v2 += dt
-        print(f"# v2/{key}: {dt:.3f}s ({n} rows)", file=sys.stderr)
+    profiles_v2 = time_suite(spark, HEADLINE_V2, SF_DIR, "v2/")
+    total_v2 = sum(p["s"] for p in profiles_v2.values())
 
     # Envelope trials, INTERLEAVED with the DuckDB twin (VERDICT r9
     # task 1): the r9 recording ran 3 Spark envelopes then 3 DuckDB
@@ -1815,12 +1886,12 @@ def main() -> None:
               file=sys.stderr)
 
     # host-speed canary: a fixed native workload measured in the same
-    # run — v1/canary separates host drift (moves both) from a tree
-    # regression (moves only v1); see the r12 note at _host_canary
+    # run — v3/canary separates host drift (moves both) from a tree
+    # regression (moves only v3); see the r12 note at _host_canary
     try:
         canary = _host_canary(SF_DIR)
         print(f"# host_canary: {canary:.3f}s — "
-              f"v1/canary {total / canary:.1f}", file=sys.stderr)
+              f"v3/canary {total / canary:.1f}", file=sys.stderr)
     except Exception as exc:
         canary = None
         print(f"# host canary failed: {exc}", file=sys.stderr)
@@ -1829,7 +1900,7 @@ def main() -> None:
     try:
         canary_mt = _host_canary_mt()
         print(f"# host_canary_mt: {canary_mt:.3f}s — "
-              f"v1/canary_mt {total / canary_mt:.1f}", file=sys.stderr)
+              f"v3/canary_mt {total / canary_mt:.1f}", file=sys.stderr)
     except Exception as exc:
         canary_mt = None
         print(f"# host canary_mt failed: {exc}", file=sys.stderr)
@@ -1839,10 +1910,11 @@ def main() -> None:
         "value": round(total, 3),
         "unit": "sec",
         "suite_version": SUITE_VERSION,
-        "queries": per_query,
+        "queries": {k: p["s"] for k, p in profiles.items()},
         "suite_version_v2": SUITE_VERSION_V2,
         "suite_v2_seconds": round(total_v2, 3),
-        "queries_v2": per_query_v2,
+        "queries_v2": {k: p["s"] for k, p in profiles_v2.items()},
+        "profiles": {**profiles, **profiles_v2},
         "envelope_scale10": env,
         "envelope_scale10_spread": env_spread,
     }
@@ -1854,7 +1926,7 @@ def main() -> None:
         result[CANARY_REF_RATIO_KEY] = round(total / canary, 1)
     if canary_mt:
         result["host_canary_mt_sec"] = canary_mt
-        result["suite_v1_per_canary_mt"] = round(total / canary_mt, 1)
+        result["suite_v3_per_canary_mt"] = round(total / canary_mt, 1)
 
     # csv_load_typed scale curve (VERDICT r8 task 1): the ×10
     # envelope ratio is dispatch-bound; this measures the ratio
@@ -2138,27 +2210,17 @@ def main() -> None:
     # per-curve summary scalars; every curve point stays in the file.
     detail_path = Path(__file__).resolve().parent / "bench_full.json"
     detail_path.write_text(json.dumps(result, indent=1))
-    compact = _compact_line(result)
-    line = json.dumps(compact)
-    # defensive trim, least-load-bearing first; the CONTRACT fields
-    # (metric/value/unit/queries/sf) and the headline are never dropped
-    # the driver's tail capture is exactly 2000 chars including the
-    # trailing newline; 1990 leaves margin for it
-    for victim in (
-        "curves",
-        "envelope_spread_max",
-        "detail",
-        "suite_v2_seconds",
-    ):
-        if len(line) <= 1990:
-            break
-        compact.pop(victim, None)
-        line = json.dumps(compact)
-    print(line)
+    print(json.dumps(_compact_line(result)))
+
+
+#: characters the printed compact line may take: the bench record
+#: keeps the last 2000 chars of stdout, trailing newline included, and
+#: the rest is margin for it
+LINE_BUDGET = 1990
 
 
 def _compact_line(result: dict) -> dict:
-    """The ≤2000-char stdout summary of a full bench result (see
+    """The ≤LINE_BUDGET-char stdout summary of a full bench result (see
     main(): the driver's BENCH_r{N}.json keeps only the last 2000
     stdout chars and parses the line only when intact).  Every curve
     point and per-curve ratio lives in bench_full.json; the compact
@@ -2203,7 +2265,7 @@ def _compact_line(result: dict) -> dict:
         "host_canary_sec",
         CANARY_REF_RATIO_KEY,
         "host_canary_mt_sec",
-        "suite_v1_per_canary_mt",
+        "suite_v3_per_canary_mt",
         "loadavg_at_seal",
         "idle_wait_sec",
         "host_load_degraded",
@@ -2240,6 +2302,18 @@ def _compact_line(result: dict) -> dict:
         compact["curves"] = digest
     compact["detail"] = "bench_full.json"
     compact["sf"] = result.get("sf")
+    # trim to LINE_BUDGET, least-load-bearing first; the CONTRACT
+    # fields (metric/value/unit/queries/sf) and the headline are never
+    # dropped
+    for victim in (
+        "curves",
+        "envelope_spread_max",
+        "detail",
+        "suite_v2_seconds",
+    ):
+        if len(json.dumps(compact)) <= LINE_BUDGET:
+            break
+        compact.pop(victim, None)
     return compact
 
 

@@ -1,11 +1,12 @@
-"""Capture explain("formatted") for bench-suite queries → $SPARK_GRAFT_PLANS_OUT (default plans/r14/).
+"""Capture explain("formatted") for bench-suite queries.
 
 Usage: python scripts/capture_plans.py before|after [key1,key2,...]
 
 Runs each query callable at $SPARK_GRAFT_SF_DIR (default sf0.1) and
-writes plans/r13/<key>_<tag>.txt.  Plans are captured from the
-RETURNED DataFrame — for write-path probes that is the read-back plan,
-which is what the bench's timed `.count()` executes last.
+writes <key>_<tag>.txt under $SPARK_GRAFT_PLANS_OUT (default plans/r14
+in this tree).  Plans are captured from the RETURNED DataFrame — the
+one bench.time_key writes to the `noop` sink; for write-path probes
+that is the read-back plan.
 """
 
 from __future__ import annotations
@@ -14,10 +15,11 @@ import os
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = Path(os.environ.get("SPARK_GRAFT_PLANS_OUT", "/root/repo/plans/r14"))
+OUT = Path(os.environ.get("SPARK_GRAFT_PLANS_OUT", ROOT / "plans" / "r14"))
 
 
 def main() -> None:

@@ -7,6 +7,8 @@ rules the driver's pandas canonicalizer implies: no DECIMAL and no
 array/struct/map output columns.
 
 Usage: python scripts/driver_sim.py [N] [--keys k1,k2,...] [--sf DIR]
+
+Per-key results go to .bench_out/driver_sim_out.json (gitignored).
 """
 
 from __future__ import annotations
@@ -14,8 +16,10 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import SparkSession, types as T  # noqa: E402
 
@@ -99,8 +103,9 @@ def main() -> None:
     }
     print(f"\ntotal {total:.1f}s over {len(keys)} keys; {len(fails)} FAIL; "
           f"{len(slow)} over the {PROBE_CEILING_S:.0f}s ceiling")
-    with open("/root/repo/scripts/driver_sim_out.json", "w") as fh:
-        json.dump(results, fh, indent=1)
+    out = ROOT / ".bench_out" / "driver_sim_out.json"
+    out.parent.mkdir(exist_ok=True)
+    out.write_text(json.dumps(results, indent=1))
     if slow:
         print("PROBE CEILING EXCEEDED: "
               + ", ".join(f"{k}={s:.1f}s" for k, s in sorted(slow.items())))
