@@ -253,7 +253,10 @@ def measure_merge_scaled(
     ``scale``×, source = the 1-in-``source_mod`` keys price-updated
     (no inserts). DuckDB's merge is necessarily copy-on-write — the
     full target re-materializes — so its cost is O(target); the
-    engine's merge-on-read answer is O(source). This measured point is
+    engine's merge-on-read answer rewrites nothing: it appends the
+    source and marks the matched target rows in deletion vectors,
+    reading only the PK columns of the units the source's key range
+    overlaps. This measured point is
     the merge-ratio CURVE the 100 TB argument rests on. Returns the
     timed merge seconds (target build untimed, same as measure()).
     With ``repeats`` > 1 the target is built ONCE and the timed COPY

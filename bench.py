@@ -341,38 +341,20 @@ def _envelope(spark, sf_dir: str, scale: int = 10) -> dict[str, float]:
              max_records_per_file=25_000)
     timings["merge_upsert"] = round(time.perf_counter() - t0, 3)
 
-    # The same MERGE through the merge-on-read strategy (equality-
-    # delete the source PKs + append): write cost O(source), the
-    # deletion-vector play Delta/Databricks uses for exactly this
-    # workload shape. Fresh identical target (untimed), same persisted
-    # source. TWO variants since round 6:
-    # - merge_upsert_mor: mirror.dvMode='deferred' — the exact
-    #   spelling rounds 1-5 measured (no DV materialization existed
-    #   then), kept so the cross-round series stays like-for-like.
-    #   This is the pure O(source) commit; the Delta mirror is
-    #   _STALE-flagged until optimize.
-    # - merge_upsert_mor_dv: the full-external-fidelity default —
-    #   the commit ALSO materializes deletion vectors (column-pruned
-    #   target-PK scan + executor-side bitmap build), so any external
-    #   Delta reader sees the post-merge table immediately. The delta
-    #   between the two numbers IS the measured price of mirror
-    #   freshness.
+    # The same MERGE through the merge-on-read strategy: the source
+    # appends as a new unit and the target rows under its keys are
+    # marked in Delta deletion vectors (a PK-column scan of the
+    # overlapping units, no rewrite) — the play Delta/Databricks uses
+    # for exactly this workload shape. Fresh identical target
+    # (untimed), same persisted source. BASELINE.md §3g marks where
+    # this key's series breaks.
     t2 = ManagedTable(spark, os.path.join(work, "orders_t2"))
     t2.write(orders, mode="overwrite", compression="none",
-             max_records_per_file=25_000,
-             properties={"mirror.dvMode": "deferred"})
+             max_records_per_file=25_000)
     t0 = time.perf_counter()
     t2.upsert(source, ["o_orderkey"], compression="none",
               max_records_per_file=25_000, strategy="merge-on-read")
     timings["merge_upsert_mor"] = round(time.perf_counter() - t0, 3)
-
-    t3 = ManagedTable(spark, os.path.join(work, "orders_t3"))
-    t3.write(orders, mode="overwrite", compression="none",
-             max_records_per_file=25_000)
-    t0 = time.perf_counter()
-    t3.upsert(source, ["o_orderkey"], compression="none",
-              max_records_per_file=25_000, strategy="merge-on-read")
-    timings["merge_upsert_mor_dv"] = round(time.perf_counter() - t0, 3)
     source.unpersist()
 
     shutil.rmtree(work, ignore_errors=True)
@@ -497,10 +479,11 @@ def _merge_curve(
 ) -> dict:
     """The merge-ratio CURVE's second measured point (VERDICT r3 task
     2): target = orders ×``scale`` (≈15 M rows at sf0.1), source = the
-    1-in-``source_mod`` keys price-updated. Merge-on-read's write cost
-    is O(source) while any copy-on-write engine (the DuckDB twin
-    included) pays O(target) — so the MOR/COW ratio must FALL as
-    target/source grows. Target builds are untimed on both sides; the
+    1-in-``source_mod`` keys price-updated. Merge-on-read writes
+    O(source) bytes and reads only the PK columns of the units the
+    source's key range overlaps (its deletion-vector match), while any
+    copy-on-write engine (the DuckDB twin included) rewrites O(target)
+    — so the MOR/COW ratio must FALL as target/source grows. Target builds are untimed on both sides; the
     source is persisted before timing (same methodology as
     _envelope). Single run: this shape exists to place one point on
     the curve, not to re-measure the envelope.
@@ -1200,8 +1183,7 @@ def _scd2_stream_curve(
                 spark, os.path.join(work, f"src_x{scale}")
             )
             src.write(first, mode="overwrite", primary_key=["user_id"],
-                      properties={"enableChangeDataFeed": True,
-                                  "mirror.dvMode": "deferred"})
+                      properties={"enableChangeDataFeed": True})
             src.upsert(last, ["user_id"])
             n_changes = src.read().count() * 2  # 2 states per user
 
@@ -1244,8 +1226,10 @@ def _scd2_stream_curve(
 def _row_tracking_overhead(spark, sf_dir: str) -> dict:
     """Write orders (x3 replicated) + append + clustered optimize +
     full read, tracking OFF vs ON — per-phase seconds and the total
-    overhead ratio. Read-with-ids is measured separately (it does
-    strictly more work: id arithmetic + broadcast attach)."""
+    overhead ratio. Reads are timed as ``noop``-sink writes, so every
+    column is materialised (as ``time_key`` does). Read-with-ids is
+    measured separately (it does strictly more work: id arithmetic +
+    broadcast attach)."""
     import shutil
     import tempfile
     from functools import reduce
@@ -1290,20 +1274,23 @@ def _row_tracking_overhead(spark, sf_dir: str) -> dict:
         t.optimize(cluster_by=["o_orderkey"])
         out[f"optimize_{label}_sec"] = round(time.perf_counter() - t0, 3)
         t0 = time.perf_counter()
-        t.read().count()
-        out[f"read_{label}_sec"] = round(time.perf_counter() - t0, 3)
+        t.read().write.format("noop").mode("overwrite").save()
+        out[f"read_noop_{label}_sec"] = round(time.perf_counter() - t0, 3)
         if label == "on":
             t0 = time.perf_counter()
-            t.read(with_row_ids=True).count()
-            out["read_with_ids_sec"] = round(
+            t.read(with_row_ids=True).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            out["read_noop_with_ids_sec"] = round(
                 time.perf_counter() - t0, 3
             )
         shutil.rmtree(work, ignore_errors=True)
     for k in list(out):
         if "_warm_" in k:
             del out[k]
-    tot_off = sum(out[f"{p}_off_sec"] for p in ("write", "optimize", "read"))
-    tot_on = sum(out[f"{p}_on_sec"] for p in ("write", "optimize", "read"))
+    phases = ("write", "optimize", "read_noop")
+    tot_off = sum(out[f"{p}_off_sec"] for p in phases)
+    tot_on = sum(out[f"{p}_on_sec"] for p in phases)
     out["overhead_ratio"] = round(tot_on / tot_off, 3) if tot_off else None
     return out
 
@@ -1940,8 +1927,8 @@ def main() -> None:
         print(f"# csv curve failed: {exc}", file=sys.stderr)
 
     # one measured point on the merge-ratio curve: ×100 target, 1%
-    # source — the shape where merge-on-read's O(source) write cost
-    # separates from copy-on-write's O(target)
+    # source — the shape where merge-on-read's O(source) write
+    # separates from copy-on-write's O(target) rewrite
     try:
         curve = _merge_curve(spark, SF_DIR)
         result["merge_curve_scale100_src1pct"] = curve
@@ -2018,7 +2005,7 @@ def main() -> None:
     # off, so the delta IS the feature's price at this shape.
     try:
         rt = _row_tracking_overhead(spark, SF_DIR)
-        result["row_tracking_overhead"] = rt
+        result["row_tracking_overhead_noop"] = rt
         for k, v in rt.items():
             print(f"# row_tracking/{k}: {v}", file=sys.stderr)
     except Exception as exc:
@@ -2127,12 +2114,6 @@ def main() -> None:
             ratios["merge_upsert_mor"] = round(
                 env["merge_upsert_mor"] / duck["merge_upsert"], 2
             )
-            if "merge_upsert_mor_dv" in env:
-                # inline deletion-vector materialization variant: the
-                # full-external-fidelity commit (see _envelope notes)
-                ratios["merge_upsert_mor_dv"] = round(
-                    env["merge_upsert_mor_dv"] / duck["merge_upsert"], 2
-                )
         result["envelope_ratios_samerun"] = ratios
     else:
         print(f"# duckdb twin failed: {duck_fail}", file=sys.stderr)

@@ -2,9 +2,11 @@
 
 Hiding rows from the snapshot is not erasure — a regulator's question
 is whether the erased keys survive in ANY byte under the table
-directory: live data units, not-yet-vacuumed historical units, CDF
-change files, and the merge-on-read delete-set key lists (the erasure
-list is itself personal data).  ``erasure_audit`` answers it by
+directory: live data units, not-yet-vacuumed historical units and CDF
+change files.  A row a merge-on-read delete only masked with a
+deletion vector still holds its key bytes, so it counts as a leak
+until OPTIMIZE rewrites its file and VACUUM reclaims the old one.
+``erasure_audit`` answers it by
 reading the RAW parquet files (pyarrow, column-pruned to the key
 column — never through the table's snapshot logic, which is exactly
 the layer being audited).
@@ -101,7 +103,7 @@ def _audit_file(
 
 def list_parquet_files(table_dir: str) -> list[str]:
     """Every .parquet under the WHOLE table directory — data units,
-    _changes, _deletes; sorted for determinism."""
+    _changes, _change_data; sorted for determinism."""
     out: list[str] = []
     for root, _dirs, files in os.walk(table_dir):
         for fn in files:
@@ -130,9 +132,7 @@ def erasure_audit(
 
     Returns ``{"files_scanned", "files_with_key_col", "rows_checked",
     "leak_count", "leaks": [(file, key), ...capped],
-    "delete_set_files", "mapping_unresolved", "clean"}`` — ``clean``
-    also requires that no delete-set key-list files survive (vacuum
-    must reclaim them once optimize folds the delete in).  Counts are
+    "mapping_unresolved", "clean"}``.  Counts are
     exact; ``leaks`` detail is a bounded sample, capped at
     ``max_leak_detail`` EXECUTOR-side (each scan task samples within
     its share of the budget before the collect), so even a
@@ -165,10 +165,6 @@ def erasure_audit(
         str(k) for k in raw if k is not None
     )
     files = list_parquet_files(table.path)
-    delete_files = [
-        f for f in files
-        if os.path.relpath(f, table.path).split(os.sep)[0] == "_deletes"
-    ]
     kc = key_col
     er = erased
 
@@ -240,7 +236,6 @@ def erasure_audit(
         "rows_checked": rows,
         "leak_count": leak_count,
         "leaks": leaks,
-        "delete_set_files": len(delete_files),
         "mapping_unresolved": mapping_unresolved,
-        "clean": leak_count == 0 and not delete_files,
+        "clean": leak_count == 0,
     }

@@ -382,10 +382,9 @@ def analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("mor_delete_read")
 def mor_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merge-on-read equality delete (Iceberg-style delete files): the
-    delete rewrites NO data units — readers anti-join the deleted-PK
-    set — yet the read-back must equal the copy-on-write answer
-    exactly."""
+    """Merge-on-read delete (Delta deletion vectors): the delete
+    rewrites NO data units — readers skip the marked row positions —
+    yet the read-back must equal the copy-on-write answer exactly."""
     t = _fresh_table(spark, "mor_delete_read", sf_dir)
     o = load_table(spark, sf_dir, "orders")
     t.write(
@@ -400,15 +399,17 @@ def mor_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         strategy="merge-on-read",
     )
     assert c.data_units == before_units, "MOR delete must rewrite nothing"
-    assert len(c.delete_sets) == 1
+    # one delete → one DV file, referenced by every file it touched
+    assert c.deletion_vectors
+    assert len({d["pathOrInlineDv"] for d in c.deletion_vectors.values()}) == 1
     return t.read()
 
 
 @query("upsert_mor")
 def upsert_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read upsert (the deletion-vector play, VERDICT r2 #3):
-    the source's PK tuples become an equality-delete set over the
-    prior units and the source appends as a new unit — the commit
+    the prior rows under the source's keys are marked in deletion
+    vectors and the source appends as a new unit — the commit
     rewrites NOTHING, so write cost is O(source) not O(target), yet
     the read-back must equal the copy-on-write MERGE answer exactly.
     Covers both matched keys (updates) and brand-new keys (inserts
@@ -437,7 +438,7 @@ def upsert_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "MOR upsert must rewrite nothing"
     )
     assert len(c.data_units) == len(before_units) + 1
-    assert c.delete_sets, "MOR upsert over matched keys needs a delete set"
+    assert c.deletion_vectors, "MOR upsert over matched keys needs a DV"
     return t.read()
 
 
@@ -1112,7 +1113,7 @@ def replicate_table_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     syncs by applying only the deltas in commit order — full copy on
     first sync, then an INCREMENTAL replay of a MERGE batch followed
     by a DELETE (the delete images ride the CDF as 'delete' rows and
-    apply to the replica as an equality-delete key set), noop when
+    apply to the replica as a deleted-key set), noop when
     current; the replica must equal the source exactly."""
     from component_delta_lake_writer_spark.sinks.replicate import replicate
 
@@ -1233,7 +1234,7 @@ def describe_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
             [d["num_rows_from_stats"]],
             [",".join(d["partition_columns"])],
             [",".join(d["primary_key"])],
-            [d["pending_delete_sets"]],
+            [d["num_deletion_vectors"]],
         ],
     )
 
@@ -1883,11 +1884,10 @@ def optimize_where_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = t.latest_commit()
     assert before & set(c.data_units), "cold units must carry"
     assert len(c.data_units) < len(before), "hot range must compact"
-    # the delete's key set was conservatively scoped to every unit
-    # (non-range predicate), so the carried cold unit legitimately
-    # keeps its delete-set reference; the rewritten hot unit is clean
-    for ds in c.delete_sets:
-        assert set(ds["units"]) <= before & set(c.data_units), ds
+    # deletion vectors survive only on carried units; the rewritten
+    # hot units are clean
+    for rel in c.deletion_vectors:
+        assert rel.split("/")[1] in before & set(c.data_units), rel
     return t.read()
 
 
@@ -2051,12 +2051,6 @@ def stream_replicate_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("double").alias("price"),
     ).filter(F.col("o_orderkey") % 10 == 0)
     k = F.col("o_orderkey")
-    # source mirror deferred too: inline DV materialization is the
-    # tested semantic of delta_dv_external_read/upsert_mor/
-    # mor_delete_read — paying its two extra fixture scans HERE only
-    # slowed the probe (~3 s) without testing anything new; what this
-    # probe tests is CDF replication, which reads change sets, never
-    # the mirror
     # create WITH data in one commit (v0's snapshot streams as inserts
     # under startingVersion=0) — a separate empty-create + append pair
     # added a fixture commit without adding a tested action class.
@@ -2066,8 +2060,7 @@ def stream_replicate_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # latency, not semantics; the driver sweep runs ~58 keys on a
     # budget)
     src.write(o.coalesce(2), mode="overwrite", primary_key=["o_orderkey"],
-              properties={"enableChangeDataFeed": True,
-                          "mirror.dvMode": "deferred"})
+              properties={"enableChangeDataFeed": True})
     # merge-on-read: O(source) commit, and the CDF attribution the
     # stream replays is identical to copy-on-write's (probe latency —
     # COW's target rewrite added ~3 s of fixture cost, nothing tested)
@@ -2077,13 +2070,7 @@ def stream_replicate_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         strategy="merge-on-read",
     )
     src.delete_where("o_orderkey % 11 = 0")
-    # the replica is a high-frequency MOR follower — the documented
-    # use case for mirror.dvMode='deferred' (streaming/sink.py): no
-    # per-applied-commit DV materialization scan; its mirror syncs at
-    # optimize() points instead (probe latency, not semantics — the
-    # SOURCE table exercises the inline DV path above)
-    dst.write(o.limit(0), mode="overwrite", primary_key=["o_orderkey"],
-              properties={"mirror.dvMode": "deferred"})
+    dst.write(o.limit(0), mode="overwrite", primary_key=["o_orderkey"])
     q = stream_replicate(
         src, dst, ["o_orderkey"],
         checkpoint_dir=os.path.join(base, "ckpt_a"),
@@ -2248,8 +2235,7 @@ def stream_scd2_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src.write(pick("lo"), mode="overwrite",
               primary_key=["user_id"],
-              properties={"enableChangeDataFeed": True,
-                          "mirror.dvMode": "deferred"})
+              properties={"enableChangeDataFeed": True})
     src.upsert(pick("hi"), ["user_id"])
     both.unpersist()
     q = stream_scd2(
@@ -2298,8 +2284,8 @@ _O["stream_scd2_follow"] = """
 @query("gdpr_erasure_audit")
 def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-be-forgotten END TO END: an erasure key list lands as
-    a merge-on-read equality delete (O(keys) commit — the compliance
-    clock starts immediately), OPTIMIZE materializes the delete into
+    merge-on-read deletion vectors (no rewrite — the compliance clock
+    starts immediately), OPTIMIZE materializes the delete into
     rewritten files, VACUUM reclaims every pre-erasure unit — and the
     probe then runs operators.compliance.erasure_audit — the raw-byte
     scan of every parquet file under the table directory (the audit a
@@ -2320,15 +2306,15 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             primary_key=["o_orderkey"])
     erase = o.filter(F.col("o_custkey") % 9 == 3).select("o_orderkey")
     t.delete_keys(erase)          # O(keys): rows hidden from reads NOW
-    t.optimize()                  # materialize: delete sets fold away
+    t.optimize()                  # materialize: the DVs fold away
     t.vacuum(retention_hours=0)   # reclaim every pre-erasure file
-    # the WHOLE table directory: data units AND the MOR delete-set
-    # files (the erasure key list is itself personal data — vacuum
-    # must reclaim it once optimize folds the delete in)
+    # the WHOLE table directory: a row only masked by a deletion
+    # vector still holds its key bytes, so any pre-optimize file or
+    # DV the vacuum missed shows up here
     report = erasure_audit(t, erase, "o_orderkey")
-    assert report["delete_set_files"] == 0, (
-        "delete-set key list survived vacuum"
-    )
+    assert not [
+        f for f in os.listdir(t.path) if f.startswith("deletion_vector_")
+    ], "deletion-vector file survived vacuum"
     assert report["clean"], (
         f"erased keys still on disk: {report['leaks'][:5]}"
     )

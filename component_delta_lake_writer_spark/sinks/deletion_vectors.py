@@ -1,12 +1,13 @@
-"""Delta deletion-vector files for the ``_delta_log`` mirror.
+"""Delta deletion-vector files: the engine's one delete representation.
 
 The reference writes true Delta tables via delta-rs (any Delta reader
-can open them, src/component.py:356 era). This engine's merge-on-read
-delete sets (equality deletes, Iceberg-style) previously had NO
-Delta-log encoding — the mirror was flagged ``_STALE`` until a rewrite
-materialized them. This module closes that gap with the protocol's own
-mechanism (PROTOCOL.md §Deletion Vectors, reader v3 / writer v7,
-feature ``deletionVectors``):
+can open them, src/component.py:356 era). Every merge-on-read delete
+(``delete_where``/``delete_keys``, ``upsert(strategy='merge-on-read')``)
+marks the deleted row positions of each touched parquet file with the
+protocol's own mechanism (PROTOCOL.md §Deletion Vectors, reader v3 /
+writer v7, feature ``deletionVectors``). The engine commit and the
+``_delta_log`` entry carry the same descriptors, so engine reads and
+external Delta readers skip the same rows at every version:
 
 - row indexes marked deleted are encoded as a 64-bit
   **RoaringBitmapArray** in the "portable" format: magic 1681511377
@@ -23,16 +24,13 @@ feature ``deletionVectors``):
   at the size field, ``sizeInBytes`` is len(data), ``cardinality`` the
   number of deleted rows.
 
-A ``_dv_state.json`` sidecar under ``_delta_log/`` tracks which engine
-delete sets are already covered and each live file's current
-descriptor — writer-local state (like ``_last_checkpoint``), never
-consulted by readers: the JSON actions remain fully self-describing.
+DV files are immutable and written BEFORE the commit that references
+them; one left behind by a failed writer is reclaimed by ``vacuum``.
 """
 
 from __future__ import annotations
 
 import base64
-import json
 import os
 import struct
 import uuid
@@ -42,8 +40,6 @@ MAGIC_PORTABLE = 1681511377
 _COOKIE_NO_RUN = 12346
 _ARRAY_MAX = 4096
 FORMAT_VERSION = 1
-
-_DV_STATE = "_dv_state.json"
 
 
 # ---------------------------------------------------------------------------
@@ -253,26 +249,3 @@ def read_dv(table_path: str, descriptor: dict) -> list[int]:
             f"descriptor {descriptor['cardinality']}"
         )
     return out
-
-
-# ---------------------------------------------------------------------------
-# Writer-side sidecar state
-# ---------------------------------------------------------------------------
-
-
-def load_dv_state(table_path: str) -> dict:
-    p = os.path.join(table_path, "_delta_log", _DV_STATE)
-    if not os.path.exists(p):
-        return {"covered": [], "files": {}}
-    with open(p) as f:
-        return json.load(f)
-
-
-def save_dv_state(table_path: str, state: dict) -> None:
-    log_dir = os.path.join(table_path, "_delta_log")
-    os.makedirs(log_dir, exist_ok=True)
-    p = os.path.join(log_dir, _DV_STATE)
-    tmp = p + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(state, f)
-    os.replace(tmp, p)

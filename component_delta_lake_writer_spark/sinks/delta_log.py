@@ -27,20 +27,16 @@ The TIMESTAMP_NTZ type requires the ``timestampNtz`` table feature
 (reader v3 / writer v7); the emitted protocol is upgraded exactly when
 the schema needs it.
 
-Merge-on-read: equality-delete sets (Iceberg-style, used by
-``delete_where(strategy='merge-on-read')`` and
-``upsert(strategy='merge-on-read')``) are mirrored as real Delta
+Merge-on-read: ``delete_where``/``delete_keys`` and
+``upsert(strategy='merge-on-read')`` delete rows as real Delta
 **deletion vectors** (binary RoaringBitmapArray files +
 ``deletionVector`` descriptors on add/remove, reader v3 / writer v7
-feature ``deletionVectors`` — see ``deletion_vectors.py``): the engine
-computes each affected parquet file's deleted row indexes at publish
-time and swaps the file's add action for one carrying the descriptor,
-so external readers skip exactly the logically-deleted rows. The
-``_STALE`` marker (``delta_log_is_stale``) remains only as the honest
-fallback when a delete set's estimated scan cost exceeds the
-materialization bound (``mirror.dvMaxRows``) — then checkpoint
-advertising suspends until a rewrite or a later in-bound commit
-materializes the deletes and the marker clears.
+feature ``deletionVectors`` — see ``deletion_vectors.py``). The
+engine's commit records the same descriptors, so each entry is the
+commit's diff against its parent: a file whose bitmap changed gets a
+remove of its previous incarnation and an add carrying the new
+descriptor, and external readers skip exactly the rows the engine
+skips, at every version.
 """
 
 from __future__ import annotations
@@ -52,7 +48,6 @@ import urllib.parse
 import uuid
 
 _DELTA_LOG = "_delta_log"
-_STALE = "_STALE"
 
 
 _VERSION_RE = None
@@ -60,8 +55,8 @@ _VERSION_RE = None
 
 def _log_versions(log_dir: str) -> list[int]:
     """Committed version numbers in a log dir — STRICT 20-digit name
-    match, so writer sidecars (``_dv_state.json``) and tmp files never
-    parse as versions."""
+    match, so tmp files, checkpoints and compacted ranges never parse
+    as versions."""
     import re as _re
 
     global _VERSION_RE
@@ -73,43 +68,6 @@ def _log_versions(log_dir: str) -> list[int]:
         if m:
             out.append(int(m.group(1)))
     return sorted(out)
-
-
-def delta_log_is_stale(table_path: str) -> dict | None:
-    """Non-None iff the Delta mirror currently diverges from the
-    engine snapshot (pending merge-on-read delete sets). The dict
-    carries {version, reason}. External readers honoring the marker
-    should fall back to the engine's ``_commits`` log or wait for the
-    next materializing commit."""
-    p = os.path.join(table_path, _DELTA_LOG, _STALE)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _set_stale(table_path: str, version: int, stale: bool) -> None:
-    p = os.path.join(table_path, _DELTA_LOG, _STALE)
-    if not stale:
-        try:
-            os.unlink(p)
-        except FileNotFoundError:
-            pass
-        return
-    tmp = p + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "version": version,
-                "reason": (
-                    "pending merge-on-read delete sets: file lists are "
-                    "accurate but logically-deleted rows are still "
-                    "present in the advertised parquet"
-                ),
-            },
-            f,
-        )
-    os.replace(tmp, p)
 
 
 def _walk_parquet(root: str, unit_dir: str) -> list[tuple[str, int, int, dict]]:
@@ -434,7 +392,6 @@ def write_delta_log_entry(
     new_units: list[str],
     removed_units: list[str],
     prev_schema_json: str | None,
-    rows_diverge: bool = False,
     column_mapping: dict | None = None,
     prev_column_mapping: dict | None = None,
     operation: str = "WRITE",
@@ -452,19 +409,18 @@ def write_delta_log_entry(
     """Emit ``_delta_log/{version}.json`` for one commit. Returns the
     written path. Idempotent per version (atomic link, first wins).
 
-    ``rows_diverge=True`` (commit carries merge-on-read delete sets
-    ABOVE the DV materialization bound) additionally publishes the
-    ``_STALE`` marker; False clears it.
-
-    ``dv_adds`` maps table-relative parquet paths (of files that stay
-    live) to their NEW ``deletionVector`` descriptors: each gets a
-    remove of its previous incarnation (carrying the prior descriptor
-    from ``current_dvs`` when one exists — Delta reconciliation keys
-    actions by (path, dvId)) followed by an add carrying the new one,
-    plus a protocol upgrade to the ``deletionVectors`` table feature
-    and a metaData re-emission setting
-    ``delta.enableDeletionVectors=true`` the first time.
-    ``current_dvs`` also attaches descriptors to removed-unit removes.
+    ``dv_adds`` maps table-relative parquet paths of live files to
+    their NEW ``deletionVector`` descriptor (None: the file's DV is
+    gone, e.g. after RESTORE). A file of a ``new_units`` unit gets the
+    descriptor on its add; any other file gets a remove of its
+    previous incarnation (carrying the prior descriptor from
+    ``current_dvs`` when one exists — Delta reconciliation keys
+    actions by (path, dvId)) followed by an add carrying the new one.
+    The first descriptor also brings a protocol upgrade to the
+    ``deletionVectors`` table feature and a metaData re-emission
+    setting ``delta.enableDeletionVectors=true``. ``current_dvs`` (the
+    parent snapshot's descriptors) also attaches them to removed-unit
+    removes.
 
     ``column_mapping`` (logical→physical names from RENAME COLUMN) is
     mirrored as Delta columnMapping mode=name: schemaString fields
@@ -550,6 +506,7 @@ def write_delta_log_entry(
     ) or any(k.startswith("delta.constraints.") for k in user_cfg)
     dv_adds = dv_adds or {}
     current_dvs = current_dvs or {}
+    dv_new = any(d is not None for d in dv_adds.values())
 
     # deletionVectors is a commit-driven capability: live once the log
     # carries (or this commit introduces) any descriptor. Resolved
@@ -564,7 +521,7 @@ def write_delta_log_entry(
         return _dv_cfg_cache[0]
 
     def _dv_live() -> bool:
-        return bool(dv_adds) or _log_dv_cfg()
+        return dv_new or _log_dv_cfg()
 
     # v2Checkpoint is sticky the same way (the spec's checkpoint
     # policy cannot silently revert: readers may hold v2 manifests);
@@ -641,7 +598,7 @@ def write_delta_log_entry(
         # first DV emission: metaData re-emits to carry
         # delta.enableDeletionVectors (the protocol feature is what
         # readers REQUIRE; the property is what real writers set)
-        or (bool(dv_adds) and not _log_dv_cfg())
+        or (dv_new and not _log_dv_cfg())
         # first rowTracking / inCommitTimestamp enablement: same rule
         or bool(row_tracking and row_tracking.get("newly"))
         or bool(ict and ict.get("newly"))
@@ -783,18 +740,18 @@ def write_delta_log_entry(
     for unit in new_units:
         for rel, size, mtime, pvals in _walk_parquet(table_path, os.path.join(data_dir_name, unit)):
             emitted_adds.add(rel)
-            actions.append(
-                {
-                    "add": {
-                        "path": _encode_path(rel),
-                        "partitionValues": pvals,
-                        "size": size,
-                        "modificationTime": mtime,
-                        "dataChange": True,
-                        **_rt_fields(rel),
-                    }
-                }
-            )
+            add = {
+                "path": _encode_path(rel),
+                "partitionValues": pvals,
+                "size": size,
+                "modificationTime": mtime,
+                "dataChange": True,
+                **_rt_fields(rel),
+            }
+            if dv_adds.get(rel) is not None:
+                # a re-added unit (RESTORE) brings its deletions along
+                add["deletionVector"] = dv_adds[rel]
+            actions.append({"add": add})
     if row_tracking is not None and row_tracking.get("newly") and version > 0:
         # mid-history enablement BACKFILL (Delta's own enablement
         # shape): every live file already in the log re-commits its
@@ -820,7 +777,7 @@ def write_delta_log_entry(
             actions.append({"add": new_add})
     # DV swap: retract each affected file's previous incarnation and
     # re-add it with the new descriptor (same physical parquet)
-    for rel in sorted(dv_adds):
+    for rel in sorted(set(dv_adds) - emitted_adds):
         rm = {
             "path": _encode_path(rel),
             "deletionTimestamp": timestamp_ms,
@@ -840,19 +797,17 @@ def write_delta_log_entry(
         # dir and the file name (same derivation as _walk_parquet)
         parts = rel.split("/")
         mid = "/".join(parts[2:-1])  # data_dir/unit/<mid...>/file
-        actions.append(
-            {
-                "add": {
-                    "path": _encode_path(rel),
-                    "partitionValues": decode_segments(mid if mid else "."),
-                    "size": st.st_size,
-                    "modificationTime": int(st.st_mtime * 1000),
-                    "dataChange": True,
-                    "deletionVector": dv_adds[rel],
-                    **_rt_fields(rel),
-                }
-            }
-        )
+        add = {
+            "path": _encode_path(rel),
+            "partitionValues": decode_segments(mid if mid else "."),
+            "size": st.st_size,
+            "modificationTime": int(st.st_mtime * 1000),
+            "dataChange": True,
+            **_rt_fields(rel),
+        }
+        if dv_adds[rel] is not None:
+            add["deletionVector"] = dv_adds[rel]
+        actions.append({"add": add})
     for rel, size in cdc_files or []:
         actions.append(
             {
@@ -893,7 +848,6 @@ def write_delta_log_entry(
     finally:
         os.unlink(tmp)
     _write_version_crc(table_path, version, actions)
-    _set_stale(table_path, version, rows_diverge)
     return final
 
 
@@ -1203,10 +1157,9 @@ def _log_has_dv_config(log_dir: str) -> bool:
 
 def live_dv_descriptors(table_path: str) -> dict:
     """{table-relative fs path: deletionVector descriptor} of every
-    live file currently carrying a DV — from the LOG (checkpoint-aware
-    replay), the single source of truth: a sidecar could lag behind a
-    crash between log publish and sidecar save, and a remove action
-    must carry exactly the descriptor the published add carries."""
+    live file currently carrying a DV, as an external reader sees it
+    (checkpoint-aware replay of the log alone) — after every commit it
+    equals the engine commit's ``deletion_vectors``."""
     _files, _schema, _pcols, dvs = _replay_full(table_path)
     return dvs
 
@@ -2110,12 +2063,7 @@ def maybe_write_checkpoint(
     properties: dict | None = None,
 ) -> str | None:
     """Checkpoint when the version hits the interval boundary (the
-    Delta default is every 10 commits). Suspended while the mirror is
-    marked stale — advertising a checkpoint of a row-divergent
-    snapshot via _last_checkpoint would upgrade a temporary, flagged
-    divergence into a durable pointer."""
-    if delta_log_is_stale(table_path) is not None:
-        return None
+    Delta default is every 10 commits)."""
     # delta.checkpointInterval: per-table cadence override (a
     # high-frequency writer checkpoints more often so readers replay
     # less; an archival table checkpoints rarely). Read from the

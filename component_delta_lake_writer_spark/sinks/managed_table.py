@@ -37,7 +37,7 @@ import os
 import shutil
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,16 +53,16 @@ from component_delta_lake_writer_spark.session import local_relation
 _COMMITS = "_commits"
 _DATA = "_data"
 
-# DV materialization transfer-shape cutoff: matched (file, row-index)
-# pairs up to this bound come back as a plain row collect (no Python
-# workers, ~0.8 s cheaper at small shapes); above it the bitmaps are
-# serialized executor-side and only binary blobs transfer.
+# Deletion-vector match transfer-shape cutoff: matched (file,
+# row-index) pairs up to this bound come back as a plain row collect
+# (no Python workers, ~0.8 s cheaper at small shapes); above it the
+# bitmaps are serialized executor-side and only binary blobs transfer.
 _DV_COLLECT_MAX = 50_000
-# Driver-only DV materialization tier: targeted units whose summed
-# row stats fit this bound are matched with pyarrow+pandas on the
-# driver (zero Spark jobs). 4M rows × a few PK columns ≈ tens of MB of
-# driver IO — the same order as the footer-stats reads the commit
-# already performs. Override per table: mirror.dvDriverScanMaxRows.
+# Driver-only deletion-vector match tier: a key set and targeted units
+# whose summed row stats both fit this bound are matched with
+# pyarrow+pandas on the driver (zero Spark jobs). 4M rows × a few PK
+# columns ≈ tens of MB of driver IO — the same order as the
+# footer-stats reads the commit already performs.
 _DV_DRIVER_SCAN_MAX = 4_000_000
 
 # Properties the engine truth-tests — the only keys whose SQL string
@@ -143,12 +143,14 @@ class Commit:
     # max, nulls}}}. Optional — commits written before this field
     # existed load with {} and simply never prune.
     stats: dict = field(default_factory=dict)
-    # Merge-on-read equality deletes (Iceberg-style): each entry is
-    # {"path": <dir under _deletes/>, "units": [unit, ...]} — a parquet
-    # set of deleted PK tuples applying ONLY to the listed units (rows
-    # appended after the delete keep living even under a reused PK).
-    # Compacted away by optimize(); [] on old commits.
-    delete_sets: list = field(default_factory=list)
+    # Merge-on-read deletes as Delta deletion vectors: {table-relative
+    # parquet path: deletionVector descriptor} for every live file with
+    # deleted rows (the positions, not the keys — rows appended after
+    # the delete keep living even under a reused PK). The same
+    # descriptors the _delta_log mirror carries on the file's add.
+    # Carried forward by _publish for every file whose unit survives;
+    # a rewrite of the unit drops them. {} on old commits.
+    deletion_vectors: dict = field(default_factory=dict)
     # ALTER TABLE … RENAME COLUMN (Delta column mapping, mode=name):
     # {logical_name: physical_parquet_name} for columns whose on-disk
     # name differs from the committed schema name. Reads scan under
@@ -189,6 +191,14 @@ class Commit:
     # mirrored as the delta.clustering domainMetadata. [] = never
     # clustered.
     clustered_by: list = field(default_factory=list)
+
+
+_COMMIT_FIELDS = {f.name for f in fields(Commit)}
+
+
+def _dv_unit(rel: str) -> str:
+    """Data unit of a table-relative parquet path (``_data/<unit>/…``)."""
+    return rel.split("/", 2)[1]
 
 
 def _prop_on(props: dict | None, key: str) -> bool:
@@ -318,7 +328,19 @@ class ManagedTable:
 
     def commit_at(self, version: int) -> Commit:
         with open(os.path.join(self._commits_dir, f"{version:020d}.json")) as f:
-            return Commit(**json.load(f))
+            d = json.load(f)
+        # A field an older engine wrote and this one no longer models:
+        # empty, it carries no state and is dropped; non-empty (e.g.
+        # merge-on-read deletes kept outside the Delta log), dropping
+        # it would resurrect rows, so the commit is refused instead.
+        gone = sorted(k for k, v in d.items() if k not in _COMMIT_FIELDS and v)
+        if gone:
+            raise UserException(
+                f"Commit {version} at {self.path} carries {gone}, state "
+                "this engine no longer reads; run optimize() with the "
+                "engine that wrote it first (MIGRATION.md)."
+            )
+        return Commit(**{k: v for k, v in d.items() if k in _COMMIT_FIELDS})
 
     def _publish(
         self,
@@ -328,17 +350,17 @@ class ManagedTable:
     ) -> None:
         # delta.appendOnly (Delta's append-only table property): any
         # commit that logically deletes or replaces rows is refused —
-        # removed units, new merge-on-read delete sets, and DML/
+        # removed units, new deletion vectors, and DML/
         # rewrite actions. Metadata-only and pure-rewrite maintenance
         # (optimize/analyze/clone bookkeeping) keeps working because
         # it changes no logical rows.
+        prev_dvs = prev.deletion_vectors if prev is not None else {}
         if prev is not None and _prop_on(prev.properties, "delta.appendOnly"):
-            prev_sets = {ds["path"] for ds in (prev.delete_sets or [])}
-            new_sets = [
-                ds for ds in (commit.delete_sets or [])
-                if ds["path"] not in prev_sets
-            ]
-            if new_sets or commit.action in (
+            new_dvs = any(
+                prev_dvs.get(rel) != d
+                for rel, d in commit.deletion_vectors.items()
+            )
+            if new_dvs or commit.action in (
                 "delete", "update", "overwrite", "upsert",
                 "replace_where", "restore", "truncate",
             ):
@@ -364,6 +386,19 @@ class ManagedTable:
                 if s not in (commit.ingest_sidecars or [])
             ]
             commit.ingest_sidecars = carried + (commit.ingest_sidecars or [])
+            # deletion vectors ride with their files: every file whose
+            # unit survives keeps its descriptor unless this commit set
+            # a new one; a rewritten unit's descriptors drop with it.
+            # RESTORE takes the restored version's map verbatim.
+            if commit.action != "restore":
+                live = set(commit.data_units)
+                commit.deletion_vectors = {
+                    **{
+                        rel: d for rel, d in prev_dvs.items()
+                        if _dv_unit(rel) in live
+                    },
+                    **commit.deletion_vectors,
+                }
 
         props = commit.properties or {}
         # In-commit timestamps (Delta inCommitTimestamp writer
@@ -507,72 +542,9 @@ class ManagedTable:
         # true Delta via delta-rs, src/component.py:356 / write_batch).
         from component_delta_lake_writer_spark.sinks.delta_log import (
             maybe_write_checkpoint,
-            write_delta_log_entry,
         )
 
-        prev_units = set(prev.data_units) if prev else set()
-        added_units = [u for u in commit.data_units if u not in prev_units]
-        # merge-on-read delete sets are materialized as Delta deletion
-        # vectors (binary DV files + descriptors) when the affected
-        # scan is within bound; only an over-bound remainder leaves the
-        # mirror honestly _STALE-flagged until a rewrite
-        removed_units_list = [
-            u for u in prev_units if u not in set(commit.data_units)
-        ]
-        rt_arg, ict_arg = _mirror_feature_args(commit, prev)
-        clustering_arg = _mirror_clustering_arg(commit, prev)
-        dv_adds, current_dvs, dv_covered, dv_fully = (
-            self._compute_dv_updates(
-                commit, added_units, has_removes=bool(removed_units_list)
-            )
-        )
-        write_delta_log_entry(
-            table_path=self.path,
-            data_dir_name=_DATA,
-            version=commit.version,
-            schema_json=commit.schema_json,
-            partition_by=commit.partition_by,
-            timestamp_ms=commit.timestamp_ms,
-            new_units=added_units,
-            removed_units=removed_units_list,
-            prev_schema_json=prev.schema_json if prev else None,
-            rows_diverge=bool(commit.delete_sets) and not dv_fully,
-            column_mapping=commit.column_mapping,
-            prev_column_mapping=prev.column_mapping if prev else None,
-            dv_adds=dv_adds,
-            current_dvs=current_dvs,
-            # DESCRIBE HISTORY on the mirror shows real operation names
-            operation=_OPERATION_NAMES.get(
-                commit.action, commit.action.upper()
-            ),
-            # the NEW watermark this commit introduced (if any) becomes
-            # a Delta txn/setTransaction action in the mirror
-            txn=next(
-                (
-                    (app, v)
-                    for app, v in (commit.txns or {}).items()
-                    if prev is None
-                    or (prev.txns or {}).get(app) != v
-                ),
-                None,
-            ),
-            row_tracking=rt_arg,
-            ict=ict_arg,
-            clustering=clustering_arg,
-            checkpoint_policy=_mirror_checkpoint_arg(commit, prev),
-            table_properties=commit.properties,
-            prev_table_properties=prev.properties if prev else None,
-            cdc_files=cdc_files,
-        )
-        # persist which engine delete sets the mirror now covers —
-        # AFTER the log entry (the log is the source of truth; a crash
-        # in between just re-materializes the same indices next commit)
-        if dv_adds or dv_covered is not None:
-            from component_delta_lake_writer_spark.sinks.deletion_vectors import (  # noqa: E501
-                save_dv_state,
-            )
-
-            save_dv_state(self.path, {"covered": dv_covered or []})
+        self._mirror(commit, prev, cdc_files)
         # Delta protocol checkpointing: every 10th version materializes
         # the snapshot state so readers stop replaying the whole log
         maybe_write_checkpoint(
@@ -682,357 +654,222 @@ class ManagedTable:
                     want.discard(u)
         return found
 
-    def _compute_dv_updates(
+    def _mirror(
         self,
         commit: Commit,
-        added_units: list[str] | None = None,
-        has_removes: bool = True,
-    ) -> tuple[dict, dict, list | None, bool]:
-        """Materialize this commit's not-yet-mirrored merge-on-read
-        delete sets as deletion-vector bitmaps.
+        prev: Commit | None,
+        cdc_files: list | None = None,
+    ) -> None:
+        """Write ``commit``'s ``_delta_log`` entry as its diff against
+        ``prev`` — shared by _publish and the sync_metadata repair, so
+        a regenerated entry carries exactly what the original did,
+        deletion vectors included. Pure metadata: no log replay, no
+        data IO beyond listing the added and removed units."""
+        from component_delta_lake_writer_spark.sinks.delta_log import (
+            write_delta_log_entry,
+        )
 
-        Returns ``(dv_adds, current_dvs, covered_after, fully)``:
-        per-file NEW descriptors, the live descriptors BEFORE this
-        commit (for remove actions), the delete-set paths the mirror
-        covers after this commit (None = no DV history, don't touch
-        the sidecar), and whether every delete set is covered.
+        prev_units = set(prev.data_units) if prev else set()
+        live = set(commit.data_units)
+        prev_dvs = prev.deletion_vectors if prev else {}
+        dvs = commit.deletion_vectors
+        # files staying live (or re-added) whose descriptor changed: a
+        # new or widened DV, or one RESTORE dropped (None)
+        dv_adds = {
+            rel: dvs.get(rel)
+            for rel in set(dvs) | set(prev_dvs)
+            if _dv_unit(rel) in live and dvs.get(rel) != prev_dvs.get(rel)
+        }
+        rt_arg, ict_arg = _mirror_feature_args(commit, prev)
+        write_delta_log_entry(
+            table_path=self.path,
+            data_dir_name=_DATA,
+            version=commit.version,
+            schema_json=commit.schema_json,
+            partition_by=commit.partition_by,
+            timestamp_ms=commit.timestamp_ms,
+            new_units=[u for u in commit.data_units if u not in prev_units],
+            removed_units=[u for u in prev_units if u not in live],
+            prev_schema_json=prev.schema_json if prev else None,
+            column_mapping=commit.column_mapping,
+            prev_column_mapping=prev.column_mapping if prev else None,
+            dv_adds=dv_adds,
+            current_dvs=prev_dvs,
+            # DESCRIBE HISTORY on the mirror shows real operation names
+            operation=_OPERATION_NAMES.get(
+                commit.action, commit.action.upper()
+            ),
+            # the NEW watermark this commit introduced (if any) becomes
+            # a Delta txn/setTransaction action in the mirror
+            txn=next(
+                (
+                    (app, v)
+                    for app, v in (commit.txns or {}).items()
+                    if prev is None or (prev.txns or {}).get(app) != v
+                ),
+                None,
+            ),
+            # row-tracking ids / in-commit timestamps / clustering are
+            # committed state: a repaired entry must carry them too
+            row_tracking=rt_arg,
+            ict=ict_arg,
+            clustering=_mirror_clustering_arg(commit, prev),
+            checkpoint_policy=_mirror_checkpoint_arg(commit, prev),
+            table_properties=commit.properties,
+            prev_table_properties=prev.properties if prev else None,
+            cdc_files=cdc_files,
+        )
 
-        Cost posture: the common no-delete-set path is a pure
-        in-memory no-op (one ``os.path.exists``). When sets are
-        pending, the scan is COLUMN-PRUNED to the delete-key columns +
-        row position of ONLY the targeted units, and the collect is
-        O(deleted rows) — the merge-on-read write itself stays O(source
-        delta); this is the same files-scan any DV-writing engine
-        (delta-spark DML) performs. A pending set whose targeted-unit
-        row estimate exceeds ``mirror.dvMaxRows`` (table property,
-        default 4M) is deferred: the mirror stays _STALE until a
-        rewrite or a smaller later state covers it.
+    def _mark_deleted(
+        self,
+        prev: Commit,
+        units: list[str],
+        primary_key: list[str] | None = None,
+        keys: DataFrame | None = None,
+        n_keys: float = 0.0,
+        local_keys=None,
+        condition: str | None = None,
+    ) -> dict[str, dict]:
+        """Merge-on-read delete: mark the rows of ``units`` (in the
+        snapshot ``prev``) whose ``primary_key`` tuple is in ``keys`` —
+        or, given ``condition``, the rows it is TRUE for — in Delta
+        deletion vectors. Writes ONE DV file and returns {table-relative
+        parquet path: descriptor} for every file whose bitmap grew;
+        each new bitmap is the union with the file's live one (a
+        descriptor replaces, it never adds). Runs BEFORE the version
+        claim: a writer that dies after it leaves only an unreferenced
+        DV file, which vacuum reclaims.
 
-        Row identity: ``_metadata.row_index`` — the physical row
+        Row identity is ``_metadata.row_index`` — the physical row
         position in the parquet file, exactly what the Delta DV bitmap
-        indexes (delta PROTOCOL.md §Deletion Vectors).
-        """
-        from urllib.parse import unquote, urlparse
+        indexes (delta PROTOCOL.md §Deletion Vectors). ``n_keys`` is the
+        key count (for ``condition``: the targeted rows) and picks one
+        of three tiers:
 
+        - driver: ``local_keys()`` hands the keys over as Arrow, the
+          layout is unpartitioned (hive partition columns live in
+          paths, not files) and both the keys and the targeted rows fit
+          ``_DV_DRIVER_SCAN_MAX`` → a pyarrow + pandas match with no
+          Spark job. A distributed match costs ~0.5 s of fixed
+          dispatch at the sf0.1 probe shape against ~0.01 s here; it
+          never triggers at 100 TB and exists so metadata-scale tables
+          stop paying that dispatch per commit;
+        - collect (≤ ``_DV_COLLECT_MAX``): a broadcast semi-join whose
+          (file, row) pairs come back as plain rows, with the keys as
+          an Arrow ``LocalRelation`` when the driver has them;
+        - bitmap: each file's bitmap is serialized on the executors
+          (applyInPandas) and the driver receives one binary row per
+          file — O(bitmap bytes), never O(deleted rows)."""
         from component_delta_lake_writer_spark.sinks import (
             deletion_vectors as DV,
         )
-        from component_delta_lake_writer_spark.sinks.delta_log import (
-            _log_has_dv_config,
-            live_dv_descriptors,
-        )
 
-        log_dir = os.path.join(self.path, "_delta_log")
-        has_state = os.path.exists(os.path.join(log_dir, DV._DV_STATE))
-        if not commit.delete_sets and not has_state:
-            # Lost-sidecar window applies HERE too: a rewrite
-            # (overwrite / COW delete / optimize) whose removes drop a
-            # DV-bearing file must carry the prior (path, dvId)
-            # descriptor even when the sidecar save was lost, or the
-            # stale add stays live for external readers. Gated on
-            # has_removes so plain appends — the hot path — stay one
-            # os.path.exists.
-            if not has_removes or not _log_has_dv_config(log_dir):
-                return {}, {}, None, True
-            return {}, live_dv_descriptors(self.path), None, True
-        # DV-era detection must fall back to the LOG: a crash between
-        # log publish and sidecar save leaves descriptors live with no
-        # sidecar — a swap (or a removed unit's remove) emitted without
-        # the prior descriptor would leave the old (path, dvId) add
-        # alive for external readers (duplicated rows). The log scan
-        # runs only on tables that carry delete sets, never on the
-        # plain no-removes fast path above. Deferred-mode followers
-        # (which never emit DVs inline) skip it ONLY for remove-less
-        # commits — the CDC-apply shape — because removes need prior
-        # descriptors regardless of mode (a deferred table can carry
-        # DV history from earlier default-mode commits).
-        deferred_mode = (
-            (commit.properties or {}).get("mirror.dvMode") == "deferred"
-        )
-        dv_era = has_state or (
-            (has_removes or not deferred_mode)
-            and _log_has_dv_config(log_dir)
-        )
-        state = DV.load_dv_state(self.path) if has_state else {"covered": []}
-        covered = set(state.get("covered", []))
-        # a delete set targeting a unit (RE-)ADDED this commit loses
-        # its coverage: the unit's files get plain adds this commit
-        # (restore / clone bringing back a previously-rewritten unit),
-        # so their bitmaps must re-materialize or external readers
-        # would resurrect the deleted rows
-        readded = set(added_units or ())
-        if readded:
-            covered -= {
-                ds["path"]
-                for ds in commit.delete_sets
-                if readded & set(ds["units"])
-            }
-        live_paths = {ds["path"] for ds in commit.delete_sets}
-        pending = [
-            ds for ds in commit.delete_sets if ds["path"] not in covered
-        ]
-        covered_after = sorted(covered & live_paths)
-        if not pending and not has_removes:
-            # nothing to materialize and no removes that might carry
-            # descriptors: skip the replay scan entirely (appends on a
-            # DV-history table stay O(metadata))
-            return {}, {}, covered_after, True
-        current_dvs = live_dv_descriptors(self.path) if dv_era else {}
-        if not pending:
-            return {}, current_dvs, covered_after, True
-        live_units = set(commit.data_units)
-        units_needed = sorted(
-            {u for ds in pending for u in ds["units"] if u in live_units}
-        )
-        if not units_needed:
-            # every targeted unit is gone: the sets are dead weight
-            return (
-                {},
-                current_dvs,
-                sorted(set(covered_after) | {ds["path"] for ds in pending}),
-                True,
+        mapping = prev.column_mapping or {}
+        est = 0.0
+        for u in units:
+            r = (prev.stats.get(u) or {}).get("_rows")
+            est += float(r) if r is not None else float("inf")
+        found: dict[str, set] = {}
+        if (
+            local_keys is not None
+            and not prev.partition_by
+            and max(n_keys, est) <= _DV_DRIVER_SCAN_MAX
+        ):
+            found = self._driver_match(local_keys(), units, mapping)
+        elif units:
+            scan = self._scan_units(
+                [os.path.join(self._data_dir, u) for u in units],
+                T.StructType.fromJson(json.loads(prev.schema_json)),
+                mapping, prev.partition_by, with_row_meta=True,
             )
-        # mirror.dvMode='deferred': a high-frequency MOR writer (CDC
-        # follower applying many commits/min) opts out of the
-        # per-commit materialization scan entirely — the mirror stays
-        # honestly _STALE between optimize() points (the pre-DV
-        # contract), while the default keeps every commit's mirror
-        # fresh. mirror.dvMaxRows bounds the inline scan estimate.
-        if deferred_mode:
-            return {}, current_dvs, covered_after, False
-        bound = float(
-            (commit.properties or {}).get("mirror.dvMaxRows", 4_000_000)
-        )
-
-        def _est(ds) -> float:
-            total = 0.0
-            for u in ds["units"]:
-                if u not in live_units:
-                    continue
-                r = (commit.stats.get(u) or {}).get("_rows")
-                total += float(r) if r is not None else float("inf")
-            return total
-
-        # the bound is PER DELETE SET (as documented): one over-bound
-        # set defers only itself; every in-bound set still materializes
-        deferred, kept = [], []
-        for ds in pending:
-            (deferred if _est(ds) > bound else kept).append(ds)
-        pending = kept
-        if not pending:
-            return {}, current_dvs, covered_after, False
-
-        mapping = commit.column_mapping or {}
-        # Two transfer shapes for the matched (file, row-position)
-        # stream, picked by the delete set's footer-counted size (pure
-        # driver IO, no job):
-        # - SMALL (≤ _DV_COLLECT_MAX matched upper bound): plain
-        #   row collect — no Python workers, lowest fixed cost (the
-        #   common MOR shape: small deltas against big targets).
-        # - LARGE: each file's bitmap serialized on the EXECUTORS
-        #   (applyInPandas, Arrow-batched); the driver receives one
-        #   compact binary row per file — O(bitmap bytes), never
-        #   O(deleted rows). A row-per-index collect measured +2.3 s
-        #   at a 10%-update ×10 envelope shape and would not survive
-        #   a 100 TB update fraction at all.
-        from component_delta_lake_writer_spark.sinks.deletion_vectors import (  # noqa: E501
-            serialize_bitmap,
-        )
-
-        def _to_bitmap(pdf):
-            import pandas as pd
-
-            return pd.DataFrame(
-                {
-                    "_fp": [pdf["_fp"].iloc[0]],
-                    "_bm": [
-                        serialize_bitmap(
-                            int(i) for i in pdf["_ri"].to_numpy()
-                        )
-                    ],
-                }
-            )
-
-        def _ds_rows(path: str) -> int:
-            # parquet footer row counts: driver-side file IO only
-            import pyarrow.parquet as pq
-
-            total = 0
-            for dirpath, _d, files in os.walk(path):
-                for fn in files:
-                    if fn.endswith(".parquet"):
-                        total += pq.ParquetFile(
-                            os.path.join(dirpath, fn)
-                        ).metadata.num_rows
-            return total
-
-        driver_bound = float(
-            (commit.properties or {}).get(
-                "mirror.dvDriverScanMaxRows", _DV_DRIVER_SCAN_MAX
-            )
-        )
-
-        def _driver_match(ds_dir: str, units: list[str]) -> dict:
-            """Metadata-scale fast path: both sides provably small, so
-            the (file, row_index) match runs entirely on the DRIVER
-            with pyarrow + pandas — no Spark job at all. A clean run
-            of the distributed path costs ~0.5 s of fixed dispatch at
-            the sf0.1 probe shape vs ~0.01 s here (measured,
-            scripts/profile_dv_variants.py). Row positions come from
-            reading each parquet file whole, which is exactly the
-            `_metadata.row_index` physical-position semantics."""
-            import pandas as pd
-            import pyarrow.dataset as pads
-            import pyarrow.parquet as pq
-
-            keys = pads.dataset(ds_dir, format="parquet").to_table()
-            # SQL join equality: NULL keys never match — drop them so
-            # the pandas match can't pair NaN with NaN
-            kdf = keys.to_pandas().dropna()
-            phys = [mapping.get(c, c) for c in keys.column_names]
-            kmi = pd.MultiIndex.from_frame(kdf)
-            out: dict[str, list[int]] = {}
-            for u in units:
-                udir = os.path.join(self._data_dir, u)
-                for dirpath, _d, files in os.walk(udir):
-                    for fn in sorted(files):
-                        if not fn.endswith(".parquet"):
-                            continue
-                        fpath = os.path.join(dirpath, fn)
-                        fdf = pq.read_table(
-                            fpath, columns=phys
-                        ).to_pandas()
-                        fdf.columns = list(keys.column_names)
-                        mask = pd.MultiIndex.from_frame(fdf).isin(kmi)
-                        if not mask.any():
-                            continue
-                        import numpy as np
-
-                        rel = os.path.relpath(fpath, self.path)
-                        out[rel] = [
-                            int(i) for i in np.nonzero(mask)[0]
+            small = n_keys <= _DV_COLLECT_MAX
+            if condition is not None:
+                matched = scan.filter(
+                    F.coalesce(F.expr(condition), F.lit(False))
+                )
+            else:
+                if small and local_keys is not None:
+                    build = local_relation(
+                        self.spark, None, local_keys()
+                    ).select(
+                        *[
+                            F.col(c).cast(scan.schema[c].dataType)
+                            for c in primary_key
                         ]
-            return out
-
-        new_bitmaps: dict[str, list[int]] = {}
-        for ds in pending:
-            units = [u for u in ds["units"] if u in live_units]
-            if not units:
-                continue
-            ds_dir = os.path.join(self._deletes_dir, ds["path"])
-            # the ds key count is the practical proxy for the transfer
-            # size (a PK matches ~one live row; pathological multi-unit
-            # duplication only over-fills a bounded collect, it cannot
-            # recur per commit since those rows are now deleted)
-            ds_keys = _ds_rows(ds_dir)
-            small = ds_keys <= _DV_COLLECT_MAX
-            # Tier 1 — driver-only: every targeted unit's row count is
-            # known from commit stats and the sum fits the driver
-            # bound AND the layout is unpartitioned (hive partition
-            # columns live in paths, not files; those tables take the
-            # Spark path where `_metadata` semantics are
-            # authoritative). The key count needs no separate cap: it
-            # can't exceed the rows the bounded target holds, and the
-            # matched output is bounded the same way. At 100 TB this
-            # tier never triggers — it exists so metadata-scale tables
-            # stop paying distributed dispatch for mirror freshness.
-            if ds_keys <= driver_bound and not commit.partition_by:
-                est = 0.0
-                for u in units:
-                    r = (commit.stats.get(u) or {}).get("_rows")
-                    est += float(r) if r is not None else float("inf")
-                if est <= driver_bound:
-                    for rel, idx in _driver_match(ds_dir, units).items():
-                        if rel in new_bitmaps:
-                            new_bitmaps[rel] = sorted(
-                                set(new_bitmaps[rel]) | set(idx)
-                            )
-                        else:
-                            new_bitmaps[rel] = idx
-                    continue
-            dels = self.spark.read.parquet(ds_dir)
-            if small:
-                # Tier 2 — SMALL build side: load the delete keys on
-                # the DRIVER (pyarrow, the same footers _ds_rows just
-                # opened) and hand Spark a LocalRelation — the
-                # broadcast hash table builds driver-side with NO
-                # Spark stage, where `read.parquet(ds_dir).distinct()`
-                # cost a scan stage plus an exchange per commit.
-                # Duplicate keys are harmless to a left-semi build, so
-                # no distinct is needed.
-                import pyarrow.dataset as _pads
-
-                _local = local_relation(
-                    self.spark, None,
-                    _pads.dataset(ds_dir, format="parquet").to_table(),
-                )
-                dels_build = _local.select(
-                    *[
-                        F.col(f.name).cast(f.dataType)
-                        for f in dels.schema.fields
-                    ]
-                )
-            else:
-                dels_build = dels.distinct()
-            scan = self.spark.read.parquet(
-                *[os.path.join(self._data_dir, u) for u in units]
-            ).select(
-                F.col("_metadata.file_path").alias("_fp"),
-                F.col("_metadata.row_index").alias("_ri"),
-                *[
-                    F.col(mapping.get(c, c)).alias(c)
-                    for c in dels.columns
-                ],
-            )
-            # delete sets are O(source delta) by design — broadcast so
-            # the target scan never shuffles for the probe
-            matched = scan.join(
-                F.broadcast(dels_build), dels.columns, "left_semi"
-            ).select("_fp", "_ri")
-            if small:
-                pairs = (
-                    (r["_fp"], int(r["_ri"])) for r in matched.collect()
-                )
-            else:
-                packed = matched.groupBy("_fp").applyInPandas(
-                    _to_bitmap, "_fp string, _bm binary"
-                )
-                pairs = (
-                    (r["_fp"], i)
-                    for r in packed.collect()
-                    for i in DV.deserialize_bitmap(bytes(r["_bm"]))
-                )
-            grouped: dict[str, set] = {}
-            for fp, i in pairs:
-                grouped.setdefault(fp, set()).add(i)
-            for fp, idx in grouped.items():
-                rel = os.path.relpath(
-                    unquote(urlparse(fp).path), self.path
-                )
-                if rel in new_bitmaps:
-                    new_bitmaps[rel] = sorted(set(new_bitmaps[rel]) | idx)
+                    )
                 else:
-                    new_bitmaps[rel] = sorted(idx)
-        # union with each file's existing DV (descriptors REPLACE, so
-        # the new bitmap must carry the old deletions too); a file
-        # whose merged bitmap is IDENTICAL to its live descriptor's
-        # needs no swap (re-materialization after restore recomputes
-        # untouched files too — churning their descriptors would be
-        # pure log noise)
-        for rel in list(new_bitmaps):
-            old = current_dvs.get(rel)
+                    build = keys.select(*primary_key)
+                matched = scan.join(
+                    F.broadcast(build), list(primary_key), "left_semi"
+                )
+            matched = matched.select("_rt_rel", "_rt_ri")
+            if small:
+                for r in matched.collect():
+                    found.setdefault(r[0], set()).add(int(r[1]))
+            else:
+                def _to_bitmap(pdf):
+                    import pandas as pd
+
+                    return pd.DataFrame(
+                        {
+                            "_rt_rel": [pdf["_rt_rel"].iloc[0]],
+                            "_bm": [
+                                DV.serialize_bitmap(
+                                    int(i) for i in pdf["_rt_ri"].to_numpy()
+                                )
+                            ],
+                        }
+                    )
+
+                packed = matched.groupBy("_rt_rel").applyInPandas(
+                    _to_bitmap, "_rt_rel string, _bm binary"
+                )
+                for r in packed.collect():
+                    found.setdefault(r[0], set()).update(
+                        DV.deserialize_bitmap(bytes(r[1]))
+                    )
+        bitmaps: dict[str, list[int]] = {}
+        for rel, idx in found.items():
+            old = prev.deletion_vectors.get(rel)
             if old is not None:
-                old_idx = DV.read_dv(self.path, old)
-                merged = sorted(set(new_bitmaps[rel]) | set(old_idx))
-                if merged == old_idx:
-                    del new_bitmaps[rel]
-                else:
-                    new_bitmaps[rel] = merged
-        dv_adds = DV.write_dv_file(self.path, new_bitmaps)
-        covered_after = sorted(
-            set(covered_after) | {ds["path"] for ds in pending}
-        )
-        return dv_adds, current_dvs, covered_after, not deferred
+                idx = idx | set(DV.read_dv(self.path, old))
+                if len(idx) == old["cardinality"]:
+                    continue  # every match was already deleted
+            bitmaps[rel] = sorted(idx)
+        return DV.write_dv_file(self.path, bitmaps)
+
+    def _driver_match(
+        self, keys, units: list[str], mapping: dict
+    ) -> dict[str, set]:
+        """The driver tier of ``_mark_deleted``: row positions, per
+        file of ``units``, whose key tuple is in the Arrow table
+        ``keys``. Each parquet file is read whole (key columns only),
+        which is exactly the ``_metadata.row_index`` position
+        semantics."""
+        import numpy as np
+        import pandas as pd
+        import pyarrow.parquet as pq
+
+        names = list(keys.column_names)
+        # SQL join equality: NULL keys never match — drop them so the
+        # pandas match can't pair NaN with NaN
+        kmi = pd.MultiIndex.from_frame(keys.to_pandas().dropna())
+        phys = [mapping.get(c, c) for c in names]
+        out: dict[str, set] = {}
+        for u in units:
+            for dirpath, _d, files in os.walk(os.path.join(self._data_dir, u)):
+                for fn in sorted(files):
+                    if not fn.endswith(".parquet"):
+                        continue
+                    fpath = os.path.join(dirpath, fn)
+                    fdf = pq.read_table(fpath, columns=phys).to_pandas()
+                    fdf.columns = names
+                    hit = np.nonzero(pd.MultiIndex.from_frame(fdf).isin(kmi))[0]
+                    if len(hit):
+                        out[os.path.relpath(fpath, self.path)] = set(
+                            hit.tolist()
+                        )
+        return out
 
     # ---------- write path ----------
 
@@ -1448,7 +1285,6 @@ class ManagedTable:
                 timestamp_ms=int(time.time() * 1000),
                 properties=properties or (prev.properties if prev else {}),
                 stats=stats,
-                delete_sets=[],
                 column_mapping=mapping,
                 txns=dict([txn]) if txn else {},
                 ingest_sidecars=[ingest_sidecar] if ingest_sidecar else [],
@@ -1483,9 +1319,6 @@ class ManagedTable:
                 timestamp_ms=int(time.time() * 1000),
                 properties=properties or prev.properties,
                 stats={**prev.stats, unit: unit_stats},
-                delete_sets=self._carry_delete_sets(
-                    prev.delete_sets, prev.data_units
-                ),
                 column_mapping=mapping,
                 txns=dict([txn]) if txn else {},
                 ingest_sidecars=[ingest_sidecar] if ingest_sidecar else [],
@@ -1646,7 +1479,6 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties=prev.properties,
             stats=stats,
-            delete_sets=self._carry_delete_sets(prev.delete_sets, untouched),
             column_mapping=dict(prev.column_mapping),
         )
         self._publish(commit, prev)
@@ -1774,7 +1606,6 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties=prev.properties,
             stats=prev.stats,
-            delete_sets=list(prev.delete_sets),
             column_mapping=mapping,
         )
         self._publish(commit, prev)
@@ -1812,7 +1643,6 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties=prev.properties,
             stats=prev.stats,
-            delete_sets=list(prev.delete_sets),
             column_mapping=dict(prev.column_mapping),
         )
         self._publish(commit, prev)
@@ -1885,7 +1715,6 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties=prev.properties,
             stats=prev.stats,
-            delete_sets=list(prev.delete_sets),
             column_mapping=dict(prev.column_mapping),
         )
         self._publish(commit, prev)
@@ -1939,7 +1768,6 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties=prev.properties,
             stats=prev.stats,
-            delete_sets=list(prev.delete_sets),
             column_mapping={
                 k: v for k, v in prev.column_mapping.items() if k != name
             },
@@ -1953,7 +1781,7 @@ class ManagedTable:
         data is rewritten; the committed schema carries the new logical
         name and ``column_mapping`` remembers the physical parquet name
         the bytes still live under. Primary-key and partition columns
-        refuse to rename (their names are load-bearing in delete sets
+        refuse to rename (their names are load-bearing in the merge key
         and hive directory layout), as do columns referenced by CHECK
         constraints (Delta's own restriction)."""
         import re
@@ -1997,15 +1825,10 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties=prev.properties,
             stats=prev.stats,
-            delete_sets=list(prev.delete_sets),
             column_mapping=mapping,
         )
         self._publish(commit, prev)
         return commit
-
-    @property
-    def _deletes_dir(self) -> str:
-        return os.path.join(self.path, "_deletes")
 
     def _write_empty_change_set(
         self, prev: Commit, version: int, out_dir: str | None = None
@@ -2055,19 +1878,23 @@ class ManagedTable:
         )
 
     @staticmethod
-    def _row_meta_cols(df: DataFrame) -> DataFrame:
-        """Attach the two file-identity helper columns row tracking
-        needs (``_rt_rel``: table-relative file path, ``_rt_ri``: row
-        position in the file) — must run on the RAW scan relation
-        (the ``_metadata`` pseudo-column dies at the first select)."""
+    def _row_meta_cols(df: DataFrame, decode: bool = False) -> DataFrame:
+        """Attach the two file-identity helper columns row tracking and
+        deletion vectors need (``_rt_rel``: table-relative file path,
+        ``_rt_ri``: row position in the file) — must run on the RAW
+        scan relation (the ``_metadata`` pseudo-column dies at the
+        first select). ``_metadata.file_path`` is URI-encoded (a space
+        in a hive partition value reads ``%20``); ``decode=True``
+        (partitioned layouts, the only ones whose paths can need it)
+        turns it back into the filesystem path the commit keys by."""
+        rel = F.substring_index(
+            F.col("_metadata.file_path"), "/" + _DATA + "/", -1
+        )
+        if decode:
+            # '+' pre-escaped: url_decode is form-decoding (+ → space)
+            rel = F.url_decode(F.replace(rel, F.lit("+"), F.lit("%2B")))
         return df.withColumn(
-            "_rt_rel",
-            F.concat(
-                F.lit(_DATA + "/"),
-                F.substring_index(
-                    F.col("_metadata.file_path"), "/" + _DATA + "/", -1
-                ),
-            ),
+            "_rt_rel", F.concat(F.lit(_DATA + "/"), rel)
         ).withColumn("_rt_ri", F.col("_metadata.row_index"))
 
     def _scan_units(
@@ -2112,7 +1939,7 @@ class ManagedTable:
                 _with_mat(self._physical_schema(schema, mapping))
             ).parquet(*paths)
             if with_row_meta:
-                df = self._row_meta_cols(df)
+                df = self._row_meta_cols(df, decode=bool(pset))
             if mapping:
                 df = df.select(
                     *(
@@ -2135,7 +1962,7 @@ class ManagedTable:
             .parquet(*paths)
         )
         if with_row_meta:
-            df = self._row_meta_cols(df)
+            df = self._row_meta_cols(df, decode=bool(pset))
         cols = []
         for f in schema.fields:
             if f.name in pset:
@@ -2201,14 +2028,15 @@ class ManagedTable:
     ) -> DataFrame:
         """One multi-path scan over a subset of a commit's data units,
         under the commit's authoritative schema — with the commit's
-        merge-on-read delete sets applied.
+        deletion vectors applied.
 
-        Units sharing the same set of applicable delete files scan
-        together; each group anti-joins its deleted-PK set once. With
-        no delete sets (the common case, and always after optimize)
-        the plan is the single FileScan it always was; with them, plan
-        size is O(#delete epochs since last optimize), bounded by
-        maintenance cadence — never O(deletes)."""
+        With no DV on any file of ``units`` (the common case, and
+        always after optimize) the plan is the single FileScan it
+        always was. Otherwise the same scan also yields each row's
+        (file, position) and one broadcast left-anti join drops the
+        deleted positions, built driver-side from the DV files as an
+        Arrow ``LocalRelation`` (exact size statistics, no Python-worker
+        job): plan size stays O(1) in the number of deletes."""
         schema = T.StructType.fromJson(json.loads(commit.schema_json))
         mapping = commit.column_mapping or {}
         if with_row_ids and not _prop_on(
@@ -2221,40 +2049,38 @@ class ManagedTable:
                 "Row tracking is not enabled on this table; create it "
                 "with properties={'delta.enableRowTracking': 'true'}."
             )
-
-        def scan(us: list[str]) -> DataFrame:
-            paths = [os.path.join(self._data_dir, u) for u in us]
-            df = self._scan_units(
-                paths, schema, mapping, commit.partition_by,
-                with_row_meta=with_row_ids,
+        us = set(units)
+        dvs = {
+            rel: d for rel, d in commit.deletion_vectors.items()
+            if _dv_unit(rel) in us
+        }
+        df = self._scan_units(
+            [os.path.join(self._data_dir, u) for u in units],
+            schema, mapping, commit.partition_by,
+            with_row_meta=with_row_ids or bool(dvs),
+        )
+        if dvs:
+            from component_delta_lake_writer_spark.sinks.deletion_vectors import (  # noqa: E501
+                read_dv,
             )
-            if with_row_ids:
-                df = self._attach_row_ids(df, commit)
-            return df
 
-        if not commit.delete_sets:
-            return scan(units)
-        groups: dict[tuple, list[str]] = {}
-        for u in units:
-            key = tuple(
-                ds["path"]
-                for ds in commit.delete_sets
-                if u in set(ds["units"])
+            rels: list[str] = []
+            ris: list[int] = []
+            for rel, d in dvs.items():
+                idx = read_dv(self.path, d)
+                rels.extend([rel] * len(idx))
+                ris.extend(idx)
+            deleted = local_relation(
+                self.spark, "_rt_rel string, _rt_ri long", [rels, ris]
             )
-            groups.setdefault(key, []).append(u)
-        parts = []
-        for key, us in groups.items():
-            df = scan(us)
-            if key:
-                dels = self.spark.read.parquet(
-                    *[os.path.join(self._deletes_dir, p) for p in key]
-                )
-                df = df.join(dels, list(dels.columns), "left_anti")
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            df = df.join(
+                F.broadcast(deleted), ["_rt_rel", "_rt_ri"], "left_anti"
+            )
+        if with_row_ids:
+            return self._attach_row_ids(df, commit)
+        if dvs:
+            df = df.drop("_rt_rel", "_rt_ri", _MAT_ROW_ID, _MAT_RCV)
+        return df
 
     def _attach_row_ids(self, df: DataFrame, commit: Commit) -> DataFrame:
         """``_row_id`` / ``_row_commit_version`` from the commit's
@@ -2347,11 +2173,13 @@ class ManagedTable:
             ]
         )
 
-    def _source_key_bounds(self, src: DataFrame, primary_key: list[str]) -> dict:
-        """{pk: (min, max)} over the deduped merge source — one small
-        agg job; only orderable JSON-comparable types are kept (the
-        same types unit stats record)."""
-        aggs = []
+    def _source_key_bounds(
+        self, src: DataFrame, primary_key: list[str]
+    ) -> tuple[dict, int]:
+        """({pk: (min, max)}, row count) over the deduped merge source —
+        one small agg job; only orderable JSON-comparable types are
+        kept (the same types unit stats record)."""
+        aggs = [F.count(F.lit(1)).alias("__n")]
         for pk in primary_key:
             aggs.append(F.min(pk).alias(f"__mn_{pk}"))
             aggs.append(F.max(pk).alias(f"__mx_{pk}"))
@@ -2379,7 +2207,7 @@ class ManagedTable:
             )
             if ok:
                 out[pk] = (mn, mx)
-        return out
+        return out, int(row["__n"])
 
     @staticmethod
     def _derived_partition_conjuncts(
@@ -2478,13 +2306,10 @@ class ManagedTable:
             units = prune_units_bloom(
                 self._bloom_dir, stats_view, units, conjuncts
             )
-        if commit.delete_sets:
-            # merge-on-read deletes pending: unit-level pruning still
-            # applies, but the scan must route through the delete-set
-            # anti-joins (file-level path lists can't carry them)
-            if not units:
-                empty = local_relation(self.spark, schema)
-                return empty.filter(F.expr(eff_condition))
+        if any(_dv_unit(r) in set(units) for r in commit.deletion_vectors):
+            # deletion vectors on a kept unit: unit-level pruning still
+            # applies, but the scan routes through _read_units' DV
+            # anti-join instead of a file-level path list
             return self._read_units(commit, units).filter(
                 F.expr(eff_condition)
             )
@@ -2531,14 +2356,13 @@ class ManagedTable:
         source keys; src/component.py:249-260 last-write-wins).
 
         ``strategy='merge-on-read'`` is the deletion-vector play: the
-        deduped source's PK tuples become an equality-delete set
-        scoped to the prior units they can overlap (stats bounds), and
-        the source itself is APPENDED as a new unit — no target read,
-        no target rewrite, commit cost O(source) instead of
-        O(rewritten units). Readers anti-join the delete set until
-        optimize()/a later rewrite materializes it. Requires
-        ``update_condition is None`` (the guard needs target rows,
-        which MOR never reads).
+        deduped source is APPENDED as a new unit and the prior rows
+        under its keys are marked in Delta deletion vectors — only in
+        units the new unit's PK stats can overlap, and without
+        rewriting any of them (``_mark_deleted``). Readers drop the
+        marked positions until optimize() or a later rewrite
+        materializes them. Requires ``update_condition is None`` (the
+        guard needs target values, which the key match never reads).
 
         ``order_by`` makes the in-batch dedup DETERMINISTIC
         last-write-wins: among duplicate source keys the row with the
@@ -2585,21 +2409,18 @@ class ManagedTable:
             merge_upsert_conditional,
         )
         from component_delta_lake_writer_spark.sinks.unit_stats import (
+            key_bounds_from_stats,
             unit_overlaps_key_bounds,
         )
 
-        if strategy == "merge-on-read":
-            if update_condition is not None:
-                raise UserException(
-                    "merge-on-read upsert cannot evaluate an update "
-                    "condition (it never reads the target); use "
-                    "strategy='copy-on-write'."
-                )
-            return self._upsert_mor(
-                source, primary_key, compression, max_records_per_file,
-                properties, order_by, schema_mode, txn=txn,
+        mor = strategy == "merge-on-read"
+        if mor and update_condition is not None:
+            raise UserException(
+                "merge-on-read upsert cannot evaluate an update "
+                "condition (it never reads the target); use "
+                "strategy='copy-on-write'."
             )
-        if strategy != "copy-on-write":
+        if strategy not in ("copy-on-write", "merge-on-read"):
             raise UserException(
                 f"Unknown upsert strategy {strategy!r}; expected "
                 "copy-on-write or merge-on-read."
@@ -2651,6 +2472,7 @@ class ManagedTable:
             union_schema = self._merge_schemas(table_schema, source.schema)
         untouched: list[str] = []
         touched = list(prev.data_units)
+        mapping = prev.column_mapping
         src = self._align_to_schema(
             dedup_source(source, primary_key, order_by), union_schema
         )
@@ -2664,14 +2486,15 @@ class ManagedTable:
             # source row verbatim; conditional merges may keep the
             # target row, which is also already-validated)
             self._check_constraints(src, constraints)
-        persisted = False
-        if len(prev.data_units) > 1 and prev.stats:
-            # Only worth an extra bounds job when there is more than
-            # one unit to choose between. Persist the deduped source
-            # so the bounds agg and the merge don't recompute it.
+        # Persist the deduped source when it is read twice: by the
+        # bounds agg and the merge, or by the append and the key match.
+        persisted = mor or (len(prev.data_units) > 1 and bool(prev.stats))
+        if persisted:
             src = src.persist()
-            persisted = True
-            bounds = self._source_key_bounds(src, primary_key)
+        if persisted and not mor:
+            # Only worth an extra bounds job when there is more than
+            # one unit to choose between.
+            bounds, _n = self._source_key_bounds(src, primary_key)
             if bounds:
                 touched, untouched = [], []
                 for u in prev.data_units:
@@ -2680,61 +2503,101 @@ class ManagedTable:
                     else:
                         untouched.append(u)
         try:
-            # Row tracking through the COW merge (unconditional shape
-            # only — the conditional variant rebuilds rows column-wise
-            # and is documented fresh-id): carried target rows ride
-            # their materialized ids through the anti-join; source
-            # rows (inserts AND updates — MERGE replaces the matched
-            # row wholesale from the source relation) draw fresh ids.
-            tracked = update_condition is None and _prop_on(
-                prev.properties, "delta.enableRowTracking"
-            )
-            merge_schema = union_schema
-            if tracked:
-                merge_schema = T.StructType(
-                    list(union_schema.fields)
-                    + [
-                        T.StructField(_MAT_ROW_ID, T.LongType(), True),
-                        T.StructField(_MAT_RCV, T.LongType(), True),
-                    ]
+            dvs: dict = {}
+            if mor:
+                # the source lands as-is; prior rows under its keys get
+                # deletion vectors. The key bounds come from the new
+                # unit's own footer stats (zero extra jobs), and so does
+                # the key count picking _mark_deleted's tier.
+                unit = self._write_unit(
+                    self._to_physical(src, mapping),
+                    prev.partition_by,
+                    compression,
+                    max_records_per_file,
                 )
-            if touched:
-                read_t = self._read_units(
-                    prev, touched, with_row_ids=tracked
+                ustats = self._unit_stats(
+                    unit, per_file=not prev.partition_by,
+                    props=effective_props, mapping=mapping,
                 )
-                if tracked:
-                    read_t = read_t.withColumnRenamed(
-                        "_row_id", _MAT_ROW_ID
-                    ).withColumnRenamed("_row_commit_version", _MAT_RCV)
-                target_sub = self._align_to_schema(read_t, merge_schema)
-                if update_condition is not None:
-                    merged = merge_upsert_conditional(
-                        target_sub, src, primary_key, update_condition,
-                        pre_deduplicated=True,
-                    )
-                else:
-                    merged = merge_upsert(
-                        target_sub,
-                        self._align_to_schema(src, merge_schema),
-                        primary_key,
-                        pre_deduplicated=True,
+                untouched = list(prev.data_units)
+                phys_pk = [mapping.get(c, c) for c in primary_key]
+                bounds = key_bounds_from_stats(ustats, phys_pk)
+                targets = [
+                    u for u in prev.data_units
+                    if unit_overlaps_key_bounds(prev.stats.get(u), bounds)
+                ] if ustats["_rows"] else []
+
+                def _unit_keys():
+                    import pyarrow.dataset as pads
+
+                    return pads.dataset(
+                        os.path.join(self._data_dir, unit), format="parquet"
+                    ).to_table(columns=phys_pk).rename_columns(primary_key)
+
+                if targets:
+                    dvs = self._mark_deleted(
+                        prev, targets, primary_key,
+                        keys=src, n_keys=ustats["_rows"],
+                        local_keys=None if prev.partition_by else _unit_keys,
                     )
             else:
-                # every unit is disjoint from the batch → pure insert
-                merged = src.select(
-                    *[F.col(f.name) for f in union_schema.fields]
+                # Row tracking through the COW merge (unconditional
+                # shape only — the conditional variant rebuilds rows
+                # column-wise and is documented fresh-id): carried
+                # target rows ride their materialized ids through the
+                # anti-join; source rows (inserts AND updates — MERGE
+                # replaces the matched row wholesale from the source
+                # relation) draw fresh ids.
+                tracked = update_condition is None and _prop_on(
+                    prev.properties, "delta.enableRowTracking"
                 )
-            unit = self._write_unit(
-                self._to_physical(merged, prev.column_mapping),
-                prev.partition_by,
-                compression,
-                max_records_per_file,
-            )
+                merge_schema = union_schema
+                if tracked:
+                    merge_schema = T.StructType(
+                        list(union_schema.fields)
+                        + [
+                            T.StructField(_MAT_ROW_ID, T.LongType(), True),
+                            T.StructField(_MAT_RCV, T.LongType(), True),
+                        ]
+                    )
+                if touched:
+                    read_t = self._read_units(
+                        prev, touched, with_row_ids=tracked
+                    )
+                    if tracked:
+                        read_t = read_t.withColumnRenamed(
+                            "_row_id", _MAT_ROW_ID
+                        ).withColumnRenamed("_row_commit_version", _MAT_RCV)
+                    target_sub = self._align_to_schema(read_t, merge_schema)
+                    if update_condition is not None:
+                        merged = merge_upsert_conditional(
+                            target_sub, src, primary_key, update_condition,
+                            pre_deduplicated=True,
+                        )
+                    else:
+                        merged = merge_upsert(
+                            target_sub,
+                            self._align_to_schema(src, merge_schema),
+                            primary_key,
+                            pre_deduplicated=True,
+                        )
+                else:
+                    # every unit is disjoint from the batch → pure insert
+                    merged = src.select(
+                        *[F.col(f.name) for f in union_schema.fields]
+                    )
+                unit = self._write_unit(
+                    self._to_physical(merged, mapping),
+                    prev.partition_by,
+                    compression,
+                    max_records_per_file,
+                )
+                ustats = self._unit_stats(
+                    unit, per_file=not prev.partition_by,
+                    props=effective_props, mapping=mapping,
+                )
             stats = {u: prev.stats[u] for u in untouched if u in prev.stats}
-            stats[unit] = self._unit_stats(
-                unit, per_file=not prev.partition_by,
-                props=effective_props, mapping=prev.column_mapping,
-            )
+            stats[unit] = ustats
             commit = Commit(
                 version=prev.version + 1,
                 action="upsert",
@@ -2743,12 +2606,10 @@ class ManagedTable:
                 partition_by=prev.partition_by,
                 primary_key=primary_key,
                 timestamp_ms=int(time.time() * 1000),
-                properties=properties if properties is not None else prev.properties,
+                properties=effective_props,
                 stats=stats,
-                delete_sets=self._carry_delete_sets(
-                    prev.delete_sets, untouched
-                ),
-                column_mapping=dict(prev.column_mapping),
+                deletion_vectors=dvs,
+                column_mapping=dict(mapping),
                 txns=dict([txn]) if txn else {},
             )
             # CDF: persist this commit's change set (inserts + the
@@ -2793,175 +2654,6 @@ class ManagedTable:
         finally:
             if persisted:
                 src.unpersist()
-        return commit
-
-    def _upsert_mor(
-        self,
-        source: DataFrame,
-        primary_key: list[str],
-        compression: str,
-        max_records_per_file: int | None,
-        properties: dict | None,
-        order_by: list[str] | None,
-        schema_mode: str | None,
-        txn: tuple[str, int] | None = None,
-    ) -> Commit:
-        """Merge-on-read upsert: equality-delete the source's PK tuples
-        out of the prior snapshot and append the deduped source as a
-        new unit. The write job never touches target data — one PK
-        projection of the source (the delete file) plus one append.
-        Deleting PKs the target never held is a harmless no-op, so no
-        matched/not-matched probe is needed either.
-
-        The delete set is scoped to prior units whose recorded PK
-        min/max overlap the source's key bounds (one small agg over
-        the persisted source) — read-side anti-join cost then tracks
-        the units a batch can actually hit, and a batch disjoint from
-        every unit degenerates to a pure append with no delete file at
-        all."""
-        from component_delta_lake_writer_spark.operators.merge import dedup_source
-        from component_delta_lake_writer_spark.sinks.unit_stats import (
-            collect_unit_stats,
-            unit_overlaps_key_bounds,
-        )
-
-        if not self.exists():
-            return self.write(
-                dedup_source(source, primary_key, order_by),
-                mode="overwrite",
-                primary_key=primary_key, compression=compression,
-                max_records_per_file=max_records_per_file,
-                properties=properties, txn=txn,
-            )
-        prev = self.latest_commit()
-        source = self._apply_column_defaults(source, prev)
-        source = self._apply_generated(source, self._generation_exprs(prev))
-        for _idcol in self._identity_specs(prev):
-            if _idcol not in source.columns:
-                # MERGE semantics are GENERATED BY DEFAULT: matched rows
-                # carry their existing identity values, so the source
-                # must provide the column explicitly.
-                raise UserException(
-                    f"Upsert source must provide identity column "
-                    f"{_idcol!r} (merge keeps existing values)."
-                )
-        table_schema = T.StructType.fromJson(json.loads(prev.schema_json))
-        union_schema = table_schema
-        if not self._schema_compatible(table_schema, source.schema):
-            if schema_mode != "merge":
-                raise SchemaMismatchError(
-                    "Upsert source schema does not match table schema; "
-                    "pass schema_mode='merge' to evolve (Delta merge "
-                    "autoMerge)."
-                )
-            tf = {f.name: f.dataType for f in table_schema.fields}
-            conflicts = [
-                f"{f.name}: table={tf[f.name].simpleString()} "
-                f"incoming={f.dataType.simpleString()}"
-                for f in source.schema.fields
-                if f.name in tf and tf[f.name] != f.dataType
-            ]
-            if conflicts:
-                raise SchemaMismatchError(
-                    "schema_mode='merge' cannot change column types: "
-                    + "; ".join(conflicts)
-                )
-            union_schema = self._merge_schemas(table_schema, source.schema)
-        src = self._align_to_schema(
-            dedup_source(source, primary_key, order_by), union_schema
-        ).persist()
-        effective_props = (
-            properties if properties is not None else prev.properties
-        )
-        constraints = effective_props.get("constraints", {})
-        try:
-            if constraints:
-                self._check_constraints(src, constraints)
-            # scope the equality delete to units the batch can overlap.
-            # The source's key bounds come FROM THE DELETE FILE'S OWN
-            # PARQUET FOOTERS (driver-side metadata read) — writing the
-            # PK projection was already required, so bounds cost zero
-            # extra Spark jobs (the agg this replaces was ~0.3 s of
-            # fixed dispatch, the bulk of small-batch MOR latency).
-            # Footer min/max may be prefix-truncated for long strings,
-            # but truncation only WIDENS the range — pruning stays
-            # conservative. A batch provably disjoint from every unit
-            # degenerates to a pure append: the delete file is removed
-            # and no read-side anti-join ever happens.
-            delete_sets = self._carry_delete_sets(
-                prev.delete_sets, prev.data_units
-            )
-            name = uuid.uuid4().hex
-            dest = os.path.join(self._deletes_dir, name)
-            src.select(*primary_key).write.mode("overwrite").option(
-                "compression", compression
-            ).parquet(dest)
-            dstats = collect_unit_stats(dest)
-            overlapping = list(prev.data_units)
-            if prev.stats and dstats["_rows"] > 0:
-                from component_delta_lake_writer_spark.sinks.unit_stats import (
-                    key_bounds_from_stats,
-                )
-
-                bounds = key_bounds_from_stats(dstats, primary_key)
-                if bounds:
-                    overlapping = [
-                        u
-                        for u in prev.data_units
-                        if unit_overlaps_key_bounds(prev.stats.get(u), bounds)
-                    ]
-            if dstats["_rows"] > 0 and overlapping:
-                delete_sets.append({"path": name, "units": overlapping})
-            else:
-                shutil.rmtree(dest, ignore_errors=True)
-            unit = self._write_unit(
-                self._to_physical(src, prev.column_mapping),
-                prev.partition_by,
-                compression,
-                max_records_per_file,
-            )
-            stats = {u: prev.stats[u] for u in prev.data_units if u in prev.stats}
-            stats[unit] = self._unit_stats(
-                unit, per_file=not prev.partition_by,
-                props=effective_props, mapping=prev.column_mapping,
-            )
-            commit = Commit(
-                version=prev.version + 1,
-                action="upsert",
-                data_units=list(prev.data_units) + [unit],
-                schema_json=json.dumps(union_schema.jsonValue()),
-                partition_by=prev.partition_by,
-                primary_key=primary_key,
-                timestamp_ms=int(time.time() * 1000),
-                properties=effective_props,
-                stats=stats,
-                delete_sets=delete_sets,
-                column_mapping=dict(prev.column_mapping),
-                txns=dict([txn]) if txn else {},
-            )
-            stage = None
-            if commit.properties.get("enableChangeDataFeed"):
-                stage = os.path.join(
-                    self._changes_dir, f"stage-{uuid.uuid4().hex}"
-                )
-                self._write_change_set(
-                    self._align_to_schema(
-                        self._read_units(prev, prev.data_units), union_schema
-                    ),
-                    src, primary_key, None, commit.version,
-                    pre_images=bool(
-                        commit.properties.get("changeDataFeedPreImages")
-                    ),
-                    out_dir=stage,
-                )
-            try:
-                self._publish(commit, prev, cdc_stage=stage)
-            except BaseException:
-                if stage:
-                    shutil.rmtree(stage, ignore_errors=True)
-                raise
-        finally:
-            src.unpersist()
         return commit
 
     def _write_change_set(
@@ -3084,7 +2776,6 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties={**prev.properties, "constraints": cons},
             stats=prev.stats,
-            delete_sets=list(prev.delete_sets),
             column_mapping=dict(prev.column_mapping),
         )
         self._publish(commit, prev)
@@ -3109,7 +2800,6 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties={**prev.properties, "constraints": cons},
             stats=prev.stats,
-            delete_sets=list(prev.delete_sets),
             column_mapping=dict(prev.column_mapping),
         )
         self._publish(commit, prev)
@@ -3127,19 +2817,6 @@ class ManagedTable:
                     f"CHECK constraint {name!r} ({expr}) violated, e.g. "
                     f"by row {bad[0].asDict()}"
                 )
-
-    @staticmethod
-    def _carry_delete_sets(sets: list, surviving: list[str]) -> list:
-        """Restrict merge-on-read delete sets to units still in the
-        snapshot; entries whose every unit was rewritten drop out (the
-        rewrite materialized their effect)."""
-        sv = set(surviving)
-        out = []
-        for ds in sets:
-            us = [u for u in ds["units"] if u in sv]
-            if us:
-                out.append({"path": ds["path"], "units": us})
-        return out
 
     # ---------- DML (Delta DELETE / UPDATE) ----------
 
@@ -3218,7 +2895,6 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties=prev.properties,
             stats=stats,
-            delete_sets=self._carry_delete_sets(prev.delete_sets, untouched),
             column_mapping=dict(prev.column_mapping),
         )
         stage = None
@@ -3286,14 +2962,15 @@ class ManagedTable:
         units — stats-pruned, so a 1000-unit table whose condition
         hits one key range rewrites one unit. Read-optimal.
 
-        ``strategy='merge-on-read'`` writes an Iceberg-style EQUALITY
-        DELETE file instead (the deleted PK tuples) and rewrites
-        NOTHING — O(matched keys) commit cost regardless of unit size,
-        the right trade for frequent small deletes against huge units.
-        Readers anti-join the delete set until optimize() materializes
-        it away. Requires a primary key."""
+        ``strategy='merge-on-read'`` marks the matched rows in Delta
+        deletion vectors instead and rewrites NOTHING — commit cost is
+        one scan of the touched units plus O(matched rows) of bitmap,
+        regardless of unit size: the right trade for frequent small
+        deletes against huge units. Readers drop the marked positions
+        until optimize() materializes them away. Needs no primary
+        key."""
         if strategy == "merge-on-read":
-            return self._delete_mor(condition, compression)
+            return self._delete_mor(condition)
         if strategy != "copy-on-write":
             raise UserException(
                 f"Unknown delete strategy {strategy!r}; expected "
@@ -3315,13 +2992,12 @@ class ManagedTable:
         txn: tuple[str, int] | None = None,
     ) -> Commit:
         """``DELETE ... WHERE pk IN (<key set>)`` — the CDC-apply shape
-        (replication, GDPR erasure lists): the key tuples become a
-        merge-on-read equality-delete set scoped to the units their
-        values can overlap — O(keys) commit cost, nothing rewritten.
-        When the table has CDF enabled, the deleted images land as
-        'delete' change rows so downstream consumers keep attributing."""
+        (replication, GDPR erasure lists): the rows under the key
+        tuples are marked in deletion vectors, only in units their
+        values can overlap — nothing rewritten. When the table has CDF
+        enabled, the deleted images land as 'delete' change rows so
+        downstream consumers keep attributing."""
         from component_delta_lake_writer_spark.sinks.unit_stats import (
-            collect_unit_stats,
             unit_overlaps_key_bounds,
         )
 
@@ -3335,27 +3011,26 @@ class ManagedTable:
             return prev  # already applied — idempotent no-op
         if not prev.primary_key:
             raise UserException("delete_keys requires a primary key.")
-        key_set = keys.select(*prev.primary_key).distinct().persist()
+        pk = list(prev.primary_key)
+        key_set = keys.select(*pk).distinct().persist()
         try:
-            bounds = self._source_key_bounds(key_set, prev.primary_key)
+            # one agg job: the key bounds that scope the match, and the
+            # key count that picks _mark_deleted's tier
+            bounds, n_keys = self._source_key_bounds(key_set, pk)
             touched = [
                 u
                 for u in prev.data_units
-                if not bounds
-                or unit_overlaps_key_bounds(prev.stats.get(u), bounds)
+                if n_keys
+                and unit_overlaps_key_bounds(
+                    prev.stats.get(u),
+                    {(prev.column_mapping or {}).get(c, c): b
+                     for c, b in bounds.items()},
+                )
             ]
-            delete_sets = self._carry_delete_sets(
-                prev.delete_sets, prev.data_units
-            )
-            name = uuid.uuid4().hex
-            dest = os.path.join(self._deletes_dir, name)
-            key_set.write.mode("overwrite").option(
-                "compression", compression
-            ).parquet(dest)
-            if touched and collect_unit_stats(dest)["_rows"] > 0:
-                delete_sets.append({"path": name, "units": list(touched)})
-            else:
-                shutil.rmtree(dest, ignore_errors=True)
+            dvs = self._mark_deleted(
+                prev, touched, pk, keys=key_set, n_keys=n_keys,
+                local_keys=key_set.toArrow,
+            ) if touched else {}
             commit = Commit(
                 version=prev.version + 1,
                 action="delete",
@@ -3368,7 +3043,7 @@ class ManagedTable:
                     properties if properties is not None else prev.properties
                 ),
                 stats=prev.stats,
-                delete_sets=delete_sets,
+                deletion_vectors=dvs,
                 column_mapping=dict(prev.column_mapping),
                 txns=dict([txn]) if txn else {},
             )
@@ -3384,9 +3059,7 @@ class ManagedTable:
                 )
                 try:
                     self._read_units(prev, touched).join(
-                        F.broadcast(key_set),
-                        list(prev.primary_key),
-                        "left_semi",
+                        F.broadcast(key_set), pk, "left_semi",
                     ).withColumn(
                         "_change_type", F.lit("delete")
                     ).write.mode("overwrite").parquet(stage)
@@ -3412,42 +3085,25 @@ class ManagedTable:
             key_set.unpersist()
         return commit
 
-    def _delete_mor(self, condition: str, compression: str) -> Commit:
+    def _delete_mor(self, condition: str) -> Commit:
         from component_delta_lake_writer_spark.sinks.unit_stats import (
-            collect_unit_stats,
             prune_units,
         )
 
         prev = self.latest_commit()
         if prev is None:
             raise UserException(f"No table at {self.path}")
-        if not prev.primary_key:
-            raise UserException(
-                "merge-on-read delete requires a primary key (equality "
-                "deletes are keyed); use strategy='copy-on-write'."
-            )
         touched = prune_units(
             self._logical_stats(prev.stats, prev.column_mapping),
             prev.data_units, condition,
         )
-        delete_sets = self._carry_delete_sets(
-            prev.delete_sets, prev.data_units
+        rows = sum(
+            float((prev.stats.get(u) or {}).get("_rows", float("inf")))
+            for u in touched
         )
-        if touched:
-            keys = (
-                self._read_units(prev, touched)
-                .filter(F.coalesce(F.expr(condition), F.lit(False)))
-                .select(*prev.primary_key)
-            )
-            name = uuid.uuid4().hex
-            dest = os.path.join(self._deletes_dir, name)
-            keys.write.mode("overwrite").option(
-                "compression", compression
-            ).parquet(dest)
-            if collect_unit_stats(dest)["_rows"] > 0:
-                delete_sets.append({"path": name, "units": list(touched)})
-            else:
-                shutil.rmtree(dest, ignore_errors=True)
+        dvs = self._mark_deleted(
+            prev, touched, n_keys=rows, condition=condition
+        ) if touched else {}
         commit = Commit(
             version=prev.version + 1,
             action="delete",
@@ -3458,7 +3114,7 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties=prev.properties,
             stats=prev.stats,
-            delete_sets=delete_sets,
+            deletion_vectors=dvs,
             column_mapping=dict(prev.column_mapping),
         )
         # same CDF contract as the copy-on-write DELETE: the removed
@@ -3686,7 +3342,6 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties=prev.properties,
             stats=stats,
-            delete_sets=self._carry_delete_sets(prev.delete_sets, untouched),
             column_mapping=dict(prev.column_mapping),
         )
         self._publish(commit, prev)
@@ -3835,7 +3490,7 @@ class ManagedTable:
             touched = list(prev.data_units)
             untouched: list[str] = []
             if delete_scope is not None and len(prev.data_units) > 1:
-                bounds = self._source_key_bounds(src, primary_key)
+                bounds, _n = self._source_key_bounds(src, primary_key)
                 scope_units = set(
                     prune_units(
                         self._logical_stats(prev.stats, prev.column_mapping),
@@ -3890,9 +3545,6 @@ class ManagedTable:
                 timestamp_ms=int(time.time() * 1000),
                 properties=prev.properties,
                 stats=stats,
-                delete_sets=self._carry_delete_sets(
-                    prev.delete_sets, untouched
-                ),
                 column_mapping=dict(prev.column_mapping),
             )
             self._publish(commit, prev)
@@ -4110,7 +3762,7 @@ class ManagedTable:
         ``where`` scopes the compaction (Delta's ``OPTIMIZE t WHERE
         …``): only units whose stats ranges can satisfy the predicate
         are rewritten — WHOLE units, never row filtering — everything
-        else carries by reference with its delete sets intact. The
+        else carries by reference with its deletion vectors intact. The
         hot-partition maintenance play: compact today's churn without
         touching years of cold data.
 
@@ -4223,9 +3875,6 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties=prev.properties,
             stats=stats,
-            delete_sets=self._carry_delete_sets(
-                prev.delete_sets, untouched
-            ),
             column_mapping=(
                 dict(prev.column_mapping) if untouched else {}
             ),
@@ -4286,19 +3935,15 @@ class ManagedTable:
                 f"Cannot restore to version {version}: data units "
                 f"{missing} were vacuumed."
             )
-        # delete-set files are part of the snapshot too: restoring a
-        # MOR-era version whose equality-delete files were vacuumed
-        # would publish a snapshot whose every read crashes later —
-        # the loud failure belongs HERE, same as the units check
-        missing_ds = [
-            ds["path"]
-            for ds in old.delete_sets
-            if not os.path.isdir(os.path.join(self._deletes_dir, ds["path"]))
-        ]
-        if missing_ds:
+        # deletion-vector files are part of the snapshot too:
+        # restoring a version whose DV files were vacuumed would
+        # publish a snapshot whose every read crashes later — the loud
+        # failure belongs HERE, same as the units check
+        missing_dv = self._missing_dv_files(old)
+        if missing_dv:
             raise UserException(
-                f"Cannot restore to version {version}: merge-on-read "
-                f"delete sets {missing_ds} were vacuumed."
+                f"Cannot restore to version {version}: deletion-vector "
+                f"files {missing_dv} were vacuumed."
             )
         props = {**old.properties, "restored_from_version": version}
         # Protocol features never downgrade: restoring to a version
@@ -4330,7 +3975,7 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties=props,
             stats={u: s for u, s in old.stats.items() if u in old.data_units},
-            delete_sets=list(old.delete_sets),
+            deletion_vectors=dict(old.deletion_vectors),
             column_mapping=dict(old.column_mapping),
             # clustering is part of the restored snapshot (the
             # restored units' physical layout), not of the pre-restore
@@ -4339,6 +3984,21 @@ class ManagedTable:
         )
         self._publish(commit, prev)
         return commit
+
+    def _missing_dv_files(self, c: Commit) -> list[str]:
+        from component_delta_lake_writer_spark.sinks.deletion_vectors import (  # noqa: E501
+            dv_relative_path,
+        )
+
+        return sorted(
+            {
+                dv_relative_path(d)
+                for d in c.deletion_vectors.values()
+                if not os.path.exists(
+                    os.path.join(self.path, dv_relative_path(d))
+                )
+            }
+        )
 
     def vacuum(
         self, retention_hours: float = 0.0, dry_run: bool = False
@@ -4360,15 +4020,24 @@ class ManagedTable:
             return 0
         now_ms = int(time.time() * 1000)
         cutoff_ms = now_ms - int(retention_hours * 3600_000)
+        from component_delta_lake_writer_spark.sinks.deletion_vectors import (  # noqa: E501
+            dv_relative_path,
+        )
+
         live = set(prev.data_units)
-        live_deletes = {ds["path"] for ds in prev.delete_sets}
+        live_dvs = {dv_relative_path(d) for d in prev.deletion_vectors.values()}
         live_versions = {prev.version}
         ever_referenced: set = set()
         for c in self.history():
             ever_referenced.update(c.data_units)
+            ever_referenced.update(
+                dv_relative_path(d) for d in c.deletion_vectors.values()
+            )
             if c.timestamp_ms >= cutoff_ms:
                 live.update(c.data_units)
-                live_deletes.update(ds["path"] for ds in c.delete_sets)
+                live_dvs.update(
+                    dv_relative_path(d) for d in c.deletion_vectors.values()
+                )
                 live_versions.add(c.version)
         # a unit referenced by NO commit at all may be a CONCURRENT
         # writer's just-written, not-yet-published data: reclaiming it
@@ -4377,13 +4046,11 @@ class ManagedTable:
         # same here — orphans younger than the grace window survive.
         orphan_grace_ms = 20 * 60 * 1000
 
-        def _orphan_in_flight(unit: str) -> bool:
-            if unit in ever_referenced:
+        def _orphan_in_flight(name: str, root: str = self._data_dir) -> bool:
+            if name in ever_referenced:
                 return False
             try:
-                mt = os.path.getmtime(
-                    os.path.join(self._data_dir, unit)
-                ) * 1000
+                mt = os.path.getmtime(os.path.join(root, name)) * 1000
             except OSError:
                 return True  # racing with its writer — leave it alone
             return mt > now_ms - orphan_grace_ms
@@ -4403,15 +4070,6 @@ class ManagedTable:
                     if not dry_run:
                         shutil.rmtree(
                             os.path.join(self._bloom_dir, unit),
-                            ignore_errors=True,
-                        )
-                    removed += 1
-        if os.path.isdir(self._deletes_dir):
-            for d in os.listdir(self._deletes_dir):
-                if d not in live_deletes:
-                    if not dry_run:
-                        shutil.rmtree(
-                            os.path.join(self._deletes_dir, d),
                             ignore_errors=True,
                         )
                     removed += 1
@@ -4472,89 +4130,24 @@ class ManagedTable:
                             pass
                     removed += 1
         # deletion-vector files (deletion_vector_*.bin at the table
-        # root) follow mirror-action liveness: referenced by any
-        # add/remove action of a retained version, or by the current
-        # live replay (live adds can be older than the window) → kept;
-        # every DV swap / optimize otherwise orphans its predecessor
-        # forever. Fresh unreferenced files get the same in-flight
-        # grace as data units (written before their log entry lands).
-        log_dir = os.path.join(self.path, "_delta_log")
-        if os.path.isdir(log_dir):
-            from component_delta_lake_writer_spark.sinks.delta_log import (
-                _log_versions,
-                _read_version_actions,
-                live_dv_descriptors,
-            )
-            from component_delta_lake_writer_spark.sinks.deletion_vectors import (  # noqa: E501
-                dv_relative_path,
-            )
-
-            # A DV file is live iff some RETAINED SNAPSHOT references
-            # it: (a) the snapshot AT the oldest retained version
-            # (whose live adds may carry descriptors introduced long
-            # before the window — per-version add deltas alone would
-            # reclaim them and break the promised in-window time
-            # travel), (b) any add action within the window, (c) the
-            # head snapshot (the loop's final state). Remove-only
-            # references never pin a file — reconciliation does not
-            # open it.
-            dv_live: set = set()
-            min_live = min(live_versions) if live_versions else 0
-
-            def _ref(d) -> None:
+        # root) follow their commits' liveness, like data units: kept
+        # while any retained commit references one. Every DV swap and
+        # rewrite otherwise orphans its predecessor forever. A file no
+        # commit ever referenced gets the same in-flight grace (a
+        # writer writes it before its version claim).
+        for fn in os.listdir(self.path):
+            if not (
+                fn.startswith("deletion_vector_") and fn.endswith(".bin")
+            ) or fn in live_dvs:
+                continue
+            if _orphan_in_flight(fn, self.path):
+                continue
+            if not dry_run:
                 try:
-                    dv_live.add(dv_relative_path(d))
-                except (ValueError, KeyError):
-                    pass
-
-            live_map: dict = {}
-            for v in _log_versions(log_dir):
-                for a in _read_version_actions(log_dir, v):
-                    if "add" in a:
-                        d = a["add"].get("deletionVector")
-                        live_map[a["add"]["path"]] = d
-                        if v >= min_live and d is not None:
-                            _ref(d)
-                    elif "remove" in a:
-                        live_map.pop(a["remove"]["path"], None)
-                if v == min_live:
-                    for d in live_map.values():
-                        if d is not None:
-                            _ref(d)
-            for d in live_map.values():  # head snapshot
-                if d is not None:
-                    _ref(d)
-            # head again via CHECKPOINT-AWARE replay: this engine
-            # never truncates JSON entries, but an external cleanup
-            # (delta-rs metadata cleanup past a checkpoint) can —
-            # then the raw loop above misses adds that only the
-            # checkpoint carries, and reclaiming their DV files would
-            # break every head read. Mid-window snapshots of a
-            # truncated history are unreconstructable either way.
-            for d in live_dv_descriptors(self.path).values():
-                _ref(d)
-            for fn in os.listdir(self.path):
-                if not (
-                    fn.startswith("deletion_vector_")
-                    and fn.endswith(".bin")
-                ):
-                    continue
-                if fn in dv_live:
-                    continue
-                try:
-                    mt = os.path.getmtime(
-                        os.path.join(self.path, fn)
-                    ) * 1000
+                    os.unlink(os.path.join(self.path, fn))
                 except OSError:
-                    continue  # racing with its writer
-                if mt > now_ms - orphan_grace_ms:
-                    continue
-                if not dry_run:
-                    try:
-                        os.unlink(os.path.join(self.path, fn))
-                    except OSError:
-                        pass
-                removed += 1
+                    pass
+            removed += 1
         return removed
 
     def cleanup_metadata(
@@ -4581,12 +4174,13 @@ class ManagedTable:
         self, dest_path: str, shallow: bool = False
     ) -> "ManagedTable":
         """``CREATE TABLE … {DEEP|SHALLOW} CLONE src`` (Delta CLONE): a
-        full independent copy — data units, commit history, delete
-        sets, stats — at the destination. Later writes to either side
+        full independent copy — data units, commit history, deletion
+        vectors, stats — at the destination. Later writes to either side
         never affect the other.
 
         ``shallow=True`` is the zero-data-copy variant: parquet bytes
-        under ``_data``/``_deletes`` are HARDLINKED instead of copied
+        under ``_data`` and the deletion-vector files are HARDLINKED
+        instead of copied
         (O(files) metadata ops, zero data movement — the cost profile
         of Delta's shallow clone), while the commit log and mirror are
         real copies so each table's metadata stays self-contained.
@@ -4610,12 +4204,11 @@ class ManagedTable:
         if not shallow:
             shutil.copytree(self.path, dest, dirs_exist_ok=True)
             return ManagedTable(self.spark, dest)
-        link_roots = (_DATA, "_deletes")
         src_root = self.path
 
         def _link_or_copy(s: str, d: str) -> None:
-            rel = os.path.relpath(s, src_root)
-            if rel.split(os.sep, 1)[0] in link_roots:
+            top = os.path.relpath(s, src_root).split(os.sep, 1)[0]
+            if top == _DATA or top.startswith("deletion_vector_"):
                 try:
                     os.link(s, d)
                     return
@@ -4655,9 +4248,6 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties=prev.properties,
             stats=stats,
-            delete_sets=self._carry_delete_sets(
-                prev.delete_sets, prev.data_units
-            ),
             column_mapping=dict(prev.column_mapping),
         )
         self._publish(commit, prev)
@@ -4771,7 +4361,6 @@ class ManagedTable:
                     }
                 )
             },
-            delete_sets=[],
         )
         self._publish(commit, None)
         return commit
@@ -4788,84 +4377,17 @@ class ManagedTable:
         log entry missing for a committed version (e.g. a table
         produced before the mirror existed, or a partially-copied
         table). Returns the number of entries regenerated."""
-        from component_delta_lake_writer_spark.sinks.delta_log import (
-            write_delta_log_entry,
-        )
-
         log_dir = os.path.join(self.path, "_delta_log")
         repaired = 0
-        repaired_with_sets = False
         prev: Commit | None = None
         for v in self._versions():
             c = self.commit_at(v)
             if not os.path.exists(os.path.join(log_dir, f"{v:020d}.json")):
-                prev_units = set(prev.data_units) if prev else set()
-                # commit.txns is the carried-forward MERGED map; only
-                # the watermark this commit ADVANCED re-emits here
-                new_txns = {
-                    k: ver
-                    for k, ver in (c.txns or {}).items()
-                    if prev is None or (prev.txns or {}).get(k) != ver
-                }
-                rt_arg, ict_arg = _mirror_feature_args(c, prev)
-                write_delta_log_entry(
-                    table_path=self.path,
-                    data_dir_name=_DATA,
-                    version=c.version,
-                    schema_json=c.schema_json,
-                    partition_by=c.partition_by,
-                    timestamp_ms=c.timestamp_ms,
-                    new_units=[
-                        u for u in c.data_units if u not in prev_units
-                    ],
-                    removed_units=[
-                        u for u in prev_units if u not in set(c.data_units)
-                    ],
-                    prev_schema_json=prev.schema_json if prev else None,
-                    # a commit with pending MOR delete sets must keep
-                    # the mirror STALE-marked (regenerating with the
-                    # default False would clear the marker and serve
-                    # deleted rows to external readers) and its txn
-                    # watermark must survive the repair
-                    rows_diverge=bool(c.delete_sets),
-                    column_mapping=c.column_mapping,
-                    prev_column_mapping=(
-                        prev.column_mapping if prev else None
-                    ),
-                    operation=_OPERATION_NAMES.get(
-                        c.action, c.action.upper()
-                    ),
-                    txn=next(iter(new_txns.items()), None),
-                    # row-tracking ids / in-commit timestamps /
-                    # clustering are committed state: a repaired entry
-                    # must carry them or external readers lose row
-                    # identity / the ICT clock / clustering columns
-                    row_tracking=rt_arg,
-                    ict=ict_arg,
-                    clustering=_mirror_clustering_arg(c, prev),
-                    checkpoint_policy=_mirror_checkpoint_arg(c, prev),
-                    table_properties=c.properties,
-                    prev_table_properties=(
-                        prev.properties if prev else None
-                    ),
-                )
+                # the same diff _publish wrote: unit adds/removes, DV
+                # swaps, the advanced txn watermark, feature state
+                self._mirror(c, prev)
                 repaired += 1
-                if c.delete_sets:
-                    repaired_with_sets = True
             prev = c
-        if repaired_with_sets:
-            # regenerated entries carry NO deletionVector actions (the
-            # descriptors lived in the lost entry); drop those sets
-            # from the sidecar's covered list so the stale marker is
-            # honest now and the next commit re-materializes the DVs
-            from component_delta_lake_writer_spark.sinks.deletion_vectors import (  # noqa: E501
-                load_dv_state,
-                save_dv_state,
-            )
-
-            state = load_dv_state(self.path)
-            if state.get("covered"):
-                save_dv_state(self.path, {"covered": []})
         return repaired
 
     def history(self) -> list[Commit]:
@@ -4885,7 +4407,7 @@ class ManagedTable:
         """Physical-integrity audit of the commit log vs the
         filesystem (the object-store reality check a 100 TB table
         needs after a botched copy or manual deletion): per version,
-        which referenced data units / delete-set files / bloom
+        which referenced data units / deletion-vector files / bloom
         sidecars are missing, plus the newest fully-intact version —
         the safe `restore()` target. Read-only; never mutates."""
         report: dict = {"versions": {}, "last_intact_version": None}
@@ -4896,13 +4418,7 @@ class ManagedTable:
                 for u in c.data_units
                 if not os.path.isdir(os.path.join(self._data_dir, u))
             ]
-            missing_deletes = [
-                ds["path"]
-                for ds in c.delete_sets or []
-                if not os.path.isdir(
-                    os.path.join(self._deletes_dir, ds["path"])
-                )
-            ]
+            missing_dvs = self._missing_dv_files(c)
             missing_blooms = [
                 meta["path"]
                 for u in c.data_units
@@ -4921,8 +4437,8 @@ class ManagedTable:
             issues = {}
             if missing_units:
                 issues["missing_units"] = missing_units
-            if missing_deletes:
-                issues["missing_delete_sets"] = missing_deletes
+            if missing_dvs:
+                issues["missing_deletion_vectors"] = missing_dvs
             if missing_blooms:
                 # bloom loss is benign (pruning degrades, reads stay
                 # correct) but still worth surfacing
@@ -4933,7 +4449,7 @@ class ManagedTable:
                 issues["missing_ingest_sidecars"] = missing_ingest
             if issues:
                 report["versions"][v] = issues
-            if not missing_units and not missing_deletes:
+            if not missing_units and not missing_dvs:
                 report["last_intact_version"] = v
         return report
 
@@ -4981,7 +4497,6 @@ class ManagedTable:
             timestamp_ms=int(time.time() * 1000),
             properties=props,
             stats=prev.stats,
-            delete_sets=list(prev.delete_sets),
             column_mapping=dict(prev.column_mapping),
         )
         self._publish(commit, prev)
@@ -4989,8 +4504,8 @@ class ManagedTable:
 
     def column_bounds(self, column: str):
         """``SELECT MIN(col), MAX(col)`` answered from COMMIT METADATA
-        when sound — zero data IO: exact when no merge-on-read delete
-        sets are pending (deletes could remove the extreme row) and
+        when sound — zero data IO: exact when no deletion vector is
+        live (a deleted row could be the extreme one) and
         every unit records usable stats for the column. Temporal
         columns come back as datetimes (stats hold their fixed-width
         string form). Falls back to one distributed agg otherwise."""
@@ -5000,7 +4515,7 @@ class ManagedTable:
         if c is None:
             raise UserException(f"No table at {self.path}")
         phys = (c.column_mapping or {}).get(column, column)
-        ok = not c.delete_sets and c.data_units
+        ok = not c.deletion_vectors and c.data_units
         vals = []
         if ok:
             for u in c.data_units:
@@ -5043,45 +4558,21 @@ class ManagedTable:
     def row_count(self) -> int:
         """``SELECT COUNT(*)`` answered from COMMIT METADATA when
         possible — zero data IO regardless of table size (Delta's
-        metadata-only count optimization over add-action stats). Exact
-        from the summed unit stats when the snapshot carries no
-        merge-on-read delete sets and every unit has recorded rows;
-        otherwise falls back to one distributed count (delete-set
-        anti-joins make stats-only counting wrong)."""
+        metadata-only count optimization over add-action stats): the
+        summed unit rows minus the summed deletion-vector
+        cardinalities (each live file's bitmap is the union of every
+        deletion hitting it). Falls back to one distributed count only
+        when some unit has no recorded row count."""
         c = self.latest_commit()
         if c is None:
             raise UserException(f"No table at {self.path}")
-        have_stats = all(
+        if all(
             (c.stats.get(u) or {}).get("_rows") is not None
             for u in c.data_units
-        )
-        if not c.delete_sets and have_stats:
-            return sum(c.stats[u]["_rows"] for u in c.data_units)
-        if c.delete_sets and have_stats:
-            # merge-on-read snapshot: still metadata-only when the
-            # mirror's deletion vectors FULLY cover the pending sets —
-            # live rows = summed unit rows − summed DV cardinalities
-            # (each live file's bitmap is the union of every deletion
-            # hitting it). A stale mirror or uncovered set falls back.
-            from component_delta_lake_writer_spark.sinks.delta_log import (
-                delta_log_is_stale,
-                live_dv_descriptors,
+        ):
+            return sum(c.stats[u]["_rows"] for u in c.data_units) - sum(
+                int(d["cardinality"]) for d in c.deletion_vectors.values()
             )
-            from component_delta_lake_writer_spark.sinks.deletion_vectors import (  # noqa: E501
-                load_dv_state,
-            )
-
-            if delta_log_is_stale(self.path) is None:
-                covered = set(load_dv_state(self.path).get("covered", []))
-                if {ds["path"] for ds in c.delete_sets} <= covered:
-                    deleted = sum(
-                        int(d.get("cardinality") or 0)
-                        for d in live_dv_descriptors(self.path).values()
-                    )
-                    return (
-                        sum(c.stats[u]["_rows"] for u in c.data_units)
-                        - deleted
-                    )
         return self.read().count()
 
     def generate_symlink_manifest(self) -> str:
@@ -5090,20 +4581,20 @@ class ManagedTable:
         ``_symlink_format_manifest/manifest`` — one absolute parquet
         path per line for the CURRENT snapshot — the handshake legacy
         engines (Presto/Trino/Athena/Hive external tables) use to read
-        a Delta table without a Delta reader. Refused while
-        merge-on-read delete sets are pending (the file list would
-        resurrect deleted rows; same honesty rule as the _delta_log
-        _STALE marker). Atomic tmp+rename publish; regenerate after
+        a Delta table without a Delta reader. Refused while deletion
+        vectors are live (a bare file list cannot carry them, so it
+        would resurrect deleted rows). Atomic tmp+rename publish;
+        regenerate after
         every commit you want visible (exactly Delta's contract).
         Returns the manifest path."""
         c = self.latest_commit()
         if c is None:
             raise UserException(f"No table at {self.path}")
-        if c.delete_sets:
+        if c.deletion_vectors:
             raise UserException(
-                "symlink manifest refused: pending merge-on-read "
-                "delete sets would resurrect deleted rows; run "
-                "optimize() first."
+                "symlink manifest refused: live deletion vectors would "
+                "be lost from a bare file list and resurrect deleted "
+                "rows; run optimize() first."
             )
         lines = []
         for u in c.data_units:
@@ -5157,7 +4648,7 @@ class ManagedTable:
             "primary_key": list(c.primary_key or []),
             "properties": dict(c.properties or {}),
             "column_mapping_active": bool(c.column_mapping),
-            "pending_delete_sets": len(c.delete_sets or []),
+            "num_deletion_vectors": len(c.deletion_vectors),
             "generated_columns": self._generation_exprs(c),
             "identity_columns": sorted(self._identity_specs(c)),
             # Delta DESCRIBE DETAIL parity: clusteringColumns + the

@@ -508,8 +508,9 @@ def _conjunct_can_match(stats: dict, col: str, op: str, lit) -> bool:
 def key_bounds_from_stats(stats: dict, cols: list[str]) -> dict:
     """{col: (lo, hi)} from a collect_unit_stats fold, in the exact
     form unit_overlaps_key_bounds consumes (temporal entries wrapped
-    as kind-tagged _TemporalLit). The single encoding shared by MOR
-    delete-set scoping (bounds from the delete file's own footers) and
+    as kind-tagged _TemporalLit). The single encoding shared by the
+    merge-on-read upsert's scoping (bounds from the new unit's own
+    footers) and
     any other stats-derived range — two hand-rolled copies would
     silently diverge the first time the stats form grows a type."""
     out: dict = {}

@@ -654,8 +654,8 @@ class StatementExecutor:
 
     def _reorg(self, s: str):
         """``REORG TABLE t APPLY (PURGE)`` (Delta DML): rewrite files
-        with soft-deleted data — here, materialize every pending
-        merge-on-read delete set / deletion vector into plain files
+        with soft-deleted data — here, materialize every deletion
+        vector into plain files
         (the same rewrite OPTIMIZE performs; Delta's own PURGE is an
         optimize that drops DVs). ``WHERE`` scopes the rewrite."""
         m = re.match(

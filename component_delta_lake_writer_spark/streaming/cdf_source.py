@@ -99,19 +99,16 @@ class _ChangeFilePartition(InputPartition):
         change_type: str | None,
         partition_values: dict,
         mapping: dict,
-        mask_paths: list[str] | None = None,
+        dv: tuple[str, dict] | None = None,
     ):
         self.path = path
         self.version = version
         self.change_type = change_type  # None → column present in file
         self.partition_values = partition_values
         self.mapping = mapping  # logical -> physical
-        # merge-on-read equality-delete masks covering this unit: the
-        # worker drops rows matching any delete file's key tuples —
-        # each file keyed by ITS OWN columns (the PK at ITS commit
-        # time, exactly what the batch anti-join uses), bounded by MOR
-        # source sizes
-        self.mask_paths = mask_paths or []
+        # (table path, deletionVector descriptor) of this file: the
+        # worker drops the rows at the positions it marks deleted
+        self.dv = dv
 
 
 class CdfStreamReader(DataSourceStreamReader):
@@ -166,25 +163,19 @@ class CdfStreamReader(DataSourceStreamReader):
         if start.get("snapshot_of") is not None:
             # bootstrap batch (default start): the whole snapshot at
             # that version streams as inserts; changes resume after it.
-            # Units masked by merge-on-read delete sets carry their
-            # equality-delete files so workers drop superseded rows —
-            # the snapshot must equal ManagedTable.read(), not the raw
-            # union of unit files.
+            # Files with deletion vectors carry their descriptor so
+            # workers drop the deleted positions — the snapshot must
+            # equal ManagedTable.read(), not the raw union of files.
             snap = int(start["snapshot_of"])
             c = _load_commit(self.table_path, snap)
             mapping = c.get("column_mapping") or {}
-            dsets = c.get("delete_sets") or []
             for u in c["data_units"]:
-                masks = [
-                    os.path.join(self.table_path, "_deletes", ds["path"])
-                    for ds in dsets
-                    if u in set(ds["units"])
-                ]
                 parts.extend(
                     self._unit_files(
                         os.path.join(self.table_path, "_data", u),
                         snap, "insert", mapping,
-                        mask_paths=masks,
+                        dvs=c.get("deletion_vectors") or {},
+                        table_path=self.table_path,
                     )
                 )
             lo = snap
@@ -237,7 +228,9 @@ class CdfStreamReader(DataSourceStreamReader):
         return parts
 
     @staticmethod
-    def _unit_files(base, version, change_type, mapping, mask_paths=None):
+    def _unit_files(
+        base, version, change_type, mapping, dvs=None, table_path=None
+    ):
         from component_delta_lake_writer_spark.sinks.hive_layout import (
             decode_segments,
         )
@@ -247,11 +240,12 @@ class CdfStreamReader(DataSourceStreamReader):
             pvals = decode_segments(os.path.relpath(root, base))
             for fn in sorted(files):
                 if fn.endswith(".parquet") and not fn.startswith((".", "_")):
+                    path = os.path.join(root, fn)
+                    d = dvs and dvs.get(os.path.relpath(path, table_path))
                     out.append(
                         _ChangeFilePartition(
-                            os.path.join(root, fn), version,
-                            change_type, pvals, mapping,
-                            mask_paths=mask_paths,
+                            path, version, change_type, pvals, mapping,
+                            dv=(table_path, d) if d else None,
                         )
                     )
         return out
@@ -322,55 +316,14 @@ class CdfStreamReader(DataSourceStreamReader):
                 out_cols.append([None] * n)
         if not n:
             return
-        if partition.mask_paths:
-            # merge-on-read equality-delete masks: each delete file is
-            # keyed by ITS OWN columns (the PK at its commit time —
-            # exactly what the batch anti-join uses), read worker-side
-            # (masks are O(MOR source), never the table). Anti-join
-            # NULL semantics are preserved: a NULL never matches, so
-            # mask entries with a NULL key are dropped and rows with a
-            # NULL key always survive. Both sides normalize tz-aware →
-            # naive UTC (a hive-partition PK decodes naive while
-            # pyarrow hands delete-file values back tz-aware).
-            def _mask_norm(v):
-                if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-                    return v.astimezone(_dt.timezone.utc).replace(
-                        tzinfo=None
-                    )
-                return v
+        if partition.dv is not None:
+            from component_delta_lake_writer_spark.sinks.deletion_vectors import (  # noqa: E501
+                read_dv,
+            )
 
-            field_pos = {
-                f.name: i for i, f in enumerate(self.schema.fields)
-            }
-            groups: list[tuple[list[int], set]] = []
-            for mp in partition.mask_paths:
-                entries: set = set()
-                keys: list[str] | None = None
-                for root, _dirs, files in os.walk(mp):
-                    for fn in files:
-                        if not fn.endswith(".parquet"):
-                            continue
-                        mt = pq.read_table(os.path.join(root, fn))
-                        if keys is None:
-                            keys = list(mt.column_names)
-                        entries.update(
-                            tuple(_mask_norm(v) for v in row)
-                            for row in zip(*[
-                                mt.column(c).to_pylist() for c in keys
-                            ])
-                            if None not in row
-                        )
-                if not keys or any(k not in field_pos for k in keys):
-                    continue  # un-evaluable mask: keep rows (conservative)
-                groups.append(([field_pos[k] for k in keys], entries))
+            gone = set(read_dv(*partition.dv))
             yield from (
-                row
-                for row in zip(*out_cols)
-                if not any(
-                    None not in (t := tuple(_mask_norm(row[i]) for i in idx))
-                    and t in entries
-                    for idx, entries in groups
-                )
+                row for i, row in enumerate(zip(*out_cols)) if i not in gone
             )
             return
         yield from zip(*out_cols)

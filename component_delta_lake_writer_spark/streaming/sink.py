@@ -183,19 +183,21 @@ def stream_replicate(
     """CONTINUOUS table replication: stream the source's change feed
     (the table_changes_stream Data Source — version offsets, no file
     listing) and apply each commit's delta to the replica in commit
-    order — inserts/update post-images as an upsert, delete rows as an
-    equality-delete key set. Idempotence is per SOURCE VERSION via
+    order — inserts/update post-images as an upsert, delete rows as a
+    ``delete_keys`` key set. Idempotence is per SOURCE VERSION via
     writer transactions (txnAppId = the replication identity,
     txnVersion = the source commit version), so checkpoint replays,
     restarts, and even a lost checkpoint re-apply nothing.
 
     ``upsert_strategy`` (ADVICE r5): 'merge-on-read' (default) applies
-    each source commit in O(commit delta) but accrues one pending
-    delete set per replicated commit — pair it with
-    ``optimize_every=N`` so a long-running follower compacts the
-    replica every N applied source commits and read plans stay
-    bounded; 'copy-on-write' materializes per commit (no delete-set
-    growth, O(overlapped target units) per commit instead).
+    each source commit without rewriting the replica — it appends the
+    commit's rows and widens the deletion vectors of the files holding
+    their prior versions, so the replica accrues one unit per
+    replicated commit and its deleted-but-present rows grow — pair it
+    with ``optimize_every=N`` so a long-running follower compacts the
+    replica every N applied source commits; 'copy-on-write'
+    materializes per commit (no growth, O(overlapped target units) per
+    commit instead).
 
     This is the streaming spelling of sinks.replicate (batch catch-up)
     — the two compose: batch-replicate to bootstrap, stream to follow.
@@ -276,7 +278,7 @@ def stream_replicate(
                     # follower of a 100 TB table must not rewrite
                     # overlapped target units per source commit;
                     # optimize_every / a later optimize() materializes
-                    # the accrued delete sets.
+                    # the accrued deletion vectors.
                     dst.upsert(
                         upserts, primary_key, txn=(app_id, v),
                         strategy=upsert_strategy,

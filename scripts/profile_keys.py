@@ -12,9 +12,12 @@ per-layer metric of perfbench (``perfbench.layers.targets()`` wrappers
 are installed for the run), and, when the run produced streaming
 micro-batches, each batch's ``durationMs`` and state-operator figures.
 For ``upsert_mor`` the layer metrics split the key into its
-``managed_table.write``, ``managed_table.upsert`` and
-``delta_log.write_delta_log_entry`` calls; the ``exec`` span is the
-read-back. The wrappers are why ``bench.py``'s suites, which install
+``managed_table.write`` call (the initial load), its
+``managed_table.upsert`` call (the source append, the deletion-vector
+match against the overlapping units and the DV file write, all before
+the version claim) and the ``delta_log.write_delta_log_entry`` call
+inside it (the mirror entry with the DV remove/add swap); the ``exec``
+span is the read-back, which applies the DVs. The wrappers are why ``bench.py``'s suites, which install
 none, are the timing record and this script is the explanation.
 
 A/B two trees by running this script from each tree in turn, alternating

@@ -140,15 +140,15 @@ def test_inline_dv_descriptor_read(tmp_path):
     assert read_dv(str(tmp_path), desc) == [2, 4]
 
 
-def test_driver_tier_matches_spark_tier(spark, tmp_path):
-    """The driver-only DV materialization tier (small delete set,
-    unpartitioned layout, targeted-unit rows under
-    mirror.dvDriverScanMaxRows) must produce byte-identical bitmaps to
-    the distributed semi-join path. Two identical tables, one forced
-    down the Spark tier via dvDriverScanMaxRows=0; multi-column PK to
-    exercise the tuple match."""
+def test_driver_tier_matches_spark_tier(spark, tmp_path, monkeypatch):
+    """The driver-only DV match tier (small key set, unpartitioned
+    layout, targeted-unit rows under _DV_DRIVER_SCAN_MAX) must produce
+    byte-identical bitmaps to the distributed semi-join path. Two
+    identical tables, one forced down the Spark tier by setting the
+    module bound to 0; multi-column PK to exercise the tuple match."""
     from pyspark.sql import functions as F
 
+    from component_delta_lake_writer_spark.sinks import managed_table
     from component_delta_lake_writer_spark.sinks.delta_log import (
         live_dv_descriptors,
     )
@@ -166,19 +166,12 @@ def test_driver_tier_matches_spark_tier(spark, tmp_path):
     )
 
     states = {}
-    for name, props in (
-        ("driver", {}),
-        ("sparkpath", {"mirror.dvDriverScanMaxRows": 0}),
-    ):
+    for name, bound in (("driver", None), ("sparkpath", 0)):
+        if bound is not None:
+            monkeypatch.setattr(managed_table, "_DV_DRIVER_SCAN_MAX", bound)
         t = ManagedTable(spark, str(tmp_path / name))
-        t.write(
-            df.coalesce(4), mode="overwrite",
-            primary_key=["a", "b"], properties=props,
-        )
-        t.upsert(
-            upd.coalesce(1), ["a", "b"],
-            strategy="merge-on-read", properties=props,
-        )
+        t.write(df.coalesce(4), mode="overwrite", primary_key=["a", "b"])
+        t.upsert(upd.coalesce(1), ["a", "b"], strategy="merge-on-read")
         dvs = live_dv_descriptors(t.path)
         states[name] = {
             os.path.basename(rel): sorted(read_dv(t.path, d))
@@ -200,7 +193,6 @@ def test_partitioned_table_skips_driver_tier(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        delta_log_is_stale,
         read_delta_table,
     )
     from component_delta_lake_writer_spark.sinks.managed_table import (
@@ -223,7 +215,6 @@ def test_partitioned_table_skips_driver_tier(spark, tmp_path):
         ["k"],
         strategy="merge-on-read",
     )
-    assert delta_log_is_stale(t.path) is None
     eng = sorted((r["k"], r["p"], r["v"]) for r in t.read().collect())
     ext = sorted(
         (r["k"], r["p"], r["v"])
@@ -233,7 +224,7 @@ def test_partitioned_table_skips_driver_tier(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_driver_tier_keys_above_collect_bound(spark, tmp_path):
+def test_driver_tier_keys_above_collect_bound(spark, tmp_path, monkeypatch):
     """Keys between _DV_COLLECT_MAX and the driver bound take the
     driver tier (matched output is bounded by the target-row bound,
     not the key count) and match the executor bitmap path exactly."""
@@ -242,6 +233,7 @@ def test_driver_tier_keys_above_collect_bound(spark, tmp_path):
     from component_delta_lake_writer_spark.sinks.delta_log import (
         live_dv_descriptors,
     )
+    from component_delta_lake_writer_spark.sinks import managed_table
     from component_delta_lake_writer_spark.sinks.managed_table import (
         _DV_COLLECT_MAX,
         ManagedTable,
@@ -255,18 +247,12 @@ def test_driver_tier_keys_above_collect_bound(spark, tmp_path):
         "v", F.lit(-1).cast("long")
     )  # n keys > collect bound
     states = {}
-    for name, props in (
-        ("driver", {}),
-        ("sparkpath", {"mirror.dvDriverScanMaxRows": 0}),
-    ):
+    for name, bound in (("driver", None), ("sparkpath", 0)):
+        if bound is not None:
+            monkeypatch.setattr(managed_table, "_DV_DRIVER_SCAN_MAX", bound)
         t = ManagedTable(spark, str(tmp_path / name))
-        t.write(
-            df.coalesce(4), mode="overwrite",
-            primary_key=["k"], properties=props,
-        )
-        t.upsert(
-            upd, ["k"], strategy="merge-on-read", properties=props
-        )
+        t.write(df.coalesce(4), mode="overwrite", primary_key=["k"])
+        t.upsert(upd, ["k"], strategy="merge-on-read")
         dvs = live_dv_descriptors(t.path)
         states[name] = sorted(
             tuple(read_dv(t.path, d)) for d in dvs.values()

@@ -233,12 +233,11 @@ def test_checkpoint_carries_protocol_features_and_tombstones(spark, tmp_path):
 
 @pytest.mark.slow
 def test_mor_commits_materialize_deletion_vectors(spark, tmp_path):
-    """Merge-on-read delete sets are mirrored as real Delta deletion
-    vectors: the mirror stays FRESH (no _STALE), the affected file's
-    add carries a descriptor, and an external reader sees exactly the
-    engine's snapshot."""
+    """Merge-on-read deletes are real Delta deletion vectors: the
+    engine commit and the mirror carry the same descriptors, the
+    affected file's add carries one, and an external reader sees
+    exactly the engine's snapshot."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        delta_log_is_stale,
         live_dv_descriptors,
         read_delta_table,
     )
@@ -252,10 +251,9 @@ def test_mor_commits_materialize_deletion_vectors(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
     t.write(df.coalesce(1), mode="overwrite", primary_key=["k"])
-    assert delta_log_is_stale(t.path) is None
     t.delete_where("k >= 90", strategy="merge-on-read")
-    assert delta_log_is_stale(t.path) is None      # DVs, not staleness
     dvs = live_dv_descriptors(t.path)
+    assert t.latest_commit().deletion_vectors == dvs
     assert len(dvs) == 1
     (desc,) = dvs.values()
     assert desc["cardinality"] == 10
@@ -269,8 +267,8 @@ def test_mor_commits_materialize_deletion_vectors(spark, tmp_path):
         ["k"],
         strategy="merge-on-read",
     )
-    assert delta_log_is_stale(t.path) is None
     dvs2 = live_dv_descriptors(t.path)
+    assert t.latest_commit().deletion_vectors == dvs2
     old_file = next(iter(dvs))
     assert dvs2[old_file]["cardinality"] == 15     # 10 deletes + 5 upserts
     assert len(read_dv(t.path, dvs2[old_file])) == 15
@@ -284,35 +282,6 @@ def test_mor_commits_materialize_deletion_vectors(spark, tmp_path):
     # optimize materializes everything -> descriptors gone, plain replay
     t.optimize()
     assert live_dv_descriptors(t.path) == {}
-    files, _, _ = replay_delta_log(t.path)
-    got = spark.read.parquet(*[os.path.join(t.path, f) for f in files])
-    assert got.count() == t.read().count() == 90
-
-
-def test_mor_over_dv_bound_falls_back_to_stale(spark, tmp_path):
-    """A delete set whose targeted-unit scan estimate exceeds
-    mirror.dvMaxRows defers materialization: the mirror advertises
-    staleness, suspends checkpoints, and clears on optimize — the
-    pre-DV honesty contract, now only for the over-bound case."""
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        delta_log_is_stale,
-        live_dv_descriptors,
-        maybe_write_checkpoint,
-    )
-
-    t = ManagedTable(spark, str(tmp_path / "t"))
-    df = spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    t.write(df, mode="overwrite", primary_key=["k"],
-            properties={"mirror.dvMaxRows": 10})
-    t.delete_where("k >= 90", strategy="merge-on-read")
-    info = delta_log_is_stale(t.path)
-    assert info is not None and info["version"] == 1
-    assert live_dv_descriptors(t.path) == {}
-    assert maybe_write_checkpoint(t.path, 9) is None  # suspended
-    t.optimize()
-    assert delta_log_is_stale(t.path) is None
     files, _, _ = replay_delta_log(t.path)
     got = spark.read.parquet(*[os.path.join(t.path, f) for f in files])
     assert got.count() == t.read().count() == 90
@@ -836,13 +805,11 @@ def test_checkpoint_preserves_deletion_vectors(spark, tmp_path):
 
 
 def test_restore_rematerializes_dvs_for_readded_units(spark, tmp_path):
-    """A delete set spanning two units, one later rewritten (COW) and
-    then RESTORED: the restored unit's file comes back as a plain add,
-    so its bitmap must re-materialize — 'covered' coverage is revoked
-    for sets targeting any (re-)added unit, or external readers would
-    silently resurrect the deleted rows."""
+    """A merge-on-read delete spanning two units, one later rewritten
+    (COW) and then RESTORED: the restored unit's file comes back as an
+    add that must carry its deletion vector again, or external readers
+    would silently resurrect the deleted rows."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        delta_log_is_stale,
         read_delta_table,
     )
 
@@ -856,7 +823,6 @@ def test_restore_rematerializes_dvs_for_readded_units(spark, tmp_path):
     t.delete_where("k >= 5 AND k < 15", strategy="merge-on-read")
     t.delete_where("k = 19")     # COW rewrite of unit B only
     t.restore(2)                 # unit B's original file re-added
-    assert delta_log_is_stale(t.path) is None
     eng = sorted(r["k"] for r in t.read().collect())
     ext = sorted(
         r["k"] for r in read_delta_table(spark, t.path).collect()
@@ -922,7 +888,6 @@ def test_dv_with_column_mapping_and_partitioning(spark, tmp_path):
     partitionValues."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
         _replay_full,
-        delta_log_is_stale,
         read_delta_table,
     )
 
@@ -934,7 +899,6 @@ def test_dv_with_column_mapping_and_partitioning(spark, tmp_path):
     t.write(df.coalesce(1), mode="overwrite", primary_key=["k"])
     t.rename_column("v", "val")
     t.delete_where("k >= 15", strategy="merge-on-read")
-    assert delta_log_is_stale(t.path) is None
     eng = sorted((r["k"], r["val"]) for r in t.read().collect())
     ext = sorted(
         (r["k"], r["val"])
@@ -951,7 +915,6 @@ def test_dv_with_column_mapping_and_partitioning(spark, tmp_path):
     )
     p.write(pdf, mode="overwrite", primary_key=["k"], partition_by=["p"])
     p.delete_where("k >= 15", strategy="merge-on-read")
-    assert delta_log_is_stale(p.path) is None
     _files, _s, pcols, dvs = _replay_full(p.path)
     assert pcols == ["p"] and dvs
     acts = _actions(p.path, 1)
@@ -960,40 +923,6 @@ def test_dv_with_column_mapping_and_partitioning(spark, tmp_path):
     assert dv_adds and all(a["partitionValues"].get("p") in ("0", "1")
                            for a in dv_adds)
     assert sum(a["deletionVector"]["cardinality"] for a in dv_adds) == 5
-
-
-def test_dv_swap_survives_lost_sidecar(spark, tmp_path):
-    """Crash window (review finding): log published, sidecar save
-    lost. The next MOR commit must STILL retract the prior descriptor
-    (from the LOG, not the sidecar) — a descriptor-less remove would
-    leave the old (path, dvId) add alive and external readers would
-    read the file twice."""
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        live_dv_descriptors,
-        read_delta_table,
-    )
-
-    t = ManagedTable(spark, str(tmp_path / "t"))
-    df = spark.range(20).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    t.write(df.coalesce(1), mode="overwrite", primary_key=["k"])
-    t.delete_where("k >= 15", strategy="merge-on-read")   # DV-A
-    os.remove(os.path.join(t.path, "_delta_log", "_dv_state.json"))
-    t.delete_where("k >= 10", strategy="merge-on-read")   # must swap
-    # exactly ONE live descriptor (the union), not two incarnations
-    dvs = live_dv_descriptors(t.path)
-    assert len(dvs) == 1
-    (d,) = dvs.values()
-    assert d["cardinality"] == 10
-    eng = sorted(r["k"] for r in t.read().collect())
-    ext = sorted(r["k"] for r in read_delta_table(spark, t.path).collect())
-    assert eng == ext == list(range(10))
-    # and the swap remove carried DV-A so replay never double-counts
-    acts = _actions(t.path, 2)
-    rm = [a["remove"] for a in acts
-          if "remove" in a and a["remove"].get("deletionVector")]
-    assert len(rm) == 1 and rm[0]["deletionVector"]["cardinality"] == 5
 
 
 def test_vacuum_keeps_dvs_of_retained_snapshots(spark, tmp_path):
@@ -1054,66 +983,6 @@ def test_vacuum_keeps_dvs_of_retained_snapshots(spark, tmp_path):
                 if f.startswith("deletion_vector_")]
 
 
-def test_rewrite_after_lost_sidecar_retracts_descriptor(spark, tmp_path):
-    """Review finding: the no-delete-set FAST PATH must also honor the
-    lost-sidecar window. A crash after log publish but before the
-    sidecar save, followed by a full rewrite (overwrite drops every
-    delete set), must emit removes CARRYING the prior descriptors —
-    descriptor-less removes fail (path, dvId) reconciliation and leave
-    the DV-bearing add live (external readers resurrect+duplicate)."""
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table,
-        replay_delta_log,
-    )
-
-    t = ManagedTable(spark, str(tmp_path / "t"))
-    df = spark.range(20).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    t.write(df.coalesce(1), mode="overwrite", primary_key=["k"])  # v0
-    t.delete_where("k >= 15", strategy="merge-on-read")  # v1: DV
-    os.remove(os.path.join(t.path, "_delta_log", "_dv_state.json"))
-    t.write(  # v2: overwrite — commit has delete_sets=[] (fast path)
-        df.filter("k < 5").coalesce(1), mode="overwrite"
-    )
-    acts = _actions(t.path, 2)
-    rm = [a["remove"] for a in acts
-          if "remove" in a and a["remove"].get("deletionVector")]
-    assert len(rm) == 1 and rm[0]["deletionVector"]["cardinality"] == 5
-    files, _schema, _p = replay_delta_log(t.path)
-    assert len(files) == 1  # the old DV-bearing add must NOT be live
-    ext = sorted(r["k"] for r in read_delta_table(spark, t.path).collect())
-    assert ext == list(range(5))
-
-
-def test_deferred_mode_rewrite_retracts_default_mode_dvs(spark, tmp_path):
-    """Review finding: a table that materialized DVs in DEFAULT mode,
-    then switched to mirror.dvMode='deferred', must still attach prior
-    descriptors to removes on a rewrite — 'deferred skips the log
-    scan' only holds for remove-less commits (the CDC-apply shape)."""
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        replay_delta_log,
-    )
-
-    t = ManagedTable(spark, str(tmp_path / "t"))
-    df = spark.range(20).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    t.write(df.coalesce(1), mode="overwrite", primary_key=["k"])  # v0
-    t.delete_where("k >= 15", strategy="merge-on-read")  # v1: DV (default)
-    os.remove(os.path.join(t.path, "_delta_log", "_dv_state.json"))
-    t.write(  # rewrite under deferred mode, sidecar lost
-        df.filter("k < 5").coalesce(1), mode="overwrite",
-        properties={"mirror.dvMode": "deferred"},
-    )
-    acts = _actions(t.path, 2)
-    rm = [a["remove"] for a in acts
-          if "remove" in a and a["remove"].get("deletionVector")]
-    assert len(rm) == 1 and rm[0]["deletionVector"]["cardinality"] == 5
-    files, _schema, _p = replay_delta_log(t.path)
-    assert len(files) == 1
-
-
 def test_read_delta_table_empty_snapshot(spark, tmp_path):
     """Review finding: zero live files (all rows deleted copy-on-write)
     must read back as an EMPTY frame, not IndexError."""
@@ -1129,35 +998,6 @@ def test_read_delta_table_empty_snapshot(spark, tmp_path):
     t.delete_where("k = 1")  # COW: snapshot has no files
     out = read_delta_table(spark, t.path)
     assert out.count() == 0 and out.columns == ["k", "v"]
-
-
-def test_dv_bound_is_per_delete_set(spark, tmp_path):
-    """Review finding: one over-bound delete set must defer only
-    itself — in-bound sets still materialize (mirror stays honestly
-    stale for the remainder, with the in-bound DV live)."""
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        delta_log_is_stale,
-        live_dv_descriptors,
-    )
-
-    t = ManagedTable(spark, str(tmp_path / "t"))
-    big = spark.range(200).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    small = spark.range(1000, 1050).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    t.write(big.coalesce(1), mode="overwrite", primary_key=["k"],
-            properties={"mirror.dvMaxRows": 100})
-    t.write(small.coalesce(1), mode="append")
-    t.delete_where("k >= 190 AND k < 200", strategy="merge-on-read")
-    assert delta_log_is_stale(t.path) is not None   # big unit: deferred
-    t.delete_where("k >= 1040", strategy="merge-on-read")
-    # the small-unit set materialized; the big one stays deferred
-    assert delta_log_is_stale(t.path) is not None
-    dvs = live_dv_descriptors(t.path)
-    assert len(dvs) == 1
-    assert sum(d["cardinality"] for d in dvs.values()) == 10
 
 
 @pytest.mark.slow

@@ -977,9 +977,9 @@ def test_connected_components_deep_chain_converges(spark):
 
 
 @pytest.mark.slow
-def test_cdf_stream_snapshot_applies_mor_delete_sets(spark, tmp_path):
+def test_cdf_stream_snapshot_applies_mor_deletion_vectors(spark, tmp_path):
     """The default (no startingVersion) snapshot bootstrap must equal
-    ManagedTable.read(): units masked by merge-on-read delete sets
+    ManagedTable.read(): files masked by merge-on-read deletion vectors
     stream WITHOUT their superseded rows — a raw union of unit files
     would resurrect every MOR-updated row's stale image."""
     import os
@@ -1641,11 +1641,14 @@ def test_asof_accepts_real_timestamp_column(spark):
 
 
 @pytest.mark.slow
-def test_stream_replicate_optimize_every_bounds_delete_sets(spark, tmp_path):
+def test_stream_replicate_optimize_every_bounds_deletion_vectors(
+    spark, tmp_path
+):
     """ADVICE r5: a long-running merge-on-read follower accrues one
-    pending delete set per replicated commit with nothing compacting
-    them. optimize_every=N must compact the replica in-stream so the
-    pending-delete-set count stays bounded, without changing results."""
+    unit and a widened deletion vector per replicated commit with
+    nothing compacting them. optimize_every=N must compact the replica
+    in-stream so the deletion-vector count stays bounded, without
+    changing results."""
     import os
 
     from component_delta_lake_writer_spark.sinks import ManagedTable
@@ -1673,12 +1676,11 @@ def test_stream_replicate_optimize_every_bounds_delete_sets(spark, tmp_path):
     assert {(r["k"], r["v"]) for r in dst.read().collect()} == {
         (1, 13.0), (2, 2.0)
     }
-    # compaction ran: 5 replicated commits would accrue ~4 pending
-    # delete sets without the knob; optimize_every=2 leaves at most
-    # the post-last-optimize remainder (here: the 5th commit's one)
+    # compaction ran: 5 replicated commits would accrue ~4 files with
+    # deletion vectors without the knob; optimize_every=2 leaves at
+    # most the post-last-optimize remainder (here: the 5th commit's)
     head = dst.latest_commit()
-    pending = getattr(head, "delete_sets", None) or []
-    assert len(pending) <= 1, pending
+    assert len(head.deletion_vectors) <= 1, head.deletion_vectors
 
 
 @pytest.mark.slow
@@ -1977,8 +1979,7 @@ def test_stream_scd2_fresh_checkpoint_noop(spark, tmp_path):
         "k long, state string, ts long",
     )
     src.write(base.coalesce(1), mode="overwrite", primary_key=["k"],
-              properties={"enableChangeDataFeed": True,
-                          "mirror.dvMode": "deferred"})
+              properties={"enableChangeDataFeed": True})
     src.upsert(
         base.filter(F.col("k") % 3 == 0)
         .withColumn("state", F.lit("b"))
@@ -2215,7 +2216,6 @@ def test_erasure_audit_operator(spark, tmp_path):
 
     rep = erasure_audit(t, erase, "k")
     assert rep["clean"] and rep["leak_count"] == 0
-    assert rep["delete_set_files"] == 0
     assert rep["rows_checked"] == t.read().count()
 
     # plant a leak: a raw parquet with two erased keys, outside the

@@ -657,7 +657,6 @@ def test_append_conflict_retries_metadata_only(spark, tmp_path_str, monkeypatch)
                 timestamp_ms=int(_time.time() * 1000),
                 properties=prev.properties,
                 stats=prev.stats,
-                delete_sets=list(prev.delete_sets),
                 column_mapping=dict(prev.column_mapping),
             )
             real(self, competing, prev)  # steal the version number
@@ -1284,7 +1283,7 @@ def test_optimize_where_scoped_compaction(spark, tmp_path_str):
     c = t.optimize(where="k >= 200")
     assert set(cold) <= set(c.data_units), "cold units must carry"
     assert len(c.data_units) == 3  # 2 cold + 1 compacted hot
-    assert c.delete_sets == []  # hot-range delete materialized
+    assert c.deletion_vectors == {}  # hot-range delete materialized
     assert c.action == "optimize"
     got = sorted(r["k"] for r in t.read().collect())
     assert got == list(range(280))
@@ -1494,21 +1493,25 @@ def test_read_changes_appends_after_rename(spark, tmp_path_str):
 
 
 @pytest.mark.slow
-def test_sync_metadata_restales_lost_dv_entry_and_keeps_txn(
+def test_sync_metadata_regenerates_lost_dv_entry_and_keeps_txn(
     spark, tmp_path_str
 ):
-    """Repairing a lost _delta_log entry for a MOR commit: the
-    original entry carried deletionVector actions that the repair
-    cannot reproduce, so the regenerated mirror must be STALE-marked
-    (external readers would otherwise resurrect deleted rows), the
-    commit's txn watermark must survive — and the NEXT commit must
-    re-materialize the DVs (sidecar coverage reset)."""
+    """Repairing a lost _delta_log entry for a merge-on-read commit:
+    the engine commit holds the deletion-vector descriptors, so the
+    regenerated entry carries them again (the external read equals the
+    engine read right after the repair) along with the commit's txn
+    watermark, and the next merge-on-read commit swaps them cleanly."""
     import json as _json
 
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        delta_log_is_stale,
         live_dv_descriptors,
+        read_delta_table,
     )
+
+    def _ext_equals_engine():
+        eng = sorted(map(tuple, t.read().collect()))
+        ext = sorted(map(tuple, read_delta_table(spark, t.path).collect()))
+        return eng == ext
 
     t = ManagedTable(spark, tmp_path_str + "/t")
     t.write(
@@ -1519,45 +1522,101 @@ def test_sync_metadata_restales_lost_dv_entry_and_keeps_txn(
         spark.createDataFrame([(2, -2.0)], "k int, v double"), ["k"],
         strategy="merge-on-read", txn=("appA", 7),
     )
-    # DV era: the MOR commit mirrors fresh, with a descriptor live
-    assert delta_log_is_stale(t.path) is None
-    assert len(live_dv_descriptors(t.path)) == 1
-    v = t.latest_commit().version
-    entry = os.path.join(t.path, "_delta_log", f"{v:020d}.json")
+    c = t.latest_commit()
+    assert len(c.deletion_vectors) == 1
+    assert live_dv_descriptors(t.path) == c.deletion_vectors
+    entry = os.path.join(t.path, "_delta_log", f"{c.version:020d}.json")
+    with open(entry) as fh:
+        original = [_json.loads(line) for line in fh]
     os.remove(entry)
-    # repair regenerates WITHOUT the DV actions -> honest staleness
     assert t.sync_metadata() == 1
-    assert delta_log_is_stale(t.path) is not None
-    acts = [_json.loads(line) for line in open(entry)]
+    with open(entry) as fh:
+        acts = [_json.loads(line) for line in fh]
+    # same actions as the lost entry, bar the commitInfo clock
+    strip = [a for a in original if "commitInfo" not in a]
+    assert [a for a in acts if "commitInfo" not in a] == strip
+    assert live_dv_descriptors(t.path) == c.deletion_vectors
     txns = [a["txn"] for a in acts if "txn" in a]
     assert txns and txns[0]["appId"] == "appA" and txns[0]["version"] == 7
-    # next MOR commit re-materializes the pending sets -> fresh again
+    assert _ext_equals_engine()
     t.upsert(
         spark.createDataFrame([(1, -1.0)], "k int, v double"), ["k"],
         strategy="merge-on-read",
     )
-    assert delta_log_is_stale(t.path) is None
     assert sum(
         d["cardinality"] for d in live_dv_descriptors(t.path).values()
     ) == 2
+    assert _ext_equals_engine()
 
 
 def test_restore_refuses_vacuumed_delete_sets(spark, tmp_path_str):
-    import shutil as _shutil
-
+    """The deletion-vector files of a restore target are part of its
+    snapshot: once vacuumed, RESTORE refuses loudly."""
     t = ManagedTable(spark, tmp_path_str + "/t")
     t.write(
         spark.createDataFrame([(1, 1.0), (2, 2.0)], "k int, v double"),
         mode="overwrite", primary_key=["k"],
     )
     t.upsert(spark.createDataFrame([(2, -2.0)], "k int, v double"), ["k"],
-             strategy="merge-on-read")          # v1 carries a delete set
+             strategy="merge-on-read")          # v1 carries a DV
     mor_v = t.latest_commit().version
-    t.optimize()                                 # materializes delete sets
-    # simulate vacuum reclaiming the now-unreferenced delete file
-    _shutil.rmtree(os.path.join(t.path, "_deletes"), ignore_errors=True)
-    with pytest.raises(UserException, match="delete sets"):
+    assert t.latest_commit().deletion_vectors
+    t.optimize()                                 # materializes the DV
+    # simulate vacuum reclaiming the now-unreferenced DV file
+    for f in os.listdir(t.path):
+        if f.startswith("deletion_vector_"):
+            os.remove(os.path.join(t.path, f))
+    with pytest.raises(UserException, match="deletion-vector files"):
         t.restore(version=mor_v)
+
+
+def test_mor_writer_dying_before_version_claim_leaves_prior_version(
+    spark, tmp_path_str, monkeypatch
+):
+    """Fault: a merge-on-read commit raises after its DV file is
+    written but before the version claim. Readers stay at the prior
+    version (engine and external alike), and vacuum reclaims the
+    orphaned DV file once it is past the in-flight grace."""
+    import time as _time
+
+    from component_delta_lake_writer_spark.sinks.delta_log import (
+        read_delta_table,
+    )
+
+    t = ManagedTable(spark, tmp_path_str + "/t")
+    t.write(
+        spark.createDataFrame(
+            [(i, float(i)) for i in range(10)], "k int, v double"
+        ),
+        mode="overwrite", primary_key=["k"],
+    )
+    before = sorted(map(tuple, t.read().collect()))
+    head = t.latest_commit().version
+
+    def crash(self, commit, prev=None, cdc_stage=None):
+        raise RuntimeError("writer died before the version claim")
+
+    monkeypatch.setattr(ManagedTable, "_publish", crash)
+    with pytest.raises(RuntimeError, match="version claim"):
+        t.delete_where("k >= 7", strategy="merge-on-read")
+    monkeypatch.undo()
+    bins = [f for f in os.listdir(t.path) if f.startswith("deletion_vector_")]
+    assert len(bins) == 1  # written, never referenced
+    assert t.latest_commit().version == head
+    assert sorted(map(tuple, t.read().collect())) == before
+    ext = sorted(map(tuple, read_delta_table(spark, t.path).collect()))
+    assert ext == before
+    # still inside the in-flight grace: a concurrent writer may be
+    # about to claim it, so vacuum keeps it
+    t.vacuum()
+    assert os.path.exists(os.path.join(t.path, bins[0]))
+    old = _time.time() - 3600
+    os.utime(os.path.join(t.path, bins[0]), (old, old))
+    assert t.vacuum() >= 1
+    assert not [
+        f for f in os.listdir(t.path) if f.startswith("deletion_vector_")
+    ]
+    assert sorted(map(tuple, t.read().collect())) == before
 
 
 def test_partition_recovery_suffix_names_and_plus(spark, tmp_path_str):

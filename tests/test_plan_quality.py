@@ -397,11 +397,10 @@ def test_selective_upsert_scans_only_touched_units(spark):
 
 def test_mor_delete_antijoin_broadcasts_small_delete_set(spark, tmp_path):
     """The 100 TB contract for merge-on-read reads: the target scan
-    anti-joins the (small) delete set via broadcast — the target side
-    must never shuffle to apply a delete file. Catalyst gets this from
-    the delete file's size stats; pin it so a refactor that hides the
-    file-backed stats (e.g. wrapping the delete scan in a barrier)
-    shows up here."""
+    anti-joins the deleted (file, row) positions via broadcast — the
+    target side must never shuffle to apply a deletion vector.
+    Catalyst gets this from the positions' Arrow LocalRelation size
+    stats; pin it so a refactor that hides them shows up here."""
     import os
 
     from pyspark.sql import functions as F
@@ -418,7 +417,7 @@ def test_mor_delete_antijoin_broadcasts_small_delete_set(spark, tmp_path):
     assert "LeftAnti" in plan
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan
-    # same contract through the MOR upsert's delete set
+    # same contract through the MOR upsert's deletion vectors
     src = spark.range(1000).select(
         F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
     )
@@ -533,12 +532,12 @@ def test_hybrid_rrf_fusion_joins_stay_small(spark):
 
 
 def test_dv_driver_tier_dispatches_no_jobs(tmp_path, spark):
-    """Round-7 perf lock: the deletion-vector driver tier (small
-    delete set, unpartitioned, target rows under the driver bound)
-    must materialize DVs with ZERO Spark jobs — the whole point of
-    the tier is killing the ~0.5 s distributed dispatch that
-    dominated small-batch MOR mirror freshness. The commit's only
-    jobs are the source-unit write and the delete-set write."""
+    """Round-7 perf lock: the deletion-vector driver tier (small key
+    set, unpartitioned, target rows under the driver bound) must
+    match and write DVs with ZERO Spark jobs — the whole point of the
+    tier is killing the ~0.5 s distributed dispatch that dominated
+    small-batch merge-on-read commits. The commit's only job is the
+    source-unit write."""
     from pyspark.sql import functions as F
 
     from component_delta_lake_writer_spark.sinks.managed_table import (
@@ -562,15 +561,16 @@ def test_dv_driver_tier_dispatches_no_jobs(tmp_path, spark):
     finally:
         sc.setJobGroup(None, None)
     upd.unpersist()
-    assert c.delete_sets, "probe must exercise the DV path"
+    assert c.deletion_vectors, "probe must exercise the DV path"
     from component_delta_lake_writer_spark.sinks.delta_log import (
         live_dv_descriptors,
     )
 
     assert live_dv_descriptors(t.path), "DVs must have materialized"
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    # delete-set write + source-unit write (+1 slack for an AQE
-    # result stage); the DV materialization itself adds NONE
+    # source-unit write (+2 slack: AQE result stages, and the
+    # delete-set write the tier's budget was set with); the DV match
+    # itself adds NONE
     assert len(jobs) <= 3, f"{len(jobs)} jobs dispatched: {sorted(jobs)}"
 
 
@@ -584,9 +584,9 @@ def test_range_join_is_bucket_equi_join(spark):
 
 
 def test_mor_row_count_is_metadata_only(tmp_path, spark):
-    """COUNT(*) on a merge-on-read snapshot whose DVs fully cover the
-    delete sets must answer from metadata — zero Spark jobs — and
-    equal the distributed count."""
+    """COUNT(*) on a merge-on-read snapshot must answer from metadata
+    (unit rows minus DV cardinalities) — zero Spark jobs — and equal
+    the distributed count."""
     from pyspark.sql import functions as F
 
     from component_delta_lake_writer_spark.sinks.managed_table import (

@@ -436,6 +436,7 @@ _LIFECYCLE_OP = st.one_of(
     st.tuples(st.just("upsert_cow"), rows_strategy.filter(len)),
     st.tuples(st.just("upsert_mor"), rows_strategy.filter(len)),
     st.tuples(st.just("delete_mod"), st.integers(min_value=2, max_value=7)),
+    st.tuples(st.just("delete_mor"), st.integers(min_value=2, max_value=7)),
     st.tuples(st.just("optimize"), st.just(None)),
     st.tuples(st.just("restore_back"), st.integers(min_value=1, max_value=3)),
 )
@@ -450,17 +451,23 @@ _LIFECYCLE_OP = st.one_of(
 @given(ops=st.lists(_LIFECYCLE_OP, min_size=1, max_size=6))
 def test_table_lifecycle_model(spark, ops):
     """Model-based lifecycle law: an ARBITRARY interleaving of append /
-    COW upsert / MOR upsert / DELETE WHERE / OPTIMIZE / RESTORE must
-    keep ``read()`` equal to a plain Python dict-model replaying the
-    same commands, and every historical version must stay readable
-    (time travel over mixed COW / MOR / compacted / restored history).
-    This is the strongest single invariant the table layer offers —
-    any interaction bug between delete sets, compaction rewrites, and
+    COW upsert / MOR upsert / COW and MOR DELETE WHERE / OPTIMIZE /
+    RESTORE must keep ``read()`` equal to a plain Python dict-model
+    replaying the same commands, and every historical version must
+    stay readable (time travel over mixed COW / MOR / compacted /
+    restored history). After EVERY commit the external Delta reader
+    (the ``_delta_log`` mirror alone) must equal the model too: no
+    version may exist where the mirror lags the engine. This is the
+    strongest single invariant the table layer offers — any
+    interaction bug between deletion vectors, compaction rewrites, and
     restore's snapshot semantics falsifies it."""
     import os
     import tempfile
 
     from component_delta_lake_writer_spark.sinks import ManagedTable
+    from component_delta_lake_writer_spark.sinks.delta_log import (
+        read_delta_table,
+    )
 
     with tempfile.TemporaryDirectory() as d:
         t = ManagedTable(spark, os.path.join(d, "t"))
@@ -469,6 +476,11 @@ def test_table_lifecycle_model(spark, ops):
 
         def commit_model():
             history.append(dict(model))
+            ext = {
+                r["k"]: r["v"]
+                for r in read_delta_table(spark, t.path).collect()
+            }
+            assert ext == model, f"mirror lags at v{len(history) - 1}"
 
         for op, arg in ops:
             if op in ("append", "upsert_cow", "upsert_mor"):
@@ -509,6 +521,16 @@ def test_table_lifecycle_model(spark, ops):
                     continue
                 t.delete_where(f"k % {arg} = 0")
                 for k in [k for k in model if k % arg == 0]:
+                    del model[k]
+                commit_model()
+            elif op == "delete_mor":
+                # non-key predicate: needs no primary key, marks rows
+                # by position in deletion vectors
+                if not t.exists():
+                    continue
+                t.delete_where(f"v % {arg} = 0", strategy="merge-on-read")
+                for k in [k for k, v in model.items()
+                          if v is not None and v % arg == 0]:
                     del model[k]
                 commit_model()
             elif op == "optimize":

@@ -491,8 +491,8 @@ def test_merge_not_matched_by_source_statement(ex):
 
 def test_delete_statement_uses_dvs_when_enabled(ex):
     """With delta.enableDeletionVectors=true, the DELETE statement
-    takes the merge-on-read path: no data unit rewritten, a delete set
-    committed, correct read-back. Without the property: copy-on-write
+    takes the merge-on-read path: no data unit rewritten, a deletion
+    vector committed, correct read-back. Without the property: copy-on-write
     as before."""
     t = _seed(ex)
     t.set_properties({"delta.enableDeletionVectors": "true"})
@@ -500,9 +500,9 @@ def test_delete_statement_uses_dvs_when_enabled(ex):
     ex.execute("DELETE FROM t WHERE k = 2")
     c = t.latest_commit()
     assert c.data_units == before_units, "DV delete must rewrite nothing"
-    assert c.delete_sets
+    assert c.deletion_vectors
     assert sorted(r["k"] for r in t.read().collect()) == [1, 3]
-    # plain table: copy-on-write (no delete sets)
+    # plain table: copy-on-write (no deletion vectors)
     ex.execute(
         "CREATE OR REPLACE TABLE t3 (k BIGINT, v DOUBLE) USING DELTA"
     )
@@ -512,5 +512,5 @@ def test_delete_statement_uses_dvs_when_enabled(ex):
     ex.execute("INSERT INTO t3 SELECT k, v FROM cw_seed")
     ex.execute("DELETE FROM t3 WHERE k = 1")
     c3 = ex.table("t3").latest_commit()
-    assert not c3.delete_sets
+    assert not c3.deletion_vectors
     assert [r["k"] for r in ex.table("t3").read().collect()] == [2]

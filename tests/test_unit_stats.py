@@ -458,9 +458,12 @@ def test_merge_on_read_delete_rewrites_nothing(ranged_table):
         c = t2.delete_where(
             f"o_orderkey >= {cut}", strategy="merge-on-read"
         )
-        # no data rewritten: identical unit list, one delete set
+        # no data rewritten: identical unit list, one DV file
         assert c.data_units == before.data_units
-        assert len(c.delete_sets) == 1
+        assert c.deletion_vectors
+        assert len(
+            {d["pathOrInlineDv"] for d in c.deletion_vectors.values()}
+        ) == 1
         assert t2.read().count() == n_before - n_match
         assert t2.read().filter(k >= cut).count() == 0
         # time travel unaffected
@@ -468,20 +471,20 @@ def test_merge_on_read_delete_rewrites_nothing(ranged_table):
         # read_where still correct under pending deletes
         assert t2.read_where(f"o_orderkey >= {lo}").count() == n_before - n_match
         # appends after the delete are NOT retro-deleted, even on the
-        # same keys (equality deletes scope to the units they saw)
+        # same keys (deletion vectors mark positions in prior files)
         t2.write(src.filter(k >= cut).limit(7), mode="append")
         assert t2.read().count() == n_before - n_match + 7
         # optimize materializes the deletes away
         oc = t2.optimize()
-        assert oc.delete_sets == []
+        assert oc.deletion_vectors == {}
         assert t2.read().count() == n_before - n_match + 7
-        # vacuum now reclaims the delete file (and stale units)
+        # vacuum now reclaims the stale units
         assert t2.vacuum() >= 1
         assert t2.read().count() == n_before - n_match + 7
 
 
 def test_merge_on_read_delete_then_upsert(spark, tmp_path_str):
-    """Upserts over pending delete sets: touched units materialize the
+    """Upserts over deletion vectors: touched units materialize the
     deletes; untouched units keep theirs."""
     t = ManagedTable(spark, os.path.join(tmp_path_str, "t"))
     df = spark.range(100).select(
@@ -497,7 +500,10 @@ def test_merge_on_read_delete_then_upsert(spark, tmp_path_str):
         ["k"],
     )
     c = t.latest_commit()
-    assert len(c.delete_sets) == 1  # high unit untouched, keeps its set
+    # high unit untouched, keeps its DV
+    assert c.deletion_vectors
+    assert {r.split("/")[1] for r in c.deletion_vectors} <= set(c.data_units)
+    assert sum(d["cardinality"] for d in c.deletion_vectors.values()) == 10
     assert t.read().count() == 90
     assert t.read().filter(F.col("v") == -1).count() == 10
     # upsert touching the high unit materializes the delete there
@@ -508,17 +514,29 @@ def test_merge_on_read_delete_then_upsert(spark, tmp_path_str):
         ["k"],
     )
     c2 = t.latest_commit()
-    assert c2.delete_sets == []
+    assert c2.deletion_vectors == {}
     assert t.read().count() == 90
     assert t.read().filter(F.col("k") >= 90).count() == 0
 
 
-def test_merge_on_read_requires_primary_key(ranged_table):
-    from component_delta_lake_writer_spark.errors import UserException
+def test_merge_on_read_delete_needs_no_primary_key(ranged_table):
+    """Deletion vectors mark row positions, not keys: a merge-on-read
+    DELETE on a table without a primary key succeeds and reads back
+    exactly like the copy-on-write DELETE."""
+    import tempfile
 
-    t, *_ = ranged_table  # no PK on this table
-    with pytest.raises(UserException, match="primary key"):
-        t.delete_where("o_orderkey > 0", strategy="merge-on-read")
+    t, lo, hi, third = ranged_table  # no PK on this table
+    cond = f"o_orderkey >= {lo + third} AND o_orderstatus = 'F'"
+    with tempfile.TemporaryDirectory() as d:
+        out = {}
+        for strategy in ("merge-on-read", "copy-on-write"):
+            t2 = t.clone_to(os.path.join(d, strategy), shallow=True)
+            c = t2.delete_where(cond, strategy=strategy)
+            out[strategy] = (c, sorted(map(tuple, t2.read().collect())))
+        (mor, mor_rows), (_cow, cow_rows) = out.values()
+        assert not mor.primary_key and mor.deletion_vectors
+        assert mor_rows == cow_rows
+        assert len(mor_rows) < t.read().count()
 
 
 @pytest.mark.slow
@@ -578,7 +596,7 @@ def test_parse_conjuncts_grammar():
 
 
 # ---------------------------------------------------------------------------
-# merge-on-read UPSERT (equality-delete the source PKs + append)
+# merge-on-read UPSERT (deletion vectors on the source PKs + append)
 # ---------------------------------------------------------------------------
 
 
@@ -596,7 +614,11 @@ def test_merge_on_read_upsert_rewrites_nothing(spark, tmp_path_str):
     c = t.upsert(src, ["k"], strategy="merge-on-read")
     assert c.data_units[: len(before.data_units)] == list(before.data_units)
     assert len(c.data_units) == len(before.data_units) + 1
-    assert len(c.delete_sets) == 1
+    # the 10 overlapping keys (90-99) are marked, in the prior unit only
+    assert sum(d["cardinality"] for d in c.deletion_vectors.values()) == 10
+    assert {r.split("/")[1] for r in c.deletion_vectors} <= set(
+        before.data_units
+    )
     out = t.read()
     assert out.count() == 110
     assert out.filter(F.col("v") == -1).count() == 20
@@ -606,7 +628,7 @@ def test_merge_on_read_upsert_rewrites_nothing(spark, tmp_path_str):
         t.read(version=before.version).filter(F.col("v") == -1).count() == 0
     )
     # stacking: a second MOR upsert over keys now living in the FIRST
-    # MOR unit must override them too (its delete set scopes to every
+    # MOR unit must override them too (its key match scopes to every
     # prior unit, including MOR appends)
     src2 = spark.range(95, 105).select(
         F.col("id").alias("k"), F.lit(-2).cast("long").alias("v")
@@ -618,7 +640,7 @@ def test_merge_on_read_upsert_rewrites_nothing(spark, tmp_path_str):
     assert out2.filter(F.col("v") == -1).count() == 10  # 90-94, 105-109
     # optimize materializes all pending deletes
     oc = t.optimize()
-    assert oc.delete_sets == []
+    assert oc.deletion_vectors == {}
     assert t.read().count() == 110
     assert t.read().filter(F.col("v") == -2).count() == 10
 
@@ -627,8 +649,8 @@ def test_merge_on_read_upsert_disjoint_batch_is_pure_append(
     spark, tmp_path_str
 ):
     """Source keys beyond every unit's recorded bounds: stats scoping
-    drops every unit from the delete set, so the commit is a pure
-    append with no delete file at all."""
+    drops every unit from the match, so the commit is a pure append
+    with no deletion vector at all."""
     t = ManagedTable(spark, os.path.join(tmp_path_str, "t"))
     df = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
@@ -638,7 +660,7 @@ def test_merge_on_read_upsert_disjoint_batch_is_pure_append(
         F.col("id").alias("k"), F.lit(1).cast("long").alias("v")
     )
     c = t.upsert(src, ["k"], strategy="merge-on-read")
-    assert c.delete_sets == []
+    assert c.deletion_vectors == {}
     assert t.read().count() == 120
 
 
