@@ -72,9 +72,9 @@ def table_exists(spark: SparkSession, table: str) -> bool:
 def msck_repair(spark: SparkSession, table_path: str) -> DataFrame:
     """W14: ``MSCK REPAIR TABLE … SYNC METADATA``
     (src/component.py:113-115). The reference resyncs Unity Catalog
-    from the Delta log after an external write; here the repair
-    regenerates any ``_delta_log`` entries missing for committed
-    versions (ManagedTable.sync_metadata) and reports the count in the
+    from the Delta log after an external write; here it converts a
+    table an earlier engine version wrote to the ``_delta_log``-only
+    layout (ManagedTable.sync_metadata) and reports the count in the
     action's (value, label) contract."""
     from component_delta_lake_writer_spark.sinks import ManagedTable
 
@@ -82,7 +82,7 @@ def msck_repair(spark: SparkSession, table_path: str) -> DataFrame:
     if not t.exists():
         raise UserException(f"No table at {table_path}")
     n = t.sync_metadata()
-    return _elements(spark, [(str(n), f"regenerated {n} delta-log entries")])
+    return _elements(spark, [(str(n), f"converted {n} legacy table log")])
 
 
 ACTIONS = {

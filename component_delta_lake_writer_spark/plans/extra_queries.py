@@ -3349,7 +3349,7 @@ def url_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 def delta_log_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta-interop proof: append ×2 then copy-on-write upsert, then
     reconstruct the snapshot PURELY from ``_delta_log/`` actions
-    (add/remove replay + schemaString), never consulting ``_commits`` —
+    (add/remove replay + schemaString), never consulting the engine —
     what an external Delta reader does with the tables the reference
     writes via delta-rs (src/component.py:356)."""
     import shutil
@@ -3449,7 +3449,7 @@ def delta_dv_external_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot is read back EXCLUSIVELY the way an external Delta reader
     would (sinks.delta_log.read_delta_table: checkpoint-aware replay →
     descriptors → bitmap parse → row-position skip; never consults
-    ``_commits``), with logically-deleted rows still physically present
+    the engine), with logically-deleted rows still physically present
     in parquet.
 
     Reference parity: the reference's delta-rs write path
@@ -3937,7 +3937,7 @@ def cdf_external_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     hardlinked ``_change_data/`` files referenced by ``cdc`` actions;
     the probe reconstructs table_changes from the MIRROR ALONE
     (sinks.delta_log.read_delta_table_changes) — never consulting
-    ``_commits`` or ``_changes`` — and the oracle fully predicts both
+    the engine or ``_changes`` — and the oracle fully predicts both
     versions' attributed rows."""
     import shutil
 

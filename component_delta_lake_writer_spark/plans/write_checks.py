@@ -367,9 +367,10 @@ def analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex.execute(f"CONVERT TO DELTA parquet.`{raw}` NO STATISTICS AS t")
     t = ex.table("t")
     c0 = t.latest_commit()
-    assert set(next(iter(c0.stats.values()))) == {"_rows"}, (
-        "NO STATISTICS must record row counts only"
-    )
+    st = next(iter(c0.stats.values()))
+    assert set(st) == {"_rows", "_files"} and all(
+        set(f) == {"_rows"} for f in st["_files"].values()
+    ), "NO STATISTICS must record row counts only, per unit and file"
     ex.execute("ANALYZE TABLE t COMPUTE STATISTICS")
     c1 = t.latest_commit()
     assert c1.action == "analyze"

@@ -19,6 +19,6 @@ CDF_METADATA_ONLY_ACTIONS = (
     "optimize", "add_constraint", "drop_constraint",
     "set_properties", "add_column", "drop_column",
     "rename_column", "alter_column_default",
-    "widen_column_type",
+    "widen_column_type", "sync_metadata",
 )
 CDF_CHANGE_SET_ACTIONS = ("upsert", "delete", "update", "replace_where")

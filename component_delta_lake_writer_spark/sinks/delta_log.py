@@ -1,27 +1,32 @@
-"""Delta-compatible transaction log emission for ManagedTable.
+"""The Delta transaction log — ManagedTable's one and only log.
 
 The reference writes true Delta tables via delta-rs
 (``write_deltalake``, src/component.py:356 era — any Delta reader can
 open them). delta-spark is not a dependency in this environment, so
-ManagedTable keeps its own ``_commits`` snapshot log as the engine's
-source of truth — and ALSO emits the equivalent ``_delta_log/``
-JSON actions per the open Delta protocol
-(https://github.com/delta-io/delta/blob/master/PROTOCOL.md) so that
-external Delta readers (delta-rs, delta-spark, DuckDB's delta
-extension) can open the same table:
+this module implements the log directly per the open Delta protocol
+(https://github.com/delta-io/delta/blob/master/PROTOCOL.md); the
+engine and external Delta readers (delta-rs, delta-spark, DuckDB's
+delta extension) read the same ``_delta_log/``:
 
 - ``_delta_log/{version:020d}.json`` — one file per commit, newline-
-  delimited JSON actions
-- version 0 carries ``protocol`` + ``metaData`` (schemaString is the
-  Spark schema JSON — the exact format Delta uses)
-- every commit carries ``add`` actions for new parquet files and
-  ``remove`` actions for files dropped from the snapshot (overwrite /
-  upsert copy-on-write / optimize compaction)
-- ``metaData`` is re-emitted when the schema evolves
-  (schema_mode='merge')
-- partition values are recovered from the Hive-style directory layout
-  Spark wrote (the same layout delta-rs produces for partitioned
-  tables)
+  delimited JSON actions, claimed by exclusive create (the spec's
+  put-if-absent): two writers racing for one version get one winner
+  and one "Concurrent commit conflict"
+- ``protocol`` + ``metaData`` at version 0 and whenever they change
+  (schemaString is the Spark schema JSON — the exact format Delta
+  uses)
+- ``add`` actions for new parquet files (with Delta-standard
+  ``stats``) and ``remove`` actions for files dropped from the
+  snapshot; partition values come from the Hive-style directory
+  layout Spark wrote (the same layout delta-rs produces)
+- ``txn``, ``domainMetadata`` and ``commitInfo`` for writer
+  watermarks, table-level state and the commit clock
+- ``{version}.crc`` checksums, Parquet checkpoints every 10 commits
+  (classic, multi-part or v2) and optional minor log compactions
+
+``_replay_steps`` is the one checkpoint-aware replay: the engine's
+snapshot, the external-reader helpers, checkpoints and compactions
+all fold the same ``_apply_actions`` over the same files.
 
 The TIMESTAMP_NTZ type requires the ``timestampNtz`` table feature
 (reader v3 / writer v7); the emitted protocol is upgraded exactly when
@@ -31,18 +36,16 @@ Merge-on-read: ``delete_where``/``delete_keys`` and
 ``upsert(strategy='merge-on-read')`` delete rows as real Delta
 **deletion vectors** (binary RoaringBitmapArray files +
 ``deletionVector`` descriptors on add/remove, reader v3 / writer v7
-feature ``deletionVectors`` — see ``deletion_vectors.py``). The
-engine's commit records the same descriptors, so each entry is the
-commit's diff against its parent: a file whose bitmap changed gets a
-remove of its previous incarnation and an add carrying the new
-descriptor, and external readers skip exactly the rows the engine
-skips, at every version.
+feature ``deletionVectors`` — see ``deletion_vectors.py``): a file
+whose bitmap changed gets a remove of its previous incarnation and an
+add carrying the new descriptor.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import urllib.parse
 import uuid
@@ -50,18 +53,13 @@ import uuid
 _DELTA_LOG = "_delta_log"
 
 
-_VERSION_RE = None
+_VERSION_RE = re.compile(r"^(\d{20})\.json$")
 
 
 def _log_versions(log_dir: str) -> list[int]:
     """Committed version numbers in a log dir — STRICT 20-digit name
     match, so tmp files, checkpoints and compacted ranges never parse
     as versions."""
-    import re as _re
-
-    global _VERSION_RE
-    if _VERSION_RE is None:
-        _VERSION_RE = _re.compile(r"^(\d{20})\.json$")
     out = []
     for f in os.listdir(log_dir):
         m = _VERSION_RE.match(f)
@@ -121,11 +119,6 @@ def _type_uses_ntz(t) -> bool:
                 t.get("valueType")
             )
     return False
-
-
-def _needs_timestamp_ntz(schema_json: str) -> bool:
-    s = json.loads(schema_json)
-    return any(_type_uses_ntz(f.get("type")) for f in s.get("fields", []))
 
 
 def _protocol_action(
@@ -234,9 +227,9 @@ def _protocol_action(
     return {"protocol": {"minReaderVersion": reader, "minWriterVersion": writer}}
 
 
-def _prior_mapping_ids(log_dir: str) -> tuple[dict, int]:
-    """(physical path → columnMapping id, maxColumnId) from the
-    mirror's most recent metaData. Ids are IMMUTABLE per the spec — a
+def _mapping_ids(md: dict | None) -> tuple[dict, int]:
+    """(physical path → columnMapping id, maxColumnId) from a metaData
+    action (the parent snapshot's). Ids are IMMUTABLE per the spec — a
     column keeps its id across renames (physical name is the stable
     key) and drops must not renumber survivors; maxColumnId only
     grows. Keys MUST mirror ``_mapped_schema_string.assign``'s exactly:
@@ -244,7 +237,6 @@ def _prior_mapping_ids(log_dir: str) -> tuple[dict, int]:
     the dotted physical path (``parent.child``, ``parent.element``, …)
     — walking only top level would lose every nested id and re-emission
     would renumber them, violating id immutability for nested data."""
-    md = _latest_metadata(log_dir)
     if md is None:
         return {}, 0
     ids: dict = {}
@@ -382,493 +374,147 @@ def _metadata_action(
     }
 
 
-def write_delta_log_entry(
-    table_path: str,
-    data_dir_name: str,
-    version: int,
+def scalar_properties(props: dict | None) -> dict:
+    """The TBLPROPERTIES view of engine table properties that external
+    Delta readers see in ``metaData.configuration``: Delta's
+    CHECK-constraint convention (one ``delta.constraints.<name>`` per
+    constraint — external writers must see and enforce them),
+    booleans as ``true``/``false``, numbers as strings; composite
+    engine values (column lists) have no TBLPROPERTIES form and only
+    ride the ``engine.properties`` entry."""
+    out = {}
+    for k, v in (props or {}).items():
+        if k == "constraints" and isinstance(v, dict):
+            for name, expr in v.items():
+                out[f"delta.constraints.{name}"] = str(expr)
+        elif isinstance(v, bool):
+            out[k] = "true" if v else "false"
+        elif isinstance(v, (str, int, float)):
+            out[k] = str(v)
+    return out
+
+
+def table_actions(
+    state: dict,
     schema_json: str,
     partition_by: list[str],
+    column_mapping: dict,
+    configuration: dict,
+    extra_caps: set,
     timestamp_ms: int,
-    new_units: list[str],
-    removed_units: list[str],
-    prev_schema_json: str | None,
-    column_mapping: dict | None = None,
-    prev_column_mapping: dict | None = None,
-    operation: str = "WRITE",
-    txn: tuple[str, int] | None = None,
-    dv_adds: dict | None = None,
-    current_dvs: dict | None = None,
-    row_tracking: dict | None = None,
-    ict: dict | None = None,
-    clustering: dict | None = None,
-    checkpoint_policy: dict | None = None,
-    table_properties: dict | None = None,
-    prev_table_properties: dict | None = None,
-    cdc_files: list | None = None,
-) -> str:
-    """Emit ``_delta_log/{version}.json`` for one commit. Returns the
-    written path. Idempotent per version (atomic link, first wins).
-
-    ``dv_adds`` maps table-relative parquet paths of live files to
-    their NEW ``deletionVector`` descriptor (None: the file's DV is
-    gone, e.g. after RESTORE). A file of a ``new_units`` unit gets the
-    descriptor on its add; any other file gets a remove of its
-    previous incarnation (carrying the prior descriptor from
-    ``current_dvs`` when one exists — Delta reconciliation keys
-    actions by (path, dvId)) followed by an add carrying the new one.
-    The first descriptor also brings a protocol upgrade to the
-    ``deletionVectors`` table feature and a metaData re-emission
-    setting ``delta.enableDeletionVectors=true``. ``current_dvs`` (the
-    parent snapshot's descriptors) also attaches them to removed-unit
-    removes.
+) -> list[dict]:
+    """The ``protocol`` / ``metaData`` actions a commit must emit
+    against its parent snapshot ``state``: metaData exactly when its
+    content changed (schema, partitioning, mapping, configuration),
+    keeping the table id and createdTime of the table's creation;
+    protocol whenever the capabilities in use GREW. Delta never
+    auto-downgrades: when a rewrite drops a capability (e.g. an
+    overwrite losing CURRENT_DEFAULT) the prior protocol stands —
+    ``_protocol_upgrade`` returns the monotonic max or None.
 
     ``column_mapping`` (logical→physical names from RENAME COLUMN) is
     mirrored as Delta columnMapping mode=name: schemaString fields
-    carry ``delta.columnMapping.{id,physicalName}`` metadata and the
-    protocol upgrades to reader 2 / writer 5 the first time the map
-    becomes non-empty (3/7 + feature names when timestampNtz already
-    forced table features).
-
-    ``row_tracking`` (Delta rowTracking writer feature, PROTOCOL.md
-    §Row Tracking): ``{"high_water": int, "files": {table-relative
-    path: {"baseRowId": int, "defaultRowCommitVersion": int}},
-    "newly": bool}``. Emits the ``delta.rowTracking`` domainMetadata
-    action carrying ``rowIdHighWaterMark``, stamps every add (and DV
-    re-add) with its file's baseRowId/defaultRowCommitVersion, and on
-    first enablement ("newly") re-emits metaData with
-    ``delta.enableRowTracking=true`` plus a protocol upgrade to the
-    ``rowTracking``+``domainMetadata`` writer features.
-
-    ``ict`` (Delta inCommitTimestamp writer feature):
-    ``{"timestamp": int, "config": {…enablement properties…},
-    "newly": bool}``. Makes commitInfo the FIRST action of the commit
-    (spec requirement) carrying ``inCommitTimestamp``; "newly"
-    re-emits metaData with ``delta.enableInCommitTimestamps=true``
-    (+ the enablement version/timestamp properties when enabled after
-    table creation) and upgrades the protocol.
-
-    ``table_properties`` / ``prev_table_properties``: the commit's
-    engine table properties. Scalar-valued entries are mirrored into
-    ``metaData.configuration`` — Delta's TBLPROPERTIES ARE the
-    metaData configuration, so external readers must see them (and a
-    SET/UNSET TBLPROPERTIES commit re-emits metaData exactly when the
-    mirrored view changed). Composite engine-internal values
-    (constraint dicts, column lists) are engine state, not
-    TBLPROPERTIES, and stay out. Feature-derived flags override on
-    key collision (they are authoritative).
-
-    ``cdc_files`` ([(table-relative path, size), …]): this commit's
-    change-data files (Delta CDF) — each becomes a ``cdc`` action
-    (``dataChange=false``), the spec's signal that readers computing
-    table_changes for this version must use these files INSTEAD of
-    deriving changes from add/remove. Never checkpointed (cdc actions
-    are not snapshot state).
-
-    ``checkpoint_policy`` (Delta v2Checkpoint table feature):
-    ``{"policy": "v2", "newly": bool}``. "newly" re-emits metaData
-    with ``delta.checkpointPolicy=v2`` and upgrades the protocol to
-    reader 3 / writer 7 with the ``v2Checkpoint`` feature in BOTH
-    lists (the spec requires readers to understand checkpointMetadata
-    + sidecar actions before trusting such checkpoints).
-
-    ``clustering`` (Delta clustered-table writer feature):
-    ``{"columns": [logical col, …], "newly": bool}``. "newly" (the
-    clustering columns changed this commit) emits the
-    ``delta.clustering`` domainMetadata carrying ``clusteringColumns``
-    and upgrades the protocol to the ``clustering`` (+
-    ``domainMetadata``) writer features; unchanged clustering emits
-    nothing — the standing domain metadata (and its checkpoint row)
-    already describes the table."""
-    log_dir = os.path.join(table_path, _DELTA_LOG)
-    os.makedirs(log_dir, exist_ok=True)
-
-    cm = column_mapping or {}
-    prev_cm = prev_column_mapping or {}
-
-    def _scalar_props(d: dict | None) -> dict:
-        out = {}
-        for k, v in (d or {}).items():
-            if k == "constraints" and isinstance(v, dict):
-                # Delta's CHECK-constraint convention: one
-                # delta.constraints.<name> = <expr> property each —
-                # external writers must see (and enforce) them
-                for name, expr in v.items():
-                    out[f"delta.constraints.{name}"] = str(expr)
-            elif isinstance(v, bool):
-                out[k] = "true" if v else "false"
-            elif isinstance(v, (str, int, float)):
-                out[k] = str(v)
-        return out
-
-    user_cfg = _scalar_props(table_properties)
-    _has_constraints = bool(
-        (table_properties or {}).get("constraints")
-    ) or any(k.startswith("delta.constraints.") for k in user_cfg)
-    dv_adds = dv_adds or {}
-    current_dvs = current_dvs or {}
-    dv_new = any(d is not None for d in dv_adds.values())
-
-    # deletionVectors is a commit-driven capability: live once the log
-    # carries (or this commit introduces) any descriptor. Resolved
-    # LAZILY — _log_has_dv_config is an O(history) newest-first scan
-    # and only the (rare) metaData/protocol emission branches need it;
-    # evaluating it per commit made every append pay the scan.
-    _dv_cfg_cache: list = []
-
-    def _log_dv_cfg() -> bool:
-        if not _dv_cfg_cache:
-            _dv_cfg_cache.append(_log_has_dv_config(log_dir))
-        return _dv_cfg_cache[0]
-
-    def _dv_live() -> bool:
-        return dv_new or _log_dv_cfg()
-
-    # v2Checkpoint is sticky the same way (the spec's checkpoint
-    # policy cannot silently revert: readers may hold v2 manifests);
-    # resolved lazily — only metaData/protocol emission branches ask
-    _cp_cache: list = []
-
-    def _cp_live() -> bool:
-        if checkpoint_policy is not None:
-            return True
-        if not _cp_cache:
-            md = _latest_metadata(log_dir) or {}
-            _cp_cache.append(
-                (md.get("configuration") or {}).get(
-                    "delta.checkpointPolicy"
-                )
-                == "v2"
-            )
-        return _cp_cache[0]
-
-    def _extra_caps() -> set:
-        caps = {"deletionVectors"} if _dv_live() else set()
-        if row_tracking is not None:
-            caps |= {"rowTracking", "domainMetadata"}
-        if ict is not None:
-            caps.add("inCommitTimestamp")
-        if clustering is not None:
-            caps |= {"clustering", "domainMetadata"}
-        if _cp_live():
-            caps.add("v2Checkpoint")
-        if _has_constraints:
-            caps.add("checkConstraints")
-        return caps
-
-    def _feature_config() -> dict:
-        """metaData ``configuration`` entries for every live
-        commit-driven feature — any metaData re-emission must carry
-        all of them or external readers would see a feature's
-        property flip off."""
-        cfg: dict = {}
-        if _dv_live():
-            cfg["delta.enableDeletionVectors"] = "true"
-        if row_tracking is not None:
-            cfg["delta.enableRowTracking"] = "true"
-            if row_tracking.get("mat_row_id_col"):
-                cfg[
-                    "delta.rowTracking.materializedRowIdColumnName"
-                ] = row_tracking["mat_row_id_col"]
-            if row_tracking.get("mat_rcv_col"):
-                cfg[
-                    "delta.rowTracking."
-                    "materializedRowCommitVersionColumnName"
-                ] = row_tracking["mat_rcv_col"]
-        if ict is not None:
-            cfg["delta.enableInCommitTimestamps"] = "true"
-            cfg.update(ict.get("config") or {})
-        if _cp_live():
-            cfg["delta.checkpointPolicy"] = "v2"
-        # TBLPROPERTIES ride metaData.configuration; feature-derived
-        # flags above override on collision (authoritative)
-        return {**user_cfg, **cfg}
-
-    actions: list[dict] = []
-    if txn is not None:
-        # Delta txn action (setTransaction): the idempotent-writer
-        # watermark external writers consult before re-applying
-        actions.append(
-            {"txn": {"appId": txn[0], "version": txn[1],
-                     "lastUpdated": timestamp_ms}}
-        )
-    need_meta = (
-        version == 0
-        or (prev_schema_json is not None and prev_schema_json != schema_json)
-        or cm != prev_cm
-        # first DV emission: metaData re-emits to carry
-        # delta.enableDeletionVectors (the protocol feature is what
-        # readers REQUIRE; the property is what real writers set)
-        or (dv_new and not _log_dv_cfg())
-        # first rowTracking / inCommitTimestamp enablement: same rule
-        or bool(row_tracking and row_tracking.get("newly"))
-        or bool(ict and ict.get("newly"))
-        # first clustering declaration: the protocol upgrade path
-        # below runs only when metaData re-emits
-        or bool(clustering and clustering.get("newly"))
-        or bool(checkpoint_policy and checkpoint_policy.get("newly"))
-        # TBLPROPERTIES changed (SET/UNSET or a properties-carrying
-        # write): the mirrored configuration view must update
-        or (
-            table_properties is not None
-            and user_cfg != _scalar_props(prev_table_properties)
-        )
+    carry ``delta.columnMapping.{id,physicalName}`` metadata (ids from
+    the parent's schemaString — immutable), and once enabled the mode
+    stays name (the spec forbids disabling it), with identity physical
+    names after a materializing rewrite. ``extra_caps`` are the
+    commit-driven (non-schema) capabilities: deletionVectors,
+    rowTracking, inCommitTimestamp, clustering, v2Checkpoint,
+    checkConstraints."""
+    prev_md = state["metaData"]
+    prev_cfg = (prev_md or {}).get("configuration") or {}
+    mapped = bool(column_mapping) or (
+        prev_cfg.get("delta.columnMapping.mode") == "name"
     )
-    if version == 0:
-        actions.append(
-            _protocol_action(schema_json, bool(cm), _extra_caps())
+    ids, max_id = _mapping_ids(prev_md) if mapped else ({}, 0)
+    md = _metadata_action(
+        prev_md["id"] if prev_md else uuid.uuid4().hex,
+        schema_json,
+        partition_by,
+        prev_md.get("createdTime", timestamp_ms) if prev_md else timestamp_ms,
+        column_mapping=column_mapping if mapped else None,
+        prior_ids=ids,
+        prior_max_id=max_id,
+        extra_config=configuration,
+    )
+    out: list[dict] = []
+    needed = _protocol_action(schema_json, bool(column_mapping), extra_caps)
+    if state["protocol"] is None:
+        out.append(needed)
+    else:
+        up = _protocol_upgrade(
+            {"protocol": state["protocol"]},
+            needed,
+            _used_caps(schema_json, bool(column_mapping)) | set(extra_caps),
         )
-        actions.append(
-            _metadata_action(
-                uuid.uuid4().hex, schema_json, partition_by, timestamp_ms,
-                column_mapping=cm if cm else None,
-                extra_config=_feature_config(),
-            )
-        )
-    elif need_meta:
-        # schema evolution, a mapping change (rename / REORG reset) or
-        # DV enablement: re-emit metaData, keeping the table id from
-        # version 0. Once any commit enabled column mapping the mode
-        # stays name (spec: cannot be disabled), with identity
-        # physical names after a materializing rewrite.
-        tid = _table_id(log_dir) or uuid.uuid4().hex
-        # createdTime is fixed at table creation (Delta convention);
-        # re-emissions must carry v0's value, not this commit's clock
-        created = _table_created_ms(log_dir)
-        mapped_mode = bool(cm or prev_cm or _log_has_mapping(log_dir))
-        # re-emit the protocol whenever the capabilities the schema
-        # needs actually GREW (timestampNtz flip, mapping enabled,
-        # first DEFAULT column, first type widening, first DV, …).
-        # Delta never auto-downgrades: when a rewrite drops a
-        # capability (e.g. an overwrite losing CURRENT_DEFAULT), the
-        # prior protocol stands and nothing is emitted —
-        # _protocol_upgrade returns the monotonic max or None.
-        needed = _protocol_action(schema_json, bool(cm), _extra_caps())
-        last = _log_last_protocol(log_dir)
-        if last is None:
-            actions.append(needed)
-        else:
-            up = _protocol_upgrade(
-                last, needed,
-                _used_caps(schema_json, bool(cm)) | _extra_caps(),
-            )
-            if up is not None:
-                actions.append(up)
-        prior_ids, prior_max = (
-            _prior_mapping_ids(log_dir) if mapped_mode else ({}, 0)
-        )
-        actions.append(
-            _metadata_action(
-                tid, schema_json, partition_by,
-                created if created is not None else timestamp_ms,
-                column_mapping=cm if mapped_mode else None,
-                prior_ids=prior_ids, prior_max_id=prior_max,
-                extra_config=_feature_config(),
-            )
-        )
+        if up is not None:
+            out.append(up)
+    if md["metaData"] != prev_md:
+        out.append(md)
+    return out
 
-    if clustering is not None and clustering.get("newly"):
-        # domainMetadata delta.clustering: the table's clustering
-        # columns (Delta clustered-table state; latest-wins per
-        # domain) — nested-array form per the spec, one single-element
-        # path per top-level column
-        actions.append(
-            {
-                "domainMetadata": {
-                    "domain": "delta.clustering",
-                    "configuration": json.dumps(
-                        {
-                            "clusteringColumns": [
-                                [c] for c in clustering["columns"]
-                            ]
-                        }
-                    ),
-                    "removed": False,
-                }
-            }
-        )
-    if row_tracking is not None:
-        # domainMetadata delta.rowTracking (latest-wins per domain in
-        # replay/checkpoint): the fresh-row-id high-water mark every
-        # spec-compliant row-tracking writer must advance through
-        actions.append(
-            {
-                "domainMetadata": {
-                    "domain": "delta.rowTracking",
-                    "configuration": json.dumps(
-                        {
-                            "rowIdHighWaterMark": int(
-                                row_tracking.get("high_water", -1)
-                            )
-                        }
-                    ),
-                    "removed": False,
-                }
-            }
-        )
 
-    def _rt_fields(rel: str) -> dict:
-        """baseRowId/defaultRowCommitVersion for one file's add (or
-        DV re-add — a re-added file KEEPS its ids; that is the whole
-        stability contract)."""
-        if row_tracking is None:
-            return {}
-        ent = (row_tracking.get("files") or {}).get(rel)
-        if ent is None:
-            return {}
-        return {
-            "baseRowId": ent["baseRowId"],
-            "defaultRowCommitVersion": ent["defaultRowCommitVersion"],
-        }
-
-    for unit in removed_units:
-        for rel, _size, _mtime, _pvals in _walk_parquet(table_path, os.path.join(data_dir_name, unit)):
-            rm = {
-                "path": _encode_path(rel),
-                "deletionTimestamp": timestamp_ms,
-                "dataChange": True,
-                # optional per spec; carried so the version checksum
-                # (.crc) can maintain tableSizeBytes incrementally
-                "size": _size,
-            }
-            if rel in current_dvs:
-                # reconciliation is keyed by (path, dvId): a remove
-                # without the descriptor would not cancel the
-                # DV-bearing add
-                rm["deletionVector"] = current_dvs[rel]
-            actions.append({"remove": rm})
-    emitted_adds: set = set()
-    for unit in new_units:
-        for rel, size, mtime, pvals in _walk_parquet(table_path, os.path.join(data_dir_name, unit)):
-            emitted_adds.add(rel)
-            add = {
-                "path": _encode_path(rel),
-                "partitionValues": pvals,
-                "size": size,
-                "modificationTime": mtime,
-                "dataChange": True,
-                **_rt_fields(rel),
-            }
-            if dv_adds.get(rel) is not None:
-                # a re-added unit (RESTORE) brings its deletions along
-                add["deletionVector"] = dv_adds[rel]
-            actions.append({"add": add})
-    if row_tracking is not None and row_tracking.get("newly") and version > 0:
-        # mid-history enablement BACKFILL (Delta's own enablement
-        # shape): every live file already in the log re-commits its
-        # add with baseRowId/defaultRowCommitVersion, dataChange=false
-        # — reconciliation is last-add-wins by path, and without this
-        # the external reader would resolve NULL ids for every
-        # pre-enablement row while the engine returns real ones. The
-        # prior add supplies partitionValues/size AND any live
-        # deletionVector descriptor — re-adding without the descriptor
-        # would resurrect the masked rows.
-        prior_adds = _replay_state(table_path)["adds"]
-        for rel in sorted(row_tracking.get("files") or {}):
-            if rel in emitted_adds or rel in dv_adds:
-                continue
-            pa_act = prior_adds.get(rel)
-            if pa_act is None:
-                continue  # not in the mirror yet (fresh this commit)
-            new_add = dict(pa_act)
-            # _replay_state decodes action paths to fs form; re-encode
-            new_add["path"] = _encode_path(rel)
-            new_add["dataChange"] = False
-            new_add.update(_rt_fields(rel))
-            actions.append({"add": new_add})
-    # DV swap: retract each affected file's previous incarnation and
-    # re-add it with the new descriptor (same physical parquet)
-    for rel in sorted(set(dv_adds) - emitted_adds):
-        rm = {
-            "path": _encode_path(rel),
-            "deletionTimestamp": timestamp_ms,
-            "dataChange": True,
-            "size": os.stat(os.path.join(table_path, rel)).st_size,
-        }
-        if rel in current_dvs:
-            rm["deletionVector"] = current_dvs[rel]
-        actions.append({"remove": rm})
-        full = os.path.join(table_path, rel)
-        st = os.stat(full)
-        from component_delta_lake_writer_spark.sinks.hive_layout import (
-            decode_segments,
-        )
-
-        # partition values come from the hive dirs between the unit
-        # dir and the file name (same derivation as _walk_parquet)
-        parts = rel.split("/")
-        mid = "/".join(parts[2:-1])  # data_dir/unit/<mid...>/file
-        add = {
-            "path": _encode_path(rel),
-            "partitionValues": decode_segments(mid if mid else "."),
-            "size": st.st_size,
-            "modificationTime": int(st.st_mtime * 1000),
-            "dataChange": True,
-            **_rt_fields(rel),
-        }
-        if dv_adds[rel] is not None:
-            add["deletionVector"] = dv_adds[rel]
-        actions.append({"add": add})
-    for rel, size in cdc_files or []:
-        actions.append(
-            {
-                "cdc": {
-                    "path": _encode_path(rel),
-                    "partitionValues": {},
-                    "size": int(size),
-                    "dataChange": False,
-                }
-            }
-        )
-    commit_info = {
-        "commitInfo": {
-            "timestamp": timestamp_ms,
-            "operation": operation,
-            "engineInfo": "component-delta-lake-writer-spark",
+def domain_action(domain: str, config: dict) -> dict:
+    """A ``domainMetadata`` action (latest-wins per domain)."""
+    return {
+        "domainMetadata": {
+            "domain": domain,
+            "configuration": json.dumps(config),
+            "removed": False,
         }
     }
-    if ict is not None:
-        # spec: under inCommitTimestamp, commitInfo MUST be the FIRST
-        # action and carry the monotonic in-commit timestamp
-        commit_info["commitInfo"]["inCommitTimestamp"] = int(
-            ict["timestamp"]
-        )
-        actions.insert(0, commit_info)
-    else:
-        actions.append(commit_info)
 
+
+def write_delta_log_entry(
+    table_path: str, version: int, actions: list[dict], state: dict
+) -> list | None:
+    """Commit ``actions`` as ``_delta_log/{version}.json``: the version
+    is claimed by exclusive create (``os.link`` fails with EEXIST when
+    the entry exists, so two racing writers cannot both claim it — a
+    plain rename would silently replace; on object stores this maps to
+    a conditional PUT, if-none-match). The loser gets the "Concurrent
+    commit conflict" UserException and ``state`` is untouched. The
+    winner folds the actions into ``state`` (the parent snapshot,
+    advanced in place), writes the version checksum and returns
+    ``_apply_actions``' touched paths."""
+    from component_delta_lake_writer_spark.errors import UserException
+
+    log_dir = os.path.join(table_path, _DELTA_LOG)
+    os.makedirs(log_dir, exist_ok=True)
     final = os.path.join(log_dir, f"{version:020d}.json")
     tmp = final + f".tmp.{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         for a in actions:
             f.write(json.dumps(a) + "\n")
     try:
-        os.link(tmp, final)  # same conditional-publish as _commits
+        os.link(tmp, final)
     except FileExistsError:
-        pass  # a racing writer already published this version's entry
+        raise UserException(
+            f"Concurrent commit conflict at version {version}"
+        ) from None
     finally:
         os.unlink(tmp)
-    _write_version_crc(table_path, version, actions)
-    return final
+    touched = _apply_actions(state, actions, version)
+    _write_version_crc(table_path, version, actions, state)
+    return touched
 
 
 def _write_version_crc(
-    table_path: str, version: int, actions: list[dict]
+    table_path: str, version: int, actions: list[dict], state: dict
 ) -> None:
     """Delta VERSION CHECKSUM: ``{version}.crc`` next to each commit
     with the post-commit state aggregates (tableSizeBytes, numFiles,
     metadata, protocol) — what delta-spark emits per commit and uses
     to validate snapshot state. Maintained INCREMENTALLY from the
     previous version's .crc (+add sizes, -remove sizes; our removes
-    carry the optional ``size``), falling back to one checkpoint-
-    bounded replay when the previous .crc is missing or the commit
+    carry the optional ``size``), falling back to the post-commit
+    snapshot ``state`` when the previous .crc is missing or the commit
     re-adds live files (dataChange=false re-adds: row-tracking
-    backfill / carried DV re-adds — reconciliation replaces by path,
-    which per-aggregate increments cannot express)."""
+    backfill / conversion — reconciliation replaces by path, which
+    per-aggregate increments cannot express)."""
     log_dir = os.path.join(table_path, _DELTA_LOG)
     adds = [a["add"] for a in actions if "add" in a]
     removes = [a["remove"] for a in actions if "remove" in a]
-    meta = next((a["metaData"] for a in actions if "metaData" in a), None)
-    proto = next((a["protocol"] for a in actions if "protocol" in a), None)
     prev_p = os.path.join(log_dir, f"{version - 1:020d}.crc")
     prev: dict | None = None
     if version > 0 and os.path.exists(prev_p):
@@ -883,30 +529,22 @@ def _write_version_crc(
         and all(r.get("size") is not None for r in removes)
     )
     if incremental:
-        base_bytes = prev["tableSizeBytes"] if prev else 0
-        base_files = prev["numFiles"] if prev else 0
         size = (
-            base_bytes
+            (prev["tableSizeBytes"] if prev else 0)
             + sum(int(a["size"]) for a in adds)
             - sum(int(r["size"]) for r in removes)
         )
-        nfiles = base_files + len(adds) - len(removes)
-        meta = meta or (prev or {}).get("metadata")
-        proto = proto or (prev or {}).get("protocol")
+        nfiles = (prev["numFiles"] if prev else 0) + len(adds) - len(removes)
     else:
-        st = _replay_state(table_path)
-        size = sum(int(a["size"]) for a in st["adds"].values())
-        nfiles = len(st["adds"])
-        meta = meta or _latest_metadata(log_dir)
-        pr = _log_last_protocol(log_dir)
-        proto = proto or (pr["protocol"] if pr else None)
+        size = sum(int(a["size"]) for a in state["adds"].values())
+        nfiles = len(state["adds"])
     crc = {
         "tableSizeBytes": int(size),
         "numFiles": int(nfiles),
         "numMetadata": 1,
         "numProtocol": 1,
-        "metadata": meta,
-        "protocol": proto,
+        "metadata": state["metaData"],
+        "protocol": state["protocol"],
     }
     final = os.path.join(log_dir, f"{version:020d}.crc")
     tmp = final + f".tmp.{uuid.uuid4().hex}"
@@ -1057,111 +695,16 @@ def _protocol_upgrade(prev: dict, new: dict, used: set) -> dict | None:
     return {"protocol": out}
 
 
-def _log_last_protocol(log_dir: str) -> dict | None:
-    """The most recent protocol action in the mirror (external readers
-    hold the LAST one replayed), or None for a fresh log. Checkpoint-
-    bounded like _latest_metadata — only v0 carries a protocol on a
-    never-escalated table, and consulting the checkpoint's protocol
-    row keeps the scan <=CHECKPOINT_INTERVAL files."""
-    pr = _latest_action(log_dir, "protocol")
-    return {"protocol": pr} if pr is not None else None
-
-
-def _latest_action(log_dir: str, key: str) -> dict | None:
-    """Most recent action of kind ``key`` ('metaData' / 'protocol'),
-    CHECKPOINT-BOUNDED: JSON entries are scanned newest-first only
-    down to the advertised checkpoint, whose own row answers for
-    everything older. A never-evolved table keeps its only metaData at
-    v0, so the unbounded newest-first scan was O(history) — paid by
-    every rewrite commit's DV-config probe; with checkpoints every
-    CHECKPOINT_INTERVAL commits this is <=interval file opens. Returns
-    the action's INNER dict (already unwrapped)."""
-    if not os.path.isdir(log_dir):
-        return None
-    ckpt_v: int | None = None
-    last_cp: dict | None = None
-    p = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(p):
-        try:
-            with open(p) as f:
-                last_cp = json.load(f)
-            ckpt_v = int(last_cp["version"])
-        except (ValueError, KeyError):
-            ckpt_v = None
-            last_cp = None
-    needle = f'"{key}"'
-    for v in reversed(_log_versions(log_dir)):
-        if ckpt_v is not None and v <= ckpt_v:
-            break
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as f:
-            for line in f:
-                if needle not in line:
-                    continue
-                a = json.loads(line)
-                if key in a:
-                    return a[key]
-    if ckpt_v is None or last_cp is None:
-        return None
-    import pyarrow.parquet as pq
-
-    # part 1 is enough: the writer pins protocol/metaData rows there
-    rows = pq.read_table(
-        _checkpoint_part_paths(log_dir, last_cp)[0],
-        columns=[key],
-    ).to_pylist()
-    for r in rows:
-        act = r.get(key)
-        if act:
-            # the checkpoint's struct columns materialize EVERY field
-            # (absent JSON keys come back as None) — strip them so
-            # presence checks ('readerFeatures' in protocol) behave as
-            # on the JSON form; map-typed fields arrive as item pairs
-            act = {k: v for k, v in act.items() if v is not None}
-            if isinstance(act.get("configuration"), list):
-                act["configuration"] = dict(act["configuration"])
-            if isinstance(act.get("format"), dict):
-                fmt = dict(act["format"])
-                if isinstance(fmt.get("options"), list):
-                    fmt["options"] = dict(fmt["options"])
-                act["format"] = fmt
-            return act
-    return None
-
-
-def _latest_metadata(log_dir: str) -> dict | None:
-    return _latest_action(log_dir, "metaData")
-
-
-def _log_has_mapping(log_dir: str) -> bool:
-    """True iff the most recent metaData action in the mirror already
-    enabled columnMapping mode=name (which the spec says can never be
-    disabled) — consulted when a later schema evolution happens after
-    all renames were materialized by a rewrite."""
-    md = _latest_metadata(log_dir)
-    if md is None:
-        return False
-    cfg = md.get("configuration") or {}
-    return cfg.get("delta.columnMapping.mode") == "name"
-
-
-def _log_has_dv_config(log_dir: str) -> bool:
-    """True iff the most recent metaData already carries
-    delta.enableDeletionVectors (set at first DV emission; like column
-    mapping, the table feature never downgrades)."""
-    md = _latest_metadata(log_dir)
-    if md is None:
-        return False
-    cfg = md.get("configuration") or {}
-    return cfg.get("delta.enableDeletionVectors") == "true"
-
-
 def live_dv_descriptors(table_path: str) -> dict:
     """{table-relative fs path: deletionVector descriptor} of every
     live file currently carrying a DV, as an external reader sees it
-    (checkpoint-aware replay of the log alone) — after every commit it
+    (checkpoint-aware replay of the log) — after every commit it
     equals the engine commit's ``deletion_vectors``."""
-    _files, _schema, _pcols, dvs = _replay_full(table_path)
-    return dvs
+    return {
+        p: a["deletionVector"]
+        for p, a in _replay_state(table_path)["adds"].items()
+        if a.get("deletionVector")
+    }
 
 
 def _encode_path(rel: str) -> str:
@@ -1181,39 +724,6 @@ def _decode_path(rel: str) -> str:
     from urllib.parse import unquote
 
     return unquote(rel)
-
-
-def _table_id(log_dir: str) -> str | None:
-    v0 = os.path.join(log_dir, f"{0:020d}.json")
-    if os.path.exists(v0):
-        with open(v0) as f:
-            for line in f:
-                a = json.loads(line)
-                if "metaData" in a:
-                    return a["metaData"]["id"]
-        return None
-    # v0 cleaned up by metadata retention: the id is immutable and
-    # every re-emission carries it, so the latest (checkpoint-bounded)
-    # metaData answers identically
-    md = _latest_metadata(log_dir)
-    return md.get("id") if md else None
-
-
-def _table_created_ms(log_dir: str) -> int | None:
-    """v0's createdTime — fixed for the table's lifetime, carried
-    through every metaData re-emission (same anchoring as _table_id),
-    so the latest metaData is an equivalent source once v0 is cleaned
-    up by metadata retention."""
-    v0 = os.path.join(log_dir, f"{0:020d}.json")
-    if os.path.exists(v0):
-        with open(v0) as f:
-            for line in f:
-                a = json.loads(line)
-                if "metaData" in a:
-                    return a["metaData"].get("createdTime")
-        return None
-    md = _latest_metadata(log_dir)
-    return md.get("createdTime") if md else None
 
 
 def _replay_json(table_path: str):
@@ -1243,9 +753,9 @@ def _replay_json(table_path: str):
 def replay_delta_log(table_path: str) -> tuple[list[str], str | None, list[str]]:
     """Reconstruct the live snapshot purely from ``_delta_log/`` —
     (live file paths relative to the table root, schemaString,
-    partitionColumns). This is what any external Delta reader does;
-    used by tests and the delta-read probe to prove the log is
-    self-describing (never consults ``_commits``)."""
+    partitionColumns) by a plain JSON replay that shares no code with
+    the engine's checkpoint-aware one — the independent reference the
+    tests and the delta-read probe compare against."""
     live, schema, partition_cols = _replay_json(table_path)
     # action paths are spec percent-encoded; callers get FILESYSTEM
     # paths back (what any external reader does after URL-decoding)
@@ -1282,9 +792,9 @@ def read_delta_table(spark, table_path: str):
     # version or reader feature it does not implement — guessing
     # yields silently-wrong rows (unapplied DVs, unresolved column
     # mapping). This reader implements everything the engine writes.
-    pr = _log_last_protocol(os.path.join(table_path, _DELTA_LOG))
-    if pr is not None:
-        p = pr["protocol"]
+    st = _replay_state(table_path)
+    p = st["protocol"]
+    if p is not None:
         if int(p.get("minReaderVersion", 1)) > 3:
             raise ValueError(
                 f"unsupported minReaderVersion {p['minReaderVersion']}"
@@ -1294,10 +804,9 @@ def read_delta_table(spark, table_path: str):
             raise ValueError(
                 f"unsupported reader features: {sorted(unknown)}"
             )
-
-    st = _replay_state(table_path)
     files = sorted(st["adds"])
-    schema_str, pcols = st["schema"], st["pcols"]
+    schema_str = st["metaData"]["schemaString"]
+    pcols = st["metaData"]["partitionColumns"]
     dvs = {
         p: a["deletionVector"]
         for p, a in st["adds"].items()
@@ -1307,7 +816,7 @@ def read_delta_table(spark, table_path: str):
     logical = T.StructType.fromJson(sj)
     if pcols:
         return _read_partitioned(
-            spark, table_path, st, logical, pcols, read_dv
+            spark, table_path, st["adds"], sj, logical, pcols, read_dv
         )
     phys_names = [
         (f.get("metadata") or {}).get(
@@ -1365,7 +874,7 @@ def read_delta_table(spark, table_path: str):
     )
 
 
-def _read_partitioned(spark, table_path, st, logical, pcols, read_dv):
+def _read_partitioned(spark, table_path, adds, sj, logical, pcols, read_dv):
     """Partitioned branch of ``read_delta_table``: per the protocol,
     partition column values live ONLY in each add's
     ``partitionValues`` (string-encoded; None = null) — reconstruct
@@ -1379,9 +888,7 @@ def _read_partitioned(spark, table_path, st, logical, pcols, read_dv):
 
     pset = set(pcols)
     data_fields = [f for f in logical.fields if f.name not in pset]
-    sj_fields = {
-        f["name"]: f for f in json.loads(st["schema"]).get("fields", [])
-    }
+    sj_fields = {f["name"]: f for f in sj.get("fields", [])}
     phys = {
         f.name: (sj_fields[f.name].get("metadata") or {}).get(
             "delta.columnMapping.physicalName", f.name
@@ -1396,7 +903,7 @@ def _read_partitioned(spark, table_path, st, logical, pcols, read_dv):
     )
     ftypes = {f.name: f.dataType for f in logical.fields}
     groups: dict[tuple, list[str]] = {}
-    for p, a in st["adds"].items():
+    for p, a in adds.items():
         pv = a.get("partitionValues") or {}
         if isinstance(pv, list):  # checkpoint map comes back as pairs
             pv = dict(pv)
@@ -1410,12 +917,12 @@ def _read_partitioned(spark, table_path, st, logical, pcols, read_dv):
     ):
         clean = [
             p for p in paths
-            if st["adds"][p].get("deletionVector") is None
+            if adds[p].get("deletionVector") is None
         ]
         masked = [p for p in paths if p not in set(clean)]
         for batch, dv in (
             [(clean, None)] if clean else []
-        ) + [([p], st["adds"][p]["deletionVector"]) for p in masked]:
+        ) + [([p], adds[p]["deletionVector"]) for p in masked]:
             df = spark.read.schema(physical).parquet(
                 *[os.path.join(table_path, p) for p in batch]
             )
@@ -1455,8 +962,9 @@ def _read_partitioned(spark, table_path, st, logical, pcols, read_dv):
 def read_delta_table_row_ids(spark, table_path: str):
     """External ROW-TRACKING reader: the data of ``read_delta_table``
     plus each row's stable ``_row_id`` / ``_row_commit_version``,
-    resolved from the MIRROR ALONE — proof that ``_delta_log`` carries
-    complete row identity with no help from the engine's ``_commits``:
+    resolved from the log alone, with none of the engine's row-id
+    bookkeeping — proof that ``_delta_log`` carries complete row
+    identity:
 
     - fresh ids: the add action's ``baseRowId`` + the row's parquet
       ``_metadata.row_index``, attributed to ``defaultRowCommitVersion``
@@ -1477,18 +985,18 @@ def read_delta_table_row_ids(spark, table_path: str):
     )
 
     st = _replay_state(table_path)
-    if st["pcols"]:
+    if st["metaData"]["partitionColumns"]:
         raise ValueError(
             "read_delta_table_row_ids handles unpartitioned tables"
         )
-    cfg = st["config"]
+    cfg = st["metaData"].get("configuration") or {}
     if str(cfg.get("delta.enableRowTracking")).lower() != "true":
         raise ValueError("table does not advertise delta.enableRowTracking")
     mat_id = cfg.get("delta.rowTracking.materializedRowIdColumnName")
     mat_rcv = cfg.get(
         "delta.rowTracking.materializedRowCommitVersionColumnName"
     )
-    sj = json.loads(st["schema"])
+    sj = json.loads(st["metaData"]["schemaString"])
     logical = T.StructType.fromJson(sj)
     phys_names = [
         (f.get("metadata") or {}).get(
@@ -1679,75 +1187,12 @@ def write_checkpoint(
     _DV_PA_FIELD = _dv_pa_field()
 
     log_dir = os.path.join(table_path, _DELTA_LOG)
-    protocol: dict | None = None
-    metadata: dict | None = None
-    live: dict[str, dict] = {}
-    tombstones: dict[str, dict] = {}
-    txns: dict[str, dict] = {}
-    domains: dict[str, dict] = {}
-    # Seed from the previous checkpoint when one exists: (a) the cost
-    # of checkpointing becomes O(interval + snapshot) instead of
-    # O(full history), and (b) after metadata cleanup
-    # (cleanup_metadata) the JSON below the checkpoint no longer
-    # exists to replay.
-    start_v = 0
-    prev_cp = read_last_checkpoint(table_path)
-    if prev_cp is not None and int(prev_cp["version"]) < version:
-        import pyarrow.parquet as _pq
-
-        def _cp_rows():
-            for path in _checkpoint_part_paths(log_dir, prev_cp):
-                for r in _pq.read_table(path).to_pylist():
-                    if r.get("sidecar"):
-                        side = os.path.join(
-                            log_dir, "_sidecars", r["sidecar"]["path"]
-                        )
-                        yield from _pq.read_table(side).to_pylist()
-                    else:
-                        yield r
-
-        for r in _cp_rows():
-            if r.get("protocol"):
-                protocol = {
-                    k: v for k, v in r["protocol"].items()
-                    if v is not None
-                }
-            elif r.get("metaData"):
-                metadata = r["metaData"]
-            elif r.get("txn"):
-                txns[r["txn"]["appId"]] = r["txn"]
-            elif r.get("domainMetadata"):
-                domains[r["domainMetadata"]["domain"]] = (
-                    r["domainMetadata"]
-                )
-            elif r.get("add"):
-                live[r["add"]["path"]] = r["add"]
-            elif r.get("remove"):
-                tombstones[r["remove"]["path"]] = r["remove"]
-        start_v = int(prev_cp["version"]) + 1
-    for v in range(start_v, version + 1):
-        for a in _read_version_actions(log_dir, v):
-            if "protocol" in a:
-                protocol = a["protocol"]
-            elif "metaData" in a:
-                metadata = a["metaData"]
-            elif "txn" in a:
-                # latest setTransaction per appId — the spec REQUIRES
-                # checkpoints to carry these; an external idempotent
-                # writer replaying from the checkpoint would otherwise
-                # find no watermark and re-apply committed batches
-                txns[a["txn"]["appId"]] = a["txn"]
-            elif "domainMetadata" in a:
-                # latest per domain (spec: checkpoints carry domain
-                # metadata; a row-tracking reader loading from the
-                # checkpoint needs the rowIdHighWaterMark)
-                domains[a["domainMetadata"]["domain"]] = a["domainMetadata"]
-            elif "add" in a:
-                live[a["add"]["path"]] = a["add"]
-                tombstones.pop(a["add"]["path"], None)
-            elif "remove" in a:
-                live.pop(a["remove"]["path"], None)
-                tombstones[a["remove"]["path"]] = a["remove"]
+    # the one replay, tombstones included (seeded from the previous
+    # checkpoint, so checkpointing costs O(interval + snapshot) and
+    # still works once cleanup_metadata reclaimed the older JSON)
+    st = _replay_state(table_path, version, tombstones=True)
+    if st["version"] != version:
+        raise ValueError(f"no log entry for version {version}")
 
     # One row carries protocol, one carries metaData, one per live
     # file, one per unexpired remove tombstone (the spec requires
@@ -1756,16 +1201,17 @@ def write_checkpoint(
     # tombstone since log start is kept — a superset of any retention
     # window, and harmless to replay).
     def _row(**kw) -> dict:
-        base = {"protocol": None, "metaData": None, "add": None,
-                "remove": None, "txn": None, "domainMetadata": None}
-        base.update(kw)
-        return base
+        row = dict.fromkeys(
+            ("protocol", "metaData", "add", "remove", "txn", "domainMetadata")
+        )
+        row.update({k: _arrow(v) for k, v in kw.items()})
+        return row
 
-    rows = [_row(protocol=protocol), _row(metaData=metadata)]
-    rows += [_row(add=add) for add in live.values()]
-    rows += [_row(remove=rm) for rm in tombstones.values()]
-    rows += [_row(txn=t) for t in txns.values()]
-    rows += [_row(domainMetadata=d) for d in domains.values()]
+    rows = [_row(protocol=st["protocol"]), _row(metaData=st["metaData"])]
+    rows += [_row(add=add) for add in st["adds"].values()]
+    rows += [_row(remove=rm) for rm in st["removes"].values()]
+    rows += [_row(txn=t) for t in st["txns"].values()]
+    rows += [_row(domainMetadata=d) for d in st["domains"].values()]
 
     schema = pa.schema(
         [
@@ -1828,6 +1274,12 @@ def write_checkpoint(
                         # or readers loading from it lose row identity
                         pa.field("baseRowId", pa.int64()),
                         pa.field("defaultRowCommitVersion", pa.int64()),
+                        # data-skipping stats and engine tags are
+                        # snapshot state the engine replays from here
+                        pa.field("stats", pa.string()),
+                        pa.field(
+                            "tags", pa.map_(pa.string(), pa.string())
+                        ),
                     ]
                 ),
             ),
@@ -1864,34 +1316,6 @@ def write_checkpoint(
             ),
         ]
     )
-    # map-typed fields arrive as dicts; pyarrow wants item lists
-    def _maps(action: dict | None, keys: tuple[str, ...]) -> dict | None:
-        if action is None:
-            return None
-        out = dict(action)
-        for k in keys:
-            if isinstance(out.get(k), dict):
-                out[k] = list(out[k].items())
-        return out
-
-    def _norm_meta(m: dict | None) -> dict | None:
-        if m is None:
-            return None
-        out = _maps(m, ("configuration",))
-        out["format"] = _maps(m.get("format"), ("options",))
-        return out
-
-    norm_rows = [
-        {
-            "protocol": r["protocol"],
-            "metaData": _norm_meta(r["metaData"]),
-            "add": _maps(r["add"], ("partitionValues",)),
-            "remove": r["remove"],
-            "txn": r["txn"],
-            "domainMetadata": r["domainMetadata"],
-        }
-        for r in rows
-    ]
     # v2 checkpoints (PROTOCOL.md §V2 Spec; delta.checkpointPolicy=v2):
     # file actions move to sidecar parquet files under
     # _delta_log/_sidecars/, and a UUID-named manifest carries
@@ -1900,30 +1324,24 @@ def write_checkpoint(
     # modern layout: the snapshot's millions of add rows split across
     # independently-readable sidecars while metadata probes open one
     # small manifest.
-    md_now = _latest_metadata(log_dir) or {}
-    if (md_now.get("configuration") or {}).get(
+    if (st["metaData"].get("configuration") or {}).get(
         "delta.checkpointPolicy"
     ) == "v2":
         return _write_checkpoint_v2(
-            log_dir, version, norm_rows, schema, part_rows
+            log_dir, version, rows, schema, part_rows
         )
 
-    # floor 2: protocol AND metaData must land in part 1 together —
-    # _latest_action reads only part 1, and a cap of 1 would strand
-    # metaData in part 2 (forgetting column-mapping ids / sticky DV
-    # config on the next re-emission)
-    part_cap = max(2, part_rows or CHECKPOINT_PART_ROWS)
-    if len(norm_rows) > part_cap:
+    part_cap = max(1, part_rows or CHECKPOINT_PART_ROWS)
+    if len(rows) > part_cap:
         # multi-part checkpoint: split the action rows across
         # spec-named part files (protocol/metaData ride in part 1 by
         # row order). Each part publishes via tmp+rename; the series
         # becomes visible only through _last_checkpoint's "parts".
         chunks = [
-            norm_rows[i:i + part_cap]
-            for i in range(0, len(norm_rows), part_cap)
+            rows[i:i + part_cap] for i in range(0, len(rows), part_cap)
         ]
         n = len(chunks)
-        last = {"version": version, "size": len(norm_rows), "parts": n}
+        last = {"version": version, "size": len(rows), "parts": n}
         paths = _checkpoint_part_paths(log_dir, last)
         for chunk, final in zip(chunks, paths):
             t = pa.Table.from_pylist(chunk, schema=schema)
@@ -1932,7 +1350,7 @@ def write_checkpoint(
             os.replace(tmp_pq, final)
         out_path = paths[0]
     else:
-        table = pa.Table.from_pylist(norm_rows, schema=schema)
+        table = pa.Table.from_pylist(rows, schema=schema)
         final = os.path.join(
             log_dir, f"{version:020d}.checkpoint.parquet"
         )
@@ -2083,8 +1501,7 @@ def maybe_write_checkpoint(
         # (default true) with delta.logRetentionDuration (default
         # "interval 30 days") — so tests and short-lived tables never
         # lose history unless they opt into a shorter retention.
-        log_dir = os.path.join(table_path, _DELTA_LOG)
-        cfg = (_latest_metadata(log_dir) or {}).get("configuration") or {}
+        cfg = scalar_properties(properties)
         if str(cfg.get("delta.enableExpiredLogCleanup", "true")).lower() != "false":
             try:
                 cleanup_metadata(
@@ -2238,37 +1655,18 @@ def write_log_compaction(
     log_dir = os.path.join(table_path, _DELTA_LOG)
     if start > end:
         raise ValueError(f"bad compaction range [{start}, {end}]")
-    adds: dict[str, dict] = {}
-    removes: dict[str, dict] = {}
-    meta: dict | None = None
-    proto: dict | None = None
-    txns: dict[str, dict] = {}
-    domains: dict[str, dict] = {}
+    st = _empty_state(tombstones=True)
     for v in range(start, end + 1):
-        for a in _read_version_actions(log_dir, v):
-            if "add" in a:
-                adds[a["add"]["path"]] = a["add"]
-                removes.pop(a["add"]["path"], None)
-            elif "remove" in a:
-                removes[a["remove"]["path"]] = a["remove"]
-                adds.pop(a["remove"]["path"], None)
-            elif "metaData" in a:
-                meta = a["metaData"]
-            elif "protocol" in a:
-                proto = a["protocol"]
-            elif "txn" in a:
-                txns[a["txn"]["appId"]] = a["txn"]
-            elif "domainMetadata" in a:
-                domains[a["domainMetadata"]["domain"]] = a["domainMetadata"]
+        _apply_actions(st, _read_version_actions(log_dir, v), v)
     actions: list[dict] = []
-    if proto is not None:
-        actions.append({"protocol": proto})
-    if meta is not None:
-        actions.append({"metaData": meta})
-    actions += [{"txn": t} for t in txns.values()]
-    actions += [{"domainMetadata": d} for d in domains.values()]
-    actions += [{"remove": r} for r in removes.values()]
-    actions += [{"add": a} for a in adds.values()]
+    if st["protocol"] is not None:
+        actions.append({"protocol": st["protocol"]})
+    if st["metaData"] is not None:
+        actions.append({"metaData": st["metaData"]})
+    actions += [{"txn": t} for t in st["txns"].values()]
+    actions += [{"domainMetadata": d} for d in st["domains"].values()]
+    actions += [{"remove": r} for r in st["removes"].values()]
+    actions += [{"add": a} for a in st["adds"].values()]
     final = os.path.join(
         log_dir, f"{start:020d}.{end:020d}.compacted.json"
     )
@@ -2282,10 +1680,8 @@ def write_log_compaction(
 
 def _compacted_ranges(log_dir: str) -> dict[int, int]:
     """{start: end} of available minor-compaction files."""
-    import re as _re
-
     out: dict[int, int] = {}
-    pat = _re.compile(r"^(\d{20})\.(\d{20})\.compacted\.json$")
+    pat = re.compile(r"^(\d{20})\.(\d{20})\.compacted\.json$")
     for f in os.listdir(log_dir):
         m = pat.match(f)
         if m:
@@ -2305,9 +1701,10 @@ def cleanup_metadata(
     days): delete commit JSON entries and checkpoint files strictly
     OLDER than the advertised checkpoint once they age out of the
     retention window, plus sidecar files no remaining manifest
-    references. External readers replay from the checkpoint; engine
-    time travel is unaffected (it reads ``_commits``). Returns the
-    number of files deleted.
+    references. Every reader — the engine included — then replays from
+    the checkpoint, so time travel to a version below it fails, as it
+    does in Delta once its log is cleaned up. Returns the number of
+    files deleted.
 
     At 100 TB this is what bounds the log: without it a
     high-frequency writer accumulates JSON + checkpoints forever and
@@ -2398,110 +1795,294 @@ def read_last_checkpoint(table_path: str) -> dict | None:
         return json.load(f)
 
 
-def _replay_state(table_path: str) -> dict:
-    """Checkpoint-aware replay of the FULL reader-visible state:
-    ``{"adds": {fs path: full add action}, "schema": schemaString,
-    "pcols": [...], "config": metaData configuration}``. Falls back
-    to full JSON replay with no checkpoint. The single replay every
-    external-reader helper builds on."""
+
+
+# ---------------------------------------------------------------------------
+# Replay: checkpoint + JSON tail → snapshot state. One fold
+# (``_apply_actions``) serves the engine's snapshot, the external-reader
+# helpers, checkpoints, compactions and checksums.
+# ---------------------------------------------------------------------------
+
+
+def _empty_state(tombstones: bool = False) -> dict:
+    """Snapshot state before version 0. ``adds`` maps fs paths (action
+    paths URL-decoded) to their add action in first-add order;
+    ``removes`` (tombstones) is tracked only when asked — checkpoints
+    and compactions need it, a reader never does."""
+    return {
+        "version": -1,
+        "protocol": None,
+        "metaData": None,
+        "adds": {},
+        "removes": {} if tombstones else None,
+        "txns": {},
+        "domains": {},
+        "commitInfo": None,
+    }
+
+
+def _apply_actions(
+    state: dict, actions: list[dict], version: int
+) -> list | None:
+    """Fold one commit's (or one compacted range's) actions into
+    ``state`` in place. Returns the fs paths its add/remove actions
+    touched, in action order — or None when metaData changed (every
+    derived view of the files must then be rebuilt).
+
+    A remove followed by an add of the same path in the same commit (a
+    deletion-vector swap) replaces the add IN PLACE: reconciliation is
+    keyed by path, and keeping the file's position keeps the snapshot's
+    file order a pure function of the log."""
+    state["version"] = version
+    state["commitInfo"] = None
+    adds, removes = state["adds"], state["removes"]
+    readded = {
+        a["add"]["path"]: i for i, a in enumerate(actions) if "add" in a
+    }
+    touched: list = []
+    md_changed = False
+    for i, a in enumerate(actions):
+        if "add" in a:
+            p = _decode_path(a["add"]["path"])
+            adds[p] = a["add"]
+            if removes is not None:
+                removes.pop(p, None)
+            touched.append(p)
+        elif "remove" in a:
+            p = _decode_path(a["remove"]["path"])
+            touched.append(p)
+            if readded.get(a["remove"]["path"], -1) > i:
+                continue
+            adds.pop(p, None)
+            if removes is not None:
+                removes[p] = a["remove"]
+        elif "metaData" in a:
+            state["metaData"] = a["metaData"]
+            md_changed = True
+        elif "protocol" in a:
+            state["protocol"] = a["protocol"]
+        elif "txn" in a:
+            state["txns"][a["txn"]["appId"]] = a["txn"]
+        elif "domainMetadata" in a:
+            state["domains"][a["domainMetadata"]["domain"]] = (
+                a["domainMetadata"]
+            )
+        elif "commitInfo" in a:
+            state["commitInfo"] = a["commitInfo"]
+    return None if md_changed else touched
+
+
+def _checkpoints(log_dir: str) -> dict[int, dict]:
+    """{version: ``_last_checkpoint``-shaped dict} of every complete
+    checkpoint in the log dir (classic, multi-part or v2 manifest) —
+    what time travel below the advertised checkpoint starts from."""
+    pat = re.compile(
+        r"^(\d{20})\.checkpoint(?:\.(\d{10})\.(\d{10})|\.[0-9a-f]+)?\.parquet$"
+    )
+    out: dict[int, dict] = {}
+    for f in os.listdir(log_dir):
+        m = pat.match(f)
+        if m:
+            v = int(m.group(1))
+            out[v] = {"version": v}
+            if m.group(3):
+                out[v]["parts"] = int(m.group(3))
+    return out
+
+
+_MAP_FIELDS = ("partitionValues", "tags", "configuration", "options")
+
+
+def _actions_of(arr) -> list[dict]:
+    """A checkpoint struct column (no null rows) as its JSON actions:
+    absent fields dropped, maps as dicts. Built column by column —
+    pyarrow's row-wise ``to_pylist`` costs ~2.5x as much on adds, most
+    of it in the (usually empty) partitionValues maps."""
+    import pyarrow as pa
+
+    cols = []
+    for f, c in zip(arr.type, arr.flatten()):
+        if pa.types.is_struct(f.type):
+            vals = _actions_of(c)
+        elif pa.types.is_map(f.type):
+            off = c.offsets.to_pylist()
+            ks, vs = c.keys.to_pylist(), c.items.to_pylist()
+            vals = [dict(zip(ks[b:e], vs[b:e])) for b, e in zip(off, off[1:])]
+        else:
+            cols.append(c.to_pylist())
+            continue
+        if c.null_count:
+            valid = c.is_valid().to_pylist()
+            vals = [v if ok else None for v, ok in zip(vals, valid)]
+        cols.append(vals)
+    names = [f.name for f in arr.type]
+    return [
+        {k: v for k, v in zip(names, row) if v is not None}
+        for row in zip(*cols)
+    ]
+
+
+def _arrow(d: dict | None) -> dict | None:
+    """Inverse of ``_strip``: map fields as the item lists pyarrow
+    wants for a checkpoint row."""
+    if d is None:
+        return None
+    return {
+        k: list(v.items()) if k in _MAP_FIELDS and isinstance(v, dict)
+        else _arrow(v) if k == "format" else v
+        for k, v in d.items()
+    }
+
+
+def _load_checkpoint(log_dir: str, last: dict, state: dict) -> None:
+    """Seed ``state`` from the checkpoint ``last`` describes, reading
+    only the action columns the state keeps (never the tombstones
+    unless asked) and materializing only their non-null rows."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    last = read_last_checkpoint(table_path)
+    want = ["protocol", "metaData", "txn", "domainMetadata", "add", "sidecar"]
+    if state["removes"] is not None:
+        want.append("remove")
+
+    def rows(path: str):
+        pf = pq.ParquetFile(path)
+        cols = [c for c in want if c in pf.schema_arrow.names]
+        t = pf.read(columns=cols)
+        for c in cols:
+            arr = t.column(c).combine_chunks()
+            for r in _actions_of(arr.filter(pc.is_valid(arr))):
+                yield c, r
+
+    def load(path: str) -> None:
+        for kind, r in rows(path):
+            if kind == "sidecar":
+                load(os.path.join(log_dir, "_sidecars", r["path"]))
+            elif kind == "add":
+                state["adds"][_decode_path(r["path"])] = r
+            elif kind == "remove":
+                state["removes"][_decode_path(r["path"])] = r
+            elif kind == "txn":
+                state["txns"][r["appId"]] = r
+            elif kind == "domainMetadata":
+                state["domains"][r["domain"]] = r
+            else:
+                state[kind] = r
+
+    for path in _checkpoint_part_paths(log_dir, last):
+        load(path)
+    state["version"] = int(last["version"])
+    state["commitInfo"] = _commit_info(log_dir, state["version"])
+
+
+def _commit_info(log_dir: str, version: int) -> dict | None:
+    """The commitInfo of one version (None once its entry is gone) —
+    a checkpoint or a compacted range does not carry it. Only that
+    line is parsed: the entry of a CONVERT lists every file."""
+    try:
+        with open(os.path.join(log_dir, f"{version:020d}.json")) as f:
+            for line in f:
+                if '"commitInfo"' in line[:16]:
+                    a = json.loads(line)
+                    if "commitInfo" in a:
+                        return a["commitInfo"]
+    except FileNotFoundError:
+        pass
+    return None
+
+
+def _replay_steps(
+    table_path: str,
+    version: int | None = None,
+    base: dict | None = None,
+    first: int | None = None,
+    tombstones: bool = False,
+    compacted: bool = False,
+):
+    """THE replay: yield ``(state, touched)`` as the snapshot advances
+    to ``version`` (None: the head), ``touched`` being
+    ``_apply_actions``' result, or None after the checkpoint load.
+
+    ``base`` (a state from an earlier replay) is advanced IN PLACE by
+    the JSON tail after its version. Otherwise replay starts from the
+    newest checkpoint at or below ``first`` (default ``version``) —
+    ``_last_checkpoint`` when it qualifies, so opening the head lists
+    nothing — or from an empty state; ``compacted`` lets minor
+    compaction files stand in for the ranges they cover. A requested
+    version below the retained log (cleaned up past its checkpoint)
+    or past the head raises ValueError."""
     log_dir = os.path.join(table_path, _DELTA_LOG)
-    adds: dict[str, dict] = {}
-    schema: str | None = None
-    partition_cols: list[str] = []
-    config: dict = {}
-
-    def _meta(m: dict) -> None:
-        nonlocal schema, partition_cols, config
-        schema = m["schemaString"]
-        partition_cols = list(m["partitionColumns"] or [])
-        cfg = m.get("configuration") or {}
-        # checkpoint metaData stores configuration as a parquet MAP —
-        # pyarrow hands it back as a list of (key, value) pairs
-        config = dict(cfg) if isinstance(cfg, dict) else dict(cfg or [])
-
-    start_after = -1
-    if last is not None:
-        for path in _checkpoint_part_paths(log_dir, last):
-            for r in pq.read_table(path).to_pylist():
-                if r.get("metaData"):
-                    _meta(r["metaData"])
-                if r.get("add"):
-                    adds[r["add"]["path"]] = r["add"]
-                if r.get("sidecar"):
-                    # V2 checkpoint: file actions live in sidecar
-                    # parquet under _delta_log/_sidecars/
-                    side = os.path.join(
-                        log_dir, "_sidecars", r["sidecar"]["path"]
-                    )
-                    for sr in pq.read_table(side).to_pylist():
-                        if sr.get("add"):
-                            adds[sr["add"]["path"]] = sr["add"]
-        start_after = last["version"]
-    def _apply(a: dict) -> None:
-        if "metaData" in a:
-            _meta(a["metaData"])
-        elif "add" in a:
-            adds[a["add"]["path"]] = a["add"]
-        elif "remove" in a:
-            adds.pop(a["remove"]["path"], None)
-
-    versions = _log_versions(log_dir)
-    vset = set(versions)
-    compacted = _compacted_ranges(log_dir)
-    head = max(
-        [versions[-1] if versions else -1]
-        + [b for b in compacted.values()]
-    )
-    v = start_after + 1
-    while v <= head:
-        b = compacted.get(v)
-        if b is not None and b <= head:
-            # minor log compaction: one reconciled file replaces the
-            # range's individual entries
-            with open(
-                os.path.join(
-                    log_dir, f"{v:020d}.{b:020d}.compacted.json"
+    if base is not None:
+        state = base
+    else:
+        state = _empty_state(tombstones)
+        floor = version if first is None else first
+        last = read_last_checkpoint(table_path)
+        if last is not None and floor is not None and (
+            last["version"] > floor
+        ):
+            cps = [
+                cp for v, cp in _checkpoints(log_dir).items() if v <= floor
+            ]
+            last = max(cps, key=lambda cp: cp["version"], default=None)
+        if last is not None:
+            _load_checkpoint(log_dir, last, state)
+            yield state, None
+    ranges = _compacted_ranges(log_dir) if compacted else {}
+    v = state["version"]
+    while version is None or v < version:
+        end = ranges.get(v + 1)
+        if end is not None and (version is None or end <= version):
+            name = f"{v + 1:020d}.{end:020d}.compacted.json"
+            with open(os.path.join(log_dir, name)) as f:
+                touched = _apply_actions(
+                    state, [json.loads(line) for line in f], end
                 )
-            ) as f:
-                for line in f:
-                    _apply(json.loads(line))
-            v = b + 1
+            state["commitInfo"] = _commit_info(log_dir, end)
+            v = end
+            yield state, touched
             continue
-        if v in vset:
-            for a in _read_version_actions(log_dir, v):
-                _apply(a)
+        try:
+            actions = _read_version_actions(log_dir, v + 1)
+        except FileNotFoundError:
+            if version is None and (
+                v >= 0 or read_last_checkpoint(table_path) is None
+            ):
+                break  # the head (or no table at all)
+            raise ValueError(
+                f"version {v + 1} of {table_path} is not in the log ("
+                + (
+                    f"the head is version {v})" if v >= 0
+                    else "no checkpoint or entry at or below it is kept)"
+                )
+            ) from None
         v += 1
-    return {
-        "adds": {_decode_path(p): a for p, a in adds.items()},
-        "schema": schema,
-        "pcols": partition_cols,
-        "config": config,
-    }
+        yield state, _apply_actions(state, actions, v)
 
 
-def _replay_full(
-    table_path: str,
-) -> tuple[list[str], str | None, list[str], dict]:
-    """Checkpoint-aware replay → (live fs paths, schemaString,
-    partitionColumns, {fs path: deletionVector descriptor})."""
-    st = _replay_state(table_path)
-    files = sorted(st["adds"])
-    dvs = {
-        p: a["deletionVector"]
-        for p, a in st["adds"].items()
-        if a.get("deletionVector") is not None
-    }
-    return files, st["schema"], st["pcols"], dvs
+def _replay_state(
+    table_path: str, version: int | None = None, tombstones: bool = False
+) -> dict:
+    """The snapshot state at ``version`` (None: the head) — what a
+    spec-compliant external reader reconstructs: ``{"version",
+    "protocol", "metaData", "adds": {fs path: add action}, "txns",
+    "domains", "commitInfo"}`` (+ ``"removes"`` with
+    ``tombstones``)."""
+    state = _empty_state(tombstones)
+    for state, _touched in _replay_steps(
+        table_path, version, tombstones=tombstones, compacted=True
+    ):
+        pass
+    return state
 
 
-def replay_delta_log_from_checkpoint(
-    table_path: str,
-) -> tuple[list[str], str | None, list[str]]:
-    """Checkpoint-aware replay: load the advertised checkpoint parquet
-    (if any), then apply only the JSON entries after it — what a real
-    reader does. Falls back to full JSON replay with no checkpoint."""
-    files, schema, partition_cols, _dvs = _replay_full(table_path)
-    return files, schema, partition_cols
+def oldest_version(table_path: str) -> int | None:
+    """The oldest version the log can still reconstruct: 0 while its
+    entry exists, else the oldest retained checkpoint (metadata
+    cleanup reclaimed the JSON below it)."""
+    log_dir = os.path.join(table_path, _DELTA_LOG)
+    if os.path.exists(os.path.join(log_dir, f"{0:020d}.json")):
+        return 0
+    if not os.path.isdir(log_dir):
+        return None
+    return min(_checkpoints(log_dir), default=None)

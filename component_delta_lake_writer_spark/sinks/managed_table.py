@@ -1,4 +1,4 @@
-"""Managed table: Parquet data + JSON commit log — the engine's sink.
+"""Managed table: Parquet data + the Delta log — the engine's sink.
 
 Re-expresses the reference's Delta write surface (delta-spark is not a
 dependency here, so the table layer is built from scratch on Spark's
@@ -13,28 +13,37 @@ Parquet writer + an atomic commit log):
 - primary key carried as informational table metadata (OSS Delta also
   treats PKs as unenforced; SURVEY §4 note 2)
 
-Commit protocol (single-writer, snapshot-isolated):
-each write lands data under ``<path>/_data/<commit-uuid>/`` first,
-then publishes ``<path>/_commits/<version>.json`` listing the data
-units that constitute the new snapshot (os.rename is atomic on a
-posix filesystem; on object stores this maps to conditional PUT).
-Readers resolve the latest commit and read exactly its data units —
-uncommitted data is invisible, a crashed write leaves no partial
-table (strictly stronger than the reference's per-batch commit loop,
-SURVEY §4 "micro-batched write" caution). Old versions remain
-addressable (time travel) until vacuumed.
+Commit protocol (optimistic, snapshot-isolated): each write lands
+data under ``<path>/_data/<unit-uuid>/`` first, then claims the next
+version by exclusive create of ``<path>/_delta_log/<version>.json``
+— the Delta transaction log, the table's only log (Delta Lake, VLDB
+2020, §3: an incremental action log + Parquet checkpoints, versions
+claimed by put-if-absent). ``os.link`` is atomic and fails on an
+existing entry on a posix filesystem; on object stores this maps to a
+conditional PUT. Readers replay the log from its newest checkpoint
+and read exactly the live files — uncommitted data is invisible, a
+crashed write leaves no partial table (strictly stronger than the
+reference's per-batch commit loop, SURVEY §4 "micro-batched write"
+caution) and any Delta reader opens the same table. Old versions
+remain addressable (time travel) until vacuumed or until log cleanup
+passes them. Each ``ManagedTable`` memoises its last snapshot
+(``Commit``) and advances it by the log's JSON tail.
 
 Scale posture: a snapshot is a list of data directories, so appends
-are O(1) metadata; ``optimize()`` compacts small files and collapses
+are O(1) log entries; ``optimize()`` compacts small files and collapses
 the unit list; reads of a partitioned table get partition pruning via
 Spark's partition discovery per unit.
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import json
 import os
+import re
 import shutil
+import threading
 import time
 import uuid
 from dataclasses import dataclass, field, fields
@@ -49,8 +58,12 @@ from component_delta_lake_writer_spark.errors import (
     UserException,
 )
 from component_delta_lake_writer_spark.session import local_relation
+from component_delta_lake_writer_spark.sinks.unit_stats import (
+    fold_file_stats,
+    from_delta_stats,
+    to_delta_stats,
+)
 
-_COMMITS = "_commits"
 _DATA = "_data"
 
 # Deletion-vector match transfer-shape cutoff: matched (file,
@@ -97,15 +110,6 @@ from component_delta_lake_writer_spark.sinks.cdf_actions import (  # noqa: E402,
     CDF_METADATA_ONLY_ACTIONS,
 )
 
-# commit action → Delta commitInfo operation name (what DESCRIBE
-# HISTORY shows external readers of the mirror)
-def _pq_rows(path: str) -> int:
-    """Footer row count — driver-side metadata IO only."""
-    import pyarrow.parquet as pq
-
-    return int(pq.ParquetFile(path).metadata.num_rows)
-
-
 _OPERATION_NAMES = {
     "create": "CREATE TABLE AS SELECT",
     "overwrite": "WRITE",
@@ -126,30 +130,79 @@ _OPERATION_NAMES = {
     "drop_constraint": "DROP CONSTRAINT",
     "convert": "CONVERT",
     "analyze": "COMPUTE STATISTICS",
+    "sync_metadata": "CONVERT",
 }
+
+_TEMPORAL_TYPES = ("date", "timestamp", "timestamp_ntz")
+
+
+@functools.lru_cache(maxsize=16)
+def _schema_view(schema_string: str) -> tuple[str, dict, frozenset]:
+    """(engine schema JSON, {logical: physical} column mapping,
+    physical names of the date/timestamp columns) of a metaData
+    schemaString: the columnMapping field metadata the log carries is
+    stripped back out of the schema and becomes the map of renamed
+    columns."""
+    schema = json.loads(schema_string)
+    mapping: dict = {}
+    temporal = set()
+    for f in schema.get("fields", []):
+        phys = (f.get("metadata") or {}).get(
+            "delta.columnMapping.physicalName", f["name"]
+        )
+        if phys != f["name"]:
+            mapping[f["name"]] = phys
+        if f.get("type") in _TEMPORAL_TYPES:
+            temporal.add(phys)
+    if "delta.columnMapping." not in schema_string:
+        return schema_string, mapping, frozenset(temporal)
+
+    def strip(t) -> None:
+        if not isinstance(t, dict):
+            return
+        if t.get("type") == "struct":
+            for nf in t.get("fields", []):
+                nf["metadata"] = {
+                    k: v for k, v in (nf.get("metadata") or {}).items()
+                    if not k.startswith("delta.columnMapping.")
+                }
+                strip(nf.get("type"))
+        elif t.get("type") == "array":
+            strip(t.get("elementType"))
+        elif t.get("type") == "map":
+            strip(t.get("keyType"))
+            strip(t.get("valueType"))
+
+    strip(schema)
+    return json.dumps(schema), mapping, frozenset(temporal)
 
 
 @dataclass
 class Commit:
+    """One table version as the engine works with it — a view of the
+    ``_delta_log`` state (``ManagedTable._view``), never stored on its
+    own. Each field's comment names the action that carries it."""
+
     version: int
-    action: str
-    data_units: list[str]  # relative dirs under _data/, the full snapshot
+    action: str  # commitInfo.engineAction
+    # dirs under _data/ (the add paths' unit segment, first-add order)
+    data_units: list[str]
     schema_json: str
     partition_by: list[str] = field(default_factory=list)
     primary_key: list[str] = field(default_factory=list)
     timestamp_ms: int = 0
     properties: dict = field(default_factory=dict)
-    # Delta-style data-skipping stats: {unit: {"_rows": n, col: {min,
-    # max, nulls}}}. Optional — commits written before this field
-    # existed load with {} and simply never prune.
+    # Data-skipping stats: {unit: {"_rows": n, col: {min, max, nulls},
+    # "_files": {file: same shape}, "_bloom": …}} — the fold of the
+    # adds' Delta stats, bloom sidecars from their tags. A file without
+    # stats has "_rows" None and never prunes.
     stats: dict = field(default_factory=dict)
     # Merge-on-read deletes as Delta deletion vectors: {table-relative
     # parquet path: deletionVector descriptor} for every live file with
     # deleted rows (the positions, not the keys — rows appended after
-    # the delete keep living even under a reused PK). The same
-    # descriptors the _delta_log mirror carries on the file's add.
-    # Carried forward by _publish for every file whose unit survives;
-    # a rewrite of the unit drops them. {} on old commits.
+    # the delete keep living even under a reused PK): the add actions'
+    # own descriptors. Carried forward by _publish for every file whose
+    # unit survives; a rewrite of the unit drops them.
     deletion_vectors: dict = field(default_factory=dict)
     # ALTER TABLE … RENAME COLUMN (Delta column mapping, mode=name):
     # {logical_name: physical_parquet_name} for columns whose on-disk
@@ -157,19 +210,19 @@ class Commit:
     # physical names and alias to logical; writes translate logical →
     # physical so every unit stays uniform on disk; unit stats are
     # keyed physical. Reset by full rewrites (optimize — Delta's
-    # REORG materialization). {} on old commits.
+    # REORG materialization). metaData's columnMapping field metadata.
     column_mapping: dict = field(default_factory=dict)
     # Idempotent-writer watermarks (Delta's setTransaction/txn action):
     # {appId: last applied writer version}. A write carrying
     # txn=(appId, v) with v <= txns[appId] is a NO-OP — the
     # exactly-once contract streaming foreachBatch / retried jobs rely
-    # on. Carried forward by every commit (merged in _publish); {} on
-    # old commits.
+    # on. Carried forward by every commit (merged in _publish); txn
+    # actions.
     txns: dict = field(default_factory=dict)
     # COPY INTO ingest log: names of JSON sidecars under _ingest/, each
     # listing source files already loaded — re-running the same COPY
     # INTO skips them (file-level idempotent ingest). Carried forward
-    # by _publish; [] on old commits.
+    # by _publish; the engine.ingest domainMetadata.
     ingest_sidecars: list = field(default_factory=list)
     # Row tracking (Delta rowTracking writer feature, enabled via the
     # delta.enableRowTracking table property): {unit: {"v": version
@@ -178,18 +231,17 @@ class Commit:
     # baseRowId + its position in the file. Ids are IMMUTABLE once
     # assigned: a unit carried, restored, or DV-re-added keeps its
     # entry verbatim; only brand-new units draw fresh ids past the
-    # high-water mark. {} on old commits / untracked tables.
+    # high-water mark. The adds' baseRowId/defaultRowCommitVersion.
     row_ids: dict = field(default_factory=dict)
-    # rowIdHighWaterMark (mirrored as the delta.rowTracking
-    # domainMetadata): highest fresh row id ever assigned; -1 = none.
+    # rowIdHighWaterMark (the delta.rowTracking domainMetadata):
+    # highest fresh row id ever assigned; -1 = none.
     row_id_high_water: int = -1
     # Clustered-table state (Delta clustering writer feature): the
     # LOGICAL columns the table was last clustered by via
     # optimize(cluster_by=/zorder_by=). Carried forward by _publish
     # (Delta keeps clustering columns as table state across appends —
-    # new data is simply unclustered until the next OPTIMIZE);
-    # mirrored as the delta.clustering domainMetadata. [] = never
-    # clustered.
+    # new data is simply unclustered until the next OPTIMIZE); the
+    # delta.clustering domainMetadata. [] = never clustered.
     clustered_by: list = field(default_factory=list)
 
 
@@ -207,147 +259,273 @@ def _prop_on(props: dict | None, key: str) -> bool:
     return v is True or str(v).lower() == "true"
 
 
-def _mirror_clustering_arg(c: Commit, prev: Commit | None) -> dict | None:
-    """``clustering`` arg for ``write_delta_log_entry`` from committed
-    state (shared by _publish and the sync_metadata repair path).
-    Also fires when clustering just went AWAY (RESTORE to a
-    pre-clustering version): the domain re-emits with empty columns so
-    external readers stop believing the old layout."""
-    cur = list(c.clustered_by or [])
-    prev_cols = list(prev.clustered_by or []) if prev is not None else []
-    if not cur and not prev_cols:
-        return None
-    return {
-        "columns": cur,
-        "newly": prev is None or prev_cols != cur,
-    }
-
-
-def _mirror_checkpoint_arg(c: Commit, prev: Commit | None) -> dict | None:
-    """``checkpoint_policy`` arg for ``write_delta_log_entry`` from
-    committed state (shared by _publish and the sync_metadata repair
-    path). The v2Checkpoint table feature never downgrades — once the
-    property is set, later commits keep advertising it even if a
-    properties replacement drops the key (same posture as
-    deletionVectors / columnMapping)."""
-    cur = (c.properties or {}).get("delta.checkpointPolicy") == "v2"
-    if not cur:
-        # stickiness after a property drop is handled log-side
-        # (write_delta_log_entry's _cp_live, like _log_dv_cfg)
-        return None
-    prev_on = (
-        prev is not None
-        and (prev.properties or {}).get("delta.checkpointPolicy") == "v2"
-    )
-    return {"policy": "v2", "newly": not prev_on}
-
-
-def _mirror_feature_args(c: Commit, prev: Commit | None) -> tuple:
-    """(row_tracking, ict) args for ``write_delta_log_entry``, derived
-    from a commit AS STORED — shared by _publish (after it finalizes
-    timestamps/ids) and the sync_metadata repair path (which re-emits
-    lost mirror entries from committed state)."""
-    rt = None
-    if _prop_on(c.properties, "delta.enableRowTracking"):
-        # gate on the PROPERTY, not on row_ids being non-empty: a
-        # tracked table whose snapshot is momentarily empty (every
-        # row deleted) must keep advertising the feature config, or
-        # metaData re-emissions would show the property flipping off
-        files: dict = {}
-        for ent in (c.row_ids or {}).values():
-            for rel, (base, _n) in (ent.get("files") or {}).items():
-                files[rel] = {
-                    "baseRowId": int(base),
-                    "defaultRowCommitVersion": int(ent["v"]),
-                }
-        rt = {
-            "high_water": int(c.row_id_high_water),
-            "files": files,
-            "newly": prev is None
-            or not _prop_on(prev.properties, "delta.enableRowTracking"),
-            # external row-tracking readers resolve preserved ids
-            # through these physical columns (Delta's materialized
-            # row-id mechanism; written by optimize rewrites)
-            "mat_row_id_col": _MAT_ROW_ID,
-            "mat_rcv_col": _MAT_RCV,
-        }
-    ict = None
-    props = c.properties or {}
-    if _prop_on(props, "delta.enableInCommitTimestamps"):
-        ict = {
-            "timestamp": int(c.timestamp_ms),
-            "config": {
-                k: str(props[k])
-                for k in (
-                    "delta.inCommitTimestampEnablementVersion",
-                    "delta.inCommitTimestampEnablementTimestamp",
-                )
-                if k in props
-            },
-            "newly": prev is None
-            or not _prop_on(
-                prev.properties, "delta.enableInCommitTimestamps"
-            ),
-        }
-    return rt, ict
-
-
 class ManagedTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path.rstrip("/")
+        # (log state, Commit, entry identity) of the last snapshot this
+        # instance read or wrote — advanced in place by the JSON tail,
+        # replaced by _publish; the lock keeps threads sharing the
+        # instance (e.g. foreachBatch callbacks) from advancing it twice
+        self._snap: tuple[dict, Commit, tuple] | None = None
+        self._lock = threading.RLock()
 
     # ---------- log plumbing ----------
 
     @property
-    def _commits_dir(self) -> str:
-        return os.path.join(self.path, _COMMITS)
+    def _log_dir(self) -> str:
+        return os.path.join(self.path, "_delta_log")
 
     @property
     def _data_dir(self) -> str:
         return os.path.join(self.path, _DATA)
 
     def exists(self) -> bool:
-        d = self._commits_dir
-        return os.path.isdir(d) and any(f.endswith(".json") for f in os.listdir(d))
-
-    def _versions(self) -> list[int]:
-        if not os.path.isdir(self._commits_dir):
-            return []
-        return sorted(
-            int(f[: -len(".json")])
-            for f in os.listdir(self._commits_dir)
-            if f.endswith(".json")
+        return (
+            os.path.exists(os.path.join(self._log_dir, f"{0:020d}.json"))
+            or os.path.exists(os.path.join(self._log_dir, "_last_checkpoint"))
+            or os.path.isdir(self._legacy_dir)
         )
 
+    def _versions(self) -> list[int]:
+        from component_delta_lake_writer_spark.sinks.delta_log import (
+            _log_versions,
+        )
+
+        if not os.path.isdir(self._log_dir):
+            return []
+        return _log_versions(self._log_dir)
+
     def latest_commit(self) -> Commit | None:
-        versions = self._versions()
-        if not versions:
-            return None
-        return self.commit_at(versions[-1])
+        snap = self._snapshot()
+        return snap[1] if snap is not None else None
 
     def commit_at(self, version: int) -> Commit:
-        with open(os.path.join(self._commits_dir, f"{version:020d}.json")) as f:
-            d = json.load(f)
-        # A field an older engine wrote and this one no longer models:
-        # empty, it carries no state and is dropped; non-empty (e.g.
-        # merge-on-read deletes kept outside the Delta log), dropping
-        # it would resurrect rows, so the commit is refused instead.
-        gone = sorted(k for k, v in d.items() if k not in _COMMIT_FIELDS and v)
-        if gone:
+        snap = self._snapshot(version)
+        if snap is None:
+            raise UserException(f"No table at {self.path}")
+        return snap[1]
+
+    def _check_converted(self) -> None:
+        if os.path.isdir(self._legacy_dir):
             raise UserException(
-                f"Commit {version} at {self.path} carries {gone}, state "
-                "this engine no longer reads; run optimize() with the "
-                "engine that wrote it first (MIGRATION.md)."
+                f"Table at {self.path} still carries the snapshot log "
+                f"{self._legacy_dir} of an earlier engine version; run "
+                "sync_metadata() (MSCK REPAIR TABLE … SYNC METADATA) "
+                "once to convert it (MIGRATION.md)."
             )
-        return Commit(**{k: v for k, v in d.items() if k in _COMMIT_FIELDS})
+
+    def _entry_id(self, version: int) -> tuple | None:
+        """Identity of the log entry for ``version`` (None when it is
+        not there): a table dropped and recreated to the same version
+        has a different file behind the same name."""
+        try:
+            st = os.stat(os.path.join(self._log_dir, f"{version:020d}.json"))
+        except FileNotFoundError:
+            return None
+        return st.st_ino, st.st_mtime_ns, st.st_ctime_ns, st.st_size
+
+    def _remember(self, state: dict, commit: Commit) -> None:
+        ident = self._entry_id(commit.version)
+        self._snap = (state, commit, ident) if ident is not None else None
+
+    def _snapshot(self, version: int | None = None):
+        """(log state, Commit) at ``version`` (None: the head), or None
+        for no table. The memo serves repeated calls: it advances by
+        the JSON entries after it (two ``stat`` calls when nothing
+        changed) as long as its own entry is the file it was read
+        from; anything older replays from the nearest checkpoint."""
+        from component_delta_lake_writer_spark.sinks.delta_log import (
+            _replay_steps,
+        )
+
+        with self._lock:
+            memo = self._snap
+            if memo is not None and memo[2] != self._entry_id(memo[1].version):
+                memo = self._snap = None  # the table was dropped or replaced
+            if memo is not None and version == memo[1].version:
+                return memo[:2]
+            base = memo
+            if base is not None and version is not None and (
+                version < base[1].version
+            ):
+                base = None
+            if base is None:
+                self._check_converted()
+            state, commit = base[:2] if base is not None else (None, None)
+            # advancing the memo folds each entry into its view; a fresh
+            # replay (or a metaData change) builds the view once, last
+            stale = base is None
+            try:
+                for state, touched in _replay_steps(
+                    self.path, version, base=state
+                ):
+                    stale = stale or touched is None
+                    if not stale:
+                        commit = self._view(state, commit, touched)
+                if stale and state is not None:
+                    commit = self._view(state, None, None)
+            except BaseException as exc:
+                if base is not None:
+                    self._snap = None  # the memo's state advanced part-way
+                if isinstance(exc, ValueError):
+                    raise UserException(str(exc)) from None
+                raise
+            if commit is None:
+                return None
+            if memo is None or base is not None or (
+                commit.version > memo[1].version
+            ):
+                self._remember(state, commit)
+            return state, commit
+
+    def _walk(self, start: int | None = None, end: int | None = None):
+        """Commits ``start``..``end`` (None: the oldest the log still
+        holds / the head), one forward pass over the log — per-version
+        ``commit_at`` would replay O(N²) actions."""
+        from component_delta_lake_writer_spark.sinks.delta_log import (
+            _replay_steps,
+            oldest_version,
+        )
+
+        self._check_converted()
+        if start is None:
+            start = oldest_version(self.path)
+            if start is None:
+                return
+        commit = None
+        try:
+            for state, touched in _replay_steps(self.path, end, first=start):
+                commit = self._view(
+                    state, commit if touched is not None else None, touched
+                )
+                if commit.version >= start:
+                    yield commit
+        except ValueError as exc:
+            raise UserException(str(exc)) from None
+
+    def _view(
+        self, state: dict, prev: Commit | None, touched: list | None
+    ) -> Commit:
+        """The ``Commit`` a log state describes. Units are the ``_data``
+        segments of the live add paths in first-add order; unit stats
+        fold the adds' Delta stats; deletion vectors and row ids are the
+        adds' own fields; metaData carries schema, partitioning, column
+        mapping, properties and primary key; txn / domainMetadata /
+        commitInfo carry the rest. Given ``prev`` (the view of the
+        state before ``touched`` changed), only the touched units are
+        rebuilt and the others' stats dicts are shared with ``prev``
+        (a Commit is never mutated once built): a full rebuild parses
+        every file's stats, ~23 ms per append at 1,000 single-file
+        units against ~0.4 ms for the patch."""
+        md = state["metaData"]
+        cfg = md.get("configuration") or {}
+        schema_json, mapping, temporal = _schema_view(md["schemaString"])
+        adds = state["adds"]
+        if prev is None or touched is None:
+            build: dict[str, dict] = {}
+            for p, a in adds.items():
+                build.setdefault(_dv_unit(p), {})[p] = a
+            units = list(build)
+            stats: dict = {}
+            dvs: dict = {}
+            row_ids: dict = {}
+        else:
+            build = {}
+            for p in touched:
+                build.setdefault(_dv_unit(p), {})
+            for u, files in build.items():
+                old = (prev.stats.get(u) or {}).get("_files") or {}
+                for f in old:
+                    p = f"{_DATA}/{u}/{f}"
+                    if p in adds:
+                        files[p] = adds[p]
+            for p in touched:
+                if p in adds:
+                    build[_dv_unit(p)].setdefault(p, adds[p])
+            had = set(prev.data_units)
+            units = [u for u in prev.data_units if build.get(u, True)] + [
+                u for u, files in build.items() if files and u not in had
+            ]
+            stats = {u: s for u, s in prev.stats.items() if u not in build}
+            dvs = {
+                p: d for p, d in prev.deletion_vectors.items()
+                if _dv_unit(p) not in build
+            }
+            row_ids = {u: e for u, e in prev.row_ids.items() if u not in build}
+        for u, files in build.items():
+            if not files:
+                continue
+            cut = len(_DATA) + len(u) + 2
+            fstats = {
+                p[cut:]: from_delta_stats(a.get("stats"), temporal)
+                for p, a in files.items()
+            }
+            st = fold_file_stats(fstats)
+            st["_files"] = fstats
+            first = next(iter(files.values()))
+            bloom = (first.get("tags") or {}).get("engine.bloom")
+            if bloom:
+                st["_bloom"] = json.loads(bloom)
+            stats[u] = st
+            for p, a in files.items():
+                if a.get("deletionVector"):
+                    dvs[p] = a["deletionVector"]
+            if first.get("baseRowId") is not None:
+                row_ids[u] = {
+                    "v": first["defaultRowCommitVersion"],
+                    "files": {
+                        p: [a["baseRowId"], fstats[p[cut:]]["_rows"]]
+                        for p, a in files.items()
+                        if a.get("baseRowId") is not None
+                    },
+                }
+        domains = state["domains"]
+
+        def _domain(name: str) -> dict:
+            d = domains.get(name)
+            return json.loads(d["configuration"]) if d else {}
+
+        ci = state["commitInfo"] or {}
+        return Commit(
+            version=state["version"],
+            action=ci.get("engineAction")
+            or str(ci.get("operation", "")).lower(),
+            data_units=units,
+            schema_json=schema_json,
+            partition_by=list(md.get("partitionColumns") or []),
+            primary_key=json.loads(cfg.get("engine.primaryKey", "[]")),
+            timestamp_ms=int(
+                ci.get("inCommitTimestamp", ci.get("timestamp", 0))
+            ),
+            properties=json.loads(cfg.get("engine.properties", "{}")),
+            stats=stats,
+            deletion_vectors=dvs,
+            column_mapping=dict(mapping),
+            txns={a: t["version"] for a, t in state["txns"].items()},
+            ingest_sidecars=list(_domain("engine.ingest").get("sidecars", [])),
+            row_ids=row_ids,
+            row_id_high_water=int(
+                _domain("delta.rowTracking").get("rowIdHighWaterMark", -1)
+            ),
+            clustered_by=[
+                c[0]
+                for c in _domain("delta.clustering").get(
+                    "clusteringColumns", []
+                )
+            ],
+        )
 
     def _publish(
         self,
         commit: Commit,
         prev: Commit | None = None,
         cdc_stage: str | None = None,
-    ) -> None:
+    ) -> Commit:
+        """Commit ``commit`` (built against ``prev``, the snapshot it
+        was read from) as the next log entry and return it as the
+        snapshot now stands — the view of the log every later reader
+        replays, which replaces ``commit``'s own bookkeeping."""
         # delta.appendOnly (Delta's append-only table property): any
         # commit that logically deletes or replaces rows is refused —
         # removed units, new deletion vectors, and DML/
@@ -369,12 +547,12 @@ class ManagedTable:
                     f"rewrites (refused {commit.action!r} commit)."
                 )
         # ``cdc_stage``: a change set written PRE-publish to a unique
-        # staging dir (CDF paths). The winner of the version claim
-        # adopts it as _changes/v{N} — preserving the only-the-winner-
-        # owns-vN concurrency contract — and mirrors it as Delta cdc
-        # actions (hardlinked _change_data/ files) inside THIS
-        # commit's log entry, which is the only place the spec allows
-        # them. Losers clean their stage up in the caller.
+        # staging dir (CDF paths). Its files become Delta cdc actions
+        # (hardlinked _change_data/ files) inside THIS commit's log
+        # entry, the only place the spec allows them, and the winner
+        # of the version claim adopts the stage as _changes/v{N} —
+        # only the winner owns vN. Losers clean their stage up in the
+        # caller.
         # Writer-state carry (txn watermarks, ingest log): merged here
         # centrally so every commit path — DML, optimize, DDL —
         # preserves them without threading the fields through all 17
@@ -405,8 +583,7 @@ class ManagedTable:
         # feature): once enabled, commit timestamps are the table's
         # time-travel clock and MUST be strictly monotonic — a
         # regressed system clock must never produce a commit that
-        # sorts before its parent. Runs BEFORE serialization: the
-        # engine commit file and the mirror must agree on the clock.
+        # sorts before its parent. Runs BEFORE the log entry is built.
         if _prop_on(props, "delta.enableInCommitTimestamps"):
             if prev is not None and commit.timestamp_ms <= prev.timestamp_ms:
                 commit.timestamp_ms = prev.timestamp_ms + 1
@@ -476,75 +653,51 @@ class ManagedTable:
                 f"{dupes}. Rename the new column or run optimize() to "
                 "materialize pending renames first."
             )
-        os.makedirs(self._commits_dir, exist_ok=True)
-        final = os.path.join(self._commits_dir, f"{commit.version:020d}.json")
-        tmp = final + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(commit.__dict__, f)
-        try:
-            # os.link fails with EEXIST when the destination exists, so
-            # two racing writers cannot both claim the same version (a
-            # plain rename would silently replace); on object stores
-            # this maps to a conditional PUT (if-none-match).
-            os.link(tmp, final)
-        except FileExistsError:
-            raise UserException(
-                f"Concurrent commit conflict at version {commit.version}"
-            ) from None
-        finally:
-            os.unlink(tmp)
-        cdc_files: list[tuple[str, int]] = []
-        if cdc_stage is not None:
-            # winner-only adoption of the staged change set
-            owned = os.path.join(
-                self._changes_dir, f"v{commit.version}"
-            )
-            if os.path.isdir(owned):
-                shutil.rmtree(cdc_stage, ignore_errors=True)
-            else:
-                os.makedirs(os.path.dirname(owned), exist_ok=True)
-                os.rename(cdc_stage, owned)
-            if not commit.column_mapping:
-                # Delta CDF interop: hardlink the change parquet into
-                # _change_data/ and reference each file with a cdc
-                # action in this commit's mirror entry (external
-                # table_changes readers). Column-mapped tables skip
-                # the mirror (change files carry logical names, the
-                # mirror schema physical ones) — engine CDF still
-                # works; the gap is documented.
-                cd_dir = os.path.join(self.path, "_change_data")
-                seq = 0
-                for dp, _d, fns in os.walk(owned):
-                    for fn in sorted(fns):
-                        if not fn.endswith(".parquet"):
-                            continue
-                        src_f = os.path.join(dp, fn)
-                        rel = os.path.join(
-                            "_change_data",
-                            f"cdc-{commit.version:020d}-{seq:05d}.parquet",
-                        )
-                        seq += 1
-                        dst = os.path.join(self.path, rel)
-                        os.makedirs(cd_dir, exist_ok=True)
-                        try:
-                            os.link(src_f, dst)
-                        except FileExistsError:
-                            pass
-                        except OSError:
-                            import shutil as _sh
-
-                            _sh.copy2(src_f, dst)
-                        cdc_files.append(
-                            (rel, os.stat(dst).st_size)
-                        )
-        # Delta interop: mirror the commit as _delta_log/ actions so
-        # external Delta readers open this table (the reference writes
-        # true Delta via delta-rs, src/component.py:356 / write_batch).
         from component_delta_lake_writer_spark.sinks.delta_log import (
+            _empty_state,
             maybe_write_checkpoint,
+            write_delta_log_entry,
+            write_log_compaction,
         )
 
-        self._mirror(commit, prev, cdc_files)
+        with self._lock:
+            state, base = (
+                (_empty_state(), None) if prev is None
+                else self._snapshot(prev.version)
+            )
+            # CDF interop: the staged change files are hardlinked into
+            # _change_data/ under names unique to this writer and
+            # referenced by cdc actions in this commit's entry (external
+            # table_changes readers); a writer that loses the version
+            # claim unlinks them. Column-mapped tables skip the links
+            # (change files carry logical names, the log's schema
+            # physical ones) — engine CDF still works; the gap is
+            # documented.
+            cdc_files = (
+                self._link_change_data(commit.version, cdc_stage)
+                if cdc_stage is not None and not commit.column_mapping
+                else []
+            )
+            actions = self._log_actions(commit, prev, state, cdc_files)
+            try:
+                touched = write_delta_log_entry(
+                    self.path, commit.version, actions, state
+                )
+                new = self._view(state, base, touched)
+            except UserException:  # lost the claim; state untouched
+                for rel, _size in cdc_files:
+                    os.unlink(os.path.join(self.path, rel))
+                raise
+            except BaseException:
+                self._snap = None  # claimed: the memo's state advanced
+                raise
+            self._remember(state, new)
+        if cdc_stage is not None:
+            # the version's winner adopts the staged change set as
+            # _changes/v{N} (batch read_changes and the stream read it)
+            owned = os.path.join(self._changes_dir, f"v{commit.version}")
+            os.makedirs(os.path.dirname(owned), exist_ok=True)
+            os.rename(cdc_stage, owned)
         # Delta protocol checkpointing: every 10th version materializes
         # the snapshot state so readers stop replaying the whole log
         maybe_write_checkpoint(
@@ -552,7 +705,7 @@ class ManagedTable:
         )
         # opt-in minor log compaction (mirror.logCompactionInterval=k):
         # every k commits, reconcile the last k entries into one
-        # {start}.{end}.compacted.json so external readers walk the
+        # {start}.{end}.compacted.json so readers walk the
         # post-checkpoint tail in O(tail/k) file opens. Skipped on
         # checkpoint boundaries (the checkpoint already covers them).
         try:
@@ -569,156 +722,310 @@ class ManagedTable:
             and (commit.version + 1) % 10 != 0
             and commit.version + 1 >= k
         ):
-            from component_delta_lake_writer_spark.sinks.delta_log import (
-                write_log_compaction,
-            )
-
             try:
                 write_log_compaction(
                     self.path, commit.version - k + 1, commit.version
                 )
             except (OSError, ValueError):
                 pass  # best-effort read optimization
+        return new
+
+    def _link_change_data(
+        self, version: int, stage: str
+    ) -> list[tuple[str, int]]:
+        """Hardlink (cross-device: copy) every parquet file of a staged
+        change set into ``_change_data/`` → [(table-relative path,
+        size)]."""
+        out: list[tuple[str, int]] = []
+        tag = uuid.uuid4().hex[:12]
+        for dp, _d, fns in os.walk(stage):
+            for fn in sorted(fns):
+                if not fn.endswith(".parquet"):
+                    continue
+                rel = os.path.join(
+                    "_change_data",
+                    f"cdc-{version:020d}-{tag}{len(out):05d}.parquet",
+                )
+                dst = os.path.join(self.path, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                try:
+                    os.link(os.path.join(dp, fn), dst)
+                except OSError:
+                    shutil.copy2(os.path.join(dp, fn), dst)
+                out.append((rel, os.stat(dst).st_size))
+        return out
 
     def _assign_row_ids(self, commit: Commit, prev: Commit | None) -> None:
         """Populate ``commit.row_ids``/``row_id_high_water`` under row
-        tracking. Carried units keep their prior entry verbatim
-        (id immutability); units re-added by RESTORE/clone recover
-        their original entry from history; only genuinely new units
-        (plus the one-time backfill when tracking is enabled on an
-        existing table) draw fresh ids past the high-water mark.
+        tracking. Carried units keep their prior entry verbatim (id
+        immutability), as do units the commit itself brings an entry
+        for (RESTORE takes the restored snapshot's); only genuinely new
+        units (plus the one-time backfill when tracking is enabled on
+        an existing table) draw fresh ids past the high-water mark.
 
         Cost posture: one parquet-footer read per NEW file (the same
         metadata any row-tracking writer records at write time) — no
         data scan; the common append touches only its own unit."""
         import pyarrow.parquet as pq
 
-        prev_map = (prev.row_ids or {}) if prev is not None else {}
-        hwm = prev.row_id_high_water if prev is not None else -1
-        out: dict = {}
-        missing: list[str] = []
-        for u in commit.data_units:
-            if u in prev_map:
-                out[u] = prev_map[u]
-            else:
-                missing.append(u)
-        if missing and prev is not None:
-            recovered = self._prior_row_entries(missing, prev.version)
-            out.update(recovered)
-            missing = [u for u in missing if u not in recovered]
         from component_delta_lake_writer_spark.sinks.delta_log import (
             _walk_parquet,
         )
 
-        for u in missing:
+        prev_map = (prev.row_ids or {}) if prev is not None else {}
+        hwm = max(
+            prev.row_id_high_water if prev is not None else -1,
+            commit.row_id_high_water,
+        )
+        out: dict = {}
+        for u in commit.data_units:
+            ent = prev_map.get(u) or (commit.row_ids or {}).get(u)
+            if ent is not None:
+                out[u] = ent
+                continue
             files: dict = {}
-            mat = False
             for rel, _size, _mtime, _pvals in _walk_parquet(
                 self.path, os.path.join(_DATA, u)
             ):
-                pf = pq.ParquetFile(os.path.join(self.path, rel))
-                n = int(pf.metadata.num_rows)
-                # a unit whose files carry the materialized id column
-                # is a dataChange=false rewrite (optimize): its rows
-                # KEEP their old ids via the column; the fresh base
-                # ids below are still assigned (spec: every add has a
-                # baseRowId) but shadowed at read time
-                mat = mat or _MAT_ROW_ID in pf.schema_arrow.names
+                n = int(
+                    pq.ParquetFile(
+                        os.path.join(self.path, rel)
+                    ).metadata.num_rows
+                )
                 files[rel] = [hwm + 1, n]
                 hwm += n
             out[u] = {"v": commit.version, "files": files}
-            if mat:
-                out[u]["mat"] = True
         commit.row_ids = out
         commit.row_id_high_water = hwm
 
-    def _prior_row_entries(self, units: list[str], from_version: int) -> dict:
-        """Latest historical ``row_ids`` entry per unit (RESTORE /
-        re-add recovery): one backward pass over the commit log,
-        stopping as soon as every unit is found. Metadata-only JSON
-        reads, bounded by history length — the same O(history) walk
-        RESTORE itself performs."""
-        found: dict = {}
-        want = set(units)
-        for v in range(from_version, -1, -1):
-            if not want:
-                break
-            try:
-                c = self.commit_at(v)
-            except (FileNotFoundError, json.JSONDecodeError):
-                continue
-            for u in list(want):
-                ent = (c.row_ids or {}).get(u)
-                if ent is not None:
-                    found[u] = ent
-                    want.discard(u)
-        return found
-
-    def _mirror(
+    def _log_actions(
         self,
         commit: Commit,
         prev: Commit | None,
+        state: dict,
         cdc_files: list | None = None,
-    ) -> None:
-        """Write ``commit``'s ``_delta_log`` entry as its diff against
-        ``prev`` — shared by _publish and the sync_metadata repair, so
-        a regenerated entry carries exactly what the original did,
-        deletion vectors included. Pure metadata: no log replay, no
-        data IO beyond listing the added and removed units."""
-        from component_delta_lake_writer_spark.sinks.delta_log import (
-            write_delta_log_entry,
-        )
+        data_change: bool = True,
+    ) -> list[dict]:
+        """``commit`` as Delta actions against ``prev`` (read from
+        ``state``): its log entry. Pure metadata — no log replay, no
+        data IO beyond listing the added units.
 
+        - txn for each watermark this commit advanced;
+        - protocol / metaData when they change (``table_actions``);
+          the configuration carries the TBLPROPERTIES view of the
+          properties, the feature flags, and the exact properties and
+          primary key as ``engine.properties`` / ``engine.primaryKey``;
+        - domainMetadata: ``delta.clustering`` when the clustering
+          columns change, ``delta.rowTracking`` (the high-water mark)
+          under row tracking, ``engine.ingest`` when COPY INTO's
+          sidecar list changes;
+        - removes for every file of a dropped unit, adds (with stats,
+          bloom tags, row ids and deletion vectors) for every file of a
+          new one — or, dataChange=false, of a kept one whose stats
+          changed (ANALYZE); the one-time row-id backfill when tracking
+          turns on;
+          a remove + re-add for each live file whose deletion vector
+          changed (a descriptor replaces, it never adds);
+        - cdc actions for ``cdc_files``; commitInfo (first under
+          in-commit timestamps, as the spec requires)."""
+        from component_delta_lake_writer_spark.sinks import delta_log as DL
+
+        ts = commit.timestamp_ms
+        props = commit.properties or {}
+        prev_cfg = (state["metaData"] or {}).get("configuration") or {}
         prev_units = set(prev.data_units) if prev else set()
         live = set(commit.data_units)
-        prev_dvs = prev.deletion_vectors if prev else {}
         dvs = commit.deletion_vectors
-        # files staying live (or re-added) whose descriptor changed: a
-        # new or widened DV, or one RESTORE dropped (None)
-        dv_adds = {
-            rel: dvs.get(rel)
-            for rel in set(dvs) | set(prev_dvs)
-            if _dv_unit(rel) in live and dvs.get(rel) != prev_dvs.get(rel)
+        prev_dvs = prev.deletion_vectors if prev else {}
+        tracked = _prop_on(props, "delta.enableRowTracking")
+        ict = _prop_on(props, "delta.enableInCommitTimestamps")
+        clustered = list(commit.clustered_by or [])
+        prev_clustered = list(prev.clustered_by or []) if prev else []
+        # feature flags; deletion vectors and the v2 checkpoint policy
+        # never switch off again once on (readers may hold them)
+        feat: dict = {}
+        caps: set = set()
+        if dvs or prev_cfg.get("delta.enableDeletionVectors") == "true":
+            feat["delta.enableDeletionVectors"] = "true"
+            caps.add("deletionVectors")
+        if tracked:
+            # external row-tracking readers resolve preserved ids
+            # through these physical columns (written by rewrites)
+            feat["delta.enableRowTracking"] = "true"
+            feat["delta.rowTracking.materializedRowIdColumnName"] = _MAT_ROW_ID
+            feat[
+                "delta.rowTracking.materializedRowCommitVersionColumnName"
+            ] = _MAT_RCV
+            caps |= {"rowTracking", "domainMetadata"}
+        if ict:
+            feat["delta.enableInCommitTimestamps"] = "true"
+            for k in (
+                "delta.inCommitTimestampEnablementVersion",
+                "delta.inCommitTimestampEnablementTimestamp",
+            ):
+                if k in props:
+                    feat[k] = str(props[k])
+            caps.add("inCommitTimestamp")
+        if (
+            props.get("delta.checkpointPolicy") == "v2"
+            or prev_cfg.get("delta.checkpointPolicy") == "v2"
+        ):
+            feat["delta.checkpointPolicy"] = "v2"
+            caps.add("v2Checkpoint")
+        if clustered or prev_clustered:
+            caps |= {"clustering", "domainMetadata"}
+        if props.get("constraints"):
+            caps.add("checkConstraints")
+        configuration = {
+            **DL.scalar_properties(props),
+            **feat,
+            "engine.properties": json.dumps(props),
+            "engine.primaryKey": json.dumps(list(commit.primary_key or [])),
         }
-        rt_arg, ict_arg = _mirror_feature_args(commit, prev)
-        write_delta_log_entry(
-            table_path=self.path,
-            data_dir_name=_DATA,
-            version=commit.version,
-            schema_json=commit.schema_json,
-            partition_by=commit.partition_by,
-            timestamp_ms=commit.timestamp_ms,
-            new_units=[u for u in commit.data_units if u not in prev_units],
-            removed_units=[u for u in prev_units if u not in live],
-            prev_schema_json=prev.schema_json if prev else None,
-            column_mapping=commit.column_mapping,
-            prev_column_mapping=prev.column_mapping if prev else None,
-            dv_adds=dv_adds,
-            current_dvs=prev_dvs,
-            # DESCRIBE HISTORY on the mirror shows real operation names
-            operation=_OPERATION_NAMES.get(
+        actions: list[dict] = [
+            {"txn": {"appId": app, "version": v, "lastUpdated": ts}}
+            for app, v in (commit.txns or {}).items()
+            if prev is None or (prev.txns or {}).get(app) != v
+        ]
+        actions += DL.table_actions(
+            state, commit.schema_json, commit.partition_by,
+            commit.column_mapping or {}, configuration, caps, ts,
+        )
+        if clustered != prev_clustered:
+            # RESTORE to a pre-clustering version re-emits it empty so
+            # readers stop believing the old layout
+            actions.append(DL.domain_action(
+                "delta.clustering",
+                {"clusteringColumns": [[c] for c in clustered]},
+            ))
+        if tracked:
+            actions.append(DL.domain_action(
+                "delta.rowTracking",
+                {"rowIdHighWaterMark": int(commit.row_id_high_water)},
+            ))
+        sidecars = list(commit.ingest_sidecars or [])
+        if sidecars != (list(prev.ingest_sidecars or []) if prev else []):
+            actions.append(
+                DL.domain_action("engine.ingest", {"sidecars": sidecars})
+            )
+        rt: dict = {}
+        if tracked:
+            for ent in (commit.row_ids or {}).values():
+                for rel, (b, _n) in (ent.get("files") or {}).items():
+                    rt[rel] = {
+                        "baseRowId": int(b),
+                        "defaultRowCommitVersion": int(ent["v"]),
+                    }
+        logged = state["adds"]
+
+        def _remove(rel: str) -> dict:
+            rm = {
+                "path": DL._encode_path(rel),
+                "deletionTimestamp": ts,
+                "dataChange": True,
+                # optional per spec; carried so the version checksum
+                # (.crc) can maintain tableSizeBytes incrementally
+                "size": (logged.get(rel) or {}).get("size")
+                or os.stat(os.path.join(self.path, rel)).st_size,
+            }
+            if rel in prev_dvs:
+                # reconciliation is keyed by (path, dvId): a remove
+                # without the descriptor would not cancel the add
+                rm["deletionVector"] = prev_dvs[rel]
+            return {"remove": rm}
+
+        for u in prev.data_units if prev else []:
+            if u not in live:
+                for f in prev.stats[u]["_files"]:
+                    actions.append(_remove(f"{_DATA}/{u}/{f}"))
+        emitted: set = set()
+        for u in commit.data_units:
+            ustats = commit.stats.get(u) or {}
+            if u in prev_units and (
+                ustats is prev.stats.get(u) or ustats == prev.stats.get(u)
+            ):
+                continue
+            # a new unit — or a kept one whose stats changed (ANALYZE),
+            # re-added with dataChange=false to carry its new stats
+            fstats = ustats.get("_files") or {}
+            cut = len(_DATA) + len(u) + 2
+            for rel, size, mtime, pvals in DL._walk_parquet(
+                self.path, os.path.join(_DATA, u)
+            ):
+                emitted.add(rel)
+                add = {
+                    "path": DL._encode_path(rel),
+                    "partitionValues": pvals,
+                    "size": size,
+                    "modificationTime": mtime,
+                    "dataChange": data_change and u not in prev_units,
+                    **rt.get(rel, {}),
+                }
+                s = to_delta_stats(fstats.get(rel[cut:]))
+                if s is not None:
+                    add["stats"] = s
+                if ustats.get("_bloom"):
+                    add["tags"] = {
+                        "engine.bloom": json.dumps(ustats["_bloom"])
+                    }
+                if dvs.get(rel):
+                    # a re-added unit (RESTORE) brings its deletions
+                    add["deletionVector"] = dvs[rel]
+                actions.append({"add": add})
+        dv_swaps = sorted(
+            rel
+            for rel in set(dvs) | set(prev_dvs)
+            if _dv_unit(rel) in live
+            and rel not in emitted
+            and dvs.get(rel) != prev_dvs.get(rel)
+        )
+        if (
+            tracked
+            and prev is not None
+            and not _prop_on(prev.properties, "delta.enableRowTracking")
+        ):
+            # mid-history enablement BACKFILL (Delta's own enablement
+            # shape): every live file re-commits its add with its ids,
+            # dataChange=false — reconciliation is last-add-wins by
+            # path, and without it external readers would resolve NULL
+            # ids for every pre-enablement row
+            for rel in sorted(rt):
+                if rel in emitted or rel in dv_swaps or rel not in logged:
+                    continue
+                actions.append({"add": {
+                    **logged[rel], "dataChange": False, **rt[rel],
+                }})
+        for rel in dv_swaps:
+            # retract the file's previous incarnation and re-add it with
+            # the new descriptor (same physical parquet, same stats)
+            add = {**logged[rel], "dataChange": True, **rt.get(rel, {})}
+            add.pop("deletionVector", None)
+            if dvs.get(rel):
+                add["deletionVector"] = dvs[rel]
+            actions += [_remove(rel), {"add": add}]
+        for rel, size in cdc_files or []:
+            actions.append({"cdc": {
+                "path": DL._encode_path(rel),
+                "partitionValues": {},
+                "size": int(size),
+                "dataChange": False,
+            }})
+        info = {
+            "timestamp": ts,
+            # DESCRIBE HISTORY on external readers shows real operation
+            # names; the engine's own action rides next to it
+            "operation": _OPERATION_NAMES.get(
                 commit.action, commit.action.upper()
             ),
-            # the NEW watermark this commit introduced (if any) becomes
-            # a Delta txn/setTransaction action in the mirror
-            txn=next(
-                (
-                    (app, v)
-                    for app, v in (commit.txns or {}).items()
-                    if prev is None or (prev.txns or {}).get(app) != v
-                ),
-                None,
-            ),
-            # row-tracking ids / in-commit timestamps / clustering are
-            # committed state: a repaired entry must carry them too
-            row_tracking=rt_arg,
-            ict=ict_arg,
-            clustering=_mirror_clustering_arg(commit, prev),
-            checkpoint_policy=_mirror_checkpoint_arg(commit, prev),
-            table_properties=commit.properties,
-            prev_table_properties=prev.properties if prev else None,
-            cdc_files=cdc_files,
-        )
+            "engineInfo": "component-delta-lake-writer-spark",
+            "engineAction": commit.action,
+        }
+        if ict:
+            # spec: under inCommitTimestamp, commitInfo MUST be the
+            # FIRST action and carry the monotonic in-commit timestamp
+            info["inCommitTimestamp"] = int(ts)
+            return [{"commitInfo": info}] + actions
+        return actions + [{"commitInfo": info}]
 
     def _mark_deleted(
         self,
@@ -911,10 +1218,11 @@ class ManagedTable:
     def _unit_stats(
         self,
         unit: str,
-        per_file: bool = False,
         props: dict | None = None,
         mapping: dict | None = None,
     ) -> dict:
+        """Footer stats of a freshly written unit, per file (what its
+        add actions carry) and folded."""
         from component_delta_lake_writer_spark.sinks import bloom
         from component_delta_lake_writer_spark.sinks.unit_stats import (
             collect_unit_stats,
@@ -929,7 +1237,7 @@ class ManagedTable:
         except (TypeError, ValueError):
             nic = None
         stats = collect_unit_stats(
-            unit_dir, per_file=per_file, num_indexed_cols=nic,
+            unit_dir, per_file=True, num_indexed_cols=nic,
             # past the file-count threshold the footer pass fans out
             # as a Spark job (one-shot CONVERT/ANALYZE of a large
             # pre-existing lake); incremental writes stay driver-side
@@ -1273,7 +1581,7 @@ class ManagedTable:
             action = "overwrite" if mode == "overwrite" else "create"
             schema = df.schema
             stats = {unit: self._unit_stats(
-                unit, per_file=not partition_by,
+                unit,
                 props=effective_props, mapping=mapping)}
             commit = Commit(
                 version=version,
@@ -1289,8 +1597,7 @@ class ManagedTable:
                 txns=dict([txn]) if txn else {},
                 ingest_sidecars=[ingest_sidecar] if ingest_sidecar else [],
             )
-            self._publish(commit, prev)
-            return commit
+            return self._publish(commit, prev)
 
         # Append: an append conflicts with a concurrent commit only on
         # the version NUMBER, never on data — the written unit stands,
@@ -1301,7 +1608,7 @@ class ManagedTable:
         # high-water mark and a concurrent append may have claimed the
         # same range.
         unit_stats = self._unit_stats(
-            unit, per_file=not partition_by,
+            unit,
             props=effective_props, mapping=mapping,
         )
         for attempt in range(6):
@@ -1324,7 +1631,7 @@ class ManagedTable:
                 ingest_sidecars=[ingest_sidecar] if ingest_sidecar else [],
             )
             try:
-                self._publish(commit, prev)
+                commit = self._publish(commit, prev)
                 break
             except UserException as exc:
                 retriable = (
@@ -1457,7 +1764,7 @@ class ManagedTable:
             target_file_rows,
         )
         ustats = self._unit_stats(
-            unit, per_file=not prev.partition_by,
+            unit,
             props=prev.properties, mapping=prev.column_mapping,
         )
         units = list(untouched)
@@ -1481,8 +1788,7 @@ class ManagedTable:
             stats=stats,
             column_mapping=dict(prev.column_mapping),
         )
-        self._publish(commit, prev)
-        return commit
+        return self._publish(commit, prev)
 
     @staticmethod
     def _merge_schemas(a: T.StructType, b: T.StructType) -> T.StructType:
@@ -1497,8 +1803,7 @@ class ManagedTable:
         latest commit whose timestamp is <= the given epoch-ms (what a
         reader at that wall-clock instant would have seen)."""
         best: Commit | None = None
-        for v in self._versions():
-            c = self.commit_at(v)
+        for c in self._walk():
             if c.timestamp_ms <= timestamp_ms:
                 best = c
         if best is None:
@@ -1608,8 +1913,7 @@ class ManagedTable:
             stats=prev.stats,
             column_mapping=mapping,
         )
-        self._publish(commit, prev)
-        return commit
+        return self._publish(commit, prev)
 
     def set_column_default(self, name: str, expr: str | None) -> Commit:
         """``ALTER TABLE … ALTER COLUMN name SET DEFAULT expr`` (or
@@ -1645,8 +1949,7 @@ class ManagedTable:
             stats=prev.stats,
             column_mapping=dict(prev.column_mapping),
         )
-        self._publish(commit, prev)
-        return commit
+        return self._publish(commit, prev)
 
     # Safe widenings (Delta typeWidening): every old value is exactly
     # representable in the new type. long→double is deliberately
@@ -1717,8 +2020,7 @@ class ManagedTable:
             stats=prev.stats,
             column_mapping=dict(prev.column_mapping),
         )
-        self._publish(commit, prev)
-        return commit
+        return self._publish(commit, prev)
 
     @staticmethod
     def _apply_column_defaults(df: DataFrame, prev: Commit) -> DataFrame:
@@ -1772,8 +2074,7 @@ class ManagedTable:
                 k: v for k, v in prev.column_mapping.items() if k != name
             },
         )
-        self._publish(commit, prev)
-        return commit
+        return self._publish(commit, prev)
 
     def rename_column(self, old: str, new: str) -> Commit:
         """``ALTER TABLE … RENAME COLUMN old TO new`` — metadata-only
@@ -1784,8 +2085,6 @@ class ManagedTable:
         refuse to rename (their names are load-bearing in the merge key
         and hive directory layout), as do columns referenced by CHECK
         constraints (Delta's own restriction)."""
-        import re
-
         prev = self.latest_commit()
         if prev is None:
             raise UserException(f"No table at {self.path}")
@@ -1827,8 +2126,7 @@ class ManagedTable:
             stats=prev.stats,
             column_mapping=mapping,
         )
-        self._publish(commit, prev)
-        return commit
+        return self._publish(commit, prev)
 
     def _write_empty_change_set(
         self, prev: Commit, version: int, out_dir: str | None = None
@@ -1940,7 +2238,9 @@ class ManagedTable:
             ).parquet(*paths)
             if with_row_meta:
                 df = self._row_meta_cols(df, decode=bool(pset))
-            if mapping:
+            if mapping or pset:
+                # native discovery appends partition columns last: the
+                # committed schema order is the table's, at any unit count
                 df = df.select(
                     *(
                         [
@@ -1968,20 +2268,25 @@ class ManagedTable:
             if f.name in pset:
                 # '/'-anchored so a column whose name SUFFIXES another
                 # ('date' vs 'event_date') can't match inside the other
-                # segment; '+' is pre-escaped because url_decode is
-                # x-www-form-urlencoded (+ → space) while hive paths
-                # never encode '+' — hive_layout.decode_segments (the
-                # other two read paths) uses urllib unquote, which
-                # preserves it.
+                # segment. The segment is decoded twice: once for the
+                # URI encoding of input_file_name(), once for Hive's
+                # escaping of the value in the directory name ('%' →
+                # %25, '=' → %3D), hive_layout.decode_segments' rule.
+                # '+' is pre-escaped because url_decode is
+                # x-www-form-urlencoded (+ → space) while neither
+                # encoding touches '+' — urllib unquote preserves it.
                 raw = F.regexp_extract(
                     F.input_file_name(), f"/{f.name}=([^/]+)/", 1
                 )
+
+                def _unquote(c):
+                    return F.url_decode(F.replace(c, F.lit("+"), F.lit("%2B")))
+
+                disk = _unquote(raw)
                 val = (
                     F.when(raw == "", F.lit(None))
-                    .when(raw == "__HIVE_DEFAULT_PARTITION__", F.lit(None))
-                    .otherwise(
-                        F.url_decode(F.replace(raw, F.lit("+"), F.lit("%2B")))
-                    )
+                    .when(disk == "__HIVE_DEFAULT_PARTITION__", F.lit(None))
+                    .otherwise(_unquote(disk))
                 )
                 cols.append(val.cast(f.dataType).alias(f.name))
             else:
@@ -2049,6 +2354,16 @@ class ManagedTable:
                 "Row tracking is not enabled on this table; create it "
                 "with properties={'delta.enableRowTracking': 'true'}."
             )
+        if not units:
+            # every row deleted copy-on-write: no file left to scan
+            df = local_relation(self.spark, schema)
+            if with_row_ids:
+                df = df.select(
+                    "*",
+                    F.lit(None).cast("long").alias("_row_id"),
+                    F.lit(None).cast("long").alias("_row_commit_version"),
+                )
+            return df
         us = set(units)
         dvs = {
             rel: d for rel, d in commit.deletion_vectors.items()
@@ -2220,8 +2535,6 @@ class ManagedTable:
         added so Spark's native partition pruning fires — the query
         never has to mention the partition column. Conservative:
         anything unparseable derives nothing."""
-        import re
-
         out: list[str] = []
         for g in partition_by:
             expr = gen.get(g)
@@ -2516,7 +2829,7 @@ class ManagedTable:
                     max_records_per_file,
                 )
                 ustats = self._unit_stats(
-                    unit, per_file=not prev.partition_by,
+                    unit,
                     props=effective_props, mapping=mapping,
                 )
                 untouched = list(prev.data_units)
@@ -2593,7 +2906,7 @@ class ManagedTable:
                     max_records_per_file,
                 )
                 ustats = self._unit_stats(
-                    unit, per_file=not prev.partition_by,
+                    unit,
                     props=effective_props, mapping=mapping,
                 )
             stats = {u: prev.stats[u] for u in untouched if u in prev.stats}
@@ -2646,7 +2959,7 @@ class ManagedTable:
                     out_dir=stage,
                 )
             try:
-                self._publish(commit, prev, cdc_stage=stage)
+                commit = self._publish(commit, prev, cdc_stage=stage)
             except BaseException:
                 if stage:
                     shutil.rmtree(stage, ignore_errors=True)
@@ -2778,8 +3091,7 @@ class ManagedTable:
             stats=prev.stats,
             column_mapping=dict(prev.column_mapping),
         )
-        self._publish(commit, prev)
-        return commit
+        return self._publish(commit, prev)
 
     def drop_constraint(self, name: str) -> Commit:
         """``ALTER TABLE … DROP CONSTRAINT name``."""
@@ -2802,8 +3114,7 @@ class ManagedTable:
             stats=prev.stats,
             column_mapping=dict(prev.column_mapping),
         )
-        self._publish(commit, prev)
-        return commit
+        return self._publish(commit, prev)
 
     def _check_constraints(self, df: DataFrame, constraints: dict) -> None:
         """Refuse rows violating any CHECK expression. One filtered
@@ -2875,7 +3186,7 @@ class ManagedTable:
                 max_records_per_file,
             )
             ustats = self._unit_stats(
-                unit, per_file=not prev.partition_by,
+                unit,
                 props=prev.properties, mapping=prev.column_mapping,
             )
             if ustats["_rows"] > 0:
@@ -2940,7 +3251,7 @@ class ManagedTable:
                 prev, commit.version, out_dir=stage
             )
         try:
-            self._publish(commit, prev, cdc_stage=stage)
+            commit = self._publish(commit, prev, cdc_stage=stage)
         except BaseException:
             if stage:
                 shutil.rmtree(stage, ignore_errors=True)
@@ -3071,7 +3382,7 @@ class ManagedTable:
                     shutil.rmtree(stage, ignore_errors=True)
                     raise
             try:
-                self._publish(commit, prev, cdc_stage=stage)
+                commit = self._publish(commit, prev, cdc_stage=stage)
             except BaseException:
                 if stage:
                     shutil.rmtree(stage, ignore_errors=True)
@@ -3141,7 +3452,7 @@ class ManagedTable:
                 shutil.rmtree(stage, ignore_errors=True)
                 raise
         try:
-            self._publish(commit, prev, cdc_stage=stage)
+            commit = self._publish(commit, prev, cdc_stage=stage)
         except BaseException:
             if stage:
                 shutil.rmtree(stage, ignore_errors=True)
@@ -3322,7 +3633,7 @@ class ManagedTable:
             max_records_per_file,
         )
         ustats = self._unit_stats(
-            unit, per_file=not prev.partition_by,
+            unit,
             props=prev.properties, mapping=prev.column_mapping,
         )
         if ustats["_rows"] > 0:
@@ -3344,7 +3655,7 @@ class ManagedTable:
             stats=stats,
             column_mapping=dict(prev.column_mapping),
         )
-        self._publish(commit, prev)
+        commit = self._publish(commit, prev)
         if prev.properties.get("enableChangeDataFeed"):
             # CDF parity with Delta's replaceWhere: removed images as
             # 'delete' (recomputed against the pre-commit snapshot,
@@ -3524,7 +3835,7 @@ class ManagedTable:
             )
             stats = {u: prev.stats[u] for u in untouched if u in prev.stats}
             ustats = self._unit_stats(
-                unit, per_file=not prev.partition_by,
+                unit,
                 props=prev.properties, mapping=prev.column_mapping,
             )
             units = list(untouched)
@@ -3547,7 +3858,7 @@ class ManagedTable:
                 stats=stats,
                 column_mapping=dict(prev.column_mapping),
             )
-            self._publish(commit, prev)
+            commit = self._publish(commit, prev)
             if prev.properties.get("enableChangeDataFeed"):
                 full_target = self._read_units(prev, prev.data_units)
                 keys = src.select(*primary_key)
@@ -3848,14 +4159,14 @@ class ManagedTable:
             units = self._split_unit_per_file(unit)
             stats = {
                 u: self._unit_stats(
-                    u, per_file=True, props=prev.properties,
+                    u, props=prev.properties,
                 ) for u in units
             }
         else:
             units = [unit]
             stats = {
                 unit: self._unit_stats(
-                    unit, per_file=not prev.partition_by,
+                    unit,
                     props=prev.properties,
                     mapping=(
                         prev.column_mapping if untouched else None
@@ -3885,8 +4196,7 @@ class ManagedTable:
                 cluster_by or zorder_by or prev.clustered_by or []
             ),
         )
-        self._publish(commit, prev)
-        return commit
+        return self._publish(commit, prev)
 
     def _split_unit_per_file(self, unit: str) -> list[str]:
         """Move each parquet file of ``unit`` into its own unit dir
@@ -3977,13 +4287,14 @@ class ManagedTable:
             stats={u: s for u, s in old.stats.items() if u in old.data_units},
             deletion_vectors=dict(old.deletion_vectors),
             column_mapping=dict(old.column_mapping),
+            # re-added units keep the row ids they had (immutability)
+            row_ids=dict(old.row_ids),
             # clustering is part of the restored snapshot (the
             # restored units' physical layout), not of the pre-restore
             # head — _publish skips its carry-forward for restores
             clustered_by=list(old.clustered_by or []),
         )
-        self._publish(commit, prev)
-        return commit
+        return self._publish(commit, prev)
 
     def _missing_dv_files(self, c: Commit) -> list[str]:
         from component_delta_lake_writer_spark.sinks.deletion_vectors import (  # noqa: E501
@@ -4154,12 +4465,11 @@ class ManagedTable:
         self, retention_hours: float = 30 * 24, now_ms: int | None = None
     ) -> int:
         """Delta's log retention (delta.logRetentionDuration): delete
-        mirror JSON entries and checkpoints older than the advertised
+        log JSON entries and checkpoints older than the advertised
         checkpoint once past the retention window, and GC unreferenced
-        sidecar files. Engine history (``_commits``) is untouched —
-        engine time travel keeps working; external readers replay from
-        the checkpoint, losing only sub-checkpoint time travel beyond
-        retention, exactly the Delta contract. Returns files deleted."""
+        sidecar files. Every reader, this engine included, then replays
+        from that checkpoint: time travel to a version below it fails,
+        exactly the Delta contract. Returns files deleted."""
         from component_delta_lake_writer_spark.sinks.delta_log import (
             cleanup_metadata,
         )
@@ -4182,8 +4492,8 @@ class ManagedTable:
         under ``_data`` and the deletion-vector files are HARDLINKED
         instead of copied
         (O(files) metadata ops, zero data movement — the cost profile
-        of Delta's shallow clone), while the commit log and mirror are
-        real copies so each table's metadata stays self-contained.
+        of Delta's shallow clone), while the log is a real copy so each
+        table's metadata stays self-contained.
         This is safe because data files are immutable here: every
         rewrite creates new files and removal is an unlink, which only
         drops one link. Unlike Delta's pointer-based shallow clone
@@ -4233,7 +4543,7 @@ class ManagedTable:
             raise UserException(f"No table at {self.path}")
         stats = {
             u: self._unit_stats(
-                u, per_file=not prev.partition_by,
+                u,
                 props=prev.properties, mapping=prev.column_mapping,
             )
             for u in prev.data_units
@@ -4250,8 +4560,7 @@ class ManagedTable:
             stats=stats,
             column_mapping=dict(prev.column_mapping),
         )
-        self._publish(commit, prev)
-        return commit
+        return self._publish(commit, prev)
 
     def convert_from_parquet(
         self,
@@ -4267,7 +4576,7 @@ class ManagedTable:
         rewriting any data. Files are adopted by hardlink (cross-
         device: file copy), footer stats are collected driver-side
         exactly like a native write, and version 0 commits with
-        action ``convert`` so the Delta mirror exposes the adopted
+        action ``convert`` so the Delta log exposes the adopted
         files to external readers immediately.
 
         At 100 TB this is the whole point of CONVERT: commit cost is
@@ -4331,9 +4640,12 @@ class ManagedTable:
         # "declared schemas, no data sampling" posture)
         schema = self.spark.read.parquet(udir).schema
         props = properties or {}
-        from component_delta_lake_writer_spark.sinks.unit_stats import (
-            count_unit_rows as _count_unit_rows,
-        )
+        if not collect_stats:
+            # NO STATISTICS: row counts only (footer headers — needed
+            # for metadata-only COUNT(*)), no min/max; data skipping
+            # stays off until ANALYZE
+            props = {**props, "delta.dataSkippingNumIndexedCols": 0}
+        stats = self._unit_stats(unit, props=props)
         commit = Commit(
             version=0,
             action="convert",
@@ -4342,56 +4654,124 @@ class ManagedTable:
             partition_by=partition_by,
             primary_key=primary_key or [],
             timestamp_ms=int(time.time() * 1000),
-            properties=props,
-            stats={
-                unit: (
-                    self._unit_stats(
-                        unit, per_file=not partition_by, props=props
-                    )
-                    if collect_stats
-                    # NO STATISTICS: row counts only (footer headers —
-                    # needed for metadata-only COUNT(*)), no min/max;
-                    # data skipping stays off until ANALYZE.
-                    # Distributed past the same file-count threshold
-                    # as the stats pass.
-                    else {
-                        "_rows": _count_unit_rows(
-                            udir, spark=self.spark
-                        )
-                    }
-                )
-            },
+            properties=properties or {},
+            stats={unit: stats},
         )
-        self._publish(commit, None)
-        return commit
+        return self._publish(commit, None)
 
     def drop(self) -> None:
         """W13: DROP TABLE IF EXISTS (src/component.py:147-148)."""
         shutil.rmtree(self.path, ignore_errors=True)
+        self._snap = None
+
+    @property
+    def _legacy_dir(self) -> str:
+        """The per-commit snapshot log earlier engine versions kept
+        beside ``_delta_log`` — read only by ``sync_metadata``."""
+        return os.path.join(self.path, "_commits")
 
     def sync_metadata(self) -> int:
         """W14: ``MSCK REPAIR TABLE … SYNC METADATA`` (reference
         src/component.py:113-115 resyncs Unity Catalog from the Delta
-        log after an external write). Here the external-reader
-        metadata IS the ``_delta_log`` mirror; repair regenerates any
-        log entry missing for a committed version (e.g. a table
-        produced before the mirror existed, or a partially-copied
-        table). Returns the number of entries regenerated."""
-        log_dir = os.path.join(self.path, "_delta_log")
-        repaired = 0
-        prev: Commit | None = None
-        for v in self._versions():
-            c = self.commit_at(v)
-            if not os.path.exists(os.path.join(log_dir, f"{v:020d}.json")):
-                # the same diff _publish wrote: unit adds/removes, DV
-                # swaps, the advanced txn watermark, feature state
-                self._mirror(c, prev)
-                repaired += 1
-            prev = c
-        return repaired
+        log after an external write). Here it is the one-shot
+        converter for a table an earlier engine version wrote, which
+        kept a full snapshot per commit under ``_commits/`` beside the
+        Delta log: ONE metadata-only commit re-adds every live file
+        with dataChange=false, its stats and tags, removes whatever
+        the old log still lists that the snapshot does not, and
+        records the primary key, exact properties, watermarks and
+        ingest sidecars in metaData / txn / domainMetadata; then
+        ``_commits/`` goes. The commit lands right after the last
+        version the Delta log can replay: that engine claimed a version
+        in ``_commits`` before writing its Delta entry, so a crash
+        between the two left the Delta log behind (or, before it
+        mirrored, absent), and later entries past such a gap were
+        unreachable to every Delta reader — they are deleted, the
+        snapshot this commit reconciles to subsumes them. Earlier
+        versions stay readable from the log for time travel. Returns 1
+        when a table was converted, 0 when there was nothing to
+        convert."""
+        from component_delta_lake_writer_spark.sinks.delta_log import (
+            _empty_state,
+            _replay_steps,
+            write_delta_log_entry,
+        )
+
+        legacy = self._legacy_dir
+        if not os.path.isdir(legacy):
+            return 0
+        names = sorted(
+            f for f in os.listdir(legacy)
+            if f.endswith(".json") and f[:-5].isdigit()
+        )
+        if names:
+            with open(os.path.join(legacy, names[-1])) as fh:
+                d = json.load(fh)
+            # a field this engine no longer models: empty, it carries no
+            # state; non-empty (e.g. merge-on-read deletes kept outside
+            # the Delta log), dropping it would resurrect rows
+            gone = sorted(
+                k for k, v in d.items() if k not in _COMMIT_FIELDS and v
+            )
+            if gone:
+                raise UserException(
+                    f"{names[-1]} at {legacy} carries {gone}, state this "
+                    "engine no longer reads; run optimize() with the "
+                    "engine that wrote it first (MIGRATION.md)."
+                )
+            old = Commit(**{k: v for k, v in d.items() if k in _COMMIT_FIELDS})
+            state = _empty_state()
+            for state, _touched in _replay_steps(self.path):
+                pass
+            head = state["version"]
+            for u in old.data_units:
+                if "_files" not in (old.stats.get(u) or {}):
+                    # partitioned / large units kept no per-file detail
+                    old.stats[u] = {
+                        **self._unit_stats(
+                            u, props=old.properties, mapping=old.column_mapping
+                        ),
+                        **{
+                            k: v for k, v in (old.stats.get(u) or {}).items()
+                            if k == "_bloom"
+                        },
+                    }
+            old.version = head + 1
+            old.action = "sync_metadata"
+            old.timestamp_ms = int(time.time() * 1000)
+            if _prop_on(old.properties, "delta.enableRowTracking"):
+                self._assign_row_ids(old, None)
+            actions = self._log_actions(old, None, state, data_change=False)
+            live = set(old.data_units)
+            # what the log lists beyond the snapshot, and the previous
+            # incarnation of every file whose deletion vector the
+            # snapshot changed (reconciliation is keyed by path and DV)
+            stale = [
+                {"remove": {
+                    "path": a["path"],
+                    "deletionTimestamp": old.timestamp_ms,
+                    "dataChange": False,
+                    **{k: a[k] for k in ("size", "deletionVector") if k in a},
+                }}
+                for p, a in state["adds"].items()
+                if _dv_unit(p) not in live
+                or a.get("deletionVector") != old.deletion_vectors.get(p)
+            ]
+            at = 1 if "commitInfo" in actions[0] else 0
+            actions[at:at] = stale
+            logged = os.path.isdir(self._log_dir)
+            for f in os.listdir(self._log_dir) if logged else []:
+                m = re.match(r"(\d{20})(?:\.(\d{20}))?\.", f)
+                if m and int(m.group(2) or m.group(1)) > head:
+                    os.remove(os.path.join(self._log_dir, f))
+            write_delta_log_entry(self.path, old.version, actions, state)
+        shutil.rmtree(legacy)
+        self._snap = None
+        return 1 if names else 0
 
     def history(self) -> list[Commit]:
-        return [self.commit_at(v) for v in self._versions()]
+        """Every version the log still holds, oldest first."""
+        return list(self._walk())
 
     def create_or_replace_view(self, name: str, version: int | None = None):
         """Register the snapshot as a Spark SQL temp view so the table
@@ -4411,8 +4791,8 @@ class ManagedTable:
         sidecars are missing, plus the newest fully-intact version —
         the safe `restore()` target. Read-only; never mutates."""
         report: dict = {"versions": {}, "last_intact_version": None}
-        for v in self._versions():
-            c = self.commit_at(v)
+        for c in self._walk():
+            v = c.version
             missing_units = [
                 u
                 for u in c.data_units
@@ -4499,8 +4879,7 @@ class ManagedTable:
             stats=prev.stats,
             column_mapping=dict(prev.column_mapping),
         )
-        self._publish(commit, prev)
-        return commit
+        return self._publish(commit, prev)
 
     def column_bounds(self, column: str):
         """``SELECT MIN(col), MAX(col)`` answered from COMMIT METADATA
@@ -4637,7 +5016,7 @@ class ManagedTable:
             (c.stats.get(u) or {}).get("_rows") or 0 for u in c.data_units
         )
         return {
-            "format": "parquet+commit-log (delta-mirrored)",
+            "format": "delta",
             "location": self.path,
             "version": c.version,
             "num_units": len(c.data_units),
@@ -4686,19 +5065,21 @@ class ManagedTable:
 
         ``with_change_type=True`` appends the ``_change_type`` column.
         """
-        versions = [v for v in self._versions() if v > from_version]
-        if to_version is not None:
-            versions = [v for v in versions if v <= to_version]
-        if not versions:
+        commits = list(
+            itertools.takewhile(
+                lambda c: to_version is None or c.version <= to_version,
+                self._walk(from_version),
+            )
+        )
+        if len(commits) < 2:
             raise UserException(
                 f"No commits after version {from_version} at {self.path}"
             )
-        prev_units = set(self.commit_at(from_version).data_units)
+        prev_units = set(commits[0].data_units)
         new_units: list[str] = []
         change_dirs: list[str] = []
         last = None
-        for v in versions:
-            c = self.commit_at(v)
+        for c in commits[1:]:
             if c.action == "append":
                 new_units.extend(u for u in c.data_units if u not in prev_units)
             elif c.action in CDF_METADATA_ONLY_ACTIONS:

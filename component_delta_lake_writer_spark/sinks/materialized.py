@@ -118,11 +118,7 @@ class IncrementalAggregate:
         # would run the incremental path over update change sets that
         # lack the -1 pre-image rows (property enabled mid-history),
         # silently overstating every count and sum forever
-        crossed = [
-            self.source.commit_at(v)
-            for v in self.source._versions()
-            if last < v <= head.version
-        ]
+        crossed = list(self.source._walk(last + 1, head.version))
         for c in crossed:
             if c.action in ("append", "optimize", "delete"):
                 continue  # additive / no-op / carries removed images

@@ -48,15 +48,14 @@ def replicate(source: ManagedTable, replica: ManagedTable) -> str:
     if last is None or not head.primary_key:
         return _full()
     pk = list(head.primary_key)
-    versions = [v for v in source._versions() if last < v <= head.version]
     # Per-commit replay (Delta CDF consumers order by _commit_version
     # for the same reason): a key updated in one commit and deleted in
     # a later one must land in that order; within a single commit a
     # key carries at most one change kind.
     try:
         plans = []
-        for v in versions:
-            c = source.commit_at(v)
+        for c in source._walk(last + 1, head.version):
+            v = c.version
             if c.action in ("optimize", "add_constraint", "drop_constraint"):
                 continue
             plans.append((v, source.read_changes(v - 1, v, with_change_type=True)))

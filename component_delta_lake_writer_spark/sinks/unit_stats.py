@@ -36,6 +36,7 @@ be executor-visible, which any real deployment's shared store is.
 from __future__ import annotations
 
 import datetime as _dt
+import json
 import os
 import re
 
@@ -138,11 +139,6 @@ _CONJUNCT = re.compile(
     flags=re.IGNORECASE,
 )
 
-
-# Per-file detail is capped so a commit JSON can't balloon: past this
-# many files a unit records only its fold. (Delta solves the same
-# problem with parquet checkpoints; the fold is always kept.)
-MAX_FILE_DETAIL = 1000
 
 # Above this many parquet files the footer pass runs as a Spark job
 # over the file list instead of a sequential driver loop (VERDICT r7
@@ -326,12 +322,10 @@ def collect_unit_stats(
     non-orderable stats types keep ``min``/``max`` = None.
 
     ``per_file=True`` additionally records the same shape per data
-    file under ``"_files": {relpath: {...}}`` (capped at
-    MAX_FILE_DETAIL files) — the granularity Delta's add actions use,
-    letting read_where prune individual files inside a multi-file
-    unit. Callers only request it for unpartitioned units: pruned
-    file paths are read directly, which would drop hive partition
-    columns.
+    file under ``"_files": {relpath: {...}}`` — the granularity of
+    Delta's add-action stats, which is how the log stores them
+    (``to_delta_stats``) and what lets read_where prune individual
+    files inside a multi-file unit.
 
     With ``spark`` given and ≥ ``distribute_threshold`` files, the
     footer pass runs as ONE Spark job over the file list (each task
@@ -341,7 +335,7 @@ def collect_unit_stats(
     byte-identical to the pre-distributed behavior.
     """
     rels = list_parquet_files(unit_dir)
-    want_detail = per_file and len(rels) <= MAX_FILE_DETAIL
+    want_detail = per_file
     # Resolve the indexed-column set ONCE, driver-side, from the
     # globally first sorted file (Delta's first-N-schema-columns
     # rule), so every fold slice works from the same set even if the
@@ -377,32 +371,86 @@ def collect_unit_stats(
     return out
 
 
-def count_unit_rows(
-    unit_dir: str,
-    spark=None,
-    distribute_threshold: int = DISTRIBUTE_THRESHOLD,
-) -> int:
-    """Exact row count from footer headers only (the NO STATISTICS
-    CONVERT path) — distributed over the file list past the same
-    threshold as the stats pass."""
-    rels = list_parquet_files(unit_dir)
-    if spark is not None and len(rels) >= distribute_threshold:
-        sc = spark.sparkContext
-        n_slices = max(1, min(len(rels), sc.defaultParallelism * 2))
-        base = unit_dir
-
-        def nrows(rel):
-            import pyarrow.parquet as _pq
-
-            return _pq.ParquetFile(
-                os.path.join(base, rel)
-            ).metadata.num_rows
-
-        return sum(sc.parallelize(rels, n_slices).map(nrows).collect())
-    return sum(
-        pq.ParquetFile(os.path.join(unit_dir, rel)).metadata.num_rows
-        for rel in rels
+def to_delta_stats(fs: dict | None) -> str | None:
+    """One file's stats (the ``collect_unit_stats`` per-file shape) as
+    a Delta-standard ``add.stats`` string: numRecords / minValues /
+    maxValues / nullCount, keyed by physical column name. Temporal
+    values keep their fixed-width form; ``from_delta_stats`` re-derives
+    their kind from the schema. None when the row count is unknown."""
+    if not fs or fs.get("_rows") is None:
+        return None
+    mins: dict = {}
+    maxs: dict = {}
+    nulls: dict = {}
+    for c, e in fs.items():
+        if c.startswith("_"):
+            continue
+        if e.get("min") is not None:
+            mins[c], maxs[c] = e["min"], e["max"]
+        if e.get("nulls") is not None:
+            nulls[c] = e["nulls"]
+    return json.dumps(
+        {
+            "numRecords": fs["_rows"],
+            "minValues": mins,
+            "maxValues": maxs,
+            "nullCount": nulls,
+        }
     )
+
+
+def from_delta_stats(raw: str | None, temporal: frozenset) -> dict:
+    """Inverse of ``to_delta_stats``. ``temporal``: the physical names
+    of the schema's date/timestamp columns — their string bounds get
+    the ``"t"`` kind tag (``"date"`` for the ten-character date form,
+    ``"ts"`` otherwise: a column widened from date keeps date-form
+    bounds in its older files)."""
+    if not raw:
+        return {"_rows": None}
+    d = json.loads(raw)
+    mins = d.get("minValues") or {}
+    maxs = d.get("maxValues") or {}
+    nulls = d.get("nullCount") or {}
+    out: dict = {"_rows": d.get("numRecords")}
+    for c in {**mins, **nulls}:
+        e = {"min": mins.get(c), "max": maxs.get(c), "nulls": nulls.get(c)}
+        if c in temporal and isinstance(e["min"], str):
+            e["t"] = "date" if len(e["min"]) == len("YYYY-MM-DD") else "ts"
+        out[c] = e
+    return out
+
+
+def fold_file_stats(files: dict) -> dict:
+    """A unit's stats from its files' (``from_delta_stats`` shape): the
+    row count sums, and a column keeps a min/max only when every file
+    holding rows recorded one (an all-null file is neutral) — anything
+    less makes the bound unsound for pruning."""
+    rows = [fs.get("_rows") for fs in files.values()]
+    acc: dict = {}
+    cols = {c for fs in files.values() for c in fs if not c.startswith("_")}
+    for c in cols:
+        a = {"min": None, "max": None, "nulls": 0, "bad": False}
+        for fs in files.values():
+            e = fs.get(c)
+            n = fs.get("_rows")
+            if e is None:
+                if n != 0:
+                    a["bad"] = True
+                    a["nulls"] = None
+                continue
+            merge_stats_accs(
+                {c: a},
+                {
+                    c: {
+                        **e,
+                        "bad": e["min"] is None and (
+                            e["nulls"] is None or n is None or e["nulls"] < n
+                        ),
+                    }
+                },
+            )
+        acc[c] = a
+    return _finish(acc, None if None in rows else sum(rows))
 
 
 def parse_conjuncts(condition: str):

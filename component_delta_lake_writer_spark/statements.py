@@ -754,7 +754,7 @@ class StatementExecutor:
 
             tables = []
             for root, dirs, _files in os.walk(self.root):
-                if "_commits" in dirs:
+                if "_delta_log" in dirs:
                     rel = os.path.relpath(root, self.root)
                     tables.append(rel.replace(os.sep, "."))
                     dirs.clear()

@@ -19,7 +19,8 @@ streams A's deltas — no file listing, no external queue.
             .option("path", table.path).load())
 
 Scale posture: offset planning is driver-side COMMIT METADATA (which
-versions, which files — bounded by commit count per batch); the data
+versions, which files — one forward pass over the table's log per
+batch); the data
 plane is one InputPartition per change file, read worker-side via
 pyarrow. Partitioned tables recover hive partition values from the
 directory layout. Commits a CDF stream cannot attribute (overwrite /
@@ -74,21 +75,14 @@ from component_delta_lake_writer_spark.sinks.cdf_actions import (  # noqa: E402
 )
 
 
-def _load_commit(table_path: str, version: int) -> dict:
-    p = os.path.join(table_path, "_commits", f"{version:020d}.json")
-    with open(p) as fh:
-        return json.load(fh)
-
-
-def _versions(table_path: str) -> list[int]:
-    d = os.path.join(table_path, "_commits")
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(f[: -len(".json")])
-        for f in os.listdir(d)
-        if f.endswith(".json")
+def _table(table_path: str):
+    """The table's log reader — imported here, on the planning side
+    only: partition reads in the workers never load the table engine."""
+    from component_delta_lake_writer_spark.sinks.managed_table import (
+        ManagedTable,
     )
+
+    return ManagedTable(None, table_path)
 
 
 class _ChangeFilePartition(InputPartition):
@@ -124,7 +118,7 @@ class CdfStreamReader(DataSourceStreamReader):
     # ---- offsets: {"version": n} = commits <= n consumed ----
 
     def initialOffset(self) -> dict:
-        vs = _versions(self.table_path)
+        vs = _table(self.table_path)._versions()
         if not vs:
             raise UserException(f"No table at {self.table_path}")
         if self.starting_version is not None:
@@ -154,11 +148,12 @@ class CdfStreamReader(DataSourceStreamReader):
         return {"version": vs[-1], "snapshot_of": vs[-1]}
 
     def latestOffset(self) -> dict:
-        vs = _versions(self.table_path)
+        vs = _table(self.table_path)._versions()
         return {"version": vs[-1] if vs else 0}
 
     def partitions(self, start: dict, end: dict):
         lo, hi = int(start["version"]), int(end["version"])
+        table = _table(self.table_path)
         parts: list[_ChangeFilePartition] = []
         if start.get("snapshot_of") is not None:
             # bootstrap batch (default start): the whole snapshot at
@@ -167,31 +162,28 @@ class CdfStreamReader(DataSourceStreamReader):
             # workers drop the deleted positions — the snapshot must
             # equal ManagedTable.read(), not the raw union of files.
             snap = int(start["snapshot_of"])
-            c = _load_commit(self.table_path, snap)
-            mapping = c.get("column_mapping") or {}
-            for u in c["data_units"]:
+            c = table.commit_at(snap)
+            for u in c.data_units:
                 parts.extend(
                     self._unit_files(
                         os.path.join(self.table_path, "_data", u),
-                        snap, "insert", mapping,
-                        dvs=c.get("deletion_vectors") or {},
+                        snap, "insert", c.column_mapping,
+                        dvs=c.deletion_vectors,
                         table_path=self.table_path,
                     )
                 )
             lo = snap
+        # one forward pass over the log from the offset's version
+        commits = list(table._walk(max(lo, 0), hi)) if hi > lo else []
         prev_units = (
-            set(_load_commit(self.table_path, lo)["data_units"])
-            if lo >= 0
-            else set()
+            set(commits.pop(0).data_units) if lo >= 0 and commits else set()
         )
-        for v in range(lo + 1, hi + 1):
-            c = _load_commit(self.table_path, v)
-            action = c["action"]
-            mapping = c.get("column_mapping") or {}
+        for c in commits:
+            v, action, mapping = c.version, c.action, c.column_mapping
             if action in ("create", "overwrite") and not prev_units:
                 # the stream's first commit: its snapshot IS the
                 # insert set (startingVersion=0 bootstrap)
-                for u in c["data_units"]:
+                for u in c.data_units:
                     parts.extend(
                         self._unit_files(
                             os.path.join(self.table_path, "_data", u),
@@ -199,7 +191,7 @@ class CdfStreamReader(DataSourceStreamReader):
                         )
                     )
             elif action == "append":
-                for u in c["data_units"]:
+                for u in c.data_units:
                     if u in prev_units:
                         continue
                     parts.extend(
@@ -224,7 +216,7 @@ class CdfStreamReader(DataSourceStreamReader):
                     f"table_changes_stream cannot attribute a "
                     f"'{action}' commit (v{v})."
                 )
-            prev_units = set(c["data_units"])
+            prev_units = set(c.data_units)
         return parts
 
     @staticmethod
@@ -339,11 +331,10 @@ class CdfStreamDataSource(DataSource):
 
     def schema(self):
         path = (self.options.get("path") or "").rstrip("/")
-        vs = _versions(path)
-        if not vs:
+        c = _table(path).latest_commit() if path else None
+        if c is None:
             raise UserException(f"No table at {path!r}")
-        c = _load_commit(path, vs[-1])
-        base = T.StructType.fromJson(json.loads(c["schema_json"]))
+        base = T.StructType.fromJson(json.loads(c.schema_json))
         fields = list(base.fields) + [
             T.StructField("_change_type", T.StringType(), True),
             T.StructField("_commit_version", T.LongType(), False),

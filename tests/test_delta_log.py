@@ -2,9 +2,10 @@
 
 The reference writes true Delta tables via delta-rs
 (src/component.py:356 write_batch); these tests assert ManagedTable's
-``_delta_log/`` mirror follows the open Delta protocol layout and is
-self-describing — the read-back tests consult ONLY the Delta log,
-never ``_commits``.
+``_delta_log/`` — the table's only log — follows the open Delta
+protocol layout and is self-describing: the read-back tests consult
+ONLY the Delta log, through readers that share no code with the
+engine's snapshot.
 """
 
 from __future__ import annotations
@@ -34,6 +35,18 @@ def _actions(table_path: str, version: int) -> list[dict]:
     p = os.path.join(table_path, "_delta_log", f"{version:020d}.json")
     with open(p) as f:
         return [json.loads(line) for line in f]
+
+def _replayed(path: str):
+    """(live fs paths, schemaString, partitionColumns) of the log's
+    checkpoint-aware replay — the snapshot the engine reads."""
+    from component_delta_lake_writer_spark.sinks.delta_log import (
+        _replay_state,
+    )
+
+    st = _replay_state(path)
+    md = st["metaData"]
+    return sorted(st["adds"]), md["schemaString"], md["partitionColumns"]
+
 
 
 def _keys(actions: list[dict]) -> list[str]:
@@ -135,26 +148,6 @@ def test_delta_log_schema_evolution_reemits_metadata(spark, tmp_path_str):
     assert metas[0]["id"] == v0_meta["id"]
 
 
-def test_msck_repair_regenerates_missing_log_entries(spark, tmp_path_str):
-    """W14 SYNC METADATA: deleting _delta_log entries (a table copied
-    without its mirror) and repairing reproduces a replayable log."""
-    import shutil
-
-    from component_delta_lake_writer_spark.actions import msck_repair
-
-    t = ManagedTable(spark, tmp_path_str + "/t")
-    o = load_table(spark, SF, "orders").limit(100)
-    t.write(o, mode="overwrite")
-    t.write(o.withColumn("o_orderkey", F.col("o_orderkey") + 10**6), mode="append")
-    before, _, _ = replay_delta_log(t.path)
-    shutil.rmtree(os.path.join(t.path, "_delta_log"))
-    out = msck_repair(spark, t.path)
-    assert out.collect()[0]["value"] == "2"
-    after, schema_str, _ = replay_delta_log(t.path)
-    assert after == before
-    assert t.sync_metadata() == 0  # idempotent: nothing left to repair
-
-
 @pytest.mark.slow
 def test_checkpoint_written_and_replayed(spark, tmp_path):
     """Delta-protocol checkpoints: the 10th commit materializes
@@ -167,7 +160,6 @@ def test_checkpoint_written_and_replayed(spark, tmp_path):
     from component_delta_lake_writer_spark.sinks.delta_log import (
         read_last_checkpoint,
         replay_delta_log,
-        replay_delta_log_from_checkpoint,
     )
     from component_delta_lake_writer_spark.tables import load_table
 
@@ -183,7 +175,7 @@ def test_checkpoint_written_and_replayed(spark, tmp_path):
     )
 
     full = replay_delta_log(t.path)
-    fast = replay_delta_log_from_checkpoint(t.path)
+    fast = _replayed(t.path)
     assert fast == full
     # and the reconstructed file set actually reads back to the data
     files, schema_str, _ = fast
@@ -359,10 +351,9 @@ def test_protocol_never_downgrades_in_mirror(spark, tmp_path):
     assert not any("protocol" in a for a in v2)
     # and the log's effective protocol is still the writer-7 one
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        _log_last_protocol,
+        _replay_state,
     )
-    last = _log_last_protocol(os.path.join(t.path, "_delta_log"))
-    assert last["protocol"]["minWriterVersion"] == 7
+    assert _replay_state(t.path)["protocol"]["minWriterVersion"] == 7
 
 
 def test_protocol_upgrade_merge_is_monotonic_max():
@@ -532,6 +523,12 @@ def test_delta_log_external_reader_interop(spark, tmp_path):
         "path": "_data/U0/part-00000-P0.snappy.parquet",
         "partitionValues": {}, "size": "S", "modificationTime": "T",
         "dataChange": True,
+        "stats": json.dumps({
+            "numRecords": 10,
+            "minValues": {"k": 0, "v": 0},
+            "maxValues": {"k": 9, "v": 18},
+            "nullCount": {"k": 0, "v": 0},
+        }),
     }
     # v1 append: add only, no metaData/protocol re-emission
     assert [next(iter(a)) for a in norm[1]] == ["add", "commitInfo"]
@@ -620,7 +617,7 @@ def test_mapping_on_ntz_table_upgrades_protocol(spark, tmp_path):
     what they LIST — enabling column mapping on a timestampNtz table
     must emit an upgraded protocol carrying columnMapping."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        _log_last_protocol,
+        _replay_state,
     )
 
     o = load_table(spark, SF, "orders")      # carries timestamp_ntz
@@ -630,8 +627,7 @@ def test_mapping_on_ntz_table_upgrades_protocol(spark, tmp_path):
     assert "timestampNtz" in v0p["readerFeatures"]
     assert "columnMapping" not in v0p.get("readerFeatures", [])
     t.rename_column("o_orderpriority", "prio")
-    last = _log_last_protocol(os.path.join(t.path, "_delta_log"))
-    rp = last["protocol"]
+    rp = _replay_state(t.path)["protocol"]
     assert "columnMapping" in rp.get("readerFeatures", []), rp
     assert "columnMapping" in rp.get("writerFeatures", []), rp
 
@@ -693,7 +689,7 @@ def test_created_time_stable_across_schema_evolution(spark, tmp_path):
 
 
 def test_nested_column_mapping_ids_stable_across_reemission(spark, tmp_path):
-    """Regression (ADVICE r5, medium): `_prior_mapping_ids` walked only
+    """Regression (ADVICE r5, medium): the prior-id lookup walked only
     top-level fields while `_mapped_schema_string` keys nested fields
     by dotted physical path — so every metaData re-emission on a
     column-mapped table with nested structs renumbered the nested ids
@@ -701,8 +697,12 @@ def test_nested_column_mapping_ids_stable_across_reemission(spark, tmp_path):
     ids must now survive schema evolution AND a second rename, and
     maxColumnId must grow only by genuinely new columns."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        _prior_mapping_ids,
+        _mapping_ids,
+        _replay_state,
     )
+
+    def _prior_mapping_ids(path):
+        return _mapping_ids(_replay_state(path)["metaData"])
 
     t = ManagedTable(spark, str(tmp_path / "t"))
     df = spark.createDataFrame(
@@ -712,8 +712,7 @@ def test_nested_column_mapping_ids_stable_across_reemission(spark, tmp_path):
     )
     t.write(df, mode="overwrite")
     t.rename_column("k", "k2")          # mapping enabled; ids assigned
-    log_dir = os.path.join(t.path, "_delta_log")
-    ids0, max0 = _prior_mapping_ids(log_dir)
+    ids0, max0 = _prior_mapping_ids(t.path)
     # nested fields MUST be present in the prior-id map (the bug was
     # that only top-level physicalNames were recovered)
     assert "s.a" in ids0 and "s.b" in ids0, ids0
@@ -722,14 +721,14 @@ def test_nested_column_mapping_ids_stable_across_reemission(spark, tmp_path):
     assert max0 == max(ids0.values())
 
     t.add_column("extra", "long")       # metaData re-emission #1
-    ids1, max1 = _prior_mapping_ids(log_dir)
+    ids1, max1 = _prior_mapping_ids(t.path)
     for key, pid in ids0.items():
         assert ids1[key] == pid, (key, pid, ids1)
     # exactly ONE fresh id for 'extra' — no renumber-driven inflation
     assert max1 == max0 + 1, (max0, max1, ids1)
 
     t.rename_column("k2", "k3")         # metaData re-emission #2
-    ids2, max2 = _prior_mapping_ids(log_dir)
+    ids2, max2 = _prior_mapping_ids(t.path)
     assert ids2 == ids1 and max2 == max1
 
 
@@ -887,7 +886,7 @@ def test_dv_with_column_mapping_and_partitioning(spark, tmp_path):
     partitioned table's DV re-add carries the hive-derived
     partitionValues."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        _replay_full,
+        live_dv_descriptors,
         read_delta_table,
     )
 
@@ -915,8 +914,7 @@ def test_dv_with_column_mapping_and_partitioning(spark, tmp_path):
     )
     p.write(pdf, mode="overwrite", primary_key=["k"], partition_by=["p"])
     p.delete_where("k >= 15", strategy="merge-on-read")
-    _files, _s, pcols, dvs = _replay_full(p.path)
-    assert pcols == ["p"] and dvs
+    assert _replayed(p.path)[2] == ["p"] and live_dv_descriptors(p.path)
     acts = _actions(p.path, 1)
     dv_adds = [a["add"] for a in acts
                if "add" in a and a["add"].get("deletionVector")]
@@ -961,12 +959,14 @@ def test_vacuum_keeps_dvs_of_retained_snapshots(spark, tmp_path):
     # age v0/v1 (and the DV file) out of a 24h retention window
     old_ms = int((_time.time() - 48 * 3600) * 1000)
     for v in (0, 1):
-        p = os.path.join(t.path, "_commits", f"{v:020d}.json")
+        p = os.path.join(t.path, "_delta_log", f"{v:020d}.json")
         with open(p) as fh:
-            c = _json.load(fh)
-        c["timestamp_ms"] = old_ms
+            acts = [_json.loads(line) for line in fh]
+        for a in acts:
+            if "commitInfo" in a:
+                a["commitInfo"]["timestamp"] = old_ms
         with open(p, "w") as fh:
-            _json.dump(c, fh)
+            fh.writelines(_json.dumps(a) + "\n" for a in acts)
     for f in os.listdir(t.path):
         if f.startswith("deletion_vector_"):
             os.utime(os.path.join(t.path, f),
@@ -1011,8 +1011,7 @@ def test_latest_metadata_checkpoint_bounded(spark, tmp_path):
     checkpoint's own row."""
     from component_delta_lake_writer_spark.sinks import ManagedTable
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        _latest_metadata,
-        _log_has_dv_config,
+        _replay_state,
         read_last_checkpoint,
     )
     from component_delta_lake_writer_spark.tables import load_table
@@ -1036,11 +1035,11 @@ def test_latest_metadata_checkpoint_bounded(spark, tmp_path):
     # simulate external metadata cleanup: drop all pre-checkpoint JSON
     for v in range(ck["version"]):
         os.unlink(os.path.join(log_dir, f"{v:020d}.json"))
-    md = _latest_metadata(log_dir)
+    md = _replay_state(t.path)["metaData"]
     assert md is not None
     cfg = md.get("configuration") or {}
     assert cfg.get("delta.enableDeletionVectors") == "true"
-    assert _log_has_dv_config(log_dir)
+    assert ManagedTable(spark, t.path).latest_commit().deletion_vectors
     # the scan must never have opened the (now missing) early entries:
     # a fresh append commit still publishes cleanly on this table
     t.write(
@@ -1363,48 +1362,6 @@ def test_external_read_partitioned_table(spark, tmp_path_str):
     assert all(k % 4 != 1 for k, _, _ in got2)
 
 
-def test_sync_metadata_repairs_row_tracking_entry(spark, tmp_path_str):
-    """A lost mirror entry on a row-tracked ICT table regenerates with
-    its domainMetadata, add-level ids, and in-commit timestamp — the
-    external reader agrees with the engine again afterwards."""
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table_row_ids,
-    )
-
-    t = _rt_table(
-        spark, tmp_path_str,
-        extra_props={"delta.enableInCommitTimestamps": "true"},
-    )
-    t.write(
-        spark.range(8, 12)
-        .select(F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
-        .repartition(1),
-        mode="append",
-    )
-    want = {
-        (r.k, r._row_id, r._row_commit_version)
-        for r in t.read(with_row_ids=True).collect()
-    }
-    entry = os.path.join(t.path, "_delta_log", f"{1:020d}.json")
-    os.unlink(entry)
-    assert t.sync_metadata() == 1
-    acts = _actions(t.path, 1)
-    assert _keys(acts)[0] == "commitInfo"
-    assert (
-        acts[0]["commitInfo"]["inCommitTimestamp"]
-        == t.commit_at(1).timestamp_ms
-    )
-    dm = next(a["domainMetadata"] for a in acts if "domainMetadata" in a)
-    assert json.loads(dm["configuration"])["rowIdHighWaterMark"] == 11
-    add = next(a["add"] for a in acts if "add" in a)
-    assert add["baseRowId"] == 8 and add["defaultRowCommitVersion"] == 1
-    got = {
-        (r.k, r._row_id, r._row_commit_version)
-        for r in read_delta_table_row_ids(spark, t.path).collect()
-    }
-    assert got == want
-
-
 def test_multipart_checkpoint_roundtrip(spark, tmp_path_str):
     """Past CHECKPOINT_PART_ROWS action rows the checkpoint splits
     into the spec's {version}.checkpoint.{part}.{parts}.parquet
@@ -1572,15 +1529,13 @@ def test_v2_checkpoint_layout_and_replay(spark, tmp_path):
     import glob
 
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        _log_last_protocol,
+        _replay_state,
         read_delta_table,
         read_last_checkpoint,
     )
 
     t, df = _v2_table(spark, str(tmp_path / "t"))
-    pr = _log_last_protocol(
-        os.path.join(t.path, "_delta_log")
-    )["protocol"]
+    pr = _replay_state(t.path)["protocol"]
     assert "v2Checkpoint" in (pr.get("readerFeatures") or [])
     assert "v2Checkpoint" in (pr.get("writerFeatures") or [])
     for i in range(9):
@@ -1615,11 +1570,9 @@ def test_v2_checkpoint_layout_and_replay(spark, tmp_path):
     assert eng == ext
 
 
-def test_v2_checkpoint_carries_dvs_and_survives_repair(spark, tmp_path):
-    """Deletion-vector descriptors must ride the sidecar add rows, and
-    sync_metadata repair must keep advertising the v2 policy."""
+def test_v2_checkpoint_carries_dvs(spark, tmp_path):
+    """Deletion-vector descriptors must ride the sidecar add rows."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        _latest_metadata,
         live_dv_descriptors,
         read_delta_table,
     )
@@ -1638,19 +1591,12 @@ def test_v2_checkpoint_carries_dvs_and_survives_repair(spark, tmp_path):
     assert len(dvs) == 1 and next(iter(dvs.values()))["cardinality"] == 10
     assert t.read().count() == 890
     assert read_delta_table(spark, t.path).count() == 890
-    # repair path keeps the policy + feature args
-    removed = os.path.join(log_dir, f"{t.latest_commit().version:020d}.json")
-    os.remove(removed)
-    assert t.sync_metadata() == 1
-    md = _latest_metadata(log_dir)
-    assert md["configuration"].get("delta.checkpointPolicy") == "v2"
 
 
 def test_v2_checkpoint_multi_sidecar_chunking(spark, tmp_path):
     """part_rows bounds each sidecar file; the manifest lists one
     sidecar action per chunk and replay unions them all."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        replay_delta_log_from_checkpoint,
         write_checkpoint,
     )
 
@@ -1665,7 +1611,7 @@ def test_v2_checkpoint_multi_sidecar_chunking(spark, tmp_path):
     write_checkpoint(t.path, v, part_rows=2)
     log_dir = os.path.join(t.path, "_delta_log")
     assert len(os.listdir(os.path.join(log_dir, "_sidecars"))) >= 3
-    files, _schema, _p = replay_delta_log_from_checkpoint(t.path)
+    files, _schema, _p = _replayed(t.path)
     assert len(files) == 5
 
 
@@ -1674,7 +1620,7 @@ def test_classic_table_upgrades_to_v2_policy(spark, tmp_path):
     checkpoint is v2, protocol upgrades, and replay spans the
     transition."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        _log_last_protocol,
+        _replay_state,
         read_delta_table,
         read_last_checkpoint,
         write_checkpoint,
@@ -1687,9 +1633,7 @@ def test_classic_table_upgrades_to_v2_policy(spark, tmp_path):
     t.write(df.coalesce(1), mode="overwrite")
     t.write(df.coalesce(1), mode="append")
     t.set_properties({"delta.checkpointPolicy": "v2"})
-    pr = _log_last_protocol(
-        os.path.join(t.path, "_delta_log")
-    )["protocol"]
+    pr = _replay_state(t.path)["protocol"]
     assert "v2Checkpoint" in (pr.get("readerFeatures") or [])
     v = t.latest_commit().version
     write_checkpoint(t.path, v)
@@ -1706,11 +1650,16 @@ def test_metadata_cleanup_retention(spark, tmp_path):
     checkpoint's metaData, and the NEXT checkpoint seeds from the
     previous one (no v0 JSON to replay)."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        _table_created_ms,
-        _table_id,
+        _replay_state,
         read_delta_table,
         read_last_checkpoint,
     )
+
+    def _table_id(path):
+        return _replay_state(path)["metaData"]["id"]
+
+    def _table_created_ms(path):
+        return _replay_state(path)["metaData"]["createdTime"]
 
     t, df = _v2_table(spark, str(tmp_path / "t"), n=40)
     for i in range(14):
@@ -1720,16 +1669,16 @@ def test_metadata_cleanup_retention(spark, tmp_path):
             mode="append",
         )
     log_dir = os.path.join(t.path, "_delta_log")
-    tid = _table_id(log_dir)
-    created = _table_created_ms(log_dir)
+    tid = _table_id(t.path)
+    created = _table_created_ms(t.path)
     assert read_last_checkpoint(t.path)["version"] == 9
     # retention not yet expired: nothing deleted
     assert t.cleanup_metadata(retention_hours=1000) == 0
     removed = t.cleanup_metadata(retention_hours=0)
     assert removed >= 9
     assert not os.path.exists(os.path.join(log_dir, f"{0:020d}.json"))
-    assert _table_id(log_dir) == tid
-    assert _table_created_ms(log_dir) == created
+    assert _table_id(t.path) == tid
+    assert _table_created_ms(t.path) == created
     assert read_delta_table(spark, t.path).count() == t.read().count()
     # checkpointing still works (seeds from the prior checkpoint) and
     # the snapshot stays exact across the seeded generation
@@ -1980,8 +1929,7 @@ def test_check_constraints_mirrored(spark, tmp_path):
     writers must see and enforce them. DROP CONSTRAINT re-emits
     without the key."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        _latest_metadata,
-        _log_last_protocol,
+        _replay_state,
     )
 
     t = ManagedTable(spark, str(tmp_path / "t"))
@@ -1990,18 +1938,17 @@ def test_check_constraints_mirrored(spark, tmp_path):
     )
     t.write(df.coalesce(1), mode="overwrite")
     t.add_constraint("v_nonneg", "v >= 0")
-    log_dir = os.path.join(t.path, "_delta_log")
-    cfg = _latest_metadata(log_dir)["configuration"]
+    cfg = _replay_state(t.path)["metaData"]["configuration"]
     assert cfg.get("delta.constraints.v_nonneg") == "v >= 0"
-    pr = _log_last_protocol(log_dir)["protocol"]
+    pr = _replay_state(t.path)["protocol"]
     assert pr["minWriterVersion"] >= 3
     if "writerFeatures" in pr:
         assert "checkConstraints" in pr["writerFeatures"]
     t.drop_constraint("v_nonneg")
-    cfg2 = _latest_metadata(log_dir)["configuration"]
+    cfg2 = _replay_state(t.path)["metaData"]["configuration"]
     assert "delta.constraints.v_nonneg" not in cfg2
     # protocol never downgrades
-    pr2 = _log_last_protocol(log_dir)["protocol"]
+    pr2 = _replay_state(t.path)["protocol"]
     assert pr2["minWriterVersion"] >= 3
 
 
@@ -2183,7 +2130,6 @@ def test_retention_compaction_v2_dv_composite(spark, tmp_path):
         read_delta_table_changes,
         read_last_checkpoint,
         replay_delta_log,
-        replay_delta_log_from_checkpoint,
         verify_version_checksum,
     )
 
@@ -2248,7 +2194,7 @@ def test_retention_compaction_v2_dv_composite(spark, tmp_path):
     # -- every entry point, pre-cleanup --
     assert _ext() == expected
     full = replay_delta_log(t.path)
-    seeded = replay_delta_log_from_checkpoint(t.path)
+    seeded = _replayed(t.path)
     assert sorted(full[0]) == sorted(seeded[0])
     verify_version_checksum(t.path)
     cols = ["k", "v", "_change_type"]
@@ -2266,7 +2212,7 @@ def test_retention_compaction_v2_dv_composite(spark, tmp_path):
     # checkpoint are gone — that is the checkpoint's job); the
     # checkpoint-seeded replay must still reconstruct the exact
     # pre-cleanup snapshot
-    seeded2 = replay_delta_log_from_checkpoint(t.path)
+    seeded2 = _replayed(t.path)
     assert sorted(seeded2[0]) == sorted(full[0])
     assert len(live_dv_descriptors(t.path)) >= 2
     import pytest as _pytest
@@ -2294,7 +2240,7 @@ def test_retention_compaction_v2_dv_composite(spark, tmp_path):
     assert read_last_checkpoint(t.path)["version"] == 27
     assert _ext() == _snap()
     verify_version_checksum(t.path)
-    seeded3 = replay_delta_log_from_checkpoint(t.path)
+    seeded3 = _replayed(t.path)
     eng_units = {
         os.path.relpath(f, t.path)
         for f in __import__("glob").glob(
@@ -2314,7 +2260,6 @@ def test_column_mapping_dv_checkpoint_composite(spark, tmp_path):
     from component_delta_lake_writer_spark.sinks.delta_log import (
         read_delta_table,
         read_last_checkpoint,
-        replay_delta_log_from_checkpoint,
     )
 
     t = ManagedTable(spark, str(tmp_path / "t"))
@@ -2350,7 +2295,7 @@ def test_column_mapping_dv_checkpoint_composite(spark, tmp_path):
     assert all(k % 7 != 0 for k, _ in eng if k < 1000)
     assert all(k < 1100 for k, _ in eng)
     # checkpoint-seeded replay agrees with the full-JSON file set
-    files, schema, _parts = replay_delta_log_from_checkpoint(t.path)
+    files, schema, _parts = _replayed(t.path)
     # logical name is the renamed one; the PHYSICAL name legitimately
     # stays the original (that is what columnMapping is for)
     assert '"name": "val"' in schema

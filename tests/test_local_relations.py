@@ -236,3 +236,26 @@ def test_write_path_builds_relations_only_through_local_relation():
         "build driver-side relations with session.local_relation: "
         f"{offenders}"
     )
+
+
+def test_commits_log_lives_only_in_the_converter():
+    """``_delta_log`` is the table's only log: the string ``_commits``
+    (the snapshot log earlier engine versions kept) may appear only in
+    the one-shot converter — ``ManagedTable.sync_metadata`` and the
+    ``_legacy_dir`` path it owns."""
+    converter = {"sync_metadata", "_legacy_dir"}
+    offenders = []
+    for f in sorted(PKG.rglob("*.py")):
+        src = f.read_text()
+        if "_commits" not in src:
+            continue
+        allowed: set = set()
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef) and node.name in converter:
+                allowed.update(range(node.lineno, node.end_lineno + 1))
+        offenders += [
+            f"{os.path.relpath(f, REPO)}:{i}"
+            for i, line in enumerate(src.splitlines(), 1)
+            if "_commits" in line and i not in allowed
+        ]
+    assert offenders == [], offenders

@@ -94,7 +94,7 @@ def test_publish_conflict_detected(spark, tmp_path_str):
         t._publish(first)
     # losing writer must not leave tmp litter behind
     litter = [
-        f for f in os.listdir(t._commits_dir) if ".tmp." in f
+        f for f in os.listdir(t._log_dir) if ".tmp." in f
     ]
     assert litter == []
 
@@ -1492,63 +1492,6 @@ def test_read_changes_appends_after_rename(spark, tmp_path_str):
     assert {(r["k"], r["b"]) for r in ch.collect()} == {(2, 20)}
 
 
-@pytest.mark.slow
-def test_sync_metadata_regenerates_lost_dv_entry_and_keeps_txn(
-    spark, tmp_path_str
-):
-    """Repairing a lost _delta_log entry for a merge-on-read commit:
-    the engine commit holds the deletion-vector descriptors, so the
-    regenerated entry carries them again (the external read equals the
-    engine read right after the repair) along with the commit's txn
-    watermark, and the next merge-on-read commit swaps them cleanly."""
-    import json as _json
-
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        live_dv_descriptors,
-        read_delta_table,
-    )
-
-    def _ext_equals_engine():
-        eng = sorted(map(tuple, t.read().collect()))
-        ext = sorted(map(tuple, read_delta_table(spark, t.path).collect()))
-        return eng == ext
-
-    t = ManagedTable(spark, tmp_path_str + "/t")
-    t.write(
-        spark.createDataFrame([(1, 1.0), (2, 2.0)], "k int, v double"),
-        mode="overwrite", primary_key=["k"],
-    )
-    t.upsert(
-        spark.createDataFrame([(2, -2.0)], "k int, v double"), ["k"],
-        strategy="merge-on-read", txn=("appA", 7),
-    )
-    c = t.latest_commit()
-    assert len(c.deletion_vectors) == 1
-    assert live_dv_descriptors(t.path) == c.deletion_vectors
-    entry = os.path.join(t.path, "_delta_log", f"{c.version:020d}.json")
-    with open(entry) as fh:
-        original = [_json.loads(line) for line in fh]
-    os.remove(entry)
-    assert t.sync_metadata() == 1
-    with open(entry) as fh:
-        acts = [_json.loads(line) for line in fh]
-    # same actions as the lost entry, bar the commitInfo clock
-    strip = [a for a in original if "commitInfo" not in a]
-    assert [a for a in acts if "commitInfo" not in a] == strip
-    assert live_dv_descriptors(t.path) == c.deletion_vectors
-    txns = [a["txn"] for a in acts if "txn" in a]
-    assert txns and txns[0]["appId"] == "appA" and txns[0]["version"] == 7
-    assert _ext_equals_engine()
-    t.upsert(
-        spark.createDataFrame([(1, -1.0)], "k int, v double"), ["k"],
-        strategy="merge-on-read",
-    )
-    assert sum(
-        d["cardinality"] for d in live_dv_descriptors(t.path).values()
-    ) == 2
-    assert _ext_equals_engine()
-
-
 def test_restore_refuses_vacuumed_delete_sets(spark, tmp_path_str):
     """The deletion-vector files of a restore target are part of its
     snapshot: once vacuumed, RESTORE refuses loudly."""
@@ -1621,23 +1564,38 @@ def test_mor_writer_dying_before_version_claim_leaves_prior_version(
 
 def test_partition_recovery_suffix_names_and_plus(spark, tmp_path_str):
     """Review findings: the partition-value regex must anchor on '/'
-    (a column suffixing another matched the wrong segment) and '+' in
-    values must survive decoding (url_decode eats it as a space)."""
+    (a column suffixing another matched the wrong segment), '+' in
+    values must survive decoding (url_decode eats it as a space), and
+    values Hive escapes in directory names ('%', '=') must decode once
+    more after the URI decode. Values and ``read().columns`` must not
+    depend on the unit count: 1 unit, 2 units, and after optimize()
+    (whose rewrite would otherwise store the escaped form for good)."""
     t = ManagedTable(spark, tmp_path_str + "/t")
     df = spark.createDataFrame(
-        [(1, "2024-01-01", "7", "C++"), (2, "2024-01-02", "8", "Go")],
-        "k int, event_date string, date string, lang string",
+        [(1, "2024-01-01", "7", "C++", "p%q"),
+         (2, "2024-01-02", "8", "Go", "a=b"),
+         (3, "2024-01-03", "9", "Rust", "x y"),
+         (4, "2024-01-04", "0", "C", "c+d")],
+        "k int, event_date string, date string, lang string, p string",
     )
+    t.write(df.filter("k <= 2"), mode="append",
+            partition_by=["event_date", "date", "lang", "p"])
+    want = {(r["k"], r["event_date"], r["date"], r["lang"], r["p"])
+            for r in df.collect()}
+    cols = ["k", "event_date", "date", "lang", "p"]
+
+    def got():
+        out = t.read()
+        assert out.columns == cols
+        return {tuple(r) for r in out.collect()}
+
+    assert got() == {w for w in want if w[0] <= 2}        # 1 unit
     # two units so the recursive path-recovery branch runs
-    t.write(df.filter("k = 1"), mode="append",
-            partition_by=["event_date", "date", "lang"])
-    t.write(df.filter("k = 2"), mode="append")
-    got = {
-        (r["k"], r["event_date"], r["date"], r["lang"])
-        for r in t.read().collect()
-    }
-    assert got == {(1, "2024-01-01", "7", "C++"),
-                   (2, "2024-01-02", "8", "Go")}
+    t.write(df.filter("k > 2"), mode="append")
+    assert got() == want
+    t.optimize()
+    assert len(t.latest_commit().data_units) == 1
+    assert got() == want
 
 
 # ---------------------------------------------------------------------------
@@ -2011,3 +1969,352 @@ def test_identity_generated_cdf_composite(spark, tmp_path_str):
     t.write(df.withColumn("k", F.col("k") + 200), mode="append")
     rids2 = [r["rid"] for r in t.read().collect()]
     assert len(rids2) == len(set(rids2)) == 78
+
+
+# ---------------------------------------------------------------------------
+# One transaction log: snapshot replay, legacy conversion, commit faults
+# ---------------------------------------------------------------------------
+
+
+def _kv(spark, lo, hi, mul=10):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"), (F.col("id") * mul).alias("v")
+    ).coalesce(1)
+
+
+def _fields_equal(a, b):
+    from dataclasses import fields
+
+    for f in fields(a):
+        assert getattr(a, f.name) == getattr(b, f.name), f.name
+
+
+def test_snapshot_replay_equals_memo_across_checkpoint(spark, tmp_path_str):
+    """Every Commit field survives the log round trip: after each
+    commit a fresh instance's replay (checkpoint + JSON tail) equals
+    the memoised snapshot field by field, and afterwards commit_at(v)
+    of a fresh instance equals the snapshot recorded at v — across row
+    tracking, in-commit timestamps, clustering, bloom tags, deletion
+    vectors, txn watermarks, COPY INTO sidecars, a rename and two
+    checkpoints."""
+    import json as _json
+
+    t = ManagedTable(spark, tmp_path_str + "/t")
+    seen = []
+
+    def check():
+        c = t.latest_commit()
+        _fields_equal(ManagedTable(spark, t.path).latest_commit(), c)
+        seen.append(c)
+
+    t.write(
+        _kv(spark, 0, 20), mode="overwrite", primary_key=["k"],
+        properties={
+            "delta.enableRowTracking": "true",
+            "delta.enableInCommitTimestamps": "true",
+            "bloom_filter_columns": ["v"],
+        },
+    )
+    check()
+    t.write(_kv(spark, 20, 25), mode="append", txn=("app", 1))
+    check()
+    t.upsert(_kv(spark, 3, 6, mul=-1), ["k"], strategy="merge-on-read")
+    check()
+    t.delete_where("k = 21", strategy="merge-on-read")
+    check()
+    src = os.path.join(tmp_path_str, "landing")
+    _kv(spark, 40, 43).write.parquet(src)
+    t.copy_into(os.path.join(src, "*.parquet"))
+    check()
+    t.optimize(cluster_by=["k"])
+    check()
+    t.rename_column("v", "val")
+    check()
+    for i in range(8):
+        t.write(
+            _kv(spark, 100 + 10 * i, 104 + 10 * i)
+            .withColumnRenamed("v", "val"),
+            mode="append",
+        )
+        check()
+    t.restore(version=3)
+    check()
+    assert seen[-1].version >= 10  # replay crossed a checkpoint
+    last = seen[-1]
+    assert last.txns == {"app": 1} and last.ingest_sidecars
+    assert last.row_ids and last.clustered_by == [] and last.deletion_vectors
+    assert any("_bloom" in s for s in seen[1].stats.values())
+    for c in seen:
+        _fields_equal(ManagedTable(spark, t.path).commit_at(c.version), c)
+    # one log, no engine-side file: the snapshot lives in _delta_log
+    assert "_commits" not in os.listdir(t.path)
+    acts = [
+        _json.loads(line)
+        for line in open(
+            os.path.join(t.path, "_delta_log", f"{last.version:020d}.json")
+        )
+    ]
+    assert acts[0]["commitInfo"]["engineAction"] == "restore"
+
+
+def test_properties_round_trip_through_metadata(spark, tmp_path_str):
+    """Table properties ride metaData.configuration losslessly, every
+    shape the package writes: CHECK constraints (a dict), autoCompact
+    knobs (bool, int, column list), truth-tested booleans, a string
+    that merely reads 'true', and RESTORE's integer
+    restored_from_version."""
+    t = ManagedTable(spark, tmp_path_str + "/t")
+    t.write(
+        _kv(spark, 0, 5), mode="overwrite", primary_key=["k"],
+        properties={"note": "true", "delta.checkpointInterval": 3},
+    )
+    t.add_constraint("v_nonneg", "v >= 0")
+    t.set_properties({
+        "autoCompact": "true",
+        "autoCompact.minUnits": 5,
+        "autoCompact.clusterBy": ["k"],
+        "enableChangeDataFeed": "false",
+    })
+    t.write(_kv(spark, 5, 8), mode="append")
+    t.restore(version=2)
+    want = {
+        "note": "true",
+        "delta.checkpointInterval": 3,
+        "constraints": {"v_nonneg": "v >= 0"},
+        "autoCompact": True,
+        "autoCompact.minUnits": 5,
+        "autoCompact.clusterBy": ["k"],
+        "enableChangeDataFeed": False,
+        "restored_from_version": 2,
+    }
+    for c in (t.latest_commit(), ManagedTable(spark, t.path).latest_commit()):
+        assert c.properties == want
+        assert c.primary_key == ["k"]
+    # every earlier version keeps its own properties
+    assert ManagedTable(spark, t.path).commit_at(0).properties == {
+        "note": "true", "delta.checkpointInterval": 3,
+    }
+
+
+@pytest.mark.parametrize("damage", ["none", "tail_lost", "gap", "no_log"])
+def test_sync_metadata_converts_legacy_table(spark, tmp_path_str, damage):
+    """A table written while the engine kept a ``_commits`` snapshot
+    log beside ``_delta_log`` (tests/fixtures/legacy_commits_table,
+    FIXTURES.md) refuses to open until MSCK REPAIR / sync_metadata()
+    converts it: one metadata-only commit that keeps rows, deletion
+    vectors, row ids, primary key, properties and txn watermarks,
+    after which the Delta log is the table's only log.
+
+    That engine claimed a version in ``_commits`` before it wrote the
+    Delta entry: a crash between the two left the Delta log one entry
+    behind (``tail_lost``), commits after such a crash left a gap
+    (``gap``: entry 3 exists, entry 2 does not, so the deletion
+    vectors never reached a replayable entry), and a table from before
+    the Delta log existed has none (``no_log``). The conversion lands
+    right after what the log can replay and drops what lies past a
+    gap."""
+    import json as _json
+    import shutil
+
+    from component_delta_lake_writer_spark.actions import msck_repair
+    from component_delta_lake_writer_spark.sinks import delta_log as DL
+
+    src = os.path.join(
+        os.path.dirname(__file__), "fixtures", "legacy_commits_table"
+    )
+    path = os.path.join(tmp_path_str, "t")
+    shutil.copytree(src, path)
+    with open(os.path.join(path, "expected.json")) as fh:
+        want = _json.load(fh)
+    log = os.path.join(path, "_delta_log")
+    head = want["version"]
+    if damage == "no_log":
+        shutil.rmtree(log)
+        head = -1
+    elif damage != "none":
+        lost = 3 if damage == "tail_lost" else 2
+        for ext in ("json", "crc"):
+            os.remove(os.path.join(log, f"{lost:020d}.{ext}"))
+        head = lost - 1
+    t = ManagedTable(spark, path)
+    assert t.exists()
+    with pytest.raises(UserException, match=r"sync_metadata\(\)"):
+        t.latest_commit()
+    assert msck_repair(spark, path).collect()[0]["value"] == "1"
+    assert not os.path.exists(os.path.join(path, "_commits"))
+    assert DL._log_versions(log) == list(range(head + 2))
+    c = t.latest_commit()
+    assert c.version == head + 1
+    assert c.action == "sync_metadata"
+    assert c.primary_key == want["primary_key"]
+    assert c.properties == want["properties"]
+    assert c.txns == want["txns"]
+    assert c.row_id_high_water == want["row_id_high_water"]
+    assert c.deletion_vectors
+    rows = sorted(
+        [r.k, r.v, r._row_id] for r in t.read(with_row_ids=True).collect()
+    )
+    assert rows == want["rows"]
+    ext = sorted(
+        [r.k, r.v, r._row_id]
+        for r in DL.read_delta_table_row_ids(spark, path).collect()
+    )
+    assert ext == want["rows"]
+    acts = [
+        _json.loads(line)
+        for line in open(os.path.join(log, f"{c.version:020d}.json"))
+    ]
+    adds = [a["add"] for a in acts if "add" in a]
+    assert len(adds) == len(c.data_units)
+    assert all(not a["dataChange"] and "stats" in a for a in adds)
+    _fields_equal(ManagedTable(spark, path).latest_commit(), c)
+    # the converted table keeps committing and time-travelling
+    t.write(_kv(spark, 50, 52), mode="append")
+    assert t.read().count() == len(want["rows"]) + 2
+    assert t.read(version=c.version).count() == len(want["rows"])
+    assert [h.version for h in t.history()] == list(range(head + 3))
+    assert t.sync_metadata() == 0
+
+
+def test_memo_drops_a_dropped_and_recreated_table(spark, tmp_path_str):
+    """An instance holding a memoised snapshot sees a table another
+    instance dropped and recreated up to the same version as the new
+    table: it reads the new rows and commits on top of them."""
+    path = os.path.join(tmp_path_str, "t")
+    held = ManagedTable(spark, path)
+    held.write(_kv(spark, 0, 3), mode="overwrite", primary_key=["k"])
+    held.write(_kv(spark, 3, 6), mode="append")
+    assert held.latest_commit().version == 1
+    other = ManagedTable(spark, path)
+    other.drop()
+    other.write(_kv(spark, 100, 110, mul=7), mode="overwrite")
+    other.write(_kv(spark, 110, 111, mul=7), mode="append")
+    c = held.latest_commit()
+    assert c.version == 1
+    _fields_equal(c, ManagedTable(spark, path).latest_commit())
+    assert c.primary_key == []
+    assert sorted(r.k for r in held.read().collect()) == list(range(100, 111))
+    held.write(_kv(spark, 200, 202, mul=7), mode="append")
+    fresh = ManagedTable(spark, path)
+    _fields_equal(held.latest_commit(), fresh.latest_commit())
+    assert sorted(r.k for r in fresh.read().collect()) == (
+        list(range(100, 111)) + [200, 201]
+    )
+
+
+def test_commit_faults_leave_prior_or_new_version(spark, tmp_path_str):
+    """Fault injection at each commit step — data written, deletion
+    vector written, version claimed, .crc written, checkpoint written,
+    log compaction. After each raise a fresh ManagedTable and the
+    external reader both show exactly the prior version or the new
+    one, and vacuum reclaims every orphan the crash left. Two writers
+    racing for one version still get one winner and one conflict."""
+    import time as _time
+
+    from component_delta_lake_writer_spark.sinks import delta_log as DL
+    from component_delta_lake_writer_spark.sinks import (
+        deletion_vectors as DV,
+    )
+    from component_delta_lake_writer_spark.sinks import managed_table as MT
+
+    path = os.path.join(tmp_path_str, "t")
+    ManagedTable(spark, path).write(
+        _kv(spark, 0, 12), mode="overwrite", primary_key=["k"],
+        properties={
+            "delta.checkpointInterval": 2,
+            "mirror.logCompactionInterval": 3,
+        },
+    )
+    model = {k: k * 10 for k in range(12)}
+
+    class Boom(RuntimeError):
+        pass
+
+    def after(orig):
+        def f(*a, **kw):
+            out = orig(*a, **kw)
+            raise Boom()
+        return f
+
+    def before(orig):
+        def f(*a, **kw):
+            raise Boom()
+        return f
+
+    def engine_rows():
+        return {r.k: r.v for r in ManagedTable(spark, path).read().collect()}
+
+    def ext_rows():
+        return {r.k: r.v for r in DL.read_delta_table(spark, path).collect()}
+
+    def vacuum_reclaims_orphans():
+        old = _time.time() - 3600
+        for root, dirs, files in os.walk(path):
+            for n in dirs + files:
+                os.utime(os.path.join(root, n), (old, old))
+        t = ManagedTable(spark, path)
+        t.vacuum(retention_hours=0)
+        c = t.latest_commit()
+        assert sorted(os.listdir(os.path.join(path, "_data"))) == sorted(
+            c.data_units
+        )
+        live_dvs = {
+            DV.dv_relative_path(d) for d in c.deletion_vectors.values()
+        }
+        assert {
+            f for f in os.listdir(path) if f.startswith("deletion_vector_")
+        } == live_dvs
+
+    steps = [
+        # (what to patch, wrapper, does the new version land?)
+        ((MT.ManagedTable, "_write_unit"), after, False),
+        ((DV, "write_dv_file"), after, False),
+        ((DL, "_write_version_crc"), before, True),     # claimed only
+        ((DL, "_write_version_crc"), after, True),      # .crc written
+        ((DL, "write_checkpoint"), after, True),
+        ((DL, "write_log_compaction"), after, True),
+    ]
+    mp = pytest.MonkeyPatch()
+    for i, ((owner, name), wrap, lands) in enumerate(steps):
+        k = 100 + i
+        new = dict(model)
+        if owner is DV:
+            op = lambda t: t.delete_where(  # noqa: E731
+                f"k = {i}", strategy="merge-on-read"
+            )
+            new.pop(i, None)
+        else:
+            op = lambda t: t.write(  # noqa: E731
+                _kv(spark, k, k + 1), mode="append"
+            )
+            new[k] = k * 10
+        t = ManagedTable(spark, path)
+        before_v = t.latest_commit().version
+        # land the op on the step's checkpoint / compaction boundary
+        period = {"write_checkpoint": 2, "write_log_compaction": 3}.get(name)
+        while period and (before_v + 2) % period:
+            t.set_properties({"bump": before_v})
+            before_v += 1
+        mp.setattr(owner, name, wrap(getattr(owner, name)))
+        try:
+            with pytest.raises(Boom):
+                op(t)
+        finally:
+            mp.undo()
+        head = ManagedTable(spark, path).latest_commit().version
+        assert head == (before_v + 1 if lands else before_v), name
+        model = new if lands else model
+        assert engine_rows() == model, name
+        assert ext_rows() == model, name
+        vacuum_reclaims_orphans()
+        assert engine_rows() == model, name
+    # two writers racing for the same version: one winner, one conflict
+    a, b = ManagedTable(spark, path), ManagedTable(spark, path)
+    prev = b.latest_commit()
+    a.write(_kv(spark, 200, 201), mode="append")
+    from dataclasses import replace
+
+    with pytest.raises(UserException, match="Concurrent commit conflict"):
+        b._publish(replace(prev, version=prev.version + 1), prev)
+    b.write(_kv(spark, 201, 202), mode="append")  # retries past it
+    assert engine_rows() == {**model, 200: 2000, 201: 2010}

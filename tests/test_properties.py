@@ -456,11 +456,14 @@ def test_table_lifecycle_model(spark, ops):
     replaying the same commands, and every historical version must
     stay readable (time travel over mixed COW / MOR / compacted /
     restored history). After EVERY commit the external Delta reader
-    (the ``_delta_log`` mirror alone) must equal the model too: no
-    version may exist where the mirror lags the engine. This is the
-    strongest single invariant the table layer offers — any
-    interaction bug between deletion vectors, compaction rewrites, and
-    restore's snapshot semantics falsifies it."""
+    (the ``_delta_log`` alone) must equal the model too, a fresh
+    instance's replay of the log must equal the memoised snapshot
+    field by field, and ``commit_at(v)`` must still return the
+    snapshot recorded at every earlier version. This is the strongest
+    single invariant the table layer offers — any interaction bug
+    between deletion vectors, compaction rewrites, restore's snapshot
+    semantics and the log replay falsifies it."""
+    from dataclasses import fields
     import os
     import tempfile
 
@@ -473,6 +476,13 @@ def test_table_lifecycle_model(spark, ops):
         t = ManagedTable(spark, os.path.join(d, "t"))
         model: dict = {}
         history: list[dict] = []  # model snapshot per committed version
+        commits: list = []  # memoised snapshot per committed version
+
+        def same(a, b, where):
+            for f in fields(a):
+                assert getattr(a, f.name) == getattr(b, f.name), (
+                    f"{f.name} differs at {where}"
+                )
 
         def commit_model():
             history.append(dict(model))
@@ -480,7 +490,13 @@ def test_table_lifecycle_model(spark, ops):
                 r["k"]: r["v"]
                 for r in read_delta_table(spark, t.path).collect()
             }
-            assert ext == model, f"mirror lags at v{len(history) - 1}"
+            assert ext == model, f"log lags at v{len(history) - 1}"
+            memo = t.latest_commit()
+            commits.append(memo)
+            fresh = ManagedTable(spark, t.path)
+            same(fresh.latest_commit(), memo, f"head v{memo.version}")
+            for c in commits[:-1]:
+                same(fresh.commit_at(c.version), c, f"v{c.version}")
 
         for op, arg in ops:
             if op in ("append", "upsert_cow", "upsert_mor"):

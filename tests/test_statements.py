@@ -369,7 +369,9 @@ def test_convert_clone_analyze_statements(ex, tmp_path):
     # NO STATISTICS + ANALYZE re-arms stats
     ex.execute(f"CONVERT TO DELTA parquet.`{raw}` NO STATISTICS AS conv2")
     t2 = ex.table("conv2")
-    assert set(next(iter(t2.latest_commit().stats.values()))) == {"_rows"}
+    st = next(iter(t2.latest_commit().stats.values()))
+    assert set(st) == {"_rows", "_files"}  # row counts only, per file too
+    assert all(set(f) == {"_rows"} for f in st["_files"].values())
     ex.execute("ANALYZE TABLE conv2 COMPUTE STATISTICS FOR ALL COLUMNS")
     c = t2.latest_commit()
     assert c.action == "analyze"

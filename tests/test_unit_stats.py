@@ -1009,11 +1009,12 @@ def test_distributed_footer_pass_matches_driver_loop(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_count_unit_rows_distributed_matches(spark, tmp_path):
-    """The NO STATISTICS CONVERT row-count pass distributes past the
-    same threshold and agrees with the sequential count."""
+def test_no_statistics_row_counts_distributed_match(spark, tmp_path):
+    """The NO STATISTICS CONVERT pass (row counts only: zero indexed
+    columns) distributes past the same threshold and agrees with the
+    sequential one, per unit and per file."""
     from component_delta_lake_writer_spark.sinks.unit_stats import (
-        count_unit_rows,
+        collect_unit_stats,
     )
 
     src = str(tmp_path / "many")
@@ -1022,12 +1023,14 @@ def test_count_unit_rows_distributed_matches(spark, tmp_path):
     group = "rowcount-distributed"
     sc.setJobGroup(group, group)
     try:
-        n = count_unit_rows(src, spark=spark)
+        dist = collect_unit_stats(
+            src, per_file=True, num_indexed_cols=0, spark=spark
+        )
     finally:
         sc.setJobGroup(None, None)
-    assert n == 6400
+    assert dist["_rows"] == 6400 and set(dist) == {"_rows", "_files"}
     assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1
-    assert count_unit_rows(src) == 6400
+    assert dist == collect_unit_stats(src, per_file=True, num_indexed_cols=0)
 
 
 def test_merge_stats_accs_semantics():
@@ -1107,7 +1110,8 @@ def test_convert_distributed_stats_end_to_end(spark, tmp_path):
     t2 = ManagedTable(spark, str(tmp_path / "t2"))
     t2.convert_from_parquet(src, collect_stats=False)
     st3 = next(iter(t2.latest_commit().stats.values()))
-    assert st3 == {"_rows": 8000}
+    assert set(st3) == {"_rows", "_files"} and st3["_rows"] == 8000
+    assert all(set(f) == {"_rows"} for f in st3["_files"].values())
 
 
 def test_distributed_indexed_cols_consistent_under_schema_drift(
