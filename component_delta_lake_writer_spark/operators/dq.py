@@ -15,6 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.exact import (
+    exact_sum,
+    exact_sum_product,
+)
 from component_delta_lake_writer_spark.session import local_relation
 
 
@@ -209,17 +213,15 @@ def group_stats(
     which can land a few ulps NEGATIVE — sqrt would then yield NaN,
     and NaN compares GREATER in Spark, silently defeating every
     downstream sd > 0 guard)."""
-    v6 = F.round(F.col(value_col).cast("double"), 6)
     return (
-        df.select(F.col(group_col), v6.alias("_v"))
+        df.select(
+            F.col(group_col), F.col(value_col).cast("double").alias("_v")
+        )
         .groupBy(group_col)
         .agg(
             F.count(F.lit(1)).alias("_n"),
-            F.sum(F.col("_v").cast("decimal(24,6)")).alias("_s"),
-            F.sum(
-                F.col("_v").cast("decimal(24,6)")
-                * F.col("_v").cast("decimal(24,6)")
-            ).alias("_s2"),
+            exact_sum("_v", 6).alias("_s"),
+            exact_sum_product("_v", "_v", 6).alias("_s2"),
         )
         .select(
             group_col,
@@ -322,7 +324,6 @@ def numeric_profile(
     aggs = []
     for c in cols:
         v = F.col(c).cast("double")
-        v6 = F.round(v, 6)
         pct = (
             F.percentile(v, q_arr)
             if exact
@@ -331,7 +332,7 @@ def numeric_profile(
         aggs += [
             F.count(F.lit(1)).alias(f"__n_{c}"),
             F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{c}"),
-            F.sum(v6.cast("decimal(24,6)")).alias(f"__s_{c}"),
+            exact_sum(v, 6).alias(f"__s_{c}"),
             F.round(F.min(v), 6).alias(f"__mn_{c}"),
             F.round(F.max(v), 6).alias(f"__mx_{c}"),
             pct.alias(f"__q_{c}"),
@@ -582,16 +583,12 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     table (36 columns = 648 aggregate buffers; fine. 3,000 columns =
     27 M; pre-prune first).
 
-    Numerics: values round to 6dp and the sums run in DECIMAL.  The
-    co-moment products deliberately mix widths — decimal(19,6) ×
-    decimal(18,6) → decimal(38,12) — because the symmetric spellings
-    break an engine each way: 18×18 stays int64-backed in DuckDB and
-    overflows its internal multiply, 19×19 wants precision 39 and
-    forces Spark to shave scale.  The mixed form is exact in both, so
-    the sums are order-independent and bit-identical to the ANSI-SQL
-    replay; the final Pearson combination runs in double from those
-    identical inputs.  A zero-variance side yields corr = NULL (the
-    sd=0 posture of zscore_outliers/mad_outliers), never NaN.
+    Numerics: values round to 6dp and the sums and co-moments are
+    exact (``functions.exact``), so they are order-independent and
+    bit-identical to the ANSI-SQL replay; the final Pearson
+    combination runs in double from those identical inputs.  A
+    zero-variance side yields corr = NULL (the sd=0 posture of
+    zscore_outliers/mad_outliers), never NaN.
 
     Returns (col_x, col_y, n, corr) for each pair with col_x before
     col_y in ``cols`` order, corr rounded 6dp.
@@ -607,21 +604,17 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     for a, b in pairs:
         both = F.col(a).isNotNull() & F.col(b).isNotNull()
 
-        def dec(c, p):  # rounded 6dp value under the pair's null mask
-            return F.when(
-                both, F.round(F.col(c).cast("double"), 6)  # noqa: B023
-            ).cast(f"decimal({p},6)")
-
-        x, x19 = dec(a, 18), dec(a, 19)
-        y, y19 = dec(b, 18), dec(b, 19)
+        # each value under the pair's null mask
+        x = F.when(both, F.col(a).cast("double"))
+        y = F.when(both, F.col(b).cast("double"))
         k = f"{a}__{b}"
         aggs += [
             F.count(F.when(both, F.lit(1))).alias(f"__n_{k}"),
-            F.sum(x).alias(f"__sx_{k}"),
-            F.sum(y).alias(f"__sy_{k}"),
-            F.sum(x19 * x).alias(f"__sxx_{k}"),
-            F.sum(y19 * y).alias(f"__syy_{k}"),
-            F.sum(x19 * y).alias(f"__sxy_{k}"),
+            exact_sum(x, 6).alias(f"__sx_{k}"),
+            exact_sum(y, 6).alias(f"__sy_{k}"),
+            exact_sum_product(x, x, 6).alias(f"__sxx_{k}"),
+            exact_sum_product(y, y, 6).alias(f"__syy_{k}"),
+            exact_sum_product(x, y, 6).alias(f"__sxy_{k}"),
         ]
     row = df.agg(*aggs)
 
@@ -1047,16 +1040,10 @@ def calibration_report(
     )
     per_bin = binned.groupBy("bin").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.round(F.col("_s"), 6).cast("decimal(18,6)")
-        ).alias("_ss"),
+        exact_sum("_s", 6).alias("_ss"),
         F.sum("_y").alias("_sy"),
-        F.sum(
-            F.round(
-                (F.col("_s") - F.col("_y"))
-                * (F.col("_s") - F.col("_y")),
-                9,
-            ).cast("decimal(24,9)")
+        exact_sum(
+            (F.col("_s") - F.col("_y")) * (F.col("_s") - F.col("_y")), 9
         ).alias("_se"),
     )
     # brier as a WINDOW over the <=bins-row relation: a separate

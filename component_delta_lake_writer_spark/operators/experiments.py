@@ -15,6 +15,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from component_delta_lake_writer_spark.errors import UserException
+from component_delta_lake_writer_spark.functions.exact import (
+    exact_sum,
+    exact_sum_product,
+    quantize,
+)
 from component_delta_lake_writer_spark.session import local_relation
 
 # two-sided 5% critical value of the standard normal — a literal so
@@ -178,10 +183,8 @@ def chi2_independence(
         "_a",
         "_b",
         "_n",
-        F.round((F.col("_n") - e) * (F.col("_n") - e) / e, 9)
-        .cast("decimal(24,9)")
-        .alias("_t"),
-        F.round(e, 9).cast("decimal(24,9)").alias("_e"),
+        quantize((F.col("_n") - e) * (F.col("_n") - e) / e, 9).alias("_t"),
+        quantize(e, 9).alias("_e"),
     )
     agg = terms.agg(
         F.sum("_n").alias("_rows"),
@@ -261,13 +264,8 @@ def mann_whitney_u(
         F.sum("_t").alias("_N"),
         F.sum("_ta").alias("_na"),
         F.sum(F.col("_ta") * mr2).alias("_r2a"),
-        F.sum(
-            (
-                F.col("_t").cast("decimal(20,0)")
-                * F.col("_t")
-                * F.col("_t")
-                - F.col("_t")
-            ).cast("decimal(38,0)")
+        exact_sum(
+            quantize("_t", 0) * F.col("_t") * F.col("_t") - F.col("_t"), 0
         ).alias("_ties"),
     )
     n_a = F.col("_na")
@@ -514,9 +512,8 @@ def spearman_corr(
 
     ρ is then the Pearson correlation of the doubled midranks — the
     ×2 cancels — from five exact integer sums (Σa, Σb, Σa², Σb²,
-    Σab accumulated as DECIMAL(38,0); a, b ≤ 2n keeps Σa² under
-    decimal 38 to ~10¹² rows) finished as one deterministic double
-    expression, rounded 6dp.
+    Σab; a, b ≤ 2n keeps Σa² under 38 digits to ~10¹² rows)
+    finished as one deterministic double expression, rounded 6dp.
 
     Returns ONE row: (n_rows, rho) — NULL rho when either column is
     constant (zero rank variance) or n < 2.
@@ -546,20 +543,11 @@ def spearman_corr(
     )
     agg = ranked.agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(F.col("_m_x").cast("decimal(38,0)")).alias("_sa"),
-        F.sum(F.col("_m_y").cast("decimal(38,0)")).alias("_sb"),
-        F.sum(
-            F.col("_m_x").cast("decimal(19,0)")
-            * F.col("_m_x").cast("decimal(19,0)")
-        ).alias("_saa"),
-        F.sum(
-            F.col("_m_y").cast("decimal(19,0)")
-            * F.col("_m_y").cast("decimal(19,0)")
-        ).alias("_sbb"),
-        F.sum(
-            F.col("_m_x").cast("decimal(19,0)")
-            * F.col("_m_y").cast("decimal(19,0)")
-        ).alias("_sab"),
+        exact_sum("_m_x", 0).alias("_sa"),
+        exact_sum("_m_y", 0).alias("_sb"),
+        exact_sum_product("_m_x", "_m_x", 0).alias("_saa"),
+        exact_sum_product("_m_y", "_m_y", 0).alias("_sbb"),
+        exact_sum_product("_m_x", "_m_y", 0).alias("_sab"),
     )
     n = F.col("_n").cast("double")
     sa = F.col("_sa").cast("double")
@@ -696,12 +684,10 @@ def welch_ttest(
             f"{sorted(found)!r}"
         )
     ga, gb = sorted(found)
-    d24 = F.col("_v").cast("decimal(24,4)")
-    d12 = F.col("_v").cast("decimal(12,4)")
     arms = src.groupBy("_g").agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(d24).alias("_s"),
-        F.sum(d24 * d12).alias("_ss"),
+        exact_sum("_v", 4).alias("_s"),
+        exact_sum_product("_v", "_v", 4).alias("_ss"),
     )
 
     def pick(g, c):
@@ -770,12 +756,10 @@ def anova_oneway(
         F.col(group_col).cast("string").alias("_g"),
         F.col(value_col).alias("_v"),
     )
-    d24 = F.col("_v").cast("decimal(24,4)")
-    d12 = F.col("_v").cast("decimal(12,4)")
     per_g = src.groupBy("_g").agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(d24).alias("_s"),
-        F.sum(d24 * d12).alias("_ss"),
+        exact_sum("_v", 4).alias("_s"),
+        exact_sum_product("_v", "_v", 4).alias("_ss"),
     )
     # the three grand sums are kept at DECIMAL SCALE 0 (floored):
     # a scale-s decimal whose unscaled integer exceeds 2^53 converts
@@ -789,16 +773,15 @@ def anova_oneway(
     agg = per_g.agg(
         F.count(F.lit(1)).alias("_k"),
         F.sum("_n").alias("_N"),
-        F.sum(F.col("_s").cast("decimal(38,4)")).alias("_S"),
-        F.sum(
-            F.floor(F.col("_ss")).cast("decimal(38,0)")
-        ).alias("_SS"),
-        F.sum(
+        exact_sum("_s", 4).alias("_S"),
+        exact_sum(F.floor(F.col("_ss")), 0).alias("_SS"),
+        exact_sum(
             F.floor(
                 F.col("_s").cast("double")
                 * F.col("_s").cast("double")
                 / F.col("_n")
-            ).cast("decimal(38,0)")
+            ),
+            0,
         ).alias("_SG"),
     )
     n = F.col("_N").cast("double")
@@ -857,7 +840,7 @@ def mann_whitney_ci(
     the same post-agg-window contract as temperature_quota; for
     unbucketed high-cardinality metrics bucket first, exactly as
     mann_whitney_u's fixture does).  2·R_a stays integer-exact per
-    replicate, accumulated as DECIMAL(38,0).  The observed point
+    replicate, accumulated exactly.  The observed point
     statistics come from mann_whitney_u itself (the distributed
     shard-offset cumsum), cross-joined in.
 
@@ -933,15 +916,8 @@ def mann_whitney_ci(
     per_b = staged.groupBy("_b").agg(
         F.sum("_ta").alias("_na"),
         F.sum(F.col("_t") - F.col("_ta")).alias("_nb"),
-        F.sum(
-            (
-                F.col("_ta")
-                * (
-                    F.lit(2) * F.col("_cum")
-                    + F.col("_t")
-                    + F.lit(1)
-                )
-            ).cast("decimal(38,0)")
+        exact_sum_product(
+            "_ta", F.lit(2) * F.col("_cum") + F.col("_t") + F.lit(1), 0
         ).alias("_s2"),
     )
     # 2·U_a = 2·R_a − n_a(n_a+1);  r = 1 − 2·U_a/(n_a·n_b)
@@ -1070,10 +1046,7 @@ def cohen_kappa(
         F.col("_b").alias("_k"), F.col("_c")
     )
     pe_rel = ra.join(cb, "_k").agg(
-        F.sum(
-            F.col("_r").cast("decimal(19,0)")
-            * F.col("_c").cast("decimal(19,0)")
-        ).alias("_sumrc")
+        exact_sum_product("_r", "_c", 0).alias("_sumrc")
     )
     out = agg.crossJoin(F.broadcast(pe_rel))
     n = F.col("_N").cast("double")
@@ -1126,17 +1099,9 @@ def cochran_armitage_trend(
         F.sum("_n").alias("_N"),
         F.count(F.lit(1)).alias("_k"),
         F.sum("_s").alias("_S"),
-        F.sum(
-            (F.col("_x") * F.col("_s")).cast("decimal(38,0)")
-        ).alias("_xs"),
-        F.sum(
-            (F.col("_x") * F.col("_n")).cast("decimal(38,0)")
-        ).alias("_xn"),
-        F.sum(
-            (F.col("_x") * F.col("_x") * F.col("_n")).cast(
-                "decimal(38,0)"
-            )
-        ).alias("_xxn"),
+        exact_sum_product("_x", "_s", 0).alias("_xs"),
+        exact_sum_product("_x", "_n", 0).alias("_xn"),
+        exact_sum(F.col("_x") * F.col("_x") * F.col("_n"), 0).alias("_xxn"),
     )
     n = F.col("_N").cast("double")
     p = F.col("_S").cast("double") / n
@@ -1267,12 +1232,7 @@ def bradley_terry(
             .join(_maybe_broadcast(pj), "_j")
             .select(
                 "_i",
-                F.round(
-                    F.col("_n")
-                    / (F.col("_pi") + F.col("_pj")),
-                    9,
-                )
-                .cast("decimal(28,9)")
+                quantize(F.col("_n") / (F.col("_pi") + F.col("_pj")), 9)
                 .alias("_t"),
             )
             .groupBy("_i")
@@ -1295,9 +1255,7 @@ def bradley_terry(
         # order-free on both engines
         tot = F.broadcast(
             raw.agg(
-                F.sum(
-                    F.round(F.col("_praw"), 9).cast("decimal(28,9)")
-                ).alias("_sp"),
+                exact_sum("_praw", 9).alias("_sp"),
                 F.count(F.lit(1)).alias("_k"),
             )
         )
@@ -1504,11 +1462,11 @@ def cuped_ztest(
     between a two-week and a two-month experiment.
 
     ONE corpus scan: rows split by ``pre_col`` (true = pre-period)
-    into per-unit (X, Y) sums accumulating as DECIMAL(20,4) (the
+    into per-unit (X, Y) exact 4dp sums (the
     hourly_rollup convention — per-unit double sums would be
     partition-order-dependent), then one per-arm aggregation of the
     sufficient moments (n, Σx, Σy, Σxy, Σx², Σy²) with each product
-    term 6dp-rounded into DECIMAL(38,6) (order-free).  θ is POOLED
+    term 6dp-rounded into an exact sum (order-free).  θ is POOLED
     across arms (the standard estimator — a per-arm θ would leak
     treatment effect into the adjustment), rounded 9dp.  A unit
     with no pre-period rows carries X = 0 — the convention that
@@ -1540,22 +1498,18 @@ def cuped_ztest(
         .agg(
             F.min(F.col(arm_col).cast("string")).alias("_g"),
             F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col(pre_col).cast("boolean"),
-                        F.col(value_col).cast("decimal(20,4)"),
-                    )
+                exact_sum(
+                    F.when(F.col(pre_col).cast("boolean"), F.col(value_col)),
+                    4,
                 ),
-                F.lit(0).cast("decimal(20,4)"),
+                F.lit(0),
             ).alias("_xd"),
             F.coalesce(
-                F.sum(
-                    F.when(
-                        ~F.col(pre_col).cast("boolean"),
-                        F.col(value_col).cast("decimal(20,4)"),
-                    )
+                exact_sum(
+                    F.when(~F.col(pre_col).cast("boolean"), F.col(value_col)),
+                    4,
                 ),
-                F.lit(0).cast("decimal(20,4)"),
+                F.lit(0),
             ).alias("_yd"),
         )
     )
@@ -1563,15 +1517,15 @@ def cuped_ztest(
     y = F.col("_yd").cast("double")
     arms = units.groupBy("_g").agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(F.round(x, 6).cast("decimal(38,6)")).alias("_sx"),
-        F.sum(F.round(y, 6).cast("decimal(38,6)")).alias("_sy"),
-        F.sum(F.round(x * y, 6).cast("decimal(38,6)")).alias(
+        exact_sum(x, 6).alias("_sx"),
+        exact_sum(y, 6).alias("_sy"),
+        exact_sum(x * y, 6).alias(
             "_sxy"
         ),
-        F.sum(F.round(x * x, 6).cast("decimal(38,6)")).alias(
+        exact_sum(x * x, 6).alias(
             "_sxx"
         ),
-        F.sum(F.round(y * y, 6).cast("decimal(38,6)")).alias(
+        exact_sum(y * y, 6).alias(
             "_syy"
         ),
     )
@@ -1785,13 +1739,11 @@ def srm_check(
     agg = terms.agg(
         F.sum("_o").alias("n_units"),
         F.count(F.lit(1)).alias("n_arms"),
-        F.sum(
-            F.round(
-                (F.col("_o").cast("double") - F.col("_e"))
-                * (F.col("_o").cast("double") - F.col("_e"))
-                / F.col("_e"),
-                9,
-            ).cast("decimal(28,9)")
+        exact_sum(
+            (F.col("_o").cast("double") - F.col("_e"))
+            * (F.col("_o").cast("double") - F.col("_e"))
+            / F.col("_e"),
+            9,
         ).alias("_chi2"),
     )
     chi2 = F.round(F.col("_chi2").cast("double"), 6)
@@ -2052,7 +2004,7 @@ def kruskal_wallis(
     for each); midranks ride the distributed exclusive cumsum over
     distinct values; per-group doubled rank sums 2·R_j are exact
     longs (< 2⁵³, so their double image is exact), and
-    Σ R_j²/n_j accumulates floored at DECIMAL(38,0) — the
+    Σ R_j²/n_j accumulates floored to exact integers — the
     anova_oneway grand-sum rule, order-free where a k-row double
     sum is not.  H carries the standard tie correction
     1 − Σ(t³−t)/(N³−N); significance is the rounded statistic vs
@@ -2083,13 +2035,8 @@ def kruskal_wallis(
     mr2 = F.lit(2) * F.col("_cum") + F.col("_t") + F.lit(1)
     totals = cum.agg(
         F.sum("_t").alias("_N"),
-        F.sum(
-            (
-                F.col("_t").cast("decimal(20,0)")
-                * F.col("_t")
-                * F.col("_t")
-                - F.col("_t")
-            ).cast("decimal(38,0)")
+        exact_sum(
+            quantize("_t", 0) * F.col("_t") * F.col("_t") - F.col("_t"), 0
         ).alias("_ties"),
     )
     group_sums = (
@@ -2103,16 +2050,17 @@ def kruskal_wallis(
         )
     )
     # Σ R_j²/n_j = Σ (2R_j)²/(4n_j): 2R_j exact as double (< 2⁵³),
-    # each term floored into the DECIMAL(38,0) sum (order-free; the
+    # each term floored into an exact integer sum (order-free; the
     # sub-unit truncation is invisible against rank-sum magnitudes)
     agg = group_sums.agg(
         F.count(F.lit(1)).alias("_k"),
-        F.sum(
+        exact_sum(
             F.floor(
                 F.col("_r2").cast("double")
                 * F.col("_r2").cast("double")
                 / (F.lit(4.0) * F.col("_n"))
-            ).cast("decimal(38,0)")
+            ),
+            0,
         ).alias("_sg"),
     ).crossJoin(F.broadcast(totals))
     n = F.col("_N").cast("double")
@@ -2247,9 +2195,6 @@ def mantel_haenszel(
     ).cast("double")
     a, b, c, d = (F.col(x).cast("double") for x in "abcd")
 
-    def dec9(col):
-        return F.round(col, 9).cast("decimal(28,9)")
-
     r_i = a * d / n
     s_i = b * c / n
     p_i = (a + d) / n
@@ -2269,13 +2214,13 @@ def mantel_haenszel(
             "_N"
         ),
         F.sum("a").alias("_oa"),
-        F.sum(dec9(r_i)).alias("_R"),
-        F.sum(dec9(s_i)).alias("_S"),
-        F.sum(dec9(p_i * r_i)).alias("_PR"),
-        F.sum(dec9(p_i * s_i + q_i * r_i)).alias("_PSQR"),
-        F.sum(dec9(q_i * s_i)).alias("_QS"),
-        F.sum(dec9(e_i)).alias("_E"),
-        F.sum(dec9(v_i)).alias("_V"),
+        exact_sum(r_i, 9).alias("_R"),
+        exact_sum(s_i, 9).alias("_S"),
+        exact_sum(p_i * r_i, 9).alias("_PR"),
+        exact_sum(p_i * s_i + q_i * r_i, 9).alias("_PSQR"),
+        exact_sum(q_i * s_i, 9).alias("_QS"),
+        exact_sum(e_i, 9).alias("_E"),
+        exact_sum(v_i, 9).alias("_V"),
     )
     R = F.col("_R").cast("double")
     S = F.col("_S").cast("double")
@@ -2354,7 +2299,7 @@ def jonckheere_terpstra(
     value axis should be discrete or pre-bucketed, the same
     contract as the mann_whitney fixture).  The null moments use
     the Hollander–Wolfe tie-corrected variance with every Σ kept
-    at DECIMAL(38,0) (the anova scale-0 rule).
+    an exact integer (the anova scale-0 rule).
 
     Returns ONE row: (k_groups, n_rows, j_stat, e_j, z 6dp,
     significant) — z NULL when the variance degenerates.
@@ -2441,39 +2386,27 @@ def jonckheere_terpstra(
     )
     # 2J = Σ t·(2A + B): A = earlier-group strictly-smaller counts,
     # B = earlier-group same-value counts (half-weighted ties).
-    # The per-cell product goes through DECIMAL(38,0) — t and A are
-    # both O(N), so a long product would overflow around N ≈ 2³¹
+    # The per-cell product is exact — t and A are both O(N), so a
+    # long product would overflow around N ≈ 2³¹
     j2 = cells.agg(
-        F.sum(
-            (
-                F.col("_t").cast("decimal(38,0)")
-                * (F.lit(2) * F.col("_A") + F.col("_B"))
-            ).cast("decimal(38,0)")
+        exact_sum_product(
+            "_t", F.lit(2) * F.col("_A") + F.col("_B"), 0
         ).alias("_j2")
     )
-    d38 = "decimal(38,0)"
     n_c = F.col("_n")
     grp = per_gv.groupBy("_gi").agg(F.sum("_t").alias("_n")).agg(
         F.count(F.lit(1)).alias("_k"),
         F.sum("_n").alias("_N"),
-        F.sum((n_c.cast(d38) * n_c).cast(d38)).alias("_n2"),
-        F.sum(
-            (n_c.cast(d38) * (n_c - 1) * (2 * n_c + 5)).cast(d38)
-        ).alias("_na"),
-        F.sum(
-            (n_c.cast(d38) * (n_c - 1) * (n_c - 2)).cast(d38)
-        ).alias("_nb"),
-        F.sum((n_c.cast(d38) * (n_c - 1)).cast(d38)).alias("_nc"),
+        exact_sum_product(n_c, n_c, 0).alias("_n2"),
+        exact_sum(quantize(n_c, 0) * (n_c - 1) * (2 * n_c + 5), 0).alias("_na"),
+        exact_sum(quantize(n_c, 0) * (n_c - 1) * (n_c - 2), 0).alias("_nb"),
+        exact_sum_product(n_c, n_c - 1, 0).alias("_nc"),
     )
     t_c = F.col("_t2")
     ties = per_gv.groupBy("_v").agg(F.sum("_t").alias("_t2")).agg(
-        F.sum(
-            (t_c.cast(d38) * (t_c - 1) * (2 * t_c + 5)).cast(d38)
-        ).alias("_ta"),
-        F.sum(
-            (t_c.cast(d38) * (t_c - 1) * (t_c - 2)).cast(d38)
-        ).alias("_tb"),
-        F.sum((t_c.cast(d38) * (t_c - 1)).cast(d38)).alias("_tc"),
+        exact_sum(quantize(t_c, 0) * (t_c - 1) * (2 * t_c + 5), 0).alias("_ta"),
+        exact_sum(quantize(t_c, 0) * (t_c - 1) * (t_c - 2), 0).alias("_tb"),
+        exact_sum_product(t_c, t_c - 1, 0).alias("_tc"),
     )
     agg = j2.crossJoin(F.broadcast(grp)).crossJoin(
         F.broadcast(ties)
@@ -2634,15 +2567,13 @@ def fisher_exact(
         "_k",
         "_ln",
         "_la",
-        F.round(
+        quantize(
             F.exp(
                 (F.col("_ln") - F.col("_mx")).cast("double")
                 / F.lit(1000000000.0)
             ),
             12,
-        )
-        .cast("decimal(16,12)")
-        .alias("_wt"),
+        ).alias("_wt"),
     )
     # extremeness in integer nanos: 100 ≈ ln(1 + 1e−7)·1e9
     sel = F.col("_ln") <= F.col("_la") + F.lit(100)
@@ -2746,9 +2677,7 @@ def pr_auc(
     ).withColumnRenamed("_cum", "_cumtp")
     tp_i = F.col("_cumtp") + F.col("_tp")
     pred_i = F.col("_cumt") + F.col("_t")
-    term = F.round(
-        F.col("_tp").cast("double") * tp_i / pred_i, 9
-    ).cast("decimal(28,9)")
+    term = quantize(F.col("_tp").cast("double") * tp_i / pred_i, 9)
     agg = cum.agg(
         F.sum("_t").alias("_N"),
         F.sum("_tp").alias("_P"),
@@ -2886,15 +2815,13 @@ def _binom_exact_tails(spark, n: int, k: int, p0: float):
         "_k",
         "_ln",
         "_lk",
-        F.round(
+        quantize(
             F.exp(
                 (F.col("_ln") - F.col("_mx")).cast("double")
                 / F.lit(1000000000.0)
             ),
             12,
-        )
-        .cast("decimal(16,12)")
-        .alias("_wt"),
+        ).alias("_wt"),
     )
     sel = F.col("_ln") <= F.col("_lk") + F.lit(100)
     agg = staged.agg(
@@ -2968,13 +2895,10 @@ def breslow_day(
     ).cast("double")
     a, b, c, d = (F.col(x).cast("double") for x in "abcd")
 
-    def dec9(col):
-        return F.round(col, 9).cast("decimal(28,9)")
-
     # ψ̂ from the same 9dp-rounded MH sums
     psi_agg = t22.filter(n > 0).agg(
-        F.sum(dec9(a * d / n)).alias("_R"),
-        F.sum(dec9(b * c / n)).alias("_S"),
+        exact_sum(a * d / n, 9).alias("_R"),
+        exact_sum(b * c / n, 9).alias("_S"),
     )
     psi = (
         F.col("_R").cast("double") / F.col("_S").cast("double")
@@ -3009,11 +2933,11 @@ def breslow_day(
         F.sum(
             F.when(
                 informative,
-                dec9((a - a_fit) * (a - a_fit) / v_fit),
+                quantize((a - a_fit) * (a - a_fit) / v_fit, 9),
             )
         ).alias("_chi"),
-        F.sum(F.when(informative, dec9(a - a_fit))).alias("_dev"),
-        F.sum(F.when(informative, dec9(v_fit))).alias("_vs"),
+        exact_sum(F.when(informative, a - a_fit), 9).alias("_dev"),
+        exact_sum(F.when(informative, v_fit), 9).alias("_vs"),
         F.min(F.col("_R").cast("double")).alias("_Rd"),
         F.min(F.col("_S").cast("double")).alias("_Sd"),
     )
@@ -3152,7 +3076,7 @@ def cochran_q(df: DataFrame, outcome_cols: list) -> DataFrame:
     Q = k(k−1)·Σ_j(G_j − T/k)² / (k·T − Σ_i L_i²) where G_j is
     system j's success total, L_i the per-item success count and
     T = ΣL.  ONE map-side-combinable corpus scan accumulates every
-    term as exact integers (k·Σ G² and Σ L² stay DECIMAL(38,0) —
+    term as exact integers (k·Σ G² and Σ L² included —
     the anova scale-0 rule), so Q is exact-integer-derived; items
     where all k agree contribute nothing, matching the McNemar
     conditioning.  χ² at df = k−1 vs the shared A&S table; non-0/1
@@ -3187,20 +3111,17 @@ def cochran_q(df: DataFrame, outcome_cols: list) -> DataFrame:
         )
     )
     li = sum((bit(c) for c in outcome_cols[1:]), bit(outcome_cols[0]))
-    d38 = "decimal(38,0)"
     agg = src.agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum(li).alias("_T"),
-        F.sum((li.cast(d38) * li).cast(d38)).alias("_L2"),
+        exact_sum_product(li, li, 0).alias("_L2"),
         *[
             F.sum(bit(c)).alias(f"_g{i}")
             for i, c in enumerate(outcome_cols)
         ],
     )
     g2 = sum(
-        (
-            F.col(f"_g{i}").cast(d38) * F.col(f"_g{i}")
-        ).cast(d38)
+        quantize(F.col(f"_g{i}"), 0) * F.col(f"_g{i}")
         for i in range(k)
     )
     t = F.col("_T").cast("double")
@@ -3280,13 +3201,8 @@ def wilcoxon_signed_rank(
     agg = cum.agg(
         F.sum("_t").alias("_m"),
         F.sum(F.col("_tp") * mr2).alias("_r2p"),
-        F.sum(
-            (
-                F.col("_t").cast("decimal(20,0)")
-                * F.col("_t")
-                * F.col("_t")
-                - F.col("_t")
-            ).cast("decimal(38,0)")
+        exact_sum(
+            quantize("_t", 0) * F.col("_t") * F.col("_t") - F.col("_t"), 0
         ).alias("_ties"),
     ).crossJoin(F.broadcast(totals))
     m = F.col("_m").cast("double")
@@ -3507,29 +3423,27 @@ def brown_forsythe(
     # weighted per-group sums: z is an exact multiple of 0.5 for
     # integer-bucketed values, z² of 0.25 — DECIMAL scales 1 and 2
     # hold them exactly (the anova_oneway decimal rule)
-    d1 = F.col("_z").cast("decimal(24,1)")
+    d1 = quantize("_z", 1)
     per_g = staged.groupBy("_g").agg(
         F.sum("_t").alias("_n"),
         F.sum(d1 * F.col("_t")).alias("_s"),
         F.sum(
-            (F.col("_z") * F.col("_z"))
-            .cast("decimal(24,2)")
+            quantize(F.col("_z") * F.col("_z"), 2)
             * F.col("_t")
         ).alias("_ss"),
     )
     agg = per_g.agg(
         F.count(F.lit(1)).alias("_k"),
         F.sum("_n").alias("_N"),
-        F.sum(F.col("_s").cast("decimal(38,1)")).alias("_S"),
-        F.sum(
-            F.floor(F.col("_ss")).cast("decimal(38,0)")
-        ).alias("_SS"),
-        F.sum(
+        exact_sum("_s", 1).alias("_S"),
+        exact_sum(F.floor(F.col("_ss")), 0).alias("_SS"),
+        exact_sum(
             F.floor(
                 F.col("_s").cast("double")
                 * F.col("_s").cast("double")
                 / F.col("_n")
-            ).cast("decimal(38,0)")
+            ),
+            0,
         ).alias("_SG"),
     )
     n = F.col("_N").cast("double")
@@ -3578,7 +3492,7 @@ def friedman_test(df: DataFrame, measure_cols: list) -> DataFrame:
     Q = (k−1)·Σ_j(R_j − n(k+1)/2)² / (A − C) with A = Σ r²,
     C = nk(k+1)²/4.  Everything accumulates in DOUBLED-rank
     integer space in ONE map-side-combinable corpus scan (R2_j as
-    longs, Σ(2r)² as DECIMAL(38,0) — the anova scale-0 rule), so Q
+    longs, Σ(2r)² an exact integer — the anova scale-0 rule), so Q
     is exact-integer-derived and both engines agree bit-for-bit
     before the final rounded division.  χ² at df = k−1 vs the
     shared A&S table.
@@ -3613,9 +3527,8 @@ def friedman_test(df: DataFrame, measure_cols: list) -> DataFrame:
             " AND ".join(f"{c} IS NOT NULL" for c in measure_cols)
         )
     )
-    d38 = "decimal(38,0)"
     a4_term = sum(
-        (r2(i).cast(d38) * r2(i)).cast(d38) for i in range(k)
+        quantize(r2(i), 0) * r2(i) for i in range(k)
     )
     agg = src.agg(
         F.count(F.lit(1)).alias("_n"),
@@ -3625,15 +3538,13 @@ def friedman_test(df: DataFrame, measure_cols: list) -> DataFrame:
     n = F.col("_n")
     # D_j = R2_j − n(k+1) = 2(R_j − n(k+1)/2); Σ D² needs DECIMAL
     dsq = sum(
-        (
-            (F.col(f"_r{i}") - n * (k + 1)).cast(d38)
-            * (F.col(f"_r{i}") - n * (k + 1))
-        ).cast(d38)
+        quantize(F.col(f"_r{i}") - n * (k + 1), 0)
+        * (F.col(f"_r{i}") - n * (k + 1))
         for i in range(k)
     )
     # A − C = (Σ(2r)² − nk(k+1)²)/4 — same /4 as ΣD²/4: cancels
     den = (
-        F.col("_a4") - (n * k * (k + 1) * (k + 1)).cast(d38)
+        F.col("_a4") - quantize(n * k * (k + 1) * (k + 1), 0)
     ).cast("double")
     q = F.when(
         den > 0,
@@ -3714,13 +3625,9 @@ def g_test_independence(
         "_a",
         "_b",
         "_n",
-        F.round(
-            n_d * F.round(F.log(n_d / e), 9), 4
-        ).cast("decimal(28,4)").alias("_g"),
-        F.round((F.col("_n") - e) * (F.col("_n") - e) / e, 9)
-        .cast("decimal(24,9)")
-        .alias("_t"),
-        F.round(e, 9).cast("decimal(24,9)").alias("_e"),
+        quantize(n_d * F.round(F.log(n_d / e), 9), 4).alias("_g"),
+        quantize((F.col("_n") - e) * (F.col("_n") - e) / e, 9).alias("_t"),
+        quantize(e, 9).alias("_e"),
     )
     agg = terms.agg(
         F.sum("_n").alias("_rows"),
@@ -3821,9 +3728,8 @@ def page_trend_test(df: DataFrame, measure_cols: list) -> DataFrame:
             " AND ".join(f"{c} IS NOT NULL" for c in measure_cols)
         )
     )
-    d38 = "decimal(38,0)"
     a4_term = sum(
-        (r2(i).cast(d38) * r2(i)).cast(d38) for i in range(k)
+        quantize(r2(i), 0) * r2(i) for i in range(k)
     )
     l2_term = sum(r2(i) * F.lit(i + 1) for i in range(k))
     agg = src.agg(
@@ -3834,7 +3740,7 @@ def page_trend_test(df: DataFrame, measure_cols: list) -> DataFrame:
     n = F.col("_n")
     # A−C in doubled² space: A4 − nk(k+1)²; E(L2) = nk(k+1)²/2
     denint = (
-        F.col("_a4") - (n * k * (k + 1) * (k + 1)).cast(d38)
+        F.col("_a4") - quantize(n * k * (k + 1) * (k + 1), 0)
     ).cast("double")
     var2 = F.lit(k * (k + 1) / 12.0) * denint
     e2 = (n * k * (k + 1) * (k + 1)).cast("double") / F.lit(2.0)
@@ -3867,7 +3773,7 @@ def cohens_d(
 
     Same staging discipline as :func:`welch_ttest`: exactly two
     arms (refused loudly otherwise), ONE map-side-combinable scan
-    accumulating per-arm n/Σv/Σv² with values at DECIMAL(24,4)
+    accumulating per-arm n/Σv/Σv² with values at 4dp
     (order-free exact sums), then pooled-SD d = (m_b−m_a)/s_p,
     the Hedges small-sample correction g = d·(1−3/(4n−9)), and
     the Hedges–Olkin large-sample CI d ± z·√((n_a+n_b)/(n_a·n_b)
@@ -3893,12 +3799,10 @@ def cohens_d(
             f"{sorted(found)!r}"
         )
     ga, gb = sorted(found)
-    d24 = F.col("_v").cast("decimal(24,4)")
-    d12 = F.col("_v").cast("decimal(12,4)")
     arms = src.groupBy("_g").agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(d24).alias("_s"),
-        F.sum(d24 * d12).alias("_ss"),
+        exact_sum("_v", 4).alias("_s"),
+        exact_sum_product("_v", "_v", 4).alias("_ss"),
     )
 
     def pick(g, c):
@@ -3964,9 +3868,8 @@ def cliffs_delta(
     arm-a running counts (never an O(n²) pair walk, never an
     unpartitioned corpus window; discrete or pre-bucketed values,
     the MW/JT contract).  #{a>b} falls out as
-    n_a·n_b − #{a<b} − ties, all exact integers through
-    DECIMAL(38,0); δ is one rounded division at the end.  The
-    magnitude label uses the conventional |δ| cuts
+    n_a·n_b − #{a<b} − ties, all exact integers; δ is one rounded
+    division at the end.  The magnitude label uses the conventional |δ| cuts
     0.147/0.33/0.474 on the 6dp-ROUNDED δ (the house boundary
     rule).
 
@@ -4029,27 +3932,26 @@ def cliffs_delta(
         ),
         F.coalesce(F.sum("_t").over(w_grps), F.lit(0)).alias("_B"),
     )
-    d38 = "decimal(38,0)"
     is_b = F.col("_g") == F.lit(gb)
     agg = cells.agg(
         F.sum(
             F.when(
                 is_b,
-                (F.col("_t").cast(d38) * F.col("_A")).cast(d38),
-            ).otherwise(F.lit(0).cast(d38))
+                quantize("_t", 0) * F.col("_A"),
+            ).otherwise(F.lit(0))
         ).alias("_lt"),            # pairs with a < b
         F.sum(
             F.when(
                 is_b,
-                (F.col("_t").cast(d38) * F.col("_B")).cast(d38),
-            ).otherwise(F.lit(0).cast(d38))
+                quantize("_t", 0) * F.col("_B"),
+            ).otherwise(F.lit(0))
         ).alias("_tie"),
         F.sum(F.when(~is_b, F.col("_t")).otherwise(0)).alias(
             "_na"
         ),
         F.sum(F.when(is_b, F.col("_t")).otherwise(0)).alias("_nb"),
     )
-    pairs = (F.col("_na").cast(d38) * F.col("_nb")).cast(d38)
+    pairs = quantize("_na", 0) * F.col("_nb")
     delta = F.when(
         pairs > 0,
         F.round(
@@ -4092,7 +3994,7 @@ def lins_ccc(
     CCC = 2·s_xy / (s_x² + s_y² + (x̄−ȳ)²) with POPULATION moments
     (Lin 1989) — equivalently r·C_b where C_b is the bias
     correction, both surfaced.  ONE map-side-combinable scan
-    accumulates n/Σx/Σy/Σx²/Σy²/Σxy with values at DECIMAL(24,4)
+    accumulates n/Σx/Σy/Σx²/Σy²/Σxy with values at 4dp
     (the welch exact-sum discipline); every downstream expression
     is the identical left-to-right double chain on both engines.
 
@@ -4105,17 +4007,13 @@ def lins_ccc(
     ).select(
         F.col(first_col).alias("_x"), F.col(second_col).alias("_y")
     )
-    x24 = F.col("_x").cast("decimal(24,4)")
-    x12 = F.col("_x").cast("decimal(12,4)")
-    y24 = F.col("_y").cast("decimal(24,4)")
-    y12 = F.col("_y").cast("decimal(12,4)")
     agg = src.agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(x24).alias("_sx"),
-        F.sum(y24).alias("_sy"),
-        F.sum(x24 * x12).alias("_sxx"),
-        F.sum(y24 * y12).alias("_syy"),
-        F.sum(x24 * y12).alias("_sxy"),
+        exact_sum("_x", 4).alias("_sx"),
+        exact_sum("_y", 4).alias("_sy"),
+        exact_sum_product("_x", "_x", 4).alias("_sxx"),
+        exact_sum_product("_y", "_y", 4).alias("_syy"),
+        exact_sum_product("_x", "_y", 4).alias("_sxy"),
     )
     n = F.col("_n").cast("double")
     mx = F.col("_sx").cast("double") / n
@@ -4153,7 +4051,7 @@ def jarque_bera(df: DataFrame, value_col: str) -> DataFrame:
     ONE map-side-combinable scan accumulates n and Σv^k (k=1..4):
     each power is computed in double (deterministic — identical
     inputs, identical IEEE ops on both engines), rounded 4dp and
-    summed as DECIMAL(38,4), so the accumulation is order-free.
+    summed exactly, so the accumulation is order-free.
     The moment recombination is the identical left-to-right double
     chain both sides; m2^1.5 is spelled m2·√m2 (√ is IEEE-exact;
     a libm pow could diverge in the last ulp).  Values are
@@ -4175,7 +4073,7 @@ def jarque_bera(df: DataFrame, value_col: str) -> DataFrame:
         p = v
         for _ in range(k - 1):
             p = p * v
-        return F.sum(F.round(p, 4).cast("decimal(38,4)")).alias(
+        return exact_sum(p, 4).alias(
             f"_s{k}"
         )
 
@@ -4237,7 +4135,7 @@ def kendall_tau(
     D = Σ_{y'>y} S1 / E = Σ_{y'<y} S1 ride exclusive suffix /
     prefix windows per x — never an O(n²) pair walk, never an
     unpartitioned corpus window.  P/Q and the tie pair counts
-    accumulate as exact integers through DECIMAL(38,0);
+    accumulate as exact integers;
     τ-b = (P−Q)/√((n₀−n₁)(n₀−n₂)) is one rounded expression at
     the end (√ IEEE-exact).  The z approximation uses the
     no-3rd-moment variance 2(2n+5)/(9n(n−1)) on τ-a's scale —
@@ -4291,29 +4189,16 @@ def kendall_tau(
         F.coalesce(F.sum("_s1").over(w_d), F.lit(0)).alias("_D"),
         F.coalesce(F.sum("_s1").over(w_e), F.lit(0)).alias("_E"),
     )
-    d38 = "decimal(38,0)"
     pq = g2.agg(
-        F.sum(
-            (F.col("_t").cast(d38) * F.col("_D")).cast(d38)
-        ).alias("_P"),
-        F.sum(
-            (F.col("_t").cast(d38) * F.col("_E")).cast(d38)
-        ).alias("_Q"),
+        exact_sum_product("_t", F.col("_D"), 0).alias("_P"),
+        exact_sum_product("_t", F.col("_E"), 0).alias("_Q"),
     )
     tx = cells.groupBy("_x").agg(F.sum("_t").alias("_tx")).agg(
-        F.sum(
-            (
-                F.col("_tx").cast(d38) * (F.col("_tx") - 1)
-            ).cast(d38)
-        ).alias("_n1x2"),
+        exact_sum_product("_tx", F.col("_tx") - 1, 0).alias("_n1x2"),
         F.sum("_tx").alias("_n"),
     )
     ty = cells.groupBy("_y").agg(F.sum("_t").alias("_ty")).agg(
-        F.sum(
-            (
-                F.col("_ty").cast(d38) * (F.col("_ty") - 1)
-            ).cast(d38)
-        ).alias("_n2x2"),
+        exact_sum_product("_ty", F.col("_ty") - 1, 0).alias("_n2x2"),
     )
     agg = pq.crossJoin(F.broadcast(tx)).crossJoin(F.broadcast(ty))
     n = F.col("_n").cast("double")
@@ -4555,12 +4440,8 @@ def eb_shrunk_rates(
     r = F.col("_s").cast("double") / F.col("_n")
     mm = seg.agg(
         F.count(F.lit(1)).alias("_k"),
-        F.sum(
-            F.round(r, 12).cast("decimal(28,12)")
-        ).alias("_sr"),
-        F.sum(
-            F.round(r * r, 12).cast("decimal(28,12)")
-        ).alias("_sr2"),
+        exact_sum(r, 12).alias("_sr"),
+        exact_sum(r * r, 12).alias("_sr2"),
     )
     mu = F.col("_sr").cast("double") / F.col("_k")
     v2 = F.col("_sr2").cast("double") / F.col("_k") - mu * mu
@@ -4607,7 +4488,7 @@ def wasserstein_1d(
     table; the CDF difference rides ordered windows over the
     DISTINCT-value relation (discrete or pre-bucketed values — the
     MW/JT contract); W₁ = Σ gap·|cum_a·n_b − cum_b·n_a|/(n_a·n_b)
-    accumulates as EXACT integers through DECIMAL(38,0)
+    accumulates as EXACT integers
     (cum·n ~ N² overflows long at N≈2³¹; the value gaps are exact
     longs on bucketed data), so both engines agree bit-for-bit
     before the single rounded division.
@@ -4655,23 +4536,17 @@ def wasserstein_1d(
     totals = per_v.agg(
         F.sum("_ca").alias("_na"), F.sum("_cb").alias("_nb")
     )
-    d38 = "decimal(38,0)"
     agg = staged.crossJoin(F.broadcast(totals)).agg(
-        F.sum(
+        exact_sum(
             F.when(
                 F.col("_gap").isNotNull(),
-                (
-                    F.col("_gap").cast(d38)
-                    * F.abs(
-                        (
-                            F.col("_fa").cast(d38) * F.col("_nb")
-                        ).cast(d38)
-                        - (
-                            F.col("_fb").cast(d38) * F.col("_na")
-                        ).cast(d38)
-                    )
-                ).cast(d38),
-            )
+                quantize("_gap", 0)
+                * F.abs(
+                    quantize("_fa", 0) * F.col("_nb")
+                    - quantize("_fb", 0) * F.col("_na")
+                ),
+            ),
+            0,
         ).alias("_s"),
         F.count(F.lit(1)).alias("_nv"),
         F.max("_na").alias("_na"),
@@ -4682,11 +4557,9 @@ def wasserstein_1d(
         F.round(
             # a single distinct value has no gaps: the empty sum is
             # NULL, but the distance is genuinely 0
-            F.coalesce(F.col("_s"), F.lit(0).cast("decimal(38,0)"))
+            F.coalesce(F.col("_s"), F.lit(0))
             .cast("double")
-            / (
-                F.col("_na").cast(d38) * F.col("_nb")
-            ).cast(d38).cast("double"),
+            / (quantize("_na", 0) * F.col("_nb")).cast("double"),
             6,
         ),
     )
@@ -4770,7 +4643,7 @@ def dunn_posthoc(
     Scale shape: ONE corpus scan to the (group, value) tie table;
     pooled midranks ride the distributed exclusive cumsum
     (features.global_weighted_cumsum — doubled-rank integers);
-    per-group rank sums are exact DECIMAL(38,0) products; the
+    per-group rank sums are exact integer products; the
     pairwise readout is a self-join of the k-row group summary
     (metadata-scale).  The tie-corrected variance
     N(N+1)/12 − Σ(t³−t)/(12(N−1)) folds tie cubes as DECIMAL; the
@@ -4804,13 +4677,10 @@ def dunn_posthoc(
         "_tv",
         (2 * F.col("_cum") + F.col("_tv") + 1).alias("_r2"),
     )
-    d38 = "decimal(38,0)"
     joined = per_gv.join(F.broadcast(ranked), "_v")
     grp = joined.groupBy("_g").agg(
         F.sum("_t").alias("_n"),
-        F.sum(
-            (F.col("_t").cast(d38) * F.col("_r2")).cast(d38)
-        ).alias("_s2"),
+        exact_sum_product("_t", F.col("_r2"), 0).alias("_s2"),
     )
     grp = grp.localCheckpoint(eager=True)
     k = grp.count()
@@ -4821,12 +4691,8 @@ def dunn_posthoc(
         )
     zcrit = inv_normal_upper(alpha / 2.0 / m)
     ties = ranked.agg(
-        F.sum(
-            (
-                F.col("_tv").cast(d38)
-                * (F.col("_tv") - 1)
-                * (F.col("_tv") + 1)
-            ).cast(d38)
+        exact_sum(
+            quantize("_tv", 0) * (F.col("_tv") - 1) * (F.col("_tv") + 1), 0
         ).alias("_tt"),
         F.sum("_tv").alias("_N"),
     )
@@ -4896,7 +4762,7 @@ def brunner_munzel(
     partitioned by arm over the same tie table (metadata-scale
     under the MW/JT discrete-values contract).  Every observation
     in a cell shares its (pooled − within) rank difference, so the
-    per-arm moments Σt·D, Σt·D² are exact DECIMAL(38,0) integer
+    per-arm moments Σt·D, Σt·D² are exact integer
     sums in doubled-rank space — the variance recombination and
     the Satterthwaite df are identical double chains both
     engines.  Exactly two arms (refused loudly); the flag
@@ -4951,17 +4817,12 @@ def brunner_munzel(
             + 1
         ).alias("_w2"),
     ).join(F.broadcast(pooled), "_v")
-    d38 = "decimal(38,0)"
     d2 = F.col("_p2") - F.col("_w2")
     grp = staged.groupBy("_g").agg(
         F.sum("_t").alias("_n"),
-        F.sum(
-            (F.col("_t").cast(d38) * F.col("_p2")).cast(d38)
-        ).alias("_B"),
-        F.sum((F.col("_t").cast(d38) * d2).cast(d38)).alias("_A"),
-        F.sum(
-            (F.col("_t").cast(d38) * d2 * d2).cast(d38)
-        ).alias("_Q"),
+        exact_sum_product("_t", F.col("_p2"), 0).alias("_B"),
+        exact_sum_product("_t", d2, 0).alias("_A"),
+        exact_sum(quantize("_t", 0) * d2 * d2, 0).alias("_Q"),
     )
 
     def pick(g, c):
@@ -5046,7 +4907,7 @@ def welch_anova(
     groups), with the Welch–Satterthwaite denominator df.
 
     ONE map-side-combinable scan accumulates per-group n/Σv/Σv²
-    at DECIMAL(24,4) (the welch exact-sum discipline); the k-row
+    at 4dp (the welch exact-sum discipline); the k-row
     group relation collapses to ONE row of group-sorted arrays,
     and every cross-group reduction (ΣW, the weighted grand mean,
     the F* numerator, the df term) is a SEQUENTIAL left fold in
@@ -5066,12 +4927,10 @@ def welch_anova(
         F.col(group_col).cast("string").alias("_g"),
         F.col(value_col).alias("_v"),
     )
-    d24 = F.col("_v").cast("decimal(24,4)")
-    d12 = F.col("_v").cast("decimal(12,4)")
     grp = src.groupBy("_g").agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(d24).alias("_s"),
-        F.sum(d24 * d12).alias("_ss"),
+        exact_sum("_v", 4).alias("_s"),
+        exact_sum_product("_v", "_v", 4).alias("_ss"),
     )
     one = grp.agg(
         F.array_sort(

@@ -23,6 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.exact import (
+    exact_sum,
+    exact_sum_product,
+)
+
 
 def global_value_rank(
     df: DataFrame,
@@ -255,32 +260,23 @@ def gini_coefficient(
     non-negative (the identity's precondition — the caller owns the
     filter); NULL values/ids are excluded by the rank.
 
-    Accumulator headroom (the house overflow-refusal contract, same
-    class as plans/extra_queries' cross-engine decimal rules): each
-    term is rank·x as decimal(18,0)·decimal(18,6) = decimal(37,6)
-    and Spark caps the running sum at decimal(38,6), so Σ(rank·x)
-    is exact while it stays under 10³² — i.e. while (n²/2)·x̄ <
-    10³², comfortably true for any real corpus (10¹⁰ rows of
-    mean 10⁴ is 5·10²³) and violated only past ~10¹³ rows of
-    ~10¹²-scale values, where Spark would silently NULL the sum.
-    The per-VALUE bound is enforced loudly instead of silently:
-    |x| ≥ 10¹² overflows the decimal(18,6) term cast.  Under ANSI
-    (this engine's session default) the cast itself raises; under a
-    non-ANSI session the cast NULLs, which would silently DROP that
-    row from Σ(rank·x) while Σx (a wider decimal(24,6)) still counts
-    it — a wrong answer, not an error — so a raise_error guard on
-    max|x| backstops that mode too.
+    Accumulator headroom: Σ(rank·x) is an exact 6-digit sum of
+    products (``exact.exact_sum_product``), exact while it stays
+    under 10²⁶ — (n²/2)·x̄ for 10¹⁰ rows of mean 10⁴ is 5·10²³.
+    The per-VALUE bound is enforced loudly: |x| ≥ 10¹² overflows the
+    product operand.  Under ANSI (this engine's session default) the
+    cast itself raises; under a non-ANSI session it NULLs, which
+    would silently DROP that row from Σ(rank·x) while Σx still
+    counts it, so a raise_error guard on max|x| backstops that mode
+    too.
 
     Returns ONE row: (n_rows, total, gini) — total 6dp, gini 6dp,
     NULL gini when n < 2 or Σx = 0.
     """
     ranked, n = global_value_rank(df, value_col, id_col)
     agg = ranked.agg(
-        F.sum(
-            (F.col("_rank") + 1).cast("decimal(18,0)")
-            * F.col(value_col).cast("decimal(18,6)")
-        ).alias("_sxr"),
-        F.sum(F.col(value_col).cast("decimal(24,6)")).alias("_sx"),
+        exact_sum_product(F.col("_rank") + 1, value_col, 6).alias("_sxr"),
+        exact_sum(value_col, 6).alias("_sx"),
         F.max(F.abs(F.col(value_col).cast("double"))).alias(
             "_xmax"
         ),
@@ -298,7 +294,7 @@ def gini_coefficient(
                 F.concat(
                     F.lit(
                         "gini_coefficient: |value| >= 1e12 "
-                        "overflows the decimal(18,6) rank-product "
+                        "overflows the exact rank-product "
                         "term (it would be silently dropped from "
                         "the accumulator); rescale the column "
                         "first (max seen: "

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from component_delta_lake_writer_spark.functions.exact import quantize
 from component_delta_lake_writer_spark.session import local_relation
 
 
@@ -50,9 +51,7 @@ def pagerank(
             .join(outdeg, "src")
             .select(
                 "dst",
-                F.round(F.col("rank") / F.col("od"), 12)
-                .cast("decimal(28,12)")
-                .alias("w"),
+                quantize(F.col("rank") / F.col("od"), 12).alias("w"),
             )
         )
         sums = contrib.groupBy("dst").agg(
@@ -328,9 +327,7 @@ def hits(
             e.join(hub, e["src"] == hub["node"])
             .select(
                 "dst",
-                F.round(F.col("h"), 12)
-                .cast("decimal(28,12)")
-                .alias("w"),
+                quantize("h", 12).alias("w"),
             )
             .groupBy("dst")
             .agg(F.sum("w").cast("double").alias("s"))
@@ -351,9 +348,7 @@ def hits(
             e.join(auth, e["dst"] == auth["node"])
             .select(
                 "src",
-                F.round(F.col("a"), 12)
-                .cast("decimal(28,12)")
-                .alias("w"),
+                quantize("a", 12).alias("w"),
             )
             .groupBy("src")
             .agg(F.sum("w").cast("double").alias("s"))

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.exact import exact_sum, quantize
+
 _TRACKING = r"^(utm_[^=]*|ref|fbclid|gclid|mc_cid|mc_eid)="
 
 
@@ -336,7 +338,7 @@ def unigram_logprob(
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
-            F.sum((-F.col("logp")).cast("decimal(18,4)")).alias("_bits"),
+            exact_sum(-F.col("logp"), 4).alias("_bits"),
         )
     )
     return per.select(
@@ -552,7 +554,7 @@ def bigram_lm_perplexity(
         .crossJoin(vocab)
         .select(
             F.col(id_col),
-            F.round(
+            quantize(
                 -F.log(
                     (F.coalesce(F.col("c12"), F.lit(0)) + F.lit(alpha))
                     / (
@@ -561,9 +563,7 @@ def bigram_lm_perplexity(
                     )
                 ),
                 4,
-            )
-            .cast("decimal(24,4)")
-            .alias("_nlp"),
+            ).alias("_nlp"),
         )
     )
     per = scored.groupBy(id_col).agg(

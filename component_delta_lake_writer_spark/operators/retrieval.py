@@ -17,8 +17,8 @@ everything is Catalyst expressions.
 
 Float determinism across engines: each per-(doc, term) BM25
 contribution is a fixed-length arithmetic expression (deterministic),
-rounded to 6 decimals and accumulated as DECIMAL(18,6) so the
-cross-term sum is order-free (the registry's round->decimal idiom).
+rounded to 6 decimals and summed exactly (``functions.exact``) so
+the cross-term sum is order-free.
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.exact import quantize
 from component_delta_lake_writer_spark.operators.text import normalize_text
 
 
@@ -129,7 +130,7 @@ def bm25_topk(
         .select(
             "doc_id",
             "term",
-            F.round(idf * norm, 6).cast("decimal(18,6)").alias("w"),
+            quantize(idf * norm, 6).alias("w"),
         )
     )
     scored = (
@@ -305,21 +306,14 @@ def rank_eval(
         .agg(F.count(F.lit(1)).alias("_nrel"))
         .join(hits, "_q", "left")
         .select(
-            F.round(
-                F.coalesce(
-                    F.lit(1.0) / F.col("_first"), F.lit(0.0)
-                ),
-                9,
-            )
-            .cast("decimal(12,9)")
-            .alias("_rr"),
-            F.round(
+            quantize(
+                F.coalesce(F.lit(1.0) / F.col("_first"), F.lit(0.0)), 9
+            ).alias("_rr"),
+            quantize(
                 F.coalesce(F.col("_nhit"), F.lit(0)).cast("double")
                 / F.col("_nrel"),
                 9,
-            )
-            .cast("decimal(12,9)")
-            .alias("_rec"),
+            ).alias("_rec"),
         )
     )
     return per_q.agg(
@@ -358,8 +352,7 @@ def ndcg_at_k(
     corpus metric is order-free and engine-portable.  Queries with
     no positive-grade judgment are excluded (nDCG undefined);
     grades must be small non-negative ints (gain 2^rel is exact to
-    rel ≤ 30, and decimal(28,9) terms hold it — 18,9 overflowed at
-    rel 30 / rank 1; r11 review).
+    rel ≤ 30, and the 9dp terms hold it).
 
     Returns ONE row: (n_queries, ndcg_at_k) rounded 6dp.
     """
@@ -388,11 +381,9 @@ def ndcg_at_k(
         .join(rel, ["_q", "_d"])
         .select(
             "_q",
-            F.round(
-                gain / F.log2(F.col("_r") + F.lit(1.0)), 9
-            )
-            .cast("decimal(28,9)")
-            .alias("_term"),
+            quantize(gain / F.log2(F.col("_r") + F.lit(1.0)), 9).alias(
+                "_term"
+            ),
         )
         .groupBy("_q")
         .agg(F.sum("_term").alias("_dcg"))
@@ -405,24 +396,19 @@ def ndcg_at_k(
         .filter(F.col("_i") <= k)
         .select(
             "_q",
-            F.round(
-                gain / F.log2(F.col("_i") + F.lit(1.0)), 9
-            )
-            .cast("decimal(28,9)")
-            .alias("_term"),
+            quantize(gain / F.log2(F.col("_i") + F.lit(1.0)), 9).alias(
+                "_term"
+            ),
         )
         .groupBy("_q")
         .agg(F.sum("_term").alias("_idcg"))
     )
     per_q = idcg.join(dcg, "_q", "left").select(
-        F.round(
-            F.coalesce(F.col("_dcg"), F.lit(0))
-            .cast("double")
+        quantize(
+            F.coalesce(F.col("_dcg"), F.lit(0)).cast("double")
             / F.col("_idcg").cast("double"),
             9,
-        )
-        .cast("decimal(12,9)")
-        .alias("_ndcg")
+        ).alias("_ndcg")
     )
     return per_q.agg(
         F.count(F.lit(1)).cast("long").alias("n_queries"),
@@ -486,11 +472,9 @@ def map_at_k(
         )
         .select(
             "_q",
-            F.round(
+            quantize(
                 F.col("_nrel_above").cast("double") / F.col("_r"), 9
-            )
-            .cast("decimal(12,9)")
-            .alias("_p"),
+            ).alias("_p"),
         )
         .groupBy("_q")
         .agg(F.sum("_p").alias("_sp"))
@@ -500,13 +484,11 @@ def map_at_k(
         .agg(F.count(F.lit(1)).alias("_nrel"))
         .join(hit_ap, "_q", "left")
         .select(
-            F.round(
+            quantize(
                 F.coalesce(F.col("_sp"), F.lit(0)).cast("double")
                 / F.least(F.col("_nrel"), F.lit(k)),
                 9,
-            )
-            .cast("decimal(12,9)")
-            .alias("_ap")
+            ).alias("_ap")
         )
     )
     return per_q.agg(

@@ -14,6 +14,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.exact import (
+    exact_sum,
+    exact_sum_product,
+    quantize,
+)
+
 
 def sessionize(
     df: DataFrame,
@@ -124,7 +130,7 @@ def hourly_rollup(
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(
-                F.sum(F.col(value_col).cast("decimal(20,4)")).cast("double"), 4
+                exact_sum(value_col, 4).cast("double"), 4
             ).alias("sum_value"),
         )
     )
@@ -545,7 +551,7 @@ def funnel_times(
             F.count(d).alias(f"__n_{i}"),
             F.round(F.percentile(d, F.lit(0.5)), 6).alias(f"__med_{i}"),
             F.round(
-                F.sum(d.cast("decimal(24,6)")).cast("double")
+                exact_sum(d, 6).cast("double")
                 / F.count(d),
                 6,
             ).alias(f"__mean_{i}"),
@@ -765,18 +771,16 @@ def km_survival(
         # nulls it but DuckDB's raises — both sides get NULL by
         # construction, and the survival short-circuit below owns
         # that row)
-        F.when(
-            F.col("d") < F.col("n"),
-            F.round(
+        quantize(
+            F.when(
+                F.col("d") < F.col("n"),
                 F.log(
                     F.lit(1.0)
                     - F.col("d").cast("double") / F.col("n")
-                ),
-                9,
+                )
             ),
-        )
-        .cast("decimal(18,9)")
-        .alias("_lnterm"),
+            9,
+        ).alias("_lnterm"),
     )
     # d = n only at the final time with no censored survivors:
     # ln(0) -> -inf; survival is exactly 0 there — short-circuit
@@ -988,25 +992,20 @@ def logrank_test(
         "da",
         # identical left-to-right double expressions on both engines;
         # 9dp-round + DECIMAL sum makes the accumulation order-free
-        F.round(dt * na / nt, 9)
-        .cast("decimal(28,9)")
-        .alias("_e"),
-        F.when(
-            F.col("nt") > 1,
-            F.round(
+        quantize(dt * na / nt, 9).alias("_e"),
+        quantize(
+            F.when(
+                F.col("nt") > 1,
                 dt
                 * na
                 / nt
                 * (nt - na)
                 / nt
                 * (nt - dt)
-                / (nt - F.lit(1.0)),
-                9,
-            ),
-        )
-        .otherwise(F.lit(0.0))
-        .cast("decimal(28,9)")
-        .alias("_v"),
+                / (nt - F.lit(1.0))
+            ).otherwise(F.lit(0.0)),
+            9,
+        ).alias("_v"),
     )
     agg = terms.agg(
         F.count(F.lit(1)).alias("n_times"),
@@ -1119,10 +1118,8 @@ def cox_ph_two_arm(
         ag = j.select(
             "_b",
             "d1",
-            F.round(d * r, 9).cast("decimal(28,9)").alias("_u"),
-            F.round(d * r * (F.lit(1.0) - r), 9)
-            .cast("decimal(28,9)")
-            .alias("_i"),
+            quantize(d * r, 9).alias("_u"),
+            quantize(d * r * (F.lit(1.0) - r), 9).alias("_i"),
         ).agg(
             F.min("_b").alias("_b"),
             F.sum("d1").alias("_o"),
@@ -1154,9 +1151,7 @@ def cox_ph_two_arm(
     fin = j.select(
         "_b",
         "d1",
-        F.round(d * r * (F.lit(1.0) - r), 9)
-        .cast("decimal(28,9)")
-        .alias("_i"),
+        quantize(d * r * (F.lit(1.0) - r), 9).alias("_i"),
     ).agg(
         F.count(F.lit(1)).alias("n_times"),
         F.min("_b").alias("_b"),
@@ -1231,12 +1226,10 @@ def gehan_wilcoxon_test(
     na = F.col("na").cast("double")
     da = F.col("da").cast("double")
     terms = by_t.filter(F.col("dt") > 0).select(
-        F.round(nt * (da - dt * na / nt), 9)
-        .cast("decimal(38,9)")
-        .alias("_u"),
-        F.when(
-            F.col("nt") > 1,
-            F.round(
+        quantize(nt * (da - dt * na / nt), 9).alias("_u"),
+        quantize(
+            F.when(
+                F.col("nt") > 1,
                 nt
                 * nt
                 * (
@@ -1247,13 +1240,10 @@ def gehan_wilcoxon_test(
                     / nt
                     * (nt - dt)
                     / (nt - F.lit(1.0))
-                ),
-                9,
-            ),
-        )
-        .otherwise(F.lit(0.0))
-        .cast("decimal(38,9)")
-        .alias("_v"),
+                )
+            ).otherwise(F.lit(0.0)),
+            9,
+        ).alias("_v"),
     )
     agg = terms.agg(
         F.count(F.lit(1)).alias("n_times"),
@@ -1414,25 +1404,20 @@ def stratified_logrank_test(
         "_st",
         "dt",
         "da",
-        F.round(dt * na / nt, 9)
-        .cast("decimal(28,9)")
-        .alias("_e"),
-        F.when(
-            F.col("nt") > 1,
-            F.round(
+        quantize(dt * na / nt, 9).alias("_e"),
+        quantize(
+            F.when(
+                F.col("nt") > 1,
                 dt
                 * na
                 / nt
                 * (nt - na)
                 / nt
                 * (nt - dt)
-                / (nt - F.lit(1.0)),
-                9,
-            ),
-        )
-        .otherwise(F.lit(0.0))
-        .cast("decimal(28,9)")
-        .alias("_v"),
+                / (nt - F.lit(1.0))
+            ).otherwise(F.lit(0.0)),
+            9,
+        ).alias("_v"),
     )
     # ONE aggregate over the pinned relation carries the per-arm
     # user counts AND the stratum count — no extra driver action
@@ -1543,9 +1528,7 @@ def nelson_aalen(
         F.sum(F.col("d") + F.col("c")).over(w_suffix).alias("n"),
     ).select(
         "*",
-        F.round(F.col("d").cast("double") / F.col("n"), 9)
-        .cast("decimal(18,9)")
-        .alias("_hterm"),
+        quantize(F.col("d").cast("double") / F.col("n"), 9).alias("_hterm"),
     )
     return (
         curve.select(
@@ -1585,7 +1568,7 @@ def rmst_two_arm(
     folds as exp(Σ 9dp-rounded ln terms) on the metadata-scale grid,
     and the integral is exact step-function geometry: the segment
     [tᵢ, min(tᵢ₊₁, τ)) contributes S(tᵢ)·width with the 6dp survival
-    as DECIMAL(9,6) × integer width — a decimal sum, order-free
+    × integer width, summed exactly — order-free
     where a float accumulation is not — plus the head segment
     [0, min(t₁, τ)) at S = 1.  An arm whose last subject dies
     (d = n) contributes 0 beyond that time; beyond an arm's last
@@ -1603,12 +1586,10 @@ def rmst_two_arm(
 
     def _arm_cols(d, n, tag: str):
         """Per-arm survival + integral segment over the shared grid."""
-        lnterm = F.when(
-            (n > 0) & (d < n),
-            F.round(
-                F.log(F.lit(1.0) - d.cast("double") / n), 9
-            ),
-        ).cast("decimal(18,9)")
+        lnterm = quantize(
+            F.when((n > 0) & (d < n), F.log(F.lit(1.0) - d.cast("double") / n)),
+            9,
+        )
         dead = F.max(
             F.when((n > 0) & (d == n), 1).otherwise(0)
         ).over(w_prefix)
@@ -1622,7 +1603,7 @@ def rmst_two_arm(
                 6,
             )
         )
-        return surv.cast("decimal(9,6)").alias(f"_s{tag}")
+        return quantize(surv, 6).alias(f"_s{tag}")
 
     tau = F.lit(int(tau_days))
     db = F.col("dt") - F.col("da")
@@ -1683,7 +1664,7 @@ def concordance_index(
     never an unpartitioned corpus window; the score axis should be
     discrete or pre-bucketed (the JT/mann_whitney contract).
     Doubled-count integers throughout (ties half-weighted as
-    2·conc + tied); per-cell products go through DECIMAL(38,0)
+    2·conc + tied); per-cell products are exact integers
     (d·n_gt ~ N² overflows long at N ≈ 2³¹).
 
     Pairs with equal times are not usable (the strict Harrell
@@ -1757,17 +1738,11 @@ def concordance_index(
         ),
         F.sum("_ngt").over(w_all).alias("_gall"),
     )
-    d38 = "decimal(38,0)"
     agg = g2.agg(
-        F.sum(
-            (
-                F.col("_d").cast(d38)
-                * (F.lit(2) * F.col("_glt") + F.col("_ngt"))
-            ).cast(d38)
+        exact_sum_product(
+            "_d", F.lit(2) * F.col("_glt") + F.col("_ngt"), 0
         ).alias("_c2"),
-        F.sum(
-            (F.col("_d").cast(d38) * F.col("_gall")).cast(d38)
-        ).alias("_p"),
+        exact_sum_product("_d", "_gall", 0).alias("_p"),
     )
     totals = cells.agg(
         F.sum("_a").alias("_n"), F.sum("_d").alias("_ne")
@@ -1851,18 +1826,16 @@ def cumulative_incidence(
         # d = n only at the final time with no censored survivors
         # (the km_survival guard): NULL here, and S(s−) never reads
         # a row at or past its own time anyway
-        F.when(
-            F.col("_d") < F.col("_n"),
-            F.round(
+        quantize(
+            F.when(
+                F.col("_d") < F.col("_n"),
                 F.log(
                     F.lit(1.0)
                     - F.col("_d").cast("double") / F.col("_n")
-                ),
-                9,
+                )
             ),
-        )
-        .cast("decimal(18,9)")
-        .alias("_lnterm"),
+            9,
+        ).alias("_lnterm"),
     )
     grid = grid.select(
         "_t",
@@ -1882,14 +1855,12 @@ def cumulative_incidence(
             "_t",
             "_n",
             F.col("_cnt").alias("_dk"),
-            F.round(
+            quantize(
                 F.col("_s_minus")
                 * F.col("_cnt").cast("double")
                 / F.col("_n"),
                 9,
-            )
-            .cast("decimal(18,9)")
-            .alias("_inc"),
+            ).alias("_inc"),
         )
     )
     w_cif = (
@@ -1972,12 +1943,10 @@ def fleming_harrington_test(
         "nt",
         "da",
         "na",
-        F.when(
-            F.col("dt") < F.col("nt"),
-            F.round(F.log(F.lit(1.0) - dt / nt), 9),
-        )
-        .cast("decimal(18,9)")
-        .alias("_lnt"),
+        quantize(
+            F.when(F.col("dt") < F.col("nt"), F.log(F.lit(1.0) - dt / nt)),
+            9,
+        ).alias("_lnt"),
     )
     sm = F.exp(
         F.coalesce(
@@ -1999,12 +1968,11 @@ def fleming_harrington_test(
     wt = F.col("_wt")
     terms = staged.filter(F.col("dt") > 0).select(
         "da",
-        F.round(wt * (F.col("da").cast("double") - dt * na / nt), 9)
-        .cast("decimal(28,9)")
+        quantize(wt * (F.col("da").cast("double") - dt * na / nt), 9)
         .alias("_u"),
-        F.when(
-            F.col("nt") > 1,
-            F.round(
+        quantize(
+            F.when(
+                F.col("nt") > 1,
                 wt
                 * wt
                 * dt
@@ -2013,13 +1981,10 @@ def fleming_harrington_test(
                 * (nt - na)
                 / nt
                 * (nt - dt)
-                / (nt - F.lit(1.0)),
-                9,
-            ),
-        )
-        .otherwise(F.lit(0.0))
-        .cast("decimal(28,9)")
-        .alias("_v"),
+                / (nt - F.lit(1.0))
+            ).otherwise(F.lit(0.0)),
+            9,
+        ).alias("_v"),
     )
     agg = terms.agg(
         F.count(F.lit(1)).alias("n_times"),
@@ -2192,7 +2157,7 @@ def overdispersion_check(
     robust spelling is needed instead.
 
     ONE map-side-combinable scan: per-user target-type counts,
-    then exact integer Σc and Σc² (DECIMAL(38,0) — c²·n ~ N³).
+    then exact integer Σc and Σc² (c²·n ~ N³ overflows long).
     Every downstream expression is the identical left-to-right
     double chain both engines; √ is IEEE-exact so the normal
     approximation needs no libm rounding guard.
@@ -2213,13 +2178,10 @@ def overdispersion_check(
             ).alias("_c")
         )
     )
-    d38 = "decimal(38,0)"
     agg = users.agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum("_c").alias("_s"),
-        F.sum(
-            (F.col("_c").cast(d38) * F.col("_c")).cast(d38)
-        ).alias("_s2"),
+        exact_sum_product("_c", "_c", 0).alias("_s2"),
     )
     n = F.col("_n").cast("double")
     mean = F.col("_s").cast("double") / n
@@ -2364,20 +2326,15 @@ def ph_assumption_check(
     terms = deaths.select(
         "t",
         "da",
-        F.round(dt * na / nt, 9)
-        .cast("decimal(28,9)")
-        .alias("_e"),
-        F.when(
-            F.col("nt") > 1,
-            F.round(
+        quantize(dt * na / nt, 9).alias("_e"),
+        quantize(
+            F.when(
+                F.col("nt") > 1,
                 dt * na / nt * (nt - na) / nt * (nt - dt)
-                / (nt - F.lit(1.0)),
-                9,
-            ),
-        )
-        .otherwise(F.lit(0.0))
-        .cast("decimal(28,9)")
-        .alias("_v"),
+                / (nt - F.lit(1.0))
+            ).otherwise(F.lit(0.0)),
+            9,
+        ).alias("_v"),
     )
     early = F.col("t") <= F.lit(split_t)
 
@@ -2386,16 +2343,12 @@ def ph_assumption_check(
             F.sum(F.when(cond, F.col("da")).otherwise(0)).alias(
                 f"_o{tag}"
             ),
-            F.sum(
-                F.when(cond, F.col("_e")).otherwise(
-                    F.lit(0).cast("decimal(28,9)")
-                )
-            ).alias(f"_e{tag}"),
-            F.sum(
-                F.when(cond, F.col("_v")).otherwise(
-                    F.lit(0).cast("decimal(28,9)")
-                )
-            ).alias(f"_v{tag}"),
+            exact_sum(F.when(cond, F.col("_e")).otherwise(0), 9).alias(
+                f"_e{tag}"
+            ),
+            exact_sum(F.when(cond, F.col("_v")).otherwise(0), 9).alias(
+                f"_v{tag}"
+            ),
         ]
 
     agg = terms.agg(*half(early, "1"), *half(~early, "2"))

@@ -30,6 +30,10 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.exact import (
+    exact_sum,
+    exact_sum_product,
+)
 from component_delta_lake_writer_spark.session import local_relation
 
 
@@ -717,9 +721,7 @@ def _lloyd_centroids(
             .groupBy("cid", "pos")
             .agg(
                 (
-                    F.sum(F.round(F.col("xj"), 6).cast("decimal(18,6)"))
-                    .cast("double")
-                    / F.count(F.lit(1))
+                    exact_sum("xj", 6).cast("double") / F.count(F.lit(1))
                 ).alias("m")
             )
         )
@@ -849,9 +851,7 @@ def pq_topk(
             .groupBy("j", "cid", "pos")
             .agg(
                 (
-                    F.sum(F.round(F.col("xj"), 6).cast("decimal(18,6)"))
-                    .cast("double")
-                    / F.count(F.lit(1))
+                    exact_sum("xj", 6).cast("double") / F.count(F.lit(1))
                 ).alias("cm")
             )
         )
@@ -879,9 +879,7 @@ def pq_topk(
         codes.join(F.broadcast(qd), ["j", "cid"])
         .groupBy("pid")
         .agg(
-            F.sum(F.round(F.col("qd2"), 6).cast("decimal(20,6)"))
-            .cast("double")
-            .alias("adc")
+            exact_sum("qd2", 6).cast("double").alias("adc")
         )
         .filter(F.col("pid") != probe_id)
     )
@@ -1664,19 +1662,13 @@ def embedding_dim_stats(
     One posexplode + hash aggregation on the dimension index: map-side
     partial aggregation leaves ``dim`` groups per task, so shuffle
     volume is O(dim x tasks) regardless of corpus size.  Sums go
-    through the round→DECIMAL idiom (exact, ORDER-FREE addition), so
-    mean/std are bit-deterministic across partitionings and engines —
-    a double SUM would drift in the last ulps with partition order.
+    through ``functions.exact`` (the SQUARE is an exact 12dp product
+    of the 6dp values), so mean/std are bit-deterministic across
+    partitionings and engines.
 
     Returns (d, n, mean, std, mn, mx): 1-based dimension, count, and
     6dp-rounded stats.
     """
-    v6 = F.round(F.col("v").cast("double"), 6)
-    # exact decimal sums: v6 fits DECIMAL(16,6) losslessly, and the
-    # SQUARE is a decimal*decimal product (exact, 12dp) — a double
-    # product cast to decimal would round engine-dependently at the
-    # cast and drift the 6th dp of std over thousands of rows
-    dec6 = v6.cast("decimal(16,6)")
     mean_d = F.col("_s").cast("double") / F.col("n")
     return (
         df.select(F.posexplode(_as_double(F.col(vec_col))).alias("p", "v"))
@@ -1684,8 +1676,8 @@ def embedding_dim_stats(
         .groupBy("d")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(dec6).alias("_s"),
-            F.sum(dec6 * dec6).alias("_s2"),
+            exact_sum("v", 6).alias("_s"),
+            exact_sum_product("v", "v", 6).alias("_s2"),
             F.round(F.min("v"), 6).alias("mn"),
             F.round(F.max("v"), 6).alias("mx"),
         )
@@ -1838,17 +1830,10 @@ def pca_top_components(
         "_i", (F.col("_i") + F.col("_q")).alias("_j"), "_xi", "_xj"
     )
     tri = upper.groupBy("_i", "_j").agg(
-        F.sum(
-            F.round(F.col("_xi") * F.col("_xj"), 12).cast(
-                "decimal(30,12)"
-            )
-        ).alias("_m"),
-        F.sum(
-            F.when(
-                F.col("_i") == F.col("_j"),
-                F.round(F.col("_xi"), 9).cast("decimal(20,9)"),
-            )
-        ).alias("_s"),
+        exact_sum(F.col("_xi") * F.col("_xj"), 12).alias("_m"),
+        exact_sum(F.when(F.col("_i") == F.col("_j"), F.col("_xi")), 9).alias(
+            "_s"
+        ),
         F.count(F.lit(1)).alias("_n"),
     )
     # mirror the strict upper half: round(x_i·x_j) == round(x_j·x_i)
@@ -2085,14 +2070,8 @@ def class_separation(
     cells = src.select(
         "_l", F.posexplode("_e").alias("_p", "_x")
     ).groupBy("_l", "_p").agg(
-        F.sum(F.round(F.col("_x"), 9).cast("decimal(20,9)")).alias(
-            "_s"
-        ),
-        F.sum(
-            F.round(F.col("_x") * F.col("_x"), 12).cast(
-                "decimal(30,12)"
-            )
-        ).alias("_s2"),
+        exact_sum("_x", 9).alias("_s"),
+        exact_sum(F.col("_x") * F.col("_x"), 12).alias("_s2"),
         F.count(F.lit(1)).alias("_n"),
     )
     per_label = cells.groupBy("_l").agg(

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.exact import exact_sum
+
 
 def salted_join(
     left: DataFrame,
@@ -82,7 +84,7 @@ def salted_two_stage_agg(
     )
     partial = salted.groupBy(key, "__salt").agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(F.col(value).cast("decimal(20,4)")).alias("_s"),
+        exact_sum(value, 4).alias("_s"),
     )
     return (
         partial.groupBy(key)

@@ -18,6 +18,11 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.exact import (
+    exact_sum,
+    exact_sum_product,
+    quantize,
+)
 from component_delta_lake_writer_spark.session import local_relation
 
 # whitespace tokenizer — identical semantics to the DuckDB oracle's
@@ -523,19 +528,15 @@ def zipf_slope(
     ).limit(top_n)
     w_rank = Window.orderBy(F.col("_c").desc(), F.col("_t").asc())
     ranked = top.select(
-        F.round(F.log(F.row_number().over(w_rank).cast("double")), 9)
-        .cast("decimal(12,9)")
-        .alias("_x"),
-        F.round(F.log(F.col("_c").cast("double")), 9)
-        .cast("decimal(12,9)")
-        .alias("_y"),
+        F.log(F.row_number().over(w_rank).cast("double")).alias("_x"),
+        F.log(F.col("_c").cast("double")).alias("_y"),
     )
     sums = ranked.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum("_x").cast("double").alias("sx"),
-        F.sum("_y").cast("double").alias("sy"),
-        F.sum(F.col("_x") * F.col("_y")).cast("double").alias("sxy"),
-        F.sum(F.col("_x") * F.col("_x")).cast("double").alias("sxx"),
+        exact_sum("_x", 9).cast("double").alias("sx"),
+        exact_sum("_y", 9).cast("double").alias("sy"),
+        exact_sum_product("_x", "_y", 9).cast("double").alias("sxy"),
+        exact_sum_product("_x", "_x", 9).cast("double").alias("sxx"),
     )
     totals = counts.agg(
         F.count(F.lit(1)).alias("vocab_size"),
@@ -772,7 +773,7 @@ def vocab_js_divergence(
                 (F.col("_ca") > 0) & (F.col("_cb") > 0), 1
             ).otherwise(0)
         ).alias("vocab_shared"),
-        F.sum(F.round(term, 9).cast("decimal(28,9)")).alias("_js"),
+        exact_sum(term, 9).alias("_js"),
     )
     js = F.when(
         (F.col("tokens_a") > 0) & (F.col("tokens_b") > 0),
@@ -904,11 +905,7 @@ def vocab_coverage(
         F.count(F.lit(1)).alias("_f")
     )
     agg = fof.agg(
-        F.sum(
-            (F.col("_c").cast("decimal(38,0)") * F.col("_f")).cast(
-                "decimal(38,0)"
-            )
-        ).alias("_n"),
+        exact_sum_product("_c", F.col("_f"), 0).alias("_n"),
         F.sum("_f").alias("_v"),
         F.sum(
             F.when(F.col("_c") == 1, F.col("_f")).otherwise(0)
@@ -997,7 +994,7 @@ def bpe_fertility(
     the learned table — ALL ranks, in learning order — as the same
     literal-embedded greedy fold projections with lazy
     checkpoints, and folds the dict to exact-integer totals
-    (Σcnt, Σcnt·chars, Σcnt·tokens — DECIMAL(38,0) products).
+    (Σcnt, Σcnt·chars, Σcnt·tokens).
 
     Returns ONE row: (n_merges_learned, n_distinct_words,
     total_words, total_chars, total_tokens, fertility 6dp,
@@ -1041,19 +1038,14 @@ def bpe_fertility(
         words = words.select(
             F.expr(fold).alias("_syms"), "_cnt"
         ).localCheckpoint(eager=False)
-    d38 = "decimal(38,0)"
     agg = words.agg(
         F.count(F.lit(1)).alias("_nw"),
         F.sum("_cnt").alias("_tw"),
-        F.sum(
-            (
-                F.col("_cnt").cast(d38)
-                * F.length(F.concat_ws("", F.col("_syms")))
-            ).cast(d38)
+        exact_sum(
+            quantize("_cnt", 0) * F.length(F.concat_ws("", F.col("_syms"))),
+            0,
         ).alias("_tc"),
-        F.sum(
-            (F.col("_cnt").cast(d38) * F.size("_syms")).cast(d38)
-        ).alias("_tt"),
+        exact_sum_product("_cnt", F.size("_syms"), 0).alias("_tt"),
     )
     return agg.select(
         F.lit(len(merges)).cast("int").alias("n_merges_learned"),

@@ -28,6 +28,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from component_delta_lake_writer_spark.errors import UserException
+from component_delta_lake_writer_spark.functions.exact import (
+    exact_sum,
+    exact_sum_product,
+    quantize,
+)
 
 
 def merge_asof(
@@ -367,11 +372,10 @@ def rolling_stats(
     cols = [F.col(key_col), F.col(ts_col)] + (
         [F.col(tiebreak)] if tiebreak else []
     )
-    dec = F.col("value").cast("decimal(24,6)")
     return df.select(*cols, v6.alias("value")).select(
         "*",
         F.round(
-            F.sum(dec).over(w).cast("double")
+            exact_sum("value", 6).over(w).cast("double")
             / F.count(F.lit(1)).over(w),
             6,
         ).alias("roll_mean"),
@@ -414,9 +418,7 @@ def cusum_changepoint(
             F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
         )
         .groupBy(F.date_trunc(bucket, F.col(ts_col)).alias("b"))
-        .agg(
-            F.sum(F.col(value_col).cast("decimal(24,6)")).alias("x")
-        )
+        .agg(exact_sum(value_col, 6).alias("x"))
     )
     w_ord = Window.orderBy("b")
     w_pre = w_ord.rowsBetween(Window.unboundedPreceding, 0)
@@ -425,15 +427,14 @@ def cusum_changepoint(
     )
     staged = series.select(
         "b",
-        F.sum("x").over(w_pre).cast("decimal(28,6)").alias("pre"),
+        F.sum("x").over(w_pre).alias("pre"),
         F.row_number().over(w_ord).alias("i"),
-        F.sum("x").over(w_all).cast("decimal(28,6)").alias("t"),
+        F.sum("x").over(w_all).alias("t"),
         F.count(F.lit(1)).over(w_all).alias("n"),
     ).select(
         "*",
         F.abs(
-            F.col("n").cast("decimal(8,0)") * F.col("pre")
-            - F.col("i").cast("decimal(8,0)") * F.col("t")
+            quantize("n", 0) * F.col("pre") - quantize("i", 0) * F.col("t")
         ).alias("absd"),
     )
     w_rank = Window.orderBy(F.col("absd").desc(), F.col("b").asc())
@@ -494,7 +495,7 @@ def seasonal_profile(
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col(value_col).cast("decimal(24,6)")).alias("s"),
+            exact_sum(value_col, 6).alias("s"),
         )
     )
     w_all = Window.rowsBetween(
@@ -594,12 +595,7 @@ def forecast_backtest(
         )
         .groupBy(F.date_trunc("hour", F.col(ts_col)).alias("h"))
         .agg(
-            F.round(
-                F.sum(F.col(value_col).cast("decimal(24,6)")).cast(
-                    "double"
-                ),
-                6,
-            ).alias("v")
+            F.round(exact_sum(value_col, 6).cast("double"), 6).alias("v")
         )
         .select(
             "h",
@@ -614,32 +610,24 @@ def forecast_backtest(
         .groupBy("dow", "hod")
         .agg(
             F.round(
-                F.sum(F.col("v").cast("decimal(24,6)")).cast("double")
-                / F.count(F.lit(1)),
+                exact_sum("v", 6).cast("double") / F.count(F.lit(1)),
                 6,
             ).alias("pred")
         )
     )
     test = hours.filter(F.col("h") >= split)
     scored = test.join(F.broadcast(cells), ["dow", "hod"], "left")
-    ae = F.round(F.abs(F.col("v") - F.col("pred")), 6)
-    ape = F.when(
-        F.col("v") != 0,
-        F.round(
-            F.abs(F.col("v") - F.col("pred")) / F.abs(F.col("v")), 6
-        ),
-    )
+    ae = F.abs(F.col("v") - F.col("pred"))
+    ape = F.when(F.col("v") != 0, ae / F.abs(F.col("v")))
     return scored.agg(
         F.count(F.lit(1)).cast("long").alias("n_test_hours"),
         F.count("pred").cast("long").alias("n_scored"),
         F.round(
-            F.sum(ae.cast("decimal(24,6)")).cast("double")
-            / F.count("pred"),
+            exact_sum(ae, 6).cast("double") / F.count("pred"),
             6,
         ).alias("mae"),
         F.round(
-            F.sum(ape.cast("decimal(24,6)")).cast("double")
-            / F.count(ape),
+            exact_sum(ape, 6).cast("double") / F.count(ape),
             6,
         ).alias("mape"),
     )
@@ -713,7 +701,7 @@ def acf_hourly(
     stats = F.broadcast(
         series.agg(
             F.count(F.lit(1)).alias("_n"),
-            F.sum(F.col("_y").cast("decimal(24,0)")).alias("_sy"),
+            exact_sum("_y", 0).alias("_sy"),
         )
     )
     with_mean = series.crossJoin(stats).select(
@@ -724,12 +712,9 @@ def acf_hourly(
         ).alias("_ybar"),
     )
     denom = with_mean.agg(
-        F.sum(
-            F.round(
-                (F.col("_y") - F.col("_ybar"))
-                * (F.col("_y") - F.col("_ybar")),
-                6,
-            ).cast("decimal(28,6)")
+        exact_sum(
+            (F.col("_y") - F.col("_ybar")) * (F.col("_y") - F.col("_ybar")),
+            6,
         ).alias("_den")
     )
     lagged = (
@@ -755,12 +740,10 @@ def acf_hourly(
         .groupBy("lag")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(
-                F.round(
-                    (F.col("_y") - F.col("_ybar"))
-                    * (F.col("_y2") - F.col("_ybar")),
-                    6,
-                ).cast("decimal(28,6)")
+            exact_sum(
+                (F.col("_y") - F.col("_ybar"))
+                * (F.col("_y2") - F.col("_ybar")),
+                6,
             ).alias("_num"),
         )
     )
@@ -880,8 +863,8 @@ def mann_kendall_hourly(
     count is C(b, 2) over BUCKETS, not rows — metadata-scale with
     the same ``max_buckets`` refusal as Theil–Sen (quadratic in
     the window length; rebucket first past ~2M pairs).  S and the
-    tie counts are exact integers (DECIMAL(38,0) for the cubic tie
-    terms — the anova scale-0 rule); the normal approximation
+    tie counts are exact integers (the cubic tie terms
+    included); the normal approximation
     carries the tie-corrected variance
     [n(n−1)(2n+5) − Σt(t−1)(2t+5)]/18 and the ±1 continuity
     correction.  Significance compares the 6dp-ROUNDED |z| (the
@@ -924,14 +907,13 @@ def mann_kendall_hourly(
     s_agg = a.join(b, F.col("_ta") < F.col("_tb")).agg(
         F.sum(sgn).alias("_s")
     )
-    d38 = "decimal(38,0)"
     t_c = F.col("_t2")
     ties = series.groupBy("_y").agg(
         F.count(F.lit(1)).alias("_t2")
     ).agg(
-        F.sum(
-            (t_c.cast(d38) * (t_c - 1) * (2 * t_c + 5)).cast(d38)
-        ).alias("_tt")
+        exact_sum(quantize(t_c, 0) * (t_c - 1) * (2 * t_c + 5), 0).alias(
+            "_tt"
+        )
     )
     n = n_b
     var = (
@@ -977,7 +959,7 @@ def durbin_watson_hourly(
     whole statistic is the EXACT integer ratio
     n·Σ(Δy)² / (n·Σy² − (Σy)²) — counts are integers, so both
     engines agree bit-for-bit before the single rounded division
-    (sums through DECIMAL(38,0); Σy² · n ~ N³ overflows long).
+    (sums are exact integers; Σy² · n ~ N³ overflows long).
 
     Returns ONE row: (n_buckets, dw, rho1) — dw 6dp, rho1 =
     1 − dw/2 (the implied lag-1 coefficient); NULL when the
@@ -993,32 +975,18 @@ def durbin_watson_hourly(
     lagged = full.select(
         "_y", F.lag("_y").over(w).alias("_yp")
     )
-    d38 = "decimal(38,0)"
+    dy = F.col("_y") - F.col("_yp")
     agg = lagged.agg(
-        F.sum(
-            F.when(
-                F.col("_yp").isNotNull(),
-                (
-                    (F.col("_y") - F.col("_yp")).cast(d38)
-                    * (F.col("_y") - F.col("_yp"))
-                ).cast(d38),
-            )
-        ).alias("_sd2"),
-        F.sum(
-            (F.col("_y").cast(d38) * F.col("_y")).cast(d38)
-        ).alias("_sy2"),
+        exact_sum_product(dy, dy, 0).alias("_sd2"),
+        exact_sum_product("_y", "_y", 0).alias("_sy2"),
         F.sum("_y").alias("_sy"),
     )
-    n = F.lit(n_b).cast("decimal(38,0)")
-    den = (n * F.col("_sy2")).cast(d38) - (
-        F.col("_sy").cast(d38) * F.col("_sy")
-    ).cast(d38)
+    n = quantize(F.lit(n_b), 0)
+    den = n * F.col("_sy2") - quantize("_sy", 0) * F.col("_sy")
     dw = F.when(
         den > 0,
         F.round(
-            (n * F.col("_sd2")).cast(d38).cast("double")
-            / den.cast("double"),
-            6,
+            (n * F.col("_sd2")).cast("double") / den.cast("double"), 6
         ),
     )
     return agg.select(
@@ -1048,7 +1016,7 @@ def xcorr_hourly(
     gap-fill discipline); per-lag alignment is ``lead`` windows
     over the metadata-scale spine exploded into (lag, a, b) rows,
     and each lag's five Pearson moments accumulate as exact
-    integers through DECIMAL(38,0) (hourly-count products overflow
+    integers (hourly-count products overflow
     long at web scale).  The correlation is one rounded expression
     per lag; NULL when either side of a lag window is constant.
 
@@ -1124,31 +1092,18 @@ def xcorr_hourly(
         )
         .filter(F.col("_bl").isNotNull())
     )
-    d38 = "decimal(38,0)"
     agg = pairs.groupBy("_lag").agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum("_a").alias("_sa"),
         F.sum("_bl").alias("_sb"),
-        F.sum(
-            (F.col("_a").cast(d38) * F.col("_bl")).cast(d38)
-        ).alias("_sab"),
-        F.sum(
-            (F.col("_a").cast(d38) * F.col("_a")).cast(d38)
-        ).alias("_saa"),
-        F.sum(
-            (F.col("_bl").cast(d38) * F.col("_bl")).cast(d38)
-        ).alias("_sbb"),
+        exact_sum_product("_a", "_bl", 0).alias("_sab"),
+        exact_sum_product("_a", "_a", 0).alias("_saa"),
+        exact_sum_product("_bl", "_bl", 0).alias("_sbb"),
     )
-    n = F.col("_n").cast(d38)
-    cov = (n * F.col("_sab")).cast(d38) - (
-        F.col("_sa").cast(d38) * F.col("_sb")
-    ).cast(d38)
-    va = (n * F.col("_saa")).cast(d38) - (
-        F.col("_sa").cast(d38) * F.col("_sa")
-    ).cast(d38)
-    vb = (n * F.col("_sbb")).cast(d38) - (
-        F.col("_sb").cast(d38) * F.col("_sb")
-    ).cast(d38)
+    n = quantize("_n", 0)
+    cov = n * F.col("_sab") - quantize("_sa", 0) * F.col("_sb")
+    va = n * F.col("_saa") - quantize("_sa", 0) * F.col("_sa")
+    vb = n * F.col("_sbb") - quantize("_sb", 0) * F.col("_sb")
     corr = F.when(
         (va > 0) & (vb > 0),
         F.round(

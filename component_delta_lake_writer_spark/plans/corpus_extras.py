@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.exact import exact_sum
 from component_delta_lake_writer_spark.plans.query_registry import query
 from component_delta_lake_writer_spark.session import local_relation
 from component_delta_lake_writer_spark.tables import load_table
@@ -84,7 +85,7 @@ def importance_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = importance_sample(docs, "doc_id", rate)
     return s.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_sampled"),
-        F.sum(F.col("weight").cast("decimal(18,6)"))
+        exact_sum("weight", 6)
         .cast("double")
         .alias("est_total_docs"),
         F.min("doc_id").alias("min_id"),
@@ -153,7 +154,7 @@ def kmeans_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     asg = kmeans_clusters(emb, k=8, lloyd_iterations=2)
     return asg.groupBy(F.col("cid").alias("cluster_id")).agg(
         F.count(F.lit(1)).alias("n_points"),
-        F.sum(F.round(F.col("dist2"), 6).cast("decimal(20,6)"))
+        exact_sum("dist2", 6)
         .cast("double")
         .alias("inertia"),
     )
@@ -1427,9 +1428,8 @@ def variant_semistructured(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.expr("variant_get(v, '$.amounts[1]', 'double')")
-                .cast("decimal(20,6)")
+            exact_sum(
+                F.expr("variant_get(v, '$.amounts[1]', 'double')"), 6
             ).cast("double").alias("fee_total"),
         )
         .orderBy(F.col("n").desc(), F.col("cust").asc())
@@ -1559,7 +1559,7 @@ def interpolate_linear_series(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("hour", F.col("ts")).alias("h"),
         )
         .agg(
-            F.sum(F.round(F.col("value"), 6).cast("decimal(20,6)"))
+            exact_sum("value", 6)
             .cast("double")
             .alias("v")
         )

@@ -10,6 +10,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.cast import base_type_to_spark
+from component_delta_lake_writer_spark.functions.exact import (
+    exact_sum,
+    exact_sum_product,
+    quantize,
+    ratio,
+)
 from component_delta_lake_writer_spark.operators import dedup as D
 from component_delta_lake_writer_spark.operators import similarity as SIM
 from component_delta_lake_writer_spark.plans.query_registry import (
@@ -61,11 +68,7 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(24,6)"
-                )
-            )
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6)
             .cast("double")
             .alias("revenue")
         )
@@ -113,11 +116,7 @@ def tpch_q5_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), r.r_regionkey == n.n_regionkey)
         .groupBy("n_name")
         .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(24,6)"
-                )
-            )
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6)
             .cast("double")
             .alias("revenue"),
             F.count(F.lit(1)).alias("n_lineitems"),
@@ -252,7 +251,9 @@ def job_run_external(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").cast("string"),
         F.col("o_custkey").cast("string"),
         F.col("o_orderstatus"),
-        F.col("o_totalprice").cast("decimal(14,2)").cast("string"),
+        F.col("o_totalprice")
+        .cast(base_type_to_spark("NUMERIC", "14,2"))
+        .cast("string"),
         F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss"),
         F.col("o_orderpriority"),
     )
@@ -519,7 +520,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(20,4)"))
+        exact_sum("o_totalprice", 4)
         .cast("double")
         .alias("sum_price"),
     )
@@ -555,7 +556,7 @@ def sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(
-                F.sum(F.col("value").cast("decimal(20,4)")).cast("double"), 4
+                exact_sum("value", 4).cast("double"), 4
             ).alias("sum_value"),
         )
         .select(F.col("w.start").alias("win_start"), "n_events", "sum_value")
@@ -1005,7 +1006,7 @@ def histogram_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("o_totalprice") / 30000.0).cast("bigint").alias("bucket")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(20,4)"))
+        exact_sum("o_totalprice", 4)
         .cast("double")
         .alias("bucket_sum"),
     )
@@ -1035,14 +1036,14 @@ def stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     scaled value would double-round differently, and raw DECIMAL
     outputs fail the driver hash."""
     o = load_table(spark, sf_dir, "orders")
-    d24 = F.col("o_totalprice").cast("decimal(24,4)")
-    d12 = F.col("o_totalprice").cast("decimal(12,4)")
     return o.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(
             F.corr(F.col("o_totalprice"), F.col("o_custkey").cast("double")), 6
         ).alias("price_cust_corr"),
-        F.sum(d24 * d12).cast("decimal(38,8)").cast("string").alias("sum_sq"),
+        exact_sum_product("o_totalprice", "o_totalprice", 4)
+        .cast("string")
+        .alias("sum_sq"),
         F.round(F.stddev_samp(F.col("o_totalprice")), 3).alias("stddev_r"),
     )
 
@@ -1176,7 +1177,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             # and the decimal accumulation is order-independent — a
             # bare double sum here would hash differently per partition
             # layout.
-            F.sum(F.round(F.col("q"), 6).cast("decimal(16,6)"))
+            exact_sum("q", 6)
             .cast("double")
             .alias("sum_quality"),
         )
@@ -1222,11 +1223,7 @@ def tpch_q6_revenue_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.sum(
-                (F.col("l_extendedprice") * F.col("l_discount")).cast(
-                    "decimal(24,6)"
-                )
-            )
+            exact_sum(F.col("l_extendedprice") * F.col("l_discount"), 6)
             .cast("double")
             .alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
@@ -1299,18 +1296,15 @@ def tpch_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp_ntz"))
     )
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(24,6)"
-    )
-    zero = F.lit(0).cast("decimal(24,6)")
+    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .agg(
             (
-                F.sum(
-                    F.when(F.col("p_type") == "PROMO", rev).otherwise(zero)
+                exact_sum(
+                    F.when(F.col("p_type") == "PROMO", rev).otherwise(0), 6
                 ).cast("double")
-                / F.sum(rev).cast("double")
+                / exact_sum(rev, 6).cast("double")
             ).alias("promo_share"),
             F.count(F.lit(1)).alias("n_items"),
         )
@@ -1342,7 +1336,7 @@ def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("sum_qty"))
+        .agg(exact_sum("l_quantity", 2).alias("sum_qty"))
         .filter(F.col("sum_qty") > 200)
     )
     o = load_table(spark, sf_dir, "orders")
@@ -1383,7 +1377,7 @@ def tpch_q11_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     no fractional literal, whose type diverges between engines. The
     1-row global agg broadcasts into the filter."""
     li = load_table(spark, sf_dir, "lineitem").select(
-        "l_suppkey", F.col("l_extendedprice").cast("decimal(24,4)").alias("v")
+        "l_suppkey", quantize("l_extendedprice", 4).alias("v")
     )
     sv = li.groupBy("l_suppkey").agg(F.sum("v").alias("value"))
     total = li.agg((F.sum("v") * F.lit(11)).alias("threshold"))
@@ -1426,7 +1420,7 @@ def pivot_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         .pivot("o_orderstatus", ["F", "O", "P"])
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(20,2)")).alias("s"),
+            exact_sum("o_totalprice", 2).alias("s"),
         )
     )
     out = p.select(
@@ -1436,7 +1430,7 @@ def pivot_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             for v in ("F", "O", "P")
         ],
         *[
-            F.coalesce(F.col(f"{v}_s"), F.lit(0).cast("decimal(20,2)"))
+            F.coalesce(F.col(f"{v}_s"), F.lit(0))
             .cast("double")
             .alias(f"sum_{v.lower()}")
             for v in ("F", "O", "P")
@@ -2192,7 +2186,9 @@ def csv_gzip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
-        F.col("o_totalprice").cast("decimal(12,2)").alias("price"),
+        F.col("o_totalprice")
+        .cast(base_type_to_spark("NUMERIC", "12,2"))
+        .alias("price"),
     )
     src.repartition(4).write.mode("overwrite").option("header", "false").option(
         "compression", "gzip"
@@ -2244,11 +2240,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), n.n_nationkey == c.c_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(24,6)"
-                )
-            )
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6)
             .cast("double")
             .alias("revenue")
         )
@@ -2335,11 +2327,7 @@ def tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .filter(cond)
         .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(24,6)"
-                )
-            )
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6)
             .cast("double")
             .alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
@@ -2377,7 +2365,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         "user_id",
         "event_id",
-        F.sum(F.col("value").cast("decimal(20,6)"))
+        exact_sum("value", 6)
         .over(w)
         .cast("double")
         .alias("hour_window_value"),
@@ -2509,10 +2497,8 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         li.groupBy("l_suppkey")
         .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(24,6)"
-                )
+            exact_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")), 6
             ).alias("total")
         )
         .persist()
@@ -2764,7 +2750,7 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("band")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(20,4)"))
+            exact_sum("o_totalprice", 4)
             .cast("double")
             .alias("band_value"),
         )
@@ -2804,7 +2790,9 @@ def job_run_datadir(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").cast("string"),
         F.col("o_custkey").cast("string"),
         F.col("o_orderstatus"),
-        F.col("o_totalprice").cast("decimal(14,2)").cast("string"),
+        F.col("o_totalprice")
+        .cast(base_type_to_spark("NUMERIC", "14,2"))
+        .cast("string"),
         F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss"),
         F.col("o_orderpriority"),
     )
@@ -2931,11 +2919,7 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("l_shipdate").alias("l_year"),
         )
         .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(24,6)"
-                )
-            )
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6)
             .cast("double")
             .alias("revenue")
         )
@@ -3080,11 +3064,7 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
         (F.col("p_brand") == "Brand#12") & (F.col("p_type") == "SMALL")
     )
     avg_q = li.groupBy(F.col("l_partkey").alias("a_partkey")).agg(
-        (
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")) / F.count(F.lit(1))
-        )
-        .cast("decimal(24,8)")
-        .alias("avg_qty")
+        ratio(exact_sum("l_quantity", 2), F.count(F.lit(1)), 8).alias("avg_qty")
     )
     joined = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -3092,8 +3072,7 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
         .filter(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
     )
     return joined.agg(
-        (F.sum(F.col("l_extendedprice").cast("decimal(24,6)")) / 7.0)
-        .cast("decimal(24,6)")
+        quantize(exact_sum("l_extendedprice", 6) / 7.0, 6)
         .cast("double")
         .alias("avg_yearly")
     )
@@ -3140,11 +3119,7 @@ def tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     n = load_table(spark, sf_dir, "nation")
     thr = c.filter(F.col("c_acctbal") > 0).agg(
-        (
-            F.sum(F.col("c_acctbal").cast("decimal(18,2)")) / F.count(F.lit(1))
-        )
-        .cast("decimal(24,8)")
-        .alias("avg_bal")
+        ratio(exact_sum("c_acctbal", 2), F.count(F.lit(1)), 8).alias("avg_bal")
     )
     cutoff = o.agg(
         F.date_sub(F.max(F.col("o_orderdate").cast("date")), 180).alias(
@@ -3166,7 +3141,7 @@ def tpch_q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         dormant.groupBy("n_name")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.sum(F.col("c_acctbal").cast("decimal(18,2)"))
+            exact_sum("c_acctbal", 2)
             .cast("double")
             .alias("totacctbal"),
         )
@@ -5303,9 +5278,7 @@ _CORR_COLS = ["price", "price_lin", "cust", "maybe_null", "const_c"]
 
 
 def _corr_pair_sql(a: str, b: str) -> str:
-    # mixed 19x18 widths, mirroring operators.dq.corr_matrix: 18x18
-    # overflows DuckDB's int64-backed multiply, 19x19 overflows
-    # Spark's precision cap; 19x18 is exact in both
+    # the 19 x 18 operand widths of functions.exact.product
     dec = "CAST(ROUND({c}, 6) AS DECIMAL(18,6))"
     dec19 = "CAST(ROUND({c}, 6) AS DECIMAL(19,6))"
     xa, xb = dec.format(c=a), dec.format(c=b)

@@ -39,6 +39,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.cast import base_type_to_spark
+from component_delta_lake_writer_spark.functions.exact import exact_sum
 from component_delta_lake_writer_spark.operators import dedup as D
 from component_delta_lake_writer_spark.operators import merge as M
 from component_delta_lake_writer_spark.operators import sessions as S
@@ -131,7 +133,9 @@ def csv_scan_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         "l_returnflag",
-        F.col("l_quantity").cast("decimal(12,2)").alias("qty"),
+        F.col("l_quantity")
+        .cast(base_type_to_spark("NUMERIC", "12,2"))
+        .alias("qty"),
     )
     src.write.mode("overwrite").option("header", "false").csv(path)
     cols = [
@@ -209,11 +213,12 @@ def cast_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix string→{BIGINT,INT,DOUBLE,DECIMAL,DATE,TIMESTAMP,BOOLEAN},
     built from string forms so both engines parse the same text."""
     li = load_table(spark, sf_dir, "lineitem")
+    dec14_2 = base_type_to_spark("NUMERIC", "14,2")
     return li.select(
         F.col("l_orderkey").cast("string").cast("bigint").alias("c_bigint"),
         F.col("l_linenumber").cast("string").cast("int").alias("c_int"),
         F.col("l_quantity")
-        .cast("decimal(12,2)")
+        .cast(base_type_to_spark("NUMERIC", "12,2"))
         .cast("string")
         .cast("double")
         .alias("c_double"),
@@ -221,9 +226,9 @@ def cast_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         # DOUBLE (exact: scaled value << 2^53) because the driver's
         # hasher diverges on raw DecimalType outputs.
         F.col("l_extendedprice")
-        .cast("decimal(14,2)")
+        .cast(dec14_2)
         .cast("string")
-        .cast("decimal(14,2)")
+        .cast(dec14_2)
         .cast("double")
         .alias("c_decimal"),
         F.date_format("l_shipdate", "yyyy-MM-dd").cast("date").alias("c_date"),
@@ -263,7 +268,10 @@ def insert_select_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").cast("string").alias("_c0"),
         F.col("o_custkey").cast("string").alias("_c1"),
         F.col("o_orderstatus").alias("_c2"),
-        F.col("o_totalprice").cast("decimal(14,2)").cast("string").alias("_c3"),
+        F.col("o_totalprice")
+        .cast(base_type_to_spark("NUMERIC", "14,2"))
+        .cast("string")
+        .alias("_c3"),
         F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias("_c4"),
         F.col("o_orderpriority").alias("_c5"),
     )
@@ -422,21 +430,13 @@ def agg_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: partial agg map-side → single shuffle on the 6-value key."""
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(F.col("l_quantity").cast("decimal(20,4)"))
-        .cast("double")
-        .alias("sum_qty"),
-        F.sum(F.col("l_extendedprice").cast("decimal(20,4)"))
-        .cast("double")
-        .alias("sum_base_price"),
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                "decimal(24,6)"
-            )
-        )
+        exact_sum("l_quantity", 4).cast("double").alias("sum_qty"),
+        exact_sum("l_extendedprice", 4).cast("double").alias("sum_base_price"),
+        exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6)
         .cast("double")
         .alias("sum_disc_price"),
         F.round(
-            F.sum(F.col("l_quantity").cast("decimal(20,4)")).cast("double")
+            exact_sum("l_quantity", 4).cast("double")
             / F.count(F.lit(1)),
             6,
         ).alias("avg_qty"),
@@ -458,9 +458,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     return o.rollup("o_orderpriority", "o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(20,4)"))
-        .cast("double")
-        .alias("sum_price"),
+        exact_sum("o_totalprice", 4).cast("double").alias("sum_price"),
     )
 
 
@@ -509,7 +507,7 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.select(
         "o_custkey",
         "o_orderkey",
-        F.sum(F.col("o_totalprice").cast("decimal(20,4)"))
+        exact_sum("o_totalprice", 4)
         .over(w)
         .cast("double")
         .alias("running_spend"),
@@ -1003,7 +1001,7 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     return emb.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(SIM.norm(vec), 6).cast("decimal(18,6)"))
+        exact_sum(SIM.norm(vec), 6)
         .cast("double")
         .alias("sum_norm"),
     )

@@ -19,6 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.exact import (
+    exact_sum,
+    quantize,
+    ratio,
+)
 from component_delta_lake_writer_spark.plans.query_registry import query
 from component_delta_lake_writer_spark.tables import load_table
 
@@ -34,12 +39,7 @@ def _part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").alias("ps_partkey"),
         F.col("l_suppkey").alias("ps_suppkey"),
     ).agg(
-        F.min(
-            (
-                F.col("l_extendedprice").cast("decimal(18,2)")
-                / F.col("l_quantity").cast("decimal(18,2)")
-            ).cast("decimal(24,8)")
-        ).alias("ps_supplycost")
+        F.min(ratio("l_extendedprice", "l_quantity", 8)).alias("ps_supplycost")
     )
 
 
@@ -161,10 +161,11 @@ def tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     o = load_table(spark, sf_dir, "orders")
-    profit = (
+    profit = quantize(
         F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("p_retailprice") * F.col("l_quantity") * F.lit(0.1)
-    ).cast("decimal(25,6)")
+        - F.col("p_retailprice") * F.col("l_quantity") * F.lit(0.1),
+        6,
+    )
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
@@ -312,7 +313,7 @@ def tpch_q20_excess_volume_suppliers(spark: SparkSession, sf_dir: str) -> DataFr
         )
         .join(F.broadcast(red), li.l_partkey == red.p_partkey, "left_semi")
         .groupBy("l_suppkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("qty"))
+        .agg(exact_sum("l_quantity", 2).alias("qty"))
         .filter(F.col("qty") > 1400)
         .select("l_suppkey")
     )

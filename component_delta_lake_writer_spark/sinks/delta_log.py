@@ -1195,11 +1195,16 @@ def write_checkpoint(
         raise ValueError(f"no log entry for version {version}")
 
     # One row carries protocol, one carries metaData, one per live
-    # file, one per unexpired remove tombstone (the spec requires
-    # tombstones inside the retention window so readers reconciling
-    # against stale listings do not resurrect removed files; every
-    # tombstone since log start is kept — a superset of any retention
-    # window, and harmless to replay).
+    # file, one per unexpired remove tombstone: the spec keeps a
+    # tombstone until it is older than delta.deletedFileRetentionDuration
+    # (default one week) so readers reconciling against stale listings
+    # do not resurrect removed files, and an upsert-heavy table's
+    # checkpoint does not grow with its whole rewrite history.
+    cfg = st["metaData"].get("configuration") or {}
+    horizon = int(time.time() * 1000) - _parse_interval_ms(
+        cfg.get("delta.deletedFileRetentionDuration"), _WEEK_MS
+    )
+
     def _row(**kw) -> dict:
         row = dict.fromkeys(
             ("protocol", "metaData", "add", "remove", "txn", "domainMetadata")
@@ -1209,7 +1214,11 @@ def write_checkpoint(
 
     rows = [_row(protocol=st["protocol"]), _row(metaData=st["metaData"])]
     rows += [_row(add=add) for add in st["adds"].values()]
-    rows += [_row(remove=rm) for rm in st["removes"].values()]
+    rows += [
+        _row(remove=rm)
+        for rm in st["removes"].values()
+        if (rm.get("deletionTimestamp") or 0) >= horizon
+    ]
     rows += [_row(txn=t) for t in st["txns"].values()]
     rows += [_row(domainMetadata=d) for d in st["domains"].values()]
 
@@ -1516,10 +1525,15 @@ def maybe_write_checkpoint(
     return None
 
 
-def _parse_interval_ms(spec: str | None) -> int:
+_WEEK_MS = 7 * 24 * 3600 * 1000
+
+
+def _parse_interval_ms(
+    spec: str | None, default: int = 30 * 24 * 3600 * 1000
+) -> int:
     """Delta duration properties: ``interval <n> <unit>`` (also bare
-    ``<n> <unit>``); unknown/absent => the 30-day default."""
-    default = 30 * 24 * 3600 * 1000
+    ``<n> <unit>``); unknown/absent => ``default`` (30 days, Delta's
+    log retention)."""
     if not spec:
         return default
     parts = str(spec).strip().lower().split()

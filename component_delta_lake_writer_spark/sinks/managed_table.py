@@ -248,6 +248,27 @@ class Commit:
 _COMMIT_FIELDS = {f.name for f in fields(Commit)}
 
 
+def _drop_empty_first_file(unit_dir: str) -> None:
+    """Spark keeps the file of an empty first input partition (so an
+    all-empty write still records its schema). Beside files with rows
+    it would commit as a 0-record add: remove it and its checksum."""
+    import pyarrow.parquet as pq
+
+    names = [
+        n for n in os.listdir(unit_dir)
+        if n.startswith("part-") and n.endswith(".parquet")
+    ]
+    first = [n for n in names if n.startswith("part-00000-")]
+    if len(names) < 2 or len(first) != 1:
+        return
+    path = os.path.join(unit_dir, first[0])
+    if pq.ParquetFile(path).metadata.num_rows == 0:
+        os.remove(path)
+        crc = os.path.join(unit_dir, f".{first[0]}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+
+
 def _dv_unit(rel: str) -> str:
     """Data unit of a table-relative parquet path (``_data/<unit>/…``)."""
     return rel.split("/", 2)[1]
@@ -1197,7 +1218,9 @@ class ManagedTable:
             writer = writer.option("parquet.page.size", str(page_size))
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(self._data_dir, unit))
+        unit_dir = os.path.join(self._data_dir, unit)
+        writer.parquet(unit_dir)
+        _drop_empty_first_file(unit_dir)
         # caches registered upstream (identity assignment pins its
         # input so __mid stays stable between the count collect and
         # this write) are no longer needed once the unit is on disk —

@@ -16,10 +16,10 @@ PK upsert. Groups whose count reaches zero stay as tombstone rows
 (n_rows = 0) filtered at read time — strictly O(delta) maintenance
 with no per-group DELETE pass; optimize() compacts them away.
 
-Exactness: sums accumulate as ``round(expr, 6)::DECIMAL(28,6)`` (the
-registry's round→decimal idiom) so incremental adds/subtracts are
-bit-exact against a full recompute — float sums would drift and the
-two paths could never be differentially tested.
+Exactness: sums accumulate as exact 6-digit fixed-point values
+(``functions.exact``) stored as ``exact.accumulator`` so incremental
+adds/subtracts are bit-exact against a full recompute — float sums
+would drift and the two paths could never be differentially tested.
 
 Fallback: any range the CDF cannot attribute (overwrite/restore/DML
 crossings, pre-images missing while updates occurred) degrades to a
@@ -32,6 +32,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from component_delta_lake_writer_spark.errors import UserException
+from component_delta_lake_writer_spark.functions.exact import (
+    accumulator,
+    exact_sum,
+    quantize,
+)
 from component_delta_lake_writer_spark.sinks.managed_table import ManagedTable
 
 _VERSION_PROP = "mv_source_version"
@@ -47,7 +52,7 @@ class IncrementalAggregate:
         sums: dict[str, str] | None = None,
     ):
         """``sums`` maps output column name → source SQL expression;
-        each is maintained as an exact DECIMAL(28,6) sum alongside the
+        each is maintained as an exact 6-digit sum alongside the
         ``n_rows`` count. Group-key columns must be non-null (they are
         the materialized table's primary key)."""
         if not group_by:
@@ -60,13 +65,9 @@ class IncrementalAggregate:
 
     # ---------- aggregation shapes ----------
 
-    def _sum_expr(self, expr: str):
-        return F.round(F.expr(expr), 6).cast("decimal(28,6)")
-
     def _compute_full(self, df: DataFrame) -> DataFrame:
         aggs = [F.count(F.lit(1)).cast("long").alias("n_rows")] + [
-            # sum(decimal(28,6)) widens to (38,6); pin the stored type
-            F.sum(self._sum_expr(e)).cast("decimal(28,6)").alias(name)
+            accumulator(exact_sum(F.expr(e), 6), 6).alias(name)
             for name, e in self.sums.items()
         ]
         return df.groupBy(*self.group_by).agg(*aggs)
@@ -84,9 +85,9 @@ class IncrementalAggregate:
             .otherwise(F.lit(0))
         )
         aggs = [F.sum(sign).cast("long").alias("_dn")] + [
-            F.sum(sign.cast("decimal(28,6)") * self._sum_expr(e))
-            .cast("decimal(28,6)")
-            .alias(f"_d_{name}")
+            accumulator(F.sum(sign * quantize(F.expr(e), 6)), 6).alias(
+                f"_d_{name}"
+            )
             for name, e in self.sums.items()
         ]
         return changes.groupBy(*self.group_by).agg(*aggs)
@@ -132,21 +133,15 @@ class IncrementalAggregate:
             .cast("long")
             .alias("n_rows"),
             *[
-                (
-                    F.coalesce(
-                        F.col(name), F.lit(0).cast("decimal(28,6)")
-                    )
+                accumulator(
+                    F.coalesce(F.col(name), F.lit(0))
                     # the DELTA coalesces too: a group whose change
                     # rows all carry NULL for this sum yields a NULL
                     # delta, and NULL + current would null the stored
                     # aggregate (a full recompute ignores NULLs)
-                    + F.coalesce(
-                        F.col(f"_d_{name}"),
-                        F.lit(0).cast("decimal(28,6)"),
-                    )
-                )
-                .cast("decimal(28,6)")
-                .alias(name)
+                    + F.coalesce(F.col(f"_d_{name}"), F.lit(0)),
+                    6,
+                ).alias(name)
                 for name in self.sums
             ],
         )

@@ -19,6 +19,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.exact import exact_sum
 from component_delta_lake_writer_spark.operators.sessions import hourly_rollup
 from component_delta_lake_writer_spark.session import local_relation
 from component_delta_lake_writer_spark.tables import ts_tz_expr, ts_us_expr
@@ -375,7 +376,7 @@ def stream_static_enrich(
     agg = enriched.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(
-            F.sum(F.col("value").cast("decimal(20,4)")).cast("double"), 4
+            exact_sum("value", 4).cast("double"), 4
         ).alias("sum_value"),
     )
     return _drain_to_memory(

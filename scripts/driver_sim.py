@@ -8,11 +8,16 @@ array/struct/map output columns.
 
 Usage: python scripts/driver_sim.py [N] [--keys k1,k2,...] [--sf DIR]
 
-Per-key results go to .bench_out/driver_sim_out.json (gitignored).
+Per-key results go to .bench_out/driver_sim_out.json (gitignored),
+each with ``rows_sha`` (SHA-256 of the canonicalised, sorted collected
+rows) and ``schema_sha`` (SHA-256 of the output schema). Two trees'
+outputs diff key by key: the row-level identity proof a refactor
+gives.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import sys
 import time
@@ -24,7 +29,7 @@ sys.path.insert(0, str(ROOT))
 from pyspark.sql import SparkSession, types as T  # noqa: E402
 
 from component_delta_lake_writer_spark.plans import ORACLES, QUERIES  # noqa: E402
-from tests.oracle import compare, duckdb_conn  # noqa: E402
+from tests.oracle import canonical_rows, compare, duckdb_conn  # noqa: E402
 
 # per-probe wall-clock ceiling in a SEQUENTIAL sim run. The driver's
 # own budget is ~10 s under parallel load; keys here run one at a
@@ -32,6 +37,10 @@ from tests.oracle import compare, duckdb_conn  # noqa: E402
 # contention headroom (r8: stream_cdf_source sat at 9.41 s and only
 # the judge noticed).
 PROBE_CEILING_S = 10.0
+
+
+def _sha(obj) -> str:
+    return hashlib.sha256(json.dumps(obj).encode()).hexdigest()
 
 
 def main() -> None:
@@ -69,6 +78,7 @@ def main() -> None:
     t_all = time.time()
     for key in keys:
         t0 = time.time()
+        rows_sha = schema_sha = None
         try:
             df = QUERIES[key](spark, sf_dir)
             for f in df.schema.fields:
@@ -76,18 +86,26 @@ def main() -> None:
                     raise AssertionError(
                         f"non-scalar output column {f.name}: {f.dataType.simpleString()}"
                     )
+            schema_sha = _sha(df.schema.jsonValue())
             if key in ORACLES:
-                compare(df, con, ORACLES[key], key)
+                rows = compare(df, con, ORACLES[key], key)
                 status = "pass"
             else:
-                cnt = df.count()
-                status = f"rows-only:{cnt}"
+                rows = canonical_rows(df.columns, df.collect())
+                status = f"rows-only:{len(rows)}"
+            rows_sha = _sha(rows)
             err = None
         except Exception as e:  # noqa: BLE001
             status = "FAIL"
             err = f"{type(e).__name__}: {e}"
         dt_s = time.time() - t0
-        results[key] = {"status": status, "sec": round(dt_s, 2), "err": err}
+        results[key] = {
+            "status": status,
+            "sec": round(dt_s, 2),
+            "err": err,
+            "rows_sha": rows_sha,
+            "schema_sha": schema_sha,
+        }
         print(f"{key:40s} {status:12s} {dt_s:6.2f}s" + (f"  {err[:160]}" if err else ""), flush=True)
 
     total = time.time() - t_all

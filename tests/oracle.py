@@ -100,9 +100,21 @@ def _empty_ok(key: str) -> bool:
     return key in EMPTY_OK
 
 
+def canonical_rows(scols: list[str], srows) -> list[tuple]:
+    """Sorted, canonically normalised rows with columns in case-folded
+    name order: the value multiset the comparison (and the identity
+    digest of ``scripts/driver_sim.py``) is taken over."""
+    order = sorted(range(len(scols)), key=lambda i: scols[i].lower())
+    return sorted(
+        tuple(_norm(row[i]) for i in order) for row in (tuple(r) for r in srows)
+    )
+
+
 def compare(
     spark_df, con, oracle_sql: str, key: str = "?", empty_ok: bool | None = None
-) -> None:
+) -> list[tuple]:
+    """Assert the Spark result equals the oracle's; return the Spark
+    side's canonical rows."""
     assert_no_decimal_output(spark_df, key)
     scols = spark_df.columns
     srows = spark_df.collect()
@@ -133,12 +145,8 @@ def compare(
         orows
     ), f"[{key}] row count mismatch: spark={len(srows)} oracle={len(orows)}"
 
-    s_order = sorted(range(len(scols)), key=lambda i: scols[i].lower())
-    o_order = sorted(range(len(ocols)), key=lambda i: ocols[i].lower())
-    s_set = sorted(
-        tuple(_norm(row[i]) for i in s_order) for row in (tuple(r) for r in srows)
-    )
-    o_set = sorted(tuple(_norm(row[i]) for i in o_order) for row in orows)
+    s_set = canonical_rows(scols, srows)
+    o_set = canonical_rows(ocols, orows)
     if s_set != o_set:
         diffs = [
             (a, b) for a, b in zip(s_set, o_set) if a != b
@@ -146,3 +154,4 @@ def compare(
         raise AssertionError(
             f"[{key}] value mismatch; first diffs (spark vs oracle): {diffs}"
         )
+    return s_set

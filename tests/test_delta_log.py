@@ -414,14 +414,18 @@ def test_protocol_upgrade_merge_is_monotonic_max():
 
 
 def _try_duckdb_delta():
-    """Probe: DuckDB's delta extension needs a network download —
-    unavailable in this sandbox (documented in the test that uses
-    this). Returns a connection with the extension loaded, or None."""
+    """Probe: DuckDB's delta extension, if it is already installed (the
+    probe never downloads it). Returns a connection with the extension
+    loaded, or None."""
     import duckdb
 
     try:
-        con = duckdb.connect()
-        con.execute("INSTALL delta")
+        con = duckdb.connect(
+            config={
+                "autoinstall_known_extensions": False,
+                "autoload_known_extensions": False,
+            }
+        )
         con.execute("LOAD delta")
         return con
     except Exception:
@@ -2303,3 +2307,54 @@ def test_column_mapping_dv_checkpoint_composite(spark, tmp_path):
     # rename survives another rewrite + read after MORE commits
     t.optimize()                                      # v6: DVs fold in
     assert _pairs(read_delta_table(spark, t.path)) == _pairs(t.read())
+
+
+def test_checkpoint_expires_old_tombstones(spark, tmp_path):
+    """A checkpoint keeps remove tombstones inside
+    delta.deletedFileRetentionDuration (default one week) and drops
+    older ones; the checkpoint-aware external reader and time travel
+    read the same rows."""
+    import time
+
+    import pyarrow.parquet as pq
+
+    from component_delta_lake_writer_spark.sinks.delta_log import (
+        read_delta_table,
+        write_checkpoint,
+    )
+
+    t = ManagedTable(spark, str(tmp_path / "t"))
+    for lo in (0, 10, 20):  # v1 removes v0's file, v2 removes v1's
+        t.write(
+            spark.range(lo, lo + 3, numPartitions=1).select(
+                F.col("id").alias("k")
+            ),
+            mode="overwrite",
+        )
+    log = os.path.join(t.path, "_delta_log")
+    eight_days = 8 * 24 * 3600 * 1000
+    v1 = os.path.join(log, f"{1:020d}.json")
+    with open(v1) as fh:
+        actions = [json.loads(line) for line in fh]
+    expired = []
+    for a in actions:
+        if "remove" in a:
+            a["remove"]["deletionTimestamp"] = int(time.time() * 1000) - eight_days
+            expired.append(a["remove"]["path"])
+    with open(v1, "w") as fh:
+        fh.writelines(json.dumps(a) + "\n" for a in actions)
+    with open(os.path.join(log, f"{2:020d}.json")) as fh:
+        in_window = [a["remove"]["path"] for a in map(json.loads, fh) if "remove" in a]
+    assert expired and in_window
+
+    cp = pq.read_table(write_checkpoint(t.path, 2)).column("remove").to_pylist()
+    assert sorted(r["path"] for r in cp if r) == sorted(in_window)
+
+    fresh = ManagedTable(spark, t.path)
+    assert sorted(r.k for r in read_delta_table(spark, t.path).collect()) == [
+        20, 21, 22
+    ]
+    assert sorted(r.k for r in fresh.read().collect()) == [20, 21, 22]
+    assert sorted(r.k for r in fresh.read(version=1).collect()) == [10, 11, 12]
+    assert sorted(r.k for r in fresh.read(version=0).collect()) == [0, 1, 2]
+    assert _replayed(t.path)[0] == replay_delta_log(t.path)[0]

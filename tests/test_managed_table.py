@@ -2318,3 +2318,49 @@ def test_commit_faults_leave_prior_or_new_version(spark, tmp_path_str):
         b._publish(replace(prev, version=prev.version + 1), prev)
     b.write(_kv(spark, 201, 202), mode="append")  # retries past it
     assert engine_rows() == {**model, 200: 2000, 201: 2010}
+
+
+def test_append_commits_no_empty_files(spark, tmp_path_str):
+    """An append whose first input partition is empty commits only the
+    files with rows, and leaves no 0-row file (or its checksum) on
+    disk."""
+    import json
+
+    t = ManagedTable(spark, tmp_path_str + "/t")
+    # 3 rows over 8 partitions: partition 0 is empty
+    t.write(spark.range(10, 13, numPartitions=8), mode="append")
+    log = os.path.join(t.path, "_delta_log", f"{0:020d}.json")
+    with open(log) as fh:
+        adds = [a["add"] for a in map(json.loads, fh) if "add" in a]
+    assert [json.loads(a["stats"])["numRecords"] for a in adds] == [1, 1, 1]
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), t.path)
+        for d, _, fs in os.walk(os.path.join(t.path, "_data"))
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    assert on_disk == {a["path"] for a in adds}
+    crcs = [
+        f
+        for _, _, fs in os.walk(os.path.join(t.path, "_data"))
+        for f in fs
+        if f.endswith(".parquet.crc")
+    ]
+    assert len(crcs) in (0, len(adds))
+    assert sorted(r.id for r in t.read().collect()) == [10, 11, 12]
+
+
+def test_empty_dataframe_write_gives_typed_empty_table(spark, tmp_path_str):
+    t = ManagedTable(spark, tmp_path_str + "/t")
+    empty = spark.range(0, 0, numPartitions=4).select(
+        F.col("id").alias("k"), F.lit("x").alias("s")
+    )
+    t.write(empty, mode="overwrite")
+    got = ManagedTable(spark, t.path).read()
+    assert got.count() == 0
+    assert got.schema.simpleString() == "struct<k:bigint,s:string>"
+    t.write(
+        spark.range(2).select(F.col("id").alias("k"), F.lit("y").alias("s")),
+        mode="append",
+    )
+    assert sorted(r.k for r in t.read().collect()) == [0, 1]
