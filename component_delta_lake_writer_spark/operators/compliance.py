@@ -102,8 +102,9 @@ def _audit_file(
 
 
 def list_parquet_files(table_dir: str) -> list[str]:
-    """Every .parquet under the WHOLE table directory — data units,
-    _changes, _change_data; sorted for determinism."""
+    """Every .parquet under the WHOLE table directory — data units and
+    the change-data-feed files in _change_data (one copy each); sorted
+    for determinism."""
     out: list[str] = []
     for root, _dirs, files in os.walk(table_dir):
         for fn in files:

@@ -3908,12 +3908,12 @@ def range_join_busy_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cdf_external_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """External CDF interop (Delta cdc actions): a MERGE then a
-    DELETE on a CDF-enabled table mirror their change sets as
-    hardlinked ``_change_data/`` files referenced by ``cdc`` actions;
-    the probe reconstructs table_changes from the MIRROR ALONE
+    DELETE on a CDF-enabled table write their change sets once as
+    ``_change_data/`` files named by ``cdc`` actions; the probe
+    reconstructs table_changes from the LOG ALONE
     (sinks.delta_log.read_delta_table_changes) — never consulting
-    the engine or ``_changes`` — and the oracle fully predicts both
-    versions' attributed rows."""
+    the engine — and the oracle fully predicts both versions'
+    attributed rows."""
     import shutil
 
     from component_delta_lake_writer_spark.sinks import ManagedTable

@@ -1598,15 +1598,14 @@ def set_tblproperties_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice", F.lit(-1.0)
     )
     t.upsert(b1, ["o_orderkey"])
-    v_on = t.latest_commit().version
-    assert os.path.isdir(os.path.join(t.path, "_changes", f"v{v_on}"))
+    on = t.latest_commit().cdc_files
+    assert on and all(os.path.isfile(os.path.join(t.path, f)) for f in on)
     t.set_properties(unset=["enableChangeDataFeed"])
     b2 = o.filter(F.col("o_orderkey") % 13 == 0).withColumn(
         "o_totalprice", F.lit(-2.0)
     )
     t.upsert(b2, ["o_orderkey"])
-    v_off = t.latest_commit().version
-    assert not os.path.isdir(os.path.join(t.path, "_changes", f"v{v_off}"))
+    assert not t.latest_commit().cdc_files
     return t.read()
 
 

@@ -21,6 +21,8 @@ delta extension) read the same ``_delta_log/``:
   layout Spark wrote (the same layout delta-rs produces)
 - ``txn``, ``domainMetadata`` and ``commitInfo`` for writer
   watermarks, table-level state and the commit clock
+- ``cdc`` actions naming a change-data-feed commit's change files
+  under ``_change_data/`` — the one copy of its change rows
 - ``{version}.crc`` checksums, Parquet checkpoints every 10 commits
   (classic, multi-part or v2) and optional minor log compactions
 
@@ -779,14 +781,6 @@ def read_delta_table(spark, table_path: str):
     typed literals. Plan size is O(#distinct live partition tuples),
     the same shape any log-driven reader produces before engine-side
     scan planning."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from component_delta_lake_writer_spark.session import local_relation
-    from component_delta_lake_writer_spark.sinks.deletion_vectors import (
-        read_dv,
-    )
-
     # Forward-compatibility gate (the spec's FIRST reader rule): a
     # reader must refuse tables whose protocol demands a reader
     # version or reader feature it does not implement — guessing
@@ -804,20 +798,38 @@ def read_delta_table(spark, table_path: str):
             raise ValueError(
                 f"unsupported reader features: {sorted(unknown)}"
             )
-    files = sorted(st["adds"])
-    schema_str = st["metaData"]["schemaString"]
-    pcols = st["metaData"]["partitionColumns"]
-    dvs = {
-        p: a["deletionVector"]
-        for p, a in st["adds"].items()
-        if a.get("deletionVector") is not None
-    }
-    sj = json.loads(schema_str)
+    return _read_files(
+        spark, table_path, st["adds"],
+        json.loads(st["metaData"]["schemaString"]),
+        st["metaData"]["partitionColumns"],
+    )
+
+
+def _read_files(spark, table_path: str, adds: dict, sj: dict, pcols):
+    """Scan the files ``adds`` maps ({fs path: add action}) as the
+    logical columns of schema JSON ``sj``: physical names resolved
+    through ``delta.columnMapping.physicalName``, the positions a
+    ``deletionVector`` marks skipped, partition values (``pcols``)
+    taken from ``partitionValues``."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from component_delta_lake_writer_spark.session import local_relation
+    from component_delta_lake_writer_spark.sinks.deletion_vectors import (
+        read_dv,
+    )
+
     logical = T.StructType.fromJson(sj)
     if pcols:
         return _read_partitioned(
-            spark, table_path, st["adds"], sj, logical, pcols, read_dv
+            spark, table_path, adds, sj, logical, pcols, read_dv
         )
+    files = sorted(adds)
+    dvs = {
+        p: a["deletionVector"]
+        for p, a in adds.items()
+        if a.get("deletionVector") is not None
+    }
     phys_names = [
         (f.get("metadata") or {}).get(
             "delta.columnMapping.physicalName", f["name"]
@@ -1566,11 +1578,13 @@ def read_delta_table_changes(
     to_version: int | None = None,
 ):
     """External table_changes (Delta CDF): compute the changed rows of
-    commits in (from_version, to_version] FROM THE MIRROR ALONE —
-    ``cdc`` actions when a commit carries them (the spec's signal that
-    add/remove derivation is wrong for it), else adds with
-    ``dataChange=true`` read as inserts. Returns the table columns +
-    ``_change_type`` + ``_commit_version`` — what
+    commits in (from_version, to_version] FROM THE LOG ALONE — the
+    files of a commit's ``cdc`` actions when it carries them (the
+    spec's signal that add/remove derivation is wrong for it), else
+    adds with ``dataChange=true`` read as inserts. Columns resolve
+    through the range end's schema exactly as ``read_delta_table``
+    resolves them (``delta.columnMapping.physicalName``). Returns the
+    table columns + ``_change_type`` + ``_commit_version`` — what
     ``table_changes(t, v)`` yields minus the wall-clock timestamp
     column. Raises on a changing commit that neither carries cdc
     actions nor is derivable (a rewrite without CDF enabled), like
@@ -1600,49 +1614,44 @@ def read_delta_table_changes(
             f"log entries for versions {missing[:5]}… were cleaned up "
             "(metadata retention); start from a retained version"
         )
+    md = _replay_state(table_path, versions[-1])["metaData"]
+    sj = json.loads(md["schemaString"])
+    # change files store every column, partition columns included,
+    # plus _change_type
+    cdc_sj = {**sj, "fields": sj["fields"] + [{
+        "name": "_change_type", "type": "string", "nullable": True,
+        "metadata": {},
+    }]}
     out = None
-
-    def _with_meta(df, ct: str | None, v: int):
-        if ct is not None:
-            df = df.withColumn("_change_type", F.lit(ct))
-        return df.withColumn("_commit_version", F.lit(v).cast("long"))
-
     for v in versions:
         actions = _read_version_actions(log_dir, v)
-        cdc = [a["cdc"] for a in actions if "cdc" in a]
+        cdc = {
+            _decode_path(a["cdc"]["path"]): a["cdc"]
+            for a in actions if "cdc" in a
+        }
         if cdc:
-            files = [
-                os.path.join(table_path, _decode_path(c["path"]))
-                for c in cdc
-            ]
-            df = _with_meta(spark.read.parquet(*files), None, v)
+            df = _read_files(spark, table_path, cdc, cdc_sj, [])
         else:
-            adds = [
-                a["add"]
+            if any(
+                "remove" in a and a["remove"].get("dataChange", True)
                 for a in actions
-                if "add" in a and a["add"].get("dataChange", True)
-            ]
-            removes = [
-                a["remove"]
-                for a in actions
-                if "remove" in a
-                and a["remove"].get("dataChange", True)
-            ]
-            if removes:
+            ):
                 raise ValueError(
                     f"version {v} removes data without cdc actions — "
                     "not derivable (enable delta.enableChangeDataFeed)"
                 )
+            adds = {
+                _decode_path(a["add"]["path"]): a["add"]
+                for a in actions
+                if "add" in a and a["add"].get("dataChange", True)
+            }
             if not adds:
                 continue  # metadata-only commit
-            files = [
-                os.path.join(table_path, _decode_path(a["path"]))
-                for a in adds
-            ]
-            df = _with_meta(spark.read.parquet(*files), "insert", v)
-        out = df if out is None else out.unionByName(
-            df, allowMissingColumns=True
-        )
+            df = _read_files(
+                spark, table_path, adds, sj, md["partitionColumns"]
+            ).withColumn("_change_type", F.lit("insert"))
+        df = df.withColumn("_commit_version", F.lit(v).cast("long"))
+        out = df if out is None else out.unionByName(df)
     if out is None:
         raise ValueError(
             f"no data-changing commits after version {from_version}"
@@ -1832,6 +1841,7 @@ def _empty_state(tombstones: bool = False) -> dict:
         "txns": {},
         "domains": {},
         "commitInfo": None,
+        "cdc": [],
     }
 
 
@@ -1848,7 +1858,7 @@ def _apply_actions(
     keyed by path, and keeping the file's position keeps the snapshot's
     file order a pure function of the log."""
     state["version"] = version
-    state["commitInfo"] = None
+    state["commitInfo"], state["cdc"] = None, []
     adds, removes = state["adds"], state["removes"]
     readded = {
         a["add"]["path"]: i for i, a in enumerate(actions) if "add" in a
@@ -1881,9 +1891,18 @@ def _apply_actions(
             state["domains"][a["domainMetadata"]["domain"]] = (
                 a["domainMetadata"]
             )
-        elif "commitInfo" in a:
-            state["commitInfo"] = a["commitInfo"]
+        else:
+            _apply_entry_meta(state, a)
     return None if md_changed else touched
+
+
+def _apply_entry_meta(state: dict, a: dict) -> None:
+    """Record one action that describes its version alone: the
+    ``commitInfo``, or a ``cdc`` file's fs path."""
+    if "commitInfo" in a:
+        state["commitInfo"] = a["commitInfo"]
+    elif "cdc" in a:
+        state["cdc"].append(_decode_path(a["cdc"]["path"]))
 
 
 def _checkpoints(log_dir: str) -> dict[int, dict]:
@@ -1986,23 +2005,24 @@ def _load_checkpoint(log_dir: str, last: dict, state: dict) -> None:
     for path in _checkpoint_part_paths(log_dir, last):
         load(path)
     state["version"] = int(last["version"])
-    state["commitInfo"] = _commit_info(log_dir, state["version"])
+    _load_entry_meta(log_dir, state)
 
 
-def _commit_info(log_dir: str, version: int) -> dict | None:
-    """The commitInfo of one version (None once its entry is gone) —
-    a checkpoint or a compacted range does not carry it. Only that
-    line is parsed: the entry of a CONVERT lists every file."""
+def _load_entry_meta(log_dir: str, state: dict) -> None:
+    """Set the commitInfo and cdc paths of ``state``'s version from its
+    own entry (none once the entry is gone) — a checkpoint or a
+    compacted range carries neither. Only those lines are parsed: the
+    entry of a CONVERT lists every file."""
+    state["commitInfo"], state["cdc"] = None, []
     try:
-        with open(os.path.join(log_dir, f"{version:020d}.json")) as f:
+        with open(
+            os.path.join(log_dir, f"{state['version']:020d}.json")
+        ) as f:
             for line in f:
-                if '"commitInfo"' in line[:16]:
-                    a = json.loads(line)
-                    if "commitInfo" in a:
-                        return a["commitInfo"]
+                if '"commitInfo"' in line[:16] or '"cdc"' in line[:9]:
+                    _apply_entry_meta(state, json.loads(line))
     except FileNotFoundError:
         pass
-    return None
 
 
 def _replay_steps(
@@ -2052,7 +2072,7 @@ def _replay_steps(
                 touched = _apply_actions(
                     state, [json.loads(line) for line in f], end
                 )
-            state["commitInfo"] = _commit_info(log_dir, end)
+            _load_entry_meta(log_dir, state)
             v = end
             yield state, touched
             continue

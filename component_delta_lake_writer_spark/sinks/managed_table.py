@@ -101,13 +101,11 @@ _BOOLEAN_PROPERTIES = {
 _MAT_ROW_ID = "_rt_mat_row_id"
 _MAT_RCV = "_rt_mat_rcv"
 
-# Change-feed action classification — canonical definitions live in
-# the light sinks.cdf_actions module (the streaming source's Python
-# workers import THAT, not this 5k-line engine); re-exported here so
-# batch read_changes and existing importers keep one name.
-from component_delta_lake_writer_spark.sinks.cdf_actions import (  # noqa: E402,F401
-    CDF_CHANGE_SET_ACTIONS,
-    CDF_METADATA_ONLY_ACTIONS,
+# Change-feed classification lives in the light sinks.cdf_actions
+# module, shared with the streaming source (whose Python workers import
+# it, not this 5k-line engine).
+from component_delta_lake_writer_spark.sinks.cdf_actions import (  # noqa: E402
+    commit_changes,
 )
 
 _OPERATION_NAMES = {
@@ -243,6 +241,11 @@ class Commit:
     # new data is simply unclustered until the next OPTIMIZE); the
     # delta.clustering domainMetadata. [] = never clustered.
     clustered_by: list = field(default_factory=list)
+    # Change data feed: table-relative paths of THIS version's change
+    # files (under _change_data/, physical column names plus
+    # _change_type) — its cdc actions. Never carried forward; a
+    # version without them has its changes derived from its adds.
+    cdc_files: list = field(default_factory=list)
 
 
 _COMMIT_FIELDS = {f.name for f in fields(Commit)}
@@ -433,7 +436,7 @@ class ManagedTable:
         fold the adds' Delta stats; deletion vectors and row ids are the
         adds' own fields; metaData carries schema, partitioning, column
         mapping, properties and primary key; txn / domainMetadata /
-        commitInfo carry the rest. Given ``prev`` (the view of the
+        commitInfo / cdc carry the rest. Given ``prev`` (the view of the
         state before ``touched`` changed), only the touched units are
         rebuilt and the others' stats dicts are shared with ``prev``
         (a Commit is never mutated once built): a full rebuild parses
@@ -535,18 +538,34 @@ class ManagedTable:
                     "clusteringColumns", []
                 )
             ],
+            cdc_files=list(state["cdc"]),
         )
 
     def _publish(
         self,
         commit: Commit,
         prev: Commit | None = None,
-        cdc_stage: str | None = None,
+        cdc_files: list[tuple[str, int]] = (),
     ) -> Commit:
         """Commit ``commit`` (built against ``prev``, the snapshot it
         was read from) as the next log entry and return it as the
         snapshot now stands — the view of the log every later reader
-        replays, which replaces ``commit``'s own bookkeeping."""
+        replays, which replaces ``commit``'s own bookkeeping.
+
+        ``cdc_files``: the change files this commit wrote
+        (``_write_change_files``), which become its cdc actions. A
+        commit refused here, or beaten to its version, removes them:
+        no entry names them."""
+        try:
+            return self._publish_entry(commit, prev, cdc_files)
+        except UserException:
+            for d in {os.path.dirname(rel) for rel, _size in cdc_files}:
+                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+            raise
+
+    def _publish_entry(
+        self, commit: Commit, prev: Commit | None, cdc_files
+    ) -> Commit:
         # delta.appendOnly (Delta's append-only table property): any
         # commit that logically deletes or replaces rows is refused —
         # removed units, new deletion vectors, and DML/
@@ -567,13 +586,6 @@ class ManagedTable:
                     "delta.appendOnly forbids deletes, updates, and "
                     f"rewrites (refused {commit.action!r} commit)."
                 )
-        # ``cdc_stage``: a change set written PRE-publish to a unique
-        # staging dir (CDF paths). Its files become Delta cdc actions
-        # (hardlinked _change_data/ files) inside THIS commit's log
-        # entry, the only place the spec allows them, and the winner
-        # of the version claim adopts the stage as _changes/v{N} —
-        # only the winner owns vN. Losers clean their stage up in the
-        # caller.
         # Writer-state carry (txn watermarks, ingest log): merged here
         # centrally so every commit path — DML, optimize, DDL —
         # preserves them without threading the fields through all 17
@@ -686,19 +698,6 @@ class ManagedTable:
                 (_empty_state(), None) if prev is None
                 else self._snapshot(prev.version)
             )
-            # CDF interop: the staged change files are hardlinked into
-            # _change_data/ under names unique to this writer and
-            # referenced by cdc actions in this commit's entry (external
-            # table_changes readers); a writer that loses the version
-            # claim unlinks them. Column-mapped tables skip the links
-            # (change files carry logical names, the log's schema
-            # physical ones) — engine CDF still works; the gap is
-            # documented.
-            cdc_files = (
-                self._link_change_data(commit.version, cdc_stage)
-                if cdc_stage is not None and not commit.column_mapping
-                else []
-            )
             actions = self._log_actions(commit, prev, state, cdc_files)
             try:
                 touched = write_delta_log_entry(
@@ -706,19 +705,11 @@ class ManagedTable:
                 )
                 new = self._view(state, base, touched)
             except UserException:  # lost the claim; state untouched
-                for rel, _size in cdc_files:
-                    os.unlink(os.path.join(self.path, rel))
                 raise
             except BaseException:
                 self._snap = None  # claimed: the memo's state advanced
                 raise
             self._remember(state, new)
-        if cdc_stage is not None:
-            # the version's winner adopts the staged change set as
-            # _changes/v{N} (batch read_changes and the stream read it)
-            owned = os.path.join(self._changes_dir, f"v{commit.version}")
-            os.makedirs(os.path.dirname(owned), exist_ok=True)
-            os.rename(cdc_stage, owned)
         # Delta protocol checkpointing: every 10th version materializes
         # the snapshot state so readers stop replaying the whole log
         maybe_write_checkpoint(
@@ -750,31 +741,6 @@ class ManagedTable:
             except (OSError, ValueError):
                 pass  # best-effort read optimization
         return new
-
-    def _link_change_data(
-        self, version: int, stage: str
-    ) -> list[tuple[str, int]]:
-        """Hardlink (cross-device: copy) every parquet file of a staged
-        change set into ``_change_data/`` → [(table-relative path,
-        size)]."""
-        out: list[tuple[str, int]] = []
-        tag = uuid.uuid4().hex[:12]
-        for dp, _d, fns in os.walk(stage):
-            for fn in sorted(fns):
-                if not fn.endswith(".parquet"):
-                    continue
-                rel = os.path.join(
-                    "_change_data",
-                    f"cdc-{version:020d}-{tag}{len(out):05d}.parquet",
-                )
-                dst = os.path.join(self.path, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                try:
-                    os.link(os.path.join(dp, fn), dst)
-                except OSError:
-                    shutil.copy2(os.path.join(dp, fn), dst)
-                out.append((rel, os.stat(dst).st_size))
-        return out
 
     def _assign_row_ids(self, commit: Commit, prev: Commit | None) -> None:
         """Populate ``commit.row_ids``/``row_id_high_water`` under row
@@ -2151,21 +2117,25 @@ class ManagedTable:
         )
         return self._publish(commit, prev)
 
-    def _write_empty_change_set(
-        self, prev: Commit, version: int, out_dir: str | None = None
-    ) -> None:
-        """A schema-correct EMPTY ``_changes/vN`` set: written when a
-        CDF-enabled DML commit touched no rows (stats pruned every
-        unit) so both the batch ``read_changes`` range and the
-        streaming source can cross the version instead of raising."""
-        schema = T.StructType.fromJson(json.loads(prev.schema_json)).add(
-            "_change_type", T.StringType()
-        )
-        local_relation(self.spark, schema).write.mode(
-            "overwrite"
-        ).parquet(
-            out_dir or os.path.join(self._changes_dir, f"v{version}")
-        )
+    def _write_change_files(
+        self, changes: DataFrame, mapping: dict
+    ) -> list[tuple[str, int]]:
+        """Write one commit's change rows (its columns plus
+        ``_change_type``) once, under physical column names, into a
+        directory of this writer's own under ``_change_data/`` →
+        [(table-relative path, size)], the commit's cdc actions."""
+        rel_dir = os.path.join("_change_data", uuid.uuid4().hex)
+        out = os.path.join(self.path, rel_dir)
+        try:
+            self._to_physical(changes, mapping).write.parquet(out)
+        except BaseException:
+            shutil.rmtree(out, ignore_errors=True)
+            raise
+        return [
+            (os.path.join(rel_dir, fn), os.path.getsize(os.path.join(out, fn)))
+            for fn in sorted(os.listdir(out))
+            if fn.endswith(".parquet")
+        ]
 
     @staticmethod
     def _to_physical(df: DataFrame, mapping: dict) -> DataFrame:
@@ -2950,12 +2920,9 @@ class ManagedTable:
             )
             # CDF: persist this commit's change set (inserts + the
             # update post-images the MERGE actually applied) so
-            # read_changes can attribute across upserts. STAGED before
-            # the publish (unique dir — concurrent writers never
-            # collide) and adopted as _changes/vN by the version
-            # claim's WINNER inside _publish, which also mirrors it as
-            # Delta cdc actions in this commit's log entry. Gated on
-            # the table property ``enableChangeDataFeed`` exactly like
+            # read_changes can attribute across upserts, written before
+            # the publish and named by this commit's cdc actions. Gated
+            # on the table property ``enableChangeDataFeed`` exactly like
             # Delta's delta.enableChangeDataFeed — materializing the
             # change set is a second join over the source, and a table
             # that never reads CDF must not pay it on every upsert.
@@ -2966,46 +2933,37 @@ class ManagedTable:
             # schema_mode='merge' upsert's new columns reach the change
             # set (src is already union-aligned; projecting it onto an
             # old-schema target would drop the values the commit wrote).
-            stage = None
+            cdc = []
             if commit.properties.get("enableChangeDataFeed"):
-                stage = os.path.join(
-                    self._changes_dir, f"stage-{uuid.uuid4().hex}"
-                )
-                self._write_change_set(
-                    self._align_to_schema(
-                        self._read_units(prev, prev.data_units), union_schema
+                cdc = self._write_change_files(
+                    self._merge_changes(
+                        self._align_to_schema(
+                            self._read_units(prev, prev.data_units),
+                            union_schema,
+                        ),
+                        src, primary_key, update_condition,
+                        pre_images=bool(
+                            commit.properties.get("changeDataFeedPreImages")
+                        ),
                     ),
-                    src, primary_key, update_condition, commit.version,
-                    pre_images=bool(
-                        commit.properties.get("changeDataFeedPreImages")
-                    ),
-                    out_dir=stage,
+                    mapping,
                 )
-            try:
-                commit = self._publish(commit, prev, cdc_stage=stage)
-            except BaseException:
-                if stage:
-                    shutil.rmtree(stage, ignore_errors=True)
-                raise
+            commit = self._publish(commit, prev, cdc)
         finally:
             if persisted:
                 src.unpersist()
         return commit
 
-    def _write_change_set(
+    def _merge_changes(
         self,
         target: DataFrame,
         source: DataFrame,
         primary_key: list[str],
         update_condition,
-        version: int,
         pre_images: bool = False,
-        out_dir: str | None = None,
-    ) -> None:
-        """``out_dir``: a pre-publish staging directory (the publish
-        adopts it as ``_changes/v{version}`` winner-only and mirrors
-        it as Delta ``cdc`` actions). Default: write ``_changes/v{N}``
-        directly (legacy post-publish path).
+    ) -> DataFrame:
+        """The change rows of an upsert of ``source`` into ``target``:
+        inserts and the update post-images the merge applies.
 
         ``pre_images=True`` (table property
         ``changeDataFeedPreImages``) additionally persists the matched
@@ -3081,9 +3039,7 @@ class ManagedTable:
                 .withColumn("_change_type", F.lit("update_preimage"))
             )
             changes = changes.unionByName(pre)
-        changes.write.mode("overwrite").parquet(
-            out_dir or os.path.join(self._changes_dir, f"v{version}")
-        )
+        return changes
 
     # ---------- constraints (Delta CHECK / NOT NULL) ----------
 
@@ -3231,16 +3187,15 @@ class ManagedTable:
             stats=stats,
             column_mapping=dict(prev.column_mapping),
         )
-        stage = None
+        cdc = []
         if touched and prev.properties.get("enableChangeDataFeed"):
             # CDF for DML (Delta parity): DELETE emits the removed
             # images as 'delete'; UPDATE emits post-images (and
             # pre-images when changeDataFeedPreImages is set — the
             # same opt-in as the merge path). Rows recomputed from
-            # the prior snapshot's touched units, which the commit
-            # never deletes (vacuum liveness protects them). Staged
-            # pre-publish; the version-claim winner adopts it inside
-            # _publish and mirrors it as Delta cdc actions.
+            # the prior snapshot's touched units. A DML commit that
+            # touched no unit changes no file, so Delta's rule gives
+            # it zero change rows without any cdc action.
             cond = F.coalesce(F.expr(condition), F.lit(False))
             matched = self._read_units(prev, touched).filter(cond)
             if action == "delete":
@@ -3257,29 +3212,8 @@ class ManagedTable:
                             "_change_type", F.lit("update_preimage")
                         )
                     )
-            stage = os.path.join(
-                self._changes_dir, f"stage-{uuid.uuid4().hex}"
-            )
-            changes.write.mode("overwrite").parquet(stage)
-        elif prev.properties.get("enableChangeDataFeed"):
-            # stats pruned every unit (condition provably matches no
-            # row) — the commit still publishes, so the change feed
-            # must cross it: persist an EMPTY schema-correct change
-            # set, or a running table_changes_stream wedges forever on
-            # "no persisted change set" at this version.
-            stage = os.path.join(
-                self._changes_dir, f"stage-{uuid.uuid4().hex}"
-            )
-            self._write_empty_change_set(
-                prev, commit.version, out_dir=stage
-            )
-        try:
-            commit = self._publish(commit, prev, cdc_stage=stage)
-        except BaseException:
-            if stage:
-                shutil.rmtree(stage, ignore_errors=True)
-            raise
-        return commit
+            cdc = self._write_change_files(changes, prev.column_mapping)
+        return self._publish(commit, prev, cdc)
 
     def delete_where(
         self,
@@ -3381,40 +3315,15 @@ class ManagedTable:
                 column_mapping=dict(prev.column_mapping),
                 txns=dict([txn]) if txn else {},
             )
-            # CDF change set STAGED before the publish (same contract
-            # as the merge path): the publish adopts it as _changes/vN
-            # AND mirrors it as Delta cdc actions — a post-publish
-            # write left MOR deletes under-derivable for external
-            # table_changes readers (caught by the r8 composite test).
-            stage = None
+            cdc = []
             if commit.properties.get("enableChangeDataFeed") and touched:
-                stage = os.path.join(
-                    self._changes_dir, f"stage-{uuid.uuid4().hex}"
-                )
-                try:
+                cdc = self._write_change_files(
                     self._read_units(prev, touched).join(
                         F.broadcast(key_set), pk, "left_semi",
-                    ).withColumn(
-                        "_change_type", F.lit("delete")
-                    ).write.mode("overwrite").parquet(stage)
-                except BaseException:
-                    # a failed stage WRITE must not leak a partial
-                    # stage-<uuid> dir under _changes (readers ignore
-                    # it, but the concurrency tests assert none after
-                    # runs) — the except below only covers _publish
-                    shutil.rmtree(stage, ignore_errors=True)
-                    raise
-            try:
-                commit = self._publish(commit, prev, cdc_stage=stage)
-            except BaseException:
-                if stage:
-                    shutil.rmtree(stage, ignore_errors=True)
-                raise
-            if (
-                commit.properties.get("enableChangeDataFeed")
-                and not touched
-            ):
-                self._write_empty_change_set(prev, commit.version)
+                    ).withColumn("_change_type", F.lit("delete")),
+                    prev.column_mapping,
+                )
+            commit = self._publish(commit, prev, cdc)
         finally:
             key_set.unpersist()
         return commit
@@ -3453,38 +3362,17 @@ class ManagedTable:
         )
         # same CDF contract as the copy-on-write DELETE: the removed
         # images land as 'delete' change rows (computed against the
-        # PRE-delete snapshot), STAGED before the publish so the
-        # winner adopts them as _changes/vN AND mirrors them as Delta
-        # cdc actions (a post-publish write left MOR deletes
-        # under-derivable for external table_changes readers — caught
-        # by the r8 composite test)
-        stage = None
+        # PRE-delete snapshot)
+        cdc = []
         if touched and prev.properties.get("enableChangeDataFeed"):
             cond = F.coalesce(F.expr(condition), F.lit(False))
-            stage = os.path.join(
-                self._changes_dir, f"stage-{uuid.uuid4().hex}"
-            )
-            try:
+            cdc = self._write_change_files(
                 self._read_units(prev, touched).filter(cond).withColumn(
                     "_change_type", F.lit("delete")
-                ).write.mode("overwrite").parquet(stage)
-            except BaseException:
-                # failed stage write: clean the partial stage dir
-                # before re-raising (the publish try below only
-                # covers _publish failures)
-                shutil.rmtree(stage, ignore_errors=True)
-                raise
-        try:
-            commit = self._publish(commit, prev, cdc_stage=stage)
-        except BaseException:
-            if stage:
-                shutil.rmtree(stage, ignore_errors=True)
-            raise
-        if not touched and prev.properties.get("enableChangeDataFeed"):
-            # see _rewrite_where: a fully-pruned DML commit still needs
-            # an (empty) change set or the CDF stream wedges on it
-            self._write_empty_change_set(prev, commit.version)
-        return commit
+                ),
+                prev.column_mapping,
+            )
+        return self._publish(commit, prev, cdc)
 
     def update_where(
         self,
@@ -3678,12 +3566,11 @@ class ManagedTable:
             stats=stats,
             column_mapping=dict(prev.column_mapping),
         )
-        commit = self._publish(commit, prev)
+        cdc = []
         if prev.properties.get("enableChangeDataFeed"):
             # CDF parity with Delta's replaceWhere: removed images as
-            # 'delete' (recomputed against the pre-commit snapshot,
-            # whose units the commit never deletes), the new batch as
-            # 'insert'.
+            # 'delete' (recomputed against the pre-commit snapshot),
+            # the new batch as 'insert'.
             changes = df.withColumn("_change_type", F.lit("insert"))
             if touched:
                 changes = changes.unionByName(
@@ -3691,10 +3578,8 @@ class ManagedTable:
                     .filter(cond)
                     .withColumn("_change_type", F.lit("delete"))
                 )
-            changes.write.mode("overwrite").parquet(
-                os.path.join(self._changes_dir, f"v{commit.version}")
-            )
-        return commit
+            cdc = self._write_change_files(changes, prev.column_mapping)
+        return self._publish(commit, prev, cdc)
 
     def overwrite_partitions(
         self,
@@ -3881,7 +3766,7 @@ class ManagedTable:
                 stats=stats,
                 column_mapping=dict(prev.column_mapping),
             )
-            commit = self._publish(commit, prev)
+            cdc = []
             if prev.properties.get("enableChangeDataFeed"):
                 full_target = self._read_units(prev, prev.data_units)
                 keys = src.select(*primary_key)
@@ -3904,9 +3789,10 @@ class ManagedTable:
                         gone.withColumn("_change_type", F.lit("delete"))
                     )
                 )
-                changes.write.mode("overwrite").parquet(
-                    os.path.join(self._changes_dir, f"v{commit.version}")
+                cdc = self._write_change_files(
+                    changes, prev.column_mapping
                 )
+            commit = self._publish(commit, prev, cdc)
         finally:
             src.unpersist()
         return commit
@@ -4358,21 +4244,27 @@ class ManagedTable:
             dv_relative_path,
         )
 
+        def _change_dirs(c: Commit) -> set:
+            # a commit's change files share one directory of their own
+            # (an older engine's sit flat in _change_data/)
+            return {rel.split("/")[1] for rel in c.cdc_files}
+
         live = set(prev.data_units)
         live_dvs = {dv_relative_path(d) for d in prev.deletion_vectors.values()}
-        live_versions = {prev.version}
+        live_changes = _change_dirs(prev)
         ever_referenced: set = set()
         for c in self.history():
             ever_referenced.update(c.data_units)
             ever_referenced.update(
                 dv_relative_path(d) for d in c.deletion_vectors.values()
             )
+            ever_referenced.update(_change_dirs(c))
             if c.timestamp_ms >= cutoff_ms:
                 live.update(c.data_units)
                 live_dvs.update(
                     dv_relative_path(d) for d in c.deletion_vectors.values()
                 )
-                live_versions.add(c.version)
+                live_changes.update(_change_dirs(c))
         # a unit referenced by NO commit at all may be a CONCURRENT
         # writer's just-written, not-yet-published data: reclaiming it
         # would permanently break the commit about to reference it.
@@ -4407,62 +4299,23 @@ class ManagedTable:
                             ignore_errors=True,
                         )
                     removed += 1
-        # CDF change sets follow the same liveness rule as data units:
-        # _changes/vN belongs to commit N, so it is reclaimed exactly
-        # when commit N falls outside the retention window (otherwise a
-        # CDF-enabled table accumulates per-upsert change parquet
-        # forever).
-        if os.path.isdir(self._changes_dir):
-            for d in os.listdir(self._changes_dir):
-                if not d.startswith("v"):
-                    continue
-                try:
-                    v = int(d[1:])
-                except ValueError:
-                    continue
-                if v not in live_versions:
-                    if not dry_run:
-                        shutil.rmtree(
-                            os.path.join(self._changes_dir, d),
-                            ignore_errors=True,
-                        )
-                    removed += 1
-            # abandoned pre-publish stages (a loser of a version race
-            # crashed before its cleanup): never referenced, safe
-            # beyond the in-flight grace
-            for d in os.listdir(self._changes_dir):
-                if not d.startswith("stage-"):
-                    continue
-                sp = os.path.join(self._changes_dir, d)
-                try:
-                    fresh = (
-                        os.path.getmtime(sp) * 1000
-                        > now_ms - orphan_grace_ms
-                    )
-                except OSError:
-                    continue  # racing with its writer
-                if not fresh:
-                    if not dry_run:
-                        shutil.rmtree(sp, ignore_errors=True)
-                    removed += 1
-        # mirrored CDF files (_change_data/cdc-{version}-*.parquet,
-        # hardlinks of _changes/vN) follow the same version liveness
+        # change-data files follow the same rule: kept while a retained
+        # version's cdc actions name them; unreferenced ones (a writer
+        # that died before its version claim) after the in-flight grace
         cd_dir = os.path.join(self.path, "_change_data")
-        if os.path.isdir(cd_dir):
-            for fn in os.listdir(cd_dir):
-                if not fn.startswith("cdc-"):
-                    continue
-                try:
-                    v = int(fn.split("-")[1])
-                except (IndexError, ValueError):
-                    continue
-                if v not in live_versions:
-                    if not dry_run:
-                        try:
-                            os.unlink(os.path.join(cd_dir, fn))
-                        except OSError:
-                            pass
-                    removed += 1
+        for name in os.listdir(cd_dir) if os.path.isdir(cd_dir) else []:
+            if name in live_changes or _orphan_in_flight(name, cd_dir):
+                continue
+            if not dry_run:
+                p = os.path.join(cd_dir, name)
+                if os.path.isdir(p):
+                    shutil.rmtree(p, ignore_errors=True)
+                else:
+                    try:
+                        os.unlink(p)
+                    except OSError:
+                        pass
+            removed += 1
         # deletion-vector files (deletion_vector_*.bin at the table
         # root) follow their commits' liveness, like data units: kept
         # while any retained commit references one. Every DV swap and
@@ -5063,10 +4916,6 @@ class ManagedTable:
             ),
         }
 
-    @property
-    def _changes_dir(self) -> str:
-        return os.path.join(self.path, "_changes")
-
     def read_changes(
         self,
         from_version: int,
@@ -5078,11 +4927,12 @@ class ManagedTable:
 
         - append commits contribute exactly their new data units
           (``_change_type = 'insert'``);
-        - upsert commits contribute their persisted per-commit change
-          set (``_changes/v{N}``: inserts + update post-images, the
-          rows the MERGE actually applied);
-        - optimize commits contribute nothing (pure rewrite,
-          dataChange=false in Delta terms) and are skipped;
+        - upsert/delete/update/replace_where commits contribute the
+          change files their cdc actions name (inserts, deletes and
+          update images, the rows the commit actually changed); one
+          that touched no rows contributes nothing;
+        - optimize and metadata commits contribute nothing (pure
+          rewrite, dataChange=false in Delta terms) and are skipped;
         - overwrite/restore replace the snapshot wholesale — reading
           across one raises, mirroring Delta's CDF on non-CDF rewrites.
 
@@ -5098,34 +4948,13 @@ class ManagedTable:
             raise UserException(
                 f"No commits after version {from_version} at {self.path}"
             )
-        prev_units = set(commits[0].data_units)
         new_units: list[str] = []
-        change_dirs: list[str] = []
-        last = None
-        for c in commits[1:]:
-            if c.action == "append":
-                new_units.extend(u for u in c.data_units if u not in prev_units)
-            elif c.action in CDF_METADATA_ONLY_ACTIONS:
-                pass  # identical rows / metadata-only — no logical change
-            elif c.action in CDF_CHANGE_SET_ACTIONS and os.path.isdir(
-                os.path.join(self._changes_dir, f"v{c.version}")
-            ):
-                change_dirs.append(os.path.join(self._changes_dir, f"v{c.version}"))
-            elif c.action in CDF_CHANGE_SET_ACTIONS:
-                raise UserException(
-                    f"read_changes crosses {c.action} v{c.version} with no "
-                    "persisted change set — set the table property "
-                    "enableChangeDataFeed before mutating (same contract "
-                    "as delta.enableChangeDataFeed)."
-                )
-            else:
-                raise UserException(
-                    f"read_changes crosses a '{c.action}' commit (v{c.version}); "
-                    "only append/upsert/delete/update/optimize ranges are "
-                    "attributable."
-                )
-            prev_units = set(c.data_units)
-            last = c
+        change_files: list[str] = []
+        for prev, c in zip(commits, commits[1:]):
+            units, files = commit_changes(self.path, prev, c, "read_changes")
+            new_units += units
+            change_files += files
+        last = commits[-1]
         # one multi-path scan under the range-end schema (older units'
         # missing columns read as NULL), same plan shape as read().
         # _scan_units, NOT a raw parquet read: appended units store
@@ -5144,9 +4973,12 @@ class ManagedTable:
         ctype_schema = T.StructType(
             schema.fields + [T.StructField("_change_type", T.StringType(), True)]
         )
-        if change_dirs:
+        if change_files:
             parts.append(
-                self.spark.read.schema(ctype_schema).parquet(*change_dirs)
+                self._scan_units(
+                    [os.path.join(self.path, f) for f in change_files],
+                    ctype_schema, last.column_mapping or {},
+                )
             )
         if not parts:
             out = local_relation(self.spark, ctype_schema)

@@ -23,7 +23,8 @@ versions, which files — one forward pass over the table's log per
 batch); the data
 plane is one InputPartition per change file, read worker-side via
 pyarrow. Partitioned tables recover hive partition values from the
-directory layout. Commits a CDF stream cannot attribute (overwrite /
+directory layout; a change-set commit's rows are the change files its
+cdc actions name. Commits a CDF stream cannot attribute (overwrite /
 restore) raise rather than silently emitting wrong deltas — the same
 contract as ``ManagedTable.read_changes``.
 """
@@ -65,13 +66,12 @@ def _typed_partition_value(raw: str | None, dtype):
         return _dec.Decimal(raw)
     return raw
 
-# action classification is SHARED with batch read_changes so the two
-# surfaces can never drift on which commits are metadata-only; the
+# commit classification is SHARED with batch read_changes so the two
+# surfaces can never drift on where a commit's changes live; the
 # light cdf_actions module keeps the Python-worker import chain free
 # of the full table engine (worker cold-start cost)
 from component_delta_lake_writer_spark.sinks.cdf_actions import (  # noqa: E402
-    CDF_CHANGE_SET_ACTIONS as _CHANGE_SET,
-    CDF_METADATA_ONLY_ACTIONS as _NOOP,
+    commit_changes,
 )
 
 
@@ -92,14 +92,15 @@ class _ChangeFilePartition(InputPartition):
         version: int,
         change_type: str | None,
         partition_values: dict,
-        mapping: dict,
         dv: tuple[str, dict] | None = None,
     ):
         self.path = path
         self.version = version
         self.change_type = change_type  # None → column present in file
         self.partition_values = partition_values
-        self.mapping = mapping  # logical -> physical
+        # logical -> physical, the batch's range end's (set by
+        # partitions()): every file stores physical names
+        self.mapping: dict = {}
         # (table path, deletionVector descriptor) of this file: the
         # worker drops the rows at the positions it marks deleted
         self.dv = dv
@@ -155,6 +156,7 @@ class CdfStreamReader(DataSourceStreamReader):
         lo, hi = int(start["version"]), int(end["version"])
         table = _table(self.table_path)
         parts: list[_ChangeFilePartition] = []
+        c = None
         if start.get("snapshot_of") is not None:
             # bootstrap batch (default start): the whole snapshot at
             # that version streams as inserts; changes resume after it.
@@ -167,7 +169,7 @@ class CdfStreamReader(DataSourceStreamReader):
                 parts.extend(
                     self._unit_files(
                         os.path.join(self.table_path, "_data", u),
-                        snap, "insert", c.column_mapping,
+                        snap, "insert",
                         dvs=c.deletion_vectors,
                         table_path=self.table_path,
                     )
@@ -175,54 +177,40 @@ class CdfStreamReader(DataSourceStreamReader):
             lo = snap
         # one forward pass over the log from the offset's version
         commits = list(table._walk(max(lo, 0), hi)) if hi > lo else []
-        prev_units = (
-            set(commits.pop(0).data_units) if lo >= 0 and commits else set()
-        )
+        prev = commits.pop(0) if lo >= 0 and commits else None
         for c in commits:
-            v, action, mapping = c.version, c.action, c.column_mapping
-            if action in ("create", "overwrite") and not prev_units:
+            if c.action in ("create", "overwrite") and not (
+                prev and prev.data_units
+            ):
                 # the stream's first commit: its snapshot IS the
                 # insert set (startingVersion=0 bootstrap)
-                for u in c.data_units:
-                    parts.extend(
-                        self._unit_files(
-                            os.path.join(self.table_path, "_data", u),
-                            v, "insert", mapping,
-                        )
-                    )
-            elif action == "append":
-                for u in c.data_units:
-                    if u in prev_units:
-                        continue
-                    parts.extend(
-                        self._unit_files(
-                            os.path.join(self.table_path, "_data", u),
-                            v, "insert", mapping,
-                        )
-                    )
-            elif action in _CHANGE_SET:
-                cdir = os.path.join(self.table_path, "_changes", f"v{v}")
-                if not os.path.isdir(cdir):
-                    raise UserException(
-                        f"table_changes_stream crosses {action} v{v} "
-                        "with no persisted change set — enable "
-                        "ChangeDataFeed before mutating."
-                    )
-                parts.extend(self._unit_files(cdir, v, None, mapping))
-            elif action in _NOOP:
-                pass
+                units, files = c.data_units, []
             else:
-                raise UserException(
-                    f"table_changes_stream cannot attribute a "
-                    f"'{action}' commit (v{v})."
+                units, files = commit_changes(
+                    self.table_path, prev, c, "table_changes_stream"
                 )
-            prev_units = set(c.data_units)
+            for u in units:
+                parts.extend(
+                    self._unit_files(
+                        os.path.join(self.table_path, "_data", u),
+                        c.version, "insert",
+                    )
+                )
+            parts += [
+                _ChangeFilePartition(
+                    os.path.join(self.table_path, f), c.version, None, {}
+                )
+                for f in files
+            ]
+            prev = c
+        # every file resolves its columns through the range end's
+        # mapping (``c``: the last commit seen), as read_changes does
+        for p in parts:
+            p.mapping = c.column_mapping
         return parts
 
     @staticmethod
-    def _unit_files(
-        base, version, change_type, mapping, dvs=None, table_path=None
-    ):
+    def _unit_files(base, version, change_type, dvs=None, table_path=None):
         from component_delta_lake_writer_spark.sinks.hive_layout import (
             decode_segments,
         )
@@ -236,7 +224,7 @@ class CdfStreamReader(DataSourceStreamReader):
                     d = dvs and dvs.get(os.path.relpath(path, table_path))
                     out.append(
                         _ChangeFilePartition(
-                            path, version, change_type, pvals, mapping,
+                            path, version, change_type, pvals,
                             dv=(table_path, d) if d else None,
                         )
                     )
@@ -250,25 +238,20 @@ class CdfStreamReader(DataSourceStreamReader):
         file_cols = set(pq.ParquetFile(partition.path).schema_arrow.names)
         # Resolve each stream field to its source column FIRST, so the
         # read decodes only the columns actually consumed (files may
-        # carry dead physical columns after drops/renames). Resolution
-        # order depends on the FILE KIND: data-unit files
-        # (change_type set) store PHYSICAL names — the column-mapping
-        # lookup must win, or a logical name would resurrect some
-        # other column's shadowed old bytes that add_column/rename
-        # deliberately hid (managed_table add_column contract).
-        # _changes files (change_type None) are written with LOGICAL
-        # names, so the raw name wins there.
+        # carry dead physical columns after drops/renames). Data-unit
+        # and change files alike store PHYSICAL names — the
+        # column-mapping lookup must win, or a logical name would
+        # resurrect some other column's shadowed old bytes that
+        # add_column/rename deliberately hid (managed_table add_column
+        # contract).
         resolve: dict[str, str | None] = {}
         for f in self.schema.fields:
             if f.name == "_commit_version" or (
                 f.name == "_change_type" and partition.change_type
             ):
                 continue
-            if partition.change_type is not None:
-                phys = partition.mapping.get(f.name, f.name)
-                resolve[f.name] = phys if phys in file_cols else None
-            else:
-                resolve[f.name] = f.name if f.name in file_cols else None
+            phys = partition.mapping.get(f.name, f.name)
+            resolve[f.name] = phys if phys in file_cols else None
         wanted = sorted({c for c in resolve.values() if c})
         tbl = pq.read_table(partition.path, columns=wanted)
         cols = {name: tbl.column(name).to_pylist() for name in wanted}

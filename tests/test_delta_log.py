@@ -281,8 +281,8 @@ def test_mor_commits_materialize_deletion_vectors(spark, tmp_path):
 
 @pytest.mark.slow
 def test_vacuum_reclaims_expired_change_sets(spark, tmp_path):
-    """CDF change-set dirs follow the unit liveness rule: vacuum
-    deletes _changes/vN exactly when commit N left the retention
+    """CDF change files follow the unit liveness rule: vacuum deletes
+    the files commit N names exactly when commit N left the retention
     window."""
     t = ManagedTable(spark, str(tmp_path / "t"))
     df = spark.range(50).select(
@@ -297,14 +297,22 @@ def test_vacuum_reclaims_expired_change_sets(spark, tmp_path):
             ),
             ["k"],
         )
-    cdir = os.path.join(t.path, "_changes")
-    assert sorted(os.listdir(cdir)) == ["v1", "v2", "v3"]
+    cdir = os.path.join(t.path, "_change_data")
+
+    def dirs(versions):
+        return sorted({
+            f.split("/")[1]
+            for v in versions for f in t.commit_at(v).cdc_files
+        })
+
+    assert sorted(os.listdir(cdir)) == dirs([1, 2, 3])
+    assert len(dirs([1, 2, 3])) == 3
     # retention window keeps everything -> nothing reclaimed
     assert t.vacuum(retention_hours=1.0) == 0
-    assert sorted(os.listdir(cdir)) == ["v1", "v2", "v3"]
+    assert sorted(os.listdir(cdir)) == dirs([1, 2, 3])
     # aggressive vacuum keeps only the latest snapshot's commit
     t.vacuum(retention_hours=0.0)
-    assert sorted(os.listdir(cdir)) == ["v3"]
+    assert sorted(os.listdir(cdir)) == dirs([3])
     # the surviving change set still reads
     assert t.read_changes(2).count() > 0
 
@@ -1958,10 +1966,10 @@ def test_check_constraints_mirrored(spark, tmp_path):
 
 @pytest.mark.slow
 def test_external_cdf_matches_engine(spark, tmp_path):
-    """Delta CDF interop: CDF-enabled commits mirror their change sets
-    as cdc actions over hardlinked _change_data files, and the
-    external table_changes reconstruction (mirror alone) equals the
-    engine's read_changes across append/upsert/DELETE/UPDATE.
+    """Delta CDF interop: CDF-enabled commits name their change sets
+    as cdc actions over _change_data files, and the external
+    table_changes reconstruction (log alone) equals the engine's
+    read_changes across append/upsert/DELETE/UPDATE.
     Append-only versions derive inserts from dataChange adds; a
     rewrite without cdc actions raises."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
@@ -1993,11 +2001,10 @@ def test_external_cdf_matches_engine(spark, tmp_path):
         map(tuple, eng.select(*cols).collect())
     )
     assert {r["_commit_version"] for r in ext.collect()} == {1, 2, 3, 4}
-    # cdc files are hardlinks of the engine change sets (zero copy)
-    cd = os.path.join(t.path, "_change_data")
-    assert all(
-        os.stat(os.path.join(cd, f)).st_nlink >= 2
-        for f in os.listdir(cd)
+    # the cdc files are the change sets' only copy
+    named = [f for c in t.history() for f in c.cdc_files]
+    assert named and all(
+        os.stat(os.path.join(t.path, f)).st_nlink == 1 for f in named
     )
     # a non-CDF rewrite is not derivable externally
     t2 = ManagedTable(spark, str(tmp_path / "t2"))
@@ -2015,8 +2022,9 @@ def test_external_cdf_matches_engine(spark, tmp_path):
 
 
 def test_vacuum_reclaims_cdc_mirror_files(spark, tmp_path):
-    """_change_data files follow _changes/vN version liveness under
-    VACUUM; abandoned stage dirs are reclaimed past the grace."""
+    """_change_data files follow their versions' liveness under
+    VACUUM; a never-named change dir (a writer that died before its
+    claim) is reclaimed past the grace."""
     t = ManagedTable(spark, str(tmp_path / "t"))
     df = spark.range(50).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
@@ -2030,18 +2038,20 @@ def test_vacuum_reclaims_cdc_mirror_files(spark, tmp_path):
             ).coalesce(1),
             ["k"],
         )
-    # fake an abandoned stage, old enough to pass the grace
-    stale = os.path.join(t.path, "_changes", "stage-deadbeef")
-    os.makedirs(stale)
+    cd = os.path.join(t.path, "_change_data")
+    # fake two never-named change dirs: one old enough to pass the
+    # grace, one a concurrent writer may be about to claim
+    stale, fresh = os.path.join(cd, "deadbeef"), os.path.join(cd, "feed")
+    for d in (stale, fresh):
+        os.makedirs(d)
     old = (int(__import__("time").time()) - 7200, ) * 2
     os.utime(stale, old)
-    cd = os.path.join(t.path, "_change_data")
-    n_before = len(os.listdir(cd))
-    assert n_before >= 3
+    assert len(os.listdir(cd)) == 5
     t.vacuum(retention_hours=0)
-    # versions compacted away: only the head's files survive
-    assert len(os.listdir(cd)) <= n_before
-    assert not os.path.exists(stale)
+    # only the head's files and the in-flight dir survive
+    assert sorted(os.listdir(cd)) == sorted([
+        t.latest_commit().cdc_files[0].split("/")[1], "feed"
+    ])
 
 
 def test_reader_refuses_unknown_features(spark, tmp_path):

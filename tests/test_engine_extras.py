@@ -319,8 +319,9 @@ def test_read_changes_requires_cdf_property_for_upserts(spark, tmp_path):
     t = ManagedTable(spark, str(tmp_path / "t"))
     o = load_table(spark, SF_SMALL, "orders").limit(100)
     t.write(o, mode="append")  # v0, CDF off
-    t.upsert(o.withColumn("o_totalprice", F.lit(-1.0)), ["o_orderkey"])  # v1
-    assert not os.path.isdir(os.path.join(str(tmp_path / "t"), "_changes"))
+    c = t.upsert(o.withColumn("o_totalprice", F.lit(-1.0)), ["o_orderkey"])  # v1
+    assert c.cdc_files == []
+    assert not os.path.isdir(os.path.join(t.path, "_change_data"))
     with pytest.raises(UserException, match="enableChangeDataFeed"):
         t.read_changes(0)
 

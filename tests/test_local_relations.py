@@ -259,3 +259,25 @@ def test_commits_log_lives_only_in_the_converter():
             if "_commits" in line and i not in allowed
         ]
     assert offenders == [], offenders
+
+
+def test_change_data_lives_only_in_the_log_named_files():
+    """A change set is written once, as the ``_change_data/`` files its
+    commit's cdc actions name: no ``_changes`` path (the per-version
+    change directory earlier engine versions kept) is built anywhere in
+    the package, and the writers that kept it are gone."""
+    from component_delta_lake_writer_spark.sinks.managed_table import (
+        ManagedTable,
+    )
+
+    offenders = [
+        f"{os.path.relpath(f, REPO)}:{node.lineno}"
+        for f in sorted(PKG.rglob("*.py"))
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and (node.value == "_changes" or node.value.startswith("_changes/"))
+    ]
+    assert offenders == [], offenders
+    for gone in ("_link_change_data", "_write_empty_change_set", "_changes_dir"):
+        assert not hasattr(ManagedTable, gone), gone

@@ -921,7 +921,7 @@ def test_replace_where_enforcement_and_cdf(spark, tmp_path_str):
     good = spark.createDataFrame([(1, -1.0), (3, -3.0)], "k int, v double")
     c = t.replace_where(good, "k < 5")
     changes = spark.read.parquet(
-        os.path.join(t.path, "_changes", f"v{c.version}")
+        *[os.path.join(t.path, f) for f in c.cdc_files]
     )
     kinds = {
         (r["k"], r["_change_type"]) for r in changes.collect()
@@ -1151,7 +1151,7 @@ def test_upsert_full_sync_scoped_and_unscoped(spark, tmp_path_str):
         1: ("EU", -1.0), 3: ("US", 3.0), 4: ("US", 4.0), 5: ("EU", 5.0)
     }
     changes = spark.read.parquet(
-        os.path.join(t.path, "_changes", f"v{c.version}")
+        *[os.path.join(t.path, f) for f in c.cdc_files]
     )
     kinds = {(r["k"], r["_change_type"]) for r in changes.collect()}
     assert kinds == {
@@ -1204,13 +1204,12 @@ def test_set_properties_and_row_count(spark, tmp_path_str):
         t.commit_at(v).data_units
     )
     t.upsert(spark.createDataFrame([(1, -1.0)], "k int, v double"), ["k"])
-    assert os.path.isdir(os.path.join(t.path, "_changes",
-                                      f"v{t.latest_commit().version}"))
+    on = t.latest_commit().cdc_files
+    assert on and all(os.path.isfile(os.path.join(t.path, f)) for f in on)
     # UNSET (unknown keys ignored) turns it back off
     t.set_properties(unset=["enableChangeDataFeed", "nonexistent"])
     t.upsert(spark.createDataFrame([(2, -2.0)], "k int, v double"), ["k"])
-    assert not os.path.isdir(os.path.join(t.path, "_changes",
-                                          f"v{t.latest_commit().version}"))
+    assert t.latest_commit().cdc_files == []
     # MOR delete sets force the fallback distributed count
     t.delete_where("k >= 15", strategy="merge-on-read")
     assert t.row_count() == 15
@@ -1536,7 +1535,7 @@ def test_mor_writer_dying_before_version_claim_leaves_prior_version(
     before = sorted(map(tuple, t.read().collect()))
     head = t.latest_commit().version
 
-    def crash(self, commit, prev=None, cdc_stage=None):
+    def crash(self, commit, prev=None, cdc_files=()):
         raise RuntimeError("writer died before the version claim")
 
     monkeypatch.setattr(ManagedTable, "_publish", crash)
@@ -1866,10 +1865,10 @@ def test_append_only_property_enforced(spark, tmp_path):
 
 
 def test_concurrent_cdf_upserts_stage_safely(spark, tmp_path):
-    """The pre-publish CDF staging must preserve the concurrency
-    contract: two racing upserts -> exactly one wins the version
-    claim, the loser's stage never becomes _changes/vN, and no stage
-    dir leaks after the loser's cleanup."""
+    """Change files written before the claim must preserve the
+    concurrency contract: two racing upserts -> exactly one wins the
+    version claim, every committed version names its own change files,
+    and a loser's files do not outlive its cleanup."""
     import threading
 
     from component_delta_lake_writer_spark.errors import UserException
@@ -1909,12 +1908,18 @@ def test_concurrent_cdf_upserts_stage_safely(spark, tmp_path):
         assert "Concurrent commit conflict" in e
     head = t.latest_commit()
     assert head.version == base_version + len(done)
-    # every committed version owns a change set; no stage leaks
-    ch = os.path.join(t.path, "_changes")
-    names = set(os.listdir(ch))
-    for v in range(base_version + 1, head.version + 1):
-        assert f"v{v}" in names
-    assert not [n for n in names if n.startswith("stage-")], names
+    # every committed version names its change files; nothing else
+    # stays under _change_data
+    named = set()
+    for c in t._walk(base_version + 1):
+        assert c.cdc_files, c.version
+        named.update(c.cdc_files)
+    on_disk = {
+        os.path.relpath(os.path.join(dp, fn), t.path)
+        for dp, _d, fns in os.walk(os.path.join(t.path, "_change_data"))
+        for fn in fns if fn.endswith(".parquet")
+    }
+    assert on_disk == named
     # the change feed across the winners replays cleanly
     assert t.read_changes(base_version).count() > 0
 

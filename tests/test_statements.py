@@ -274,7 +274,8 @@ def test_tblproperties_false_disables_cdf(ex):
         "WHEN NOT MATCHED THEN INSERT (k, s, v) VALUES (s.k, s.s, s.v)"
     )
     import os as _os
-    assert not _os.path.isdir(_os.path.join(t.path, "_changes"))
+    assert t.latest_commit().cdc_files == []
+    assert not _os.path.isdir(_os.path.join(t.path, "_change_data"))
 
 
 def test_merge_on_clause_must_match_insert_expression(ex):
