@@ -16,8 +16,8 @@ DataFrame ops so they scale as ordinary shuffles:
 - n-gram Jaccard: exact verify used by the LSH candidates (and usable
   standalone on any candidate pair set).
 
-All hashes derive from md5 (first 8 hex chars → uint32) so the DuckDB
-oracle can reproduce them bit-for-bit; the LCG hash family
+All hashes derive from the portable hash (``functions/hashing.py``),
+which the DuckDB oracle reproduces bit-for-bit; the LCG hash family
 (a*h+b) % p uses constants small enough that a*h stays inside int64.
 """
 
@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.hashing import portable_hash
 from component_delta_lake_writer_spark.operators.text import (
     fingerprint,
     normalize_text,
@@ -121,7 +122,7 @@ def shingles(
         ).alias("shingle"),
     ).select(
         F.col(id_col),
-        F.expr("CAST(conv(substring(md5(shingle), 1, 8), 16, 10) AS BIGINT)").alias("h"),
+        portable_hash("shingle").alias("h"),
     ).filter(F.col("h").isNotNull())
     # NULL-text docs produce one NULL shingle (split(NULL) slices to
     # NULL); unfiltered, their empty sets all band to the same ""
@@ -350,7 +351,7 @@ def simhash_signatures(
         F.explode(F.split(normalize_text(F.col(text_col)), r"\s+")).alias("tok"),
     ).select(
         F.col(id_col),
-        F.expr("CAST(conv(substring(md5(tok), 1, 8), 16, 10) AS BIGINT)").alias("h"),
+        portable_hash("tok").alias("h"),
     )
     votes = [
         F.sum(
@@ -709,10 +710,7 @@ def domain_similarity(
         )
         .select(
             "_d",
-            F.expr(
-                "CAST(conv(substring(md5(_tok), 1, 8), 16, 10) "
-                "AS BIGINT)"
-            ).alias("_h"),
+            portable_hash("_tok").alias("_h"),
         )
         .groupBy("_d", "_h")
         .agg(F.lit(1).alias("_one"))

@@ -11,7 +11,9 @@ the zscore/corr operators).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from decimal import Decimal
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from component_delta_lake_writer_spark.errors import UserException
@@ -20,6 +22,7 @@ from component_delta_lake_writer_spark.functions.exact import (
     exact_sum_product,
     quantize,
 )
+from component_delta_lake_writer_spark.functions.hashing import portable_hash
 from component_delta_lake_writer_spark.session import local_relation
 
 # two-sided 5% critical value of the standard normal — a literal so
@@ -299,7 +302,7 @@ def mann_whitney_u(
 #: Poisson(1) inverse-CDF ladder (P(X <= k), 10dp): the bootstrap
 #: weight for a uniform u is the first k whose CDF exceeds u.  Fixed
 #: literals so Spark and the SQL oracle compare u against IDENTICAL
-#: doubles — the ladder is the determinism boundary.
+#: decimals — the ladder is the determinism boundary.
 _POISSON1_CDF = (
     (0, 0.3678794412),
     (1, 0.7357588823),
@@ -313,11 +316,22 @@ _POISSON1_CDF = (
 )
 
 
-def _poisson_case(u_sql: str) -> str:
-    branches = " ".join(
-        f"WHEN {u_sql} < {c!r} THEN {k}" for k, c in _POISSON1_CDF
+def _poisson_weight(salt: str) -> Column:
+    """Replicate ``b``'s Poisson(1) weight of row ``_id``: the ladder
+    step of u = (hash('<salt>:<b>:<id>') + 1) / 2^32. u is DECIMAL, as
+    the SQL literals 1.0 and 4294967296.0 type it, and the ladder's
+    bounds are decimal literals, so both engines compare exactly."""
+    key = F.concat(
+        F.lit(f"{salt}:"), F.col("b").cast("string"), F.lit(":"), F.col("_id")
     )
-    return f"CASE {branches} ELSE 9 END"
+    u = (portable_hash(key) + F.lit(Decimal("1.0"))) / F.lit(
+        Decimal("4294967296.0")
+    )
+    (k0, c0), *rest = _POISSON1_CDF
+    w = F.when(u < F.lit(Decimal(repr(c0))), k0)
+    for k, c in rest:
+        w = w.when(u < F.lit(Decimal(repr(c))), k)
+    return w.otherwise(9)
 
 
 def ab_bootstrap_ci(
@@ -386,11 +400,6 @@ def ab_bootstrap_ci(
             f"{sorted(found)!r}"
         )
     ga, gb = sorted(found)
-    u_sql = (
-        "((CAST(conv(substring(md5(concat("
-        f"'{salt}:', CAST(b AS STRING), ':', _id"
-        ")), 1, 8), 16, 10) AS BIGINT) + 1.0) / 4294967296.0)"
-    )
     # explode a plain int sequence, then compute the weight as a
     # TOP-LEVEL column expression: a lambda inside transform() runs
     # on Spark's interpreted higher-order-function path (no
@@ -414,7 +423,7 @@ def ab_bootstrap_ci(
             "_x",
             F.col("b").alias("_b"),
             F.when(F.col("b") == -1, F.lit(1))
-            .otherwise(F.expr(_poisson_case(u_sql)))
+            .otherwise(_poisson_weight(salt))
             .alias("_w"),
         )
         .groupBy("_g", "_b")
@@ -872,11 +881,6 @@ def mann_whitney_ci(
             f"{sorted(found)!r}"
         )
     ga, gb = sorted(found)
-    u_sql = (
-        "((CAST(conv(substring(md5(concat("
-        f"'{salt}:', CAST(b AS STRING), ':', _id"
-        ")), 1, 8), 16, 10) AS BIGINT) + 1.0) / 4294967296.0)"
-    )
     # explode + codegen'd column weight (see ab_bootstrap_ci: the
     # transform() lambda path is interpreted and ~6x slower)
     per_vb = (
@@ -892,7 +896,7 @@ def mann_whitney_ci(
             "_g",
             "_v",
             F.col("b").alias("_b"),
-            F.expr(_poisson_case(u_sql)).alias("_w"),
+            _poisson_weight(salt).alias("_w"),
         )
         .groupBy("_v", "_b")
         .agg(

@@ -14,8 +14,8 @@ properties RNG sampling (``df.sample``/``sampleBy``) cannot give at
   rows arrive, so incremental pipelines can sample append-only;
 - oracle-checkable: the DuckDB twin computes the identical set.
 
-The md5-prefix hash is the engine's portable-hash idiom (same as the
-dedup family), uniform enough for sampling buckets by construction.
+The hash is the engine's portable hash (``functions/hashing.py``),
+uniform enough for sampling buckets by construction.
 """
 
 from __future__ import annotations
@@ -23,12 +23,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.hashing import portable_hash
 
-def _bucket(id_name: str, buckets: int = 100, salt: str = "") -> Column:
-    """Deterministic uniform bucket in [0, buckets): md5-prefix of
-    '<salt>:<id>' mod buckets (DuckDB twin:
-    ('0x' || substr(md5('<salt>:' || CAST(id AS VARCHAR)), 1, 8))
-    ::BIGINT % buckets).
+
+def _bucket(id_name: str, salt: str, buckets: int = 100) -> Column:
+    """Deterministic uniform bucket in [0, buckets): the portable hash
+    of '<salt>:<id>' mod buckets.
 
     Every sampler passes its OWN salt: with a shared unsalted hash,
     composed samplers key on the identical bucket of the same id, so
@@ -36,17 +36,19 @@ def _bucket(id_name: str, buckets: int = 100, salt: str = "") -> Column:
     fraction (bucket<10 is a subset of bucket<20) instead of the
     independent 10% — measured, not hypothetical. Distinct salts make
     the draws independent."""
-    src = (
-        f"CONCAT('{salt}:', CAST({id_name} AS STRING))"
-        if salt
-        else f"CAST({id_name} AS STRING)"
-    )
+    return portable_hash(_salted(id_name, salt)) % buckets
+
+
+def _salted(id_name: str, salt: str) -> Column:
+    """'<salt>:<id>' as a string."""
+    return F.concat(F.lit(f"{salt}:"), F.col(id_name).cast("string"))
+
+
+def _uniform(id_name: str, salt: str) -> Column:
+    """u = (hash + 1) / 2^32 of '<salt>:<id>' in (0, 1], as a double."""
     return (
-        F.expr(
-            f"CAST(conv(substring(md5({src}), 1, 8), 16, 10) AS BIGINT)"
-        )
-        % buckets
-    )
+        portable_hash(_salted(id_name, salt)).cast("double") + 1.0
+    ) / F.lit(4294967296.0)
 
 
 def hash_sample(df: DataFrame, id_col: str, percent: int) -> DataFrame:
@@ -88,13 +90,7 @@ def weighted_sample(
     """
     if k < 1:
         raise ValueError(f"weighted_sample needs k >= 1, got {k}")
-    src = f"CONCAT('{salt}:', CAST({id_col} AS STRING))"
-    u = (
-        F.expr(
-            f"CAST(conv(substring(md5({src}), 1, 8), 16, 10) AS BIGINT)"
-        ).cast("double")
-        + 1.0
-    ) / F.lit(4294967296.0)
+    u = _uniform(id_col, salt)
     w = F.col(weight_col).cast("double")
     key = F.pow(u, 1.0 / w)
     return (
@@ -136,13 +132,7 @@ def weighted_sample_by_group(
         raise ValueError(
             f"weighted_sample_by_group needs k >= 1, got {k}"
         )
-    src = f"CONCAT('{salt}:', CAST({id_col} AS STRING))"
-    u = (
-        F.expr(
-            f"CAST(conv(substring(md5({src}), 1, 8), 16, 10) AS BIGINT)"
-        ).cast("double")
-        + 1.0
-    ) / F.lit(4294967296.0)
+    u = _uniform(id_col, salt)
     w = F.col(weight_col).cast("double")
     win = Window.partitionBy(group_col).orderBy(
         F.col("_key").desc(), F.col(id_col).asc()

@@ -34,6 +34,7 @@ from component_delta_lake_writer_spark.functions.exact import (
     exact_sum,
     exact_sum_product,
 )
+from component_delta_lake_writer_spark.functions.hashing import portable_hash_of
 from component_delta_lake_writer_spark.session import local_relation
 
 
@@ -99,11 +100,8 @@ def cosine_topk(
 def plane_signs(p: int, dim: int) -> list[float]:
     """Plane p's ±1 components: fixed pseudo-random signs derived from
     md5(p:d) — no stored model, identical on every executor and run."""
-    import hashlib
-
     return [
-        1.0 if int(hashlib.md5(f"{p}:{d}".encode()).hexdigest()[:8], 16) % 2 == 0
-        else -1.0
+        1.0 if portable_hash_of(f"{p}:{d}") % 2 == 0 else -1.0
         for d in range(dim)
     ]
 
@@ -1344,15 +1342,11 @@ def hamming_band_positions(
     from md5("hb:band:i") — the same no-stored-model determinism as
     plane_signs, so executors, the driver, and the SQL oracle (which
     inlines the positions) all agree."""
-    import hashlib
-
     out: list[int] = []
     seen: set[int] = set()
     i = 0
     while len(out) < min(bits, dim):
-        p = int(
-            hashlib.md5(f"hb:{band}:{i}".encode()).hexdigest()[:8], 16
-        ) % dim
+        p = portable_hash_of(f"hb:{band}:{i}") % dim
         i += 1
         if p not in seen:
             seen.add(p)

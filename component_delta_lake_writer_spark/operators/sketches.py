@@ -12,9 +12,10 @@ Scale posture: the sketch build is ONE aggregation keyed on
 after map-side partial aggregation, so shuffle volume is O(depth *
 width * tasks) no matter how many input rows; the grid itself is
 ``depth*width`` rows of metadata. The heavy-hitter query joins a
-candidate set against the broadcast grid. Hashes are md5-derived and
-engine-portable (the same arithmetic reproduces in ANSI SQL), so the
-estimates are deterministic — no seed state, no model files.
+candidate set against the broadcast grid. Positions come from the
+portable hash (``functions/hashing.py``), which the SQL oracle
+reproduces, so the estimates are deterministic — no seed state, no
+model files.
 """
 
 from __future__ import annotations
@@ -22,25 +23,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from component_delta_lake_writer_spark.functions.hashing import portable_hash
+
 __all__ = ["countmin_sketch", "countmin_estimate", "countmin_heavy_hitters"]
 
 
 def _pos(j, value_col, width: int):
-    """Row-j hash position of a value: first 8 md5 hex chars -> int,
-    mod width. Engine-portable: DuckDB spells the identical number as
-    ``('0x' || substr(md5(j || '|' || v), 1, 8))::UBIGINT % width``."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", j.cast("string"), value_col)),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % F.lit(width)
-    )
+    """Row-j hash position of a value: the portable hash of
+    ``'<j>|<value>'`` mod width."""
+    return portable_hash(
+        F.concat_ws("|", j.cast("string"), value_col)
+    ) % F.lit(width)
 
 
 def countmin_sketch(

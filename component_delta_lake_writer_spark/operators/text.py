@@ -8,7 +8,9 @@ Beyond-reference extension (SURVEY §2.6/§7 M4): the reference has no
 scalar text surface; these are the operators a 100 TB document corpus
 needs (tokenize/quality/language-ID/fingerprint), designed to run as
 narrow projections over a partitioned scan — no shuffle at all until
-an aggregation asks for one.
+an aggregation asks for one. Integer hashes (winnowing's k-grams) are
+the portable hash of ``functions/hashing.py``; ``fingerprint`` keeps
+the full md5 hex string.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ from component_delta_lake_writer_spark.functions.exact import (
     exact_sum_product,
     quantize,
 )
+from component_delta_lake_writer_spark.functions.hashing import portable_hash
 from component_delta_lake_writer_spark.session import local_relation
 
 # whitespace tokenizer — identical semantics to the DuckDB oracle's
@@ -271,17 +274,17 @@ def winnow_fingerprints(
     the hash sequence, keep each window's minimum — all as one
     Catalyst array expression per row (sequence → transform → slice →
     array_min), no explosion until the final per-fingerprint unnest
-    and no Python. The k-gram hash is the engine's portable md5-prefix
-    (identical in the DuckDB oracle) rather than a Karp-Rabin
-    polynomial: same selection semantics, and the true rolling
-    evaluation is an implementation detail Catalyst can't express
-    cheaper anyway at k=8.
+    and no Python. The k-gram hash is the engine's portable hash
+    (``functions/hashing.py``, identical in the DuckDB oracle) rather
+    than a Karp-Rabin polynomial: same selection semantics, and the
+    true rolling evaluation is an implementation detail Catalyst can't
+    express cheaper anyway at k=8.
     """
     s = F.substring(normalize_text(F.col(text_col)), 1, max_chars)
     df = df.select(F.col(id_col), s.alias("_s"))
-    hs = F.expr(
-        f"transform(sequence(1, greatest(length(_s) - {k - 1}, 1)), "
-        f"i -> CAST(conv(substring(md5(substring(_s, i, {k})), 1, 8), 16, 10) AS BIGINT))"
+    hs = F.transform(
+        F.sequence(F.lit(1), F.greatest(F.length("_s") - (k - 1), F.lit(1))),
+        lambda i: portable_hash(F.substring("_s", i, k)),
     )
     fps = F.expr(
         f"array_distinct(transform(sequence(1, greatest(size(_hs) - {w - 1}, 1)), "

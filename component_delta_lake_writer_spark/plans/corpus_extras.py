@@ -10,14 +10,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from component_delta_lake_writer_spark.functions.exact import exact_sum
+from component_delta_lake_writer_spark.plans.extra_queries import BUCKET_SQL
 from component_delta_lake_writer_spark.plans.query_registry import query
 from component_delta_lake_writer_spark.session import local_relation
 from component_delta_lake_writer_spark.tables import load_table
 
-_BUCKET_SQL = (
-    "(('0x' || substr(md5('{salt}:' || CAST({id} AS VARCHAR)), 1, 8))"
-    "::BIGINT % 100)"
-)
 _TOKENS_SQL = "len(string_split_regex(trim(text), '\\s+'))"
 
 
@@ -61,7 +58,7 @@ def corpus_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         AS est_total_docs,
       MIN(doc_id) AS min_id
     FROM rated
-    WHERE {_BUCKET_SQL.format(id='doc_id', salt='imp')} < rate
+    WHERE {BUCKET_SQL.format(id='doc_id', salt='imp')} < rate
     GROUP BY source
     """,
 )
@@ -505,7 +502,7 @@ def bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
       MIN(doc_id) AS min_id,
       CAST(SUM(n_chars) AS BIGINT) AS sum_chars
     FROM tiled
-    WHERE {_BUCKET_SQL.format(id='doc_id', salt='qtile')} <
+    WHERE {BUCKET_SQL.format(id='doc_id', salt='qtile')} <
       CASE bucket WHEN 1 THEN 10 WHEN 2 THEN 25 WHEN 3 THEN 50
                   ELSE 100 END
     GROUP BY bucket

@@ -4,8 +4,8 @@ rows-only probes. Same float-determinism rules as query_registry."""
 
 from __future__ import annotations
 
-import hashlib
 import os
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,6 +17,7 @@ from component_delta_lake_writer_spark.functions.exact import (
     quantize,
     ratio,
 )
+from component_delta_lake_writer_spark.functions.hashing import portable_hash
 from component_delta_lake_writer_spark.operators import dedup as D
 from component_delta_lake_writer_spark.operators import similarity as SIM
 from component_delta_lake_writer_spark.plans.query_registry import (
@@ -166,43 +167,40 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ANN_PLANES = 6
 _ANN_DIM = 64
+_DOT_SQL = (
+    "list_reduce(list_transform(generate_series(1, 64), "
+    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
+)
 
 
-def _plane_sign(p: int, d: int) -> float:
-    h = int(hashlib.md5(f"{p}:{d}".encode()).hexdigest()[:8], 16)
-    return 1.0 if h % 2 == 0 else -1.0
+def _bucket_sql(vec: str) -> str:
+    """The hyperplane bucket of ``vec`` in SQL: per-plane deterministic
+    ±1 signs, identical to similarity.hyperplane_sign_bucket."""
 
-
-def _ann_oracle() -> str:
-    # per-plane deterministic ±1 signs, identical to
-    # similarity.hyperplane_sign_bucket
-    def acc(p: int, vec: str) -> str:
+    def acc(p: int) -> str:
         terms = " + ".join(
-            f"CAST({vec}[{d+1}] AS DOUBLE) * ({_plane_sign(p, d)})"
-            for d in range(_ANN_DIM)
+            f"CAST({vec}[{d+1}] AS DOUBLE) * ({sign})"
+            for d, sign in enumerate(SIM.plane_signs(p, _ANN_DIM))
         )
         return f"({terms})"
 
-    def bucket(vec: str) -> str:
-        bits = " + ".join(
-            f"CASE WHEN {acc(p, vec)} > 0 THEN {1 << p} ELSE 0 END"
-            for p in range(_ANN_PLANES)
-        )
-        return f"({bits})"
-
-    dot = (
-        "list_reduce(list_transform(generate_series(1, 64), "
-        "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
+    bits = " + ".join(
+        f"CASE WHEN {acc(p)} > 0 THEN {1 << p} ELSE 0 END"
+        for p in range(_ANN_PLANES)
     )
+    return f"({bits})"
+
+
+def _ann_oracle() -> str:
     return f"""
     WITH b AS (
-      SELECT vec_id, embedding, {bucket('embedding')} AS bucket FROM embeddings
+      SELECT vec_id, embedding, {_bucket_sql('embedding')} AS bucket FROM embeddings
     ),
     p AS (SELECT embedding AS pv, bucket AS pbucket FROM b WHERE vec_id = 0)
     SELECT e.vec_id,
-      ROUND({dot.format(a='e.embedding', b='p.pv')}
-        / (sqrt({dot.format(a='e.embedding', b='e.embedding')})
-           * sqrt({dot.format(a='p.pv', b='p.pv')})), 6) AS cosine
+      ROUND({_DOT_SQL.format(a='e.embedding', b='p.pv')}
+        / (sqrt({_DOT_SQL.format(a='e.embedding', b='e.embedding')})
+           * sqrt({_DOT_SQL.format(a='p.pv', b='p.pv')})), 6) AS cosine
     FROM b e, p
     WHERE e.bucket = p.pbucket AND e.vec_id <> 0
     ORDER BY cosine DESC, e.vec_id LIMIT 10
@@ -384,32 +382,14 @@ _ORC["stream_to_managed_table"] = (
 
 
 def _near_dup_oracle() -> str:
-    def acc(p: int, vec: str) -> str:
-        terms = " + ".join(
-            f"CAST({vec}[{d+1}] AS DOUBLE) * ({_plane_sign(p, d)})"
-            for d in range(_ANN_DIM)
-        )
-        return f"({terms})"
-
-    def bucket(vec: str) -> str:
-        bits = " + ".join(
-            f"CASE WHEN {acc(p, vec)} > 0 THEN {1 << p} ELSE 0 END"
-            for p in range(_ANN_PLANES)
-        )
-        return f"({bits})"
-
-    dot = (
-        "list_reduce(list_transform(generate_series(1, 64), "
-        "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
-    )
     cos = (
-        f"ROUND({dot.format(a='a.embedding', b='b.embedding')}"
-        f" / (sqrt({dot.format(a='a.embedding', b='a.embedding')})"
-        f" * sqrt({dot.format(a='b.embedding', b='b.embedding')})), 6)"
+        f"ROUND({_DOT_SQL.format(a='a.embedding', b='b.embedding')}"
+        f" / (sqrt({_DOT_SQL.format(a='a.embedding', b='a.embedding')})"
+        f" * sqrt({_DOT_SQL.format(a='b.embedding', b='b.embedding')})), 6)"
     )
     return f"""
     WITH bk AS (
-      SELECT vec_id, embedding, {bucket('embedding')} AS bucket FROM embeddings
+      SELECT vec_id, embedding, {_bucket_sql('embedding')} AS bucket FROM embeddings
     )
     SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cosine
     FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
@@ -2518,7 +2498,8 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle-checkable because membership is a pure function of the id.
 # ---------------------------------------------------------------------------
 
-_BUCKET_SQL = (
+#: DuckDB twin of ``operators.sampling._bucket`` (corpus_extras too).
+BUCKET_SQL = (
     "(('0x' || substr(md5('{salt}:' || CAST({id} AS VARCHAR)), 1, 8))"
     "::BIGINT % 100)"
 )
@@ -2529,7 +2510,7 @@ _BUCKET_SQL = (
     oracle=f"""
     SELECT lang, COUNT(*) AS n_sampled, MIN(doc_id) AS min_id
     FROM documents
-    WHERE {_BUCKET_SQL.format(id='doc_id', salt='strata')} <
+    WHERE {BUCKET_SQL.format(id='doc_id', salt='strata')} <
       CASE lang WHEN 'en' THEN 50 WHEN 'de' THEN 20 WHEN 'fr' THEN 20
                 ELSE 0 END
     GROUP BY lang
@@ -2555,7 +2536,7 @@ def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "train_test_split_docs",
     oracle=f"""
-    SELECT CASE WHEN {_BUCKET_SQL.format(id='doc_id', salt='split')} < 10
+    SELECT CASE WHEN {BUCKET_SQL.format(id='doc_id', salt='split')} < 10
                 THEN 'test' ELSE 'train' END AS split,
            lang, COUNT(*) AS n
     FROM documents GROUP BY 1, 2
@@ -3781,35 +3762,17 @@ def ann_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_batch_lsh_oracle() -> str:
-    def acc(p: int, vec: str) -> str:
-        terms = " + ".join(
-            f"CAST({vec}[{d+1}] AS DOUBLE) * ({_plane_sign(p, d)})"
-            for d in range(_ANN_DIM)
-        )
-        return f"({terms})"
-
-    def bucket(vec: str) -> str:
-        bits = " + ".join(
-            f"CASE WHEN {acc(p, vec)} > 0 THEN {1 << p} ELSE 0 END"
-            for p in range(_ANN_PLANES)
-        )
-        return f"({bits})"
-
-    dot = (
-        "list_reduce(list_transform(generate_series(1, 64), "
-        "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
-    )
     return f"""
     WITH b AS (
-      SELECT vec_id, embedding, {bucket('embedding')} AS bucket FROM embeddings
+      SELECT vec_id, embedding, {_bucket_sql('embedding')} AS bucket FROM embeddings
     ),
     q AS (SELECT vec_id AS qid, embedding AS qv, bucket FROM b
           WHERE vec_id % 100 = 0),
     s AS (
       SELECT q.qid, e.vec_id,
-        ROUND({dot.format(a='e.embedding', b='q.qv')}
-          / (sqrt({dot.format(a='e.embedding', b='e.embedding')})
-             * sqrt({dot.format(a='q.qv', b='q.qv')})), 6) AS cosine
+        ROUND({_DOT_SQL.format(a='e.embedding', b='q.qv')}
+          / (sqrt({_DOT_SQL.format(a='e.embedding', b='e.embedding')})
+             * sqrt({_DOT_SQL.format(a='q.qv', b='q.qv')})), 6) AS cosine
       FROM b e JOIN q ON e.bucket = q.bucket AND e.vec_id <> q.qid
     )
     SELECT qid, vec_id, cosine FROM (
@@ -8333,9 +8296,11 @@ def bradley_terry_parts(
     return bradley_terry(cmp, "w", "l", iterations=2, top_k=20)
 
 
-@query(
-    "fdr_bh_orders",
-    oracle="""
+# The fdr fixture: a 499-test grid, test ids from o_orderkey mod 499,
+# p-values u = (hash('fdr:<tid>') + 1) / 2^32 (uniform under the null)
+# with every 7th test planted at u/500 so the corrections fire. u is
+# DECIMAL, as the SQL literals 1.0 and 4294967296.0 type it.
+_FDR_TESTS_SQL = """
     WITH t0 AS (SELECT DISTINCT o_orderkey % 499 AS tid FROM orders),
     tt AS (
       SELECT CAST(tid AS VARCHAR) AS test_id,
@@ -8346,7 +8311,33 @@ def bradley_terry_parts(
                  ::BIGINT + 1.0) / 4294967296.0)
         END, 9) AS p
       FROM t0
-    ),
+    ),"""
+
+
+def _fdr_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(test_id, p) of the fdr fixture; ``_FDR_TESTS_SQL``'s ``tt``."""
+    tid = F.col("tid")
+    u = (
+        portable_hash(F.concat(F.lit("fdr:"), tid.cast("string")))
+        + F.lit(Decimal("1.0"))
+    ) / F.lit(Decimal("4294967296.0"))
+    return (
+        load_table(spark, sf_dir, "orders")
+        .select((F.col("o_orderkey") % 499).alias("tid"))
+        .distinct()
+        .select(
+            tid.cast("string").alias("test_id"),
+            F.round(
+                F.when(tid % 7 == 0, u / F.lit(500)).otherwise(u), 9
+            ).alias("p"),
+        )
+    )
+
+
+@query(
+    "fdr_bh_orders",
+    oracle=_FDR_TESTS_SQL
+    + """
     rk AS (
       SELECT test_id, p,
         ROW_NUMBER() OVER (ORDER BY p, test_id) AS i,
@@ -8372,36 +8363,16 @@ def bradley_terry_parts(
 )
 def fdr_bh_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benjamini–Hochberg FDR correction
-    (operators.experiments.benjamini_hochberg) over a 499-test
-    grid: test ids from o_orderkey mod 499, p-values from the house
-    md5 ladder (uniform under the null) with every 7th test planted
-    at p/500 so the step-up boundary actually fires — q-values via
-    the distributed suffix-min, reject flags on the 9dp-rounded q
-    (both engines)."""
+    (operators.experiments.benjamini_hochberg) on the fdr fixture
+    (``_fdr_tests``) — q-values via the distributed suffix-min,
+    reject flags on the 9dp-rounded q (both engines)."""
     from component_delta_lake_writer_spark.operators.experiments import (
         benjamini_hochberg,
     )
 
-    t0 = (
-        load_table(spark, sf_dir, "orders")
-        .select((F.col("o_orderkey") % 499).alias("tid"))
-        .distinct()
+    return benjamini_hochberg(
+        _fdr_tests(spark, sf_dir), "test_id", "p", alpha=0.05
     )
-    u = (
-        "((CAST(conv(substring(md5(concat('fdr:', "
-        "CAST(tid AS STRING))), 1, 8), 16, 10) AS BIGINT) + 1.0) "
-        "/ 4294967296.0)"
-    )
-    tests = t0.select(
-        F.col("tid").cast("string").alias("test_id"),
-        F.round(
-            F.when(
-                F.col("tid") % 7 == 0, F.expr(u) / F.lit(500)
-            ).otherwise(F.expr(u)),
-            9,
-        ).alias("p"),
-    )
-    return benjamini_hochberg(tests, "test_id", "p", alpha=0.05)
 
 
 @query(
@@ -11767,18 +11738,8 @@ def kendall_tau_orders(
 
 @query(
     "fdr_by_orders",
-    oracle="""
-    WITH t0 AS (SELECT DISTINCT o_orderkey % 499 AS tid FROM orders),
-    tt AS (
-      SELECT CAST(tid AS VARCHAR) AS test_id,
-        ROUND(CASE WHEN tid % 7 = 0
-          THEN ((('0x' || substr(md5('fdr:' || tid::VARCHAR), 1, 8))
-                 ::BIGINT + 1.0) / 4294967296.0) / 500
-          ELSE ((('0x' || substr(md5('fdr:' || tid::VARCHAR), 1, 8))
-                 ::BIGINT + 1.0) / 4294967296.0)
-        END, 9) AS p
-      FROM t0
-    ),
+    oracle=_FDR_TESTS_SQL
+    + """
     hc AS (
       SELECT m,
         list_reduce([1.0 / j for j in range(1, CAST(m AS INT) + 1)],
@@ -11819,26 +11780,9 @@ def fdr_by_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         benjamini_yekutieli,
     )
 
-    t0 = (
-        load_table(spark, sf_dir, "orders")
-        .select((F.col("o_orderkey") % 499).alias("tid"))
-        .distinct()
+    return benjamini_yekutieli(
+        _fdr_tests(spark, sf_dir), "test_id", "p", alpha=0.05
     )
-    u = (
-        "((CAST(conv(substring(md5(concat('fdr:', "
-        "CAST(tid AS STRING))), 1, 8), 16, 10) AS BIGINT) + 1.0) "
-        "/ 4294967296.0)"
-    )
-    tests = t0.select(
-        F.col("tid").cast("string").alias("test_id"),
-        F.round(
-            F.when(
-                F.col("tid") % 7 == 0, F.expr(u) / F.lit(500)
-            ).otherwise(F.expr(u)),
-            9,
-        ).alias("p"),
-    )
-    return benjamini_yekutieli(tests, "test_id", "p", alpha=0.05)
 
 
 @query(
@@ -11909,18 +11853,8 @@ def durbin_watson_events(
 
 @query(
     "holm_orders",
-    oracle="""
-    WITH t0 AS (SELECT DISTINCT o_orderkey % 499 AS tid FROM orders),
-    tt AS (
-      SELECT CAST(tid AS VARCHAR) AS test_id,
-        ROUND(CASE WHEN tid % 7 = 0
-          THEN ((('0x' || substr(md5('fdr:' || tid::VARCHAR), 1, 8))
-                 ::BIGINT + 1.0) / 4294967296.0) / 500
-          ELSE ((('0x' || substr(md5('fdr:' || tid::VARCHAR), 1, 8))
-                 ::BIGINT + 1.0) / 4294967296.0)
-        END, 9) AS p
-      FROM t0
-    ),
+    oracle=_FDR_TESTS_SQL
+    + """
     rk AS (
       SELECT test_id, p,
         ROW_NUMBER() OVER (ORDER BY p, test_id) AS i,
@@ -11955,26 +11889,9 @@ def holm_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         holm_bonferroni,
     )
 
-    t0 = (
-        load_table(spark, sf_dir, "orders")
-        .select((F.col("o_orderkey") % 499).alias("tid"))
-        .distinct()
+    return holm_bonferroni(
+        _fdr_tests(spark, sf_dir), "test_id", "p", alpha=0.05
     )
-    u = (
-        "((CAST(conv(substring(md5(concat('fdr:', "
-        "CAST(tid AS STRING))), 1, 8), 16, 10) AS BIGINT) + 1.0) "
-        "/ 4294967296.0)"
-    )
-    tests = t0.select(
-        F.col("tid").cast("string").alias("test_id"),
-        F.round(
-            F.when(
-                F.col("tid") % 7 == 0, F.expr(u) / F.lit(500)
-            ).otherwise(F.expr(u)),
-            9,
-        ).alias("p"),
-    )
-    return holm_bonferroni(tests, "test_id", "p", alpha=0.05)
 
 
 @query(

@@ -9,12 +9,12 @@ answers "is value X definitely absent from this unit?" and lets
 
 Design:
 
-- The hash is md5 over the value's CAST-to-string form, split into
-  four 32-bit segments — computable identically JVM-side
-  (``conv(substring(md5(cast(col as string)),…),16,10)``) and
-  driver-side (``hashlib.md5``), which is what makes write-side build
-  and read-side probe agree. Only int/bigint/string columns are
-  indexed (their string forms match across engines exactly).
+- A value's K = 4 bit positions are words 0-3 of the portable hash
+  (``functions/hashing.py``) of its CAST-to-string form, mod m. The
+  JVM and the driver compute the same words, which is what makes
+  write-side build and read-side probe agree. Only int/bigint/string
+  columns are indexed (their string forms match across engines
+  exactly).
 - Build is ONE distributed aggregation per unit+column: every row maps
   to k=4 bit positions, positions are distinct-collected (bounded by
   the bitmap size m, never by row count) and folded into a bitmap on
@@ -35,11 +35,15 @@ per column per unit).
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from component_delta_lake_writer_spark.functions.hashing import (
+    portable_hash,
+    portable_hash_of,
+)
 
 K = 4
 _MIN_BITS = 1 << 13
@@ -56,27 +60,17 @@ def bitmap_size(expected_rows: int) -> int:
 
 
 def positions_expr(col: str, m: int):
-    """Spark-side: array of K bit positions for a value — md5 of the
-    string form, four 32-bit hex segments mod m (whole-stage codegen,
-    no Python)."""
-    h = F.md5(F.col(col).cast("string"))
-    return F.array(
-        *[
-            (
-                F.conv(F.substring(h, 1 + 8 * i, 8), 16, 10).cast("long")
-                % m
-            ).cast("int")
-            for i in range(K)
-        ]
-    )
+    """Spark-side: array of K bit positions for a value (whole-stage
+    codegen, no Python)."""
+    v = F.col(col).cast("string")
+    return F.array(*[(portable_hash(v, i) % m).cast("int") for i in range(K)])
 
 
 def positions_for_value(value, m: int) -> list[int]:
     """Driver-side twin of ``positions_expr`` (must match bit-for-bit;
     str() of Python int/str equals Spark's CAST AS STRING for
     int/bigint/string columns)."""
-    h = hashlib.md5(str(value).encode("utf-8")).hexdigest()
-    return [int(h[8 * i : 8 * i + 8], 16) % m for i in range(K)]
+    return [portable_hash_of(str(value), i) % m for i in range(K)]
 
 
 def build_bitmap(df: DataFrame, col: str, m: int) -> bytes | None:

@@ -2123,11 +2123,31 @@ class ManagedTable:
         """Write one commit's change rows (its columns plus
         ``_change_type``) once, under physical column names, into a
         directory of this writer's own under ``_change_data/`` →
-        [(table-relative path, size)], the commit's cdc actions."""
+        [(table-relative path, size)], the commit's cdc actions.
+
+        A change set whose Catalyst estimate fits one scan split
+        (``spark.sql.files.maxPartitionBytes``) is written as one file,
+        not one per shuffle partition: each file is one partition of a
+        CDF stream read. A larger set, or one without an estimate,
+        keeps the frame's partitioning."""
+        from component_delta_lake_writer_spark.operators.merge import (
+            _plan_size_bytes,
+        )
+        from component_delta_lake_writer_spark.operators.text import (
+            _parse_bytes,
+        )
+
+        df = self._to_physical(changes, mapping)
+        est = _plan_size_bytes(df)
+        split = _parse_bytes(
+            self.spark.conf.get("spark.sql.files.maxPartitionBytes")
+        )
+        if est is not None and est <= split:
+            df = df.coalesce(1)
         rel_dir = os.path.join("_change_data", uuid.uuid4().hex)
         out = os.path.join(self.path, rel_dir)
         try:
-            self._to_physical(changes, mapping).write.parquet(out)
+            df.write.parquet(out)
         except BaseException:
             shutil.rmtree(out, ignore_errors=True)
             raise

@@ -103,17 +103,23 @@ def test_every_cdf_write_names_its_single_copy_change_files(
     merge-on-read), DELETE (copy-on-write, merge-on-read, keyed),
     UPDATE, replace_where and upsert_full_sync — carries cdc actions
     whose files each exist exactly once on disk, and the external
-    reader's feed equals read_changes, on a column-mapped table too."""
+    reader's feed equals read_changes, on a column-mapped table too.
+    Each small change set is one file, even at 32 shuffle partitions."""
     t = _table(spark, str(tmp_path / "t"))
     vc = "v"
     if mapped:
         t.rename_column("v", "w")
         vc = "w"
     src = t.read()
-    for name, op in _OPS:
-        c = op(t, src, vc)
-        assert c.cdc_files, name
-        assert t.latest_commit().cdc_files == c.cdc_files, name
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        for name, op in _OPS:
+            c = op(t, src, vc)
+            assert len(c.cdc_files) == 1, name
+            assert t.latest_commit().cdc_files == c.cdc_files, name
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
     named = [f for c in t.history() for f in c.cdc_files]
     assert len(named) == len(set(named))
     assert _change_files_on_disk(t) == set(named)
