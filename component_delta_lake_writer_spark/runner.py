@@ -12,9 +12,13 @@ E2 becomes a projection, not a persisted object.
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass, field
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 from component_delta_lake_writer_spark.config import ColumnSpec, JobSpec, LoadMode
 from component_delta_lake_writer_spark.errors import UserException
@@ -46,6 +50,59 @@ class FileInput:
     paths: list[str] = field(default_factory=list)
 
 
+# a URI scheme and its slashes ("file:/", "s3a://"); stripped, with the
+# path URL-decoded, a Spark file path compares equal to ``_norm(path)``
+_SCHEME = r"^[a-zA-Z0-9+.\-]+:/+"
+
+
+def _norm(p: str) -> str:
+    """A slice path in the scheme-stripped, decoded form of a scan's
+    file path."""
+    if re.match(_SCHEME, p):
+        return re.sub(_SCHEME, "/", p)
+    return os.path.abspath(p)
+
+
+def _whole_slice_partitions(
+    staged: DataFrame, normed: list[str]
+) -> list[tuple[str, int]] | None:
+    """(``input_file_name()``, slice index) of each scan partition of
+    ``staged`` when Spark planned every slice whole and alone in one
+    partition, else None.
+
+    Read off the planned scan (``FileSourceScanExec.inputRDD``), not
+    re-derived from ``maxSplitBytes``: a wrong yes would misnumber
+    rows. The partition count is checked first, so a packed or split
+    listing costs one JVM call; a zero-byte slice gets no partition,
+    so it takes the split-offset plan too.
+    """
+    try:
+        leaf = staged._jdf.queryExecution().sparkPlan().collectLeaves().head()
+        if leaf.getClass().getSimpleName() != "FileSourceScanExec":
+            return None
+        parts = leaf.inputRDD().partitions()
+    except Py4JError:  # a listing whose plan cannot be read
+        return None
+    if len(parts) != len(normed):
+        return None
+    slice_of = {p: i for i, p in enumerate(normed)}
+    out = []
+    for part in parts:
+        files = part.files()
+        if len(files) != 1:
+            return None
+        f = files[0]
+        if f.start() != 0 or f.length() != f.fileSize():
+            return None
+        path = f.urlEncodedPath()  # what input_file_name() reads
+        i = slice_of.get(unquote(re.sub(_SCHEME, "/", path)))
+        if i is None:
+            return None
+        out.append((path, i))
+    # a slice split in two shows start > 0 above, so the map is 1:1
+    return out
+
+
 def plan_table_scan(
     spark: SparkSession, tbl: TableInput, preserve_order: bool = False
 ) -> DataFrame:
@@ -60,68 +117,99 @@ def plan_table_scan(
     ``_row_in_slice`` (byte-order position within the slice). Sorting
     by (_slice_idx, _row_in_slice) reproduces CSV insertion order.
 
-    Scale design (one FileScan, not a per-slice scan loop — a
-    5,000-slice table must not become a 5,000-scan plan):
+    Both plans are ONE FileScan of the whole listing, not a per-slice
+    scan loop (a 5,000-slice table must not become a 5,000-scan plan),
+    and both number rows with ``monotonically_increasing_id``, which is
+    ``partitionIndex << 33 | rowInPartition``. Which plan is used is
+    read from Spark's own split plan of the staged scan
+    (``_whole_slice_partitions``):
 
-    - ``_slice_idx``: the scan's hidden ``_metadata.file_path`` joined
-      against a (path → manifest position) map built on the driver as
-      an Arrow ``LocalRelation`` (``session.local_relation``). Its exact
-      size estimate keeps the whole scan's estimate finite, so an
-      upsert of this scan still plans its anti-join as a broadcast of
-      the source keys instead of shuffling the target; it runs no
-      Python-worker job either.
-    - ``_row_in_slice``: reconstructed WITHOUT shuffling the data.
-      ``monotonically_increasing_id`` is contiguous within a file
-      split, so row-in-slice = (rows in earlier splits of the file) +
-      (id − split's min id). Split row-counts/min-ids come from a
-      map-side-combinable aggregate whose result is tiny (one row per
-      split) and is broadcast back — the 100 TB never moves. Relies on
-      Spark's deterministic split planning (same listing + conf ⇒ same
-      splits across the two jobs), which holds for file sources.
+    - **One pass**, when every slice is whole and alone in one scan
+      partition (each ``FilePartition`` holds one ``PartitionedFile``
+      with ``start == 0`` and ``length == fileSize``, one partition per
+      slice). Then ``_row_in_slice`` is the id's low 33 bits and
+      ``_slice_idx`` a literal array indexed by ``spark_partition_id()``,
+      the id's high bits.
+      One job, no join, aggregate or window. Each row also checks
+      ``input_file_name()`` against the file its partition was planned
+      with, so a scan that Spark re-packs before it runs (the conf or
+      the parallelism changed) fails instead of misnumbering rows.
+    - **Split offsets** otherwise: slices packed together, a slice
+      larger than a split, a zero-byte slice, or a plan that cannot be
+      read. Row numbers restart at no file boundary there, so this is
+      the only correct plan for those inputs. ``_slice_idx`` joins
+      the decoded ``_metadata.file_path`` against a (path → position)
+      map built on the driver as an Arrow ``LocalRelation``
+      (``session.local_relation``); its exact size estimate keeps the
+      scan's estimate finite, so an upsert of this scan still plans
+      its anti-join as a broadcast of the source keys. The id is
+      contiguous within a file split, so row-in-slice = (rows in
+      earlier splits of the file) + (id − split's min id); split
+      row-counts and min-ids come from a map-side-combinable aggregate
+      (one tiny row per split) that is window-summed and broadcast
+      back, so the data never moves.
+
+    Both rely on Spark's deterministic split planning: the same listing
+    and conf give the same splits, in the check and in the job(s) that
+    run the plan. A slice listed twice is refused in either mode.
     """
     paths = tbl.slice_paths
     if tbl.manifest_path:
         paths = [r.url for r in read_manifest_urls(spark, tbl.manifest_path).collect()]
     if not paths:
         raise UserException("Input table has no slices.")
+    normed = [_norm(p) for p in paths]
+    seen: set[str] = set()
+    for p, n in zip(paths, normed):
+        if n in seen:
+            raise UserException(f"Slice {p} is listed more than once.")
+        seen.add(n)
 
-    def staged_scan(ps: list[str]):
-        return read_csv_all_string(
-            spark,
-            ps,
-            n_columns=len(tbl.columns),
-            header=tbl.has_header,
-            delimiter=tbl.delimiter,
-            quote=tbl.enclosure,
+    staged = read_csv_all_string(
+        spark,
+        paths,
+        n_columns=len(tbl.columns),
+        header=tbl.has_header,
+        delimiter=tbl.delimiter,
+        quote=tbl.enclosure,
+    )
+    if not preserve_order:
+        return cast_projection(staged, tbl.columns, positional=True)
+
+    layout = _whole_slice_partitions(staged, normed)
+    if layout is not None:
+        part = F.spark_partition_id()
+        planned = F.get(F.array(*[F.lit(p) for p, _ in layout]), part)
+        return cast_projection(
+            staged.select(
+                "*",
+                # a conf or parallelism change after this check re-packs
+                # the scan: fail loudly rather than misnumber rows
+                F.when(
+                    ~F.input_file_name().eqNullSafe(planned),
+                    F.raise_error(F.lit(
+                        "preserve-order scan: Spark re-planned the slice "
+                        "splits after plan_table_scan; plan the scan again"
+                    )),
+                ).otherwise(
+                    F.get(F.array(*[F.lit(i) for _, i in layout]), part)
+                ).alias("_slice_idx"),
+                F.monotonically_increasing_id()
+                .bitwiseAND((1 << 33) - 1)
+                .alias("_row_in_slice"),
+            ),
+            tbl.columns, positional=True, keep=["_slice_idx", "_row_in_slice"],
         )
 
-    if not preserve_order:
-        return cast_projection(staged_scan(paths), tbl.columns, positional=True)
-
-    import re
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    _SCHEME = r"^[a-zA-Z0-9+.\-]+:/+"
-
-    def norm(p: str) -> str:
-        # match the scheme-stripped form of _metadata.file_path
-        if re.match(_SCHEME, p):
-            return re.sub(_SCHEME, "/", p)
-        return os.path.abspath(p)
-
     idx_map = local_relation(
-        spark,
-        "__file STRING, _slice_idx INT",
-        [[norm(p) for p in paths], range(len(paths))],
+        spark, "__file STRING, _slice_idx INT", [normed, range(len(paths))]
     )
     # _metadata.file_path is URL-ENCODED ('a b.csv' -> 'a%20b.csv')
     # while the driver-side manifest paths are raw — undecoded, the
     # inner joins below silently DROP every row of a slice whose path
     # contains a space/%/#. '+' is pre-escaped because url_decode is
     # x-www-form (+ -> space) while file URLs keep '+' literal.
-    staged = staged_scan(paths).select(
+    staged = staged.select(
         "*",
         F.url_decode(
             F.replace(

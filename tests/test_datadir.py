@@ -261,6 +261,65 @@ def test_preserve_order_with_special_char_paths(spark, tmp_path):
     assert rows == {(1, "x", 0, 0), (2, "y", 0, 1), (3, "z", 1, 0)}
 
 
+def test_slice_listed_twice_is_refused(spark, tmp_path):
+    """A slice list that names one file twice (also spelled once with
+    and once without a scheme) is malformed input: it used to return
+    that slice's rows 2 or 4 times, half of them with a row number off
+    by 2^33. Both scan modes refuse it before planning."""
+    from component_delta_lake_writer_spark.config import ColumnSpec
+    from component_delta_lake_writer_spark.datadir import TableInput
+    from component_delta_lake_writer_spark.errors import UserException
+    from component_delta_lake_writer_spark.runner import plan_table_scan
+
+    a, b = tmp_path / "a.csv", tmp_path / "b.csv"
+    a.write_text("1,x\n2,y\n")
+    b.write_text("3,z\n")
+    cols = [ColumnSpec("k", "INTEGER"), ColumnSpec("s", "STRING")]
+    for again in (str(a), f"file://{a}"):
+        for header in (False, True):
+            tbl = TableInput(
+                slice_paths=[str(a), str(b), again], columns=cols,
+                has_header=header,
+            )
+            for preserve in (False, True):
+                with pytest.raises(UserException, match="a.csv"):
+                    plan_table_scan(spark, tbl, preserve_order=preserve)
+
+
+def test_one_pass_scan_fails_when_spark_repacks_it(spark, tmp_path):
+    """The one-pass preserve-order plan numbers rows by the scan
+    partitions planned when it was built. Run after a conf change that
+    packs the slices into one split, it must fail, not misnumber."""
+    from component_delta_lake_writer_spark.config import ColumnSpec
+    from component_delta_lake_writer_spark.datadir import TableInput
+    from component_delta_lake_writer_spark.runner import plan_table_scan
+    from pyspark.errors import SparkRuntimeException
+
+    paths = []
+    for i in range(3):
+        p = tmp_path / f"s{i}.csv"
+        p.write_text("".join(f"{10 * i + j},v\n" for j in range(5)))
+        paths.append(str(p))
+    tbl = TableInput(
+        slice_paths=paths,
+        columns=[ColumnSpec("k", "INTEGER"), ColumnSpec("s", "STRING")],
+    )
+    df = plan_table_scan(spark, tbl, preserve_order=True)
+    assert "Aggregate" not in df._jdf.queryExecution().optimizedPlan().toString()
+    pack = {
+        "spark.sql.files.openCostInBytes": "0",
+        "spark.sql.files.minPartitionNum": "1",
+    }
+    for k, v in pack.items():
+        spark.conf.set(k, v)
+    try:
+        with pytest.raises(SparkRuntimeException, match="re-planned the slice"):
+            df.collect()
+    finally:
+        for k in pack:
+            spark.conf.unset(k)
+
+
 def test_multi_path_jsonl_and_orc(spark, tmp_path):
     """Review finding: *unpacking bound the second path to the schema/
     mergeSchema positional — any multi-path list crashed."""

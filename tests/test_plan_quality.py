@@ -125,7 +125,11 @@ def test_ivf_job_count_locked(spark):
 def test_preserve_order_scan_is_single_filescan(tmp_path, spark):
     """O1 at scale: a 100-slice preserve-order input must plan as ONE
     multi-path FileScan (plus the tiny split-offset scan) — not one
-    scan node per slice, which blows up plan size as O(slices)."""
+    scan node per slice, which blows up plan size as O(slices).
+
+    Spark packs these 100 two-row slices into a few splits, so this
+    pins the split-offset plan; the one-pass plan of whole slices is
+    ``test_whole_slice_preserve_order_scan_is_one_job``."""
     from component_delta_lake_writer_spark.config import ColumnSpec
     from component_delta_lake_writer_spark.runner import (
         TableInput,
@@ -158,6 +162,46 @@ def test_preserve_order_scan_is_single_filescan(tmp_path, spark):
     # and the result still reproduces exact insertion order
     rows = df.orderBy("_slice_idx", "_row_in_slice").select("id").collect()
     assert [r["id"] for r in rows] == list(range(200))
+
+
+def test_whole_slice_preserve_order_scan_is_one_job(tmp_path, spark):
+    """Slices that Spark plans whole, each alone in one split, are read
+    once: one csv FileScan with no join, aggregate or window, and the
+    scan plus a noop write dispatch exactly one job."""
+    from component_delta_lake_writer_spark.config import ColumnSpec
+    from component_delta_lake_writer_spark.runner import (
+        TableInput,
+        plan_table_scan,
+    )
+
+    paths = []
+    for i in range(4):
+        p = tmp_path / f"slice_{i}.csv"
+        p.write_text("".join(f"{1000 * i + j},n{j}\n" for j in range(500)))
+        paths.append(str(p))
+    tbl = TableInput(
+        slice_paths=paths,
+        columns=[ColumnSpec("id", "INTEGER"), ColumnSpec("name", "STRING")],
+    )
+    sc = spark.sparkContext
+    group = "preserve-order-one-pass"
+    sc.setJobGroup(group, group)
+    try:
+        df = plan_table_scan(spark, tbl, preserve_order=True)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1, f"{len(jobs)} jobs dispatched: {sorted(jobs)}"
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan csv") == 1, plan
+    for op in ("Join", "Aggregate", "Window"):
+        assert op not in plan, plan
+    rows = df.orderBy("_slice_idx", "_row_in_slice").select("id").collect()
+    assert [r["id"] for r in rows] == [
+        1000 * i + j for i in range(4) for j in range(500)
+    ]
 
 
 def _ancestors(plan: str, needle: str) -> list[str]:

@@ -4,10 +4,12 @@ round-trips, and the managed-table mode laws."""
 
 from __future__ import annotations
 
+import contextlib
+import os
 import tempfile
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -3355,3 +3357,98 @@ def test_welch_anova_matches_bruteforce(spark, rows):
     assert r.f_star == pytest.approx(f, rel=1e-5, abs=5.1e-7)
     assert r.df1 == k - 1
     assert r.df2 == pytest.approx(df2, abs=0.02)
+
+
+@contextlib.contextmanager
+def _conf(spark, conf: dict[str, str]):
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+# Split-plan confs for the preserve-order scan: "whole" gives every
+# file its own partition (the open cost alone overflows a split),
+# "packed" puts every file in one split, "split" cuts every file
+# longer than 16 bytes.
+_SCAN_CONFS = {
+    "whole": {"spark.sql.files.openCostInBytes": str(1 << 30)},
+    "packed": {
+        "spark.sql.files.openCostInBytes": "0",
+        "spark.sql.files.minPartitionNum": "1",
+    },
+    "split": {"spark.sql.files.maxPartitionBytes": "16"},
+}
+_SLICE_NAMES = ["s {}.csv", "s%{}.csv", "s+{}.csv"]
+
+
+@settings(
+    max_examples=_ex(20),
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    sizes=st.lists(st.integers(0, 30), min_size=1, max_size=6),
+    header=st.booleans(),
+    other=st.sampled_from(["packed", "split"]),
+)
+@example(sizes=[5, 7, 3, 9], header=False, other="packed")
+@example(sizes=[4, 0, 6], header=False, other="split")
+@example(sizes=[3, 8], header=True, other="split")
+# 21 bytes cut in two 16-byte splits, beside a zero-byte slice: as
+# many partitions as slices, each with one file, but not whole ones
+@example(sizes=[3, 0], header=False, other="split")
+def test_preserve_order_one_pass_equals_split_offsets(spark, sizes, header, other):
+    """The one-pass preserve-order plan and the split-offset plan give
+    the same (columns, _slice_idx, _row_in_slice) rows, equal to the
+    CSV files' own order. The one pass is taken exactly when every
+    slice is one whole, non-empty partition; a zero-byte slice gets no
+    partition and takes the split-offset plan without shifting the
+    slice index of later slices."""
+    from component_delta_lake_writer_spark.config import ColumnSpec
+    from component_delta_lake_writer_spark.runner import TableInput, plan_table_scan
+
+    d = tempfile.mkdtemp()
+    paths, want = [], []
+    for i, n in enumerate(sizes):
+        p = os.path.join(d, _SLICE_NAMES[i % 3].format(i))
+        rows = [(100 * i + j, f"v{i}_{j}") for j in range(n)]
+        with open(p, "w") as f:
+            if n:  # an empty slice is a zero-byte file, header or not
+                f.write("k,v\n" if header else "")
+                f.writelines(f"{k},{v}\n" for k, v in rows)
+        paths.append(p)
+        want += [(k, v, i, j) for j, (k, v) in enumerate(rows)]
+    tbl = TableInput(
+        slice_paths=paths,
+        columns=[ColumnSpec("k", "INTEGER"), ColumnSpec("v", "STRING")],
+        has_header=header,
+    )
+
+    def scan(layout: str) -> tuple[bool, list]:
+        with _conf(spark, _SCAN_CONFS[layout]):
+            df = plan_table_scan(spark, tbl, preserve_order=True)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            rows = sorted(
+                (r["k"], r["v"], r["_slice_idx"], r["_row_in_slice"])
+                for r in df.collect()
+            )
+        return "Aggregate" not in plan, rows
+
+    sizes_b = [os.path.getsize(p) for p in paths]
+    one_pass, got = scan("whole")
+    assert one_pass == all(sizes_b)
+    fell_back = {
+        "packed": len(paths) > 1 or not all(sizes_b),
+        "split": not all(0 < b <= 16 for b in sizes_b),
+    }[other]
+    other_one_pass, got_other = scan(other)
+    assert other_one_pass == (not fell_back)
+    assert got == got_other == sorted(want)
