@@ -151,7 +151,9 @@ def plan_table_scan(
 
     Both rely on Spark's deterministic split planning: the same listing
     and conf give the same splits, in the check and in the job(s) that
-    run the plan. A slice listed twice is refused in either mode.
+    run the plan. A slice listed twice is refused in either mode; with
+    ``preserve_order``, so is a slice that is not one file (a
+    directory), whose rows no manifest position numbers.
     """
     paths = tbl.slice_paths
     if tbl.manifest_path:
@@ -201,6 +203,16 @@ def plan_table_scan(
             tbl.columns, positional=True, keep=["_slice_idx", "_row_in_slice"],
         )
 
+    # a slice that names a directory scans files no slice names: its
+    # rows would match no manifest position (and numbering its files
+    # would invent positions). The listing is the scan's own, driver-side.
+    listed = {unquote(re.sub(_SCHEME, "/", f)) for f in staged.inputFiles()}
+    for p, n in zip(paths, normed):
+        if n not in listed:
+            raise UserException(
+                f"Slice {p} is not one file (a directory?); a preserve-order "
+                "scan numbers rows by slice, so each slice must be a file."
+            )
     idx_map = local_relation(
         spark, "__file STRING, _slice_idx INT", [normed, range(len(paths))]
     )

@@ -46,7 +46,7 @@ import shutil
 import threading
 import time
 import uuid
-from dataclasses import dataclass, field, fields
+from dataclasses import dataclass, field, fields, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -199,8 +199,8 @@ class Commit:
     # parquet path: deletionVector descriptor} for every live file with
     # deleted rows (the positions, not the keys — rows appended after
     # the delete keep living even under a reused PK): the add actions'
-    # own descriptors. Carried forward by _publish for every file whose
-    # unit survives; a rewrite of the unit drops them.
+    # own descriptors. Carried forward by ManagedTable._next for every
+    # file whose unit survives; a rewrite of the unit drops them.
     deletion_vectors: dict = field(default_factory=dict)
     # ALTER TABLE … RENAME COLUMN (Delta column mapping, mode=name):
     # {logical_name: physical_parquet_name} for columns whose on-disk
@@ -214,13 +214,13 @@ class Commit:
     # {appId: last applied writer version}. A write carrying
     # txn=(appId, v) with v <= txns[appId] is a NO-OP — the
     # exactly-once contract streaming foreachBatch / retried jobs rely
-    # on. Carried forward by every commit (merged in _publish); txn
-    # actions.
+    # on. Carried forward by every commit (merged in ManagedTable._next);
+    # txn actions.
     txns: dict = field(default_factory=dict)
     # COPY INTO ingest log: names of JSON sidecars under _ingest/, each
     # listing source files already loaded — re-running the same COPY
     # INTO skips them (file-level idempotent ingest). Carried forward
-    # by _publish; the engine.ingest domainMetadata.
+    # by ManagedTable._next; the engine.ingest domainMetadata.
     ingest_sidecars: list = field(default_factory=list)
     # Row tracking (Delta rowTracking writer feature, enabled via the
     # delta.enableRowTracking table property): {unit: {"v": version
@@ -236,10 +236,11 @@ class Commit:
     row_id_high_water: int = -1
     # Clustered-table state (Delta clustering writer feature): the
     # LOGICAL columns the table was last clustered by via
-    # optimize(cluster_by=/zorder_by=). Carried forward by _publish
-    # (Delta keeps clustering columns as table state across appends —
-    # new data is simply unclustered until the next OPTIMIZE); the
-    # delta.clustering domainMetadata. [] = never clustered.
+    # optimize(cluster_by=/zorder_by=). Carried forward by
+    # ManagedTable._next (Delta keeps clustering columns as table state
+    # across appends — new data is simply unclustered until the next
+    # OPTIMIZE); the delta.clustering domainMetadata. [] = never
+    # clustered.
     clustered_by: list = field(default_factory=list)
     # Change data feed: table-relative paths of THIS version's change
     # files (under _change_data/, physical column names plus
@@ -323,6 +324,13 @@ class ManagedTable:
     def latest_commit(self) -> Commit | None:
         snap = self._snapshot()
         return snap[1] if snap is not None else None
+
+    def _head(self) -> Commit:
+        """The latest commit; no table is an error."""
+        prev = self.latest_commit()
+        if prev is None:
+            raise UserException(f"No table at {self.path}")
+        return prev
 
     def commit_at(self, version: int) -> Commit:
         snap = self._snapshot(version)
@@ -541,16 +549,94 @@ class ManagedTable:
             cdc_files=list(state["cdc"]),
         )
 
+    def _next(
+        self,
+        prev: Commit | None,
+        action: str,
+        base: Commit | None = None,
+        txn: tuple[str, int] | None = None,
+        ingest_sidecar: str | None = None,
+        new_dvs: dict | None = None,
+        **changes,
+    ) -> Commit:
+        """The version ``action`` makes after ``prev`` (None: the root,
+        whose parent is the empty table): its parent plus ``changes``,
+        ``Commit`` fields where None keeps the parent's value. Every
+        rule for what a version inherits lives here:
+
+        - version + 1, and the timestamp now; under in-commit
+          timestamps never at or before the parent's (a regressed
+          clock must not sort a commit before its parent), and the
+          version that turns them on records the enablement point
+          readers need (earlier commits time-travel by file time);
+        - table state (units, schema, partitioning, primary key,
+          properties, stats, column mapping, clustering columns, row
+          ids) is ``base``'s: the parent's, or for RESTORE the snapshot
+          it brings back. Clustering columns stand until a clustering
+          OPTIMIZE sets new ones (new data is simply unclustered);
+        - deletion vectors ride with their files: each file of a unit
+          that survives keeps ``base``'s descriptor unless ``new_dvs``
+          sets one; a rewritten unit's descriptors drop with it;
+        - writer state is the parent's, whatever ``base`` is: txn
+          watermarks (plus ``txn``), COPY INTO sidecars (plus
+          ``ingest_sidecar``), the row-id high-water mark;
+        - row ids under row tracking: ``_assign_row_ids``;
+        - change files never carry (they are the version's own)."""
+        parent = prev or Commit(
+            version=-1, action="", data_units=[], schema_json=""
+        )
+        src = base or parent
+        commit = replace(
+            src,
+            **{k: v for k, v in changes.items() if v is not None},
+            version=parent.version + 1,
+            action=action,
+            timestamp_ms=int(time.time() * 1000),
+            txns={**parent.txns, **dict([txn] if txn else [])},
+            ingest_sidecars=parent.ingest_sidecars + (
+                [ingest_sidecar] if ingest_sidecar else []
+            ),
+            row_id_high_water=parent.row_id_high_water,
+            cdc_files=[],
+        )
+        live = set(commit.data_units)
+        commit.deletion_vectors = {
+            **{
+                rel: d for rel, d in src.deletion_vectors.items()
+                if _dv_unit(rel) in live
+            },
+            **(new_dvs or {}),
+        }
+        ict = "delta.enableInCommitTimestamps"
+        if prev is not None and _prop_on(commit.properties, ict):
+            commit.timestamp_ms = max(
+                commit.timestamp_ms, prev.timestamp_ms + 1
+            )
+            if not _prop_on(prev.properties, ict):
+                commit.properties = {
+                    **commit.properties,
+                    "delta.inCommitTimestampEnablementVersion": str(
+                        commit.version
+                    ),
+                    "delta.inCommitTimestampEnablementTimestamp": str(
+                        commit.timestamp_ms
+                    ),
+                }
+        if _prop_on(commit.properties, "delta.enableRowTracking"):
+            self._assign_row_ids(commit, prev)
+        return commit
+
     def _publish(
         self,
         commit: Commit,
         prev: Commit | None = None,
         cdc_files: list[tuple[str, int]] = (),
     ) -> Commit:
-        """Commit ``commit`` (built against ``prev``, the snapshot it
-        was read from) as the next log entry and return it as the
-        snapshot now stands — the view of the log every later reader
-        replays, which replaces ``commit``'s own bookkeeping.
+        """Commit ``commit`` (``_next(prev, …)``, built against the
+        snapshot ``prev`` it was read from) as the next log entry and
+        return it as the snapshot now stands — the view of the log
+        every later reader replays, which replaces ``commit``'s own
+        bookkeeping.
 
         ``cdc_files``: the change files this commit wrote
         (``_write_change_files``), which become its cdc actions. A
@@ -572,10 +658,9 @@ class ManagedTable:
         # rewrite actions. Metadata-only and pure-rewrite maintenance
         # (optimize/analyze/clone bookkeeping) keeps working because
         # it changes no logical rows.
-        prev_dvs = prev.deletion_vectors if prev is not None else {}
         if prev is not None and _prop_on(prev.properties, "delta.appendOnly"):
             new_dvs = any(
-                prev_dvs.get(rel) != d
+                prev.deletion_vectors.get(rel) != d
                 for rel, d in commit.deletion_vectors.items()
             )
             if new_dvs or commit.action in (
@@ -586,72 +671,6 @@ class ManagedTable:
                     "delta.appendOnly forbids deletes, updates, and "
                     f"rewrites (refused {commit.action!r} commit)."
                 )
-        # Writer-state carry (txn watermarks, ingest log): merged here
-        # centrally so every commit path — DML, optimize, DDL —
-        # preserves them without threading the fields through all 17
-        # constructors.
-        if prev is not None:
-            commit.txns = {**(prev.txns or {}), **(commit.txns or {})}
-            carried = [
-                s for s in (prev.ingest_sidecars or [])
-                if s not in (commit.ingest_sidecars or [])
-            ]
-            commit.ingest_sidecars = carried + (commit.ingest_sidecars or [])
-            # deletion vectors ride with their files: every file whose
-            # unit survives keeps its descriptor unless this commit set
-            # a new one; a rewritten unit's descriptors drop with it.
-            # RESTORE takes the restored version's map verbatim.
-            if commit.action != "restore":
-                live = set(commit.data_units)
-                commit.deletion_vectors = {
-                    **{
-                        rel: d for rel, d in prev_dvs.items()
-                        if _dv_unit(rel) in live
-                    },
-                    **commit.deletion_vectors,
-                }
-
-        props = commit.properties or {}
-        # In-commit timestamps (Delta inCommitTimestamp writer
-        # feature): once enabled, commit timestamps are the table's
-        # time-travel clock and MUST be strictly monotonic — a
-        # regressed system clock must never produce a commit that
-        # sorts before its parent. Runs BEFORE the log entry is built.
-        if _prop_on(props, "delta.enableInCommitTimestamps"):
-            if prev is not None and commit.timestamp_ms <= prev.timestamp_ms:
-                commit.timestamp_ms = prev.timestamp_ms + 1
-            if prev is not None and not _prop_on(
-                prev.properties, "delta.enableInCommitTimestamps"
-            ):
-                # enabled AFTER table creation: the spec requires the
-                # enablement point so readers know which commits carry
-                # ICT (earlier ones time-travel by file timestamp)
-                props = dict(props)
-                props["delta.inCommitTimestampEnablementVersion"] = str(
-                    commit.version
-                )
-                props["delta.inCommitTimestampEnablementTimestamp"] = str(
-                    commit.timestamp_ms
-                )
-                commit.properties = props
-        # Row tracking (Delta rowTracking writer feature): assign
-        # stable row ids to new units, carry every existing unit's
-        # ids verbatim — part of committed state, so also before
-        # serialization.
-        if _prop_on(props, "delta.enableRowTracking"):
-            self._assign_row_ids(commit, prev)
-        # Clustered-table state carries forward (a later append does
-        # not un-cluster the table); only optimize() sets a new value
-        # and RESTORE takes the restored version's state verbatim —
-        # the restored units are physically laid out by ITS columns,
-        # so carrying the pre-restore clustering would misdescribe
-        # the layout.
-        if (
-            not commit.clustered_by
-            and prev is not None
-            and commit.action != "restore"
-        ):
-            commit.clustered_by = list(prev.clustered_by or [])
         # Column-mapping invariant: on-disk (physical) names must stay
         # unique or the physical scan schema is ambiguous. Guards the
         # rename/add/schema-merge composition paths in one place.
@@ -1255,6 +1274,63 @@ class ManagedTable:
                 stats["_bloom"] = entry
         return stats
 
+    def _read_rewrite(
+        self, prev: Commit, units: list[str], keep_ids: bool = True
+    ) -> DataFrame:
+        """The rows of ``prev``'s ``units`` that a rewrite reads. Under
+        row tracking (unless ``keep_ids`` is False) each row brings its
+        id and commit version in the materialized columns, which the
+        rewritten unit stores physically: the row keeps its identity
+        through the rewrite (Delta's preserved-row-id rule)."""
+        if not (
+            keep_ids and _prop_on(prev.properties, "delta.enableRowTracking")
+        ):
+            return self._read_units(prev, units)
+        return self._read_units(
+            prev, units, with_row_ids=True
+        ).withColumnRenamed("_row_id", _MAT_ROW_ID).withColumnRenamed(
+            "_row_commit_version", _MAT_RCV
+        )
+
+    def _write_rewrite(
+        self,
+        prev: Commit,
+        untouched: list[str],
+        df: DataFrame,
+        compression: str,
+        max_records_per_file: int | None,
+        props: dict | None = None,
+        mapping: dict | None = None,
+    ) -> tuple[list[str], dict]:
+        """(units, stats) of a successor of ``prev`` that keeps the
+        units ``untouched`` and adds ``df`` written as one new unit
+        under ``mapping`` (default: ``prev``'s column mapping), with
+        stats under ``props`` (default: ``prev``'s properties). A new
+        unit with no rows is removed, not committed: it would be a
+        0-record add."""
+        mapping = prev.column_mapping if mapping is None else mapping
+        unit = self._write_unit(
+            self._to_physical(df, mapping),
+            prev.partition_by,
+            compression,
+            max_records_per_file,
+        )
+        ustats = self._unit_stats(
+            unit,
+            props=prev.properties if props is None else props,
+            mapping=mapping,
+        )
+        units = list(untouched)
+        stats = {u: prev.stats[u] for u in untouched if u in prev.stats}
+        if ustats["_rows"] > 0:
+            units.append(unit)
+            stats[unit] = ustats
+        else:
+            shutil.rmtree(
+                os.path.join(self._data_dir, unit), ignore_errors=True
+            )
+        return units, stats
+
     @staticmethod
     def _schema_compatible(table: T.StructType, incoming: T.StructType) -> bool:
         tf = {f.name: f.dataType for f in table.fields}
@@ -1565,26 +1641,20 @@ class ManagedTable:
         )
 
         if mode == "overwrite" or prev is None:
-            units = [unit]
-            version = (prev.version + 1) if prev else 0
-            action = "overwrite" if mode == "overwrite" else "create"
-            schema = df.schema
-            stats = {unit: self._unit_stats(
-                unit,
-                props=effective_props, mapping=mapping)}
-            commit = Commit(
-                version=version,
-                action=action,
-                data_units=units,
-                schema_json=json.dumps(schema.jsonValue()),
+            commit = self._next(
+                prev,
+                "overwrite" if mode == "overwrite" else "create",
+                txn=txn,
+                ingest_sidecar=ingest_sidecar,
+                data_units=[unit],
+                schema_json=json.dumps(df.schema.jsonValue()),
                 partition_by=partition_by,
-                primary_key=primary_key or (prev.primary_key if prev else []),
-                timestamp_ms=int(time.time() * 1000),
-                properties=properties or (prev.properties if prev else {}),
-                stats=stats,
+                primary_key=primary_key or None,
+                properties=properties or None,
+                stats={unit: self._unit_stats(
+                    unit, props=effective_props, mapping=mapping,
+                )},
                 column_mapping=mapping,
-                txns=dict([txn]) if txn else {},
-                ingest_sidecars=[ingest_sidecar] if ingest_sidecar else [],
             )
             return self._publish(commit, prev)
 
@@ -1605,19 +1675,16 @@ class ManagedTable:
             schema = self._merge_schemas(table_schema, df.schema)
             if id_hwms:
                 schema = self._bump_identity_hwm(schema, id_hwms)
-            commit = Commit(
-                version=prev.version + 1,
-                action="append",
+            commit = self._next(
+                prev,
+                "append",
+                txn=txn,
+                ingest_sidecar=ingest_sidecar,
                 data_units=prev.data_units + [unit],
                 schema_json=json.dumps(schema.jsonValue()),
-                partition_by=partition_by,
-                primary_key=primary_key or prev.primary_key,
-                timestamp_ms=int(time.time() * 1000),
-                properties=properties or prev.properties,
+                primary_key=primary_key or None,
+                properties=properties or None,
                 stats={**prev.stats, unit: unit_stats},
-                column_mapping=mapping,
-                txns=dict([txn]) if txn else {},
-                ingest_sidecars=[ingest_sidecar] if ingest_sidecar else [],
             )
             try:
                 commit = self._publish(commit, prev)
@@ -1717,9 +1784,7 @@ class ManagedTable:
         the folded unit is written physical too — unlike full
         optimize(), which rewrites everything and resets the map).
         Returns None when fewer than two small units exist."""
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        prev = self._head()
         small = [
             u
             for u in prev.data_units
@@ -1729,16 +1794,10 @@ class ManagedTable:
         if len(small) < 2:
             return None
         untouched = [u for u in prev.data_units if u not in set(small)]
-        tracked = _prop_on(prev.properties, "delta.enableRowTracking")
-        df = self._read_units(prev, small, with_row_ids=tracked)
-        if tracked:
-            # auto-compaction is dataChange=false like full optimize:
-            # rows keep their identity through the fold (same
-            # materialized-column mechanism) — without this, a tracked
-            # append with autoCompact on would silently churn ids
-            df = df.withColumnRenamed(
-                "_row_id", _MAT_ROW_ID
-            ).withColumnRenamed("_row_commit_version", _MAT_RCV)
+        # auto-compaction is dataChange=false like full optimize: rows
+        # keep their identity through the fold — without it, a tracked
+        # append with autoCompact on would silently churn ids
+        df = self._read_rewrite(prev, small)
         if cluster_by:
             # keep the folded unit range-clustered so its files stay
             # prunable (the incremental spelling of
@@ -1746,37 +1805,10 @@ class ManagedTable:
             df = df.repartitionByRange(*cluster_by).sortWithinPartitions(
                 *cluster_by
             )
-        unit = self._write_unit(
-            self._to_physical(df, prev.column_mapping),
-            prev.partition_by,
-            compression,
-            target_file_rows,
+        units, stats = self._write_rewrite(
+            prev, untouched, df, compression, target_file_rows
         )
-        ustats = self._unit_stats(
-            unit,
-            props=prev.properties, mapping=prev.column_mapping,
-        )
-        units = list(untouched)
-        stats = {u: prev.stats[u] for u in untouched if u in prev.stats}
-        if ustats["_rows"] > 0:
-            units.append(unit)
-            stats[unit] = ustats
-        else:
-            shutil.rmtree(
-                os.path.join(self._data_dir, unit), ignore_errors=True
-            )
-        commit = Commit(
-            version=prev.version + 1,
-            action="optimize",
-            data_units=units,
-            schema_json=prev.schema_json,
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
-            properties=prev.properties,
-            stats=stats,
-            column_mapping=dict(prev.column_mapping),
-        )
+        commit = self._next(prev, "optimize", data_units=units, stats=stats)
         return self._publish(commit, prev)
 
     @staticmethod
@@ -1845,9 +1877,7 @@ class ManagedTable:
         elif version is not None:
             commit = self.commit_at(version)
         else:
-            commit = self.latest_commit()
-        if commit is None:
-            raise UserException(f"No table at {self.path}")
+            commit = self._head()
         return self._read_units(
             commit, commit.data_units, with_row_ids=with_row_ids
         )
@@ -1870,9 +1900,7 @@ class ManagedTable:
         the column get the default computed; existing rows still read
         NULL (Delta semantics — defaults are insert-time, never
         backfill)."""
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        prev = self._head()
         schema = T.StructType.fromJson(json.loads(prev.schema_json))
         if name in {f.name for f in schema.fields}:
             raise UserException(f"Column {name!r} already exists.")
@@ -1890,16 +1918,9 @@ class ManagedTable:
             # logical name may shadow some renamed column's old
             # physical bytes, which must stay invisible.
             mapping[name] = f"col-{uuid.uuid4().hex[:16]}"
-        commit = Commit(
-            version=prev.version + 1,
-            action="add_column",
-            data_units=list(prev.data_units),
+        commit = self._next(
+            prev, "add_column",
             schema_json=json.dumps(new_schema.jsonValue()),
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
-            properties=prev.properties,
-            stats=prev.stats,
             column_mapping=mapping,
         )
         return self._publish(commit, prev)
@@ -1910,9 +1931,7 @@ class ManagedTable:
         updating the field's ``CURRENT_DEFAULT``. Applies to future
         inserts only; stored rows are untouched (Delta defaultColumns
         semantics)."""
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        prev = self._head()
         schema = T.StructType.fromJson(json.loads(prev.schema_json))
         if name not in {f.name for f in schema.fields}:
             raise UserException(f"No column {name!r} on this table.")
@@ -1926,17 +1945,9 @@ class ManagedTable:
                     md["CURRENT_DEFAULT"] = expr
                 f = T.StructField(f.name, f.dataType, f.nullable, md)
             fields.append(f)
-        commit = Commit(
-            version=prev.version + 1,
-            action="alter_column_default",
-            data_units=list(prev.data_units),
+        commit = self._next(
+            prev, "alter_column_default",
             schema_json=json.dumps(T.StructType(fields).jsonValue()),
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
-            properties=prev.properties,
-            stats=prev.stats,
-            column_mapping=dict(prev.column_mapping),
         )
         return self._publish(commit, prev)
 
@@ -1959,11 +1970,9 @@ class ManagedTable:
         widened schema (int32→int64, float→double …), so a 100 TB
         table changes type in O(1). The change is recorded as
         ``delta.typeChanges`` field metadata (the Delta protocol's
-        own mechanism) so the mirror advertises the typeWidening
-        feature to external readers."""
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        own mechanism) so the log advertises the typeWidening feature
+        to external readers."""
+        prev = self._head()
         schema = T.StructType.fromJson(json.loads(prev.schema_json))
         if name not in {f.name for f in schema.fields}:
             raise UserException(f"No column {name!r} on this table.")
@@ -1997,17 +2006,9 @@ class ManagedTable:
                 md["delta.typeChanges"] = changes
                 f = T.StructField(f.name, target, f.nullable, md)
             fields.append(f)
-        commit = Commit(
-            version=prev.version + 1,
-            action="widen_column_type",
-            data_units=list(prev.data_units),
+        commit = self._next(
+            prev, "widen_column_type",
             schema_json=json.dumps(T.StructType(fields).jsonValue()),
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
-            properties=prev.properties,
-            stats=prev.stats,
-            column_mapping=dict(prev.column_mapping),
         )
         return self._publish(commit, prev)
 
@@ -2034,9 +2035,7 @@ class ManagedTable:
         them, and a later optimize/rewrite physically sheds them —
         Delta's drop-then-REORG contract). Primary-key and partition
         columns are load-bearing and refuse to drop."""
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        prev = self._head()
         if name in (prev.primary_key or []):
             raise UserException(f"Cannot drop primary-key column {name!r}.")
         if name in (prev.partition_by or []):
@@ -2049,16 +2048,9 @@ class ManagedTable:
         )
         if not new_schema.fields:
             raise UserException("Cannot drop the last column.")
-        commit = Commit(
-            version=prev.version + 1,
-            action="drop_column",
-            data_units=list(prev.data_units),
+        commit = self._next(
+            prev, "drop_column",
             schema_json=json.dumps(new_schema.jsonValue()),
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
-            properties=prev.properties,
-            stats=prev.stats,
             column_mapping={
                 k: v for k, v in prev.column_mapping.items() if k != name
             },
@@ -2074,9 +2066,7 @@ class ManagedTable:
         refuse to rename (their names are load-bearing in the merge key
         and hive directory layout), as do columns referenced by CHECK
         constraints (Delta's own restriction)."""
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        prev = self._head()
         if old in (prev.primary_key or []):
             raise UserException(f"Cannot rename primary-key column {old!r}.")
         if old in (prev.partition_by or []):
@@ -2103,16 +2093,9 @@ class ManagedTable:
                 for f in schema.fields
             ]
         )
-        commit = Commit(
-            version=prev.version + 1,
-            action="rename_column",
-            data_units=list(prev.data_units),
+        commit = self._next(
+            prev, "rename_column",
             schema_json=json.dumps(new_schema.jsonValue()),
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
-            properties=prev.properties,
-            stats=prev.stats,
             column_mapping=mapping,
         )
         return self._publish(commit, prev)
@@ -2337,6 +2320,18 @@ class ManagedTable:
                 }
             out[u] = ns
         return out
+
+    def _prune(self, prev: Commit, condition: str) -> list[str]:
+        """``prev``'s units whose stats say they may hold a row
+        ``condition`` is TRUE for (data skipping under logical names)."""
+        from component_delta_lake_writer_spark.sinks.unit_stats import (
+            prune_units,
+        )
+
+        return prune_units(
+            self._logical_stats(prev.stats, prev.column_mapping),
+            prev.data_units, condition,
+        )
 
     def _read_units(
         self,
@@ -2603,9 +2598,7 @@ class ManagedTable:
             prune_units,
         )
 
-        commit = self.commit_at(version) if version is not None else self.latest_commit()
-        if commit is None:
-            raise UserException(f"No table at {self.path}")
+        commit = self.commit_at(version) if version is not None else self._head()
         schema = T.StructType.fromJson(json.loads(commit.schema_json))
         mapping = commit.column_mapping or {}
         stats_view = self._logical_stats(commit.stats, mapping)
@@ -2719,6 +2712,11 @@ class ManagedTable:
         UNTOUCHED. A CDC stream whose batches touch recent keys then
         rewrites only recent units instead of the whole 100 TB table;
         pair with optimize(cluster_by=PK) to keep unit ranges tight.
+
+        An empty batch adds no unit under either strategy, and on a
+        multi-unit table the bounds job's row count makes copy-on-write
+        touch no unit either. A single-unit table runs no bounds job,
+        so its empty copy-on-write upsert still rewrites that unit.
         """
         if not primary_key:
             raise UserException("Upsert load mode requires a primary key.")
@@ -2819,12 +2817,15 @@ class ManagedTable:
             src = src.persist()
         if persisted and not mor:
             # Only worth an extra bounds job when there is more than
-            # one unit to choose between.
-            bounds, _n = self._source_key_bounds(src, primary_key)
-            if bounds:
+            # one unit to choose between. Its row count also says when
+            # the batch is empty: then no unit is touched.
+            bounds, n = self._source_key_bounds(src, primary_key)
+            if bounds or not n:
                 touched, untouched = [], []
                 for u in prev.data_units:
-                    if unit_overlaps_key_bounds(prev.stats.get(u), bounds):
+                    if n and unit_overlaps_key_bounds(
+                        prev.stats.get(u), bounds
+                    ):
                         touched.append(u)
                     else:
                         untouched.append(u)
@@ -2835,23 +2836,20 @@ class ManagedTable:
                 # deletion vectors. The key bounds come from the new
                 # unit's own footer stats (zero extra jobs), and so does
                 # the key count picking _mark_deleted's tier.
-                unit = self._write_unit(
-                    self._to_physical(src, mapping),
-                    prev.partition_by,
-                    compression,
-                    max_records_per_file,
+                units, stats = self._write_rewrite(
+                    prev, prev.data_units, src, compression,
+                    max_records_per_file, props=effective_props,
                 )
-                ustats = self._unit_stats(
-                    unit,
-                    props=effective_props, mapping=mapping,
-                )
-                untouched = list(prev.data_units)
+                # an empty batch adds no unit and deletes nothing
+                unit = units[-1] if len(units) > len(prev.data_units) else None
                 phys_pk = [mapping.get(c, c) for c in primary_key]
-                bounds = key_bounds_from_stats(ustats, phys_pk)
-                targets = [
-                    u for u in prev.data_units
-                    if unit_overlaps_key_bounds(prev.stats.get(u), bounds)
-                ] if ustats["_rows"] else []
+                targets = []
+                if unit:
+                    bounds = key_bounds_from_stats(stats[unit], phys_pk)
+                    targets = [
+                        u for u in prev.data_units
+                        if unit_overlaps_key_bounds(prev.stats.get(u), bounds)
+                    ]
 
                 def _unit_keys():
                     import pyarrow.dataset as pads
@@ -2863,7 +2861,7 @@ class ManagedTable:
                 if targets:
                     dvs = self._mark_deleted(
                         prev, targets, primary_key,
-                        keys=src, n_keys=ustats["_rows"],
+                        keys=src, n_keys=stats[unit]["_rows"],
                         local_keys=None if prev.partition_by else _unit_keys,
                     )
             else:
@@ -2887,14 +2885,10 @@ class ManagedTable:
                         ]
                     )
                 if touched:
-                    read_t = self._read_units(
-                        prev, touched, with_row_ids=tracked
+                    target_sub = self._align_to_schema(
+                        self._read_rewrite(prev, touched, keep_ids=tracked),
+                        merge_schema,
                     )
-                    if tracked:
-                        read_t = read_t.withColumnRenamed(
-                            "_row_id", _MAT_ROW_ID
-                        ).withColumnRenamed("_row_commit_version", _MAT_RCV)
-                    target_sub = self._align_to_schema(read_t, merge_schema)
                     if update_condition is not None:
                         merged = merge_upsert_conditional(
                             target_sub, src, primary_key, update_condition,
@@ -2912,31 +2906,19 @@ class ManagedTable:
                     merged = src.select(
                         *[F.col(f.name) for f in union_schema.fields]
                     )
-                unit = self._write_unit(
-                    self._to_physical(merged, mapping),
-                    prev.partition_by,
-                    compression,
-                    max_records_per_file,
+                units, stats = self._write_rewrite(
+                    prev, untouched, merged, compression,
+                    max_records_per_file, props=effective_props,
                 )
-                ustats = self._unit_stats(
-                    unit,
-                    props=effective_props, mapping=mapping,
-                )
-            stats = {u: prev.stats[u] for u in untouched if u in prev.stats}
-            stats[unit] = ustats
-            commit = Commit(
-                version=prev.version + 1,
-                action="upsert",
-                data_units=untouched + [unit],
+            commit = self._next(
+                prev, "upsert",
+                txn=txn,
+                new_dvs=dvs,
+                data_units=units,
                 schema_json=json.dumps(union_schema.jsonValue()),
-                partition_by=prev.partition_by,
                 primary_key=primary_key,
-                timestamp_ms=int(time.time() * 1000),
-                properties=effective_props,
+                properties=properties,
                 stats=stats,
-                deletion_vectors=dvs,
-                column_mapping=dict(mapping),
-                txns=dict([txn]) if txn else {},
             )
             # CDF: persist this commit's change set (inserts + the
             # update post-images the MERGE actually applied) so
@@ -3070,48 +3052,28 @@ class ManagedTable:
         count), then stored in table properties; every later
         write/upsert batch must satisfy it or the commit is refused.
         NOT NULL is the special case ``col IS NOT NULL``."""
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        prev = self._head()
         cons = dict(prev.properties.get("constraints", {}))
         if name in cons:
             raise UserException(f"Constraint {name!r} already exists.")
         self._check_constraints(self.read(), {name: check_expr})
         cons[name] = check_expr
-        commit = Commit(
-            version=prev.version + 1,
-            action="add_constraint",
-            data_units=list(prev.data_units),
-            schema_json=prev.schema_json,
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
+        commit = self._next(
+            prev, "add_constraint",
             properties={**prev.properties, "constraints": cons},
-            stats=prev.stats,
-            column_mapping=dict(prev.column_mapping),
         )
         return self._publish(commit, prev)
 
     def drop_constraint(self, name: str) -> Commit:
         """``ALTER TABLE … DROP CONSTRAINT name``."""
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        prev = self._head()
         cons = dict(prev.properties.get("constraints", {}))
         if name not in cons:
             raise UserException(f"No constraint {name!r} on this table.")
         del cons[name]
-        commit = Commit(
-            version=prev.version + 1,
-            action="drop_constraint",
-            data_units=list(prev.data_units),
-            schema_json=prev.schema_json,
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
+        commit = self._next(
+            prev, "drop_constraint",
             properties={**prev.properties, "constraints": cons},
-            stats=prev.stats,
-            column_mapping=dict(prev.column_mapping),
         )
         return self._publish(commit, prev)
 
@@ -3142,71 +3104,34 @@ class ManagedTable:
         provably cannot contain a row matching ``condition`` (commit
         stats) carry into the new snapshot untouched; the rest are
         rewritten through ``transform(df, cond_col)``."""
-        from component_delta_lake_writer_spark.sinks.unit_stats import prune_units
-
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
-        touched = prune_units(
-            self._logical_stats(prev.stats, prev.column_mapping),
-            prev.data_units, condition,
-        )
-        untouched = [u for u in prev.data_units if u not in set(touched)]
-        units = list(untouched)
-        stats = {u: prev.stats[u] for u in untouched if u in prev.stats}
+        prev = self._head()
+        touched = self._prune(prev, condition)
+        units = stats = None  # nothing touched: every unit stands
         if touched:
-            tracked = _prop_on(prev.properties, "delta.enableRowTracking")
-            df = self._read_units(prev, touched, with_row_ids=tracked)
-            if tracked:
-                # surviving rows keep their identity through the
-                # rewrite (same materialized-column mechanism as
-                # optimize). An UPDATEd row keeps its ROW ID — it is
-                # the same logical row — but its commit attribution
-                # moves to this commit (spec: rowCommitVersion tracks
-                # the commit that last touched the row).
-                df = df.withColumnRenamed("_row_id", _MAT_ROW_ID)
-                rcv = F.col("_row_commit_version")
-                if action == "update":
-                    hit = F.coalesce(F.expr(condition), F.lit(False))
-                    rcv = F.when(
-                        hit, F.lit(prev.version + 1)
-                    ).otherwise(rcv)
-                df = df.withColumn(_MAT_RCV, rcv).drop(
-                    "_row_commit_version"
+            untouched = [u for u in prev.data_units if u not in set(touched)]
+            df = self._read_rewrite(prev, touched)
+            if action == "update" and _prop_on(
+                prev.properties, "delta.enableRowTracking"
+            ):
+                # an UPDATEd row keeps its row id — it is the same
+                # logical row — but its commit attribution moves to
+                # this commit (rowCommitVersion tracks the commit that
+                # last touched the row)
+                hit = F.coalesce(F.expr(condition), F.lit(False))
+                df = df.withColumn(
+                    _MAT_RCV,
+                    F.when(hit, F.lit(prev.version + 1)).otherwise(
+                        F.col(_MAT_RCV)
+                    ),
                 )
             rewritten = transform(df, F.expr(condition))
             constraints = prev.properties.get("constraints", {})
             if constraints:
                 self._check_constraints(rewritten, constraints)
-            unit = self._write_unit(
-                self._to_physical(rewritten, prev.column_mapping),
-                prev.partition_by,
-                compression,
-                max_records_per_file,
+            units, stats = self._write_rewrite(
+                prev, untouched, rewritten, compression, max_records_per_file
             )
-            ustats = self._unit_stats(
-                unit,
-                props=prev.properties, mapping=prev.column_mapping,
-            )
-            if ustats["_rows"] > 0:
-                units.append(unit)
-                stats[unit] = ustats
-            else:  # e.g. DELETE matched every row of the touched units
-                shutil.rmtree(
-                    os.path.join(self._data_dir, unit), ignore_errors=True
-                )
-        commit = Commit(
-            version=prev.version + 1,
-            action=action,
-            data_units=units,
-            schema_json=prev.schema_json,
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
-            properties=prev.properties,
-            stats=stats,
-            column_mapping=dict(prev.column_mapping),
-        )
+        commit = self._next(prev, action, data_units=units, stats=stats)
         cdc = []
         if touched and prev.properties.get("enableChangeDataFeed"):
             # CDF for DML (Delta parity): DELETE emits the removed
@@ -3289,9 +3214,7 @@ class ManagedTable:
             unit_overlaps_key_bounds,
         )
 
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        prev = self._head()
         if (
             txn is not None
             and (prev.txns or {}).get(txn[0], -(1 << 62)) >= txn[1]
@@ -3319,21 +3242,8 @@ class ManagedTable:
                 prev, touched, pk, keys=key_set, n_keys=n_keys,
                 local_keys=key_set.toArrow,
             ) if touched else {}
-            commit = Commit(
-                version=prev.version + 1,
-                action="delete",
-                data_units=list(prev.data_units),
-                schema_json=prev.schema_json,
-                partition_by=prev.partition_by,
-                primary_key=prev.primary_key,
-                timestamp_ms=int(time.time() * 1000),
-                properties=(
-                    properties if properties is not None else prev.properties
-                ),
-                stats=prev.stats,
-                deletion_vectors=dvs,
-                column_mapping=dict(prev.column_mapping),
-                txns=dict([txn]) if txn else {},
+            commit = self._next(
+                prev, "delete", txn=txn, new_dvs=dvs, properties=properties
             )
             cdc = []
             if commit.properties.get("enableChangeDataFeed") and touched:
@@ -3349,17 +3259,8 @@ class ManagedTable:
         return commit
 
     def _delete_mor(self, condition: str) -> Commit:
-        from component_delta_lake_writer_spark.sinks.unit_stats import (
-            prune_units,
-        )
-
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
-        touched = prune_units(
-            self._logical_stats(prev.stats, prev.column_mapping),
-            prev.data_units, condition,
-        )
+        prev = self._head()
+        touched = self._prune(prev, condition)
         rows = sum(
             float((prev.stats.get(u) or {}).get("_rows", float("inf")))
             for u in touched
@@ -3367,19 +3268,7 @@ class ManagedTable:
         dvs = self._mark_deleted(
             prev, touched, n_keys=rows, condition=condition
         ) if touched else {}
-        commit = Commit(
-            version=prev.version + 1,
-            action="delete",
-            data_units=list(prev.data_units),
-            schema_json=prev.schema_json,
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
-            properties=prev.properties,
-            stats=prev.stats,
-            deletion_vectors=dvs,
-            column_mapping=dict(prev.column_mapping),
-        )
+        commit = self._next(prev, "delete", new_dvs=dvs)
         # same CDF contract as the copy-on-write DELETE: the removed
         # images land as 'delete' change rows (computed against the
         # PRE-delete snapshot)
@@ -3407,9 +3296,7 @@ class ManagedTable:
         expressions see the PRE-update row (standard SQL UPDATE), and
         assigning an unknown column raises rather than silently adding
         one."""
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        prev = self._head()
         schema = T.StructType.fromJson(json.loads(prev.schema_json))
         known = {f.name for f in schema.fields}
         bad = sorted(set(assignments) - known)
@@ -3478,10 +3365,6 @@ class ManagedTable:
                 df, mode="overwrite", compression=compression,
                 max_records_per_file=max_records_per_file,
             )
-        from component_delta_lake_writer_spark.sinks.unit_stats import (
-            prune_units,
-        )
-
         # incoming rows are INSERTs: DEFAULT and GENERATED columns
         # apply exactly as on append (omitting them must not silently
         # write NULLs where every other insert path computes values) —
@@ -3523,68 +3406,25 @@ class ManagedTable:
             # the union of per-disjunct pruning is a sound superset
             touched_set: set[str] = set()
             for d in prune_disjuncts:
-                touched_set.update(
-                    prune_units(
-                        self._logical_stats(prev.stats, prev.column_mapping),
-                        prev.data_units, d,
-                    )
-                )
+                touched_set.update(self._prune(prev, d))
             touched = [u for u in prev.data_units if u in touched_set]
         else:
-            touched = prune_units(
-            self._logical_stats(prev.stats, prev.column_mapping),
-            prev.data_units, condition,
-        )
+            touched = self._prune(prev, condition)
         untouched = [u for u in prev.data_units if u not in set(touched)]
-        units = list(untouched)
-        stats = {u: prev.stats[u] for u in untouched if u in prev.stats}
-        tracked = _prop_on(prev.properties, "delta.enableRowTracking")
-        replaced = None
+        new_rows = df
         if touched:
             # the kept remainder of touched units keeps row identity
-            # through the rewrite (same materialized-column mechanism
-            # as DELETE); the incoming batch is genuinely new rows and
-            # draws fresh ids via unionByName's missing-column NULLs
-            replaced = self._read_units(
-                prev, touched, with_row_ids=tracked
-            ).filter(~cond)
-            if tracked:
-                replaced = replaced.withColumnRenamed(
-                    "_row_id", _MAT_ROW_ID
-                ).withColumnRenamed("_row_commit_version", _MAT_RCV)
-        new_rows = (
-            df
-            if replaced is None
-            else replaced.unionByName(df, allowMissingColumns=True)
+            # through the rewrite; the incoming batch is genuinely new
+            # rows and draws fresh ids via unionByName's missing-column
+            # NULLs
+            new_rows = self._read_rewrite(prev, touched).filter(
+                ~cond
+            ).unionByName(df, allowMissingColumns=True)
+        units, stats = self._write_rewrite(
+            prev, untouched, new_rows, compression, max_records_per_file
         )
-        unit = self._write_unit(
-            self._to_physical(new_rows, prev.column_mapping),
-            prev.partition_by,
-            compression,
-            max_records_per_file,
-        )
-        ustats = self._unit_stats(
-            unit,
-            props=prev.properties, mapping=prev.column_mapping,
-        )
-        if ustats["_rows"] > 0:
-            units.append(unit)
-            stats[unit] = ustats
-        else:
-            shutil.rmtree(
-                os.path.join(self._data_dir, unit), ignore_errors=True
-            )
-        commit = Commit(
-            version=prev.version + 1,
-            action="replace_where",
-            data_units=units,
-            schema_json=prev.schema_json,
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
-            properties=prev.properties,
-            stats=stats,
-            column_mapping=dict(prev.column_mapping),
+        commit = self._next(
+            prev, "replace_where", data_units=units, stats=stats
         )
         cdc = []
         if prev.properties.get("enableChangeDataFeed"):
@@ -3701,7 +3541,6 @@ class ManagedTable:
             merge_full_sync,
         )
         from component_delta_lake_writer_spark.sinks.unit_stats import (
-            prune_units,
             unit_overlaps_key_bounds,
         )
 
@@ -3730,12 +3569,7 @@ class ManagedTable:
             untouched: list[str] = []
             if delete_scope is not None and len(prev.data_units) > 1:
                 bounds, _n = self._source_key_bounds(src, primary_key)
-                scope_units = set(
-                    prune_units(
-                        self._logical_stats(prev.stats, prev.column_mapping),
-                        prev.data_units, delete_scope,
-                    )
-                )
+                scope_units = set(self._prune(prev, delete_scope))
                 touched, untouched = [], []
                 for u in prev.data_units:
                     keyed = not bounds or unit_overlaps_key_bounds(
@@ -3757,34 +3591,12 @@ class ManagedTable:
             constraints = prev.properties.get("constraints", {})
             if constraints:
                 self._check_constraints(merged, constraints)
-            unit = self._write_unit(
-                self._to_physical(merged, prev.column_mapping),
-                prev.partition_by, compression, max_records_per_file,
+            units, stats = self._write_rewrite(
+                prev, untouched, merged, compression, max_records_per_file
             )
-            stats = {u: prev.stats[u] for u in untouched if u in prev.stats}
-            ustats = self._unit_stats(
-                unit,
-                props=prev.properties, mapping=prev.column_mapping,
-            )
-            units = list(untouched)
-            if ustats["_rows"] > 0:
-                units.append(unit)
-                stats[unit] = ustats
-            else:
-                shutil.rmtree(
-                    os.path.join(self._data_dir, unit), ignore_errors=True
-                )
-            commit = Commit(
-                version=prev.version + 1,
-                action="upsert",
-                data_units=units,
-                schema_json=prev.schema_json,
-                partition_by=prev.partition_by,
-                primary_key=primary_key,
-                timestamp_ms=int(time.time() * 1000),
-                properties=prev.properties,
-                stats=stats,
-                column_mapping=dict(prev.column_mapping),
+            commit = self._next(
+                prev, "upsert",
+                data_units=units, primary_key=primary_key, stats=stats,
             )
             cdc = []
             if prev.properties.get("enableChangeDataFeed"):
@@ -4013,9 +3825,7 @@ class ManagedTable:
         ranges, this keeps the table prunable at unit granularity, so
         later selective MERGEs rewrite only the key ranges a batch
         touches instead of the whole compacted snapshot."""
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        prev = self._head()
         if cluster_by and zorder_by:
             raise UserException("Pass cluster_by OR zorder_by, not both.")
         if unit_per_file and (
@@ -4033,30 +3843,16 @@ class ManagedTable:
                 raise UserException(
                     "unit_per_file applies to full-table optimize only."
                 )
-            from component_delta_lake_writer_spark.sinks.unit_stats import (
-                prune_units,
-            )
-
-            touched = prune_units(
-                self._logical_stats(prev.stats, prev.column_mapping),
-                prev.data_units, where,
-            )
+            touched = self._prune(prev, where)
             untouched = [
                 u for u in prev.data_units if u not in set(touched)
             ]
             if not touched:
                 return prev  # nothing in scope — no-op
-        tracked = _prop_on(prev.properties, "delta.enableRowTracking")
-        df = self._read_units(prev, touched, with_row_ids=tracked)
-        if tracked:
-            # OPTIMIZE is dataChange=false: rows keep their identity.
-            # Materialize each row's id into the physical rewrite
-            # columns (absent from the committed schema — plain reads
-            # never see them); _attach_row_ids coalesces them over the
-            # fresh base ids the new unit draws.
-            df = df.withColumnRenamed(
-                "_row_id", _MAT_ROW_ID
-            ).withColumnRenamed("_row_commit_version", _MAT_RCV)
+        # OPTIMIZE is dataChange=false: rows keep their identity.
+        # _attach_row_ids coalesces the materialized ids over the fresh
+        # base ids the new unit draws.
+        df = self._read_rewrite(prev, touched)
         if cluster_by:
             # lexicographic range clustering: tight file stats on the
             # LEADING column; trailing columns skip poorly
@@ -4074,56 +3870,34 @@ class ManagedTable:
                 .sortWithinPartitions("__z")
                 .drop("__z")
             )
-        # a scoped optimize that CARRIES physically-named units must
-        # write the rewrite under the same physical names (uniform
-        # on-disk naming); a full optimize materializes renames and
-        # resets the mapping (REORG), as before
-        unit = self._write_unit(
-            self._to_physical(
-                df, prev.column_mapping if untouched else {}
-            ),
-            prev.partition_by, "snappy", target_file_rows,
-        )
         if unit_per_file:
-            units = self._split_unit_per_file(unit)
+            # a full optimize of an unpartitioned table: nothing carried
+            units = self._split_unit_per_file(
+                self._write_unit(
+                    df, prev.partition_by, "snappy", target_file_rows
+                )
+            )
             stats = {
-                u: self._unit_stats(
-                    u, props=prev.properties,
-                ) for u in units
+                u: self._unit_stats(u, props=prev.properties) for u in units
             }
         else:
-            units = [unit]
-            stats = {
-                unit: self._unit_stats(
-                    unit,
-                    props=prev.properties,
-                    mapping=(
-                        prev.column_mapping if untouched else None
-                    ),
-                )
-            }
-        stats.update(
-            {u: prev.stats[u] for u in untouched if u in prev.stats}
-        )
-        commit = Commit(
-            version=prev.version + 1,
-            action="optimize",
-            data_units=untouched + units,
-            schema_json=prev.schema_json,
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
-            properties=prev.properties,
+            # a scoped optimize that CARRIES physically-named units must
+            # write the rewrite under the same physical names (uniform
+            # on-disk naming); a full optimize materializes renames and
+            # resets the mapping (REORG)
+            units, stats = self._write_rewrite(
+                prev, untouched, df, "snappy", target_file_rows,
+                mapping=prev.column_mapping if untouched else {},
+            )
+        commit = self._next(
+            prev, "optimize",
+            data_units=units,
             stats=stats,
-            column_mapping=(
-                dict(prev.column_mapping) if untouched else {}
-            ),
-            # a clustering optimize (re)declares the table's
-            # clustering columns (Delta clustered-table state); a
-            # plain compaction keeps whatever stood
-            clustered_by=list(
-                cluster_by or zorder_by or prev.clustered_by or []
-            ),
+            column_mapping=prev.column_mapping if untouched else {},
+            # a clustering optimize (re)declares the table's clustering
+            # columns (Delta clustered-table state); a plain compaction
+            # keeps whatever stood
+            clustered_by=cluster_by or zorder_by or None,
         )
         return self._publish(commit, prev)
 
@@ -4154,9 +3928,7 @@ class ManagedTable:
         is copied, and the restored units must still exist (a vacuum
         after the target makes the restore fail loudly, same as
         Delta). Pass exactly one of ``version`` / ``timestamp_ms``."""
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        prev = self._head()
         if (version is None) == (timestamp_ms is None):
             raise UserException(
                 "RESTORE takes exactly one of version / timestamp_ms."
@@ -4204,25 +3976,11 @@ class ManagedTable:
             ):
                 if k2 not in props and k2 in (prev.properties or {}):
                     props[k2] = prev.properties[k2]
-        commit = Commit(
-            version=prev.version + 1,
-            action="restore",
-            data_units=list(old.data_units),
-            schema_json=old.schema_json,
-            partition_by=old.partition_by,
-            primary_key=old.primary_key,
-            timestamp_ms=int(time.time() * 1000),
-            properties=props,
-            stats={u: s for u, s in old.stats.items() if u in old.data_units},
-            deletion_vectors=dict(old.deletion_vectors),
-            column_mapping=dict(old.column_mapping),
-            # re-added units keep the row ids they had (immutability)
-            row_ids=dict(old.row_ids),
-            # clustering is part of the restored snapshot (the
-            # restored units' physical layout), not of the pre-restore
-            # head — _publish skips its carry-forward for restores
-            clustered_by=list(old.clustered_by or []),
-        )
+        # the restored snapshot is the new version's table state: its
+        # units with their deletion vectors and row ids, and its
+        # clustering (the restored units' physical layout); writer
+        # state stays the head's
+        commit = self._next(prev, "restore", base=old, properties=props)
         return self._publish(commit, prev)
 
     def _missing_dv_files(self, c: Commit) -> list[str]:
@@ -4405,8 +4163,7 @@ class ManagedTable:
         dest = dest_path.rstrip("/")
         if os.path.exists(dest) and os.listdir(dest):
             raise UserException(f"Clone destination {dest} is not empty.")
-        if self.latest_commit() is None:
-            raise UserException(f"No table at {self.path}")
+        self._head()
         if not shallow:
             shutil.copytree(self.path, dest, dirs_exist_ok=True)
             return ManagedTable(self.spark, dest)
@@ -4434,9 +4191,7 @@ class ManagedTable:
         metadata-only commit — no data touched, one driver-side footer
         pass. The path that (re-)arms data skipping on a table adopted
         with ``collect_stats=False`` or written by an older engine."""
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        prev = self._head()
         stats = {
             u: self._unit_stats(
                 u,
@@ -4444,18 +4199,7 @@ class ManagedTable:
             )
             for u in prev.data_units
         }
-        commit = Commit(
-            version=prev.version + 1,
-            action="analyze",
-            data_units=list(prev.data_units),
-            schema_json=prev.schema_json,
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
-            properties=prev.properties,
-            stats=stats,
-            column_mapping=dict(prev.column_mapping),
-        )
+        commit = self._next(prev, "analyze", stats=stats)
         return self._publish(commit, prev)
 
     def convert_from_parquet(
@@ -4541,17 +4285,14 @@ class ManagedTable:
             # for metadata-only COUNT(*)), no min/max; data skipping
             # stays off until ANALYZE
             props = {**props, "delta.dataSkippingNumIndexedCols": 0}
-        stats = self._unit_stats(unit, props=props)
-        commit = Commit(
-            version=0,
-            action="convert",
+        commit = self._next(
+            None, "convert",
             data_units=[unit],
             schema_json=json.dumps(schema.jsonValue()),
             partition_by=partition_by,
-            primary_key=primary_key or [],
-            timestamp_ms=int(time.time() * 1000),
-            properties=properties or {},
-            stats={unit: stats},
+            primary_key=primary_key,
+            properties=properties,
+            stats={unit: self._unit_stats(unit, props=props)},
         )
         return self._publish(commit, None)
 
@@ -4739,9 +4480,7 @@ class ManagedTable:
         only reachable by threading ``properties`` through a write).
         Unknown keys in ``unset`` are ignored (Delta's IF EXISTS
         behavior)."""
-        prev = self.latest_commit()
-        if prev is None:
-            raise UserException(f"No table at {self.path}")
+        prev = self._head()
         props = dict(prev.properties or {})
         # Delta boolean-property semantics: the SQL surface hands every
         # value over as a string, and a truthiness check on 'false'
@@ -4763,18 +4502,7 @@ class ManagedTable:
         props.update(norm)
         for k in unset or []:
             props.pop(k, None)
-        commit = Commit(
-            version=prev.version + 1,
-            action="set_properties",
-            data_units=list(prev.data_units),
-            schema_json=prev.schema_json,
-            partition_by=prev.partition_by,
-            primary_key=prev.primary_key,
-            timestamp_ms=int(time.time() * 1000),
-            properties=props,
-            stats=prev.stats,
-            column_mapping=dict(prev.column_mapping),
-        )
+        commit = self._next(prev, "set_properties", properties=props)
         return self._publish(commit, prev)
 
     def column_bounds(self, column: str):
@@ -4786,9 +4514,7 @@ class ManagedTable:
         string form). Falls back to one distributed agg otherwise."""
         import datetime as _dt
 
-        c = self.latest_commit()
-        if c is None:
-            raise UserException(f"No table at {self.path}")
+        c = self._head()
         phys = (c.column_mapping or {}).get(column, column)
         ok = not c.deletion_vectors and c.data_units
         vals = []
@@ -4838,9 +4564,7 @@ class ManagedTable:
         cardinalities (each live file's bitmap is the union of every
         deletion hitting it). Falls back to one distributed count only
         when some unit has no recorded row count."""
-        c = self.latest_commit()
-        if c is None:
-            raise UserException(f"No table at {self.path}")
+        c = self._head()
         if all(
             (c.stats.get(u) or {}).get("_rows") is not None
             for u in c.data_units
@@ -4862,9 +4586,7 @@ class ManagedTable:
         regenerate after
         every commit you want visible (exactly Delta's contract).
         Returns the manifest path."""
-        c = self.latest_commit()
-        if c is None:
-            raise UserException(f"No table at {self.path}")
+        c = self._head()
         if c.deletion_vectors:
             raise UserException(
                 "symlink manifest refused: live deletion vectors would "
@@ -4894,9 +4616,7 @@ class ManagedTable:
         the current snapshot — format, location, version, unit/file
         counts, total data bytes, row count from commit stats (no data
         scan), partition/PK columns, properties, feature flags."""
-        c = self.latest_commit()
-        if c is None:
-            raise UserException(f"No table at {self.path}")
+        c = self._head()
         n_files = 0
         size_bytes = 0
         for u in c.data_units:

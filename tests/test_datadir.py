@@ -286,6 +286,31 @@ def test_slice_listed_twice_is_refused(spark, tmp_path):
                     plan_table_scan(spark, tbl, preserve_order=preserve)
 
 
+def test_preserve_order_refuses_a_directory_slice(spark, tmp_path):
+    """A slice that names a directory: an unordered scan reads every
+    file in it, but a preserve-order scan numbers rows by slice, and
+    used to drop every row of the directory's files without a word.
+    It is refused, naming the slice."""
+    from component_delta_lake_writer_spark.config import ColumnSpec
+    from component_delta_lake_writer_spark.datadir import TableInput
+    from component_delta_lake_writer_spark.errors import UserException
+    from component_delta_lake_writer_spark.runner import plan_table_scan
+
+    d = tmp_path / "dir"
+    d.mkdir()
+    (d / "x.csv").write_text("1,x\n2,y\n")
+    (d / "y.csv").write_text("3,z\n")
+    b = tmp_path / "b.csv"
+    b.write_text("4,w\n")
+    tbl = TableInput(
+        slice_paths=[str(d), str(b)],
+        columns=[ColumnSpec("k", "INTEGER"), ColumnSpec("s", "STRING")],
+    )
+    assert plan_table_scan(spark, tbl).count() == 4
+    with pytest.raises(UserException, match=r"Slice \S*/dir is not one file"):
+        plan_table_scan(spark, tbl, preserve_order=True)
+
+
 def test_one_pass_scan_fails_when_spark_repacks_it(spark, tmp_path):
     """The one-pass preserve-order plan numbers rows by the scan
     partitions planned when it was built. Run after a conf change that

@@ -633,9 +633,6 @@ def test_append_conflict_retries_metadata_only(spark, tmp_path_str, monkeypatch)
     """A losing append racer must re-derive metadata against the new
     head and re-publish WITHOUT rewriting its data unit."""
     import os
-    import time as _time
-
-    from component_delta_lake_writer_spark.sinks.managed_table import Commit
 
     t = ManagedTable(spark, os.path.join(tmp_path_str, "t"))
     seed = spark.range(10).select(F.col("id").alias("k"))
@@ -647,18 +644,7 @@ def test_append_conflict_retries_metadata_only(spark, tmp_path_str, monkeypatch)
     def flaky(self, commit, prev=None):
         if commit.action == "append" and not state["raced"]:
             state["raced"] = True
-            competing = Commit(
-                version=commit.version,
-                action="append",
-                data_units=list(prev.data_units),
-                schema_json=prev.schema_json,
-                partition_by=prev.partition_by,
-                primary_key=prev.primary_key,
-                timestamp_ms=int(_time.time() * 1000),
-                properties=prev.properties,
-                stats=prev.stats,
-                column_mapping=dict(prev.column_mapping),
-            )
+            competing = self._next(prev, "append")
             real(self, competing, prev)  # steal the version number
         return real(self, commit, prev)
 
@@ -2369,3 +2355,187 @@ def test_empty_dataframe_write_gives_typed_empty_table(spark, tmp_path_str):
         mode="append",
     )
     assert sorted(r.k for r in t.read().collect()) == [0, 1]
+
+
+@pytest.mark.parametrize("case", ["mor", "cow_emptied", "cow_two_units"])
+def test_empty_upsert_adds_no_unit(spark, tmp_path_str, case):
+    """An upsert of an empty batch changes no unit: merge-on-read used
+    to commit a 0-record unit, copy-on-write into an emptied table the
+    same, and copy-on-write into a multi-unit table rewrote every unit
+    (the bounds of an empty batch are unknown, so all units looked
+    touched)."""
+    t = ManagedTable(spark, os.path.join(tmp_path_str, "t"))
+    t.write(_kv(spark, 0, 3), mode="overwrite", primary_key=["k"])
+    if case == "cow_emptied":
+        t.delete_where("k >= 0")
+    if case == "cow_two_units":
+        t.write(_kv(spark, 10, 13), mode="append")
+    before = t.latest_commit()
+    rows = sorted(map(tuple, t.read().collect()))
+    c = t.upsert(
+        _kv(spark, 0, 0), ["k"],
+        strategy="merge-on-read" if case == "mor" else "copy-on-write",
+    )
+    assert c.version == before.version + 1
+    assert c.data_units == before.data_units
+    assert sorted(map(tuple, t.read().collect())) == rows
+
+
+@pytest.fixture(scope="module")
+def carry_base(spark):
+    """A row-tracked, partitioned table whose head carries every piece
+    of state a version inherits: a txn watermark, a COPY INTO sidecar,
+    clustering columns, a CHECK constraint, and a deletion vector on
+    the clustered unit (k < 100), beside a second unit (k >= 100)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    with tempfile.TemporaryDirectory() as d:
+        t = ManagedTable(spark, os.path.join(d, "t"))
+        t.write(
+            spark.createDataFrame(
+                [(k, k, k, 0) for k in range(10)],
+                "k long, v long, w int, p long",
+            ),
+            mode="overwrite", primary_key=["k"], partition_by=["p"],
+            properties={"delta.enableRowTracking": "true"},
+            txn=("app", 1),
+        )
+        t.add_constraint("pos", "k >= 0")
+        t.optimize(cluster_by=["k"])
+        land = os.path.join(d, "land")
+        os.makedirs(land)
+        ks = list(range(100, 110))
+        pq.write_table(
+            pa.table({
+                "k": pa.array(ks, pa.int64()),
+                "v": pa.array(ks, pa.int64()),
+                "w": pa.array(ks, pa.int32()),
+                "p": pa.array([1] * len(ks), pa.int64()),
+            }),
+            os.path.join(land, "b.parquet"),
+        )
+        t.copy_into(os.path.join(land, "*.parquet"))
+        t.delete_where("k = 3", strategy="merge-on-read")
+        yield t
+
+
+def _batch(spark, keys, v=1000):
+    return spark.createDataFrame(
+        [(k, k + v, k, k // 100) for k in keys],
+        "k long, v long, w int, p long",
+    )
+
+
+# (name, mutator, keeps the unit that carries the deletion vector)
+_CARRY_CASES = [
+    ("append", lambda s, t: t.write(_batch(s, [200]), mode="append"), True),
+    ("overwrite", lambda s, t: t.write(
+        _batch(s, [1, 2]), mode="overwrite"), False),
+    ("upsert_cow", lambda s, t: t.upsert(_batch(s, [100, 150]), ["k"]), True),
+    ("upsert_mor", lambda s, t: t.upsert(
+        _batch(s, [100, 150]), ["k"], strategy="merge-on-read"), True),
+    ("upsert_full_sync", lambda s, t: t.upsert_full_sync(
+        _batch(s, range(100, 105)), ["k"], delete_scope="k >= 100"), True),
+    ("delete_cow", lambda s, t: t.delete_where("k >= 105"), True),
+    ("delete_mor", lambda s, t: t.delete_where(
+        "k >= 105", strategy="merge-on-read"), True),
+    ("delete_keys", lambda s, t: t.delete_keys(
+        s.createDataFrame([(101,)], "k long")), True),
+    ("update_where", lambda s, t: t.update_where(
+        "k >= 105", {"v": "v + 1"}), True),
+    ("replace_where", lambda s, t: t.replace_where(
+        _batch(s, [105, 106]), "k >= 105"), True),
+    ("overwrite_partitions", lambda s, t: t.overwrite_partitions(
+        _batch(s, [120])), True),
+    ("compact_small_units", lambda s, t: t.compact_small_units(), False),
+    ("optimize_where", lambda s, t: t.optimize(where="k >= 100"), True),
+    ("restore", lambda s, t: t.restore(
+        version=t.latest_commit().version - 1), None),
+    ("add_column", lambda s, t: t.add_column("c", "string"), True),
+    ("set_column_default", lambda s, t: t.set_column_default(
+        "v", "0"), True),
+    ("widen_column_type", lambda s, t: t.widen_column_type(
+        "w", "bigint"), True),
+    ("drop_column", lambda s, t: t.drop_column("w"), True),
+    ("rename_column", lambda s, t: t.rename_column("v", "v2"), True),
+    ("add_constraint", lambda s, t: t.add_constraint(
+        "v_set", "v IS NOT NULL"), True),
+    ("drop_constraint", lambda s, t: t.drop_constraint("pos"), True),
+    ("set_properties", lambda s, t: t.set_properties(
+        {"comment": "x"}), True),
+    ("recompute_stats", lambda s, t: t.recompute_stats(), True),
+]
+
+
+@pytest.mark.parametrize(
+    "name,mutate,keeps_dv_unit", _CARRY_CASES,
+    ids=[c[0] for c in _CARRY_CASES],
+)
+def test_every_mutator_carries_the_parent_state(
+    spark, carry_base, tmp_path_str, name, mutate, keeps_dv_unit
+):
+    """Each mutator's successor keeps what a version inherits from its
+    parent: txn watermarks, COPY INTO sidecars, clustering columns,
+    the deletion vectors of units it does not rewrite and the row ids
+    of every unit it keeps. RESTORE takes the table state of the
+    version it restores and the writer state of the head. A fresh
+    instance's replay of the log equals the returned snapshot."""
+    t = carry_base.clone_to(os.path.join(tmp_path_str, "t"))
+    before = t.latest_commit()
+    (dv_rel, dv), = before.deletion_vectors.items()
+    dv_unit = dv_rel.split("/")[1]
+    after = mutate(spark, t)
+    assert after.version == before.version + 1
+    assert after.txns == before.txns == {"app": 1}
+    assert after.ingest_sidecars == before.ingest_sidecars
+    assert len(before.ingest_sidecars) == 1
+    base = t.commit_at(before.version - 1) if name == "restore" else before
+    assert after.clustered_by == base.clustered_by == ["k"]
+    if keeps_dv_unit is None:
+        assert after.data_units == base.data_units
+        assert after.deletion_vectors == base.deletion_vectors
+    elif keeps_dv_unit:
+        assert dv_unit in after.data_units
+        assert after.deletion_vectors[dv_rel] == dv
+    else:
+        assert dv_unit not in after.data_units
+    for u in set(after.data_units) & set(before.data_units):
+        assert after.row_ids[u] == before.row_ids[u], u
+    assert set(after.row_ids) == set(after.data_units)
+    assert after.row_id_high_water >= before.row_id_high_water
+    fresh = ManagedTable(spark, t.path).latest_commit()
+    assert fresh == after == t.latest_commit()
+
+
+def test_commits_are_built_only_by_the_successor_constructor():
+    """Every version is derived from its parent by
+    ``ManagedTable._next``: ``Commit(`` is called nowhere else in the
+    package but where a log state is read back (``_view``) or a legacy
+    snapshot is converted (``sync_metadata``)."""
+    import ast
+
+    from conftest import REPO
+
+    allowed = {"_next", "_view", "sync_metadata"}
+    pkg = REPO / "component_delta_lake_writer_spark"
+    offenders = set()
+    for f in sorted(pkg.rglob("*.py")):
+        def visit(node, fn):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    visit(child, child.name)
+                    continue
+                if isinstance(child, ast.Call) and "Commit" in (
+                    getattr(child.func, "id", None),
+                    getattr(child.func, "attr", None),
+                ) and fn not in allowed:
+                    offenders.add(
+                        f"{os.path.relpath(f, REPO)}:{child.lineno} ({fn})"
+                    )
+                visit(child, fn)
+
+        visit(ast.parse(f.read_text()), None)
+    assert offenders == set(), (
+        f"build successors with ManagedTable._next: {sorted(offenders)}"
+    )

@@ -441,6 +441,12 @@ _LIFECYCLE_OP = st.one_of(
     st.tuples(st.just("delete_mor"), st.integers(min_value=2, max_value=7)),
     st.tuples(st.just("optimize"), st.just(None)),
     st.tuples(st.just("restore_back"), st.integers(min_value=1, max_value=3)),
+    st.tuples(st.just("update_mod"), st.integers(min_value=2, max_value=7)),
+    st.tuples(st.just("replace_from"), st.tuples(KEYS, rows_strategy)),
+    st.tuples(st.just("full_sync_from"), st.tuples(KEYS, rows_strategy)),
+    st.tuples(st.just("delete_keys"), st.lists(KEYS, max_size=8)),
+    st.tuples(st.just("compact"), st.just(None)),
+    st.tuples(st.just("add_column"), st.just(None)),
 )
 
 
@@ -453,8 +459,10 @@ _LIFECYCLE_OP = st.one_of(
 @given(ops=st.lists(_LIFECYCLE_OP, min_size=1, max_size=6))
 def test_table_lifecycle_model(spark, ops):
     """Model-based lifecycle law: an ARBITRARY interleaving of append /
-    COW upsert / MOR upsert / COW and MOR DELETE WHERE / OPTIMIZE /
-    RESTORE must keep ``read()`` equal to a plain Python dict-model
+    COW upsert / MOR upsert / COW and MOR DELETE WHERE / UPDATE /
+    replaceWhere / scoped full-sync MERGE / DELETE by keys / OPTIMIZE /
+    small-unit compaction / ADD COLUMN / RESTORE must keep ``read()``
+    equal to a plain Python dict-model
     replaying the same commands, and every historical version must
     stay readable (time travel over mixed COW / MOR / compacted /
     restored history). After EVERY commit the external Delta reader
@@ -563,6 +571,44 @@ def test_table_lifecycle_model(spark, ops):
                 t.restore(version=target_version)
                 model.clear()
                 model.update(history[target_version])
+                commit_model()
+            elif not t.exists():
+                continue
+            elif op == "update_mod":
+                t.update_where(f"k % {arg} = 0", {"v": "v + 1"})
+                for k in [k for k in model if k % arg == 0]:
+                    model[k] += 1
+                commit_model()
+            elif op in ("replace_from", "full_sync_from"):
+                lo, rows = arg
+                batch = {k: v for k, v in rows}
+                if op == "replace_from":
+                    # every incoming row must satisfy the predicate
+                    batch = {k: v for k, v in batch.items() if k >= lo}
+                df = spark.createDataFrame(
+                    list(batch.items()), "k long, v long"
+                )
+                if op == "replace_from":
+                    t.replace_where(df, f"k >= {lo}")
+                else:
+                    t.upsert_full_sync(df, ["k"], delete_scope=f"k >= {lo}")
+                for k in [k for k in model if k >= lo and k not in batch]:
+                    del model[k]
+                model.update(batch)
+                commit_model()
+            elif op == "delete_keys":
+                t.delete_keys(
+                    spark.createDataFrame([(k,) for k in arg], "k long")
+                )
+                for k in arg:
+                    model.pop(k, None)
+                commit_model()
+            elif op == "compact":
+                if t.compact_small_units() is None:
+                    continue  # fewer than two small units: no commit
+                commit_model()
+            elif op == "add_column":
+                t.add_column(f"c{len(history)}", "string")
                 commit_model()
 
         if not t.exists():
