@@ -3399,7 +3399,7 @@ def v2_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def delta_dv_external_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deletion-vector interop proof (the r4/r5 headline gap closed):
     a merge-on-read DELETE then a merge-on-read upsert publish REAL
-    Delta deletion vectors into the ``_delta_log`` mirror (binary
+    Delta deletion vectors into the ``_delta_log`` (binary
     RoaringBitmapArray files + descriptors, reader 3 / writer 7
     ``deletionVectors`` feature — sinks/deletion_vectors.py), and the
     snapshot is read back EXCLUSIVELY the way an external Delta reader
@@ -3410,7 +3410,7 @@ def delta_dv_external_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: the reference's delta-rs write path
     (src/component.py:356) produces tables any Delta reader opens;
-    this probe holds the mirror to that same bar under merge-on-read.
+    this probe holds the log to that same bar under merge-on-read.
     """
     import shutil
 

@@ -284,8 +284,8 @@ def convert_to_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONVERT TO DELTA (Delta's in-place parquet adoption): an
     existing parquet directory becomes a managed table with ZERO data
     rewritten — files are adopted by hardlink, stats come from one
-    driver-side footer pass, and version 0 is a real commit (external
-    Delta mirror included). The probe proves zero-copy by inode
+    driver-side footer pass, and version 0 is a real ``_delta_log``
+    commit. The probe proves zero-copy by inode
     identity between source and adopted files."""
     base = _scratch("convert_to_delta", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
@@ -473,7 +473,7 @@ def rename_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1) rename is metadata-only, (2) an append AFTER the rename lands
     under the physical name so all units stay uniform, (3) data
     skipping still prunes under the LOGICAL name (stats are keyed
-    physical), and (4) an external Delta reader resolves the mirror
+    physical), and (4) an external Delta reader resolves the log
     through delta.columnMapping.physicalName field metadata."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
         read_delta_table,
@@ -502,7 +502,7 @@ def rename_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     # logical-name data skipping: every unit's amount-min is > 0, so
     # this must prune to the empty scan, not error on unknown names
     assert t.read_where("amount < -1.0").count() == 0
-    # external reader path over the Delta mirror (physicalName fields)
+    # external reader path over the _delta_log (physicalName fields)
     ext = read_delta_table(spark, t.path)
     assert ext.columns == ["o_orderkey", "amount", "o_orderstatus"]
     back = t.read()
@@ -1447,7 +1447,7 @@ def idempotent_txn_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Idempotent writer transactions (Delta txn/setTransaction): the
     same (appId, version) batch applied twice lands ONCE; the
     watermark survives unrelated commits; a later version applies; an
-    upsert replay under a consumed txn is a no-op. The mirror carries
+    upsert replay under a consumed txn is a no-op. The log carries
     the setTransaction actions (asserted in
     tests/test_managed_table.py::test_txn_idempotent_writes)."""
     t = _fresh_table(spark, "idempotent_txn_append", sf_dir)

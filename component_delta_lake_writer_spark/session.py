@@ -42,12 +42,22 @@ if TYPE_CHECKING:
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# Local mode runs driver AND executors in one JVM whose heap defaults
-# to 1g — a 32-thread session with 64 MB broadcast joins OOMs on any
-# real workload long before the host's memory is touched. Default to
-# the host profile (the reference likewise sizes max_memory to its
-# host); callers with a capped profile pass ``memory`` explicitly.
-DEFAULT_MEMORY = os.environ.get("SPARK_GRAFT_MEMORY", "32g")
+
+def _host_memory() -> str:
+    """Half the host's physical memory in whole GiB, at least 1g and at
+    most 32g. Local mode runs driver AND executors in one JVM whose
+    heap defaults to 1g — a 32-thread session with 64 MB broadcast
+    joins OOMs on any real workload long before the host's memory is
+    touched — but a heap the size of the host leaves nothing for the
+    Python workers, and the kernel kills the JVM instead."""
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(32, max(1, host // 2 >> 30))}g"
+
+
+# Default to the host profile (the reference likewise sizes max_memory
+# to its host); callers with a capped profile pass ``memory``
+# explicitly or set SPARK_GRAFT_MEMORY.
+DEFAULT_MEMORY = os.environ.get("SPARK_GRAFT_MEMORY") or _host_memory()
 
 
 def get_spark(

@@ -765,14 +765,15 @@ def replay_delta_log(table_path: str) -> tuple[list[str], str | None, list[str]]
 
 
 def read_delta_table(spark, table_path: str):
-    """What a spec-compliant external Delta reader does with this
-    mirror: checkpoint-aware replay → schemaString → scan the live
-    files, resolving columns through ``delta.columnMapping.
-    physicalName`` field metadata when the table uses columnMapping
-    mode=name (RENAME COLUMN tables), and SKIPPING the row positions
-    each add's ``deletionVector`` marks deleted (parsed from the
-    binary DV file; row identity is the parquet ``_metadata.row_index``
-    — the position the descriptor's bitmap indexes).
+    """What a spec-compliant external Delta reader does with the
+    table's ``_delta_log``: checkpoint-aware replay → schemaString →
+    scan the live files, resolving columns through ``delta.
+    columnMapping.physicalName`` field metadata when the table uses
+    columnMapping mode=name (RENAME COLUMN tables), and SKIPPING the
+    row positions each add's ``deletionVector`` marks deleted (parsed
+    from the binary DV file; row identity is the parquet
+    ``_metadata.row_index`` — the position the descriptor's bitmap
+    indexes).
 
     Partitioned tables read per the spec's rule: a partition column's
     values come from the add action's ``partitionValues`` (never from

@@ -284,6 +284,17 @@ def _prop_on(props: dict | None, key: str) -> bool:
     return v is True or str(v).lower() == "true"
 
 
+def txn_applied(head: Commit | None, txn: tuple[str, int] | None) -> bool:
+    """Delta's idempotent-writer rule (setTransaction): a write carrying
+    ``txn=(app_id, v)`` is already in the table at ``head`` when that
+    app's watermark is at or past ``v``."""
+    return (
+        txn is not None
+        and head is not None
+        and (head.txns or {}).get(txn[0], -(1 << 62)) >= txn[1]
+    )
+
+
 class ManagedTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -1452,7 +1463,7 @@ class ManagedTable:
     @staticmethod
     def _stamp_generated(df: DataFrame, gen: dict[str, str]) -> DataFrame:
         """Record generation expressions as field metadata so they ride
-        the committed schema_json (and the Delta mirror's
+        the committed schema_json (and the ``_delta_log`` metaData's
         schemaString)."""
         return df.select(
             *[
@@ -1517,11 +1528,7 @@ class ManagedTable:
         partition_by = partition_by or []
         prev = self.latest_commit()
 
-        if (
-            txn is not None
-            and prev is not None
-            and (prev.txns or {}).get(txn[0], -(1 << 62)) >= txn[1]
-        ):
+        if txn_applied(prev, txn):
             return prev  # already applied — idempotent no-op
 
         if mode == "error" and prev is not None:
@@ -1698,10 +1705,7 @@ class ManagedTable:
                 if not retriable:
                     raise
                 prev = self.latest_commit()
-                if (
-                    txn is not None
-                    and (prev.txns or {}).get(txn[0], -(1 << 62)) >= txn[1]
-                ):
+                if txn_applied(prev, txn):
                     # a concurrent writer carrying the SAME txn won the
                     # race: this batch is already in the table — drop
                     # the orphaned unit and report their commit
@@ -2722,10 +2726,7 @@ class ManagedTable:
             raise UserException("Upsert load mode requires a primary key.")
         if txn is not None:
             head = self.latest_commit()
-            if (
-                head is not None
-                and (head.txns or {}).get(txn[0], -(1 << 62)) >= txn[1]
-            ):
+            if txn_applied(head, txn):
                 return head  # already applied — idempotent no-op
         from component_delta_lake_writer_spark.operators.merge import (
             dedup_source,
@@ -3215,10 +3216,7 @@ class ManagedTable:
         )
 
         prev = self._head()
-        if (
-            txn is not None
-            and (prev.txns or {}).get(txn[0], -(1 << 62)) >= txn[1]
-        ):
+        if txn_applied(prev, txn):
             return prev  # already applied — idempotent no-op
         if not prev.primary_key:
             raise UserException("delete_keys requires a primary key.")

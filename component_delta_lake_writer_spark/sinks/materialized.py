@@ -23,7 +23,9 @@ would drift and the two paths could never be differentially tested.
 
 Fallback: any range the CDF cannot attribute (overwrite/restore/DML
 crossings, pre-images missing while updates occurred) degrades to a
-full recompute, never to wrong numbers.
+full recompute, never to wrong numbers. Either path records the source
+version it reflects as the ``mv::<source path>`` writer txn — the
+watermark every change-feed follower keeps (``sinks.replicate``).
 """
 
 from __future__ import annotations
@@ -37,9 +39,14 @@ from component_delta_lake_writer_spark.functions.exact import (
     exact_sum,
     quantize,
 )
-from component_delta_lake_writer_spark.sinks.managed_table import ManagedTable
-
-_VERSION_PROP = "mv_source_version"
+from component_delta_lake_writer_spark.sinks.managed_table import (
+    ManagedTable,
+    txn_applied,
+)
+from component_delta_lake_writer_spark.sinks.replicate import (
+    follower_id,
+    watermark,
+)
 
 
 class IncrementalAggregate:
@@ -100,20 +107,19 @@ class IncrementalAggregate:
         head = self.source.latest_commit()
         if head is None:
             raise UserException("source table does not exist")
-        last = None
-        mv_head = self.table.latest_commit() if self.table.exists() else None
-        if mv_head is not None:
-            last = mv_head.properties.get(_VERSION_PROP)
-        if last is not None and last == head.version:
+        app_id = follower_id("mv", self.source)
+        txn = (app_id, head.version)
+        if txn_applied(self.table.latest_commit(), txn):
             return "noop"
+        last = watermark(self.table, app_id)
         if last is None:
-            return self._full(head.version)
+            return self._full(txn)
         try:
             changes = self.source.read_changes(
                 last, head.version, with_change_type=True
             )
         except UserException:
-            return self._full(head.version)
+            return self._full(txn)
         # pre-images are persisted per COMMIT under the property in
         # effect at write time — checking only the head's property
         # would run the incremental path over update change sets that
@@ -124,7 +130,7 @@ class IncrementalAggregate:
             if c.action in ("append", "optimize", "delete"):
                 continue  # additive / no-op / carries removed images
             if not (c.properties or {}).get("changeDataFeedPreImages"):
-                return self._full(head.version)
+                return self._full(txn)
         delta = self._compute_delta(changes)
         current = self.table.read()
         merged = delta.join(current, self.group_by, "left").select(
@@ -145,23 +151,16 @@ class IncrementalAggregate:
                 for name in self.sums
             ],
         )
-        props = {
-            **(mv_head.properties if mv_head else {}),
-            _VERSION_PROP: head.version,
-        }
-        self.table.upsert(merged, self.group_by, properties=props)
+        self.table.upsert(merged, self.group_by, txn=txn)
         return "incremental"
 
-    def _full(self, version: int) -> str:
-        # PIN the snapshot to the version being stamped: an unpinned
+    def _full(self, txn: tuple[str, int]) -> str:
+        # PIN the snapshot to the version the txn records: an unpinned
         # read() can see a commit that landed after the head capture,
         # and the next refresh would re-apply that commit's changes
-        mv = self._compute_full(self.source.read(version=version))
+        mv = self._compute_full(self.source.read(version=txn[1]))
         self.table.write(
-            mv,
-            mode="overwrite",
-            primary_key=self.group_by,
-            properties={_VERSION_PROP: version},
+            mv, mode="overwrite", primary_key=self.group_by, txn=txn
         )
         return "full"
 

@@ -20,19 +20,20 @@ streams A's deltas — no file listing, no external queue.
 
 Scale posture: offset planning is driver-side COMMIT METADATA (which
 versions, which files — one forward pass over the table's log per
-batch); the data
-plane is one InputPartition per change file, read worker-side via
-pyarrow. Partitioned tables recover hive partition values from the
-directory layout; a change-set commit's rows are the change files its
-cdc actions name. Commits a CDF stream cannot attribute (overwrite /
-restore) raise rather than silently emitting wrong deltas — the same
-contract as ``ManagedTable.read_changes``.
+batch); the data plane is one InputPartition per change file, read
+worker-side via pyarrow into one Arrow batch per file. Partitioned
+tables recover hive partition values from the directory layout; a
+change-set commit's rows are the change files its cdc actions name.
+Commits a CDF stream cannot attribute (overwrite / restore) raise
+rather than silently emitting wrong deltas — the same contract as
+``ManagedTable.read_changes``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
@@ -42,35 +43,11 @@ from pyspark.sql.datasource import (
 
 from component_delta_lake_writer_spark.errors import UserException
 
-
-def _typed_partition_value(raw: str | None, dtype):
-    """Decode a hive-dir partition value string into the schema's
-    Python type (the worker-side twin of Spark's own partition-value
-    casting — booleans, dates, timestamps and decimals included)."""
-    import datetime as _dt
-    import decimal as _dec
-
-    if raw is None:
-        return None
-    if isinstance(dtype, (T.IntegerType, T.LongType, T.ShortType)):
-        return int(raw)
-    if isinstance(dtype, (T.DoubleType, T.FloatType)):
-        return float(raw)
-    if isinstance(dtype, T.BooleanType):
-        return raw.lower() == "true"
-    if isinstance(dtype, T.DateType):
-        return _dt.date.fromisoformat(raw)
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        return _dt.datetime.fromisoformat(raw.replace(" ", "T", 1))
-    if isinstance(dtype, T.DecimalType):
-        return _dec.Decimal(raw)
-    return raw
-
 # commit classification is SHARED with batch read_changes so the two
 # surfaces can never drift on where a commit's changes live; the
 # light cdf_actions module keeps the Python-worker import chain free
 # of the full table engine (worker cold-start cost)
-from component_delta_lake_writer_spark.sinks.cdf_actions import (  # noqa: E402
+from component_delta_lake_writer_spark.sinks.cdf_actions import (
     commit_changes,
 )
 
@@ -231,9 +208,12 @@ class CdfStreamReader(DataSourceStreamReader):
         return out
 
     def read(self, partition: _ChangeFilePartition):
-        import datetime as _dt
-
+        """One Arrow record batch per file, cast once to the stream
+        schema — Spark takes it as is, no per-row Python values."""
+        import numpy as np
+        import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         file_cols = set(pq.ParquetFile(partition.path).schema_arrow.names)
         # Resolve each stream field to its source column FIRST, so the
@@ -244,64 +224,50 @@ class CdfStreamReader(DataSourceStreamReader):
         # resurrect some other column's shadowed old bytes that
         # add_column/rename deliberately hid (managed_table add_column
         # contract).
-        resolve: dict[str, str | None] = {}
+        const = {"_commit_version": partition.version}
+        if partition.change_type:
+            const["_change_type"] = partition.change_type
+        resolve = {}
         for f in self.schema.fields:
-            if f.name == "_commit_version" or (
-                f.name == "_change_type" and partition.change_type
-            ):
-                continue
             phys = partition.mapping.get(f.name, f.name)
-            resolve[f.name] = phys if phys in file_cols else None
-        wanted = sorted({c for c in resolve.values() if c})
-        tbl = pq.read_table(partition.path, columns=wanted)
-        cols = {name: tbl.column(name).to_pylist() for name in wanted}
-        n = tbl.num_rows
-
-        def _coerce(vals, dtype):
-            # files written BEFORE a widen_column_type keep narrower
-            # pages; batch reads cast natively via schema pushdown,
-            # the Python path must coerce explicitly (date→ntz is the
-            # one non-identity representation in _WIDENINGS; int→
-            # double needs a float box)
-            if isinstance(dtype, (T.TimestampNTZType, T.TimestampType)):
-                return [
-                    _dt.datetime(v.year, v.month, v.day)
-                    if type(v) is _dt.date
-                    else v
-                    for v in vals
-                ]
-            if isinstance(dtype, (T.DoubleType, T.FloatType)):
-                return [float(v) if isinstance(v, int) else v for v in vals]
-            return vals
-
-        out_cols = []
-        for f in self.schema.fields:
-            if f.name == "_commit_version":
-                out_cols.append([partition.version] * n)
-            elif f.name == "_change_type" and partition.change_type:
-                out_cols.append([partition.change_type] * n)
-            elif resolve.get(f.name):
-                out_cols.append(_coerce(cols[resolve[f.name]], f.dataType))
-            elif f.name in partition.partition_values:
-                raw = partition.partition_values[f.name]
-                out_cols.append(
-                    [_typed_partition_value(raw, f.dataType)] * n
-                )
-            else:
-                out_cols.append([None] * n)
-        if not n:
-            return
+            if f.name not in const and phys in file_cols:
+                resolve[f.name] = phys
+        tbl = pq.read_table(
+            partition.path, columns=sorted(set(resolve.values()))
+        )
         if partition.dv is not None:
             from component_delta_lake_writer_spark.sinks.deletion_vectors import (  # noqa: E501
                 read_dv,
             )
 
-            gone = set(read_dv(*partition.dv))
-            yield from (
-                row for i, row in enumerate(zip(*out_cols)) if i not in gone
-            )
+            keep = np.ones(tbl.num_rows, dtype=bool)
+            keep[np.fromiter(read_dv(*partition.dv), dtype=np.int64)] = False
+            tbl = tbl.filter(pa.array(keep))
+        n = tbl.num_rows
+        if not n:
             return
-        yield from zip(*out_cols)
+        target = to_arrow_schema(self.schema)
+        cols = []
+        for f in target:
+            if f.name in const:
+                cols.append(pa.repeat(pa.scalar(const[f.name]), n))
+            elif f.name in resolve:
+                cols.append(tbl.column(resolve[f.name]))
+            elif f.name in partition.partition_values:
+                # hive-dir values are strings; a timestamp one carries
+                # no zone, so it parses naive and the cast reads it as
+                # UTC (the session zone batch reads use)
+                v = pa.scalar(partition.partition_values[f.name], pa.string())
+                if pa.types.is_timestamp(f.type):
+                    v = v.cast(pa.timestamp(f.type.unit))
+                cols.append(pa.repeat(v, n))
+            else:
+                cols.append(pa.nulls(n))
+        # files written before a widen_column_type keep their narrower
+        # pages (int→double, date→timestamp_ntz): the one cast widens
+        # them as Spark's own parquet reader does for batch reads
+        out = pa.Table.from_arrays(cols, names=target.names).cast(target)
+        yield out.combine_chunks().to_batches()[0]
 
     def commit(self, end: dict) -> None:
         pass  # offsets are durable table versions; nothing to ack

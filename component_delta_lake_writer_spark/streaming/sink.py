@@ -10,8 +10,6 @@ boundaries per batch instead of per 25k rows.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from component_delta_lake_writer_spark.sinks import ManagedTable
@@ -199,95 +197,40 @@ def stream_replicate(
     materializes per commit (no growth, O(overlapped target units) per
     commit instead).
 
-    This is the streaming spelling of sinks.replicate (batch catch-up)
-    — the two compose: batch-replicate to bootstrap, stream to follow.
+    Batch ``sinks.replicate.replicate`` applies versions through the
+    same ``apply_changes`` and records the same watermark, so the two
+    compose: batch-replicate to bootstrap, stream to follow — the
+    stream re-applies nothing the batch copy already holds.
     """
-    from pyspark.sql import functions as F
-
+    from component_delta_lake_writer_spark.sinks.replicate import (
+        apply_changes,
+        follower_id,
+    )
     from component_delta_lake_writer_spark.streaming.cdf_source import (
         register,
     )
 
     spark = src.spark
     register(spark)
-    app_id = f"replicate::{os.path.abspath(src.path)}"
-    applied = [0]  # source commits applied this run (optimize cadence)
+    app_id = follower_id("replicate", src)
+    applied = 0  # source commits applied this run (optimize cadence)
+
+    def after_version() -> None:
+        nonlocal applied
+        applied += 1
+        if optimize_every and applied % optimize_every == 0:
+            dst.optimize()
 
     def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        rows = batch_df.persist()
-        try:
-            # ONE profiling agg instead of a distinct-collect plus two
-            # isEmpty probes PER VERSION: with V source commits in the
-            # batch that's 1 job instead of 1+2V (each ~0.3 s of fixed
-            # dispatch — the bulk of replication latency for small
-            # commits).
-            profile = {
-                r["_commit_version"]: (r["n_up"], r["n_del"])
-                for r in rows.groupBy("_commit_version")
-                .agg(
-                    F.sum(
-                        F.when(
-                            F.col("_change_type").isin(
-                                "insert", "update_postimage"
-                            ),
-                            1,
-                        ).otherwise(0)
-                    ).alias("n_up"),
-                    F.sum(
-                        F.when(
-                            F.col("_change_type") == "delete", 1
-                        ).otherwise(0)
-                    ).alias("n_del"),
-                )
-                .collect()
-            }
-            for v in sorted(profile):
-                n_up, n_del = profile[v]
-                delta = rows.filter(F.col("_commit_version") == v)
-                upserts = delta.filter(
-                    F.col("_change_type").isin("insert", "update_postimage")
-                ).drop("_change_type", "_commit_version")
-                deletes = delta.filter(
-                    F.col("_change_type") == "delete"
-                ).select(*primary_key)
-                head = dst.latest_commit()
-                if (
-                    head is not None
-                    and (head.txns or {}).get(app_id, -1) >= v
-                ):
-                    continue  # replayed source version — already applied
-                has_up = n_up > 0
-                has_del = n_del > 0
-                # DELETES FIRST: a replace_where/full-sync commit may
-                # delete an old image and insert a new one under the
-                # SAME PK in one version — upsert-then-delete would
-                # erase the fresh row. Deletes never target keys the
-                # same version re-inserts... except exactly that case,
-                # so old images must go before new ones land. The txn
-                # watermark rides the LAST op of the version; a crash
-                # in between replays the whole version (delete is
-                # key-idempotent, upsert last-write-wins — safe).
-                if has_del:
-                    dst.delete_keys(
-                        deletes,
-                        txn=None if has_up else (app_id, v),
-                    )
-                if has_up:
-                    # merge-on-read default: the replication apply is
-                    # O(this commit's delta), never O(replica) — a CDC
-                    # follower of a 100 TB table must not rewrite
-                    # overlapped target units per source commit;
-                    # optimize_every / a later optimize() materializes
-                    # the accrued deletion vectors.
-                    dst.upsert(
-                        upserts, primary_key, txn=(app_id, v),
-                        strategy=upsert_strategy,
-                    )
-                applied[0] += 1
-                if optimize_every and applied[0] % optimize_every == 0:
-                    dst.optimize()
-        finally:
-            rows.unpersist()
+        # merge-on-read default: the replication apply is O(this
+        # commit's delta), never O(replica) — a CDC follower of a
+        # 100 TB table must not rewrite overlapped target units per
+        # source commit; optimize_every / a later optimize()
+        # materializes the accrued deletion vectors.
+        apply_changes(
+            batch_df, dst, primary_key, app_id, upsert_strategy,
+            after_version,
+        )
 
     feed = (
         spark.readStream.format("table_changes_stream")
@@ -324,8 +267,8 @@ def stream_scd2(
     current rows close at the new state's ``ts_col``, new current
     rows land, history accumulates.  The upsert keys on
     ``(key, valid_from)`` so the apply is O(this commit's changed
-    keys), with per-source-version writer-txn idempotence exactly
-    like stream_replicate (checkpoint replays re-apply nothing).
+    keys), with the same per-source-version writer-txn watermark as
+    stream_replicate (checkpoint replays re-apply nothing).
 
     Source DELETE rows are ignored by design: an entity's removal is
     an attribute change in a type-2 dimension (soft delete), not an
@@ -341,30 +284,24 @@ def stream_scd2(
         scd2_build,
         scd2_delta,
     )
+    from component_delta_lake_writer_spark.sinks.replicate import (
+        follower_id,
+        pending_versions,
+    )
     from component_delta_lake_writer_spark.streaming.cdf_source import (
         register,
     )
 
     spark = src.spark
     register(spark)
-    app_id = f"scd2::{os.path.abspath(src.path)}"
+    app_id = follower_id("scd2", src)
 
     def apply_batch(batch_df, _batch_id) -> None:
         rows = batch_df.filter(
             F.col("_change_type").isin("insert", "update_postimage")
         ).persist()
         try:
-            versions = sorted(
-                r["_commit_version"]
-                for r in rows.select("_commit_version").distinct().collect()
-            )
-            for v in versions:
-                head = dim.latest_commit()
-                if (
-                    head is not None
-                    and (head.txns or {}).get(app_id, -1) >= v
-                ):
-                    continue  # replayed source version
+            for v, _n_up, _n_del in pending_versions(rows, dim, app_id):
                 delta_rows = rows.filter(
                     F.col("_commit_version") == v
                 ).drop("_change_type", "_commit_version")

@@ -884,6 +884,119 @@ def test_stream_replicate_fresh_checkpoint_noop(spark, tmp_path):
     assert {(r["k"], r["v"]) for r in dst.read().collect()} == want
 
 
+def test_replicate_replace_where_ordering(spark, tmp_path):
+    """Batch replicate applies a version's deletes before its upserts:
+    a replace_where that deletes and re-inserts one key must leave the
+    replica equal to the source, not without that key."""
+    import os
+
+    from component_delta_lake_writer_spark.sinks import ManagedTable
+    from component_delta_lake_writer_spark.sinks.replicate import replicate
+
+    d = str(tmp_path)
+    src = ManagedTable(spark, os.path.join(d, "src"))
+    dst = ManagedTable(spark, os.path.join(d, "dst"))
+    src.write(spark.createDataFrame([(1, "a"), (2, "b")], "id int, s string"),
+              mode="overwrite", primary_key=["id"],
+              properties={"enableChangeDataFeed": True})
+    assert replicate(src, dst) == "full"
+    src.replace_where(
+        spark.createDataFrame([(1, "z")], "id int, s string"), "id = 1"
+    )
+    assert replicate(src, dst) == "incremental"
+    assert sorted(dst.read().collect()) == sorted(src.read().collect())
+    assert sorted(dst.read().collect()) == [(1, "z"), (2, "b")]
+    assert replicate(src, dst) == "noop"
+
+
+def test_replicate_bootstrap_then_stream_follows(spark, tmp_path):
+    """Batch replicate and stream_replicate share one txn watermark:
+    a stream started after a batch sync re-applies nothing (the
+    replica's head version stays put), then applies only what the
+    source commits next."""
+    import os
+
+    from component_delta_lake_writer_spark.sinks import ManagedTable
+    from component_delta_lake_writer_spark.sinks.replicate import replicate
+    from component_delta_lake_writer_spark.streaming.sink import (
+        stream_replicate,
+    )
+
+    d = str(tmp_path)
+    src = ManagedTable(spark, os.path.join(d, "src"))
+    dst = ManagedTable(spark, os.path.join(d, "dst"))
+    src.write(spark.createDataFrame([(1, 1.0), (2, 2.0)], "k int, v double"),
+              mode="overwrite", primary_key=["k"],
+              properties={"enableChangeDataFeed": True})
+    src.upsert(spark.createDataFrame([(2, -2.0), (3, 3.0)],
+                                     "k int, v double"), ["k"])
+    assert replicate(src, dst) == "full"
+    v_done = dst.latest_commit().version
+    ck = os.path.join(d, "ck")
+    stream_replicate(src, dst, ["k"], checkpoint_dir=ck).awaitTermination()
+    assert dst.latest_commit().version == v_done, "bootstrap re-applied"
+    src.delete_where("k = 1")
+    stream_replicate(src, dst, ["k"], checkpoint_dir=ck).awaitTermination()
+    assert dst.latest_commit().version == v_done + 1
+    assert sorted(dst.read().collect()) == sorted(src.read().collect())
+
+
+def test_cdf_stream_widened_columns_match_read_changes(spark, tmp_path):
+    """Files written before widen_column_type keep their narrow pages
+    (int, date); the stream widens them to the table's double and
+    timestamp_ntz exactly as batch read_changes does, row for row."""
+    import datetime as dt
+    import os
+
+    from component_delta_lake_writer_spark.sinks import ManagedTable
+    from component_delta_lake_writer_spark.streaming.cdf_source import (
+        register,
+    )
+
+    t = ManagedTable(spark, os.path.join(str(tmp_path), "t"))
+    t.write(
+        spark.createDataFrame([(1, 10, dt.date(2024, 1, 1))],
+                              "k int, n int, d date"),
+        mode="overwrite", primary_key=["k"],
+        properties={"enableChangeDataFeed": True},
+    )
+    t.write(
+        spark.createDataFrame([(2, 20, dt.date(2024, 1, 2))],
+                              "k int, n int, d date"),
+        mode="append",
+    )
+    t.widen_column_type("n", "double")
+    t.widen_column_type("d", "timestamp_ntz")
+    t.write(
+        spark.createDataFrame([(3, 30.5, dt.datetime(2024, 1, 3, 12))],
+                              "k int, n double, d timestamp_ntz"),
+        mode="append",
+    )
+    register(spark)
+    q = (
+        spark.readStream.format("table_changes_stream")
+        .option("path", t.path)
+        .option("startingVersion", "1")
+        .load()
+        .writeStream.format("memory").queryName("tcs_widened")
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    cols = ["k", "n", "d", "_change_type"]
+    got = sorted(
+        tuple(r) for r in spark.table("tcs_widened").select(*cols).collect()
+    )
+    want = sorted(
+        tuple(r)
+        for r in t.read_changes(0, with_change_type=True)
+        .select(*cols).collect()
+    )
+    assert got == want == [
+        (2, 20.0, dt.datetime(2024, 1, 2), "insert"),
+        (3, 30.5, dt.datetime(2024, 1, 3, 12), "insert"),
+    ]
+
+
 def test_interpolate_linear_semantics(spark):
     from component_delta_lake_writer_spark.operators.timeseries import (
         interpolate_linear,

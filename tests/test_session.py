@@ -19,3 +19,17 @@ def test_call_site_capture_off_errors_keep_their_class(spark):
         spark.range(3).select("no_such_column")
     assert err.value.getCondition().startswith("UNRESOLVED_COLUMN")
     assert "no_such_column" in str(err.value)
+
+
+def test_default_heap_fits_the_host():
+    """The default JVM heap is half the host's physical memory (at
+    most 32g): a heap above the host lets the kernel kill the JVM."""
+    import os
+
+    from component_delta_lake_writer_spark.session import _host_memory
+
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = _host_memory()
+    assert heap.endswith("g")
+    assert 1 <= int(heap[:-1]) <= 32
+    assert int(heap[:-1]) << 30 <= max(host // 2, 1 << 30)
