@@ -764,24 +764,38 @@ def replay_delta_log(table_path: str) -> tuple[list[str], str | None, list[str]]
     return sorted(_decode_path(p) for p in live), schema, partition_cols
 
 
+def _snapshot_scan(spark, table_path: str, md: dict, files: dict, **kw):
+    """``scan.scan_files`` over ``files`` under the logical schema of
+    the metaData action ``md`` (column mapping resolved through
+    ``delta.columnMapping.physicalName``)."""
+    from pyspark.sql import types as T
+
+    from component_delta_lake_writer_spark.sinks.scan import (
+        scan_files,
+        schema_view,
+    )
+
+    schema_json, mapping, _temporal = schema_view(md["schemaString"])
+    return scan_files(
+        spark, table_path, T.StructType.fromJson(json.loads(schema_json)),
+        files, mapping=mapping, partition_by=md["partitionColumns"], **kw,
+    )
+
+
 def read_delta_table(spark, table_path: str):
     """What a spec-compliant external Delta reader does with the
     table's ``_delta_log``: checkpoint-aware replay → schemaString →
-    scan the live files, resolving columns through ``delta.
+    one scan of exactly the live files (``scan.scan_files``, the scan
+    the engine reads with). Columns resolve through ``delta.
     columnMapping.physicalName`` field metadata when the table uses
-    columnMapping mode=name (RENAME COLUMN tables), and SKIPPING the
-    row positions each add's ``deletionVector`` marks deleted (parsed
+    columnMapping mode=name (RENAME COLUMN tables); the row positions
+    each add's ``deletionVector`` marks deleted are skipped (parsed
     from the binary DV file; row identity is the parquet
     ``_metadata.row_index`` — the position the descriptor's bitmap
-    indexes).
-
-    Partitioned tables read per the spec's rule: a partition column's
-    values come from the add action's ``partitionValues`` (never from
-    the data files, which do not store them) — files group by their
-    partition tuple and each group scans with the tuple attached as
-    typed literals. Plan size is O(#distinct live partition tuples),
-    the same shape any log-driven reader produces before engine-side
-    scan planning."""
+    indexes); a partition column's values come from the add action's
+    ``partitionValues`` (never from the data files, which do not store
+    them, nor from their paths). The plan is one FileScan and at most
+    two broadcast joins, at any file or partition count."""
     # Forward-compatibility gate (the spec's FIRST reader rule): a
     # reader must refuse tables whose protocol demands a reader
     # version or reader feature it does not implement — guessing
@@ -799,177 +813,7 @@ def read_delta_table(spark, table_path: str):
             raise ValueError(
                 f"unsupported reader features: {sorted(unknown)}"
             )
-    return _read_files(
-        spark, table_path, st["adds"],
-        json.loads(st["metaData"]["schemaString"]),
-        st["metaData"]["partitionColumns"],
-    )
-
-
-def _read_files(spark, table_path: str, adds: dict, sj: dict, pcols):
-    """Scan the files ``adds`` maps ({fs path: add action}) as the
-    logical columns of schema JSON ``sj``: physical names resolved
-    through ``delta.columnMapping.physicalName``, the positions a
-    ``deletionVector`` marks skipped, partition values (``pcols``)
-    taken from ``partitionValues``."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from component_delta_lake_writer_spark.session import local_relation
-    from component_delta_lake_writer_spark.sinks.deletion_vectors import (
-        read_dv,
-    )
-
-    logical = T.StructType.fromJson(sj)
-    if pcols:
-        return _read_partitioned(
-            spark, table_path, adds, sj, logical, pcols, read_dv
-        )
-    files = sorted(adds)
-    dvs = {
-        p: a["deletionVector"]
-        for p, a in adds.items()
-        if a.get("deletionVector") is not None
-    }
-    phys_names = [
-        (f.get("metadata") or {}).get(
-            "delta.columnMapping.physicalName", f["name"]
-        )
-        for f in sj.get("fields", [])
-    ]
-    physical = T.StructType(
-        [
-            T.StructField(pn, lf.dataType, lf.nullable)
-            for pn, lf in zip(phys_names, logical.fields)
-        ]
-    )
-    if not files:
-        # zero live files (everything deleted/overwritten-empty):
-        # an empty relation under the physical schema, not IndexError
-        df = local_relation(spark, physical)
-        return df.select(
-            *[
-                df[pn].alias(lf.name)
-                for pn, lf in zip(phys_names, logical.fields)
-            ]
-        )
-    parts = []
-    clean = [f for f in files if f not in dvs]
-    if clean:
-        parts.append(
-            spark.read.schema(physical).parquet(
-                *[os.path.join(table_path, f) for f in clean]
-            )
-        )
-    for f in files:
-        if f not in dvs:
-            continue
-        idx = read_dv(table_path, dvs[f])
-        df_f = (
-            spark.read.schema(physical)
-            .parquet(os.path.join(table_path, f))
-            .withColumn("_dv_ri", F.col("_metadata.row_index"))
-        )
-        dropped = local_relation(spark, "_dv_ri bigint", [idx])
-        parts.append(
-            df_f.join(F.broadcast(dropped), "_dv_ri", "left_anti").drop(
-                "_dv_ri"
-            )
-        )
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df.select(
-        *[
-            df[pn].alias(lf.name)
-            for pn, lf in zip(phys_names, logical.fields)
-        ]
-    )
-
-
-def _read_partitioned(spark, table_path, adds, sj, logical, pcols, read_dv):
-    """Partitioned branch of ``read_delta_table``: per the protocol,
-    partition column values live ONLY in each add's
-    ``partitionValues`` (string-encoded; None = null) — reconstruct
-    them as typed literal columns per partition-tuple file group.
-    Partition columns never rename in this engine, so names are
-    identity; the remaining columns resolve physicalName as usual."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from component_delta_lake_writer_spark.session import local_relation
-
-    pset = set(pcols)
-    data_fields = [f for f in logical.fields if f.name not in pset]
-    sj_fields = {f["name"]: f for f in sj.get("fields", [])}
-    phys = {
-        f.name: (sj_fields[f.name].get("metadata") or {}).get(
-            "delta.columnMapping.physicalName", f.name
-        )
-        for f in data_fields
-    }
-    physical = T.StructType(
-        [
-            T.StructField(phys[f.name], f.dataType, f.nullable)
-            for f in data_fields
-        ]
-    )
-    ftypes = {f.name: f.dataType for f in logical.fields}
-    groups: dict[tuple, list[str]] = {}
-    for p, a in adds.items():
-        pv = a.get("partitionValues") or {}
-        if isinstance(pv, list):  # checkpoint map comes back as pairs
-            pv = dict(pv)
-        key = tuple((c, pv.get(c)) for c in pcols)
-        groups.setdefault(key, []).append(p)
-    parts = []
-    # nulls sort first (key tuples may carry None partition values)
-    for key, paths in sorted(
-        groups.items(),
-        key=lambda kv: [(v is not None, v or "") for _c, v in kv[0]],
-    ):
-        clean = [
-            p for p in paths
-            if adds[p].get("deletionVector") is None
-        ]
-        masked = [p for p in paths if p not in set(clean)]
-        for batch, dv in (
-            [(clean, None)] if clean else []
-        ) + [([p], adds[p]["deletionVector"]) for p in masked]:
-            df = spark.read.schema(physical).parquet(
-                *[os.path.join(table_path, p) for p in batch]
-            )
-            if dv is not None:
-                idx = read_dv(table_path, dv)
-                df = (
-                    df.withColumn("_dv_ri", F.col("_metadata.row_index"))
-                    .join(
-                        F.broadcast(
-                            local_relation(spark, "_dv_ri bigint", [idx])
-                        ),
-                        "_dv_ri",
-                        "left_anti",
-                    )
-                    .drop("_dv_ri")
-                )
-            cols = []
-            pvals = dict(key)
-            for f in logical.fields:
-                if f.name in pset:
-                    cols.append(
-                        F.lit(pvals[f.name]).cast(ftypes[f.name]).alias(
-                            f.name
-                        )
-                    )
-                else:
-                    cols.append(df[phys[f.name]].alias(f.name))
-            parts.append(df.select(*cols))
-    if not parts:
-        return local_relation(spark, logical)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _snapshot_scan(spark, table_path, st["metaData"], st["adds"])
 
 
 def read_delta_table_row_ids(spark, table_path: str):
@@ -987,122 +831,20 @@ def read_delta_table_row_ids(spark, table_path: str):
       arithmetic — exactly the spec's resolution order
     - rows masked by a ``deletionVector`` are skipped first
 
-    Unpartitioned tables only (same probe surface as
-    ``read_delta_table``)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from component_delta_lake_writer_spark.session import local_relation
-    from component_delta_lake_writer_spark.sinks.deletion_vectors import (
-        read_dv,
-    )
-
+    Partitioned tables read as ``read_delta_table`` reads them: the
+    same one scan, with the per-file ids beside the partition values."""
     st = _replay_state(table_path)
-    if st["metaData"]["partitionColumns"]:
-        raise ValueError(
-            "read_delta_table_row_ids handles unpartitioned tables"
-        )
     cfg = st["metaData"].get("configuration") or {}
     if str(cfg.get("delta.enableRowTracking")).lower() != "true":
         raise ValueError("table does not advertise delta.enableRowTracking")
-    mat_id = cfg.get("delta.rowTracking.materializedRowIdColumnName")
-    mat_rcv = cfg.get(
-        "delta.rowTracking.materializedRowCommitVersionColumnName"
-    )
-    sj = json.loads(st["metaData"]["schemaString"])
-    logical = T.StructType.fromJson(sj)
-    phys_names = [
-        (f.get("metadata") or {}).get(
-            "delta.columnMapping.physicalName", f["name"]
-        )
-        for f in sj.get("fields", [])
-    ]
-    physical = T.StructType(
-        [
-            T.StructField(pn, lf.dataType, lf.nullable)
-            for pn, lf in zip(phys_names, logical.fields)
-        ]
-        + [
-            T.StructField(c, T.LongType(), True)
-            for c in (mat_id, mat_rcv)
-            if c
-        ]
-    )
-    out_schema = T.StructType(
-        list(logical.fields)
-        + [
-            T.StructField("_row_id", T.LongType(), True),
-            T.StructField("_row_commit_version", T.LongType(), True),
-        ]
-    )
-    if not st["adds"]:
-        # zero live files (empty create / everything deleted): an
-        # empty relation under the id-extended logical schema
-        return local_relation(spark, out_schema)
-    adds = st["adds"]
-    base = local_relation(
-        spark,
-        "_f string, _base long, _dcv long",
-        [
-            list(adds),
-            [a.get("baseRowId") for a in adds.values()],
-            [a.get("defaultRowCommitVersion") for a in adds.values()],
-        ],
-    )
-
-    def _one(paths: list[str], dv_idx=None):
-        # join key = the table-relative path exactly as add actions
-        # spell it ("_data/<unit>/<file>"): the scan's file_path is a
-        # file: URI, so take the suffix after the table's data dir
-        df = spark.read.schema(physical).parquet(*paths).withColumn(
-            "_f",
-            F.concat(
-                F.lit("_data/"),
-                F.substring_index(
-                    F.col("_metadata.file_path"), "/_data/", -1
-                ),
+    return _snapshot_scan(
+        spark, table_path, st["metaData"], st["adds"],
+        row_ids=(
+            cfg.get("delta.rowTracking.materializedRowIdColumnName"),
+            cfg.get(
+                "delta.rowTracking.materializedRowCommitVersionColumnName"
             ),
-        ).withColumn("_ri", F.col("_metadata.row_index"))
-        if dv_idx is not None:
-            dropped = local_relation(spark, "_ri bigint", [dv_idx])
-            df = df.join(F.broadcast(dropped), "_ri", "left_anti")
-        return df
-
-    parts = []
-    clean = [
-        p for p, a in st["adds"].items()
-        if a.get("deletionVector") is None
-    ]
-    if clean:
-        parts.append(
-            _one([os.path.join(table_path, p) for p in clean])
-        )
-    for p, a in st["adds"].items():
-        if a.get("deletionVector") is None:
-            continue
-        parts.append(
-            _one(
-                [os.path.join(table_path, p)],
-                read_dv(table_path, a["deletionVector"]),
-            )
-        )
-    df = parts[0]
-    for x in parts[1:]:
-        df = df.unionByName(x)
-    df = df.join(F.broadcast(base), "_f", "left")
-    rid = F.col("_base") + F.col("_ri")
-    rcv = F.col("_dcv")
-    if mat_id:
-        rid = F.coalesce(F.col(mat_id), rid)
-    if mat_rcv:
-        rcv = F.coalesce(F.col(mat_rcv), rcv)
-    return df.select(
-        *[
-            df[pn].alias(lf.name)
-            for pn, lf in zip(phys_names, logical.fields)
-        ],
-        rid.alias("_row_id"),
-        rcv.alias("_row_commit_version"),
+        ),
     )
 
 
@@ -1619,10 +1361,13 @@ def read_delta_table_changes(
     sj = json.loads(md["schemaString"])
     # change files store every column, partition columns included,
     # plus _change_type
-    cdc_sj = {**sj, "fields": sj["fields"] + [{
-        "name": "_change_type", "type": "string", "nullable": True,
-        "metadata": {},
-    }]}
+    cdc_md = {
+        "schemaString": json.dumps({**sj, "fields": sj["fields"] + [{
+            "name": "_change_type", "type": "string", "nullable": True,
+            "metadata": {},
+        }]}),
+        "partitionColumns": [],
+    }
     out = None
     for v in versions:
         actions = _read_version_actions(log_dir, v)
@@ -1631,7 +1376,7 @@ def read_delta_table_changes(
             for a in actions if "cdc" in a
         }
         if cdc:
-            df = _read_files(spark, table_path, cdc, cdc_sj, [])
+            df = _snapshot_scan(spark, table_path, cdc_md, cdc)
         else:
             if any(
                 "remove" in a and a["remove"].get("dataChange", True)
@@ -1648,9 +1393,9 @@ def read_delta_table_changes(
             }
             if not adds:
                 continue  # metadata-only commit
-            df = _read_files(
-                spark, table_path, adds, sj, md["partitionColumns"]
-            ).withColumn("_change_type", F.lit("insert"))
+            df = _snapshot_scan(spark, table_path, md, adds).withColumn(
+                "_change_type", F.lit("insert")
+            )
         df = df.withColumn("_commit_version", F.lit(v).cast("long"))
         out = df if out is None else out.unionByName(df)
     if out is None:

@@ -31,13 +31,13 @@ passes them. Each ``ManagedTable`` memoises its last snapshot
 
 Scale posture: a snapshot is a list of data directories, so appends
 are O(1) log entries; ``optimize()`` compacts small files and collapses
-the unit list; reads of a partitioned table get partition pruning via
-Spark's partition discovery per unit.
+the unit list; every read is one scan of the log's file list
+(``sinks.scan``), and ``read_where`` skips files by their stats and
+partition values.
 """
 
 from __future__ import annotations
 
-import functools
 import itertools
 import json
 import os
@@ -58,6 +58,14 @@ from component_delta_lake_writer_spark.errors import (
     UserException,
 )
 from component_delta_lake_writer_spark.session import local_relation
+from component_delta_lake_writer_spark.sinks.scan import (
+    POS,
+    REL,
+    scan_files,
+)
+from component_delta_lake_writer_spark.sinks.scan import (
+    schema_view as _schema_view,
+)
 from component_delta_lake_writer_spark.sinks.unit_stats import (
     fold_file_stats,
     from_delta_stats,
@@ -131,50 +139,6 @@ _OPERATION_NAMES = {
     "sync_metadata": "CONVERT",
 }
 
-_TEMPORAL_TYPES = ("date", "timestamp", "timestamp_ntz")
-
-
-@functools.lru_cache(maxsize=16)
-def _schema_view(schema_string: str) -> tuple[str, dict, frozenset]:
-    """(engine schema JSON, {logical: physical} column mapping,
-    physical names of the date/timestamp columns) of a metaData
-    schemaString: the columnMapping field metadata the log carries is
-    stripped back out of the schema and becomes the map of renamed
-    columns."""
-    schema = json.loads(schema_string)
-    mapping: dict = {}
-    temporal = set()
-    for f in schema.get("fields", []):
-        phys = (f.get("metadata") or {}).get(
-            "delta.columnMapping.physicalName", f["name"]
-        )
-        if phys != f["name"]:
-            mapping[f["name"]] = phys
-        if f.get("type") in _TEMPORAL_TYPES:
-            temporal.add(phys)
-    if "delta.columnMapping." not in schema_string:
-        return schema_string, mapping, frozenset(temporal)
-
-    def strip(t) -> None:
-        if not isinstance(t, dict):
-            return
-        if t.get("type") == "struct":
-            for nf in t.get("fields", []):
-                nf["metadata"] = {
-                    k: v for k, v in (nf.get("metadata") or {}).items()
-                    if not k.startswith("delta.columnMapping.")
-                }
-                strip(nf.get("type"))
-        elif t.get("type") == "array":
-            strip(t.get("elementType"))
-        elif t.get("type") == "map":
-            strip(t.get("keyType"))
-            strip(t.get("valueType"))
-
-    strip(schema)
-    return json.dumps(schema), mapping, frozenset(temporal)
-
-
 @dataclass
 class Commit:
     """One table version as the engine works with it — a view of the
@@ -231,6 +195,11 @@ class Commit:
     # entry verbatim; only brand-new units draw fresh ids past the
     # high-water mark. The adds' baseRowId/defaultRowCommitVersion.
     row_ids: dict = field(default_factory=dict)
+    # Partitioned tables: {unit: {table-relative parquet path:
+    # {column: value string, None = null}}} — the adds' own
+    # partitionValues, which reads take partition values from. A new
+    # unit's arrive with the view of its published entry.
+    partition_values: dict = field(default_factory=dict)
     # rowIdHighWaterMark (the delta.rowTracking domainMetadata):
     # highest fresh row id ever assigned; -1 = none.
     row_id_high_water: int = -1
@@ -452,9 +421,10 @@ class ManagedTable:
     ) -> Commit:
         """The ``Commit`` a log state describes. Units are the ``_data``
         segments of the live add paths in first-add order; unit stats
-        fold the adds' Delta stats; deletion vectors and row ids are the
-        adds' own fields; metaData carries schema, partitioning, column
-        mapping, properties and primary key; txn / domainMetadata /
+        fold the adds' Delta stats; deletion vectors, row ids and
+        partition values are the adds' own fields; metaData carries
+        schema, partitioning, column mapping, properties and primary
+        key; txn / domainMetadata /
         commitInfo / cdc carry the rest. Given ``prev`` (the view of the
         state before ``touched`` changed), only the touched units are
         rebuilt and the others' stats dicts are shared with ``prev``
@@ -473,6 +443,7 @@ class ManagedTable:
             stats: dict = {}
             dvs: dict = {}
             row_ids: dict = {}
+            pvs: dict = {}
         else:
             build = {}
             for p in touched:
@@ -496,6 +467,11 @@ class ManagedTable:
                 if _dv_unit(p) not in build
             }
             row_ids = {u: e for u, e in prev.row_ids.items() if u not in build}
+            pvs = {
+                u: e for u, e in prev.partition_values.items()
+                if u not in build
+            }
+        partitioned = bool(md.get("partitionColumns"))
         for u, files in build.items():
             if not files:
                 continue
@@ -514,6 +490,11 @@ class ManagedTable:
             for p, a in files.items():
                 if a.get("deletionVector"):
                     dvs[p] = a["deletionVector"]
+            if partitioned:
+                pvs[u] = {
+                    p: a.get("partitionValues") or {}
+                    for p, a in files.items()
+                }
             if first.get("baseRowId") is not None:
                 row_ids[u] = {
                     "v": first["defaultRowCommitVersion"],
@@ -548,6 +529,7 @@ class ManagedTable:
             txns={a: t["version"] for a, t in state["txns"].items()},
             ingest_sidecars=list(_domain("engine.ingest").get("sidecars", [])),
             row_ids=row_ids,
+            partition_values=pvs,
             row_id_high_water=int(
                 _domain("delta.rowTracking").get("rowIdHighWaterMark", -1)
             ),
@@ -580,11 +562,12 @@ class ManagedTable:
           clock must not sort a commit before its parent), and the
           version that turns them on records the enablement point
           readers need (earlier commits time-travel by file time);
-        - table state (units, schema, partitioning, primary key,
-          properties, stats, column mapping, clustering columns, row
-          ids) is ``base``'s: the parent's, or for RESTORE the snapshot
-          it brings back. Clustering columns stand until a clustering
-          OPTIMIZE sets new ones (new data is simply unclustered);
+        - table state (units, schema, partitioning, partition values,
+          primary key, properties, stats, column mapping, clustering
+          columns, row ids) is ``base``'s: the parent's, or for RESTORE
+          the snapshot it brings back. Clustering columns stand until a
+          clustering OPTIMIZE sets new ones (new data is simply
+          unclustered);
         - deletion vectors ride with their files: each file of a unit
           that survives keeps ``base``'s descriptor unless ``new_dvs``
           sets one; a rewritten unit's descriptors drop with it;
@@ -1101,11 +1084,7 @@ class ManagedTable:
         ):
             found = self._driver_match(local_keys(), units, mapping)
         elif units:
-            scan = self._scan_units(
-                [os.path.join(self._data_dir, u) for u in units],
-                T.StructType.fromJson(json.loads(prev.schema_json)),
-                mapping, prev.partition_by, with_row_meta=True,
-            )
+            scan = self._read_units(prev, units, positions=True)
             small = n_keys <= _DV_COLLECT_MAX
             if condition is not None:
                 matched = scan.filter(
@@ -1126,7 +1105,7 @@ class ManagedTable:
                 matched = scan.join(
                     F.broadcast(build), list(primary_key), "left_semi"
                 )
-            matched = matched.select("_rt_rel", "_rt_ri")
+            matched = matched.select(REL, POS)
             if small:
                 for r in matched.collect():
                     found.setdefault(r[0], set()).add(int(r[1]))
@@ -1136,17 +1115,17 @@ class ManagedTable:
 
                     return pd.DataFrame(
                         {
-                            "_rt_rel": [pdf["_rt_rel"].iloc[0]],
+                            REL: [pdf[REL].iloc[0]],
                             "_bm": [
                                 DV.serialize_bitmap(
-                                    int(i) for i in pdf["_rt_ri"].to_numpy()
+                                    int(i) for i in pdf[POS].to_numpy()
                                 )
                             ],
                         }
                     )
 
-                packed = matched.groupBy("_rt_rel").applyInPandas(
-                    _to_bitmap, "_rt_rel string, _bm binary"
+                packed = matched.groupBy(REL).applyInPandas(
+                    _to_bitmap, f"{REL} string, _bm binary"
                 )
                 for r in packed.collect():
                     found.setdefault(r[0], set()).update(
@@ -1870,8 +1849,11 @@ class ManagedTable:
         appends the read must NOT degrade into an N-scan union (plan
         size O(1) in commit count, the 100 TB append-loop shape).
         Type conflicts across units cannot arise: schema_mode='merge'
-        only adds columns. Partitioned units keep hive discovery per
-        provided root path."""
+        only adds columns. Partition values come from the log's adds
+        through one broadcast join on the file (``scan.scan_files``),
+        never from the directory names: the plan is one FileScan at any
+        unit, file or partition count, and Spark lists only the unit
+        directories."""
         if version is not None and timestamp_ms is not None:
             raise UserException(
                 "Pass either version or timestamp_ms, not both."
@@ -2163,141 +2145,6 @@ class ManagedTable:
         )
 
     @staticmethod
-    def _physical_schema(schema: T.StructType, mapping: dict) -> T.StructType:
-        if not mapping:
-            return schema
-        return T.StructType(
-            [
-                T.StructField(
-                    mapping.get(f.name, f.name), f.dataType, f.nullable, f.metadata
-                )
-                for f in schema.fields
-            ]
-        )
-
-    @staticmethod
-    def _row_meta_cols(df: DataFrame, decode: bool = False) -> DataFrame:
-        """Attach the two file-identity helper columns row tracking and
-        deletion vectors need (``_rt_rel``: table-relative file path,
-        ``_rt_ri``: row position in the file) — must run on the RAW
-        scan relation (the ``_metadata`` pseudo-column dies at the
-        first select). ``_metadata.file_path`` is URI-encoded (a space
-        in a hive partition value reads ``%20``); ``decode=True``
-        (partitioned layouts, the only ones whose paths can need it)
-        turns it back into the filesystem path the commit keys by."""
-        rel = F.substring_index(
-            F.col("_metadata.file_path"), "/" + _DATA + "/", -1
-        )
-        if decode:
-            # '+' pre-escaped: url_decode is form-decoding (+ → space)
-            rel = F.url_decode(F.replace(rel, F.lit("+"), F.lit("%2B")))
-        return df.withColumn(
-            "_rt_rel", F.concat(F.lit(_DATA + "/"), rel)
-        ).withColumn("_rt_ri", F.col("_metadata.row_index"))
-
-    def _scan_units(
-        self,
-        paths: list[str],
-        schema: T.StructType,
-        mapping: dict,
-        partition_by: list[str] | None = None,
-        with_row_meta: bool = False,
-    ) -> DataFrame:
-        """One multi-path FileScan under the physical schema, aliased
-        back to logical names — the single place reads cross the
-        column-mapping boundary.
-
-        Partitioned tables with MULTIPLE unit dirs can't use Spark's
-        native partition discovery (each unit is its own hive root, and
-        multi-root discovery refuses the conflicting structure), so the
-        scan stays ONE FileScan via recursiveFileLookup and recovers
-        partition values from the file path — still O(1) plan size in
-        unit count, at the cost of a per-row regexp on the path column
-        (single-unit scans keep native discovery and pay nothing)."""
-        def _with_mat(s: T.StructType) -> T.StructType:
-            # materialized-id columns join the PHYSICAL read schema
-            # only (never the logical output): files from plain writes
-            # lack them and read typed NULL — exactly the coalesce
-            # fallback _attach_row_ids wants
-            if not with_row_meta:
-                return s
-            return T.StructType(
-                list(s.fields)
-                + [
-                    T.StructField(_MAT_ROW_ID, T.LongType(), True),
-                    T.StructField(_MAT_RCV, T.LongType(), True),
-                ]
-            )
-
-        meta_cols = ["_rt_rel", "_rt_ri", _MAT_ROW_ID, _MAT_RCV]
-        pset = set(partition_by or [])
-        part_fields = [f for f in schema.fields if f.name in pset]
-        if not part_fields or len(paths) == 1:
-            df = self.spark.read.schema(
-                _with_mat(self._physical_schema(schema, mapping))
-            ).parquet(*paths)
-            if with_row_meta:
-                df = self._row_meta_cols(df, decode=bool(pset))
-            if mapping or pset:
-                # native discovery appends partition columns last: the
-                # committed schema order is the table's, at any unit count
-                df = df.select(
-                    *(
-                        [
-                            F.col(mapping.get(f.name, f.name)).alias(f.name)
-                            for f in schema.fields
-                        ]
-                        + (meta_cols if with_row_meta else [])
-                    )
-                )
-            return df
-        data_schema = T.StructType(
-            [f for f in schema.fields if f.name not in pset]
-        )
-        df = (
-            self.spark.read.schema(
-                _with_mat(self._physical_schema(data_schema, mapping))
-            )
-            .option("recursiveFileLookup", "true")
-            .parquet(*paths)
-        )
-        if with_row_meta:
-            df = self._row_meta_cols(df, decode=bool(pset))
-        cols = []
-        for f in schema.fields:
-            if f.name in pset:
-                # '/'-anchored so a column whose name SUFFIXES another
-                # ('date' vs 'event_date') can't match inside the other
-                # segment. The segment is decoded twice: once for the
-                # URI encoding of input_file_name(), once for Hive's
-                # escaping of the value in the directory name ('%' →
-                # %25, '=' → %3D), hive_layout.decode_segments' rule.
-                # '+' is pre-escaped because url_decode is
-                # x-www-form-urlencoded (+ → space) while neither
-                # encoding touches '+' — urllib unquote preserves it.
-                raw = F.regexp_extract(
-                    F.input_file_name(), f"/{f.name}=([^/]+)/", 1
-                )
-
-                def _unquote(c):
-                    return F.url_decode(F.replace(c, F.lit("+"), F.lit("%2B")))
-
-                disk = _unquote(raw)
-                val = (
-                    F.when(raw == "", F.lit(None))
-                    .when(disk == "__HIVE_DEFAULT_PARTITION__", F.lit(None))
-                    .otherwise(_unquote(disk))
-                )
-                cols.append(val.cast(f.dataType).alias(f.name))
-            else:
-                cols.append(
-                    F.col(mapping.get(f.name, f.name)).alias(f.name)
-                )
-        if with_row_meta:
-            cols += [F.col(c) for c in meta_cols]
-        return df.select(*cols)
-
-    @staticmethod
     def _logical_stats(stats: dict, mapping: dict) -> dict:
         """View unit stats (keyed by physical column names) under
         logical names so data-skipping predicates written against the
@@ -2342,20 +2189,22 @@ class ManagedTable:
         commit: Commit,
         units: list[str],
         with_row_ids: bool = False,
+        kept: dict[str, list[str]] | None = None,
+        positions: bool = False,
     ) -> DataFrame:
-        """One multi-path scan over a subset of a commit's data units,
-        under the commit's authoritative schema — with the commit's
-        deletion vectors applied.
+        """One scan over a subset of a commit's data units, under the
+        commit's authoritative schema, with the commit's deletion
+        vectors applied (``scan.scan_files``). A unit is read whole as
+        its directory; ``kept`` ({unit: file names}) narrows a unit to
+        the files file-level skipping kept, and those are passed one
+        by one.
 
-        With no DV on any file of ``units`` (the common case, and
-        always after optimize) the plan is the single FileScan it
-        always was. Otherwise the same scan also yields each row's
-        (file, position) and one broadcast left-anti join drops the
-        deleted positions, built driver-side from the DV files as an
-        Arrow ``LocalRelation`` (exact size statistics, no Python-worker
-        job): plan size stays O(1) in the number of deletes."""
+        The commit's files are the log's adds: partition values, row-id
+        bases and deletion vectors come from them. An unpartitioned
+        read without deletion vectors or row ids is the bare FileScan.
+        ``positions`` adds each row's table-relative file and position
+        in it (``scan.REL`` / ``scan.POS``)."""
         schema = T.StructType.fromJson(json.loads(commit.schema_json))
-        mapping = commit.column_mapping or {}
         if with_row_ids and not _prop_on(
             commit.properties, "delta.enableRowTracking"
         ):
@@ -2366,123 +2215,42 @@ class ManagedTable:
                 "Row tracking is not enabled on this table; create it "
                 "with properties={'delta.enableRowTracking': 'true'}."
             )
-        if not units:
-            # every row deleted copy-on-write: no file left to scan
-            df = local_relation(self.spark, schema)
-            if with_row_ids:
-                df = df.select(
-                    "*",
-                    F.lit(None).cast("long").alias("_row_id"),
-                    F.lit(None).cast("long").alias("_row_commit_version"),
-                )
-            return df
+        kept = kept or {}
+        roots = [
+            path
+            for u in units
+            for path in (
+                [f"{_DATA}/{u}/{f}" for f in kept[u]] if u in kept
+                else [f"{_DATA}/{u}"]
+            )
+        ]
         us = set(units)
-        dvs = {
-            rel: d for rel, d in commit.deletion_vectors.items()
-            if _dv_unit(rel) in us
-        }
-        df = self._scan_units(
-            [os.path.join(self._data_dir, u) for u in units],
-            schema, mapping, commit.partition_by,
-            with_row_meta=with_row_ids or bool(dvs),
-        )
-        if dvs:
-            from component_delta_lake_writer_spark.sinks.deletion_vectors import (  # noqa: E501
-                read_dv,
-            )
-
-            rels: list[str] = []
-            ris: list[int] = []
-            for rel, d in dvs.items():
-                idx = read_dv(self.path, d)
-                rels.extend([rel] * len(idx))
-                ris.extend(idx)
-            deleted = local_relation(
-                self.spark, "_rt_rel string, _rt_ri long", [rels, ris]
-            )
-            df = df.join(
-                F.broadcast(deleted), ["_rt_rel", "_rt_ri"], "left_anti"
-            )
-        if with_row_ids:
-            return self._attach_row_ids(df, commit)
-        if dvs:
-            df = df.drop("_rt_rel", "_rt_ri", _MAT_ROW_ID, _MAT_RCV)
-        return df
-
-    def _attach_row_ids(self, df: DataFrame, commit: Commit) -> DataFrame:
-        """``_row_id`` / ``_row_commit_version`` from the commit's
-        per-file base-id table: a BROADCAST join on the file's
-        table-relative path (metadata-scale — one row per live file,
-        never per data row), then base + in-file position. Stays a
-        join, not an inlined map literal, so a million-file table
-        doesn't compile a million-entry expression into the plan. The
-        table is an Arrow ``LocalRelation`` (``session.local_relation``):
-        it has exact size statistics and its broadcast runs no
-        Python-worker job.
-
-        Files written by a dataChange=false rewrite (optimize) carry
-        each row's PRE-rewrite id in the materialized columns; those
-        win over the fresh base arithmetic (Delta's preserved-row-id
-        rule).
-
-        Small tables (≤256 live files) fold the per-file table into
-        constant MAP literals instead — no join, no broadcast stage,
-        no extra Spark job; the plan stays bounded by the threshold."""
-        rows = []
-        for ent in (commit.row_ids or {}).values():
-            for rel, (base, _n) in (ent.get("files") or {}).items():
-                rows.append((rel, int(base), int(ent["v"])))
-        if len(rows) <= 256:
-            if rows:
-                base_map = F.create_map(
-                    *[x for rel, b, _v in rows
-                      for x in (F.lit(rel), F.lit(b))]
-                )
-                rcv_map = F.create_map(
-                    *[x for rel, _b, v in rows
-                      for x in (F.lit(rel), F.lit(v))]
-                )
-            else:
-                # zero live files: create_map() is VOID-typed and
-                # map()[string] fails analysis — typed empty maps
-                empty = F.expr("CAST(map() AS MAP<STRING, BIGINT>)")
-                base_map = rcv_map = empty
-            rel_c = F.col("_rt_rel")
-            return (
-                df.withColumn(
-                    "_row_id",
-                    F.coalesce(
-                        F.col(_MAT_ROW_ID),
-                        base_map[rel_c] + F.col("_rt_ri"),
-                    ),
-                )
-                .withColumn(
-                    "_row_commit_version",
-                    F.coalesce(F.col(_MAT_RCV), rcv_map[rel_c]),
-                )
-                .drop("_rt_rel", "_rt_ri", _MAT_ROW_ID, _MAT_RCV)
-            )
-        m = local_relation(
-            self.spark,
-            "_rt_rel string, _rt_base long, _rt_rcv long",
-            [list(c) for c in zip(*rows)],
-        )
-        return (
-            df.join(F.broadcast(m), "_rt_rel", "left")
-            .withColumn(
-                "_row_id",
-                F.coalesce(
-                    F.col(_MAT_ROW_ID), F.col("_rt_base") + F.col("_rt_ri")
-                ),
-            )
-            .withColumn(
-                "_row_commit_version",
-                F.coalesce(F.col(_MAT_RCV), F.col("_rt_rcv")),
-            )
-            .drop(
-                "_rt_rel", "_rt_base", "_rt_ri", "_rt_rcv",
-                _MAT_ROW_ID, _MAT_RCV,
-            )
+        files = None
+        if (
+            not units
+            or commit.partition_by
+            or with_row_ids
+            or positions
+            or any(_dv_unit(r) in us for r in commit.deletion_vectors)
+        ):
+            files = {}
+            for u in units:
+                ids = commit.row_ids.get(u) or {}
+                pvs = commit.partition_values[u] if commit.partition_by else {}
+                for f in kept.get(u) or commit.stats[u]["_files"]:
+                    rel = f"{_DATA}/{u}/{f}"
+                    base = (ids.get("files") or {}).get(rel)
+                    files[rel] = {
+                        "partitionValues": pvs.get(rel),
+                        "deletionVector": commit.deletion_vectors.get(rel),
+                        "baseRowId": base[0] if base else None,
+                        "defaultRowCommitVersion": ids.get("v"),
+                    }
+        return scan_files(
+            self.spark, self.path, schema, files, roots,
+            commit.column_mapping, commit.partition_by,
+            row_ids=(_MAT_ROW_ID, _MAT_RCV) if with_row_ids else None,
+            positions=positions,
         )
 
     @staticmethod
@@ -2577,6 +2345,25 @@ class ManagedTable:
                     out.append(f"{g} <= DATE'{day}'")
         return out
 
+    @staticmethod
+    def _partition_stats(values: dict, types: dict, rows) -> dict:
+        """Stats entries (the per-file shape) for a file's partition
+        columns from its add's ``partitionValues``: every row holds the
+        one value, so it is both min and max — or every row is NULL.
+        Integral, string and date columns only; others never prune."""
+        out: dict = {}
+        for c, t in types.items():
+            v = values.get(c)
+            if v is None:
+                out[c] = {"min": None, "max": None, "nulls": rows}
+            elif isinstance(t, T.StringType):
+                out[c] = {"min": v, "max": v, "nulls": 0}
+            elif isinstance(t, T.DateType):
+                out[c] = {"min": v, "max": v, "nulls": 0, "t": "date"}
+            elif isinstance(t, T.IntegralType):
+                out[c] = {"min": int(v), "max": int(v), "nulls": 0}
+        return out
+
     def read_where(self, condition: str, version: int | None = None) -> DataFrame:
         """Filtered snapshot read with commit-log data skipping.
 
@@ -2587,12 +2374,12 @@ class ManagedTable:
         The condition is then re-applied as an ordinary filter, so
         pruning only ever removes provably-dead IO, never rows.
 
-        Two granularities: whole units first (cheap, always), then —
-        for unpartitioned units that recorded per-file detail —
+        Two granularities: whole units first (cheap, always), then
         individual files inside surviving units, exactly Delta's
-        per-add-action skipping. Partitioned units stay unit-granular
-        (reading bare leaf files would drop hive partition columns;
-        those tables already get Spark's partition pruning).
+        per-add-action skipping. A file's partition values (from its
+        add) count as its stats, so a predicate on a partition column
+        — or one derived for a generated partition column — prunes
+        files the same way.
 
         At 100 TB this is the difference between "scan 5 files" and
         "open every footer of a million files" for a point/range query
@@ -2604,8 +2391,7 @@ class ManagedTable:
 
         commit = self.commit_at(version) if version is not None else self._head()
         schema = T.StructType.fromJson(json.loads(commit.schema_json))
-        mapping = commit.column_mapping or {}
-        stats_view = self._logical_stats(commit.stats, mapping)
+        stats_view = self._logical_stats(commit.stats, commit.column_mapping)
         units = prune_units(stats_view, commit.data_units, condition)
         conjuncts = parse_conjuncts(condition)
         derived = self._derived_partition_conjuncts(
@@ -2618,6 +2404,7 @@ class ManagedTable:
             if not derived
             else condition + " AND " + " AND ".join(derived)
         )
+        kept: dict[str, list[str]] = {}
         if conjuncts:
             # second skipping level: per-unit bloom sidecars answer
             # equality probes min/max ranges can't (high-cardinality,
@@ -2629,34 +2416,31 @@ class ManagedTable:
             units = prune_units_bloom(
                 self._bloom_dir, stats_view, units, conjuncts
             )
-        if any(_dv_unit(r) in set(units) for r in commit.deletion_vectors):
-            # deletion vectors on a kept unit: unit-level pruning still
-            # applies, but the scan routes through _read_units' DV
-            # anti-join instead of a file-level path list
-            return self._read_units(commit, units).filter(
-                F.expr(eff_condition)
-            )
-        paths: list[str] = []
-        file_level = bool(parse_conjuncts(condition)) and not commit.partition_by
-        for u in units:
-            udir = os.path.join(self._data_dir, u)
-            detail = (stats_view.get(u) or {}).get("_files")
-            if file_level and detail:
-                kept = prune_units(detail, list(detail), condition)
-                if len(kept) == len(detail):
-                    # nothing pruned — hand Spark the directory, not N
-                    # individual file paths (cheaper listing/planning)
-                    paths.append(udir)
-                else:
-                    paths.extend(os.path.join(udir, f) for f in kept)
-            else:
-                paths.append(udir)
-        if not paths:
-            empty = local_relation(self.spark, schema)
-            return empty.filter(F.expr(eff_condition))
-        return self._scan_units(
-            paths, schema, mapping, commit.partition_by
-        ).filter(F.expr(eff_condition))
+            ptypes = {
+                f.name: f.dataType for f in schema.fields
+                if f.name in set(commit.partition_by)
+            }
+            for u in units:
+                detail = (stats_view.get(u) or {}).get("_files") or {}
+                if ptypes:
+                    pvs = commit.partition_values[u]
+                    detail = {
+                        f: {
+                            **fs,
+                            **self._partition_stats(
+                                pvs[f"{_DATA}/{u}/{f}"], ptypes,
+                                fs.get("_rows"),
+                            ),
+                        }
+                        for f, fs in detail.items()
+                    }
+                names = prune_units(detail, list(detail), eff_condition)
+                if len(names) < len(detail):
+                    kept[u] = names
+            units = [u for u in units if kept.get(u, True)]
+        return self._read_units(commit, units, kept=kept).filter(
+            F.expr(eff_condition)
+        )
 
     # ---------- upsert (W12 + O2) ----------
 
@@ -3848,8 +3632,8 @@ class ManagedTable:
             if not touched:
                 return prev  # nothing in scope — no-op
         # OPTIMIZE is dataChange=false: rows keep their identity.
-        # _attach_row_ids coalesces the materialized ids over the fresh
-        # base ids the new unit draws.
+        # reads coalesce the materialized ids over the fresh base ids
+        # the new unit draws (scan.scan_files).
         df = self._read_rewrite(prev, touched)
         if cluster_by:
             # lexicographic range clustering: tight file stats on the
@@ -4686,36 +4470,43 @@ class ManagedTable:
             raise UserException(
                 f"No commits after version {from_version} at {self.path}"
             )
-        new_units: list[str] = []
+        added: dict[str, Commit] = {}
         change_files: list[str] = []
         for prev, c in zip(commits, commits[1:]):
             units, files = commit_changes(self.path, prev, c, "read_changes")
-            new_units += units
+            added.update((u, c) for u in units)
             change_files += files
         last = commits[-1]
-        # one multi-path scan under the range-end schema (older units'
-        # missing columns read as NULL), same plan shape as read().
-        # _scan_units, NOT a raw parquet read: appended units store
-        # PHYSICAL column names under column mapping (a renamed
-        # column would read back NULL), and multi-unit partitioned
-        # appends need the per-root hive-discovery workaround.
+        # one scan under the range-end schema (older units' missing
+        # columns read as NULL) of the added units — as the commits
+        # that added them list their files — and one of the change
+        # files, which store every column plus _change_type
         schema = T.StructType.fromJson(json.loads(last.schema_json))
-        parts: list[DataFrame] = []
-        if new_units:
-            parts.append(
-                self._scan_units(
-                    [os.path.join(self._data_dir, u) for u in new_units],
-                    schema, last.column_mapping or {}, last.partition_by,
-                ).withColumn("_change_type", F.lit("insert"))
-            )
         ctype_schema = T.StructType(
             schema.fields + [T.StructField("_change_type", T.StringType(), True)]
         )
+        parts: list[DataFrame] = []
+        if added:
+            files = None
+            if last.partition_by:
+                files = {
+                    rel: {"partitionValues": pv}
+                    for u, c in added.items()
+                    for rel, pv in c.partition_values[u].items()
+                }
+            parts.append(
+                scan_files(
+                    self.spark, self.path, schema, files,
+                    [f"{_DATA}/{u}" for u in added],
+                    last.column_mapping, last.partition_by,
+                ).withColumn("_change_type", F.lit("insert"))
+            )
         if change_files:
             parts.append(
-                self._scan_units(
-                    [os.path.join(self.path, f) for f in change_files],
-                    ctype_schema, last.column_mapping or {},
+                scan_files(
+                    self.spark, self.path, ctype_schema, None,
+                    sorted({os.path.dirname(f) for f in change_files}),
+                    last.column_mapping,
                 )
             )
         if not parts:

@@ -11,9 +11,7 @@ from pyspark.sql import functions as F
 
 from component_delta_lake_writer_spark.errors import UserException
 from component_delta_lake_writer_spark.sinks import ManagedTable
-from component_delta_lake_writer_spark.sinks.delta_log import (
-    read_delta_table_changes,
-)
+from delta_verifier import read_delta_table_changes
 
 CDF = {"enableChangeDataFeed": True}
 

@@ -192,9 +192,7 @@ def test_partitioned_table_skips_driver_tier(spark, tmp_path):
     produce a correct external snapshot."""
     from pyspark.sql import functions as F
 
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table,
-    )
+    from delta_verifier import read_delta_table
     from component_delta_lake_writer_spark.sinks.managed_table import (
         ManagedTable,
     )

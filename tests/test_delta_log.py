@@ -231,8 +231,8 @@ def test_mor_commits_materialize_deletion_vectors(spark, tmp_path):
     exactly the engine's snapshot."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
         live_dv_descriptors,
-        read_delta_table,
     )
+    from delta_verifier import read_delta_table
     from component_delta_lake_writer_spark.sinks.deletion_vectors import (
         dv_relative_path,
         read_dv,
@@ -781,9 +781,9 @@ def test_checkpoint_preserves_deletion_vectors(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table,
         read_last_checkpoint,
     )
+    from delta_verifier import read_delta_table
 
     t = ManagedTable(spark, str(tmp_path / "t"))
     df = spark.range(40).select(
@@ -820,9 +820,7 @@ def test_restore_rematerializes_dvs_for_readded_units(spark, tmp_path):
     (COW) and then RESTORED: the restored unit's file comes back as an
     add that must carry its deletion vector again, or external readers
     would silently resurrect the deleted rows."""
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table,
-    )
+    from delta_verifier import read_delta_table
 
     t = ManagedTable(spark, str(tmp_path / "t"))
     df = spark.range(20).select(
@@ -849,8 +847,8 @@ def test_vacuum_reclaims_orphaned_dv_files(spark, tmp_path):
 
     from component_delta_lake_writer_spark.sinks.delta_log import (
         live_dv_descriptors,
-        read_delta_table,
     )
+    from delta_verifier import read_delta_table
     from component_delta_lake_writer_spark.sinks.deletion_vectors import (
         dv_relative_path,
     )
@@ -899,8 +897,8 @@ def test_dv_with_column_mapping_and_partitioning(spark, tmp_path):
     partitionValues."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
         live_dv_descriptors,
-        read_delta_table,
     )
+    from delta_verifier import read_delta_table
 
     # (a) mapped
     t = ManagedTable(spark, str(tmp_path / "m"))
@@ -1299,9 +1297,7 @@ def test_external_row_id_reader_matches_engine(spark, tmp_path_str):
     reader resolving ids from _delta_log (baseRowId + row_index,
     materialized columns after optimize, DV masks applied) must agree
     with the engine's read(with_row_ids=True) at every stage."""
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table_row_ids,
-    )
+    from delta_verifier import read_delta_table_row_ids
 
     t = _rt_table(spark, tmp_path_str)
 
@@ -1344,9 +1340,7 @@ def test_external_read_partitioned_table(spark, tmp_path_str):
     actions' partitionValues (typed literals per file group), per the
     protocol — including nulls, a MOR delete's DV mask, and time
     travel through an overwrite."""
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table,
-    )
+    from delta_verifier import read_delta_table
 
     t = ManagedTable(spark, os.path.join(tmp_path_str, "t"))
     df = spark.range(12).select(
@@ -1381,10 +1375,10 @@ def test_multipart_checkpoint_roundtrip(spark, tmp_path_str):
     resolve through the parts identically to a single-file
     checkpoint."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table,
         read_last_checkpoint,
         write_checkpoint,
     )
+    from delta_verifier import read_delta_table
 
     t = ManagedTable(spark, os.path.join(tmp_path_str, "t"))
     df = spark.range(30).select(F.col("id").alias("k"))
@@ -1427,9 +1421,7 @@ def test_enablement_backfills_mirror_adds(spark, tmp_path_str):
     file's add WITH baseRowId (dataChange=false backfill) — without
     it the external reader resolves NULL ids for pre-enablement rows
     while the engine returns real ones."""
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table_row_ids,
-    )
+    from delta_verifier import read_delta_table_row_ids
 
     t = ManagedTable(spark, os.path.join(tmp_path_str, "t"))
     t.write(
@@ -1542,9 +1534,9 @@ def test_v2_checkpoint_layout_and_replay(spark, tmp_path):
 
     from component_delta_lake_writer_spark.sinks.delta_log import (
         _replay_state,
-        read_delta_table,
         read_last_checkpoint,
     )
+    from delta_verifier import read_delta_table
 
     t, df = _v2_table(spark, str(tmp_path / "t"))
     pr = _replay_state(t.path)["protocol"]
@@ -1586,8 +1578,8 @@ def test_v2_checkpoint_carries_dvs(spark, tmp_path):
     """Deletion-vector descriptors must ride the sidecar add rows."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
         live_dv_descriptors,
-        read_delta_table,
     )
+    from delta_verifier import read_delta_table
 
     t, df = _v2_table(spark, str(tmp_path / "t"))
     t.delete_where("k >= 90", strategy="merge-on-read")
@@ -1633,10 +1625,10 @@ def test_classic_table_upgrades_to_v2_policy(spark, tmp_path):
     transition."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
         _replay_state,
-        read_delta_table,
         read_last_checkpoint,
         write_checkpoint,
     )
+    from delta_verifier import read_delta_table
 
     t = ManagedTable(spark, str(tmp_path / "t"))
     df = spark.range(50).select(
@@ -1663,9 +1655,9 @@ def test_metadata_cleanup_retention(spark, tmp_path):
     previous one (no v0 JSON to replay)."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
         _replay_state,
-        read_delta_table,
         read_last_checkpoint,
     )
+    from delta_verifier import read_delta_table
 
     def _table_id(path):
         return _replay_state(path)["metaData"]["id"]
@@ -1715,8 +1707,8 @@ def test_cleanup_preserves_dv_descriptors(spark, tmp_path):
     checkpoint, and the DV .bin files are untouched by cleanup)."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
         live_dv_descriptors,
-        read_delta_table,
     )
+    from delta_verifier import read_delta_table
 
     t, df = _v2_table(spark, str(tmp_path / "t"))
     t.delete_where("k >= 90", strategy="merge-on-read")
@@ -1803,8 +1795,8 @@ def test_auto_log_cleanup_on_checkpoint(spark, tmp_path):
     enableExpiredLogCleanup=false nothing is ever deleted."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
         _parse_interval_ms,
-        read_delta_table,
     )
+    from delta_verifier import read_delta_table
 
     assert _parse_interval_ms(None) == 30 * 24 * 3600 * 1000
     assert _parse_interval_ms("interval 2 hours") == 2 * 3600 * 1000
@@ -1857,9 +1849,9 @@ def test_minor_log_compaction_roundtrip(spark, tmp_path):
     through the compacted file alone. Cleanup reclaims compactions
     fully below the checkpoint."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table,
         write_log_compaction,
     )
+    from delta_verifier import read_delta_table
 
     t = ManagedTable(spark, str(tmp_path / "t"))
     df = spark.range(60).select(
@@ -1914,9 +1906,7 @@ def test_auto_minor_compaction_interval(spark, tmp_path):
     external replay stays exact."""
     import glob
 
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table,
-    )
+    from delta_verifier import read_delta_table
 
     t = ManagedTable(spark, str(tmp_path / "t"))
     df = spark.range(40).select(
@@ -1972,9 +1962,7 @@ def test_external_cdf_matches_engine(spark, tmp_path):
     read_changes across append/upsert/DELETE/UPDATE.
     Append-only versions derive inserts from dataChange adds; a
     rewrite without cdc actions raises."""
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table_changes,
-    )
+    from delta_verifier import read_delta_table_changes
 
     t = ManagedTable(spark, str(tmp_path / "t"))
     df = spark.range(100).select(
@@ -2086,9 +2074,7 @@ def test_reader_refuses_unknown_features(spark, tmp_path):
 def test_external_cdf_refuses_cleaned_range(spark, tmp_path):
     """A table_changes request reaching below metadata-cleaned
     versions must raise, never silently skip committed changes."""
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table_changes,
-    )
+    from delta_verifier import read_delta_table_changes
 
     t, df = _v2_table(spark, str(tmp_path / "t"))
     for i in range(10):
@@ -2140,11 +2126,13 @@ def test_retention_compaction_v2_dv_composite(spark, tmp_path):
 
     from component_delta_lake_writer_spark.sinks.delta_log import (
         live_dv_descriptors,
-        read_delta_table,
-        read_delta_table_changes,
         read_last_checkpoint,
         replay_delta_log,
         verify_version_checksum,
+    )
+    from delta_verifier import (
+        read_delta_table,
+        read_delta_table_changes,
     )
 
     t = ManagedTable(spark, str(tmp_path / "t"))
@@ -2272,9 +2260,9 @@ def test_column_mapping_dv_checkpoint_composite(spark, tmp_path):
     must match the engine at every step, including replay through the
     checkpoint after the renamed column gathered new data."""
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table,
         read_last_checkpoint,
     )
+    from delta_verifier import read_delta_table
 
     t = ManagedTable(spark, str(tmp_path / "t"))
     df = spark.range(120).select(
@@ -2329,9 +2317,9 @@ def test_checkpoint_expires_old_tombstones(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table,
         write_checkpoint,
     )
+    from delta_verifier import read_delta_table
 
     t = ManagedTable(spark, str(tmp_path / "t"))
     for lo in (0, 10, 20):  # v1 removes v0's file, v2 removes v1's

@@ -132,8 +132,8 @@ def test_empty_snapshot_reads(spark, tmp_path):
 
 
 def test_row_ids_above_256_files_join_a_local_relation(spark, tmp_path):
-    """Above 256 live files _attach_row_ids joins a per-file base-id
-    table instead of inlining map literals; that table is Arrow."""
+    """Row ids join a per-file base-id table (the scan's per-file
+    relation), never inlined map literals; that table is Arrow."""
     t = ManagedTable(spark, str(tmp_path / "t"))
     t.write(
         _kv(spark, 0, 260).coalesce(1), mode="overwrite",

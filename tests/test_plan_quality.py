@@ -472,8 +472,8 @@ def test_mor_delete_antijoin_broadcasts_small_delete_set(spark, tmp_path):
 
 def test_partitioned_multiunit_read_is_single_scan(tmp_path, spark):
     """A partitioned table with several appended units must still read
-    as ONE FileScan (recursiveFileLookup + path-derived partition
-    values) — never a per-unit union, and never Spark's multi-root
+    as ONE FileScan, its partition values joined in from the log's
+    adds — never a per-unit union, and never Spark's multi-root
     partition discovery error."""
     from pyspark.sql import functions as F
 
@@ -493,7 +493,7 @@ def test_partitioned_multiunit_read_is_single_scan(tmp_path, spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan parquet") == 1, plan[:2000]
     assert out.count() == 300
-    # partition values recovered from the path are typed and correct
+    # partition values taken from the adds are typed and correct
     assert out.filter(F.col("p") == F.col("k") % 3).count() == 300
 
 

@@ -478,9 +478,7 @@ def test_table_lifecycle_model(spark, ops):
     import tempfile
 
     from component_delta_lake_writer_spark.sinks import ManagedTable
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table,
-    )
+    from delta_verifier import read_delta_table
 
     with tempfile.TemporaryDirectory() as d:
         t = ManagedTable(spark, os.path.join(d, "t"))

@@ -402,9 +402,7 @@ def test_convert_partitioned_external_mirror(ex, tmp_path):
     """A hive-partitioned convert keeps the layout, infers partition
     columns, and the Delta mirror serves external readers
     immediately."""
-    from component_delta_lake_writer_spark.sinks.delta_log import (
-        read_delta_table,
-    )
+    from delta_verifier import read_delta_table
 
     raw = str(tmp_path / "rawp")
     ex.spark.range(200).selectExpr(
