@@ -1,10 +1,11 @@
 """One decoder for Spark's hive partition directory encoding.
 
 Three code paths read ``col=value`` path segments (the ``partitionValues``
-a new add action records, the CDF streaming source, dynamic-partition-
-overwrite pruning); the batch scan never decodes paths — it takes
-partition values from the log's adds (``sinks.scan``). Value comparison
-subtleties (booleans are
+a new add action records, the CDF streaming source, the erasure
+audit's listing). Reads never decode paths: the batch scan
+(``sinks.scan``) and ``replace_where`` partition pruning take partition
+values from the log's adds, which hold these same decoded strings.
+Value comparison subtleties (booleans are
 ``true``/``false`` on disk, floats are Java ``Double.toString``,
 NULL is ``__HIVE_DEFAULT_PARTITION__``, values are URL-quoted) must
 not drift between them — this module is the single source of truth.

@@ -38,6 +38,7 @@ partition values.
 
 from __future__ import annotations
 
+import collections
 import itertools
 import json
 import os
@@ -2196,8 +2197,9 @@ class ManagedTable:
         commit's authoritative schema, with the commit's deletion
         vectors applied (``scan.scan_files``). A unit is read whole as
         its directory; ``kept`` ({unit: file names}) narrows a unit to
-        the files file-level skipping kept, and those are passed one
-        by one.
+        the files file-level skipping kept: a partition directory whose
+        files were all kept is passed whole, any other kept file one by
+        one.
 
         The commit's files are the log's adds: partition values, row-id
         bases and deletion vectors come from them. An unpartitioned
@@ -2216,14 +2218,25 @@ class ManagedTable:
                 "with properties={'delta.enableRowTracking': 'true'}."
             )
         kept = kept or {}
-        roots = [
-            path
-            for u in units
-            for path in (
-                [f"{_DATA}/{u}/{f}" for f in kept[u]] if u in kept
-                else [f"{_DATA}/{u}"]
+        roots = []
+        for u in units:
+            if u not in kept:
+                roots.append(f"{_DATA}/{u}")
+                continue
+            # a directory whose files were all kept (a partition the
+            # predicate kept whole) is one root: Spark lists more than
+            # 32 roots with a job
+            total = collections.Counter(
+                os.path.dirname(f) for f in commit.stats[u]["_files"]
             )
-        ]
+            by_dir = collections.defaultdict(list)
+            for f in kept[u]:
+                by_dir[os.path.dirname(f)].append(f)
+            for d, names in sorted(by_dir.items()):
+                if d and len(names) == total[d]:
+                    roots.append(f"{_DATA}/{u}/{d}")
+                else:
+                    roots += [f"{_DATA}/{u}/{f}" for f in names]
         us = set(units)
         files = None
         if (
@@ -2312,9 +2325,9 @@ class ManagedTable:
         when a partition column g is GENERATED ALWAYS AS
         ``CAST(src AS DATE)`` and the predicate constrains ``src`` with
         an ISO date/timestamp literal, an implied predicate on g is
-        added so Spark's native partition pruning fires — the query
-        never has to mention the partition column. Conservative:
-        anything unparseable derives nothing."""
+        added, which prunes files by the partition values their adds
+        record — the query never has to mention the partition column.
+        Conservative: anything unparseable derives nothing."""
         out: list[str] = []
         for g in partition_by:
             expr = gen.get(g)
@@ -3171,13 +3184,14 @@ class ManagedTable:
         if constraints:
             self._check_constraints(df, constraints)
         if partition_tuples and prev.partition_by:
-            # hive-layout pruning: partition values live in DIRECTORY
-            # names, not parquet footers — a unit is touched iff its
-            # directory tree contains one of the replaced partitions.
-            # One walk per unit (seen-map reused across all tuples).
+            # partition pruning: a unit is touched iff one of its adds'
+            # partitionValues is one of the replaced partitions
             touched = []
             for u in prev.data_units:
-                seen = self._unit_partition_values(u)
+                seen: dict[str, set] = {}
+                for pv in prev.partition_values[u].values():
+                    for k, v in pv.items():
+                        seen.setdefault(k, set()).add(v)
                 if any(
                     self._tuple_in_unit(seen, t, prev.partition_by)
                     for t in partition_tuples
@@ -3410,22 +3424,6 @@ class ManagedTable:
         finally:
             src.unpersist()
         return commit
-
-    def _unit_partition_values(self, unit: str) -> dict[str, set]:
-        """{partition col: set of on-disk value strings (None=NULL)}
-        from one walk of the unit's hive directory tree."""
-        from component_delta_lake_writer_spark.sinks.hive_layout import (
-            decode_segments,
-        )
-
-        base = os.path.join(self._data_dir, unit)
-        seen: dict[str, set] = {}
-        for root, _dirs, _files in os.walk(base):
-            for k, v in decode_segments(
-                os.path.relpath(root, base)
-            ).items():
-                seen.setdefault(k, set()).add(v)
-        return seen
 
     @staticmethod
     def _tuple_in_unit(
@@ -4503,9 +4501,12 @@ class ManagedTable:
             )
         if change_files:
             parts.append(
+                # keyed per file: a change file written flat into
+                # _change_data/ by an older engine shares its directory
+                # with the change files of every other version
                 scan_files(
-                    self.spark, self.path, ctype_schema, None,
-                    sorted({os.path.dirname(f) for f in change_files}),
+                    self.spark, self.path, ctype_schema,
+                    {f: {} for f in change_files}, None,
                     last.column_mapping,
                 )
             )

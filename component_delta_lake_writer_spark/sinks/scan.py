@@ -21,8 +21,9 @@ table's logical schema:
 
 Building a scan runs no Spark job while Spark lists at most 32 roots
 (its ``parallelPartitionDiscovery.threshold``): the roots are whole
-unit directories, or the files of a unit file skipping pruned, and the
-join keys come from that listing. A scan that needs no per-file
+unit directories, or, in a unit file skipping pruned, the partition
+directories it kept whole and its other kept files; the join keys come
+from that listing. A scan that needs no per-file
 value — an unpartitioned table without deletion vectors or row ids —
 is the bare ``FileScan``, with no join.
 """

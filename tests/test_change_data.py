@@ -217,3 +217,40 @@ def test_erasure_audit_reports_each_change_file_once(spark, tmp_path):
     files = [f for f, _k in rep["leaks"]]
     assert rep["leak_count"] == len(files) == len(set(files)) == 2
     assert sum(f.startswith("_change_data") for f in files) == 1
+
+
+def test_flat_change_files_of_an_older_engine_read_per_version(
+    spark, tmp_path
+):
+    """An older engine wrote change files flat, as
+    ``_change_data/cdc-<version>-<n>.parquet``, side by side for every
+    version. A range over one version reads only the files its cdc
+    actions name, not its neighbours in the same directory."""
+    import glob
+    import json
+    import shutil
+
+    t = _table(spark, str(tmp_path / "t"), n=10)
+    deletes = [t.delete_where("k = 1"), t.delete_where("k = 2")]
+    t.delete_where("k = 3")  # stays in its own uuid directory
+    for c in deletes:
+        moved = {}
+        for n, rel in enumerate(c.cdc_files):
+            flat = f"_change_data/cdc-{c.version:020d}-{n}.parquet"
+            shutil.move(os.path.join(t.path, rel), os.path.join(t.path, flat))
+            shutil.rmtree(os.path.dirname(os.path.join(t.path, rel)))
+            moved[rel] = flat
+        (entry,) = glob.glob(
+            os.path.join(t.path, "_delta_log", f"{c.version:020d}.json")
+        )
+        actions = [json.loads(x) for x in open(entry).read().splitlines()]
+        for a in actions:
+            if "cdc" in a:
+                a["cdc"]["path"] = moved[a["cdc"]["path"]]
+        with open(entry, "w") as fh:
+            fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
+    t = ManagedTable(spark, t.path)
+    for c, k in zip(deletes, (1, 2)):
+        feed = t.read_changes(c.version - 1, c.version, with_change_type=True)
+        assert _rows(feed, ["k", "_change_type"]) == [(k, "delete")]
+    assert _rows(t.read_changes(0), ["k"]) == [(1,), (2,), (3,)]

@@ -126,7 +126,9 @@ def test_read_where_skips_files_inside_partitioned_unit(spark, tmp_path):
 
 def test_building_reads_runs_no_spark_job(spark, tmp_path):
     """Building a read over 64 live files in 4 partitioned units lists
-    them on the driver: no Spark job runs before the first action."""
+    them on the driver: no Spark job runs before the first action. A
+    partition predicate that keeps 48 files of one unit lists their 3
+    partition directories, not the 48 files."""
     t = ManagedTable(spark, str(tmp_path / "t"))
     df = spark.range(2000).select(
         F.col("id").alias("k"),
@@ -138,6 +140,12 @@ def test_building_reads_runs_no_spark_job(spark, tmp_path):
             mode="append", partition_by=["p"],
         )
     assert len(DL.replay_delta_log(t.path)[0]) >= 64
+    o = ManagedTable(spark, str(tmp_path / "o"))
+    o.write(
+        df.withColumn("p", F.col("p") % 4).repartition(16),
+        mode="overwrite", partition_by=["p"],
+    )
+    assert len(DL.replay_delta_log(o.path)[0]) == 64
     sc = spark.sparkContext
     group = "scan-build-no-jobs"
     sc.setJobGroup(group, group)
@@ -146,12 +154,14 @@ def test_building_reads_runs_no_spark_job(spark, tmp_path):
             t.read(),
             t.read_where("k >= 1000 AND p = 3"),
             DL.read_delta_table(spark, t.path),
+            o.read_where("p < 3"),
         ]
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setJobGroup(None, None)
     assert jobs == []
-    assert [r.count() for r in reads] == [2000, 64, 2000]
+    assert [r.count() for r in reads] == [2000, 64, 2000, 1500]
+    assert len(reads[3].inputFiles()) == 48
 
 
 def _name(node) -> str:
