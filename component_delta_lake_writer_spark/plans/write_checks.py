@@ -252,7 +252,7 @@ def zorder_multidim_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # profile: write 3.8 s + footer stats 0.6-2.0 s for 15k rows).
     t.optimize(target_file_rows=500, zorder_by=["o_orderkey", "o_custkey"])
     c = t.latest_commit()
-    det = c.stats[c.data_units[0]]["_files"]
+    det = {p: r["stats"] for p, r in c.files[c.data_units[0]].items()}
     cmax = o.agg(F.max("o_custkey")).first()[0]
     cond = f"o_custkey < {cmax // 20}"  # 5% band on the TRAILING dim
     kept = prune_units(det, list(det), cond)
@@ -368,8 +368,8 @@ def analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = ex.table("t")
     c0 = t.latest_commit()
     st = next(iter(c0.stats.values()))
-    assert set(st) == {"_rows", "_files"} and all(
-        set(f) == {"_rows"} for f in st["_files"].values()
+    assert set(st) == {"_rows"} and all(
+        set(r["stats"]) == {"_rows"} for r in c0.files[c0.data_units[0]].values()
     ), "NO STATISTICS must record row counts only, per unit and file"
     ex.execute("ANALYZE TABLE t COMPUTE STATISTICS")
     c1 = t.latest_commit()

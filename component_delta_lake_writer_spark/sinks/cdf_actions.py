@@ -42,7 +42,6 @@ def commit_changes(
     if c.action in CDF_METADATA_ONLY_ACTIONS:
         return [], []
     had = set(prev.data_units) if prev else set()
-    had_dvs = prev.deletion_vectors if prev else {}
     added = [u for u in c.data_units if u not in had]
     if c.action == "append":
         return added, []
@@ -63,9 +62,13 @@ def commit_changes(
                 f"are missing from disk ({gone[0]}, {len(gone)} in all)."
             )
         return [], list(c.cdc_files)
+    was = prev.files if prev else {}
     removes = bool(had - set(c.data_units)) or any(
-        had_dvs.get(f) != d
-        for f, d in c.deletion_vectors.items()
+        r.get("deletionVector")
+        and r["deletionVector"]
+        != was.get(u, {}).get(p, {}).get("deletionVector")
+        for u, recs in c.files.items()
+        for p, r in recs.items()
     )
     if removes:
         raise UserException(

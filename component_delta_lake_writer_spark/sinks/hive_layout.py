@@ -1,10 +1,11 @@
 """One decoder for Spark's hive partition directory encoding.
 
-Three code paths read ``col=value`` path segments (the ``partitionValues``
-a new add action records, the CDF streaming source, the erasure
-audit's listing). Reads never decode paths: the batch scan
-(``sinks.scan``) and ``replace_where`` partition pruning take partition
-values from the log's adds, which hold these same decoded strings.
+Two code paths read ``col=value`` path segments: the listing of a new
+unit, whose files' records (and so their add actions) keep the decoded
+``partitionValues``, and the erasure audit's listing. Reads never
+decode paths: the batch scan (``sinks.scan``), ``replace_where``
+partition pruning and the CDF stream take partition values from the
+file records, which hold these same decoded strings.
 Value comparison subtleties (booleans are
 ``true``/``false`` on disk, floats are Java ``Double.toString``,
 NULL is ``__HIVE_DEFAULT_PARTITION__``, values are URL-quoted) must

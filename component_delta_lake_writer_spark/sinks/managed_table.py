@@ -156,17 +156,20 @@ class Commit:
     timestamp_ms: int = 0
     properties: dict = field(default_factory=dict)
     # Data-skipping stats: {unit: {"_rows": n, col: {min, max, nulls},
-    # "_files": {file: same shape}, "_bloom": …}} — the fold of the
-    # adds' Delta stats, bloom sidecars from their tags. A file without
-    # stats has "_rows" None and never prunes.
+    # "_bloom": …}} — the fold of the unit's file stats, bloom sidecars
+    # from their tags. A file without stats has "_rows" None and never
+    # prunes.
     stats: dict = field(default_factory=dict)
-    # Merge-on-read deletes as Delta deletion vectors: {table-relative
-    # parquet path: deletionVector descriptor} for every live file with
-    # deleted rows (the positions, not the keys — rows appended after
-    # the delete keep living even under a reused PK): the add actions'
-    # own descriptors. Carried forward by ManagedTable._next for every
-    # file whose unit survives; a rewrite of the unit drops them.
-    deletion_vectors: dict = field(default_factory=dict)
+    # The live files, one record per add: {unit: {table-relative
+    # parquet path: record}}. A record holds the add's own fields under
+    # their own names — size, modificationTime, partitionValues (value
+    # strings, None = null), stats (parsed to the per-file shape of
+    # ``stats``), tags, and when present deletionVector (merge-on-read
+    # deletes: the positions, not the keys), baseRowId and
+    # defaultRowCommitVersion (row tracking: a row's stable id is
+    # baseRowId + its position in the file; ids never change once
+    # assigned). Every read and rewrite takes its files from here.
+    files: dict = field(default_factory=dict)
     # ALTER TABLE … RENAME COLUMN (Delta column mapping, mode=name):
     # {logical_name: physical_parquet_name} for columns whose on-disk
     # name differs from the committed schema name. Reads scan under
@@ -187,20 +190,6 @@ class Commit:
     # INTO skips them (file-level idempotent ingest). Carried forward
     # by ManagedTable._next; the engine.ingest domainMetadata.
     ingest_sidecars: list = field(default_factory=list)
-    # Row tracking (Delta rowTracking writer feature, enabled via the
-    # delta.enableRowTracking table property): {unit: {"v": version
-    # the unit's ids were assigned, "files": {table-relative parquet
-    # path: [baseRowId, numRecords]}}}. A row's stable id is
-    # baseRowId + its position in the file. Ids are IMMUTABLE once
-    # assigned: a unit carried, restored, or DV-re-added keeps its
-    # entry verbatim; only brand-new units draw fresh ids past the
-    # high-water mark. The adds' baseRowId/defaultRowCommitVersion.
-    row_ids: dict = field(default_factory=dict)
-    # Partitioned tables: {unit: {table-relative parquet path:
-    # {column: value string, None = null}}} — the adds' own
-    # partitionValues, which reads take partition values from. A new
-    # unit's arrive with the view of its published entry.
-    partition_values: dict = field(default_factory=dict)
     # rowIdHighWaterMark (the delta.rowTracking domainMetadata):
     # highest fresh row id ever assigned; -1 = none.
     row_id_high_water: int = -1
@@ -218,8 +207,52 @@ class Commit:
     # version without them has its changes derived from its adds.
     cdc_files: list = field(default_factory=list)
 
+    @property
+    def deletion_vectors(self) -> dict:
+        """{table-relative parquet path: deletionVector descriptor} of
+        every live file with deleted rows, read off the records."""
+        return {
+            p: r["deletionVector"]
+            for recs in self.files.values()
+            for p, r in recs.items()
+            if r.get("deletionVector")
+        }
+
 
 _COMMIT_FIELDS = {f.name for f in fields(Commit)}
+
+
+def _record(add: dict, temporal: frozenset) -> dict:
+    """A live file's record (``Commit.files``): its add without the
+    path and dataChange, stats parsed to the per-file shape."""
+    rec = {k: v for k, v in add.items() if k not in ("path", "dataChange")}
+    rec["stats"] = from_delta_stats(add.get("stats"), temporal)
+    return rec
+
+
+def _fold_unit(recs: dict) -> dict:
+    """A unit's stats (``Commit.stats``) from its files' records: their
+    stats folded, and the bloom sidecars their tags name."""
+    st = fold_file_stats({p: r["stats"] for p, r in recs.items()})
+    bloom = (next(iter(recs.values()), {}).get("tags") or {}).get(
+        "engine.bloom"
+    )
+    if bloom:
+        st["_bloom"] = json.loads(bloom)
+    return st
+
+
+def _live_rows(c: Commit) -> int | None:
+    """Rows of ``c`` by its metadata: the files' row counts minus what
+    their deletion vectors delete. None when some file has no count."""
+    n = 0
+    for recs in c.files.values():
+        for r in recs.values():
+            rows = r["stats"].get("_rows")
+            if rows is None:
+                return None
+            n += rows - int((r.get("deletionVector") or {}).get("cardinality", 0))
+    return n
 
 
 def _drop_empty_first_file(unit_dir: str) -> None:
@@ -421,17 +454,17 @@ class ManagedTable:
         self, state: dict, prev: Commit | None, touched: list | None
     ) -> Commit:
         """The ``Commit`` a log state describes. Units are the ``_data``
-        segments of the live add paths in first-add order; unit stats
-        fold the adds' Delta stats; deletion vectors, row ids and
-        partition values are the adds' own fields; metaData carries
+        segments of the live add paths in first-add order; each live
+        add becomes its file's record, and unit stats fold the records'
+        stats; metaData carries
         schema, partitioning, column mapping, properties and primary
         key; txn / domainMetadata /
         commitInfo / cdc carry the rest. Given ``prev`` (the view of the
         state before ``touched`` changed), only the touched units are
-        rebuilt and the others' stats dicts are shared with ``prev``
-        (a Commit is never mutated once built): a full rebuild parses
-        every file's stats, ~23 ms per append at 1,000 single-file
-        units against ~0.4 ms for the patch."""
+        rebuilt and the others' records and stats are shared with
+        ``prev`` (a Commit is never mutated once built): a full rebuild
+        parses every file's stats, ~23 ms per append at 1,000
+        single-file units against ~0.4 ms for the patch."""
         md = state["metaData"]
         cfg = md.get("configuration") or {}
         schema_json, mapping, temporal = _schema_view(md["schemaString"])
@@ -442,69 +475,31 @@ class ManagedTable:
                 build.setdefault(_dv_unit(p), {})[p] = a
             units = list(build)
             stats: dict = {}
-            dvs: dict = {}
-            row_ids: dict = {}
-            pvs: dict = {}
+            files: dict = {}
         else:
             build = {}
             for p in touched:
                 build.setdefault(_dv_unit(p), {})
-            for u, files in build.items():
-                old = (prev.stats.get(u) or {}).get("_files") or {}
-                for f in old:
-                    p = f"{_DATA}/{u}/{f}"
+            for u, unit_adds in build.items():
+                for p in prev.files.get(u) or {}:
                     if p in adds:
-                        files[p] = adds[p]
+                        unit_adds[p] = adds[p]
             for p in touched:
                 if p in adds:
                     build[_dv_unit(p)].setdefault(p, adds[p])
             had = set(prev.data_units)
             units = [u for u in prev.data_units if build.get(u, True)] + [
-                u for u, files in build.items() if files and u not in had
+                u for u, unit_adds in build.items()
+                if unit_adds and u not in had
             ]
             stats = {u: s for u, s in prev.stats.items() if u not in build}
-            dvs = {
-                p: d for p, d in prev.deletion_vectors.items()
-                if _dv_unit(p) not in build
-            }
-            row_ids = {u: e for u, e in prev.row_ids.items() if u not in build}
-            pvs = {
-                u: e for u, e in prev.partition_values.items()
-                if u not in build
-            }
-        partitioned = bool(md.get("partitionColumns"))
-        for u, files in build.items():
-            if not files:
-                continue
-            cut = len(_DATA) + len(u) + 2
-            fstats = {
-                p[cut:]: from_delta_stats(a.get("stats"), temporal)
-                for p, a in files.items()
-            }
-            st = fold_file_stats(fstats)
-            st["_files"] = fstats
-            first = next(iter(files.values()))
-            bloom = (first.get("tags") or {}).get("engine.bloom")
-            if bloom:
-                st["_bloom"] = json.loads(bloom)
-            stats[u] = st
-            for p, a in files.items():
-                if a.get("deletionVector"):
-                    dvs[p] = a["deletionVector"]
-            if partitioned:
-                pvs[u] = {
-                    p: a.get("partitionValues") or {}
-                    for p, a in files.items()
+            files = {u: r for u, r in prev.files.items() if u not in build}
+        for u, unit_adds in build.items():
+            if unit_adds:
+                files[u] = {
+                    p: _record(a, temporal) for p, a in unit_adds.items()
                 }
-            if first.get("baseRowId") is not None:
-                row_ids[u] = {
-                    "v": first["defaultRowCommitVersion"],
-                    "files": {
-                        p: [a["baseRowId"], fstats[p[cut:]]["_rows"]]
-                        for p, a in files.items()
-                        if a.get("baseRowId") is not None
-                    },
-                }
+                stats[u] = _fold_unit(files[u])
         domains = state["domains"]
 
         def _domain(name: str) -> dict:
@@ -525,12 +520,10 @@ class ManagedTable:
             ),
             properties=json.loads(cfg.get("engine.properties", "{}")),
             stats=stats,
-            deletion_vectors=dvs,
+            files=files,
             column_mapping=dict(mapping),
             txns={a: t["version"] for a, t in state["txns"].items()},
             ingest_sidecars=list(_domain("engine.ingest").get("sidecars", [])),
-            row_ids=row_ids,
-            partition_values=pvs,
             row_id_high_water=int(
                 _domain("delta.rowTracking").get("rowIdHighWaterMark", -1)
             ),
@@ -551,6 +544,7 @@ class ManagedTable:
         txn: tuple[str, int] | None = None,
         ingest_sidecar: str | None = None,
         new_dvs: dict | None = None,
+        files: dict | None = None,
         **changes,
     ) -> Commit:
         """The version ``action`` makes after ``prev`` (None: the root,
@@ -563,15 +557,18 @@ class ManagedTable:
           clock must not sort a commit before its parent), and the
           version that turns them on records the enablement point
           readers need (earlier commits time-travel by file time);
-        - table state (units, schema, partitioning, partition values,
-          primary key, properties, stats, column mapping, clustering
-          columns, row ids) is ``base``'s: the parent's, or for RESTORE
-          the snapshot it brings back. Clustering columns stand until a
-          clustering OPTIMIZE sets new ones (new data is simply
-          unclustered);
-        - deletion vectors ride with their files: each file of a unit
-          that survives keeps ``base``'s descriptor unless ``new_dvs``
-          sets one; a rewritten unit's descriptors drop with it;
+        - table state (units, schema, partitioning, primary key,
+          properties, column mapping, clustering columns) is
+          ``base``'s: the parent's, or for RESTORE the snapshot it
+          brings back. Clustering columns stand until a clustering
+          OPTIMIZE sets new ones (new data is simply unclustered);
+        - file records: each unit keeps ``base``'s unless ``files``
+          ({unit: records}) brings new ones — the units a writer adds,
+          or ANALYZE's restated stats — whose unit stats are folded
+          from them;
+        - deletion vectors ride with their files' records: ``new_dvs``
+          ({path: descriptor}) replaces a file's descriptor, and a
+          rewritten unit's records drop with it;
         - writer state is the parent's, whatever ``base`` is: txn
           watermarks (plus ``txn``), COPY INTO sidecars (plus
           ``ingest_sidecar``), the row-id high-water mark;
@@ -594,14 +591,19 @@ class ManagedTable:
             row_id_high_water=parent.row_id_high_water,
             cdc_files=[],
         )
-        live = set(commit.data_units)
-        commit.deletion_vectors = {
-            **{
-                rel: d for rel, d in src.deletion_vectors.items()
-                if _dv_unit(rel) in live
-            },
-            **(new_dvs or {}),
+        recs = {**src.files, **(files or {})}
+        commit.files = {u: recs[u] for u in commit.data_units}
+        commit.stats = {
+            u: src.stats[u] if r is src.files.get(u) else _fold_unit(r)
+            for u, r in commit.files.items()
         }
+        for rel, d in (new_dvs or {}).items():
+            u = _dv_unit(rel)
+            if commit.files[u] is recs[u]:  # shared: never mutated
+                commit.files[u] = dict(recs[u])
+            commit.files[u][rel] = {
+                **commit.files[u][rel], "deletionVector": d
+            }
         ict = "delta.enableInCommitTimestamps"
         if prev is not None and _prop_on(commit.properties, ict):
             commit.timestamp_ms = max(
@@ -757,46 +759,47 @@ class ManagedTable:
         return new
 
     def _assign_row_ids(self, commit: Commit, prev: Commit | None) -> None:
-        """Populate ``commit.row_ids``/``row_id_high_water`` under row
-        tracking. Carried units keep their prior entry verbatim (id
-        immutability), as do units the commit itself brings an entry
-        for (RESTORE takes the restored snapshot's); only genuinely new
-        units (plus the one-time backfill when tracking is enabled on
-        an existing table) draw fresh ids past the high-water mark.
-
-        Cost posture: one parquet-footer read per NEW file (the same
-        metadata any row-tracking writer records at write time) — no
-        data scan; the common append touches only its own unit."""
+        """Give every file record of ``commit`` its row ids under row
+        tracking, and advance ``row_id_high_water``. A unit keeps the
+        ids ``prev`` records for it, else the ids its own records carry
+        (RESTORE brings the restored snapshot's): ids are immutable once
+        assigned. Only new units — and every unit at the one-time
+        backfill when tracking turns on — draw fresh ids past the
+        high-water mark, counted by their records' row counts; a file
+        whose add carried no stats has its footer read."""
         import pyarrow.parquet as pq
 
-        from component_delta_lake_writer_spark.sinks.delta_log import (
-            _walk_parquet,
-        )
-
-        prev_map = (prev.row_ids or {}) if prev is not None else {}
+        prev_files = prev.files if prev is not None else {}
         hwm = max(
             prev.row_id_high_water if prev is not None else -1,
             commit.row_id_high_water,
         )
-        out: dict = {}
         for u in commit.data_units:
-            ent = prev_map.get(u) or (commit.row_ids or {}).get(u)
-            if ent is not None:
-                out[u] = ent
+            recs = commit.files[u]
+            ids = next(
+                (
+                    f for f in (prev_files.get(u), recs)
+                    if f and next(iter(f.values())).get("baseRowId") is not None
+                ),
+                None,
+            )
+            if ids is recs:
                 continue
-            files: dict = {}
-            for rel, _size, _mtime, _pvals in _walk_parquet(
-                self.path, os.path.join(_DATA, u)
-            ):
-                n = int(
-                    pq.ParquetFile(
-                        os.path.join(self.path, rel)
-                    ).metadata.num_rows
-                )
-                files[rel] = [hwm + 1, n]
-                hwm += n
-            out[u] = {"v": commit.version, "files": files}
-        commit.row_ids = out
+            out = {}
+            for p, r in recs.items():
+                if ids is not None:
+                    base = ids[p]["baseRowId"]
+                    v = ids[p]["defaultRowCommitVersion"]
+                else:
+                    n = r["stats"].get("_rows")
+                    if n is None:
+                        n = pq.ParquetFile(
+                            os.path.join(self.path, p)
+                        ).metadata.num_rows
+                    base, v = hwm + 1, commit.version
+                    hwm += int(n)
+                out[p] = {**r, "baseRowId": base, "defaultRowCommitVersion": v}
+            commit.files[u] = out
         commit.row_id_high_water = hwm
 
     def _log_actions(
@@ -808,8 +811,8 @@ class ManagedTable:
         data_change: bool = True,
     ) -> list[dict]:
         """``commit`` as Delta actions against ``prev`` (read from
-        ``state``): its log entry. Pure metadata — no log replay, no
-        data IO beyond listing the added units.
+        ``state``): its log entry. Pure metadata — no log replay and no
+        data IO: every add and remove is spelled from a file record.
 
         - txn for each watermark this commit advanced;
         - protocol / metaData when they change (``table_actions``);
@@ -836,8 +839,6 @@ class ManagedTable:
         prev_cfg = (state["metaData"] or {}).get("configuration") or {}
         prev_units = set(prev.data_units) if prev else set()
         live = set(commit.data_units)
-        dvs = commit.deletion_vectors
-        prev_dvs = prev.deletion_vectors if prev else {}
         tracked = _prop_on(props, "delta.enableRowTracking")
         ict = _prop_on(props, "delta.enableInCommitTimestamps")
         clustered = list(commit.clustered_by or [])
@@ -846,7 +847,9 @@ class ManagedTable:
         # never switch off again once on (readers may hold them)
         feat: dict = {}
         caps: set = set()
-        if dvs or prev_cfg.get("delta.enableDeletionVectors") == "true":
+        if commit.deletion_vectors or (
+            prev_cfg.get("delta.enableDeletionVectors") == "true"
+        ):
             feat["delta.enableDeletionVectors"] = "true"
             caps.add("deletionVectors")
         if tracked:
@@ -909,76 +912,78 @@ class ManagedTable:
             actions.append(
                 DL.domain_action("engine.ingest", {"sidecars": sidecars})
             )
-        rt: dict = {}
-        if tracked:
-            for ent in (commit.row_ids or {}).values():
-                for rel, (b, _n) in (ent.get("files") or {}).items():
-                    rt[rel] = {
-                        "baseRowId": int(b),
-                        "defaultRowCommitVersion": int(ent["v"]),
-                    }
+        rt = {
+            rel: {
+                "baseRowId": int(r["baseRowId"]),
+                "defaultRowCommitVersion": int(r["defaultRowCommitVersion"]),
+            }
+            for recs in commit.files.values()
+            for rel, r in recs.items()
+            if tracked and r.get("baseRowId") is not None
+        }
         logged = state["adds"]
 
-        def _remove(rel: str) -> dict:
+        def _remove(rel: str, rec: dict) -> dict:
             rm = {
                 "path": DL._encode_path(rel),
                 "deletionTimestamp": ts,
                 "dataChange": True,
                 # optional per spec; carried so the version checksum
                 # (.crc) can maintain tableSizeBytes incrementally
-                "size": (logged.get(rel) or {}).get("size")
-                or os.stat(os.path.join(self.path, rel)).st_size,
+                "size": rec["size"],
             }
-            if rel in prev_dvs:
+            if rec.get("deletionVector"):
                 # reconciliation is keyed by (path, dvId): a remove
                 # without the descriptor would not cancel the add
-                rm["deletionVector"] = prev_dvs[rel]
+                rm["deletionVector"] = rec["deletionVector"]
             return {"remove": rm}
 
         for u in prev.data_units if prev else []:
             if u not in live:
-                for f in prev.stats[u]["_files"]:
-                    actions.append(_remove(f"{_DATA}/{u}/{f}"))
+                for rel, rec in prev.files[u].items():
+                    actions.append(_remove(rel, rec))
         emitted: set = set()
         for u in commit.data_units:
-            ustats = commit.stats.get(u) or {}
-            if u in prev_units and (
-                ustats is prev.stats.get(u) or ustats == prev.stats.get(u)
+            recs = commit.files[u]
+            old = prev.files.get(u) if prev else None
+            if old is not None and (
+                commit.stats[u] is prev.stats[u]
+                or (
+                    commit.stats[u] == prev.stats[u]
+                    and {p: r["stats"] for p, r in recs.items()}
+                    == {p: r["stats"] for p, r in old.items()}
+                )
             ):
                 continue
             # a new unit — or a kept one whose stats changed (ANALYZE),
             # re-added with dataChange=false to carry its new stats
-            fstats = ustats.get("_files") or {}
-            cut = len(_DATA) + len(u) + 2
-            for rel, size, mtime, pvals in DL._walk_parquet(
-                self.path, os.path.join(_DATA, u)
-            ):
+            for rel, r in recs.items():
                 emitted.add(rel)
                 add = {
                     "path": DL._encode_path(rel),
-                    "partitionValues": pvals,
-                    "size": size,
-                    "modificationTime": mtime,
-                    "dataChange": data_change and u not in prev_units,
+                    "partitionValues": r.get("partitionValues") or {},
+                    "size": r["size"],
+                    "modificationTime": r["modificationTime"],
+                    "dataChange": data_change and old is None,
                     **rt.get(rel, {}),
                 }
-                s = to_delta_stats(fstats.get(rel[cut:]))
+                s = to_delta_stats(r["stats"])
                 if s is not None:
                     add["stats"] = s
-                if ustats.get("_bloom"):
-                    add["tags"] = {
-                        "engine.bloom": json.dumps(ustats["_bloom"])
-                    }
-                if dvs.get(rel):
+                if r.get("tags"):
+                    add["tags"] = r["tags"]
+                if r.get("deletionVector"):
                     # a re-added unit (RESTORE) brings its deletions
-                    add["deletionVector"] = dvs[rel]
+                    add["deletionVector"] = r["deletionVector"]
                 actions.append({"add": add})
         dv_swaps = sorted(
             rel
-            for rel in set(dvs) | set(prev_dvs)
-            if _dv_unit(rel) in live
-            and rel not in emitted
-            and dvs.get(rel) != prev_dvs.get(rel)
+            for u in commit.data_units
+            if prev is not None and u in prev_units
+            for rel, r in commit.files[u].items()
+            if rel not in emitted
+            and r.get("deletionVector")
+            != prev.files[u][rel].get("deletionVector")
         )
         if (
             tracked
@@ -999,11 +1004,12 @@ class ManagedTable:
         for rel in dv_swaps:
             # retract the file's previous incarnation and re-add it with
             # the new descriptor (same physical parquet, same stats)
+            u = _dv_unit(rel)
             add = {**logged[rel], "dataChange": True, **rt.get(rel, {})}
             add.pop("deletionVector", None)
-            if dvs.get(rel):
-                add["deletionVector"] = dvs[rel]
-            actions += [_remove(rel), {"add": add}]
+            if commit.files[u][rel].get("deletionVector"):
+                add["deletionVector"] = commit.files[u][rel]["deletionVector"]
+            actions += [_remove(rel, prev.files[u][rel]), {"add": add}]
         for rel, size in cdc_files or []:
             actions.append({"cdc": {
                 "path": DL._encode_path(rel),
@@ -1083,7 +1089,9 @@ class ManagedTable:
             and not prev.partition_by
             and max(n_keys, est) <= _DV_DRIVER_SCAN_MAX
         ):
-            found = self._driver_match(local_keys(), units, mapping)
+            found = self._driver_match(
+                local_keys(), [p for u in units for p in prev.files[u]], mapping
+            )
         elif units:
             scan = self._read_units(prev, units, positions=True)
             small = n_keys <= _DV_COLLECT_MAX
@@ -1134,7 +1142,7 @@ class ManagedTable:
                     )
         bitmaps: dict[str, list[int]] = {}
         for rel, idx in found.items():
-            old = prev.deletion_vectors.get(rel)
+            old = prev.files[_dv_unit(rel)][rel].get("deletionVector")
             if old is not None:
                 idx = idx | set(DV.read_dv(self.path, old))
                 if len(idx) == old["cardinality"]:
@@ -1143,12 +1151,12 @@ class ManagedTable:
         return DV.write_dv_file(self.path, bitmaps)
 
     def _driver_match(
-        self, keys, units: list[str], mapping: dict
+        self, keys, files: list[str], mapping: dict
     ) -> dict[str, set]:
         """The driver tier of ``_mark_deleted``: row positions, per
-        file of ``units``, whose key tuple is in the Arrow table
-        ``keys``. Each parquet file is read whole (key columns only),
-        which is exactly the ``_metadata.row_index`` position
+        table-relative parquet file of ``files``, whose key tuple is in
+        the Arrow table ``keys``. Each file is read whole (key columns
+        only), which is exactly the ``_metadata.row_index`` position
         semantics."""
         import numpy as np
         import pandas as pd
@@ -1160,19 +1168,14 @@ class ManagedTable:
         kmi = pd.MultiIndex.from_frame(keys.to_pandas().dropna())
         phys = [mapping.get(c, c) for c in names]
         out: dict[str, set] = {}
-        for u in units:
-            for dirpath, _d, files in os.walk(os.path.join(self._data_dir, u)):
-                for fn in sorted(files):
-                    if not fn.endswith(".parquet"):
-                        continue
-                    fpath = os.path.join(dirpath, fn)
-                    fdf = pq.read_table(fpath, columns=phys).to_pandas()
-                    fdf.columns = names
-                    hit = np.nonzero(pd.MultiIndex.from_frame(fdf).isin(kmi))[0]
-                    if len(hit):
-                        out[os.path.relpath(fpath, self.path)] = set(
-                            hit.tolist()
-                        )
+        for rel in files:
+            fdf = pq.read_table(
+                os.path.join(self.path, rel), columns=phys
+            ).to_pandas()
+            fdf.columns = names
+            hit = np.nonzero(pd.MultiIndex.from_frame(fdf).isin(kmi))[0]
+            if len(hit):
+                out[rel] = set(hit.tolist())
         return out
 
     # ---------- write path ----------
@@ -1214,20 +1217,29 @@ class ManagedTable:
     def _bloom_dir(self) -> str:
         return os.path.join(self.path, "_bloom")
 
-    def _unit_stats(
+    def _unit_files(
         self,
         unit: str,
         props: dict | None = None,
         mapping: dict | None = None,
     ) -> dict:
-        """Footer stats of a freshly written unit, per file (what its
-        add actions carry) and folded."""
+        """The file records (``Commit.files``) of a freshly written
+        unit, in the order its adds are logged: one listing of its
+        directory (size, modification time and the partition values of
+        its Hive layout) and one pass over its footers (stats). Bloom
+        sidecars of the ``bloom_filter_columns`` property are written
+        beside it and named in every record's tags."""
         from component_delta_lake_writer_spark.sinks import bloom
+        from component_delta_lake_writer_spark.sinks.delta_log import (
+            _walk_parquet,
+        )
         from component_delta_lake_writer_spark.sinks.unit_stats import (
             collect_unit_stats,
         )
 
         unit_dir = os.path.join(self._data_dir, unit)
+        listing = _walk_parquet(self.path, os.path.join(_DATA, unit))
+        cut = len(_DATA) + len(unit) + 2
         nic = None
         try:
             raw = (props or {}).get("delta.dataSkippingNumIndexedCols")
@@ -1241,7 +1253,18 @@ class ManagedTable:
             # as a Spark job (one-shot CONVERT/ANALYZE of a large
             # pre-existing lake); incremental writes stay driver-side
             spark=self.spark,
+            files=[rel[cut:] for rel, *_ in listing],
         )
+        per_file = stats.get("_files") or {}
+        recs = {
+            rel: {
+                "partitionValues": pvals,
+                "size": size,
+                "modificationTime": mtime,
+                "stats": per_file[rel[cut:]],
+            }
+            for rel, size, mtime, pvals in listing
+        }
         cols = (props or {}).get("bloom_filter_columns") or []
         if cols and stats.get("_rows"):
             mapping = mapping or {}
@@ -1262,8 +1285,9 @@ class ManagedTable:
                 os.replace(tmp, dest)
                 entry[c] = {"m": m, "k": bloom.K, "path": rel}
             if entry:
-                stats["_bloom"] = entry
-        return stats
+                for r in recs.values():
+                    r["tags"] = {"engine.bloom": json.dumps(entry)}
+        return recs
 
     def _read_rewrite(
         self, prev: Commit, units: list[str], keep_ids: bool = True
@@ -1293,12 +1317,12 @@ class ManagedTable:
         props: dict | None = None,
         mapping: dict | None = None,
     ) -> tuple[list[str], dict]:
-        """(units, stats) of a successor of ``prev`` that keeps the
-        units ``untouched`` and adds ``df`` written as one new unit
-        under ``mapping`` (default: ``prev``'s column mapping), with
-        stats under ``props`` (default: ``prev``'s properties). A new
-        unit with no rows is removed, not committed: it would be a
-        0-record add."""
+        """(units, {new unit: file records}) of a successor of ``prev``
+        that keeps the units ``untouched`` and adds ``df`` written as
+        one new unit under ``mapping`` (default: ``prev``'s column
+        mapping), with stats under ``props`` (default: ``prev``'s
+        properties). A new unit with no rows is removed, not
+        committed: it would be a 0-record add."""
         mapping = prev.column_mapping if mapping is None else mapping
         unit = self._write_unit(
             self._to_physical(df, mapping),
@@ -1306,21 +1330,15 @@ class ManagedTable:
             compression,
             max_records_per_file,
         )
-        ustats = self._unit_stats(
+        recs = self._unit_files(
             unit,
             props=prev.properties if props is None else props,
             mapping=mapping,
         )
-        units = list(untouched)
-        stats = {u: prev.stats[u] for u in untouched if u in prev.stats}
-        if ustats["_rows"] > 0:
-            units.append(unit)
-            stats[unit] = ustats
-        else:
-            shutil.rmtree(
-                os.path.join(self._data_dir, unit), ignore_errors=True
-            )
-        return units, stats
+        if any(r["stats"]["_rows"] for r in recs.values()):
+            return list(untouched) + [unit], {unit: recs}
+        shutil.rmtree(os.path.join(self._data_dir, unit), ignore_errors=True)
+        return list(untouched), {}
 
     @staticmethod
     def _schema_compatible(table: T.StructType, incoming: T.StructType) -> bool:
@@ -1638,7 +1656,7 @@ class ManagedTable:
                 partition_by=partition_by,
                 primary_key=primary_key or None,
                 properties=properties or None,
-                stats={unit: self._unit_stats(
+                files={unit: self._unit_files(
                     unit, props=effective_props, mapping=mapping,
                 )},
                 column_mapping=mapping,
@@ -1653,10 +1671,9 @@ class ManagedTable:
         # identity values: those were allocated against the old
         # high-water mark and a concurrent append may have claimed the
         # same range.
-        unit_stats = self._unit_stats(
-            unit,
-            props=effective_props, mapping=mapping,
-        )
+        unit_files = {unit: self._unit_files(
+            unit, props=effective_props, mapping=mapping,
+        )}
         for attempt in range(6):
             table_schema = T.StructType.fromJson(json.loads(prev.schema_json))
             schema = self._merge_schemas(table_schema, df.schema)
@@ -1671,7 +1688,7 @@ class ManagedTable:
                 schema_json=json.dumps(schema.jsonValue()),
                 primary_key=primary_key or None,
                 properties=properties or None,
-                stats={**prev.stats, unit: unit_stats},
+                files=unit_files,
             )
             try:
                 commit = self._publish(commit, prev)
@@ -1789,10 +1806,10 @@ class ManagedTable:
             df = df.repartitionByRange(*cluster_by).sortWithinPartitions(
                 *cluster_by
             )
-        units, stats = self._write_rewrite(
+        units, files = self._write_rewrite(
             prev, untouched, df, compression, target_file_rows
         )
-        commit = self._next(prev, "optimize", data_units=units, stats=stats)
+        commit = self._next(prev, "optimize", data_units=units, files=files)
         return self._publish(commit, prev)
 
     @staticmethod
@@ -2147,31 +2164,24 @@ class ManagedTable:
 
     @staticmethod
     def _logical_stats(stats: dict, mapping: dict) -> dict:
-        """View unit stats (keyed by physical column names) under
-        logical names so data-skipping predicates written against the
-        committed schema prune correctly after renames."""
+        """View stats keyed by physical column names — {unit: unit
+        stats} or {file: file stats} — under logical names, so
+        data-skipping predicates written against the committed schema
+        prune correctly after renames."""
         if not mapping:
             return stats
         inv = {v: k for k, v in mapping.items()}
 
         def _cols(d: dict) -> dict:
-            return {
-                inv.get(c, c): v
-                for c, v in d.items()
-                if c not in ("_files", "_bloom")
-            }
+            return {inv.get(c, c): v for c, v in d.items()}
 
-        out: dict = {}
-        for u, s in stats.items():
-            ns = _cols(s)
-            if "_files" in s:
-                ns["_files"] = {fn: _cols(fs) for fn, fs in s["_files"].items()}
-            if "_bloom" in s:
-                ns["_bloom"] = {
-                    inv.get(c, c): v for c, v in s["_bloom"].items()
-                }
-            out[u] = ns
-        return out
+        return {
+            u: {
+                **_cols(s),
+                **({"_bloom": _cols(s["_bloom"])} if "_bloom" in s else {}),
+            }
+            for u, s in stats.items()
+        }
 
     def _prune(self, prev: Commit, condition: str) -> list[str]:
         """``prev``'s units whose stats say they may hold a row
@@ -2196,23 +2206,24 @@ class ManagedTable:
         """One scan over a subset of a commit's data units, under the
         commit's authoritative schema, with the commit's deletion
         vectors applied (``scan.scan_files``). A unit is read whole as
-        its directory; ``kept`` ({unit: file names}) narrows a unit to
-        the files file-level skipping kept: a partition directory whose
-        files were all kept is passed whole, any other kept file one by
-        one.
+        its directory; ``kept`` ({unit: table-relative paths}) narrows
+        a unit to the files file-level skipping kept: a partition
+        directory whose files were all kept is passed whole, any other
+        kept file one by one.
 
-        The commit's files are the log's adds: partition values, row-id
-        bases and deletion vectors come from them. An unpartitioned
-        read without deletion vectors or row ids is the bare FileScan.
+        The scan takes the commit's file records as they are: partition
+        values, row-id bases and deletion vectors come from them. An
+        unpartitioned read without deletion vectors or row ids is the
+        bare FileScan.
         ``positions`` adds each row's table-relative file and position
         in it (``scan.REL`` / ``scan.POS``)."""
         schema = T.StructType.fromJson(json.loads(commit.schema_json))
         if with_row_ids and not _prop_on(
             commit.properties, "delta.enableRowTracking"
         ):
-            # property-gated, NOT row_ids-gated: a tracked table whose
-            # snapshot is momentarily empty has row_ids == {} and must
-            # still answer (with an empty id-columned relation)
+            # property-gated, not record-gated: a tracked table whose
+            # snapshot is momentarily empty has no file records and
+            # must still answer (with an empty id-columned relation)
             raise UserException(
                 "Row tracking is not enabled on this table; create it "
                 "with properties={'delta.enableRowTracking': 'true'}."
@@ -2226,39 +2237,27 @@ class ManagedTable:
             # a directory whose files were all kept (a partition the
             # predicate kept whole) is one root: Spark lists more than
             # 32 roots with a job
-            total = collections.Counter(
-                os.path.dirname(f) for f in commit.stats[u]["_files"]
-            )
+            total = collections.Counter(map(os.path.dirname, commit.files[u]))
             by_dir = collections.defaultdict(list)
             for f in kept[u]:
                 by_dir[os.path.dirname(f)].append(f)
             for d, names in sorted(by_dir.items()):
-                if d and len(names) == total[d]:
-                    roots.append(f"{_DATA}/{u}/{d}")
+                if d != f"{_DATA}/{u}" and len(names) == total[d]:
+                    roots.append(d)
                 else:
-                    roots += [f"{_DATA}/{u}/{f}" for f in names]
-        us = set(units)
-        files = None
-        if (
-            not units
-            or commit.partition_by
+                    roots += names
+        files = {
+            p: commit.files[u][p]
+            for u in units
+            for p in kept.get(u) or commit.files[u]
+        }
+        if units and not (
+            commit.partition_by
             or with_row_ids
             or positions
-            or any(_dv_unit(r) in us for r in commit.deletion_vectors)
+            or any(r.get("deletionVector") for r in files.values())
         ):
-            files = {}
-            for u in units:
-                ids = commit.row_ids.get(u) or {}
-                pvs = commit.partition_values[u] if commit.partition_by else {}
-                for f in kept.get(u) or commit.stats[u]["_files"]:
-                    rel = f"{_DATA}/{u}/{f}"
-                    base = (ids.get("files") or {}).get(rel)
-                    files[rel] = {
-                        "partitionValues": pvs.get(rel),
-                        "deletionVector": commit.deletion_vectors.get(rel),
-                        "baseRowId": base[0] if base else None,
-                        "defaultRowCommitVersion": ids.get("v"),
-                    }
+            files = None
         return scan_files(
             self.spark, self.path, schema, files, roots,
             commit.column_mapping, commit.partition_by,
@@ -2434,19 +2433,20 @@ class ManagedTable:
                 if f.name in set(commit.partition_by)
             }
             for u in units:
-                detail = (stats_view.get(u) or {}).get("_files") or {}
-                if ptypes:
-                    pvs = commit.partition_values[u]
-                    detail = {
-                        f: {
-                            **fs,
-                            **self._partition_stats(
-                                pvs[f"{_DATA}/{u}/{f}"], ptypes,
-                                fs.get("_rows"),
-                            ),
-                        }
-                        for f, fs in detail.items()
+                recs = commit.files[u]
+                detail = {
+                    p: {
+                        **fs,
+                        **self._partition_stats(
+                            recs[p].get("partitionValues") or {}, ptypes,
+                            fs.get("_rows"),
+                        ),
                     }
+                    for p, fs in self._logical_stats(
+                        {p: r["stats"] for p, r in recs.items()},
+                        commit.column_mapping,
+                    ).items()
+                }
                 names = prune_units(detail, list(detail), eff_condition)
                 if len(names) < len(detail):
                     kept[u] = names
@@ -2634,16 +2634,17 @@ class ManagedTable:
                 # deletion vectors. The key bounds come from the new
                 # unit's own footer stats (zero extra jobs), and so does
                 # the key count picking _mark_deleted's tier.
-                units, stats = self._write_rewrite(
+                units, files = self._write_rewrite(
                     prev, prev.data_units, src, compression,
                     max_records_per_file, props=effective_props,
                 )
                 # an empty batch adds no unit and deletes nothing
-                unit = units[-1] if len(units) > len(prev.data_units) else None
+                unit = next(iter(files), None)
                 phys_pk = [mapping.get(c, c) for c in primary_key]
                 targets = []
                 if unit:
-                    bounds = key_bounds_from_stats(stats[unit], phys_pk)
+                    new = _fold_unit(files[unit])
+                    bounds = key_bounds_from_stats(new, phys_pk)
                     targets = [
                         u for u in prev.data_units
                         if unit_overlaps_key_bounds(prev.stats.get(u), bounds)
@@ -2659,7 +2660,7 @@ class ManagedTable:
                 if targets:
                     dvs = self._mark_deleted(
                         prev, targets, primary_key,
-                        keys=src, n_keys=stats[unit]["_rows"],
+                        keys=src, n_keys=new["_rows"],
                         local_keys=None if prev.partition_by else _unit_keys,
                     )
             else:
@@ -2704,7 +2705,7 @@ class ManagedTable:
                     merged = src.select(
                         *[F.col(f.name) for f in union_schema.fields]
                     )
-                units, stats = self._write_rewrite(
+                units, files = self._write_rewrite(
                     prev, untouched, merged, compression,
                     max_records_per_file, props=effective_props,
                 )
@@ -2716,7 +2717,7 @@ class ManagedTable:
                 schema_json=json.dumps(union_schema.jsonValue()),
                 primary_key=primary_key,
                 properties=properties,
-                stats=stats,
+                files=files,
             )
             # CDF: persist this commit's change set (inserts + the
             # update post-images the MERGE actually applied) so
@@ -2904,7 +2905,7 @@ class ManagedTable:
         rewritten through ``transform(df, cond_col)``."""
         prev = self._head()
         touched = self._prune(prev, condition)
-        units = stats = None  # nothing touched: every unit stands
+        units = files = None  # nothing touched: every unit stands
         if touched:
             untouched = [u for u in prev.data_units if u not in set(touched)]
             df = self._read_rewrite(prev, touched)
@@ -2926,10 +2927,10 @@ class ManagedTable:
             constraints = prev.properties.get("constraints", {})
             if constraints:
                 self._check_constraints(rewritten, constraints)
-            units, stats = self._write_rewrite(
+            units, files = self._write_rewrite(
                 prev, untouched, rewritten, compression, max_records_per_file
             )
-        commit = self._next(prev, action, data_units=units, stats=stats)
+        commit = self._next(prev, action, data_units=units, files=files)
         cdc = []
         if touched and prev.properties.get("enableChangeDataFeed"):
             # CDF for DML (Delta parity): DELETE emits the removed
@@ -3189,8 +3190,8 @@ class ManagedTable:
             touched = []
             for u in prev.data_units:
                 seen: dict[str, set] = {}
-                for pv in prev.partition_values[u].values():
-                    for k, v in pv.items():
+                for r in prev.files[u].values():
+                    for k, v in (r.get("partitionValues") or {}).items():
                         seen.setdefault(k, set()).add(v)
                 if any(
                     self._tuple_in_unit(seen, t, prev.partition_by)
@@ -3216,11 +3217,11 @@ class ManagedTable:
             new_rows = self._read_rewrite(prev, touched).filter(
                 ~cond
             ).unionByName(df, allowMissingColumns=True)
-        units, stats = self._write_rewrite(
+        units, files = self._write_rewrite(
             prev, untouched, new_rows, compression, max_records_per_file
         )
         commit = self._next(
-            prev, "replace_where", data_units=units, stats=stats
+            prev, "replace_where", data_units=units, files=files
         )
         cdc = []
         if prev.properties.get("enableChangeDataFeed"):
@@ -3387,12 +3388,12 @@ class ManagedTable:
             constraints = prev.properties.get("constraints", {})
             if constraints:
                 self._check_constraints(merged, constraints)
-            units, stats = self._write_rewrite(
+            units, files = self._write_rewrite(
                 prev, untouched, merged, compression, max_records_per_file
             )
             commit = self._next(
                 prev, "upsert",
-                data_units=units, primary_key=primary_key, stats=stats,
+                data_units=units, primary_key=primary_key, files=files,
             )
             cdc = []
             if prev.properties.get("enableChangeDataFeed"):
@@ -3657,22 +3658,22 @@ class ManagedTable:
                     df, prev.partition_by, "snappy", target_file_rows
                 )
             )
-            stats = {
-                u: self._unit_stats(u, props=prev.properties) for u in units
+            files = {
+                u: self._unit_files(u, props=prev.properties) for u in units
             }
         else:
             # a scoped optimize that CARRIES physically-named units must
             # write the rewrite under the same physical names (uniform
             # on-disk naming); a full optimize materializes renames and
             # resets the mapping (REORG)
-            units, stats = self._write_rewrite(
+            units, files = self._write_rewrite(
                 prev, untouched, df, "snappy", target_file_rows,
                 mapping=prev.column_mapping if untouched else {},
             )
         commit = self._next(
             prev, "optimize",
             data_units=units,
-            stats=stats,
+            files=files,
             column_mapping=prev.column_mapping if untouched else {},
             # a clustering optimize (re)declares the table's clustering
             # columns (Delta clustered-table state); a plain compaction
@@ -3807,21 +3808,19 @@ class ManagedTable:
             # (an older engine's sit flat in _change_data/)
             return {rel.split("/")[1] for rel in c.cdc_files}
 
+        def _dv_files(c: Commit) -> set:
+            return {dv_relative_path(d) for d in c.deletion_vectors.values()}
+
         live = set(prev.data_units)
-        live_dvs = {dv_relative_path(d) for d in prev.deletion_vectors.values()}
+        live_dvs = _dv_files(prev)
         live_changes = _change_dirs(prev)
         ever_referenced: set = set()
         for c in self.history():
-            ever_referenced.update(c.data_units)
-            ever_referenced.update(
-                dv_relative_path(d) for d in c.deletion_vectors.values()
-            )
-            ever_referenced.update(_change_dirs(c))
+            dv_files = _dv_files(c)
+            ever_referenced.update(c.data_units, dv_files, _change_dirs(c))
             if c.timestamp_ms >= cutoff_ms:
                 live.update(c.data_units)
-                live_dvs.update(
-                    dv_relative_path(d) for d in c.deletion_vectors.values()
-                )
+                live_dvs.update(dv_files)
                 live_changes.update(_change_dirs(c))
         # a unit referenced by NO commit at all may be a CONCURRENT
         # writer's just-written, not-yet-published data: reclaiming it
@@ -3972,14 +3971,20 @@ class ManagedTable:
         pass. The path that (re-)arms data skipping on a table adopted
         with ``collect_stats=False`` or written by an older engine."""
         prev = self._head()
-        stats = {
-            u: self._unit_stats(
-                u,
-                props=prev.properties, mapping=prev.column_mapping,
+        files = {}
+        for u in prev.data_units:
+            fresh = self._unit_files(
+                u, props=prev.properties, mapping=prev.column_mapping
             )
-            for u in prev.data_units
-        }
-        commit = self._next(prev, "analyze", stats=stats)
+            # the files stay as they are: they keep their deletions
+            files[u] = {
+                p: {**r, **{
+                    k: v for k, v in prev.files[u][p].items()
+                    if k == "deletionVector"
+                }}
+                for p, r in fresh.items()
+            }
+        commit = self._next(prev, "analyze", files=files)
         return self._publish(commit, prev)
 
     def convert_from_parquet(
@@ -4072,7 +4077,7 @@ class ManagedTable:
             partition_by=partition_by,
             primary_key=primary_key,
             properties=properties,
-            stats={unit: self._unit_stats(unit, props=props)},
+            files={unit: self._unit_files(unit, props=props)},
         )
         return self._publish(commit, None)
 
@@ -4111,6 +4116,7 @@ class ManagedTable:
         from component_delta_lake_writer_spark.sinks.delta_log import (
             _empty_state,
             _replay_steps,
+            _walk_parquet,
             write_delta_log_entry,
         )
 
@@ -4124,6 +4130,10 @@ class ManagedTable:
         if names:
             with open(os.path.join(legacy, names[-1])) as fh:
                 d = json.load(fh)
+            # per-file state that snapshot kept beside its units: it
+            # becomes the file records' deletion vectors and row ids
+            dvs = d.pop("deletion_vectors", None) or {}
+            row_ids = d.pop("row_ids", None) or {}
             # a field this engine no longer models: empty, it carries no
             # state; non-empty (e.g. merge-on-read deletes kept outside
             # the Delta log), dropping it would resurrect rows
@@ -4142,17 +4152,37 @@ class ManagedTable:
                 pass
             head = state["version"]
             for u in old.data_units:
-                if "_files" not in (old.stats.get(u) or {}):
+                st = old.stats.get(u) or {}
+                if "_files" not in st:
                     # partitioned / large units kept no per-file detail
-                    old.stats[u] = {
-                        **self._unit_stats(
-                            u, props=old.properties, mapping=old.column_mapping
-                        ),
-                        **{
-                            k: v for k, v in (old.stats.get(u) or {}).items()
-                            if k == "_bloom"
-                        },
+                    recs = self._unit_files(
+                        u, props=old.properties, mapping=old.column_mapping
+                    )
+                else:
+                    cut = len(_DATA) + len(u) + 2
+                    recs = {
+                        rel: {
+                            "partitionValues": pvals,
+                            "size": size,
+                            "modificationTime": mtime,
+                            "stats": st["_files"].get(rel[cut:])
+                            or {"_rows": None},
+                        }
+                        for rel, size, mtime, pvals in _walk_parquet(
+                            self.path, os.path.join(_DATA, u)
+                        )
                     }
+                ids = row_ids.get(u) or {}
+                for rel, r in recs.items():
+                    if st.get("_bloom"):
+                        r["tags"] = {"engine.bloom": json.dumps(st["_bloom"])}
+                    if dvs.get(rel):
+                        r["deletionVector"] = dvs[rel]
+                    if rel in (ids.get("files") or {}):
+                        r["baseRowId"] = ids["files"][rel][0]
+                        r["defaultRowCommitVersion"] = ids["v"]
+                old.files[u] = recs
+                old.stats[u] = _fold_unit(recs)
             old.version = head + 1
             old.action = "sync_metadata"
             old.timestamp_ms = int(time.time() * 1000)
@@ -4343,16 +4373,9 @@ class ManagedTable:
         summed unit rows minus the summed deletion-vector
         cardinalities (each live file's bitmap is the union of every
         deletion hitting it). Falls back to one distributed count only
-        when some unit has no recorded row count."""
-        c = self._head()
-        if all(
-            (c.stats.get(u) or {}).get("_rows") is not None
-            for u in c.data_units
-        ):
-            return sum(c.stats[u]["_rows"] for u in c.data_units) - sum(
-                int(d["cardinality"]) for d in c.deletion_vectors.values()
-            )
-        return self.read().count()
+        when some file has no recorded row count."""
+        rows = _live_rows(self._head())
+        return self.read().count() if rows is None else rows
 
     def generate_symlink_manifest(self) -> str:
         """``GENERATE symlink_format_manifest FOR TABLE t`` (Delta's
@@ -4373,15 +4396,11 @@ class ManagedTable:
                 "be lost from a bare file list and resurrect deleted "
                 "rows; run optimize() first."
             )
-        lines = []
-        for u in c.data_units:
-            base = os.path.join(self._data_dir, u)
-            for root, _dirs, files in os.walk(base):
-                for fn in sorted(files):
-                    if fn.endswith(".parquet") and not fn.startswith(
-                        (".", "_")
-                    ):
-                        lines.append(os.path.join(root, fn))
+        lines = [
+            os.path.join(self.path, p)
+            for u in c.data_units
+            for p in c.files[u]
+        ]
         mdir = os.path.join(self.path, "_symlink_format_manifest")
         os.makedirs(mdir, exist_ok=True)
         final = os.path.join(mdir, "manifest")
@@ -4394,31 +4413,20 @@ class ManagedTable:
     def detail(self) -> dict:
         """``DESCRIBE DETAIL`` (Delta parity): one metadata dict for
         the current snapshot — format, location, version, unit/file
-        counts, total data bytes, row count from commit stats (no data
-        scan), partition/PK columns, properties, feature flags."""
+        counts and total data bytes from the log's adds, the live row
+        count by ``row_count``'s metadata rule (no data scan; None when
+        some add has no row count), partition/PK columns, properties,
+        feature flags."""
         c = self._head()
-        n_files = 0
-        size_bytes = 0
-        for u in c.data_units:
-            base = os.path.join(self._data_dir, u)
-            for root, _dirs, files in os.walk(base):
-                for fn in files:
-                    if fn.endswith(".parquet"):
-                        n_files += 1
-                        size_bytes += os.path.getsize(
-                            os.path.join(root, fn)
-                        )
-        rows = sum(
-            (c.stats.get(u) or {}).get("_rows") or 0 for u in c.data_units
-        )
+        recs = [r for u in c.data_units for r in c.files[u].values()]
         return {
             "format": "delta",
             "location": self.path,
             "version": c.version,
             "num_units": len(c.data_units),
-            "num_files": n_files,
-            "size_bytes": size_bytes,
-            "num_rows_from_stats": rows,
+            "num_files": len(recs),
+            "size_bytes": sum(r["size"] for r in recs),
+            "num_rows_from_stats": _live_rows(c),
             "partition_columns": list(c.partition_by or []),
             "primary_key": list(c.primary_key or []),
             "properties": dict(c.properties or {}),
@@ -4488,9 +4496,7 @@ class ManagedTable:
             files = None
             if last.partition_by:
                 files = {
-                    rel: {"partitionValues": pv}
-                    for u, c in added.items()
-                    for rel, pv in c.partition_values[u].items()
+                    p: r for u, c in added.items() for p, r in c.files[u].items()
                 }
             parts.append(
                 scan_files(

@@ -5,8 +5,9 @@ A Delta reader computes the live file set from the log and reads
 exactly those files; a partition column's values come from each add
 action's ``partitionValues``, never from the data files or their paths
 (Delta Lake, VLDB 2020, §3). ``scan_files`` turns such a file list
-({table-relative path: add-shaped record}) into a DataFrame under the
-table's logical schema:
+({table-relative path: record}, the adds themselves or the engine's
+``Commit.files`` records, which keep the adds' key names) into a
+DataFrame under the table's logical schema:
 
 - one parquet ``FileScan`` under the physical schema, aliased back to
   logical names — the one place reads cross the column-mapping
@@ -144,9 +145,10 @@ def scan_files(
 ) -> DataFrame:
     """The rows of ``files`` under the logical ``schema``.
 
-    - ``files``: {table-relative path: add-shaped record} — its
-      ``partitionValues``, ``deletionVector``, ``baseRowId`` and
-      ``defaultRowCommitVersion`` are used. None when ``roots`` hold
+    - ``files``: {table-relative path: record} — a log add or a
+      ``Commit.files`` record, taken as it is: its ``partitionValues``,
+      ``deletionVector``, ``baseRowId`` and ``defaultRowCommitVersion``
+      are used. None when ``roots`` hold
       exactly the files to read and none needs a per-file value.
     - ``roots``: table-relative directories or files Spark lists. None:
       each file's unit directory; the join then reads only the listed

@@ -8,9 +8,9 @@ alone only skips row groups *inside* a scan it was already handed.
 This module is the commit-log equivalent for ManagedTable:
 
 - ``collect_unit_stats`` reads the parquet FOOTERS of a freshly
-  written data unit (row-group metadata only — no data pages) and
-  folds them into one ``{col: {min, max, nulls}}`` dict per unit,
-  stored on the commit.
+  written data unit (row-group metadata only — no data pages) into
+  one ``{col: {min, max, nulls}}`` dict per file (what its add's stats
+  carry) and their fold per unit.
 - ``prune_units`` evaluates a conjunctive predicate against those
   ranges and drops whole units that cannot match.
 
@@ -307,9 +307,12 @@ def collect_unit_stats(
     num_indexed_cols: int | None = None,
     spark=None,
     distribute_threshold: int = DISTRIBUTE_THRESHOLD,
+    files: list[str] | None = None,
 ) -> dict:
     """Fold the parquet row-group stats of every file under
     ``unit_dir`` into ``{"_rows": n, col: {min, max, nulls}}``.
+    ``files`` (relpaths under ``unit_dir``) names them when the caller
+    has listed the directory already; None lists it here.
 
     ``num_indexed_cols`` (Delta's delta.dataSkippingNumIndexedCols,
     -1 = all): collect min/max for only the FIRST N schema columns —
@@ -334,7 +337,7 @@ def collect_unit_stats(
     1 M-file CONVERT needs.  Below the threshold the driver loop is
     byte-identical to the pre-distributed behavior.
     """
-    rels = list_parquet_files(unit_dir)
+    rels = sorted(files) if files is not None else list_parquet_files(unit_dir)
     want_detail = per_file
     # Resolve the indexed-column set ONCE, driver-side, from the
     # globally first sorted file (Delta's first-N-schema-columns

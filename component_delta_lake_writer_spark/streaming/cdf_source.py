@@ -21,9 +21,10 @@ streams A's deltas — no file listing, no external queue.
 Scale posture: offset planning is driver-side COMMIT METADATA (which
 versions, which files — one forward pass over the table's log per
 batch); the data plane is one InputPartition per change file, read
-worker-side via pyarrow into one Arrow batch per file. Partitioned
-tables recover hive partition values from the directory layout; a
-change-set commit's rows are the change files its cdc actions name.
+worker-side via pyarrow into one Arrow batch per file. A data file's
+partition values and deletion vector come from its record in the
+commit (the log's add); a change-set commit's rows are the change
+files its cdc actions name.
 Commits a CDF stream cannot attribute (overwrite / restore) raise
 rather than silently emitting wrong deltas — the same contract as
 ``ManagedTable.read_changes``.
@@ -142,15 +143,7 @@ class CdfStreamReader(DataSourceStreamReader):
             # equal ManagedTable.read(), not the raw union of files.
             snap = int(start["snapshot_of"])
             c = table.commit_at(snap)
-            for u in c.data_units:
-                parts.extend(
-                    self._unit_files(
-                        os.path.join(self.table_path, "_data", u),
-                        snap, "insert",
-                        dvs=c.deletion_vectors,
-                        table_path=self.table_path,
-                    )
-                )
+            parts += self._inserts(c, c.data_units)
             lo = snap
         # one forward pass over the log from the offset's version
         commits = list(table._walk(max(lo, 0), hi)) if hi > lo else []
@@ -166,13 +159,7 @@ class CdfStreamReader(DataSourceStreamReader):
                 units, files = commit_changes(
                     self.table_path, prev, c, "table_changes_stream"
                 )
-            for u in units:
-                parts.extend(
-                    self._unit_files(
-                        os.path.join(self.table_path, "_data", u),
-                        c.version, "insert",
-                    )
-                )
+            parts += self._inserts(c, units)
             parts += [
                 _ChangeFilePartition(
                     os.path.join(self.table_path, f), c.version, None, {}
@@ -186,26 +173,20 @@ class CdfStreamReader(DataSourceStreamReader):
             p.mapping = c.column_mapping
         return parts
 
-    @staticmethod
-    def _unit_files(base, version, change_type, dvs=None, table_path=None):
-        from component_delta_lake_writer_spark.sinks.hive_layout import (
-            decode_segments,
-        )
-
-        out = []
-        for root, _dirs, files in os.walk(base):
-            pvals = decode_segments(os.path.relpath(root, base))
-            for fn in sorted(files):
-                if fn.endswith(".parquet") and not fn.startswith((".", "_")):
-                    path = os.path.join(root, fn)
-                    d = dvs and dvs.get(os.path.relpath(path, table_path))
-                    out.append(
-                        _ChangeFilePartition(
-                            path, version, change_type, pvals,
-                            dv=(table_path, d) if d else None,
-                        )
-                    )
-        return out
+    def _inserts(self, c, units) -> list:
+        """The files of ``units`` as ``c`` records them, as inserts of
+        ``c``'s version: a worker reads each file, drops what its
+        deletion vector marks deleted and adds its partition values."""
+        return [
+            _ChangeFilePartition(
+                os.path.join(self.table_path, p), c.version, "insert",
+                r.get("partitionValues") or {},
+                dv=(self.table_path, r["deletionVector"])
+                if r.get("deletionVector") else None,
+            )
+            for u in units
+            for p, r in c.files[u].items()
+        ]
 
     def read(self, partition: _ChangeFilePartition):
         """One Arrow record batch per file, cast once to the stream
@@ -254,7 +235,7 @@ class CdfStreamReader(DataSourceStreamReader):
             elif f.name in resolve:
                 cols.append(tbl.column(resolve[f.name]))
             elif f.name in partition.partition_values:
-                # hive-dir values are strings; a timestamp one carries
+                # partition values are strings; a timestamp one carries
                 # no zone, so it parses naive and the cast reads it as
                 # UTC (the session zone batch reads use)
                 v = pa.scalar(partition.partition_values[f.name], pa.string())

@@ -262,6 +262,7 @@ def test_commit_conflict_detected(spark, tmp_path):
         action="append",
         data_units=prev.data_units,
         schema_json=prev.schema_json,
+        files=prev.files,
     )
     t._publish(clash)  # writer A wins version 1
     with pytest.raises(UserException, match="Concurrent commit conflict"):

@@ -2044,7 +2044,11 @@ def test_snapshot_replay_equals_memo_across_checkpoint(spark, tmp_path_str):
     assert seen[-1].version >= 10  # replay crossed a checkpoint
     last = seen[-1]
     assert last.txns == {"app": 1} and last.ingest_sidecars
-    assert last.row_ids and last.clustered_by == [] and last.deletion_vectors
+    assert all(
+        r.get("baseRowId") is not None
+        for recs in last.files.values() for r in recs.values()
+    )
+    assert last.clustered_by == [] and last.deletion_vectors
     assert any("_bloom" in s for s in seen[1].stats.values())
     for c in seen:
         _fields_equal(ManagedTable(spark, t.path).commit_at(c.version), c)
@@ -2511,9 +2515,17 @@ def test_every_mutator_carries_the_parent_state(
         assert after.deletion_vectors[dv_rel] == dv
     else:
         assert dv_unit not in after.data_units
+    def ids(c, u):
+        return {
+            p: (r.get("baseRowId"), r.get("defaultRowCommitVersion"))
+            for p, r in c.files[u].items()
+        }
+
     for u in set(after.data_units) & set(before.data_units):
-        assert after.row_ids[u] == before.row_ids[u], u
-    assert set(after.row_ids) == set(after.data_units)
+        assert ids(after, u) == ids(before, u), u
+    assert all(
+        None not in v for u in after.data_units for v in ids(after, u).values()
+    )
     assert after.row_id_high_water >= before.row_id_high_water
     fresh = ManagedTable(spark, t.path).latest_commit()
     assert fresh == after == t.latest_commit()

@@ -237,3 +237,65 @@ def test_file_scans_live_only_in_the_scan_module():
         if f.name != "scan.py" and (sites := _file_scan_sites(f))
     }
     assert offenders == {}, offenders
+
+
+# the functions whose job is the disk, per module: a new unit's one
+# listing and footer pass, the listing primitives themselves, the unit
+# split, the adoption of foreign files, the legacy converter and
+# storage upkeep
+_DISK_OWNERS = {
+    "managed_table.py": {
+        "_unit_files", "_split_unit_per_file", "convert_from_parquet",
+        "sync_metadata", "vacuum", "fsck", "clone_to",
+    },
+    "unit_stats.py": {"collect_unit_stats", "list_parquet_files"},
+    "delta_log.py": {"_walk_parquet"},
+}
+_WALKS = {"_walk_parquet", "list_parquet_files"}
+
+
+def _walk_sites(path) -> list[tuple[int, str]]:
+    """(line, enclosing function) of each directory walk in ``path``
+    outside its module's disk owners: an ``os.walk`` or a call of a
+    listing primitive."""
+    owners = _DISK_OWNERS.get(path.name, set())
+    sites = []
+
+    def visit(node, scope: tuple) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = scope + (node.name,)
+        walk = (
+            isinstance(node, ast.Attribute) and node.attr == "walk"
+            and _name(node.value) == "os"
+        ) or (
+            isinstance(node, ast.Call) and _name(node.func) in _WALKS
+        )
+        if walk and not owners & set(scope):
+            sites.append((node.lineno, ".".join(scope) or "<module>"))
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    visit(ast.parse(path.read_text(), str(path)), ())
+    return sites
+
+
+def test_snapshot_files_come_from_the_records():
+    """A snapshot's files are ``Commit.files``, one record per live
+    add: ``Commit`` keeps no parallel per-file map, and no code in
+    ``sinks/`` or ``streaming/`` walks a table's directories for what
+    the log records, except the functions that own the disk."""
+    from dataclasses import fields
+
+    from component_delta_lake_writer_spark.sinks.managed_table import Commit
+
+    assert {f.name for f in fields(Commit)} & {
+        "partition_values", "row_ids", "deletion_vectors",
+    } == set()
+    pkg = SINKS.parent
+    offenders = {
+        f"{f.parent.name}/{f.name}": sites
+        for d in ("sinks", "streaming")
+        for f in sorted((pkg / d).glob("*.py"))
+        if (sites := _walk_sites(f))
+    }
+    assert offenders == {}, offenders

@@ -370,9 +370,11 @@ def test_convert_clone_analyze_statements(ex, tmp_path):
     # NO STATISTICS + ANALYZE re-arms stats
     ex.execute(f"CONVERT TO DELTA parquet.`{raw}` NO STATISTICS AS conv2")
     t2 = ex.table("conv2")
-    st = next(iter(t2.latest_commit().stats.values()))
-    assert set(st) == {"_rows", "_files"}  # row counts only, per file too
-    assert all(set(f) == {"_rows"} for f in st["_files"].values())
+    c2 = t2.latest_commit()
+    assert set(c2.stats[c2.data_units[0]]) == {"_rows"}  # row counts only
+    assert all(  # per file too
+        set(r["stats"]) == {"_rows"} for r in c2.files[c2.data_units[0]].values()
+    )
     ex.execute("ANALYZE TABLE conv2 COMPUTE STATISTICS FOR ALL COLUMNS")
     c = t2.latest_commit()
     assert c.action == "analyze"

@@ -189,7 +189,7 @@ def test_per_file_stats_and_file_level_pruning(spark, tmp_path_str):
     t.write(o, mode="overwrite")
     t.optimize(target_file_rows=100, cluster_by=["o_orderkey"])
     c = t.latest_commit()
-    detail = c.stats[c.data_units[0]].get("_files")
+    detail = {p: r["stats"] for p, r in c.files[c.data_units[0]].items()}
     assert detail and len(detail) > 3
     hi = max(v["o_orderkey"]["max"] for v in detail.values())
     cond = f"o_orderkey >= {hi}"
@@ -556,7 +556,7 @@ def test_zorder_prunes_every_listed_dimension(spark, tmp_path_str):
         t.write(o, mode="overwrite")
         t.optimize(target_file_rows=500, **kw)
         c = t.latest_commit()
-        det = c.stats[c.data_units[0]]["_files"]
+        det = {p: r["stats"] for p, r in c.files[c.data_units[0]].items()}
         kept = prune_units(det, list(det), trail_cond)
         # pruning must never cost rows
         got = t.read_where(trail_cond).count()
@@ -1109,9 +1109,12 @@ def test_convert_distributed_stats_end_to_end(spark, tmp_path):
     # NO STATISTICS path: distributed row count only
     t2 = ManagedTable(spark, str(tmp_path / "t2"))
     t2.convert_from_parquet(src, collect_stats=False)
-    st3 = next(iter(t2.latest_commit().stats.values()))
-    assert set(st3) == {"_rows", "_files"} and st3["_rows"] == 8000
-    assert all(set(f) == {"_rows"} for f in st3["_files"].values())
+    c3 = t2.latest_commit()
+    st3 = c3.stats[c3.data_units[0]]
+    assert set(st3) == {"_rows"} and st3["_rows"] == 8000
+    assert all(
+        set(r["stats"]) == {"_rows"} for r in c3.files[c3.data_units[0]].values()
+    )
 
 
 def test_distributed_indexed_cols_consistent_under_schema_drift(
