@@ -207,6 +207,9 @@ def _finish(acc: dict, rows: int) -> dict:
         if e.pop("bad"):
             e["min"] = e["max"] = None
         out[name] = e
+    # a column named _rows keeps no stats: the count wins (publishing
+    # refuses the name, and folding must get there)
+    out["_rows"] = rows
     return out
 
 
