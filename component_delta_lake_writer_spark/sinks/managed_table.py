@@ -39,6 +39,7 @@ partition values.
 from __future__ import annotations
 
 import collections
+import contextlib
 import itertools
 import json
 import os
@@ -255,25 +256,17 @@ def _live_rows(c: Commit) -> int | None:
     return n
 
 
-def _drop_empty_first_file(unit_dir: str) -> None:
-    """Spark keeps the file of an empty first input partition (so an
-    all-empty write still records its schema). Beside files with rows
-    it would commit as a 0-record add: remove it and its checksum."""
-    import pyarrow.parquet as pq
-
-    names = [
-        n for n in os.listdir(unit_dir)
-        if n.startswith("part-") and n.endswith(".parquet")
-    ]
-    first = [n for n in names if n.startswith("part-00000-")]
-    if len(names) < 2 or len(first) != 1:
-        return
-    path = os.path.join(unit_dir, first[0])
-    if pq.ParquetFile(path).metadata.num_rows == 0:
-        os.remove(path)
-        crc = os.path.join(unit_dir, f".{first[0]}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
+def _empty_first_file(recs: dict) -> str | None:
+    """The file Spark keeps for an empty first input partition (so an
+    all-empty write still records its schema), when other files sit
+    beside it at the top of a new unit: committed, it would be a
+    0-record add."""
+    top = [p for p, r in recs.items() if not r["partitionValues"]]
+    parts = [p for p in top if "/part-" in p]
+    first = [p for p in parts if "/part-00000-" in p]
+    if len(parts) > 1 and len(first) == 1:
+        return first[0] if recs[first[0]]["stats"]["_rows"] == 0 else None
+    return None
 
 
 def _dv_unit(rel: str) -> str:
@@ -843,12 +836,19 @@ class ManagedTable:
         ict = _prop_on(props, "delta.enableInCommitTimestamps")
         clustered = list(commit.clustered_by or [])
         prev_clustered = list(prev.clustered_by or []) if prev else []
+        # units whose records are not the parent's: only they can bring
+        # new adds, new stats or new deletion vectors
+        changed = [
+            u for u in commit.data_units
+            if prev is None or commit.files[u] is not prev.files.get(u)
+        ]
         # feature flags; deletion vectors and the v2 checkpoint policy
         # never switch off again once on (readers may hold them)
         feat: dict = {}
         caps: set = set()
-        if commit.deletion_vectors or (
-            prev_cfg.get("delta.enableDeletionVectors") == "true"
+        if prev_cfg.get("delta.enableDeletionVectors") == "true" or any(
+            r.get("deletionVector")
+            for u in changed for r in commit.files[u].values()
         ):
             feat["delta.enableDeletionVectors"] = "true"
             caps.add("deletionVectors")
@@ -917,9 +917,9 @@ class ManagedTable:
                 "baseRowId": int(r["baseRowId"]),
                 "defaultRowCommitVersion": int(r["defaultRowCommitVersion"]),
             }
-            for recs in commit.files.values()
+            for recs in (commit.files.values() if tracked else ())
             for rel, r in recs.items()
-            if tracked and r.get("baseRowId") is not None
+            if r.get("baseRowId") is not None
         }
         logged = state["adds"]
 
@@ -943,7 +943,7 @@ class ManagedTable:
                 for rel, rec in prev.files[u].items():
                     actions.append(_remove(rel, rec))
         emitted: set = set()
-        for u in commit.data_units:
+        for u in changed:
             recs = commit.files[u]
             old = prev.files.get(u) if prev else None
             if old is not None and (
@@ -978,8 +978,8 @@ class ManagedTable:
                 actions.append({"add": add})
         dv_swaps = sorted(
             rel
-            for u in commit.data_units
-            if prev is not None and u in prev_units
+            for u in changed
+            if u in prev_units
             for rel, r in commit.files[u].items()
             if rel not in emitted
             and r.get("deletionVector")
@@ -1199,7 +1199,6 @@ class ManagedTable:
             writer = writer.partitionBy(*partition_by)
         unit_dir = os.path.join(self._data_dir, unit)
         writer.parquet(unit_dir)
-        _drop_empty_first_file(unit_dir)
         # caches registered upstream (identity assignment pins its
         # input so __mid stays stable between the count collect and
         # this write) are no longer needed once the unit is on disk —
@@ -1222,13 +1221,15 @@ class ManagedTable:
         unit: str,
         props: dict | None = None,
         mapping: dict | None = None,
+        written: bool = False,
     ) -> dict:
-        """The file records (``Commit.files``) of a freshly written
-        unit, in the order its adds are logged: one listing of its
-        directory (size, modification time and the partition values of
-        its Hive layout) and one pass over its footers (stats). Bloom
-        sidecars of the ``bloom_filter_columns`` property are written
-        beside it and named in every record's tags."""
+        """The file records (``Commit.files``) of a unit, in the order
+        its adds are logged: one listing of its directory (size,
+        modification time and the partition values of its Hive layout)
+        and one pass over its footers (stats). A unit just ``written``
+        loses Spark's empty first file. Bloom sidecars of the
+        ``bloom_filter_columns`` property are written beside it and
+        named in every record's tags."""
         from component_delta_lake_writer_spark.sinks import bloom
         from component_delta_lake_writer_spark.sinks.delta_log import (
             _walk_parquet,
@@ -1265,6 +1266,12 @@ class ManagedTable:
             }
             for rel, size, mtime, pvals in listing
         }
+        if written and (empty := _empty_first_file(recs)):
+            del recs[empty]
+            head, name = os.path.split(os.path.join(self.path, empty))
+            for f in (name, f".{name}.crc"):
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(head, f))
         cols = (props or {}).get("bloom_filter_columns") or []
         if cols and stats.get("_rows"):
             mapping = mapping or {}
@@ -1334,6 +1341,7 @@ class ManagedTable:
             unit,
             props=prev.properties if props is None else props,
             mapping=mapping,
+            written=True,
         )
         if any(r["stats"]["_rows"] for r in recs.values()):
             return list(untouched) + [unit], {unit: recs}
@@ -1657,7 +1665,7 @@ class ManagedTable:
                 primary_key=primary_key or None,
                 properties=properties or None,
                 files={unit: self._unit_files(
-                    unit, props=effective_props, mapping=mapping,
+                    unit, props=effective_props, mapping=mapping, written=True,
                 )},
                 column_mapping=mapping,
             )
@@ -1672,7 +1680,7 @@ class ManagedTable:
         # high-water mark and a concurrent append may have claimed the
         # same range.
         unit_files = {unit: self._unit_files(
-            unit, props=effective_props, mapping=mapping,
+            unit, props=effective_props, mapping=mapping, written=True,
         )}
         for attempt in range(6):
             table_schema = T.StructType.fromJson(json.loads(prev.schema_json))
@@ -3661,6 +3669,13 @@ class ManagedTable:
             files = {
                 u: self._unit_files(u, props=prev.properties) for u in units
             }
+            # Spark's empty first file, split off into a unit of its own
+            if empty := _empty_first_file(
+                {p: r for recs in files.values() for p, r in recs.items()}
+            ):
+                units.remove(u := _dv_unit(empty))
+                del files[u]
+                shutil.rmtree(os.path.join(self._data_dir, u))
         else:
             # a scoped optimize that CARRIES physically-named units must
             # write the rewrite under the same physical names (uniform
@@ -3977,11 +3992,10 @@ class ManagedTable:
                 u, props=prev.properties, mapping=prev.column_mapping
             )
             # the files stay as they are: they keep their deletions
+            old = prev.files[u]
             files[u] = {
-                p: {**r, **{
-                    k: v for k, v in prev.files[u][p].items()
-                    if k == "deletionVector"
-                }}
+                p: {**r, "deletionVector": old[p]["deletionVector"]}
+                if old[p].get("deletionVector") else r
                 for p, r in fresh.items()
             }
         commit = self._next(prev, "analyze", files=files)
@@ -4116,7 +4130,6 @@ class ManagedTable:
         from component_delta_lake_writer_spark.sinks.delta_log import (
             _empty_state,
             _replay_steps,
-            _walk_parquet,
             write_delta_log_entry,
         )
 
@@ -4153,25 +4166,12 @@ class ManagedTable:
             head = state["version"]
             for u in old.data_units:
                 st = old.stats.get(u) or {}
-                if "_files" not in st:
-                    # partitioned / large units kept no per-file detail
-                    recs = self._unit_files(
-                        u, props=old.properties, mapping=old.column_mapping
-                    )
-                else:
-                    cut = len(_DATA) + len(u) + 2
-                    recs = {
-                        rel: {
-                            "partitionValues": pvals,
-                            "size": size,
-                            "modificationTime": mtime,
-                            "stats": st["_files"].get(rel[cut:])
-                            or {"_rows": None},
-                        }
-                        for rel, size, mtime, pvals in _walk_parquet(
-                            self.path, os.path.join(_DATA, u)
-                        )
-                    }
+                # one listing and footer pass, as a write makes; the
+                # snapshot's bloom tags, deletion vectors and row ids
+                # go on the records
+                recs = self._unit_files(
+                    u, props=old.properties, mapping=old.column_mapping
+                )
                 ids = row_ids.get(u) or {}
                 for rel, r in recs.items():
                     if st.get("_bloom"):

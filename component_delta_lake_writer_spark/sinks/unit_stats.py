@@ -291,19 +291,6 @@ def _fold_task(
     return acc, rows, details
 
 
-def list_parquet_files(unit_dir: str) -> list[str]:
-    """Sorted relpaths of every .parquet under ``unit_dir``."""
-    rels: list[str] = []
-    for root, _dirs, files in os.walk(unit_dir):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                rels.append(
-                    os.path.relpath(os.path.join(root, fn), unit_dir)
-                )
-    rels.sort()
-    return rels
-
-
 def collect_unit_stats(
     unit_dir: str,
     per_file: bool = False,
@@ -340,7 +327,13 @@ def collect_unit_stats(
     1 M-file CONVERT needs.  Below the threshold the driver loop is
     byte-identical to the pre-distributed behavior.
     """
-    rels = sorted(files) if files is not None else list_parquet_files(unit_dir)
+    if files is None:  # the listing rule of the log's adds
+        from component_delta_lake_writer_spark.sinks.delta_log import (
+            _walk_parquet,
+        )
+
+        files = [rel for rel, *_ in _walk_parquet(unit_dir, "")]
+    rels = sorted(files)
     want_detail = per_file
     # Resolve the indexed-column set ONCE, driver-side, from the
     # globally first sorted file (Delta's first-N-schema-columns

@@ -47,32 +47,45 @@ def test_detail_counts_live_rows_after_merge_on_read_delete(spark, tmp_path):
     )
 
 
-@pytest.mark.parametrize("tracked", [False, True])
+@pytest.mark.parametrize(
+    "partitioned, tracked", [(False, False), (True, False), (True, True)]
+)
 def test_commit_reads_its_new_unit_from_disk_once(
-    spark, tmp_path, monkeypatch, tracked
+    spark, tmp_path, monkeypatch, partitioned, tracked
 ):
-    """An append into a partitioned table lists its new unit's
-    directory once and opens each new file's footer once, with or
-    without row tracking: the adds and the fresh row ids come from the
-    records that one pass made."""
+    """An append lists its new unit's directory once and opens each new
+    file's footer once: into a partitioned table with or without row
+    tracking, and into an unpartitioned one whose empty first input
+    partition leaves Spark's 0-row ``part-00000`` file, which that one
+    pass drops. The adds and the fresh row ids come from the records
+    that pass made."""
     import pyarrow.parquet as pq
 
     t = ManagedTable(spark, str(tmp_path / "t"))
     props = {"delta.enableRowTracking": "true"} if tracked else None
 
     def batch(lo):
-        return spark.range(lo, lo + 30, numPartitions=3).select(
+        df = spark.range(lo, lo + 30, numPartitions=3).select(
             F.col("id").alias("k"), (F.col("id") % 2).alias("p")
         )
+        # unpartitioned: input partition 0 (k < lo + 10) writes no row
+        return df if partitioned else df.where(F.col("k") >= lo + 10)
 
-    t.write(batch(0), mode="overwrite", partition_by=["p"], properties=props)
-    walked: list[str] = []
+    t.write(
+        batch(0), mode="overwrite", properties=props,
+        partition_by=["p"] if partitioned else None,
+    )
+    listed: list[str] = []
     opened: collections.Counter = collections.Counter()
-    real_walk, real_file = os.walk, pq.ParquetFile
+    real_walk, real_listdir, real_file = os.walk, os.listdir, pq.ParquetFile
 
     def walk(top, *a, **k):
-        walked.append(os.path.relpath(str(top), t.path))
+        listed.append(os.path.relpath(str(top), t.path))
         return real_walk(top, *a, **k)
+
+    def listdir(path=".", *a, **k):
+        listed.append(os.path.relpath(str(path), t.path))
+        return real_listdir(path, *a, **k)
 
     class CountingFile(real_file):
         def __init__(self, source, *a, **k):
@@ -80,19 +93,33 @@ def test_commit_reads_its_new_unit_from_disk_once(
             super().__init__(source, *a, **k)
 
     monkeypatch.setattr(os, "walk", walk)
+    monkeypatch.setattr(os, "listdir", listdir)
     monkeypatch.setattr(pq, "ParquetFile", CountingFile)
     c = t.write(batch(30), mode="append")
     monkeypatch.undo()
     unit = c.data_units[-1]
     new = sorted(c.files[unit])
-    assert len(new) == 6
-    assert walked == [f"_data/{unit}"]
-    assert opened == {p: 1 for p in new}
+    assert [p for p in listed if p.startswith(f"_data/{unit}")] == [
+        f"_data/{unit}"
+    ]
+    assert set(opened.values()) == {1}
+    if partitioned:
+        assert len(new) == 6 and sorted(opened) == new
+    else:
+        # the dropped file was opened once too, and is gone with its crc
+        assert len(new) == 2 and len(opened) == 3
+        (gone,) = set(opened) - set(new)
+        assert os.path.basename(gone).startswith("part-00000-")
+        head, name = os.path.split(os.path.join(t.path, gone))
+        assert not {name, f".{name}.crc"} & set(real_listdir(head))
     if tracked:
         ids = sorted(r["baseRowId"] for r in c.files[unit].values())
         assert ids[0] == 30 and c.row_id_high_water == 59
+    want = range(60) if partitioned else [
+        k for k in range(60) if k % 30 >= 10
+    ]
     assert _rows(t.read(), ["k", "p"]) == sorted(
-        ((k, k % 2) for k in range(60)), key=repr
+        ((k, k % 2) for k in want), key=repr
     )
 
 

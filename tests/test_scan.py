@@ -248,7 +248,7 @@ _DISK_OWNERS = {
         "_unit_files", "_split_unit_per_file", "convert_from_parquet",
         "sync_metadata", "vacuum", "fsck", "clone_to",
     },
-    "unit_stats.py": {"collect_unit_stats", "list_parquet_files"},
+    "unit_stats.py": {"collect_unit_stats"},
     "delta_log.py": {"_walk_parquet"},
 }
 _WALKS = {"_walk_parquet", "list_parquet_files"}
