@@ -994,8 +994,9 @@ class ManagedTable:
             # shape): every live file re-commits its add with its ids,
             # dataChange=false — reconciliation is last-add-wins by
             # path, and without it external readers would resolve NULL
-            # ids for every pre-enablement row
-            for rel in sorted(rt):
+            # ids for every pre-enablement row. Record order, so the
+            # entry does not depend on the random unit ids in the paths
+            for rel in rt:
                 if rel in emitted or rel in dv_swaps or rel not in logged:
                     continue
                 actions.append({"add": {
